@@ -61,15 +61,13 @@ def encode_png(arr: np.ndarray) -> bytes:
         raise ValueError(f"unsupported dtype for png: {arr.dtype}")
     h, w = arr.shape
     ihdr = struct.pack(">IIBBBBB", w, h, depth, 0, 0, 0, 0)
-    raw = payload.tobytes()
-    stride = w * (depth // 8)
-    scan = b"".join(
-        b"\x00" + raw[y * stride:(y + 1) * stride] for y in range(h)
-    )
+    # every scanline = filter byte 0 + the row's big-endian bytes
+    rows = payload.view(np.uint8).reshape(h, w * (depth // 8))
+    scan = np.concatenate([np.zeros((h, 1), np.uint8), rows], axis=1)
     return (
         _PNG_SIG
         + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(scan, 6))
+        + _chunk(b"IDAT", zlib.compress(scan.tobytes(), 6))
         + _chunk(b"IEND", b"")
     )
 
@@ -131,10 +129,18 @@ def decode_png(buf: bytes) -> np.ndarray:
             break
     bpp = depth // 8
     stride = w * bpp
-    raw = _unfilter(zlib.decompress(idat), h, stride, bpp)
-    dt = ">u2" if depth == 16 else np.uint8
-    arr = np.frombuffer(bytes(raw), dtype=dt).reshape(h, w)
-    return arr.astype(np.uint16) if depth == 16 else arr
+    data = zlib.decompress(idat)
+    if len(data) != h * (stride + 1):
+        raise ValueError("PNG image data size mismatch vs IHDR")
+    rows = np.frombuffer(data, dtype=np.uint8).reshape(h, stride + 1)
+    if rows[:, 0].any():
+        raw = np.frombuffer(bytes(_unfilter(data, h, stride, bpp)),
+                            dtype=np.uint8)
+    else:  # every row filter 0 (all this codec writes): bytes as stored
+        raw = np.ascontiguousarray(rows[:, 1:])
+    if depth == 16:
+        return raw.view(">u2").reshape(h, w).astype(np.uint16)
+    return raw.reshape(h, w)
 
 
 def encode_jpeg_stub(arr: np.ndarray) -> bytes:

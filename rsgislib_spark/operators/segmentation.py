@@ -460,7 +460,6 @@ def isodata_centres(images: DataFrame, **kw) -> DataFrame:
 SLIC_S = 8          # superpixel grid step
 SLIC_M = 10         # compactness
 SLIC_ITERS = 3      # fixed assign/update rounds
-_SLIC_WIN = 2 * SLIC_S
 
 _SLIC_SCHEMA = StructType([
     StructField("image_id", StringType()),
@@ -501,8 +500,11 @@ def slic_superpixels(images: DataFrame, s: int = SLIC_S, m: int = SLIC_M,
     Output: one row per (image_id, k) with member count, updated centre
     and the flat-index checksum of the member pixels.
     """
+    if iters < 1:
+        raise ValueError("slic_superpixels needs iters >= 1")
+    reach = 2 * s       # search window |dx|, |dy| <= 2s, as in the oracle
 
-    def gen(it):
+    def segmentation_slic(it):
         for pdf in it:
             out = {f.name: [] for f in _SLIC_SCHEMA.fields}
             for image_id, buf, w, h, fmt in zip(
@@ -530,8 +532,8 @@ def slic_superpixels(images: DataFrame, s: int = SLIC_S, m: int = SLIC_M,
                     for k in range(nk):
                         dx = px - cx[k]
                         dy = py - cy[k]
-                        win = (np.abs(dx) <= _SLIC_WIN) \
-                            & (np.abs(dy) <= _SLIC_WIN)
+                        win = (np.abs(dx) <= reach) \
+                            & (np.abs(dy) <= reach)
                         dv = pv - cv[k]
                         d2 = m * m * (dx * dx + dy * dy) + s * s * dv * dv
                         upd = win & (d2 < best)
@@ -559,7 +561,7 @@ def slic_superpixels(images: DataFrame, s: int = SLIC_S, m: int = SLIC_M,
             yield pd.DataFrame(out)
 
     return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SLIC_SCHEMA)
+        .mapInPandas(segmentation_slic, schema=_SLIC_SCHEMA)
 
 
 QS_DENS_WIN = 2     # density window (Chebyshev radius, 5x5)

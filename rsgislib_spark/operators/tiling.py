@@ -12,8 +12,12 @@ against the reference's documented 931x947@200 => 25-tile case,
 python_tests/test_imageutils.py:643-655).
 
 Pixel materialization is a separate, optional Arrow stage
-(``tile_pixels``): decode ``bytes`` once per image inside ``mapInPandas``,
-slice every tile window out of the numpy plane, re-encode.  Because the
+(``tile_pixels``): decode ``bytes`` once per image inside ``mapInArrow``,
+slice every tile window out of the numpy plane, re-encode.  Tile pixel
+sums never slice: the grid is separable, so with cached per-axis 0/1
+window matrices every tile sum of a plane ``P`` is one product
+``Ry . P . Rx^T`` (and the whole-image rollup ``cy . P . cx``, ``c`` the
+per-axis coverage count) -- exact integers for any overlap.  Because the
 specs stage is plan-only, queries that need only tile *assignments*
 (counts, windows, names — most catalog operations) never touch pixels and
 never pay the decode.
@@ -27,13 +31,17 @@ derived from partition order (SURVEY.md §4.2 determinism rule).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
+from .. import synth
 from ..functions import codec
+from ..geo.tilegrid import tile_specs
 
 __all__ = ["tile_spec_df", "tile_spec_offset_df", "block_iter_specs",
            "tile_pixels", "tile_checksums_fused", "TILE_PIXEL_SCHEMA"]
@@ -192,6 +200,104 @@ TILE_PIXEL_SCHEMA = StructType([
     StructField("checksum", LongType()),
 ])
 
+_TILE_CHECKSUM_SCHEMA = StructType(
+    [f for f in TILE_PIXEL_SCHEMA.fields if f.name != "bytes"])
+
+#: the metadata a fused kernel consumes to synthesize an image payload
+_PAYLOAD_INPUTS = ("id", "w", "h", "fmt")
+
+
+@functools.lru_cache(maxsize=1024)
+def _axis_windows(size: int, tile: int, overlap: int):
+    """Tile windows along one image axis, in ``tile_specs`` order.
+
+    Returns ``(spans, r, c)``: the half-open ``[lo, hi)`` spans, the 0/1
+    window matrix ``r`` (n_windows x size, ``r[i, lo:hi] = 1``) and the
+    per-pixel coverage count ``c = r.sum(0)`` (all ones without
+    overlap).  The grid is separable, so the one-row call of the
+    ``tile_specs`` oracle gives either axis exactly.
+    """
+    spans = tuple((a, b) for a, b, _, _ in
+                  tile_specs(size, 1, tile, 1, overlap))
+    r = np.zeros((len(spans), size))
+    for i, (a, b) in enumerate(spans):
+        r[i, a:b] = 1.0
+    c = r.sum(0)
+    r.flags.writeable = c.flags.writeable = False
+    return spans, r, c
+
+
+def _window_sums(plane: np.ndarray, width: int, height: int, overlap: int,
+                 rollup: bool = False):
+    """Exact pixel sums of every tile window of ``plane``.
+
+    Returns ``(ys, xs, sums)``: the per-axis spans and the tile sums
+    ``Ry . P . Rx^T`` as int64, flattened row-major (= ``tile_idx``
+    order) -- or, with ``rollup``, their total ``cy . P . cx`` as one
+    int, without forming the tiles.  Either is exact for any overlap.
+    """
+    h, w = plane.shape
+    ys, ry, cy = _axis_windows(h, height, overlap)
+    xs, rx, cx = _axis_windows(w, width, overlap)
+    # float64 BLAS is exact while every partial sum is an integer below
+    # 2^53; the coverage-weighted image total bounds them all
+    info = np.iinfo(plane.dtype)
+    bound = max(info.max, -info.min) * plane.size \
+        * cy.max(initial=0) * cx.max(initial=0)
+    if bound >= 2.0 ** 53:
+        plane, ry, cy, rx, cx = (a.astype(np.int64)
+                                 for a in (plane, ry, cy, rx, cx))
+    if rollup:
+        return ys, xs, int(cy @ plane @ cx)
+    return ys, xs, (ry @ plane @ rx.T).astype(np.int64).ravel()
+
+
+def _columns(batch, names):
+    return zip(*(batch.column(c).to_pylist() for c in names))
+
+
+def _synth_planes(batch):
+    """``(plane, fmt)`` per (id, w, h, fmt) row of an Arrow batch: the
+    payload synthesized, encoded and decoded again -- the plane
+    ``tile_pixels(synth.attach_bytes(...))`` sees."""
+    for img_id, w, h, fmt in _columns(batch, _PAYLOAD_INPUTS):
+        buf = codec.encode_image(synth.pixel_array(img_id, w, h, fmt), fmt)
+        yield codec.decode_image(buf, w, h, fmt), fmt
+
+
+def _tile_batch(batch, planes, width: int, height: int, overlap: int,
+                schema: StructType, encode: bool = False) -> pa.RecordBatch:
+    """One Arrow row per tile of every ``(plane, fmt)`` of ``batch``, with
+    the columns of ``schema`` (a subset of ``TILE_PIXEL_SCHEMA``)."""
+    rep, idx, names, tws, ths, sums, payloads = [], [], [], [], [], [], []
+    for i, (image_id, (plane, fmt)) in enumerate(
+            zip(batch.column("image_id").to_pylist(), planes)):
+        ys, xs, s = _window_sums(plane, width, height, overlap)
+        n = s.size
+        rep += [i] * n
+        idx += range(n)
+        names += [f"{image_id}_tile{k}" for k in range(n)]
+        tws += [b - a for a, b in xs] * len(ys)
+        ths += [b - a for a, b in ys for _ in xs]
+        sums += s.tolist()
+        if "bytes" in schema.names:
+            payloads += [codec.encode_image(plane[y0:y1, x0:x1], fmt)
+                         if encode else b""
+                         for y0, y1 in ys for x0, x1 in xs]
+    take = pa.array(rep, pa.int32())
+    cols = {
+        "image_id": batch.column("image_id").take(take),
+        "tile_idx": pa.array(idx, pa.int32()),
+        "tile_name": pa.array(names, pa.string()),
+        "tile_w": pa.array(tws, pa.int32()),
+        "tile_h": pa.array(ths, pa.int32()),
+        "fmt": batch.column("fmt").take(take),
+        "bytes": pa.array(payloads, pa.binary()),
+        "checksum": pa.array(sums, pa.int64()),
+    }
+    return pa.RecordBatch.from_arrays([cols[c] for c in schema.names],
+                                      names=schema.names)
+
 
 def tile_pixels(images: DataFrame, width: int, height: int,
                 overlap: int = 0, encode: bool = True) -> DataFrame:
@@ -199,42 +305,25 @@ def tile_pixels(images: DataFrame, width: int, height: int,
 
     ``images`` must carry (image_id, bytes, w, h, fmt).  Each input image
     is decoded once; all its tile windows are sliced from the same numpy
-    plane (the reference re-reads the file per envelope — here the decode
-    amortizes).  ``checksum`` = int64 sum of the tile's pixel values, the
-    cheap content fingerprint used by parity tests and lineage records.
-    Set ``encode=False`` to skip re-encoding (checksum-only scans).
+    plane (the reference re-reads the file per envelope -- here the
+    decode amortizes).  ``checksum`` = int64 sum of the tile's pixel
+    values, the cheap content fingerprint used by parity tests and
+    lineage records.  Set ``encode=False`` to skip re-encoding
+    (checksum-only scans).
     """
     tw, th, ov = int(width), int(height), int(overlap)
 
-    def gen(iterator):
-        from ..geo.tilegrid import tile_specs
-
-        for pdf in iterator:
-            out = {k: [] for k in ("image_id", "tile_idx", "tile_name",
-                                   "tile_w", "tile_h", "fmt", "bytes",
-                                   "checksum")}
-            for image_id, buf, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                arr = codec.decode_image(bytes(buf), int(w), int(h), str(fmt))
-                for idx, (xmin, xmax, ymin, ymax) in enumerate(
-                    tile_specs(int(w), int(h), tw, th, ov)
-                ):
-                    tile = arr[ymin:ymax, xmin:xmax]
-                    out["image_id"].append(image_id)
-                    out["tile_idx"].append(idx)
-                    out["tile_name"].append(f"{image_id}_tile{idx}")
-                    out["tile_w"].append(tile.shape[1])
-                    out["tile_h"].append(tile.shape[0])
-                    out["fmt"].append(str(fmt))
-                    out["bytes"].append(
-                        codec.encode_image(tile, str(fmt)) if encode else b""
-                    )
-                    out["checksum"].append(int(tile.astype(np.int64).sum()))
-            yield pd.DataFrame(out)
+    def tiling_tile_pixels(batches):
+        for batch in batches:
+            planes = ((codec.decode_image(buf, w, h, fmt), fmt)
+                      for buf, w, h, fmt in _columns(
+                          batch, ("bytes", "w", "h", "fmt")))
+            yield _tile_batch(batch, planes, tw, th, ov, TILE_PIXEL_SCHEMA,
+                              encode)
 
     cols = [c for c in ("image_id", "bytes", "w", "h", "fmt") if c in images.columns]
-    return images.select(*cols).mapInPandas(gen, schema=TILE_PIXEL_SCHEMA)
+    return images.select(*cols).mapInArrow(tiling_tile_pixels,
+                                           schema=TILE_PIXEL_SCHEMA)
 
 
 def tile_checksums_fused(meta: DataFrame, width: int, height: int,
@@ -243,98 +332,58 @@ def tile_checksums_fused(meta: DataFrame, width: int, height: int,
     """Fused payload-synth -> decode -> tile-checksum in ONE Arrow stage.
 
     Identical per-image semantics to
-    ``tile_pixels(synth.attach_bytes(meta), encode=False)`` — the full
-    encode + decode + slice + checksum work happens for every image —
-    but the payload bytes never cross the Python<->JVM Arrow channel
-    between two separate mapInPandas stages.  Chained Python stages in
-    one Spark task each pay a full Arrow round-trip of their columns
-    (and silently run a SECOND Python worker per task, masking true
-    core cost); fusing is the Python-stage analog of whole-stage
-    codegen — and the plan shape a real deployment gets when the
-    decode UDF reads payloads directly from storage inside the scan
-    stage instead of routing them through the JVM.
+    ``tile_pixels(synth.attach_bytes(meta), encode=False)`` -- the full
+    encode + decode + checksum work happens for every image -- but the
+    payload bytes never cross the Python<->JVM Arrow channel between two
+    separate Python stages.  Chained Python stages in one Spark task
+    each pay a full Arrow round-trip of their columns (and silently run
+    a SECOND Python worker per task, masking true core cost); fusing is
+    the Python-stage analog of whole-stage codegen -- and the plan shape
+    a real deployment gets when the decode UDF reads payloads directly
+    from storage inside the scan stage instead of routing them through
+    the JVM.  The stage is a ``mapInArrow``: no pandas conversion on
+    either side of the channel.
+
+    Default output: one row per tile, the ``tile_pixels`` columns minus
+    ``bytes``; input needs (id, image_id, w, h, fmt).
 
     ``rollup="image"`` additionally pushes the per-image combine into
     the same stage (map-side partial aggregation, the hand analog of
-    Catalyst's partial_sum before an Exchange): output is one row per
-    image ``(image_id, n_tiles, pix_sum)`` instead of one per tile —
-    at 48x32 tiles that is ~7x fewer Arrow rows with no information
-    the flagship rollup ever used.  Input needs metadata only:
-    (id, image_id, w, h, fmt).
+    Catalyst's partial_sum before an Exchange): one row per input row,
+    carrying every input column except the consumed (id, w, h, fmt)
+    through unchanged, plus ``n_tiles`` and ``pix_sum`` (the sum of
+    the tile checksums, formed without forming the tiles).  Input rows
+    may be (image, zone) pairs: each pair is rolled up on its own.
     """
-    from .. import synth
-    from ..geo.tilegrid import tile_specs
-
     tw, th, ov = int(width), int(height), int(overlap)
 
     if rollup == "image":
-        schema = StructType([
-            StructField("image_id", StringType()),
+        keep = [c for c in meta.columns if c not in _PAYLOAD_INPUTS]
+        schema = StructType([meta.schema[c] for c in keep] + [
             StructField("n_tiles", LongType()),
             StructField("pix_sum", LongType()),
         ])
 
-        def gen(iterator):
-            for pdf in iterator:
-                m = len(pdf)
-                ids = pdf["id"].to_numpy()
-                ws = pdf["w"].to_numpy()
-                hs = pdf["h"].to_numpy()
-                fmts = pdf["fmt"].to_numpy()
-                n_out = np.zeros(m, np.int64)
-                s_out = np.zeros(m, np.int64)
-                for i in range(m):
-                    w, h, fmt = int(ws[i]), int(hs[i]), str(fmts[i])
-                    arr = synth.pixel_array(int(ids[i]), w, h, fmt)
-                    buf = codec.encode_image(arr, fmt)
-                    plane = codec.decode_image(buf, w, h, fmt) \
-                        .astype(np.int64)
-                    n, tot = 0, 0
-                    for (xmin, xmax, ymin, ymax) in tile_specs(
-                            w, h, tw, th, ov):
-                        tot += int(plane[ymin:ymax, xmin:xmax].sum())
-                        n += 1
-                    n_out[i] = n
-                    s_out[i] = tot
-                yield pd.DataFrame({"image_id": pdf["image_id"],
-                                    "n_tiles": n_out, "pix_sum": s_out})
+        def tiling_image_rollup(batches):
+            for batch in batches:
+                n_out, s_out = [], []
+                for plane, _ in _synth_planes(batch):
+                    ys, xs, total = _window_sums(plane, tw, th, ov,
+                                                 rollup=True)
+                    n_out.append(len(ys) * len(xs))
+                    s_out.append(total)
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(c) for c in keep]
+                    + [pa.array(n_out, pa.int64()),
+                       pa.array(s_out, pa.int64())],
+                    names=schema.names)
 
-        return meta.select("id", "image_id", "w", "h", "fmt") \
-            .mapInPandas(gen, schema=schema)
+        return meta.mapInArrow(tiling_image_rollup, schema=schema)
 
-    schema = StructType([
-        StructField("image_id", StringType()),
-        StructField("tile_idx", IntegerType()),
-        StructField("tile_name", StringType()),
-        StructField("tile_w", IntegerType()),
-        StructField("tile_h", IntegerType()),
-        StructField("fmt", StringType()),
-        StructField("checksum", LongType()),
-    ])
-
-    def gen(iterator):
-        for pdf in iterator:
-            out = {k: [] for k in ("image_id", "tile_idx", "tile_name",
-                                   "tile_w", "tile_h", "fmt", "checksum")}
-            for img_id, image_id, w, h, fmt in zip(
-                pdf["id"], pdf["image_id"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                w, h, fmt = int(w), int(h), str(fmt)
-                arr = synth.pixel_array(int(img_id), w, h, fmt)
-                buf = codec.encode_image(arr, fmt)
-                plane = codec.decode_image(buf, w, h, fmt)
-                for idx, (xmin, xmax, ymin, ymax) in enumerate(
-                    tile_specs(w, h, tw, th, ov)
-                ):
-                    tile = plane[ymin:ymax, xmin:xmax]
-                    out["image_id"].append(image_id)
-                    out["tile_idx"].append(idx)
-                    out["tile_name"].append(f"{image_id}_tile{idx}")
-                    out["tile_w"].append(tile.shape[1])
-                    out["tile_h"].append(tile.shape[0])
-                    out["fmt"].append(fmt)
-                    out["checksum"].append(int(tile.astype(np.int64).sum()))
-            yield pd.DataFrame(out)
+    def tiling_tile_checksums(batches):
+        for batch in batches:
+            yield _tile_batch(batch, _synth_planes(batch), tw, th, ov,
+                              _TILE_CHECKSUM_SCHEMA)
 
     return meta.select("id", "image_id", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=schema)
+        .mapInArrow(tiling_tile_checksums, schema=_TILE_CHECKSUM_SCHEMA)

@@ -3133,29 +3133,25 @@ def flagship(spark, sf_dir) -> DataFrame:
     The BASELINE.json metric pipeline: every image is cell-encoded and
     joined to the zone layer; matched images are tiled (48x32) with real
     pixel decode and per-tile checksums; result is one row per zone with
-    image/tile/pixel totals.
+    image/tile/pixel totals.  An image inside two zones counts once in
+    each.
     """
-    # late materialization: the join/filter runs on metadata columns
-    # only (column pruning), payloads are decoded AFTER the match and
-    # never cross a shuffle — the plan shape a column-pruned Iceberg
-    # scan + broadcast join produces at cluster scale.
+    # one pass, late materialization: the join runs once on metadata
+    # columns only (column pruning); each (image, zone) pair then goes
+    # through ONE fused Arrow stage -- synth + encode + decode + tile
+    # sums + per-image combine (map-side partial agg) -- that carries
+    # zone_id/zname through, so payloads never cross a shuffle and no
+    # second join is needed to bring the zones back.  The repartition
+    # spreads the single-file scan over the cores.
     img = _images(spark, sf_dir, with_footprint=False)
     zones = synth.synth_zones(spark, sf_dir)
-    matched = spatial_join(img, zones, how="inner", op="within")
-    work = (
-        matched.select("id", "image_id", "w", "h", "fmt")
-        .dropDuplicates(["image_id"])
+    pairs = (
+        spatial_join(img, zones, how="inner", op="within")
+        .select("id", "w", "h", "fmt", "zone_id", "zname")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    # fused synth+decode+tile with the per-image combine pushed into
-    # the same Arrow stage (map-side partial agg): identical semantics
-    # to tile_pixels(attach_bytes(work)) + groupBy(image_id), with the
-    # inter-stage payload round-trip and ~7x of the Arrow result rows
-    # removed — see tiling.tile_checksums_fused
-    per_img = tile_checksums_fused(work, 48, 32, rollup="image")
     return (
-        matched.select("image_id", "zone_id", "zname")
-        .join(per_img, "image_id", "inner")
+        tile_checksums_fused(pairs, 48, 32, rollup="image")
         .groupBy("zone_id", "zname")
         .agg(F.count(F.lit(1)).alias("n_images"),
              F.sum("n_tiles").alias("n_tiles"),

@@ -193,16 +193,15 @@ def pixel_array(img_id: int, w: int, h: int, fmt: str) -> np.ndarray:
     return v.astype(np.uint8 if fmt == "raw8" else np.uint16)
 
 
-def _gen_bytes(iterator):
-    """mapInPandas generator adding the encoded ``bytes`` payload."""
-    for pdf in iterator:
-        payloads = []
-        for img_id, w, h, fmt in zip(pdf["id"], pdf["w"], pdf["h"], pdf["fmt"]):
-            arr = pixel_array(int(img_id), int(w), int(h), str(fmt))
-            payloads.append(codec.encode_image(arr, str(fmt)))
-        pdf = pdf.copy()
-        pdf["bytes"] = payloads
-        yield pdf
+def synth_attach_bytes(batches):
+    """mapInArrow kernel appending the encoded ``bytes`` payload."""
+    import pyarrow as pa
+
+    for batch in batches:
+        cols = (batch.column(c).to_pylist() for c in ("id", "w", "h", "fmt"))
+        payloads = [codec.encode_image(pixel_array(img_id, w, h, fmt), fmt)
+                    for img_id, w, h, fmt in zip(*cols)]
+        yield batch.append_column("bytes", pa.array(payloads, pa.binary()))
 
 
 def attach_bytes(df):
@@ -218,7 +217,7 @@ def attach_bytes(df):
 
     schema = StructType(list(df.schema.fields)
                         + [StructField("bytes", BinaryType())])
-    return df.mapInPandas(_gen_bytes, schema=schema)
+    return df.mapInArrow(synth_attach_bytes, schema=schema)
 
 
 def synth_images(spark, sf_dir: str, with_bytes: bool = False,

@@ -242,3 +242,84 @@ def test_resize_lanczos_matches_float_reference(spark):
     # pixel <= 255, n_out outputs
     tol = ow * oh * 36 * (7.0 / LANCZOS_SCALE) * 255
     assert abs(approx - total) < tol
+
+
+def _png(w, h, depth, scan):
+    """A grayscale PNG around an uncompressed scanline stream."""
+    import struct
+    import zlib
+
+    def chunk(tag, body):
+        return (struct.pack(">I", len(body)) + tag + body
+                + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF))
+
+    ihdr = struct.pack(">IIBBBBB", w, h, depth, 0, 0, 0, 0)
+    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", zlib.compress(scan, 6)) + chunk(b"IEND", b""))
+
+
+def _row_loop_png(arr):
+    """Reference framing: a filter-0 byte prepended to each row in turn."""
+    depth = 8 if arr.dtype == np.uint8 else 16
+    raw = (arr if depth == 8 else arr.astype(">u2")).tobytes()
+    h, w = arr.shape
+    stride = w * depth // 8
+    scan = b"".join(b"\x00" + raw[y * stride:(y + 1) * stride]
+                    for y in range(h))
+    return _png(w, h, depth, scan)
+
+
+@pytest.mark.parametrize("arr", [
+    pixel_array(11, 57, 43, "png"),
+    pixel_array(11, 57, 43, "raw16"),
+    pixel_array(3, 128, 97, "png")[5:70, 9:100],      # non-contiguous
+    pixel_array(3, 128, 97, "raw16")[5:70, 9:100],
+    np.full((1, 1), 200, np.uint8),
+    np.zeros((4, 0), np.uint16),
+], ids=["u8", "u16", "u8_view", "u16_view", "1x1", "zero_width"])
+def test_encode_png_matches_row_loop_framing(arr):
+    assert codec.encode_png(arr) == _row_loop_png(arr)
+
+
+def test_encode_png_scanline_golden():
+    import zlib
+
+    arr = np.array([[1, 258], [65535, 0]], np.uint16)
+    buf = codec.encode_png(arr)
+    # IDAT body starts after signature (8) + IHDR chunk (25) + len/tag (8)
+    n = int.from_bytes(buf[33:37], "big")
+    assert buf[37:41] == b"IDAT"
+    assert zlib.decompress(buf[41:41 + n]) == \
+        b"\x00\x00\x01\x01\x02" b"\x00\xff\xff\x00\x00"
+
+
+def test_png_mixed_filter_rows_take_fallback(monkeypatch):
+    arr = np.array([[10, 20, 30], [11, 22, 33], [1, 2, 3]], np.uint8)
+    calls = []
+    real = codec._unfilter
+
+    def spy(*a):
+        calls.append(a)
+        return real(*a)
+
+    monkeypatch.setattr(codec, "_unfilter", spy)
+    plain = b"".join(b"\x00" + bytes(r) for r in arr.tolist())
+    assert np.array_equal(codec.decode_png(_png(3, 3, 8, plain)), arr)
+    assert calls == []
+    # row 1 stored with the Up filter: bytes are the deltas to row 0
+    up = bytes((b - a) % 256 for a, b in zip(arr[0], arr[1]))
+    mixed = (b"\x00" + bytes(arr[0].tolist()) + b"\x02" + up
+             + b"\x00" + bytes(arr[2].tolist()))
+    assert np.array_equal(codec.decode_png(_png(3, 3, 8, mixed)), arr)
+    assert len(calls) == 1
+
+
+def test_png_bad_filter_type_raises():
+    scan = b"\x00\x01\x02" + b"\x05\x03\x04"
+    with pytest.raises(ValueError, match="bad PNG filter type 5"):
+        codec.decode_png(_png(2, 2, 8, scan))
+
+
+def test_png_data_size_mismatch_raises():
+    with pytest.raises(ValueError, match="size mismatch"):
+        codec.decode_png(_png(2, 2, 8, b"\x00\x01\x02\x00\x03"))

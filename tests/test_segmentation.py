@@ -285,3 +285,33 @@ def test_random_walker_invariants(spark, sf_dir):
         # maximum principle: every potential in [0, 1] =>
         # 0 <= pot_ck <= n_cells * 2^20
         assert 0 <= r.pot_ck <= r.n_cells * 1048576
+
+
+def test_slic_window_follows_grid_step(spark, sf_dir):
+    """With a non-default grid step ``s`` the search window is ``2*s``:
+    the engine matches the DuckDB oracle built for the same ``s``."""
+    import duckdb
+
+    from rsgislib_spark.operators.segmentation import slic_superpixels
+    from rsgislib_spark.oracles import _slic_oracle
+    from rsgislib_spark.queries import _px_images
+
+    con = duckdb.connect()
+    for t in ("part", "nation", "supplier"):
+        con.sql(f"CREATE VIEW {t} AS "
+                f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    s = 4
+    got = slic_superpixels(_px_images(spark, sf_dir, mod=19), s=s) \
+        .select("image_id", "k", "n_pix", "cx", "cy", "cv", "px_ck").collect()
+    want = con.sql(_slic_oracle(s=s)).fetchall()
+    assert len(got) > 0
+    assert sorted(map(tuple, got)) == sorted(want)
+
+
+def test_slic_rejects_zero_iters(spark, sf_dir):
+    from rsgislib_spark.operators.segmentation import slic_superpixels
+    from rsgislib_spark.queries import _px_images
+
+    img = _px_images(spark, sf_dir, mod=19)
+    with pytest.raises(ValueError, match="iters"):
+        slic_superpixels(img, iters=0)
