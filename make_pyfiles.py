@@ -14,7 +14,7 @@ Cluster launch (the north-rule deployment shape)::
 
 4 cores/executor is deliberate: every Arrow task pairs a JVM thread with
 a Python worker, so small executors keep the per-JVM Arrow channel count
-in the regime BENCH.md measures as linear.  Scale by adding executors
+in the regime measured as linear (2 to 8 workers).  Scale by adding executors
 (N -> 4N), not by widening them.
 """
 

@@ -47,13 +47,13 @@ embarrassingly parallel over the image dimension.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions import codec
 from ..functions.detmath import ln_pos_np
+from .classification import residual_plane
 
 __all__ = [
     "binary_scores_stats",
@@ -73,17 +73,6 @@ _Q30 = 1073741824.0  # 2^30 per-term quantizer for order-free log sums
 #: equivalent to thresholding LM at these constants from above.
 BP_CHI2_99_DF1 = 6.6348966010212145
 BP_CHI2_95_DF1 = 3.841458820694124
-
-
-def _plane(image_id, buf, w, h, fmt, img_id):
-    """Decoded plane v, residual e and pmax (same world as classification)."""
-    v = codec.decode_image(bytes(buf), int(w), int(h),
-                           str(fmt)).astype(np.int64)
-    pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-    x = np.arange(int(w), dtype=np.int64)[None, :]
-    y = np.arange(int(h), dtype=np.int64)[:, None]
-    e = (x * 7 + y * 3 + int(img_id)) % 21 - 10
-    return v, np.broadcast_to(e, v.shape).copy(), pmax
 
 
 def _rq(num, den):
@@ -147,65 +136,59 @@ def binary_scores_stats(images: DataFrame) -> DataFrame:
     collapse of the classification world's ref/pred planes.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _BIN_SCHEMA.fields}
-            for image_id, buf, w, h, fmt, img_id in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"], pdf["id"]):
-                v, e, pmax = _plane(image_id, buf, w, h, fmt, img_id)
-                yt = (v * 2) // pmax
-                vp = np.clip(v + e, 0, pmax - 1)
-                yp = (vp * 2) // pmax
-                n = int(v.size)
-                tp = int(np.count_nonzero((yt == 1) & (yp == 1)))
-                ta = int(np.count_nonzero((yt == 0) & (yp == 0)))
-                fp = int(np.count_nonzero((yt == 1) & (yp == 0)))
-                fa = int(np.count_nonzero((yt == 0) & (yp == 1)))
-                n1, n0 = tp + fp, ta + fa          # presence / absence
-                # prevalence = (TP/FA)/n — reference stats.py:522
-                # verbatim; pinned tree (tp/fa)/n, two IEEE divisions
-                if fa == 0:
-                    prev_q = odp_q = -1
-                else:
-                    prev = float(tp) / float(fa) / float(n)
-                    prev_q = int(np.floor(prev * _Q))
-                    odp_q = int(np.floor((1.0 - prev) * _Q))
-                mcc_den = np.sqrt(
-                    ((float(tp + fp) * float(tp + fa))
-                     * float(ta + fp)) * float(ta + fa))
-                mcc_q = (-1 if mcc_den == 0.0 else int(
-                    np.floor((float(tp * ta - fp * fa) / mcc_den) * _Q)))
-                pe = n1 * (tp + fa) + n0 * (ta + fp)
-                out["image_id"].append(image_id)
-                out["n"].append(n)
-                out["tp"].append(tp); out["ta"].append(ta)
-                out["fp"].append(fp); out["fa"].append(fa)
-                out["prev_q"].append(prev_q)
-                out["odp_q"].append(odp_q)
-                out["ccr_q"].append(_rq(tp + ta, n))
-                out["mr_q"].append(_rq(fp + fa, n))
-                out["ppp_q"].append(_rq(tp, tp + fp))
-                out["app_q"].append(_rq(ta, ta + fa))
-                out["acc_q"].append(_rq(tp + ta, n1 + n0))
-                out["bacc_q"].append(
-                    _rq(tp * n0 + ta * n1, 2 * n1 * n0)
-                    if n1 and n0 else -1)
-                out["sens_q"].append(_rq(tp, n1))
-                out["spec_q"].append(_rq(ta, n0))
-                out["prec_q"].append(_rq(tp, tp + fp))
-                out["f1_q"].append(_rq(2 * tp, 2 * tp + fp + fa))
-                out["mcc_q"].append(mcc_q)
-                out["kappa_q"].append(
-                    _rq(n * (tp + ta) - pe, n * n - pe))
-                out["nmi_q"].append(_nmi_q(n, tp, ta, fp, fa))
-                out["tss_q"].append(
-                    _rq(tp * n0 + ta * n1 - n1 * n0, n1 * n0)
-                    if n1 and n0 else -1)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt, img_id):
+        e, pmax = residual_plane(v, fmt, img_id)
+        yt = (v * 2) // pmax
+        vp = np.clip(v + e, 0, pmax - 1)
+        yp = (vp * 2) // pmax
+        n = int(v.size)
+        tp = int(np.count_nonzero((yt == 1) & (yp == 1)))
+        ta = int(np.count_nonzero((yt == 0) & (yp == 0)))
+        fp = int(np.count_nonzero((yt == 1) & (yp == 0)))
+        fa = int(np.count_nonzero((yt == 0) & (yp == 1)))
+        n1, n0 = tp + fp, ta + fa          # presence / absence
+        # prevalence = (TP/FA)/n — reference stats.py:522
+        # verbatim; pinned tree (tp/fa)/n, two IEEE divisions
+        if fa == 0:
+            prev_q = odp_q = -1
+        else:
+            prev = float(tp) / float(fa) / float(n)
+            prev_q = int(np.floor(prev * _Q))
+            odp_q = int(np.floor((1.0 - prev) * _Q))
+        mcc_den = np.sqrt(
+            ((float(tp + fp) * float(tp + fa))
+             * float(ta + fp)) * float(ta + fa))
+        mcc_q = (-1 if mcc_den == 0.0 else int(
+            np.floor((float(tp * ta - fp * fa) / mcc_den) * _Q)))
+        pe = n1 * (tp + fa) + n0 * (ta + fp)
+        out["image_id"].append(image_id)
+        out["n"].append(n)
+        out["tp"].append(tp); out["ta"].append(ta)
+        out["fp"].append(fp); out["fa"].append(fa)
+        out["prev_q"].append(prev_q)
+        out["odp_q"].append(odp_q)
+        out["ccr_q"].append(_rq(tp + ta, n))
+        out["mr_q"].append(_rq(fp + fa, n))
+        out["ppp_q"].append(_rq(tp, tp + fp))
+        out["app_q"].append(_rq(ta, ta + fa))
+        out["acc_q"].append(_rq(tp + ta, n1 + n0))
+        out["bacc_q"].append(
+            _rq(tp * n0 + ta * n1, 2 * n1 * n0)
+            if n1 and n0 else -1)
+        out["sens_q"].append(_rq(tp, n1))
+        out["spec_q"].append(_rq(ta, n0))
+        out["prec_q"].append(_rq(tp, tp + fp))
+        out["f1_q"].append(_rq(2 * tp, 2 * tp + fp + fa))
+        out["mcc_q"].append(mcc_q)
+        out["kappa_q"].append(
+            _rq(n * (tp + ta) - pe, n * n - pe))
+        out["nmi_q"].append(_nmi_q(n, tp, ta, fp, fa))
+        out["tss_q"].append(
+            _rq(tp * n0 + ta * n1 - n1 * n0, n1 * n0)
+            if n1 and n0 else -1)
 
-    return images.select("image_id", "id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_BIN_SCHEMA)
+    return codec.map_images(images, per_image, _BIN_SCHEMA,
+                            extra_cols=("fmt", "id"), dtype=np.int64)
 
 
 # --------------------------------------------------------------------------
@@ -232,75 +215,69 @@ def prob_scores_stats(images: DataFrame) -> DataFrame:
     before the order-free integer sum.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _PROB_SCHEMA.fields}
-            for image_id, buf, w, h, fmt, img_id in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"], pdf["id"]):
-                v, e, pmax = _plane(image_id, buf, w, h, fmt, img_id)
-                yt = ((v * 2) // pmax).ravel()
-                vp = np.clip(v + e, 0, pmax - 1).ravel()
-                n = int(vp.size)
-                n1 = int(yt.sum())
-                n0 = n - n1
-                # ---- ROC AUC: Mann-Whitney with average ranks -------
-                # group by distinct score s ascending: t_s total, p_s
-                # positives; 2*R1 = sum_s p_s * (2*cum_before + t_s + 1)
-                order = np.argsort(vp, kind="stable")
-                sv = vp[order]; st = yt[order]
-                # run boundaries over sorted scores
-                uniq, idx, cnt = np.unique(sv, return_index=True,
-                                           return_counts=True)
-                pos_per = np.add.reduceat(st, idx)
-                cum_before = np.concatenate(([0], np.cumsum(cnt)[:-1]))
-                two_r1 = int(np.sum(pos_per * (2 * cum_before + cnt + 1)))
-                auc_q = (-1 if n1 == 0 or n0 == 0 else
-                         _rq(two_r1 - n1 * (n1 + 1), 2 * n1 * n0))
-                # ---- average precision (sklearn step def) -----------
-                # thresholds descend over distinct scores; per-term
-                # exact int: floor(p_k * TP_k * 2^30 / (n1 * PredP_k))
-                ap_q30 = -1
-                if n1 > 0:
-                    tp_cum = np.cumsum(pos_per[::-1])        # high -> low
-                    pred_cum = np.cumsum(cnt[::-1])
-                    p_k = pos_per[::-1]
-                    terms = (p_k.astype(object) * tp_cum.astype(object)
-                             * (1 << 30)) // (int(n1) * pred_cum.astype(object))
-                    ap_q30 = int(np.sum(terms))
-                # ---- Brier: sum (vp - y*pmax)^2 / (pmax^2 n) --------
-                d = vp - yt * pmax
-                brier_q = _rq(int(np.dot(d, d)), pmax * pmax * n)
-                # ---- log loss (Laplace smoothed) --------------------
-                ln_tab = ln_pos_np(np.arange(1, pmax + 2, dtype=np.float64))
-                ln_pm2 = _ln_i(pmax + 2)
-                lnp = ln_tab[vp] - ln_pm2          # ln((vp+1)/(pmax+2))
-                ln1mp = ln_tab[pmax - vp] - ln_pm2
-                term = np.where(yt == 1, lnp, ln1mp)
-                q = np.floor(term * _Q30).astype(np.int64)
-                logloss_q30 = -int(q.sum())        # -sum then /n driver-side
-                # ---- point-biserial = Pearson(yt, vp) ---------------
-                sx = int(yt.sum()); sy = int(vp.sum())
-                sxx = sx                           # yt binary: yt^2 = yt
-                syy = int(np.dot(vp, vp))
-                sxy = int(np.dot(yt, vp))
-                num = n * sxy - sx * sy
-                d1 = float(n * sxx - sx * sx)
-                d2 = float(n * syy - sy * sy)
-                den = np.sqrt(d1 * d2)
-                pbr_q = (-1 if den == 0.0 else
-                         int(np.floor((float(num) / den) * _Q)))
-                out["image_id"].append(image_id)
-                out["n"].append(n); out["n1"].append(n1); out["n0"].append(n0)
-                out["auc_q"].append(auc_q)
-                out["pbr_q"].append(pbr_q)
-                out["ap_q30"].append(ap_q30)
-                out["brier_q"].append(brier_q)
-                out["logloss_q30"].append(logloss_q30)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt, img_id):
+        e, pmax = residual_plane(v, fmt, img_id)
+        yt = ((v * 2) // pmax).ravel()
+        vp = np.clip(v + e, 0, pmax - 1).ravel()
+        n = int(vp.size)
+        n1 = int(yt.sum())
+        n0 = n - n1
+        # ---- ROC AUC: Mann-Whitney with average ranks -------
+        # group by distinct score s ascending: t_s total, p_s
+        # positives; 2*R1 = sum_s p_s * (2*cum_before + t_s + 1)
+        order = np.argsort(vp, kind="stable")
+        sv = vp[order]; st = yt[order]
+        # run boundaries over sorted scores
+        uniq, idx, cnt = np.unique(sv, return_index=True,
+                                   return_counts=True)
+        pos_per = np.add.reduceat(st, idx)
+        cum_before = np.concatenate(([0], np.cumsum(cnt)[:-1]))
+        two_r1 = int(np.sum(pos_per * (2 * cum_before + cnt + 1)))
+        auc_q = (-1 if n1 == 0 or n0 == 0 else
+                 _rq(two_r1 - n1 * (n1 + 1), 2 * n1 * n0))
+        # ---- average precision (sklearn step def) -----------
+        # thresholds descend over distinct scores; per-term
+        # exact int: floor(p_k * TP_k * 2^30 / (n1 * PredP_k))
+        ap_q30 = -1
+        if n1 > 0:
+            tp_cum = np.cumsum(pos_per[::-1])        # high -> low
+            pred_cum = np.cumsum(cnt[::-1])
+            p_k = pos_per[::-1]
+            terms = (p_k.astype(object) * tp_cum.astype(object)
+                     * (1 << 30)) // (int(n1) * pred_cum.astype(object))
+            ap_q30 = int(np.sum(terms))
+        # ---- Brier: sum (vp - y*pmax)^2 / (pmax^2 n) --------
+        d = vp - yt * pmax
+        brier_q = _rq(int(np.dot(d, d)), pmax * pmax * n)
+        # ---- log loss (Laplace smoothed) --------------------
+        ln_tab = ln_pos_np(np.arange(1, pmax + 2, dtype=np.float64))
+        ln_pm2 = _ln_i(pmax + 2)
+        lnp = ln_tab[vp] - ln_pm2          # ln((vp+1)/(pmax+2))
+        ln1mp = ln_tab[pmax - vp] - ln_pm2
+        term = np.where(yt == 1, lnp, ln1mp)
+        q = np.floor(term * _Q30).astype(np.int64)
+        logloss_q30 = -int(q.sum())        # -sum then /n driver-side
+        # ---- point-biserial = Pearson(yt, vp) ---------------
+        sx = int(yt.sum()); sy = int(vp.sum())
+        sxx = sx                           # yt binary: yt^2 = yt
+        syy = int(np.dot(vp, vp))
+        sxy = int(np.dot(yt, vp))
+        num = n * sxy - sx * sy
+        d1 = float(n * sxx - sx * sx)
+        d2 = float(n * syy - sy * sy)
+        den = np.sqrt(d1 * d2)
+        pbr_q = (-1 if den == 0.0 else
+                 int(np.floor((float(num) / den) * _Q)))
+        out["image_id"].append(image_id)
+        out["n"].append(n); out["n1"].append(n1); out["n0"].append(n0)
+        out["auc_q"].append(auc_q)
+        out["pbr_q"].append(pbr_q)
+        out["ap_q30"].append(ap_q30)
+        out["brier_q"].append(brier_q)
+        out["logloss_q30"].append(logloss_q30)
 
-    return images.select("image_id", "id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_PROB_SCHEMA)
+    return codec.map_images(images, per_image, _PROB_SCHEMA,
+                            extra_cols=("fmt", "id"), dtype=np.int64)
 
 
 # --------------------------------------------------------------------------
@@ -343,49 +320,43 @@ def breusch_pagan_stats(images: DataFrame) -> DataFrame:
     via LM > chi2 critical constants (df=1).
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _BP_SCHEMA.fields}
-            for image_id, buf, w, h, fmt, img_id in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"], pdf["id"]):
-                v, e, pmax = _plane(image_id, buf, w, h, fmt, img_id)
-                x = (v % 8).ravel()
-                y = np.clip(v + e, 0, pmax - 1).ravel()
-                n = int(x.size)
-                d, a_num, b_num = _ols1(x, y)
-                if d == 0:
-                    out["image_id"].append(image_id)
-                    out["n"].append(n); out["ssr16"].append(-1)
-                    out["lm_q"].append(-1); out["ci_class"].append(-1)
-                    continue
-                r16 = _resid16(x, y, d, a_num, b_num)
-                t = (r16.astype(np.int64) ** 2) >> 20
-                ssr16 = int(np.dot(r16, r16))
-                # auxiliary regression t ~ x
-                da, aa, ba = _ols1(x, t)
-                ra = _resid16(x, t, da, aa, ba)
-                st = int(t.sum()); stt = int(np.dot(t, t))
-                sst_num = n * stt - st * st        # n^2 * var(t)
-                ssr_a = int(np.dot(ra, ra))        # 256 * sum resid^2
-                if sst_num == 0:
-                    lm_q, ci = -1, -1
-                else:
-                    r2a = 1.0 - (float(n) * float(ssr_a)) \
-                        / (256.0 * float(sst_num))
-                    lm = float(n) * r2a
-                    lm_q = int(np.floor(lm * _Q))
-                    ci = (2 if lm > BP_CHI2_99_DF1 else
-                          1 if lm > BP_CHI2_95_DF1 else 0)
-                out["image_id"].append(image_id)
-                out["n"].append(n)
-                out["ssr16"].append(ssr16)
-                out["lm_q"].append(lm_q)
-                out["ci_class"].append(ci)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt, img_id):
+        e, pmax = residual_plane(v, fmt, img_id)
+        x = (v % 8).ravel()
+        y = np.clip(v + e, 0, pmax - 1).ravel()
+        n = int(x.size)
+        d, a_num, b_num = _ols1(x, y)
+        if d == 0:
+            out["image_id"].append(image_id)
+            out["n"].append(n); out["ssr16"].append(-1)
+            out["lm_q"].append(-1); out["ci_class"].append(-1)
+            return
+        r16 = _resid16(x, y, d, a_num, b_num)
+        t = (r16.astype(np.int64) ** 2) >> 20
+        ssr16 = int(np.dot(r16, r16))
+        # auxiliary regression t ~ x
+        da, aa, ba = _ols1(x, t)
+        ra = _resid16(x, t, da, aa, ba)
+        st = int(t.sum()); stt = int(np.dot(t, t))
+        sst_num = n * stt - st * st        # n^2 * var(t)
+        ssr_a = int(np.dot(ra, ra))        # 256 * sum resid^2
+        if sst_num == 0:
+            lm_q, ci = -1, -1
+        else:
+            r2a = 1.0 - (float(n) * float(ssr_a)) \
+                / (256.0 * float(sst_num))
+            lm = float(n) * r2a
+            lm_q = int(np.floor(lm * _Q))
+            ci = (2 if lm > BP_CHI2_99_DF1 else
+                  1 if lm > BP_CHI2_95_DF1 else 0)
+        out["image_id"].append(image_id)
+        out["n"].append(n)
+        out["ssr16"].append(ssr16)
+        out["lm_q"].append(lm_q)
+        out["ci_class"].append(ci)
 
-    return images.select("image_id", "id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_BP_SCHEMA)
+    return codec.map_images(images, per_image, _BP_SCHEMA,
+                            extra_cols=("fmt", "id"), dtype=np.int64)
 
 
 # --------------------------------------------------------------------------
@@ -420,65 +391,59 @@ def vif_scores_stats(images: DataFrame) -> DataFrame:
     reference's ``R2 == 1 -> 0.0`` sentinel (stats.py:76-79).
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _VIF_SCHEMA.fields}
-            for image_id, buf, w, h, fmt, img_id in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"], pdf["id"]):
-                v, _, pmax = _plane(image_id, buf, w, h, fmt, img_id)
-                vs = v[::3, ::3].ravel()
-                c1 = vs % 4
-                c2 = (vs // 4) % 4
-                c3 = (c1 + c2) // 2 + (vs // 16) % 2
-                cols = [c1, c2, c3]
-                n = int(vs.size)
-                for ci in range(3):
-                    yv = cols[ci]
-                    x1, x2 = [cols[j] for j in range(3) if j != ci]
-                    s1 = int(x1.sum()); s2 = int(x2.sum())
-                    s11 = int(np.dot(x1, x1)); s22 = int(np.dot(x2, x2))
-                    s12 = int(np.dot(x1, x2))
-                    sy = int(yv.sum())
-                    s1y = int(np.dot(x1, yv)); s2y = int(np.dot(x2, yv))
-                    m = [[n, s1, s2], [s1, s11, s12], [s2, s12, s22]]
-                    det = _det3(m)
-                    syy = int(np.dot(yv, yv))
-                    sst_num = n * syy - sy * sy
-                    if det == 0 or sst_num == 0:
-                        out["image_id"].append(image_id)
-                        out["col_id"].append(ci + 1)
-                        out["n"].append(n); out["ssr16"].append(-1)
-                        out["vif_q"].append(-1)
-                        continue
-                    d0 = _det3([[sy, s1, s2], [s1y, s11, s12],
-                                [s2y, s12, s22]])
-                    d1 = _det3([[n, sy, s2], [s1, s1y, s12],
-                                [s2, s2y, s22]])
-                    d2 = _det3([[n, s1, sy], [s1, s11, s1y],
-                                [s2, s12, s2y]])
-                    r16 = np.array(
-                        [(16 * (int(yy) * det - d0 - d1 * int(a)
-                                - d2 * int(b))) // det
-                         for yy, a, b in zip(yv, x1, x2)],
-                        dtype=np.int64)
-                    ssr16 = int(np.dot(r16, r16))
-                    # R2 = 1 - (n*ssr16)/(256*sst_num); ref: R2==1 -> 0
-                    if ssr16 == 0:
-                        vif_q = 0
-                    else:
-                        one_minus = (float(n) * float(ssr16)) \
-                            / (256.0 * float(sst_num))
-                        vif_q = int(np.floor((1.0 / one_minus) * _Q))
-                    out["image_id"].append(image_id)
-                    out["col_id"].append(ci + 1)
-                    out["n"].append(n)
-                    out["ssr16"].append(ssr16)
-                    out["vif_q"].append(vif_q)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt, img_id):
+        _, pmax = residual_plane(v, fmt, img_id)
+        vs = v[::3, ::3].ravel()
+        c1 = vs % 4
+        c2 = (vs // 4) % 4
+        c3 = (c1 + c2) // 2 + (vs // 16) % 2
+        cols = [c1, c2, c3]
+        n = int(vs.size)
+        for ci in range(3):
+            yv = cols[ci]
+            x1, x2 = [cols[j] for j in range(3) if j != ci]
+            s1 = int(x1.sum()); s2 = int(x2.sum())
+            s11 = int(np.dot(x1, x1)); s22 = int(np.dot(x2, x2))
+            s12 = int(np.dot(x1, x2))
+            sy = int(yv.sum())
+            s1y = int(np.dot(x1, yv)); s2y = int(np.dot(x2, yv))
+            m = [[n, s1, s2], [s1, s11, s12], [s2, s12, s22]]
+            det = _det3(m)
+            syy = int(np.dot(yv, yv))
+            sst_num = n * syy - sy * sy
+            if det == 0 or sst_num == 0:
+                out["image_id"].append(image_id)
+                out["col_id"].append(ci + 1)
+                out["n"].append(n); out["ssr16"].append(-1)
+                out["vif_q"].append(-1)
+                continue
+            d0 = _det3([[sy, s1, s2], [s1y, s11, s12],
+                        [s2y, s12, s22]])
+            d1 = _det3([[n, sy, s2], [s1, s1y, s12],
+                        [s2, s2y, s22]])
+            d2 = _det3([[n, s1, sy], [s1, s11, s1y],
+                        [s2, s12, s2y]])
+            r16 = np.array(
+                [(16 * (int(yy) * det - d0 - d1 * int(a)
+                        - d2 * int(b))) // det
+                 for yy, a, b in zip(yv, x1, x2)],
+                dtype=np.int64)
+            ssr16 = int(np.dot(r16, r16))
+            # R2 = 1 - (n*ssr16)/(256*sst_num); ref: R2==1 -> 0
+            if ssr16 == 0:
+                vif_q = 0
+            else:
+                one_minus = (float(n) * float(ssr16)) \
+                    / (256.0 * float(sst_num))
+                vif_q = int(np.floor((1.0 / one_minus) * _Q))
+            out["image_id"].append(image_id)
+            out["col_id"].append(ci + 1)
+            out["n"].append(n)
+            out["ssr16"].append(ssr16)
+            out["vif_q"].append(vif_q)
 
-    return images.select("image_id", "id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_VIF_SCHEMA)
+    return codec.map_images(images, per_image, _VIF_SCHEMA,
+                            extra_cols=("fmt", "id"), dtype=np.int64)
 
 
 # --------------------------------------------------------------------------
@@ -523,51 +488,45 @@ def hist_nbins_stats(images: DataFrame) -> DataFrame:
     correctly-rounded sqrt each, floor-quantized at 2^20.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _HN_SCHEMA.fields}
-            for image_id, buf, w, h, fmt, img_id in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"], pdf["id"]):
-                v, _, pmax = _plane(image_id, buf, w, h, fmt, img_id)
-                sv = np.sort(v.ravel(), kind="stable")
-                n = int(sv.size)
-                vmin = int(sv[0]); vmax = int(sv[-1])
-                q25_4 = _pct4(sv, 1, 4)
-                q50_4 = _pct4(sv, 2, 4)
-                q75_4 = _pct4(sv, 3, 4)
-                iqr4 = q75_4 - q25_4           # 4*IQR
-                if iqr4 == 0:
-                    n_bins, bw3_q = -1, -1
-                else:
-                    # largest k: (k * iqr4)^3 <= 8 * A^3 * n
-                    a3n = 8 * (vmax - vmin) ** 3 * n
-                    k = int(np.floor(float(a3n) ** (1.0 / 3.0)
-                                     / iqr4)) + 2
-                    while (k * iqr4) ** 3 > a3n:
-                        k -= 1
-                    while ((k + 1) * iqr4) ** 3 <= a3n:
-                        k += 1
-                    n_bins = k + 2
-                    bw3_q = int(np.floor(
-                        (float(iqr4 ** 3) / (8.0 * float(n))) * _Q))
-                edges4 = [4 * vmin, q25_4, q50_4, q75_4, 4 * vmax]
-                ca8 = [edges4[i] + edges4[i + 1] for i in range(4)]
-                cg_q = [int(np.floor(
-                    (np.sqrt(float(edges4[i] * edges4[i + 1])) / 4.0)
-                    * _Q)) for i in range(4)]
-                out["image_id"].append(image_id)
-                out["n"].append(n)
-                out["vmin"].append(vmin); out["vmax"].append(vmax)
-                out["q25_4"].append(q25_4); out["q75_4"].append(q75_4)
-                out["n_bins"].append(n_bins); out["bw3_q"].append(bw3_q)
-                for j in range(4):
-                    out[f"ca{j+1}_8"].append(ca8[j])
-                    out[f"cg{j+1}_q"].append(cg_q[j])
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt, img_id):
+        _, pmax = residual_plane(v, fmt, img_id)
+        sv = np.sort(v.ravel(), kind="stable")
+        n = int(sv.size)
+        vmin = int(sv[0]); vmax = int(sv[-1])
+        q25_4 = _pct4(sv, 1, 4)
+        q50_4 = _pct4(sv, 2, 4)
+        q75_4 = _pct4(sv, 3, 4)
+        iqr4 = q75_4 - q25_4           # 4*IQR
+        if iqr4 == 0:
+            n_bins, bw3_q = -1, -1
+        else:
+            # largest k: (k * iqr4)^3 <= 8 * A^3 * n
+            a3n = 8 * (vmax - vmin) ** 3 * n
+            k = int(np.floor(float(a3n) ** (1.0 / 3.0)
+                             / iqr4)) + 2
+            while (k * iqr4) ** 3 > a3n:
+                k -= 1
+            while ((k + 1) * iqr4) ** 3 <= a3n:
+                k += 1
+            n_bins = k + 2
+            bw3_q = int(np.floor(
+                (float(iqr4 ** 3) / (8.0 * float(n))) * _Q))
+        edges4 = [4 * vmin, q25_4, q50_4, q75_4, 4 * vmax]
+        ca8 = [edges4[i] + edges4[i + 1] for i in range(4)]
+        cg_q = [int(np.floor(
+            (np.sqrt(float(edges4[i] * edges4[i + 1])) / 4.0)
+            * _Q)) for i in range(4)]
+        out["image_id"].append(image_id)
+        out["n"].append(n)
+        out["vmin"].append(vmin); out["vmax"].append(vmax)
+        out["q25_4"].append(q25_4); out["q75_4"].append(q75_4)
+        out["n_bins"].append(n_bins); out["bw3_q"].append(bw3_q)
+        for j in range(4):
+            out[f"ca{j+1}_8"].append(ca8[j])
+            out[f"cg{j+1}_q"].append(cg_q[j])
 
-    return images.select("image_id", "id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_HN_SCHEMA)
+    return codec.map_images(images, per_image, _HN_SCHEMA,
+                            extra_cols=("fmt", "id"), dtype=np.int64)
 
 
 # --------------------------------------------------------------------------

@@ -26,13 +26,13 @@ q is bit-identical across engines.  Band 1 is the decoded plane, band
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
 from ..functions import codec
+from ..functions.detmath import ln_pos_np
 
 __all__ = ["solar_distance", "toa_consts", "radiance_toa_stats",
            "DEFAULT_CAL", "DEFAULT_6S", "sref_6s_stats",
@@ -85,32 +85,24 @@ def radiance_toa_stats(images: DataFrame, cal=DEFAULT_CAL,
     consts = [toa_consts(esun, solar_zenith_deg, day_of_year, scale)
               for _, _, esun in cal]
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _TOA_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                bands = [v, v[:, ::-1]]
-                border = (bands[0] == 0) & (bands[1] == 0)
-                for bi, ((g, o, _), (PI, DSQ, ED, SC)) in enumerate(
-                        zip(cal, consts), start=1):
-                    dn = bands[bi - 1]
-                    L = np.where(border, 0.0, g * dn + o)
-                    rho = ((PI * L * DSQ) / ED) * SC
-                    q = np.floor(rho * _TOA_QSCALE).astype(np.int64)
-                    out["image_id"].append(image_id)
-                    out["band"].append(bi)
-                    out["n_pix"].append(int(q.size))
-                    out["n_border"].append(int(border.sum()))
-                    out["sum_rho_q"].append(int(q.sum()))
-                    out["min_rho_q"].append(int(q.min()))
-                    out["max_rho_q"].append(int(q.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        bands = [v, v[:, ::-1]]
+        border = (bands[0] == 0) & (bands[1] == 0)
+        for bi, ((g, o, _), (PI, DSQ, ED, SC)) in enumerate(
+                zip(cal, consts), start=1):
+            dn = bands[bi - 1]
+            L = np.where(border, 0.0, g * dn + o)
+            rho = ((PI * L * DSQ) / ED) * SC
+            q = np.floor(rho * _TOA_QSCALE).astype(np.int64)
+            out["image_id"].append(image_id)
+            out["band"].append(bi)
+            out["n_pix"].append(int(q.size))
+            out["n_border"].append(int(border.sum()))
+            out["sum_rho_q"].append(int(q.sum()))
+            out["min_rho_q"].append(int(q.min()))
+            out["max_rho_q"].append(int(q.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_TOA_SCHEMA)
+    return codec.map_images(images, per_image, _TOA_SCHEMA, dtype=np.int64)
 
 
 # per-band 6S coefficients (aX, bX, cX) for the two synthetic bands
@@ -142,38 +134,30 @@ def sref_6s_stats(images: DataFrame, coeffs=DEFAULT_6S,
     oracle row proves both branches fire.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _S6_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                bands = [v, v[:, ::-1]]
-                border = (bands[0] == 0) & (bands[1] == 0)
-                for bi, (A, B, C) in enumerate(coeffs, start=1):
-                    dn = bands[bi - 1]
-                    y = A * dn - B
-                    t = (y / (1.0 + C * y)) * scale
-                    lo = t < 1.0
-                    o1 = np.where(lo, 1.0, t + 1.0)
-                    clamp = o1 > scale
-                    o2 = np.where(clamp, scale, o1)
-                    res = np.where(border, 0.0, o2)
-                    q = np.floor(res * _TOA_QSCALE).astype(np.int64)
-                    valid = ~border
-                    out["image_id"].append(image_id)
-                    out["band"].append(bi)
-                    out["n_pix"].append(int(q.size))
-                    out["n_lo"].append(int((lo & valid).sum()))
-                    out["n_clamp"].append(int((clamp & valid).sum()))
-                    out["sum_sref_q"].append(int(q.sum()))
-                    out["min_sref_q"].append(int(q.min()))
-                    out["max_sref_q"].append(int(q.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        bands = [v, v[:, ::-1]]
+        border = (bands[0] == 0) & (bands[1] == 0)
+        for bi, (A, B, C) in enumerate(coeffs, start=1):
+            dn = bands[bi - 1]
+            y = A * dn - B
+            t = (y / (1.0 + C * y)) * scale
+            lo = t < 1.0
+            o1 = np.where(lo, 1.0, t + 1.0)
+            clamp = o1 > scale
+            o2 = np.where(clamp, scale, o1)
+            res = np.where(border, 0.0, o2)
+            q = np.floor(res * _TOA_QSCALE).astype(np.int64)
+            valid = ~border
+            out["image_id"].append(image_id)
+            out["band"].append(bi)
+            out["n_pix"].append(int(q.size))
+            out["n_lo"].append(int((lo & valid).sum()))
+            out["n_clamp"].append(int((clamp & valid).sum()))
+            out["sum_sref_q"].append(int(q.sum()))
+            out["min_sref_q"].append(int(q.min()))
+            out["max_sref_q"].append(int(q.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_S6_SCHEMA)
+    return codec.map_images(images, per_image, _S6_SCHEMA, dtype=np.int64)
 
 
 _DOS_SCHEMA = StructType([
@@ -203,33 +187,25 @@ def dos_subtract_stats(images: DataFrame, dark_refl: int = 0) -> DataFrame:
     floats anywhere.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _DOS_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                bands = [v, v[:, ::-1]]
-                for bi, dn in enumerate(bands, start=1):
-                    nodata = dn == 0
-                    valid = dn[~nodata]
-                    off = int(valid.min()) if valid.size else 0
-                    res = dn - off + int(dark_refl)
-                    res = np.where(res <= 0, 1, res)
-                    res = np.where(nodata, 0, res)
-                    out["image_id"].append(image_id)
-                    out["band"].append(bi)
-                    out["n_pix"].append(int(res.size))
-                    out["n_nodata"].append(int(nodata.sum()))
-                    out["dark_off"].append(off)
-                    out["sum_out"].append(int(res.sum()))
-                    out["min_out"].append(int(res.min()))
-                    out["max_out"].append(int(res.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        bands = [v, v[:, ::-1]]
+        for bi, dn in enumerate(bands, start=1):
+            nodata = dn == 0
+            valid = dn[~nodata]
+            off = int(valid.min()) if valid.size else 0
+            res = dn - off + int(dark_refl)
+            res = np.where(res <= 0, 1, res)
+            res = np.where(nodata, 0, res)
+            out["image_id"].append(image_id)
+            out["band"].append(bi)
+            out["n_pix"].append(int(res.size))
+            out["n_nodata"].append(int(nodata.sum()))
+            out["dark_off"].append(off)
+            out["sum_out"].append(int(res.sum()))
+            out["min_out"].append(int(res.min()))
+            out["max_out"].append(int(res.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_DOS_SCHEMA)
+    return codec.map_images(images, per_image, _DOS_SCHEMA, dtype=np.int64)
 
 
 _SAT_SCHEMA = StructType([
@@ -250,26 +226,20 @@ def saturated_stats(images: DataFrame) -> DataFrame:
     (the mirror is a permutation), which the checksum captures."""
     import numpy as _np
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SAT_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(_np.int64)
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                ww = int(w)
-                for bi, plane in enumerate((v, v[:, ::-1]), start=1):
-                    ys, xs = _np.nonzero(plane == pmax - 1)
-                    out["image_id"].append(image_id)
-                    out["band"].append(bi)
-                    out["n_pix"].append(int(plane.size))
-                    out["n_sat"].append(int(ys.size))
-                    out["sat_ck"].append(int((ys * ww + xs).sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt):
+        _, w = v.shape
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        ww = int(w)
+        for bi, plane in enumerate((v, v[:, ::-1]), start=1):
+            ys, xs = _np.nonzero(plane == pmax - 1)
+            out["image_id"].append(image_id)
+            out["band"].append(bi)
+            out["n_pix"].append(int(plane.size))
+            out["n_sat"].append(int(ys.size))
+            out["sat_ck"].append(int((ys * ww + xs).sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SAT_SCHEMA)
+    return codec.map_images(images, per_image, _SAT_SCHEMA,
+                            extra_cols=("fmt",), dtype=_np.int64)
 
 
 # Landsat-ish thermal constants: K1, K2 (band 6 style) and the rational
@@ -298,30 +268,21 @@ def thermal_brightness_stats(images: DataFrame) -> DataFrame:
     other op is one correctly-rounded IEEE primitive, so the
     2^20-quantized temperature is exact-hash safe."""
     import numpy as _np
-    from .detmath_shim import ln_pos  # local import keeps codec-light
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _THB_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(_np.int64)
-                for bi, dn in enumerate((v, v[:, ::-1]), start=1):
-                    L = (37 * dn + 3200).astype(_np.float64) / 1000.0
-                    arg = THERM_K1 / L + 1.0
-                    tb = THERM_K2 / ln_pos(arg)
-                    q = _np.floor(tb * 1048576.0).astype(_np.int64)
-                    out["image_id"].append(image_id)
-                    out["band"].append(bi)
-                    out["n_pix"].append(int(q.size))
-                    out["sum_tb_q"].append(int(q.sum()))
-                    out["min_tb_q"].append(int(q.min()))
-                    out["max_tb_q"].append(int(q.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        for bi, dn in enumerate((v, v[:, ::-1]), start=1):
+            L = (37 * dn + 3200).astype(_np.float64) / 1000.0
+            arg = THERM_K1 / L + 1.0
+            tb = THERM_K2 / ln_pos_np(arg)
+            q = _np.floor(tb * 1048576.0).astype(_np.int64)
+            out["image_id"].append(image_id)
+            out["band"].append(bi)
+            out["n_pix"].append(int(q.size))
+            out["sum_tb_q"].append(int(q.sum()))
+            out["min_tb_q"].append(int(q.min()))
+            out["max_tb_q"].append(int(q.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_THB_SCHEMA)
+    return codec.map_images(images, per_image, _THB_SCHEMA, dtype=_np.int64)
 
 
 # SPOT5-style physical gains/biases for the two synthetic bands
@@ -346,27 +307,19 @@ def spot_radiance_stats(images: DataFrame, gains=SPOT_GAINS) -> DataFrame:
     add, 2^20-quantized."""
     import numpy as _np
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SPOT_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(_np.int64)
-                for bi, ((g, b), dn) in enumerate(
-                        zip(gains, (v, v[:, ::-1])), start=1):
-                    L = dn.astype(_np.float64) / g + b
-                    q = _np.floor(L * 1048576.0).astype(_np.int64)
-                    out["image_id"].append(image_id)
-                    out["band"].append(bi)
-                    out["n_pix"].append(int(q.size))
-                    out["sum_l_q"].append(int(q.sum()))
-                    out["min_l_q"].append(int(q.min()))
-                    out["max_l_q"].append(int(q.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        for bi, ((g, b), dn) in enumerate(
+                zip(gains, (v, v[:, ::-1])), start=1):
+            L = dn.astype(_np.float64) / g + b
+            q = _np.floor(L * 1048576.0).astype(_np.int64)
+            out["image_id"].append(image_id)
+            out["band"].append(bi)
+            out["n_pix"].append(int(q.size))
+            out["sum_l_q"].append(int(q.sum()))
+            out["min_l_q"].append(int(q.min()))
+            out["max_l_q"].append(int(q.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SPOT_SCHEMA)
+    return codec.map_images(images, per_image, _SPOT_SCHEMA, dtype=_np.int64)
 
 
 # constant per-band dark offsets for apply_subtract_offsets
@@ -392,30 +345,22 @@ def subtract_offsets_stats(images: DataFrame,
     ``n_lifted`` counts the nonNegative branch so it provably fires."""
     import numpy as _np
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SUBO_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(_np.int64)
-                for bi, (off, dn) in enumerate(
-                        zip(offsets, (v, v[:, ::-1])), start=1):
-                    nodata = dn == 0
-                    res = dn - off
-                    lifted = (res <= 0) & ~nodata
-                    res = _np.where(res <= 0, 1, res)
-                    res = _np.where(nodata, 0, res)
-                    out["image_id"].append(image_id)
-                    out["band"].append(bi)
-                    out["n_pix"].append(int(res.size))
-                    out["n_nodata"].append(int(nodata.sum()))
-                    out["n_lifted"].append(int(lifted.sum()))
-                    out["sum_out"].append(int(res.sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        for bi, (off, dn) in enumerate(
+                zip(offsets, (v, v[:, ::-1])), start=1):
+            nodata = dn == 0
+            res = dn - off
+            lifted = (res <= 0) & ~nodata
+            res = _np.where(res <= 0, 1, res)
+            res = _np.where(nodata, 0, res)
+            out["image_id"].append(image_id)
+            out["band"].append(bi)
+            out["n_pix"].append(int(res.size))
+            out["n_nodata"].append(int(nodata.sum()))
+            out["n_lifted"].append(int(lifted.sum()))
+            out["sum_out"].append(int(res.sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SUBO_SCHEMA)
+    return codec.map_images(images, per_image, _SUBO_SCHEMA, dtype=_np.int64)
 
 
 # elevation-indexed 6S coefficient LUT: (elev, aX, bX, cX)
@@ -453,43 +398,36 @@ def sref_6s_lut_stats(images: DataFrame, lut=LUT_6S,
     elevs = [e for e, *_ in lut]
     mids = [(elevs[i] + elevs[i + 1]) // 2 for i in range(len(lut) - 1)]
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _S6L_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(_np.int64)
-                x = _np.arange(int(w), dtype=_np.int64)[None, :]
-                y = _np.arange(int(h), dtype=_np.int64)[:, None]
-                e = dem_plane(v, x, y)
-                idx = _np.zeros_like(e)
-                for m in mids:
-                    idx += (e > m)
-                for li, (_, A, B, C) in enumerate(lut):
-                    sel = idx == li
-                    n = int(sel.sum())
-                    out["image_id"].append(image_id)
-                    out["lut_idx"].append(li)
-                    out["n_pix"].append(n)
-                    if n == 0:
-                        out["sum_sref_q"].append(-1)
-                        out["min_sref_q"].append(-1)
-                        out["max_sref_q"].append(-1)
-                        continue
-                    dn = v[sel]
-                    yv = A * dn - B
-                    t = (yv / (1.0 + C * yv)) * scale
-                    o1 = _np.where(t < 1.0, 1.0, t + 1.0)
-                    o2 = _np.where(o1 > scale, scale, o1)
-                    q = _np.floor(o2 * 1048576.0).astype(_np.int64)
-                    out["sum_sref_q"].append(int(q.sum()))
-                    out["min_sref_q"].append(int(q.min()))
-                    out["max_sref_q"].append(int(q.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        h, w = v.shape
+        x = _np.arange(int(w), dtype=_np.int64)[None, :]
+        y = _np.arange(int(h), dtype=_np.int64)[:, None]
+        e = dem_plane(v, x, y)
+        idx = _np.zeros_like(e)
+        for m in mids:
+            idx += (e > m)
+        for li, (_, A, B, C) in enumerate(lut):
+            sel = idx == li
+            n = int(sel.sum())
+            out["image_id"].append(image_id)
+            out["lut_idx"].append(li)
+            out["n_pix"].append(n)
+            if n == 0:
+                out["sum_sref_q"].append(-1)
+                out["min_sref_q"].append(-1)
+                out["max_sref_q"].append(-1)
+                continue
+            dn = v[sel]
+            yv = A * dn - B
+            t = (yv / (1.0 + C * yv)) * scale
+            o1 = _np.where(t < 1.0, 1.0, t + 1.0)
+            o2 = _np.where(o1 > scale, scale, o1)
+            q = _np.floor(o2 * 1048576.0).astype(_np.int64)
+            out["sum_sref_q"].append(int(q.sum()))
+            out["min_sref_q"].append(int(q.min()))
+            out["max_sref_q"].append(int(q.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_S6L_SCHEMA)
+    return codec.map_images(images, per_image, _S6L_SCHEMA, dtype=_np.int64)
 
 
 _T2R_SCHEMA = StructType([
@@ -515,24 +453,16 @@ def toa_to_radiance_stats(images: DataFrame,
     PI, DSQ, ED, SC = toa_consts(DEFAULT_CAL[0][2], solar_zenith_deg,
                                  day_of_year, scale)
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _T2R_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(_np.int64)
-                L = ((v.astype(_np.float64) / SC) * ED) / (PI * DSQ)
-                q = _np.floor(L * 1048576.0).astype(_np.int64)
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(q.size))
-                out["sum_l_q"].append(int(q.sum()))
-                out["min_l_q"].append(int(q.min()))
-                out["max_l_q"].append(int(q.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        L = ((v.astype(_np.float64) / SC) * ED) / (PI * DSQ)
+        q = _np.floor(L * 1048576.0).astype(_np.int64)
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(q.size))
+        out["sum_l_q"].append(int(q.sum()))
+        out["min_l_q"].append(int(q.min()))
+        out["max_l_q"].append(int(q.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_T2R_SCHEMA)
+    return codec.map_images(images, per_image, _T2R_SCHEMA, dtype=_np.int64)
 
 
 _QA_SCHEMA = None  # built lazily below
@@ -570,35 +500,26 @@ def qa_pixel_parse_stats(images: DataFrame) -> DataFrame:
 
     schema = _qa_schema()
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in schema.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"],
-                                                pdf["bytes"], pdf["w"],
-                                                pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                qa = (v * 67) % 65536
+    def per_image(out, image_id, v):
+        qa = (v * 67) % 65536
 
-                def bit(j):
-                    return (qa >> j) & 1
+        def bit(j):
+            return (qa >> j) & 1
 
-                conf = [1 + 2 * bit(hi) + bit(hi + 1)
-                        for hi in (8, 10, 12, 14)]
-                out["image_id"].append(str(image_id))
-                out["n_pix"].append(int(qa.size))
-                for k, j in zip(("n_fill", "n_dilated", "n_cirrus",
-                                 "n_cloud", "n_shadow", "n_snow",
-                                 "n_clear", "n_water"), range(8)):
-                    out[k].append(int(bit(j).sum()))
-                for k, c in zip(("s_cloud_conf", "s_shadow_conf",
-                                 "s_snow_conf", "s_cirrus_conf"), conf):
-                    out[k].append(int(c.sum()))
-                out["n_cloud_high"].append(int((conf[0] == 4).sum()))
-            yield pd.DataFrame(out)
+        conf = [1 + 2 * bit(hi) + bit(hi + 1)
+                for hi in (8, 10, 12, 14)]
+        out["image_id"].append(str(image_id))
+        out["n_pix"].append(int(qa.size))
+        for k, j in zip(("n_fill", "n_dilated", "n_cirrus",
+                         "n_cloud", "n_shadow", "n_snow",
+                         "n_clear", "n_water"), range(8)):
+            out[k].append(int(bit(j).sum()))
+        for k, c in zip(("s_cloud_conf", "s_shadow_conf",
+                         "s_snow_conf", "s_cirrus_conf"), conf):
+            out[k].append(int(c.sum()))
+        out["n_cloud_high"].append(int((conf[0] == 4).sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=schema)
+    return codec.map_images(images, per_image, schema, dtype=np.int64)
 
 
 def dsq_table():
@@ -701,47 +622,40 @@ def sref_sd2010_stats(images: DataFrame, azimuth: float = 135.0,
     # (direct, diffuse*beta, total) folded per rung
     rungs = [(d, f * beta, d + f + e_) for _, d, f, e_ in irr_lut]
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SD_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                x = np.arange(int(w), dtype=np.int64)[None, :]
-                y = np.arange(int(h), dtype=np.int64)[:, None]
-                e = dem_plane(v, x, y)
-                gx, gy = horn_gradients(e)
-                vc = v[1:-1, 1:-1]
-                ec = e[1:-1, 1:-1]
-                dx = gx / R8
-                dy = -gy / R8
-                den = np.sqrt(1.0 + (dx * dx + dy * dy))
-                cosi = (SZ - CZ * (dy * K1 - dx * K2)) / den
-                cose = 1.0 / den
-                gamma = (cosi + cose) / c45
-                idx = np.zeros_like(ec)
-                for m in mids:
-                    idx += (ec > m)
-                outv = np.zeros(ec.shape, dtype=np.float64)
-                for li, (dirv, difb, totv) in enumerate(rungs):
-                    sel = idx == li
-                    lv = (vc[sel] / scale) * totv
-                    o = lv / (dirv * gamma[sel] + difb) * scale
-                    outv[sel] = np.where(o < 1.0, 1.0, o)
-                shade = cosi <= 0.0
-                outv[shade] = 0.0
-                q = np.floor(outv * 1048576.0).astype(np.int64)
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(q.size))
-                out["n_shade"].append(int(shade.sum()))
-                out["sum_sd_q"].append(int(q.sum()))
-                out["min_sd_q"].append(int(q.min()))
-                out["max_sd_q"].append(int(q.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        h, w = v.shape
+        x = np.arange(int(w), dtype=np.int64)[None, :]
+        y = np.arange(int(h), dtype=np.int64)[:, None]
+        e = dem_plane(v, x, y)
+        gx, gy = horn_gradients(e)
+        vc = v[1:-1, 1:-1]
+        ec = e[1:-1, 1:-1]
+        dx = gx / R8
+        dy = -gy / R8
+        den = np.sqrt(1.0 + (dx * dx + dy * dy))
+        cosi = (SZ - CZ * (dy * K1 - dx * K2)) / den
+        cose = 1.0 / den
+        gamma = (cosi + cose) / c45
+        idx = np.zeros_like(ec)
+        for m in mids:
+            idx += (ec > m)
+        outv = np.zeros(ec.shape, dtype=np.float64)
+        for li, (dirv, difb, totv) in enumerate(rungs):
+            sel = idx == li
+            lv = (vc[sel] / scale) * totv
+            o = lv / (dirv * gamma[sel] + difb) * scale
+            outv[sel] = np.where(o < 1.0, 1.0, o)
+        shade = cosi <= 0.0
+        outv[shade] = 0.0
+        q = np.floor(outv * 1048576.0).astype(np.int64)
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(q.size))
+        out["n_shade"].append(int(shade.sum()))
+        out["sum_sd_q"].append(int(q.sum()))
+        out["min_sd_q"].append(int(q.min()))
+        out["max_sd_q"].append(int(q.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SD_SCHEMA)
+    return codec.map_images(images, per_image, _SD_SCHEMA, dtype=np.int64)
 
 
 # --------------------------------------------------------------------------
@@ -825,53 +739,46 @@ def sref_6s_elev_aot_stats(images: DataFrame, lut=LUT_6S_ELEV_AOT,
                     for _, sub in lut]
     coeffs = [[(A, B, C) for _, A, B, C in sub] for _, sub in lut]
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _S6A_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                x = np.arange(int(w), dtype=np.int64)[None, :]
-                y = np.arange(int(h), dtype=np.int64)[:, None]
-                e = dem_plane(v, x, y)
-                m = aot_m_np(v, x, y)
-                eidx = np.zeros_like(e)
-                for mm in mids:
-                    eidx += (e > mm)
-                nodata = v == 0
-                for ei in range(len(lut)):
-                    lad = rung_ladders[ei]
-                    aidx = np.take(np.asarray(lad, dtype=np.int64), m)
-                    for ai in range(n_aot):
-                        sel = (eidx == ei) & (aidx == ai)
-                        cell = ei * n_aot + ai
-                        n = int(sel.sum())
-                        out["image_id"].append(image_id)
-                        out["cell_idx"].append(cell)
-                        out["n_pix"].append(n)
-                        if n == 0:
-                            out["n_nodata"].append(-1)
-                            out["sum_sref_q"].append(-1)
-                            out["min_sref_q"].append(-1)
-                            out["max_sref_q"].append(-1)
-                            continue
-                        A, B, C = coeffs[ei][ai]
-                        dn = v[sel]
-                        yv = A * dn - B
-                        t = (yv / (1.0 + C * yv)) * scale
-                        o1 = np.where(t < 1.0, 1.0, t + 1.0)
-                        o2 = np.where(o1 > scale, scale, o1)
-                        res = np.where(nodata[sel], 0.0, o2)
-                        q = np.floor(res * 1048576.0).astype(np.int64)
-                        out["n_nodata"].append(int(nodata[sel].sum()))
-                        out["sum_sref_q"].append(int(q.sum()))
-                        out["min_sref_q"].append(int(q.min()))
-                        out["max_sref_q"].append(int(q.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        h, w = v.shape
+        x = np.arange(int(w), dtype=np.int64)[None, :]
+        y = np.arange(int(h), dtype=np.int64)[:, None]
+        e = dem_plane(v, x, y)
+        m = aot_m_np(v, x, y)
+        eidx = np.zeros_like(e)
+        for mm in mids:
+            eidx += (e > mm)
+        nodata = v == 0
+        for ei in range(len(lut)):
+            lad = rung_ladders[ei]
+            aidx = np.take(np.asarray(lad, dtype=np.int64), m)
+            for ai in range(n_aot):
+                sel = (eidx == ei) & (aidx == ai)
+                cell = ei * n_aot + ai
+                n = int(sel.sum())
+                out["image_id"].append(image_id)
+                out["cell_idx"].append(cell)
+                out["n_pix"].append(n)
+                if n == 0:
+                    out["n_nodata"].append(-1)
+                    out["sum_sref_q"].append(-1)
+                    out["min_sref_q"].append(-1)
+                    out["max_sref_q"].append(-1)
+                    continue
+                A, B, C = coeffs[ei][ai]
+                dn = v[sel]
+                yv = A * dn - B
+                t = (yv / (1.0 + C * yv)) * scale
+                o1 = np.where(t < 1.0, 1.0, t + 1.0)
+                o2 = np.where(o1 > scale, scale, o1)
+                res = np.where(nodata[sel], 0.0, o2)
+                q = np.floor(res * 1048576.0).astype(np.int64)
+                out["n_nodata"].append(int(nodata[sel].sum()))
+                out["sum_sref_q"].append(int(q.sum()))
+                out["min_sref_q"].append(int(q.min()))
+                out["max_sref_q"].append(int(q.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_S6A_SCHEMA)
+    return codec.map_images(images, per_image, _S6A_SCHEMA, dtype=np.int64)
 
 
 _S6I_SCHEMA = StructType([
@@ -904,43 +811,36 @@ def sref_6s_lut_interp_stats(images: DataFrame, lut=LUT_6S,
     Cs = np.asarray([c for _, _, _, c in lut])
     last = len(lut) - 1
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _S6I_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                x = np.arange(int(w), dtype=np.int64)[None, :]
-                y = np.arange(int(h), dtype=np.int64)[:, None]
-                e = dem_plane(v, x, y)
-                idx = np.zeros_like(e)
-                for mm in mids:
-                    idx += (e > mm)
-                # reference's second-entry rule
-                idx2 = np.where(idx == 0, 1,
-                                np.where(idx == last, last - 1,
-                                         np.where(e - np.take(elevs, idx) < 0,
-                                                  idx - 1, idx + 1)))
-                e1 = np.take(elevs, idx)
-                e2 = np.take(elevs, idx2)
-                d12 = np.abs(e1 - e2)
-                p1 = 1.0 - (np.abs(e - e1) / d12)
-                p2 = 1.0 - (np.abs(e - e2) / d12)
-                t1 = np.take(As, idx) * v - np.take(Bs, idx)
-                r1 = (t1 / (1.0 + np.take(Cs, idx) * t1)) * scale
-                t2 = np.take(As, idx2) * v - np.take(Bs, idx2)
-                r2 = (t2 / (1.0 + np.take(Cs, idx2) * t2)) * scale
-                o = (r1 * p1) + (r2 * p2)
-                o1 = np.where(o < 1.0, 1.0, o + 1.0)
-                o2 = np.where(o1 > scale, scale, o1)
-                q = np.floor(o2 * 1048576.0).astype(np.int64)
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(q.size))
-                out["sum_sref_q"].append(int(q.sum()))
-                out["min_sref_q"].append(int(q.min()))
-                out["max_sref_q"].append(int(q.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        h, w = v.shape
+        x = np.arange(int(w), dtype=np.int64)[None, :]
+        y = np.arange(int(h), dtype=np.int64)[:, None]
+        e = dem_plane(v, x, y)
+        idx = np.zeros_like(e)
+        for mm in mids:
+            idx += (e > mm)
+        # reference's second-entry rule
+        idx2 = np.where(idx == 0, 1,
+                        np.where(idx == last, last - 1,
+                                 np.where(e - np.take(elevs, idx) < 0,
+                                          idx - 1, idx + 1)))
+        e1 = np.take(elevs, idx)
+        e2 = np.take(elevs, idx2)
+        d12 = np.abs(e1 - e2)
+        p1 = 1.0 - (np.abs(e - e1) / d12)
+        p2 = 1.0 - (np.abs(e - e2) / d12)
+        t1 = np.take(As, idx) * v - np.take(Bs, idx)
+        r1 = (t1 / (1.0 + np.take(Cs, idx) * t1)) * scale
+        t2 = np.take(As, idx2) * v - np.take(Bs, idx2)
+        r2 = (t2 / (1.0 + np.take(Cs, idx2) * t2)) * scale
+        o = (r1 * p1) + (r2 * p2)
+        o1 = np.where(o < 1.0, 1.0, o + 1.0)
+        o2 = np.where(o1 > scale, scale, o1)
+        q = np.floor(o2 * 1048576.0).astype(np.int64)
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(q.size))
+        out["sum_sref_q"].append(int(q.sum()))
+        out["min_sref_q"].append(int(q.min()))
+        out["max_sref_q"].append(int(q.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_S6I_SCHEMA)
+    return codec.map_images(images, per_image, _S6I_SCHEMA, dtype=np.int64)

@@ -24,7 +24,6 @@ support the threshold (empty, or <2 distinct values for Otsu, or no
 >=4-pixel candidate subset for kurt-skew) are dropped by BOTH engines.
 """
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
@@ -68,52 +67,43 @@ def class_otsu_outliers_stats(images: DataFrame) -> DataFrame:
     """find_class_otsu_outliers (pxloutlierchng.py:344), low_thres=True:
     outliers are masked pixels with val < otsu(masked values)."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _OTSU_CD_SCHEMA.fields}
-            for image_id, v, vp in _iter_vvp(pdf):
-                cls = _cls_plane(vp)
-                data = v[(cls == CD_MASK_VAL) & (v != CD_NODATA)]
-                vals, cnts = np.unique(data, return_counts=True)
-                if vals.size < 2:
-                    continue
-                w0 = np.cumsum(cnts)[:-1]
-                s0 = np.cumsum(vals * cnts)[:-1]
-                n = data.size
-                s = int((vals * cnts).sum())
-                w1 = n - w0
-                nn = s0 * w1 - (s - s0) * w0
-                score = (nn.astype(np.float64) / w0) \
-                    * nn.astype(np.float64) / w1
-                t = int(vals[int(np.argmax(score))])
-                n_mask, n_chng, n_nochng = _classify_counts(
-                    v, cls, v < t)
-                out["image_id"].append(image_id)
-                out["thres"].append(t)
-                out["n_mask"].append(n_mask)
-                out["n_chng"].append(n_chng)
-                out["n_nochng"].append(n_nochng)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt, iid):
+        vp = _perturbed(v, fmt, iid)
+        cls = _cls_plane(vp)
+        data = v[(cls == CD_MASK_VAL) & (v != CD_NODATA)]
+        vals, cnts = np.unique(data, return_counts=True)
+        if vals.size < 2:
+            return
+        w0 = np.cumsum(cnts)[:-1]
+        s0 = np.cumsum(vals * cnts)[:-1]
+        n = data.size
+        s = int((vals * cnts).sum())
+        w1 = n - w0
+        nn = s0 * w1 - (s - s0) * w0
+        score = (nn.astype(np.float64) / w0) \
+            * nn.astype(np.float64) / w1
+        t = int(vals[int(np.argmax(score))])
+        n_mask, n_chng, n_nochng = _classify_counts(
+            v, cls, v < t)
+        out["image_id"].append(image_id)
+        out["thres"].append(t)
+        out["n_mask"].append(n_mask)
+        out["n_chng"].append(n_chng)
+        out["n_nochng"].append(n_nochng)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt", "id") \
-        .mapInPandas(gen, schema=_OTSU_CD_SCHEMA)
+    return codec.map_images(images, per_image, _OTSU_CD_SCHEMA,
+                            extra_cols=("fmt", "id"), dtype=np.int64)
 
 
-def _iter_vvp(pdf):
-    """(image_id, v, vp) with vp = the engine's perturbed mirror plane
-    (synth twin of bstv.vp: clamp(v + ((x*7 + y*3 + id) % 21 - 10)))."""
-    for image_id, buf, w, h, fmt, iid in zip(
-            pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-            pdf["fmt"], pdf["id"]):
-        w, h = int(w), int(h)
-        v = codec.decode_image(bytes(buf), w, h, str(fmt)) \
-            .astype(np.int64)
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-        x = np.arange(w, dtype=np.int64)[None, :]
-        y = np.arange(h, dtype=np.int64)[:, None]
-        e = (x * 7 + y * 3 + np.int64(iid)) % 21 - 10
-        vp = np.clip(v + e, 0, pmax - 1)
-        yield image_id, v, vp
+def _perturbed(v, fmt, iid):
+    """vp = the engine's perturbed mirror plane (synth twin of bstv.vp:
+    clamp(v + ((x*7 + y*3 + id) % 21 - 10)))."""
+    h, w = v.shape
+    pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+    x = np.arange(w, dtype=np.int64)[None, :]
+    y = np.arange(h, dtype=np.int64)[:, None]
+    e = (x * 7 + y * 3 + np.int64(iid)) % 21 - 10
+    return np.clip(v + e, 0, pmax - 1)
 
 
 _LI_CD_SCHEMA = StructType([
@@ -132,46 +122,43 @@ def class_li_outliers_stats(images: DataFrame) -> DataFrame:
     +1 domain shift, fixed 16-round unroll, degenerate rounds carry t
     forward; the classification compares in the same +1 domain."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _LI_CD_SCHEMA.fields}
-            for image_id, v, vp in _iter_vvp(pdf):
-                cls = _cls_plane(vp)
-                data = v[(cls == CD_MASK_VAL) & (v != CD_NODATA)] + 1
-                if data.size == 0:
-                    continue
-                N = int(data.size)
-                S = int(data.sum())
-                t = float(S) / float(N)
-                for _ in range(_LI_ROUNDS):
-                    fore = data > t
-                    nf = int(fore.sum())
-                    nb = N - nf
-                    if nf == 0 or nb == 0:
-                        continue
-                    sf = int(data[fore].sum())
-                    mf = float(sf) / float(nf)
-                    mb = float(S - sf) / float(nb)
-                    # guard the LOG difference, not the mean difference:
-                    # two distinct means can round to the same ln_pos
-                    # value, and mb-mf over a zero log gap would raise
-                    # ZeroDivisionError in the task (ADVICE r4).  Carry
-                    # t forward, mirroring the oracle's lnmb = lnmf arm.
-                    d = float(ln_pos_np(mb)) - float(ln_pos_np(mf))
-                    if d == 0.0:
-                        continue
-                    t = (mb - mf) / d
-                n_mask, n_chng, n_nochng = _classify_counts(
-                    v, cls, (v + 1) > t)
-                out["image_id"].append(image_id)
-                out["t_q"].append(int(np.floor(t * _Q)))
-                out["n_mask"].append(n_mask)
-                out["n_chng"].append(n_chng)
-                out["n_nochng"].append(n_nochng)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt, iid):
+        vp = _perturbed(v, fmt, iid)
+        cls = _cls_plane(vp)
+        data = v[(cls == CD_MASK_VAL) & (v != CD_NODATA)] + 1
+        if data.size == 0:
+            return
+        N = int(data.size)
+        S = int(data.sum())
+        t = float(S) / float(N)
+        for _ in range(_LI_ROUNDS):
+            fore = data > t
+            nf = int(fore.sum())
+            nb = N - nf
+            if nf == 0 or nb == 0:
+                continue
+            sf = int(data[fore].sum())
+            mf = float(sf) / float(nf)
+            mb = float(S - sf) / float(nb)
+            # guard the LOG difference, not the mean difference:
+            # two distinct means can round to the same ln_pos
+            # value, and mb-mf over a zero log gap would raise
+            # ZeroDivisionError in the task (ADVICE r4).  Carry
+            # t forward, mirroring the oracle's lnmb = lnmf arm.
+            d = float(ln_pos_np(mb)) - float(ln_pos_np(mf))
+            if d == 0.0:
+                continue
+            t = (mb - mf) / d
+        n_mask, n_chng, n_nochng = _classify_counts(
+            v, cls, (v + 1) > t)
+        out["image_id"].append(image_id)
+        out["t_q"].append(int(np.floor(t * _Q)))
+        out["n_mask"].append(n_mask)
+        out["n_chng"].append(n_chng)
+        out["n_nochng"].append(n_nochng)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt", "id") \
-        .mapInPandas(gen, schema=_LI_CD_SCHEMA)
+    return codec.map_images(images, per_image, _LI_CD_SCHEMA,
+                            extra_cols=("fmt", "id"), dtype=np.int64)
 
 
 _KS_CD_SCHEMA = StructType([
@@ -192,55 +179,52 @@ def class_kurt_skew_outliers_stats(images: DataFrame) -> DataFrame:
     histmetrics.kurt_skew_threshold_stats — exact-integer moments,
     ties to the smallest threshold, candidates need n>=4 and A2>0)."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _KS_CD_SCHEMA.fields}
-            for image_id, v, vp in _iter_vvp(pdf):
-                cls = _cls_plane(vp)
-                data = v[(cls == CD_MASK_VAL) & (v != CD_NODATA)]
-                vals, cnts = np.unique(data, return_counts=True)
+    def per_image(out, image_id, v, fmt, iid):
+        vp = _perturbed(v, fmt, iid)
+        cls = _cls_plane(vp)
+        data = v[(cls == CD_MASK_VAL) & (v != CD_NODATA)]
+        vals, cnts = np.unique(data, return_counts=True)
 
-                def _suffix(a):
-                    return np.concatenate(
-                        [np.cumsum(a[::-1])[::-1][1:], [0]])
-                if vals.size == 0:
-                    continue
-                sn = _suffix(cnts)
-                s1 = _suffix(vals * cnts)
-                s2 = _suffix(vals ** 2 * cnts)
-                s3 = _suffix(vals ** 3 * cnts)
-                s4 = _suffix(vals ** 4 * cnts)
-                best = None
-                for i in range(vals.size):
-                    n = int(sn[i])
-                    if n < 4:
-                        continue
-                    S1, S2, S3, S4 = (int(s1[i]), int(s2[i]),
-                                      int(s3[i]), int(s4[i]))
-                    a2 = n * S2 - S1 * S1
-                    if a2 <= 0:
-                        continue
-                    a3 = n * n * S3 - 3 * n * S1 * S2 + 2 * S1 ** 3
-                    a4 = (n ** 3 * S4 - 4 * n * n * S1 * S3
-                          + 6 * n * S1 * S1 * S2 - 3 * S1 ** 4)
-                    a2d = float(a2)
-                    sk = float(a3) / (a2d * np.sqrt(a2d))
-                    ku = float(a4) / (a2d * a2d) - 3.0
-                    cq = int(np.floor((abs(ku) + abs(sk)) * _Q))
-                    if best is None or cq < best[0]:
-                        best = (cq, int(vals[i]))
-                if best is None:
-                    continue
-                cq, t = best
-                n_mask, n_chng, n_nochng = _classify_counts(
-                    v, cls, v < t)
-                out["image_id"].append(image_id)
-                out["thr_v"].append(t)
-                out["crit_q"].append(cq)
-                out["n_mask"].append(n_mask)
-                out["n_chng"].append(n_chng)
-                out["n_nochng"].append(n_nochng)
-            yield pd.DataFrame(out)
+        def _suffix(a):
+            return np.concatenate(
+                [np.cumsum(a[::-1])[::-1][1:], [0]])
+        if vals.size == 0:
+            return
+        sn = _suffix(cnts)
+        s1 = _suffix(vals * cnts)
+        s2 = _suffix(vals ** 2 * cnts)
+        s3 = _suffix(vals ** 3 * cnts)
+        s4 = _suffix(vals ** 4 * cnts)
+        best = None
+        for i in range(vals.size):
+            n = int(sn[i])
+            if n < 4:
+                continue
+            S1, S2, S3, S4 = (int(s1[i]), int(s2[i]),
+                              int(s3[i]), int(s4[i]))
+            a2 = n * S2 - S1 * S1
+            if a2 <= 0:
+                continue
+            a3 = n * n * S3 - 3 * n * S1 * S2 + 2 * S1 ** 3
+            a4 = (n ** 3 * S4 - 4 * n * n * S1 * S3
+                  + 6 * n * S1 * S1 * S2 - 3 * S1 ** 4)
+            a2d = float(a2)
+            sk = float(a3) / (a2d * np.sqrt(a2d))
+            ku = float(a4) / (a2d * a2d) - 3.0
+            cq = int(np.floor((abs(ku) + abs(sk)) * _Q))
+            if best is None or cq < best[0]:
+                best = (cq, int(vals[i]))
+        if best is None:
+            return
+        cq, t = best
+        n_mask, n_chng, n_nochng = _classify_counts(
+            v, cls, v < t)
+        out["image_id"].append(image_id)
+        out["thr_v"].append(t)
+        out["crit_q"].append(cq)
+        out["n_mask"].append(n_mask)
+        out["n_chng"].append(n_chng)
+        out["n_nochng"].append(n_nochng)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt", "id") \
-        .mapInPandas(gen, schema=_KS_CD_SCHEMA)
+    return codec.map_images(images, per_image, _KS_CD_SCHEMA,
+                            extra_cols=("fmt", "id"), dtype=np.int64)

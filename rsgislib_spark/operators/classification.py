@@ -33,7 +33,6 @@ near-diagonal confusion with every class populated and both error signs
 live.  Undefined ratios (empty class, degenerate kappa) emit -1.
 """
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
@@ -47,15 +46,15 @@ _Q = 1048576.0  # 2^20 dyadic quantizer (exact power-of-two multiply)
 _K = 4          # number of classes
 
 
-def _plane(image_id, buf, w, h, fmt, img_id):
-    """Decoded plane v, residual e, and pmax for one image."""
-    v = codec.decode_image(bytes(buf), int(w), int(h),
-                           str(fmt)).astype(np.int64)
+def residual_plane(v, fmt, img_id):
+    """Residual plane e (a writable copy) and pmax for the decoded int64
+    plane v of image ``img_id``; shared with binstats."""
+    h, w = v.shape
     pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-    x = np.arange(int(w), dtype=np.int64)[None, :]
-    y = np.arange(int(h), dtype=np.int64)[:, None]
+    x = np.arange(w, dtype=np.int64)[None, :]
+    y = np.arange(h, dtype=np.int64)[:, None]
     e = (x * 7 + y * 3 + int(img_id)) % 21 - 10
-    return v, np.broadcast_to(e, v.shape), pmax
+    return np.broadcast_to(e, v.shape).copy(), pmax
 
 
 _CLS_SCHEMA = StructType([
@@ -89,45 +88,39 @@ def class_accuracy_stats(images: DataFrame) -> DataFrame:
     them in the same dict).
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _CLS_SCHEMA.fields}
-            for image_id, buf, w, h, fmt, img_id in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"], pdf["id"]):
-                v, e, pmax = _plane(image_id, buf, w, h, fmt, img_id)
-                rc = (v * _K) // pmax
-                vp = np.clip(v + e, 0, pmax - 1)
-                pc = (vp * _K) // pmax
-                cm = np.bincount((rc * _K + pc).ravel(),
-                                 minlength=_K * _K).reshape(_K, _K)
-                n_ref = cm.sum(axis=1)
-                n_pred = cm.sum(axis=0)
-                tp = np.diag(cm)
-                nn = int(cm.sum())
-                diag = int(tp.sum())
-                pe_num = int((n_ref.astype(np.int64)
-                              * n_pred.astype(np.int64)).sum())
-                oa_q = _ratio_q(diag, nn)
-                kappa_q = _ratio_q(nn * diag - pe_num, nn * nn - pe_num)
-                for c in range(_K):
-                    out["image_id"].append(image_id)
-                    out["cls"].append(c)
-                    out["n_ref"].append(int(n_ref[c]))
-                    out["n_pred"].append(int(n_pred[c]))
-                    out["tp"].append(int(tp[c]))
-                    out["prec_q"].append(_ratio_q(int(tp[c]),
-                                                  int(n_pred[c])))
-                    out["rec_q"].append(_ratio_q(int(tp[c]),
-                                                 int(n_ref[c])))
-                    out["f1_q"].append(_ratio_q(
-                        2 * int(tp[c]), int(n_ref[c]) + int(n_pred[c])))
-                    out["oa_q"].append(oa_q)
-                    out["kappa_q"].append(kappa_q)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt, img_id):
+        e, pmax = residual_plane(v, fmt, img_id)
+        rc = (v * _K) // pmax
+        vp = np.clip(v + e, 0, pmax - 1)
+        pc = (vp * _K) // pmax
+        cm = np.bincount((rc * _K + pc).ravel(),
+                         minlength=_K * _K).reshape(_K, _K)
+        n_ref = cm.sum(axis=1)
+        n_pred = cm.sum(axis=0)
+        tp = np.diag(cm)
+        nn = int(cm.sum())
+        diag = int(tp.sum())
+        pe_num = int((n_ref.astype(np.int64)
+                      * n_pred.astype(np.int64)).sum())
+        oa_q = _ratio_q(diag, nn)
+        kappa_q = _ratio_q(nn * diag - pe_num, nn * nn - pe_num)
+        for c in range(_K):
+            out["image_id"].append(image_id)
+            out["cls"].append(c)
+            out["n_ref"].append(int(n_ref[c]))
+            out["n_pred"].append(int(n_pred[c]))
+            out["tp"].append(int(tp[c]))
+            out["prec_q"].append(_ratio_q(int(tp[c]),
+                                          int(n_pred[c])))
+            out["rec_q"].append(_ratio_q(int(tp[c]),
+                                         int(n_ref[c])))
+            out["f1_q"].append(_ratio_q(
+                2 * int(tp[c]), int(n_ref[c]) + int(n_pred[c])))
+            out["oa_q"].append(oa_q)
+            out["kappa_q"].append(kappa_q)
 
-    return images.select("image_id", "id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_CLS_SCHEMA)
+    return codec.map_images(images, per_image, _CLS_SCHEMA,
+                            extra_cols=("fmt", "id"), dtype=np.int64)
 
 
 _REG_SCHEMA = StructType([
@@ -158,48 +151,42 @@ def regression_stats(images: DataFrame) -> DataFrame:
     is pinned as ((sqrt(Sd2/n) * (n*100)) / Sr).
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _REG_SCHEMA.fields}
-            for image_id, buf, w, h, fmt, img_id in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"], pdf["id"]):
-                v, e, _ = _plane(image_id, buf, w, h, fmt, img_id)
-                d = np.ascontiguousarray(e).astype(np.int64)
-                n = int(d.size)
-                sd = int(d.sum())
-                sad = int(np.abs(d).sum())
-                sd2 = int((d * d).sum())
-                sr = int(v.sum())
-                sr2 = int((v * v).sum())
-                sstot = n * sr2 - sr * sr
-                med = float(np.median(np.abs(d)))
-                mse = float(sd2) / float(n)
-                rmse = np.sqrt(mse)
-                out["image_id"].append(image_id)
-                out["n_pix"].append(n)
-                out["sum_d"].append(sd)
-                out["sum_absd"].append(sad)
-                out["sum_d2"].append(sd2)
-                out["r2_q"].append(_ratio_q(sstot - n * sd2, sstot))
-                out["ev_q"].append(_ratio_q(
-                    sstot - (n * sd2 - sd * sd), sstot))
-                out["mae_q"].append(_ratio_q(sad, n))
-                out["medae_q"].append(int(np.floor(med * _Q)))
-                out["mse_q"].append(int(np.floor(mse * _Q)))
-                out["rmse_q"].append(int(np.floor(rmse * _Q)))
-                out["nrmse_q"].append(
-                    -1 if sr == 0 else
-                    int(np.floor(((rmse * float(n * 100)) / float(sr))
-                                 * _Q)))
-                out["bias_q"].append(_ratio_q(sd, n))
-                out["nbias_q"].append(
-                    -1 if sr == 0 else _ratio_q(100 * sd, sr))
-                out["var_q"].append(_ratio_q(n * sd2 - sd * sd, n * n))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt, img_id):
+        e, _ = residual_plane(v, fmt, img_id)
+        d = np.ascontiguousarray(e).astype(np.int64)
+        n = int(d.size)
+        sd = int(d.sum())
+        sad = int(np.abs(d).sum())
+        sd2 = int((d * d).sum())
+        sr = int(v.sum())
+        sr2 = int((v * v).sum())
+        sstot = n * sr2 - sr * sr
+        med = float(np.median(np.abs(d)))
+        mse = float(sd2) / float(n)
+        rmse = np.sqrt(mse)
+        out["image_id"].append(image_id)
+        out["n_pix"].append(n)
+        out["sum_d"].append(sd)
+        out["sum_absd"].append(sad)
+        out["sum_d2"].append(sd2)
+        out["r2_q"].append(_ratio_q(sstot - n * sd2, sstot))
+        out["ev_q"].append(_ratio_q(
+            sstot - (n * sd2 - sd * sd), sstot))
+        out["mae_q"].append(_ratio_q(sad, n))
+        out["medae_q"].append(int(np.floor(med * _Q)))
+        out["mse_q"].append(int(np.floor(mse * _Q)))
+        out["rmse_q"].append(int(np.floor(rmse * _Q)))
+        out["nrmse_q"].append(
+            -1 if sr == 0 else
+            int(np.floor(((rmse * float(n * 100)) / float(sr))
+                         * _Q)))
+        out["bias_q"].append(_ratio_q(sd, n))
+        out["nbias_q"].append(
+            -1 if sr == 0 else _ratio_q(100 * sd, sr))
+        out["var_q"].append(_ratio_q(n * sd2 - sd * sd, n * n))
 
-    return images.select("image_id", "id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_REG_SCHEMA)
+    return codec.map_images(images, per_image, _REG_SCHEMA,
+                            extra_cols=("fmt", "id"), dtype=np.int64)
 
 
 _SAMP_SCHEMA = StructType([
@@ -226,41 +213,34 @@ def strat_sample(images: DataFrame, n_per_cls: int = 3) -> DataFrame:
     than n pixels emit what they have (the reference warns and keeps
     going)."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SAMP_SCHEMA.fields}
-            for image_id, buf, w, h, fmt, img_id in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"], pdf["id"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                cls = (v * _K) // pmax
-                ww = int(w)
-                x = np.arange(ww, dtype=np.int64)[None, :]
-                y = np.arange(int(h), dtype=np.int64)[:, None]
-                hsh = (int(img_id) * _MIX_A + x * _MIX_B
-                       + y * _MIX_C) % _MIX_M
-                hsh = np.broadcast_to(hsh, v.shape)
-                xg = np.broadcast_to(x, v.shape)
-                yg = np.broadcast_to(y, v.shape)
-                for c in range(_K):
-                    sel = cls == c
-                    if not sel.any():
-                        continue
-                    hs, xs, ys, vs = (hsh[sel], xg[sel], yg[sel], v[sel])
-                    order = np.lexsort((ys, xs, hs))[:n_per_cls]
-                    for r, i in enumerate(order, start=1):
-                        out["image_id"].append(image_id)
-                        out["cls"].append(c)
-                        out["rank"].append(r)
-                        out["x"].append(int(xs[i]))
-                        out["y"].append(int(ys[i]))
-                        out["v"].append(int(vs[i]))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt, img_id):
+        h, w = v.shape
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        cls = (v * _K) // pmax
+        ww = int(w)
+        x = np.arange(ww, dtype=np.int64)[None, :]
+        y = np.arange(int(h), dtype=np.int64)[:, None]
+        hsh = (int(img_id) * _MIX_A + x * _MIX_B
+               + y * _MIX_C) % _MIX_M
+        hsh = np.broadcast_to(hsh, v.shape)
+        xg = np.broadcast_to(x, v.shape)
+        yg = np.broadcast_to(y, v.shape)
+        for c in range(_K):
+            sel = cls == c
+            if not sel.any():
+                continue
+            hs, xs, ys, vs = (hsh[sel], xg[sel], yg[sel], v[sel])
+            order = np.lexsort((ys, xs, hs))[:n_per_cls]
+            for r, i in enumerate(order, start=1):
+                out["image_id"].append(image_id)
+                out["cls"].append(c)
+                out["rank"].append(r)
+                out["x"].append(int(xs[i]))
+                out["y"].append(int(ys[i]))
+                out["v"].append(int(vs[i]))
 
-    return images.select("image_id", "id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SAMP_SCHEMA)
+    return codec.map_images(images, per_image, _SAMP_SCHEMA,
+                            extra_cols=("fmt", "id"), dtype=np.int64)
 
 
 _GCS_PART_SCHEMA = StructType([
@@ -292,31 +272,24 @@ def global_class_stats(images: DataFrame) -> DataFrame:
     (documented bound)."""
     import pyspark.sql.functions as F
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _GCS_PART_SCHEMA.fields}
-            for buf, w, h, fmt in zip(pdf["bytes"], pdf["w"], pdf["h"],
-                                      pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                cls = (v * _K) // pmax
-                for c in range(_K):
-                    sel = cls == c
-                    if not sel.any():
-                        continue
-                    vs = v[sel]
-                    out["fmt"].append(str(fmt))
-                    out["cls"].append(c)
-                    out["n"].append(int(vs.size))
-                    out["s"].append(int(vs.sum()))
-                    out["s2"].append(int((vs * vs).sum()))
-                    out["mn"].append(int(vs.min()))
-                    out["mx"].append(int(vs.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, _image_id, v, fmt):
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        cls = (v * _K) // pmax
+        for c in range(_K):
+            sel = cls == c
+            if not sel.any():
+                continue
+            vs = v[sel]
+            out["fmt"].append(str(fmt))
+            out["cls"].append(c)
+            out["n"].append(int(vs.size))
+            out["s"].append(int(vs.sum()))
+            out["s2"].append(int((vs * vs).sum()))
+            out["mn"].append(int(vs.min()))
+            out["mx"].append(int(vs.max()))
 
-    parts = images.select("bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_GCS_PART_SCHEMA)
+    parts = codec.map_images(images, per_image, _GCS_PART_SCHEMA,
+                             extra_cols=("fmt",), dtype=np.int64)
     agg = parts.groupBy("fmt", "cls").agg(
         F.sum("n").alias("n"), F.sum("s").alias("s"),
         F.sum("s2").alias("s2"), F.min("mn").alias("min_v"),
@@ -333,35 +306,28 @@ def rand_sample(images: DataFrame, n_per_img: int = 5) -> DataFrame:
     deterministic integer-hash ranking, class recorded but not
     partitioned on."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SAMP_SCHEMA.fields}
-            for image_id, buf, w, h, fmt, img_id in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"], pdf["id"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                cls = (v * _K) // pmax
-                x = np.arange(int(w), dtype=np.int64)[None, :]
-                y = np.arange(int(h), dtype=np.int64)[:, None]
-                hsh = (int(img_id) * _MIX_A + x * _MIX_B
-                       + y * _MIX_C) % _MIX_M
-                hsh = np.broadcast_to(hsh, v.shape).ravel()
-                xg = np.broadcast_to(x, v.shape).ravel()
-                yg = np.broadcast_to(y, v.shape).ravel()
-                order = np.lexsort((yg, xg, hsh))[:n_per_img]
-                for r, i in enumerate(order, start=1):
-                    out["image_id"].append(image_id)
-                    out["cls"].append(int(cls.ravel()[i]))
-                    out["rank"].append(r)
-                    out["x"].append(int(xg[i]))
-                    out["y"].append(int(yg[i]))
-                    out["v"].append(int(v.ravel()[i]))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt, img_id):
+        h, w = v.shape
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        cls = (v * _K) // pmax
+        x = np.arange(int(w), dtype=np.int64)[None, :]
+        y = np.arange(int(h), dtype=np.int64)[:, None]
+        hsh = (int(img_id) * _MIX_A + x * _MIX_B
+               + y * _MIX_C) % _MIX_M
+        hsh = np.broadcast_to(hsh, v.shape).ravel()
+        xg = np.broadcast_to(x, v.shape).ravel()
+        yg = np.broadcast_to(y, v.shape).ravel()
+        order = np.lexsort((yg, xg, hsh))[:n_per_img]
+        for r, i in enumerate(order, start=1):
+            out["image_id"].append(image_id)
+            out["cls"].append(int(cls.ravel()[i]))
+            out["rank"].append(r)
+            out["x"].append(int(xg[i]))
+            out["y"].append(int(yg[i]))
+            out["v"].append(int(v.ravel()[i]))
 
-    return images.select("image_id", "id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SAMP_SCHEMA)
+    return codec.map_images(images, per_image, _SAMP_SCHEMA,
+                            extra_cols=("fmt", "id"), dtype=np.int64)
 
 
 def quantity_accuracy_stats(images: DataFrame) -> DataFrame:
@@ -391,52 +357,44 @@ def quantity_accuracy_stats(images: DataFrame) -> DataFrame:
         StructField("t_dis", DoubleType()),
     ])
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in schema.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"],
-                                                pdf["bytes"], pdf["w"],
-                                                pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                c = (v * 4) // pmax
-                p = (v[:, ::-1] * 4) // pmax
-                cm = [[int(((c == i) & (p == j)).sum()) for j in range(4)]
-                      for i in range(4)]
-                rows = [sum(cm[i]) for i in range(4)]
-                areas = [sum(cm[i][j] for i in range(4)) for j in range(4)]
-                t = sum(areas)
-                norm = [[(float(cm[i][j] * areas[i])
-                          / float(rows[i] * t)) if rows[i] else 0.0
-                         for j in range(4)] for i in range(4)]
-                comp = [((norm[i][0] + norm[i][1]) + norm[i][2])
-                        + norm[i][3] for i in range(4)]
-                ref = [((norm[0][j] + norm[1][j]) + norm[2][j])
-                       + norm[3][j] for j in range(4)]
-                dq = [abs(ref[k] - comp[k]) for k in range(4)]
-                q_dis = (((dq[0] + dq[1]) + dq[2]) + dq[3]) / 2.0
-                mins = [min(comp[k] - norm[k][k], ref[k] - norm[k][k])
-                        for k in range(4)]
-                s2 = ((2.0 * mins[0] + 2.0 * mins[1]) + 2.0 * mins[2]) \
-                    + 2.0 * mins[3]
-                a_dis = s2 / 2.0
-                diag = ((norm[0][0] + norm[1][1]) + norm[2][2]) + norm[3][3]
-                tot = comp[0]
-                for k in range(1, 4):
-                    tot = tot + comp[k]
-                prop = diag / tot
-                out["image_id"].append(str(image_id))
-                out["n_total"].append(t)
-                out["n_correct"].append(sum(cm[i][i] for i in range(4)))
-                out["q_dis"].append(q_dis)
-                out["a_dis"].append(a_dis)
-                out["prop_corr"].append(prop)
-                out["t_dis"].append(q_dis + a_dis)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt):
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        c = (v * 4) // pmax
+        p = (v[:, ::-1] * 4) // pmax
+        cm = [[int(((c == i) & (p == j)).sum()) for j in range(4)]
+              for i in range(4)]
+        rows = [sum(cm[i]) for i in range(4)]
+        areas = [sum(cm[i][j] for i in range(4)) for j in range(4)]
+        t = sum(areas)
+        norm = [[(float(cm[i][j] * areas[i])
+                  / float(rows[i] * t)) if rows[i] else 0.0
+                 for j in range(4)] for i in range(4)]
+        comp = [((norm[i][0] + norm[i][1]) + norm[i][2])
+                + norm[i][3] for i in range(4)]
+        ref = [((norm[0][j] + norm[1][j]) + norm[2][j])
+               + norm[3][j] for j in range(4)]
+        dq = [abs(ref[k] - comp[k]) for k in range(4)]
+        q_dis = (((dq[0] + dq[1]) + dq[2]) + dq[3]) / 2.0
+        mins = [min(comp[k] - norm[k][k], ref[k] - norm[k][k])
+                for k in range(4)]
+        s2 = ((2.0 * mins[0] + 2.0 * mins[1]) + 2.0 * mins[2]) \
+            + 2.0 * mins[3]
+        a_dis = s2 / 2.0
+        diag = ((norm[0][0] + norm[1][1]) + norm[2][2]) + norm[3][3]
+        tot = comp[0]
+        for k in range(1, 4):
+            tot = tot + comp[k]
+        prop = diag / tot
+        out["image_id"].append(str(image_id))
+        out["n_total"].append(t)
+        out["n_correct"].append(sum(cm[i][i] for i in range(4)))
+        out["q_dis"].append(q_dis)
+        out["a_dis"].append(a_dis)
+        out["prop_corr"].append(prop)
+        out["t_dis"].append(q_dis + a_dis)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=schema)
+    return codec.map_images(images, per_image, schema,
+                            extra_cols=("fmt",), dtype=np.int64)
 
 
 # --------------------------------------------------------------------------
@@ -479,41 +437,32 @@ def class_ts_fill_stats(images: DataFrame) -> DataFrame:
     Emits per (image, t): nodata before/after + filled-plane checksum.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _TSF_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                w, h = int(w), int(h)
-                v = codec.decode_image(bytes(buf), w, h,
-                                       str(fmt)).astype(np.int64)
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                p = _tsf_planes(v, pmax)
-                before = [int((q == 0).sum()) for q in p]
-                for _ in range(TSF_ITERS):
-                    for n in range(TSF_T - 1):          # forward
-                        m = p[n] == 0
-                        p[n] = np.where(m, p[n + 1], p[n])
-                    for n in range(TSF_T - 1, 0, -1):   # backward
-                        m = p[n] == 0
-                        p[n] = np.where(m, p[n - 1], p[n])
-                    # recheck ends
-                    m = p[0] == 0
-                    p[0] = np.where(m, p[1], p[0])
-                    m = p[TSF_T - 1] == 0
-                    p[TSF_T - 1] = np.where(m, p[TSF_T - 2],
-                                            p[TSF_T - 1])
-                for t in range(TSF_T):
-                    out["image_id"].append(image_id)
-                    out["t"].append(t)
-                    out["n_nodata_before"].append(before[t])
-                    out["n_nodata_after"].append(int((p[t] == 0).sum()))
-                    out["sum_after"].append(int(p[t].sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt):
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        p = _tsf_planes(v, pmax)
+        before = [int((q == 0).sum()) for q in p]
+        for _ in range(TSF_ITERS):
+            for n in range(TSF_T - 1):          # forward
+                m = p[n] == 0
+                p[n] = np.where(m, p[n + 1], p[n])
+            for n in range(TSF_T - 1, 0, -1):   # backward
+                m = p[n] == 0
+                p[n] = np.where(m, p[n - 1], p[n])
+            # recheck ends
+            m = p[0] == 0
+            p[0] = np.where(m, p[1], p[0])
+            m = p[TSF_T - 1] == 0
+            p[TSF_T - 1] = np.where(m, p[TSF_T - 2],
+                                    p[TSF_T - 1])
+        for t in range(TSF_T):
+            out["image_id"].append(image_id)
+            out["t"].append(t)
+            out["n_nodata_before"].append(before[t])
+            out["n_nodata_after"].append(int((p[t] == 0).sum()))
+            out["sum_after"].append(int(p[t].sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_TSF_SCHEMA)
+    return codec.map_images(images, per_image, _TSF_SCHEMA,
+                            extra_cols=("fmt",), dtype=np.int64)
 
 
 # --------------------------------------------------------------------------
@@ -550,58 +499,52 @@ def modelled_acc_pts_stats(images: DataFrame) -> DataFrame:
     (rowsum_i * total) — the reference's float int() may differ on
     near-integer products; documented engine variant."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _MAP_SCHEMA.fields}
-            for image_id, buf, w, h, fmt, img_id in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"], pdf["id"]):
-                v, e, pmax = _plane(image_id, buf, w, h, fmt, img_id)
-                rc = (v * _MAP_K) // pmax
-                vp = np.clip(v + e, 0, pmax - 1)
-                pc = (vp * _MAP_K) // pmax
-                cm = np.bincount((rc * _MAP_K + pc).ravel(),
-                                 minlength=_MAP_K * _MAP_K) \
-                    .reshape(_MAP_K, _MAP_K).astype(np.int64)
-                rowsum = cm.sum(axis=1)
-                pcnt = cm.sum(axis=0)
-                total = int(cm.sum())
-                # integer block allocations
-                n_ref = np.zeros(_MAP_K, dtype=np.int64)
-                n_cls = np.zeros((_MAP_K, _MAP_K), dtype=np.int64)
-                for i in range(_MAP_K):
-                    n_ref[i] = (MAP_N_PTS * int(pcnt[i])) // total
-                    for j in range(_MAP_K):
-                        if rowsum[i] > 0:
-                            n_cls[i, j] = (MAP_N_PTS * int(cm[i, j])
-                                           * int(pcnt[i])) \
-                                // (int(rowsum[i]) * total)
-                # replicate the reference's array fill + empty drop
-                ref_arr = np.full(MAP_N_PTS, -1, dtype=np.int64)
-                cls_arr = np.full(MAP_N_PTS, -1, dtype=np.int64)
-                s = 0
-                for i in range(_MAP_K):
-                    ref_arr[s:s + n_ref[i]] = i
-                    s += int(n_ref[i])
-                s = 0
-                for i in range(_MAP_K):
-                    for j in range(_MAP_K):
-                        cls_arr[s:s + n_cls[i, j]] = j
-                        s += int(n_cls[i, j])
-                keep = (ref_arr >= 0) & (cls_arr >= 0)
-                nk = int(keep.sum())
-                pair = np.bincount(
-                    ref_arr[keep] * _MAP_K + cls_arr[keep],
-                    minlength=_MAP_K * _MAP_K).reshape(_MAP_K, _MAP_K)
-                for i in range(_MAP_K):
-                    for j in range(_MAP_K):
-                        if pair[i, j] > 0:
-                            out["image_id"].append(image_id)
-                            out["ref_cls"].append(i)
-                            out["cls_cls"].append(j)
-                            out["n_pts_mod"].append(int(pair[i, j]))
-                            out["n_dropped"].append(MAP_N_PTS - nk)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt, img_id):
+        e, pmax = residual_plane(v, fmt, img_id)
+        rc = (v * _MAP_K) // pmax
+        vp = np.clip(v + e, 0, pmax - 1)
+        pc = (vp * _MAP_K) // pmax
+        cm = np.bincount((rc * _MAP_K + pc).ravel(),
+                         minlength=_MAP_K * _MAP_K) \
+            .reshape(_MAP_K, _MAP_K).astype(np.int64)
+        rowsum = cm.sum(axis=1)
+        pcnt = cm.sum(axis=0)
+        total = int(cm.sum())
+        # integer block allocations
+        n_ref = np.zeros(_MAP_K, dtype=np.int64)
+        n_cls = np.zeros((_MAP_K, _MAP_K), dtype=np.int64)
+        for i in range(_MAP_K):
+            n_ref[i] = (MAP_N_PTS * int(pcnt[i])) // total
+            for j in range(_MAP_K):
+                if rowsum[i] > 0:
+                    n_cls[i, j] = (MAP_N_PTS * int(cm[i, j])
+                                   * int(pcnt[i])) \
+                        // (int(rowsum[i]) * total)
+        # replicate the reference's array fill + empty drop
+        ref_arr = np.full(MAP_N_PTS, -1, dtype=np.int64)
+        cls_arr = np.full(MAP_N_PTS, -1, dtype=np.int64)
+        s = 0
+        for i in range(_MAP_K):
+            ref_arr[s:s + n_ref[i]] = i
+            s += int(n_ref[i])
+        s = 0
+        for i in range(_MAP_K):
+            for j in range(_MAP_K):
+                cls_arr[s:s + n_cls[i, j]] = j
+                s += int(n_cls[i, j])
+        keep = (ref_arr >= 0) & (cls_arr >= 0)
+        nk = int(keep.sum())
+        pair = np.bincount(
+            ref_arr[keep] * _MAP_K + cls_arr[keep],
+            minlength=_MAP_K * _MAP_K).reshape(_MAP_K, _MAP_K)
+        for i in range(_MAP_K):
+            for j in range(_MAP_K):
+                if pair[i, j] > 0:
+                    out["image_id"].append(image_id)
+                    out["ref_cls"].append(i)
+                    out["cls_cls"].append(j)
+                    out["n_pts_mod"].append(int(pair[i, j]))
+                    out["n_dropped"].append(MAP_N_PTS - nk)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt", "id") \
-        .mapInPandas(gen, schema=_MAP_SCHEMA)
+    return codec.map_images(images, per_image, _MAP_SCHEMA,
+                            extra_cols=("fmt", "id"), dtype=np.int64)

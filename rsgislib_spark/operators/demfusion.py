@@ -28,7 +28,6 @@ magnitude checksum (sum/min/max of floor(|z|)).
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
@@ -152,23 +151,14 @@ _FUSE_SCHEMA = StructType([
 
 
 def fft_fusion_stats(images: DataFrame) -> DataFrame:
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _FUSE_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                mag, nsp = fuse_plane(v)
-                out["image_id"].append(image_id)
-                out["gw"].append(mag.shape[1])
-                out["gh"].append(mag.shape[0])
-                out["n_splice"].append(nsp)
-                out["sum_mag"].append(int(mag.sum()))
-                out["min_mag"].append(int(mag.min()))
-                out["max_mag"].append(int(mag.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        mag, nsp = fuse_plane(v)
+        out["image_id"].append(image_id)
+        out["gw"].append(mag.shape[1])
+        out["gh"].append(mag.shape[0])
+        out["n_splice"].append(nsp)
+        out["sum_mag"].append(int(mag.sum()))
+        out["min_mag"].append(int(mag.min()))
+        out["max_mag"].append(int(mag.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_FUSE_SCHEMA)
+    return codec.map_images(images, per_image, _FUSE_SCHEMA, dtype=np.int64)

@@ -17,7 +17,6 @@ integer gradients.
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType)
@@ -62,12 +61,11 @@ def fill_nodata_mean(a: np.ndarray, nodata) -> np.ndarray:
     return out
 
 
-def _decode_dem(buf, w: int, h: int, fmt: str, nodata=None) -> np.ndarray:
-    """Decode a payload and lift it to the synthetic DEM plane."""
-    v = codec.decode_image(bytes(buf), int(w), int(h), str(fmt)) \
-        .astype(np.int64)
-    x = np.arange(int(w), dtype=np.int64)[None, :]
-    y = np.arange(int(h), dtype=np.int64)[:, None]
+def _dem(v: np.ndarray, nodata=None) -> np.ndarray:
+    """Lift a decoded int64 plane to the synthetic DEM plane."""
+    h, w = v.shape
+    x = np.arange(w, dtype=np.int64)[None, :]
+    y = np.arange(h, dtype=np.int64)[:, None]
     a = dem_plane(v, x, y)
     if nodata is not None:
         a = fill_nodata_mean(a, nodata)
@@ -129,26 +127,20 @@ def slope_class_stats(images: DataFrame,
     """
     thr2 = slope_class_thresholds(thresholds_deg, res)
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SLOPE_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                gx, gy = horn_gradients(_decode_dem(buf, w, h, fmt, nodata))
-                g2 = gx * gx + gy * gy
-                cls = np.zeros(g2.shape, dtype=np.int64)
-                for t2 in thr2:
-                    cls += (g2 >= t2)
-                for c in range(len(thr2) + 1):
-                    m = cls == c
-                    out["image_id"].append(image_id)
-                    out["slope_cls"].append(c)
-                    out["n_pix"].append(int(m.sum()))
-                    out["sum_g2"].append(int(g2[m].sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        gx, gy = horn_gradients(_dem(v, nodata))
+        g2 = gx * gx + gy * gy
+        cls = np.zeros(g2.shape, dtype=np.int64)
+        for t2 in thr2:
+            cls += (g2 >= t2)
+        for c in range(len(thr2) + 1):
+            m = cls == c
+            out["image_id"].append(image_id)
+            out["slope_cls"].append(c)
+            out["n_pix"].append(int(m.sum()))
+            out["sum_g2"].append(int(g2[m].sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SLOPE_SCHEMA)
+    return codec.map_images(images, per_image, _SLOPE_SCHEMA, dtype=np.int64)
 
 
 _ASPECT_SCHEMA = StructType([
@@ -193,22 +185,16 @@ def aspect_cat_stats(images: DataFrame, nodata=None) -> DataFrame:
     """elevation.aspect + catagorise_aspect: per (image, compass
     category 0..8) pixel counts over the valid interior."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _ASPECT_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                gx, gy = horn_gradients(_decode_dem(buf, w, h, fmt, nodata))
-                cat = aspect_categories(gx, gy)
-                cnt = np.bincount(cat.ravel(), minlength=9)
-                for c in range(9):
-                    out["image_id"].append(image_id)
-                    out["aspect_cat"].append(c)
-                    out["n_pix"].append(int(cnt[c]))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        gx, gy = horn_gradients(_dem(v, nodata))
+        cat = aspect_categories(gx, gy)
+        cnt = np.bincount(cat.ravel(), minlength=9)
+        for c in range(9):
+            out["image_id"].append(image_id)
+            out["aspect_cat"].append(c)
+            out["n_pix"].append(int(cnt[c]))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_ASPECT_SCHEMA)
+    return codec.map_images(images, per_image, _ASPECT_SCHEMA, dtype=np.int64)
 
 
 def hillshade_consts(azimuth: float = 315.0, zenith: float = 45.0):
@@ -262,29 +248,23 @@ def hillshade_stats(images: DataFrame, azimuth: float = 315.0,
     SZ, CZ, K1, K2 = hillshade_consts(azimuth, zenith)
     R8 = 8.0 * res
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _HS_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                gx, gy = horn_gradients(_decode_dem(buf, w, h, fmt, nodata))
-                dx = gx / R8
-                dy = -gy / R8
-                num = SZ - CZ * (dy * K1 - dx * K2)
-                cang = num / np.sqrt(1.0 + (dx * dx + dy * dy))
-                dark = cang <= 0.0
-                shade = np.where(dark, 1.0, 1.0 + 254.0 * cang)
-                q = np.floor(shade * _HS_QSCALE).astype(np.int64)
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(q.size))
-                out["n_dark"].append(int(dark.sum()))
-                out["sum_shade_q"].append(int(q.sum()) if q.size else 0)
-                out["min_shade_q"].append(int(q.min()) if q.size else 0)
-                out["max_shade_q"].append(int(q.max()) if q.size else 0)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        gx, gy = horn_gradients(_dem(v, nodata))
+        dx = gx / R8
+        dy = -gy / R8
+        num = SZ - CZ * (dy * K1 - dx * K2)
+        cang = num / np.sqrt(1.0 + (dx * dx + dy * dy))
+        dark = cang <= 0.0
+        shade = np.where(dark, 1.0, 1.0 + 254.0 * cang)
+        q = np.floor(shade * _HS_QSCALE).astype(np.int64)
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(q.size))
+        out["n_dark"].append(int(dark.sum()))
+        out["sum_shade_q"].append(int(q.sum()) if q.size else 0)
+        out["min_shade_q"].append(int(q.min()) if q.size else 0)
+        out["max_shade_q"].append(int(q.max()) if q.size else 0)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_HS_SCHEMA)
+    return codec.map_images(images, per_image, _HS_SCHEMA, dtype=np.int64)
 
 
 def shadow_tan_q(solar_elev_deg: float = 10.0, res: float = 30.0,
@@ -322,26 +302,21 @@ def shadow_mask_stats(images: DataFrame,
     exact, not stepped).  Output: n_shadow + position checksum."""
     T = shadow_tan_q(solar_elev_deg, res)
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SHADOW_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                a = _decode_dem(buf, w, h, fmt)
-                w_i = int(w)
-                key = a * 1048576 + T * np.arange(w_i, dtype=np.int64)[None, :]
-                runmax = np.maximum.accumulate(key, axis=1)
-                blocked = np.zeros(a.shape, dtype=bool)
-                blocked[:, 1:] = runmax[:, :-1] > key[:, 1:]
-                ys, xs = np.nonzero(blocked)
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(a.size))
-                out["n_shadow"].append(int(blocked.sum()))
-                out["shadow_ck"].append(int((ys * w_i + xs).sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        _, w = v.shape
+        a = _dem(v)
+        w_i = int(w)
+        key = a * 1048576 + T * np.arange(w_i, dtype=np.int64)[None, :]
+        runmax = np.maximum.accumulate(key, axis=1)
+        blocked = np.zeros(a.shape, dtype=bool)
+        blocked[:, 1:] = runmax[:, :-1] > key[:, 1:]
+        ys, xs = np.nonzero(blocked)
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(a.size))
+        out["n_shadow"].append(int(blocked.sum()))
+        out["shadow_ck"].append(int((ys * w_i + xs).sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SHADOW_SCHEMA)
+    return codec.map_images(images, per_image, _SHADOW_SCHEMA, dtype=np.int64)
 
 
 _DETREND_SCHEMA = StructType([
@@ -361,28 +336,22 @@ def detrend_stats(images: DataFrame) -> DataFrame:
     residual is the exact rational (9*v_c - sum9)/9 — one
     correctly-rounded division, 2^20-quantized.  Interior pixels."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _DETREND_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                a = _decode_dem(buf, w, h, fmt)
-                hh, ww = a.shape
-                s9 = sum(a[1 + dy:hh - 1 + dy, 1 + dx:ww - 1 + dx]
-                         for dy in (-1, 0, 1) for dx in (-1, 0, 1))
-                c = a[1:-1, 1:-1]
-                num = 9 * c - s9
-                q = np.floor((num.astype(np.float64) / 9.0)
-                             * 1048576.0).astype(np.int64)
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(q.size))
-                out["sum_res_q"].append(int(q.sum()))
-                out["min_res_q"].append(int(q.min()))
-                out["max_res_q"].append(int(q.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        a = _dem(v)
+        hh, ww = a.shape
+        s9 = sum(a[1 + dy:hh - 1 + dy, 1 + dx:ww - 1 + dx]
+                 for dy in (-1, 0, 1) for dx in (-1, 0, 1))
+        c = a[1:-1, 1:-1]
+        num = 9 * c - s9
+        q = np.floor((num.astype(np.float64) / 9.0)
+                     * 1048576.0).astype(np.int64)
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(q.size))
+        out["sum_res_q"].append(int(q.sum()))
+        out["min_res_q"].append(int(q.min()))
+        out["max_res_q"].append(int(q.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_DETREND_SCHEMA)
+    return codec.map_images(images, per_image, _DETREND_SCHEMA, dtype=np.int64)
 
 
 def slope_pxlres_consts(thresholds_deg=(5.0, 15.0, 30.0)):
@@ -413,32 +382,27 @@ def slope_pxlres_stats(images: DataFrame,
 
     cts = slope_pxlres_consts(thresholds_deg)
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SPR_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                a = _decode_dem(buf, w, h, fmt)
-                gx, gy = horn_gradients(a)
-                g2 = gx * gx + gy * gy
-                x = _np.arange(1, int(w) - 1, dtype=_np.int64)[None, :]
-                y = _np.arange(1, int(h) - 1, dtype=_np.int64)[:, None]
-                res = 30 + ((x + y) % 3) * 5
-                r2 = _np.broadcast_to(res * res, g2.shape)
-                cls = _np.zeros(g2.shape, dtype=_np.int64)
-                for ct in cts:
-                    cls += (g2.astype(_np.float64)
-                            >= ct * r2.astype(_np.float64))
-                for c in range(len(cts) + 1):
-                    m = cls == c
-                    out["image_id"].append(image_id)
-                    out["slope_cls"].append(c)
-                    out["n_pix"].append(int(m.sum()))
-                    out["sum_g2"].append(int(g2[m].sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        h, w = v.shape
+        a = _dem(v)
+        gx, gy = horn_gradients(a)
+        g2 = gx * gx + gy * gy
+        x = _np.arange(1, int(w) - 1, dtype=_np.int64)[None, :]
+        y = _np.arange(1, int(h) - 1, dtype=_np.int64)[:, None]
+        res = 30 + ((x + y) % 3) * 5
+        r2 = _np.broadcast_to(res * res, g2.shape)
+        cls = _np.zeros(g2.shape, dtype=_np.int64)
+        for ct in cts:
+            cls += (g2.astype(_np.float64)
+                    >= ct * r2.astype(_np.float64))
+        for c in range(len(cts) + 1):
+            m = cls == c
+            out["image_id"].append(image_id)
+            out["slope_cls"].append(c)
+            out["n_pix"].append(int(m.sum()))
+            out["sum_g2"].append(int(g2[m].sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SPR_SCHEMA)
+    return codec.map_images(images, per_image, _SPR_SCHEMA, dtype=np.int64)
 
 
 _AMF_SCHEMA = StructType([
@@ -458,35 +422,30 @@ def aspect_median_stats(images: DataFrame) -> DataFrame:
     with a position checksum."""
     import numpy as _np
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _AMF_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                a = _decode_dem(buf, w, h, fmt)
-                gx, gy = horn_gradients(a)
-                cat = aspect_categories(gx, gy)
-                hh, ww2 = cat.shape
-                stack = _np.stack([cat[1 + dy:hh - 1 + dy,
-                                       1 + dx:ww2 - 1 + dx]
-                                   for dy in (-1, 0, 1)
-                                   for dx in (-1, 0, 1)])
-                med = _np.sort(stack, axis=0)[4]
-                # doubly-interior pixel coordinates in the FULL image
-                ww = int(w)
-                xs0 = _np.arange(2, ww - 2, dtype=_np.int64)[None, :]
-                ys0 = _np.arange(2, int(h) - 2, dtype=_np.int64)[:, None]
-                flat = _np.broadcast_to(ys0 * ww + xs0, med.shape)
-                for c in range(9):
-                    m = med == c
-                    out["image_id"].append(image_id)
-                    out["aspect_cat"].append(c)
-                    out["n_pix"].append(int(m.sum()))
-                    out["cat_ck"].append(int(flat[m].sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        h, w = v.shape
+        a = _dem(v)
+        gx, gy = horn_gradients(a)
+        cat = aspect_categories(gx, gy)
+        hh, ww2 = cat.shape
+        stack = _np.stack([cat[1 + dy:hh - 1 + dy,
+                               1 + dx:ww2 - 1 + dx]
+                           for dy in (-1, 0, 1)
+                           for dx in (-1, 0, 1)])
+        med = _np.sort(stack, axis=0)[4]
+        # doubly-interior pixel coordinates in the FULL image
+        ww = int(w)
+        xs0 = _np.arange(2, ww - 2, dtype=_np.int64)[None, :]
+        ys0 = _np.arange(2, int(h) - 2, dtype=_np.int64)[:, None]
+        flat = _np.broadcast_to(ys0 * ww + xs0, med.shape)
+        for c in range(9):
+            m = med == c
+            out["image_id"].append(image_id)
+            out["aspect_cat"].append(c)
+            out["n_pix"].append(int(m.sum()))
+            out["cat_ck"].append(int(flat[m].sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_AMF_SCHEMA)
+    return codec.map_images(images, per_image, _AMF_SCHEMA, dtype=np.int64)
 
 
 _FILL_SCHEMA = StructType([
@@ -516,24 +475,18 @@ def fill_dem_stats(images: DataFrame) -> DataFrame:
     alpha_shape); correctness carried by the pytest invariants."""
     import numpy as _np
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _FILL_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                dem = _decode_dem(buf, w, h, fmt)
-                filled, rounds = fill_soille_gratin(dem)
-                raised = filled > dem
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(dem.size))
-                out["n_raised"].append(int(raised.sum()))
-                out["sum_fill"].append(int(filled.sum()))
-                out["sum_raise"].append(int((filled - dem).sum()))
-                out["n_rounds"].append(rounds)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        dem = _dem(v)
+        filled, rounds = fill_soille_gratin(dem)
+        raised = filled > dem
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(dem.size))
+        out["n_raised"].append(int(raised.sum()))
+        out["sum_fill"].append(int(filled.sum()))
+        out["sum_raise"].append(int((filled - dem).sum()))
+        out["n_rounds"].append(rounds)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_FILL_SCHEMA)
+    return codec.map_images(images, per_image, _FILL_SCHEMA, dtype=np.int64)
 
 
 def fill_soille_gratin(dem: np.ndarray):
@@ -581,27 +534,21 @@ def incidence_stats(images: DataFrame, azimuth: float = 135.0,
     SZ, CZ, K1, K2 = hillshade_consts(azimuth, zenith)
     R8 = 8.0 * res
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _INC_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                gx, gy = horn_gradients(_decode_dem(buf, w, h, fmt))
-                dx = gx / R8
-                dy = -gy / R8
-                num = SZ - CZ * (dy * K1 - dx * K2)
-                cosi = num / np.sqrt(1.0 + (dx * dx + dy * dy))
-                q = np.floor(cosi * 1048576.0).astype(np.int64)
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(q.size))
-                out["n_facing_away"].append(int((cosi <= 0.0).sum()))
-                out["sum_cosi_q"].append(int(q.sum()))
-                out["min_cosi_q"].append(int(q.min()))
-                out["max_cosi_q"].append(int(q.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        gx, gy = horn_gradients(_dem(v))
+        dx = gx / R8
+        dy = -gy / R8
+        num = SZ - CZ * (dy * K1 - dx * K2)
+        cosi = num / np.sqrt(1.0 + (dx * dx + dy * dy))
+        q = np.floor(cosi * 1048576.0).astype(np.int64)
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(q.size))
+        out["n_facing_away"].append(int((cosi <= 0.0).sum()))
+        out["sum_cosi_q"].append(int(q.sum()))
+        out["min_cosi_q"].append(int(q.min()))
+        out["max_cosi_q"].append(int(q.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_INC_SCHEMA)
+    return codec.map_images(images, per_image, _INC_SCHEMA, dtype=np.int64)
 
 
 # --------------------------------------------------------------------------
@@ -676,25 +623,19 @@ def incidence_deg_stats(images: DataFrame, azimuth: float = 135.0,
     SZ, CZ, K1, K2 = hillshade_consts(azimuth, zenith)
     R8 = 8.0 * res
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _INCD_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                gx, gy = horn_gradients(_decode_dem(buf, w, h, fmt))
-                dx = gx / R8
-                dy = -gy / R8
-                num = SZ - CZ * (dy * K1 - dx * K2)
-                cosi = num / np.sqrt(1.0 + (dx * dx + dy * dy))
-                deg = acos_deg_np(cosi)
-                q = np.floor(deg * 1048576.0).astype(np.int64)
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(q.size))
-                out["n_facing_away"].append(int((cosi <= 0.0).sum()))
-                out["sum_deg_q"].append(int(q.sum()))
-                out["min_deg_q"].append(int(q.min()))
-                out["max_deg_q"].append(int(q.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        gx, gy = horn_gradients(_dem(v))
+        dx = gx / R8
+        dy = -gy / R8
+        num = SZ - CZ * (dy * K1 - dx * K2)
+        cosi = num / np.sqrt(1.0 + (dx * dx + dy * dy))
+        deg = acos_deg_np(cosi)
+        q = np.floor(deg * 1048576.0).astype(np.int64)
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(q.size))
+        out["n_facing_away"].append(int((cosi <= 0.0).sum()))
+        out["sum_deg_q"].append(int(q.sum()))
+        out["min_deg_q"].append(int(q.min()))
+        out["max_deg_q"].append(int(q.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_INCD_SCHEMA)
+    return codec.map_images(images, per_image, _INCD_SCHEMA, dtype=np.int64)

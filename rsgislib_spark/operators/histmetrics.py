@@ -22,7 +22,6 @@ population variance A/n^2 (n-normalised), and degenerate inputs
 (class < 2 px or zero variance) emit the -1 sentinel row.
 """
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
@@ -57,50 +56,43 @@ def bhatt_dist_stats(images: DataFrame) -> DataFrame:
         B     = term1 + ((ln(d1+d2) - LN2) - ln(d1*d2)*0.5) * 0.5
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _BH_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                cls = (v * 4) // pmax
-                row = {"image_id": image_id}
-                pops = []
-                for c in (0, 1):
-                    vals = v[cls == c]
-                    n = int(vals.size)
-                    S = int(vals.sum())
-                    S2 = int((vals * vals).sum())
-                    pops.append((n, S, S2))
-                (n1, s1, s21), (n2, s2, s22) = pops
-                a1 = n1 * s21 - s1 * s1
-                a2 = n2 * s22 - s2 * s2
-                out["image_id"].append(image_id)
-                out["n1"].append(n1)
-                out["n2"].append(n2)
-                out["sum1"].append(s1)
-                out["sum2"].append(s2)
-                if n1 < 2 or n2 < 2 or a1 == 0 or a2 == 0:
-                    out["term1_q"].append(-1)
-                    out["b_q"].append(-1)
-                    continue
-                d1 = float(a1) / float(n1 * n1)
-                d2 = float(a2) / float(n2 * n2)
-                mu1 = float(s1) / float(n1)
-                mu2 = float(s2) / float(n2)
-                md = mu1 - mu2
-                num = d1 + d2
-                term1 = ((md * md) / num) * 0.25
-                b = term1 + ((float(ln_pos_np(num)) - LN2)
-                             - float(ln_pos_np(d1 * d2)) * 0.5) * 0.5
-                out["term1_q"].append(int(np.floor(term1 * _Q)))
-                out["b_q"].append(int(np.floor(b * _Q)))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt):
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        cls = (v * 4) // pmax
+        row = {"image_id": image_id}
+        pops = []
+        for c in (0, 1):
+            vals = v[cls == c]
+            n = int(vals.size)
+            S = int(vals.sum())
+            S2 = int((vals * vals).sum())
+            pops.append((n, S, S2))
+        (n1, s1, s21), (n2, s2, s22) = pops
+        a1 = n1 * s21 - s1 * s1
+        a2 = n2 * s22 - s2 * s2
+        out["image_id"].append(image_id)
+        out["n1"].append(n1)
+        out["n2"].append(n2)
+        out["sum1"].append(s1)
+        out["sum2"].append(s2)
+        if n1 < 2 or n2 < 2 or a1 == 0 or a2 == 0:
+            out["term1_q"].append(-1)
+            out["b_q"].append(-1)
+            return
+        d1 = float(a1) / float(n1 * n1)
+        d2 = float(a2) / float(n2 * n2)
+        mu1 = float(s1) / float(n1)
+        mu2 = float(s2) / float(n2)
+        md = mu1 - mu2
+        num = d1 + d2
+        term1 = ((md * md) / num) * 0.25
+        b = term1 + ((float(ln_pos_np(num)) - LN2)
+                     - float(ln_pos_np(d1 * d2)) * 0.5) * 0.5
+        out["term1_q"].append(int(np.floor(term1 * _Q)))
+        out["b_q"].append(int(np.floor(b * _Q)))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_BH_SCHEMA)
+    return codec.map_images(images, per_image, _BH_SCHEMA,
+                            extra_cols=("fmt",), dtype=np.int64)
 
 
 _YEN_SCHEMA = StructType([
@@ -118,37 +110,29 @@ def yen_threshold_stats(images: DataFrame) -> DataFrame:
     ascending-scan convention), the max criterion, and the
     quantized-criterion checksum over all candidates."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _YEN_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                vals, cnts = np.unique(v, return_counts=True)
-                cnts = cnts.astype(np.int64)
-                N = int(cnts.sum())
-                c = np.cumsum(cnts)
-                a1 = np.cumsum(cnts * cnts)
-                atot = int(a1[-1])
-                keep = c < N                     # t < vmax
-                cv, cc, ca1 = vals[keep], c[keep], a1[keep]
-                ca2 = atot - ca1
-                crit = ((ln_pos_np(cc.astype(np.float64))
-                         + ln_pos_np((N - cc).astype(np.float64))) * 2.0
-                        - (ln_pos_np(ca1.astype(np.float64))
-                           + ln_pos_np(ca2.astype(np.float64))))
-                q = np.floor(crit * _Q).astype(np.int64)
-                k = int(np.argmax(q))            # first max = smallest v
-                out["image_id"].append(image_id)
-                out["n_cand"].append(int(cv.size))
-                out["thr_v"].append(int(cv[k]))
-                out["max_crit_q"].append(int(q[k]))
-                out["sum_crit_q"].append(int(q.sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        vals, cnts = np.unique(v, return_counts=True)
+        cnts = cnts.astype(np.int64)
+        N = int(cnts.sum())
+        c = np.cumsum(cnts)
+        a1 = np.cumsum(cnts * cnts)
+        atot = int(a1[-1])
+        keep = c < N                     # t < vmax
+        cv, cc, ca1 = vals[keep], c[keep], a1[keep]
+        ca2 = atot - ca1
+        crit = ((ln_pos_np(cc.astype(np.float64))
+                 + ln_pos_np((N - cc).astype(np.float64))) * 2.0
+                - (ln_pos_np(ca1.astype(np.float64))
+                   + ln_pos_np(ca2.astype(np.float64))))
+        q = np.floor(crit * _Q).astype(np.int64)
+        k = int(np.argmax(q))            # first max = smallest v
+        out["image_id"].append(image_id)
+        out["n_cand"].append(int(cv.size))
+        out["thr_v"].append(int(cv[k]))
+        out["max_crit_q"].append(int(q[k]))
+        out["sum_crit_q"].append(int(q.sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_YEN_SCHEMA)
+    return codec.map_images(images, per_image, _YEN_SCHEMA, dtype=np.int64)
 
 
 _JM_SCHEMA = StructType([
@@ -206,25 +190,18 @@ def jm_dist_stats(images: DataFrame) -> DataFrame:
     quartile, var col = b2 — overlapping supports, binWidth 1 on the
     integer values)."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _JM_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                mv = v[:, ::-1]
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                m0, m1 = _cls_split(v, pmax)
-                c1 = dict(zip(*[a.tolist() for a in
-                                np.unique(mv[m0], return_counts=True)]))
-                c2 = dict(zip(*[a.tolist() for a in
-                                np.unique(mv[m1], return_counts=True)]))
-                _jm_from_hists(out, image_id, None, c1, None, c2)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt):
+        mv = v[:, ::-1]
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        m0, m1 = _cls_split(v, pmax)
+        c1 = dict(zip(*[a.tolist() for a in
+                        np.unique(mv[m0], return_counts=True)]))
+        c2 = dict(zip(*[a.tolist() for a in
+                        np.unique(mv[m1], return_counts=True)]))
+        _jm_from_hists(out, image_id, None, c1, None, c2)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_JM_SCHEMA)
+    return codec.map_images(images, per_image, _JM_SCHEMA,
+                            extra_cols=("fmt",), dtype=np.int64)
 
 
 def jm2d_dist_stats(images: DataFrame) -> DataFrame:
@@ -232,26 +209,19 @@ def jm2d_dist_stats(images: DataFrame) -> DataFrame:
     histogram of (b2, b1 % 64) — two var columns, both with
     cross-class support."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _JM_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                mv = v[:, ::-1]
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                m0, m1 = _cls_split(v, pmax)
-                key = mv * 64 + (v % 64)   # 2-D bin packed
-                c1 = dict(zip(*[a.tolist() for a in
-                                np.unique(key[m0], return_counts=True)]))
-                c2 = dict(zip(*[a.tolist() for a in
-                                np.unique(key[m1], return_counts=True)]))
-                _jm_from_hists(out, image_id, None, c1, None, c2)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt):
+        mv = v[:, ::-1]
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        m0, m1 = _cls_split(v, pmax)
+        key = mv * 64 + (v % 64)   # 2-D bin packed
+        c1 = dict(zip(*[a.tolist() for a in
+                        np.unique(key[m0], return_counts=True)]))
+        c2 = dict(zip(*[a.tolist() for a in
+                        np.unique(key[m1], return_counts=True)]))
+        _jm_from_hists(out, image_id, None, c1, None, c2)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_JM_SCHEMA)
+    return codec.map_images(images, per_image, _JM_SCHEMA,
+                            extra_cols=("fmt",), dtype=np.int64)
 
 
 _ISO_SCHEMA = StructType([
@@ -270,33 +240,25 @@ def isodata_threshold_stats(images: DataFrame) -> DataFrame:
     the PURE INTEGER test  2v*b*d <= a*d + c*b < (2v+2)*b*d  with
     a/b = mean below, c/d = mean above — no floats anywhere."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _ISO_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                vals, cnts = np.unique(v, return_counts=True)
-                N = int(cnts.sum())
-                Stot = int((vals * cnts).sum())
-                b = np.cumsum(cnts)
-                a = np.cumsum(vals * cnts)
-                keep = b < N
-                vv, bb, aa = vals[keep], b[keep], a[keep]
-                cc, dd = Stot - aa, N - bb
-                lhs = aa * dd + cc * bb
-                lo = 2 * vv * bb * dd
-                hit = (lo <= lhs) & (lhs < lo + 2 * bb * dd)
-                out["image_id"].append(image_id)
-                out["n_pix"].append(N)
-                out["n_fixed"].append(int(hit.sum()))
-                out["thr_v"].append(
-                    int(vv[hit][0]) if hit.any() else -1)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        vals, cnts = np.unique(v, return_counts=True)
+        N = int(cnts.sum())
+        Stot = int((vals * cnts).sum())
+        b = np.cumsum(cnts)
+        a = np.cumsum(vals * cnts)
+        keep = b < N
+        vv, bb, aa = vals[keep], b[keep], a[keep]
+        cc, dd = Stot - aa, N - bb
+        lhs = aa * dd + cc * bb
+        lo = 2 * vv * bb * dd
+        hit = (lo <= lhs) & (lhs < lo + 2 * bb * dd)
+        out["image_id"].append(image_id)
+        out["n_pix"].append(N)
+        out["n_fixed"].append(int(hit.sum()))
+        out["thr_v"].append(
+            int(vv[hit][0]) if hit.any() else -1)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_ISO_SCHEMA)
+    return codec.map_images(images, per_image, _ISO_SCHEMA, dtype=np.int64)
 
 
 _CE_SCHEMA = StructType([
@@ -318,34 +280,27 @@ def cross_entropy_stats(images: DataFrame,
     ratios S*/N, mu* exact ratios S*/N*; both ln's via the pinned
     tree.  -1 sentinel when a side is empty."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _CE_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64) + 1
-                N = int(v.size)
-                lo = v <= threshold
-                na, sa = int(lo.sum()), int(v[lo].sum())
-                nb, sb = N - na, int(v.sum()) - sa
-                out["image_id"].append(image_id)
-                out["n_lo"].append(na)
-                out["n_hi"].append(nb)
-                if na == 0 or nb == 0:
-                    out["ce_q"].append(-1)
-                    continue
-                m1a = float(sa) / float(N)
-                m1b = float(sb) / float(N)
-                mua = float(sa) / float(na)
-                mub = float(sb) / float(nb)
-                nu = (0.0 - m1a * float(ln_pos_np(mua))) \
-                    - m1b * float(ln_pos_np(mub))
-                out["ce_q"].append(int(np.floor(nu * _Q)))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        v = v + 1
+        N = int(v.size)
+        lo = v <= threshold
+        na, sa = int(lo.sum()), int(v[lo].sum())
+        nb, sb = N - na, int(v.sum()) - sa
+        out["image_id"].append(image_id)
+        out["n_lo"].append(na)
+        out["n_hi"].append(nb)
+        if na == 0 or nb == 0:
+            out["ce_q"].append(-1)
+            return
+        m1a = float(sa) / float(N)
+        m1b = float(sb) / float(N)
+        mua = float(sa) / float(na)
+        mub = float(sb) / float(nb)
+        nu = (0.0 - m1a * float(ln_pos_np(mua))) \
+            - m1b * float(ln_pos_np(mub))
+        out["ce_q"].append(int(np.floor(nu * _Q)))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_CE_SCHEMA)
+    return codec.map_images(images, per_image, _CE_SCHEMA, dtype=np.int64)
 
 
 _LI_SCHEMA = StructType([
@@ -370,41 +325,34 @@ def li_threshold_stats(images: DataFrame,
     applies as in cross_entropy; degenerate rounds (one side empty or
     equal means) carry t forward unchanged."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _LI_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64) + 1
-                N = int(v.size)
-                S = int(v.sum())
-                t = float(S) / float(N)
-                for _ in range(rounds):
-                    fore = v > t
-                    nf = int(fore.sum())
-                    nb = N - nf
-                    if nf == 0 or nb == 0:
-                        continue
-                    sf = int(v[fore].sum())
-                    mf = float(sf) / float(nf)
-                    mb = float(S - sf) / float(nb)
-                    # guard the LOG difference (ADVICE r4): distinct
-                    # means may round to equal ln_pos values; carry t
-                    # forward, same spelling as the oracle's lnmb=lnmf.
-                    d = float(ln_pos_np(mb)) - float(ln_pos_np(mf))
-                    if d == 0.0:
-                        continue
-                    t = (mb - mf) / d
-                nf = int((v > t).sum())
-                out["image_id"].append(image_id)
-                out["n_pix"].append(N)
-                out["n_fore"].append(nf)
-                out["t_q"].append(int(np.floor(t * _Q)))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        v = v + 1
+        N = int(v.size)
+        S = int(v.sum())
+        t = float(S) / float(N)
+        for _ in range(rounds):
+            fore = v > t
+            nf = int(fore.sum())
+            nb = N - nf
+            if nf == 0 or nb == 0:
+                continue
+            sf = int(v[fore].sum())
+            mf = float(sf) / float(nf)
+            mb = float(S - sf) / float(nb)
+            # guard the LOG difference (ADVICE r4): distinct
+            # means may round to equal ln_pos values; carry t
+            # forward, same spelling as the oracle's lnmb=lnmf.
+            d = float(ln_pos_np(mb)) - float(ln_pos_np(mf))
+            if d == 0.0:
+                continue
+            t = (mb - mf) / d
+        nf = int((v > t).sum())
+        out["image_id"].append(image_id)
+        out["n_pix"].append(N)
+        out["n_fore"].append(nf)
+        out["t_q"].append(int(np.floor(t * _Q)))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_LI_SCHEMA)
+    return codec.map_images(images, per_image, _LI_SCHEMA, dtype=np.int64)
 
 
 _KS_SCHEMA = StructType([
@@ -434,57 +382,49 @@ def kurt_skew_threshold_stats(images: DataFrame) -> DataFrame:
     casts; argmin ties go to the smallest threshold.  Candidates need
     n_sub >= 4 and A2 > 0."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _KS_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                vals, cnts = np.unique(v, return_counts=True)
-                # suffix sums over strictly-greater values: at index i,
-                # subset = data > vals[i]
-                def _suffix(a):
-                    return np.concatenate(
-                        [np.cumsum(a[::-1])[::-1][1:], [0]])
-                sn = _suffix(cnts)
-                s1 = _suffix(vals * cnts)
-                s2 = _suffix(vals ** 2 * cnts)
-                s3 = _suffix(vals ** 3 * cnts)
-                s4 = _suffix(vals ** 4 * cnts)
-                best = None
-                n_cand = 0
-                for i in range(vals.size):
-                    n = int(sn[i])
-                    if n < 4:
-                        continue
-                    S1, S2, S3, S4 = (int(s1[i]), int(s2[i]),
-                                      int(s3[i]), int(s4[i]))
-                    a2 = n * S2 - S1 * S1
-                    if a2 <= 0:
-                        continue
-                    n_cand += 1
-                    a3 = n * n * S3 - 3 * n * S1 * S2 + 2 * S1 ** 3
-                    a4 = (n ** 3 * S4 - 4 * n * n * S1 * S3
-                          + 6 * n * S1 * S1 * S2 - 3 * S1 ** 4)
-                    a2d = float(a2)
-                    sk = float(a3) / (a2d * np.sqrt(a2d))
-                    ku = float(a4) / (a2d * a2d) - 3.0
-                    cq = int(np.floor((abs(ku) + abs(sk)) * _Q))
-                    key = (cq, int(vals[i]))
-                    if best is None or key < best[:2]:
-                        best = (cq, int(vals[i]), n)
-                out["image_id"].append(image_id)
-                out["n_cand"].append(n_cand)
-                if best is None:
-                    out["thr_v"].append(-1)
-                    out["crit_q"].append(-1)
-                    out["n_sub"].append(-1)
-                else:
-                    out["thr_v"].append(best[1])
-                    out["crit_q"].append(best[0])
-                    out["n_sub"].append(best[2])
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        vals, cnts = np.unique(v, return_counts=True)
+        # suffix sums over strictly-greater values: at index i,
+        # subset = data > vals[i]
+        def _suffix(a):
+            return np.concatenate(
+                [np.cumsum(a[::-1])[::-1][1:], [0]])
+        sn = _suffix(cnts)
+        s1 = _suffix(vals * cnts)
+        s2 = _suffix(vals ** 2 * cnts)
+        s3 = _suffix(vals ** 3 * cnts)
+        s4 = _suffix(vals ** 4 * cnts)
+        best = None
+        n_cand = 0
+        for i in range(vals.size):
+            n = int(sn[i])
+            if n < 4:
+                continue
+            S1, S2, S3, S4 = (int(s1[i]), int(s2[i]),
+                              int(s3[i]), int(s4[i]))
+            a2 = n * S2 - S1 * S1
+            if a2 <= 0:
+                continue
+            n_cand += 1
+            a3 = n * n * S3 - 3 * n * S1 * S2 + 2 * S1 ** 3
+            a4 = (n ** 3 * S4 - 4 * n * n * S1 * S3
+                  + 6 * n * S1 * S1 * S2 - 3 * S1 ** 4)
+            a2d = float(a2)
+            sk = float(a3) / (a2d * np.sqrt(a2d))
+            ku = float(a4) / (a2d * a2d) - 3.0
+            cq = int(np.floor((abs(ku) + abs(sk)) * _Q))
+            key = (cq, int(vals[i]))
+            if best is None or key < best[:2]:
+                best = (cq, int(vals[i]), n)
+        out["image_id"].append(image_id)
+        out["n_cand"].append(n_cand)
+        if best is None:
+            out["thr_v"].append(-1)
+            out["crit_q"].append(-1)
+            out["n_sub"].append(-1)
+        else:
+            out["thr_v"].append(best[1])
+            out["crit_q"].append(best[0])
+            out["n_sub"].append(best[2])
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_KS_SCHEMA)
+    return codec.map_images(images, per_image, _KS_SCHEMA, dtype=np.int64)

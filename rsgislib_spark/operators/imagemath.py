@@ -148,25 +148,22 @@ def eval_band_math(arr: np.ndarray, expr: str) -> np.ndarray:
 
 
 def _plane_agg(images: DataFrame, plane_fn) -> DataFrame:
-    """Decode each image once, transform, emit integer-exact aggregates."""
+    """Decode each image once, transform, emit integer-exact aggregates.
 
-    def gen(it):
-        for pdf in it:
-            out = {k: [] for k in ("image_id", "n_pix", "sum_pix",
-                                   "min_pix", "max_pix")}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h), str(fmt))
-                res = np.asarray(plane_fn(arr.astype(np.int64))).ravel()
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(res.size))
-                out["sum_pix"].append(int(res.sum()) if res.size else 0)
-                out["min_pix"].append(int(res.min()) if res.size else 0)
-                out["max_pix"].append(int(res.max()) if res.size else 0)
-            yield pd.DataFrame(out)
+    The stage takes its name from ``plane_fn``, i.e. from the operator
+    that defined it."""
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_PLANE_AGG_SCHEMA)
+    def per_image(out, image_id, arr):
+        res = np.asarray(plane_fn(arr)).ravel()
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(res.size))
+        out["sum_pix"].append(int(res.sum()) if res.size else 0)
+        out["min_pix"].append(int(res.min()) if res.size else 0)
+        out["max_pix"].append(int(res.max()) if res.size else 0)
+
+    per_image.__qualname__ = plane_fn.__qualname__
+    return codec.map_images(images, per_image, _PLANE_AGG_SCHEMA,
+                            dtype=np.int64)
 
 
 def band_math_stats(images: DataFrame, expr: str) -> DataFrame:
@@ -182,23 +179,15 @@ def mask_img_stats(images: DataFrame, mask_vals, out_val: int) -> DataFrame:
     """
     vals = np.asarray(sorted(mask_vals), dtype=np.int64)
 
-    def gen(it):
-        for pdf in it:
-            out = {k: [] for k in ("image_id", "n_pix", "n_masked",
-                                   "sum_pix", "min_pix", "max_pix")}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                m = np.isin(arr, vals)
-                res = np.where(m, np.int64(out_val), arr)
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(res.size))
-                out["n_masked"].append(int(m.sum()))
-                out["sum_pix"].append(int(res.sum()))
-                out["min_pix"].append(int(res.min()))
-                out["max_pix"].append(int(res.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        m = np.isin(arr, vals)
+        res = np.where(m, np.int64(out_val), arr)
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(res.size))
+        out["n_masked"].append(int(m.sum()))
+        out["sum_pix"].append(int(res.sum()))
+        out["min_pix"].append(int(res.min()))
+        out["max_pix"].append(int(res.max()))
 
     schema = StructType([
         StructField("image_id", StringType()),
@@ -208,8 +197,7 @@ def mask_img_stats(images: DataFrame, mask_vals, out_val: int) -> DataFrame:
         StructField("min_pix", LongType()),
         StructField("max_pix", LongType()),
     ])
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=schema)
+    return codec.map_images(images, per_image, schema, dtype=np.int64)
 
 
 SOBEL_X = ((-1, 0, 1), (-2, 0, 2), (-1, 0, 1))
@@ -350,39 +338,29 @@ def min_pxl_value_in_win_stats(images: DataFrame, size: int = 3,
     fns = [_BAND_DERIVS[b] for b in bands]
     kk = ksz * ksz
 
-    def gen(it):
-        from numpy.lib.stride_tricks import sliding_window_view
+    from numpy.lib.stride_tricks import sliding_window_view
 
-        for pdf in it:
-            out = {k: [] for k in ("image_id", "n_interior", "sum_minval",
-                                   "min_minval", "max_minval",
-                                   "sum_bandref", "n_band1")}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"],
-                                                pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                hh, ww = arr.shape
-                if hh < ksz or ww < ksz:
-                    minval = np.zeros((0,), np.int64)
-                    ref = minval
-                else:
-                    mins = np.stack([
-                        sliding_window_view(f(arr), (ksz, ksz))
-                        .reshape(-1, kk).min(axis=1) for f in fns])
-                    minval = mins.min(axis=0)
-                    ref = mins.argmin(axis=0).astype(np.int64) + 1
-                out["image_id"].append(image_id)
-                out["n_interior"].append(int(minval.size))
-                out["sum_minval"].append(int(minval.sum()) if minval.size
-                                         else 0)
-                out["min_minval"].append(int(minval.min()) if minval.size
-                                         else 0)
-                out["max_minval"].append(int(minval.max()) if minval.size
-                                         else 0)
-                out["sum_bandref"].append(int(ref.sum()) if ref.size else 0)
-                out["n_band1"].append(int((ref == 1).sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        hh, ww = arr.shape
+        if hh < ksz or ww < ksz:
+            minval = np.zeros((0,), np.int64)
+            ref = minval
+        else:
+            mins = np.stack([
+                sliding_window_view(f(arr), (ksz, ksz))
+                .reshape(-1, kk).min(axis=1) for f in fns])
+            minval = mins.min(axis=0)
+            ref = mins.argmin(axis=0).astype(np.int64) + 1
+        out["image_id"].append(image_id)
+        out["n_interior"].append(int(minval.size))
+        out["sum_minval"].append(int(minval.sum()) if minval.size
+                                 else 0)
+        out["min_minval"].append(int(minval.min()) if minval.size
+                                 else 0)
+        out["max_minval"].append(int(minval.max()) if minval.size
+                                 else 0)
+        out["sum_bandref"].append(int(ref.sum()) if ref.size else 0)
+        out["n_band1"].append(int((ref == 1).sum()))
 
     schema = StructType([
         StructField("image_id", StringType()),
@@ -393,8 +371,7 @@ def min_pxl_value_in_win_stats(images: DataFrame, size: int = 3,
         StructField("sum_bandref", LongType()),
         StructField("n_band1", LongType()),
     ])
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=schema)
+    return codec.map_images(images, per_image, schema, dtype=np.int64)
 
 
 LAPLACIAN3 = ((0, 1, 0), (1, -4, 1), (0, 1, 0))
@@ -439,29 +416,18 @@ def band_stack_stats(images: DataFrame, bands) -> DataFrame:
         StructField("max_pix", LongType()),
     ])
 
-    def gen(it):
-        for pdf in it:
-            out = {k: [] for k in ("image_id", "band_pos", "band_name",
-                                   "n_pix", "sum_pix", "min_pix",
-                                   "max_pix")}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"],
-                                                pdf["bytes"], pdf["w"],
-                                                pdf["h"], pdf["fmt"]):
-                a = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                for pos, name in sel:
-                    b = _BAND_DERIVS[name](a)
-                    out["image_id"].append(image_id)
-                    out["band_pos"].append(pos)
-                    out["band_name"].append(name)
-                    out["n_pix"].append(int(b.size))
-                    out["sum_pix"].append(int(b.sum()))
-                    out["min_pix"].append(int(b.min()))
-                    out["max_pix"].append(int(b.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, a):
+        for pos, name in sel:
+            b = _BAND_DERIVS[name](a)
+            out["image_id"].append(image_id)
+            out["band_pos"].append(pos)
+            out["band_name"].append(name)
+            out["n_pix"].append(int(b.size))
+            out["sum_pix"].append(int(b.sum()))
+            out["min_pix"].append(int(b.min()))
+            out["max_pix"].append(int(b.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=schema)
+    return codec.map_images(images, per_image, schema, dtype=np.int64)
 
 
 def lm_lite_bank() -> dict:
@@ -509,38 +475,28 @@ def filter_bank_stats(images: DataFrame, kernels: dict) -> DataFrame:
         StructField("max_conv", LongType()),
     ])
 
-    def gen(it):
-        for pdf in it:
-            out = {k: [] for k in ("image_id", "kernel_id", "n_interior",
-                                   "sum_conv", "min_conv", "max_conv")}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"],
-                                                pdf["bytes"], pdf["w"],
-                                                pdf["h"], pdf["fmt"]):
-                a = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                hh, ww = a.shape
-                for name, k in banks.items():
-                    ksz = len(k)
-                    r = ksz // 2
-                    if hh < ksz or ww < ksz:
-                        continue
-                    acc = np.zeros((hh - 2 * r, ww - 2 * r), np.int64)
-                    for dy in range(-r, r + 1):
-                        for dx in range(-r, r + 1):
-                            kv = k[dy + r][dx + r]
-                            if kv:
-                                acc += kv * a[r + dy:hh - r + dy,
-                                              r + dx:ww - r + dx]
-                    out["image_id"].append(image_id)
-                    out["kernel_id"].append(name)
-                    out["n_interior"].append(int(acc.size))
-                    out["sum_conv"].append(int(acc.sum()))
-                    out["min_conv"].append(int(acc.min()))
-                    out["max_conv"].append(int(acc.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, a):
+        hh, ww = a.shape
+        for name, k in banks.items():
+            ksz = len(k)
+            r = ksz // 2
+            if hh < ksz or ww < ksz:
+                continue
+            acc = np.zeros((hh - 2 * r, ww - 2 * r), np.int64)
+            for dy in range(-r, r + 1):
+                for dx in range(-r, r + 1):
+                    kv = k[dy + r][dx + r]
+                    if kv:
+                        acc += kv * a[r + dy:hh - r + dy,
+                                      r + dx:ww - r + dx]
+            out["image_id"].append(image_id)
+            out["kernel_id"].append(name)
+            out["n_interior"].append(int(acc.size))
+            out["sum_conv"].append(int(acc.sum()))
+            out["min_conv"].append(int(acc.min()))
+            out["max_conv"].append(int(acc.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=schema)
+    return codec.map_images(images, per_image, schema, dtype=np.int64)
 
 
 def lee3_stats(images: DataFrame, noise_var: int = 100) -> DataFrame:
@@ -947,26 +903,18 @@ def lossy_roundtrip_check(images: DataFrame) -> DataFrame:
     py:1408).
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {k: [] for k in ("image_id", "n_pix", "sum_sq_err",
-                                   "max_abs_err", "psnr_ok")}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                ref = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.uint16)
-                back = codec.decode_jpeg_stub(codec.encode_jpeg_stub(ref)) \
-                    .astype(np.int64)
-                err = back - ref.astype(np.int64)
-                sse = int((err * err).sum())
-                peak = int(ref.max())
-                n = int(ref.size)
-                out["image_id"].append(image_id)
-                out["n_pix"].append(n)
-                out["sum_sq_err"].append(sse)
-                out["max_abs_err"].append(int(np.abs(err).max()))
-                out["psnr_ok"].append(bool(peak * peak * n >= 10000 * sse))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, ref):
+        back = codec.decode_jpeg_stub(codec.encode_jpeg_stub(ref)) \
+            .astype(np.int64)
+        err = back - ref.astype(np.int64)
+        sse = int((err * err).sum())
+        peak = int(ref.max())
+        n = int(ref.size)
+        out["image_id"].append(image_id)
+        out["n_pix"].append(n)
+        out["sum_sq_err"].append(sse)
+        out["max_abs_err"].append(int(np.abs(err).max()))
+        out["psnr_ok"].append(bool(peak * peak * n >= 10000 * sse))
 
     schema = StructType([
         StructField("image_id", StringType()),
@@ -975,8 +923,7 @@ def lossy_roundtrip_check(images: DataFrame) -> DataFrame:
         StructField("max_abs_err", LongType()),
         StructField("psnr_ok", BooleanType()),
     ])
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=schema)
+    return codec.map_images(images, per_image, schema, dtype=np.uint16)
 
 
 def index_scaled_stats(images: DataFrame) -> DataFrame:
@@ -1024,14 +971,10 @@ def hist2d(images: DataFrame, bin_width: int = 128,
     """
     nb = int(bins)
 
-    def gen(it):
+    def imagemath_hist2d(it):
         for pdf in it:
             codes_all = []
-            for _image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                 pdf["w"], pdf["h"],
-                                                 pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
+            for _, arr in codec.planes(pdf, dtype=np.int64):
                 b1 = (arr // bin_width).clip(0, nb - 1)
                 b2 = (arr[:, ::-1] // bin_width).clip(0, nb - 1)
                 codes_all.append((b1 * nb + b2).ravel())
@@ -1048,7 +991,7 @@ def hist2d(images: DataFrame, bin_width: int = 128,
                          StructField("cnt", LongType())])
     return (
         images.select("image_id", "bytes", "w", "h", "fmt")
-        .mapInPandas(gen, schema=schema)
+        .mapInPandas(imagemath_hist2d, schema=schema)
         .groupBy("code").agg(F.sum("cnt").alias("n"))
         .select((F.col("code") / nb).cast("long").alias("b1"),
                 (F.col("code") % nb).alias("b2"), "n")
@@ -1096,37 +1039,29 @@ def coarse_cell_stats(images: DataFrame, cell: int = 16) -> DataFrame:
     """
     cs = int(cell)
 
-    def gen(it):
-        for pdf in it:
-            out = {k: [] for k in ("image_id", "cx", "cy", "n", "s",
-                                   "mn", "mx")}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                xb = np.arange(0, int(w), cs)
-                yb = np.arange(0, int(h), cs)
-                s = np.add.reduceat(np.add.reduceat(arr, yb, 0), xb, 1)
-                mn = np.minimum.reduceat(
-                    np.minimum.reduceat(arr, yb, 0), xb, 1)
-                mx = np.maximum.reduceat(
-                    np.maximum.reduceat(arr, yb, 0), xb, 1)
-                wdt = np.minimum(xb + cs, int(w)) - xb
-                hgt = np.minimum(yb + cs, int(h)) - yb
-                cnt = hgt[:, None] * wdt[None, :]
-                ncx, ncy = xb.size, yb.size
-                gx, gy = np.meshgrid(np.arange(ncx), np.arange(ncy))
-                out["image_id"].extend([image_id] * (ncx * ncy))
-                out["cx"].extend(gx.ravel())
-                out["cy"].extend(gy.ravel())
-                out["n"].extend(cnt.ravel())
-                out["s"].extend(s.ravel())
-                out["mn"].extend(mn.ravel())
-                out["mx"].extend(mx.ravel())
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        h, w = arr.shape
+        xb = np.arange(0, int(w), cs)
+        yb = np.arange(0, int(h), cs)
+        s = np.add.reduceat(np.add.reduceat(arr, yb, 0), xb, 1)
+        mn = np.minimum.reduceat(
+            np.minimum.reduceat(arr, yb, 0), xb, 1)
+        mx = np.maximum.reduceat(
+            np.maximum.reduceat(arr, yb, 0), xb, 1)
+        wdt = np.minimum(xb + cs, int(w)) - xb
+        hgt = np.minimum(yb + cs, int(h)) - yb
+        cnt = hgt[:, None] * wdt[None, :]
+        ncx, ncy = xb.size, yb.size
+        gx, gy = np.meshgrid(np.arange(ncx), np.arange(ncy))
+        out["image_id"].extend([image_id] * (ncx * ncy))
+        out["cx"].extend(gx.ravel())
+        out["cy"].extend(gy.ravel())
+        out["n"].extend(cnt.ravel())
+        out["s"].extend(s.ravel())
+        out["mn"].extend(mn.ravel())
+        out["mx"].extend(mx.ravel())
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_COARSE_SCHEMA)
+    return codec.map_images(images, per_image, _COARSE_SCHEMA, dtype=np.int64)
 
 
 def percentiles_from_hist(images: DataFrame, ps=(0.25, 0.5, 0.75, 0.9),
@@ -1185,40 +1120,32 @@ def dist_to_value_stats(images: DataFrame, target_val: int = 42,
     """
     md2 = int(max_dist) * int(max_dist)
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _DIST_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                w, h = int(w), int(h)
-                arr = codec.decode_image(bytes(buf), w, h,
-                                         str(fmt)).astype(np.int64)
-                tys, txs = np.nonzero(arr == target_val)
-                n_pix = w * h
-                if tys.size == 0:
-                    out["image_id"].append(image_id)
-                    out["n_pix"].append(n_pix)
-                    out["n_valid"].append(0)
-                    out["sum_d2"].append(0)
-                    out["max_d2"].append(0)
-                    out["n_nodata"].append(n_pix)
-                    continue
-                ys, xs = np.mgrid[0:h, 0:w]
-                dx = xs.ravel()[:, None] - txs[None, :]
-                dy = ys.ravel()[:, None] - tys[None, :]
-                d2 = (dx * dx + dy * dy).min(axis=1)
-                valid = d2 <= md2
-                out["image_id"].append(image_id)
-                out["n_pix"].append(n_pix)
-                out["n_valid"].append(int(valid.sum()))
-                out["sum_d2"].append(int(d2[valid].sum()))
-                out["max_d2"].append(int(d2[valid].max())
-                                     if valid.any() else 0)
-                out["n_nodata"].append(int((~valid).sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        h, w = arr.shape
+        tys, txs = np.nonzero(arr == target_val)
+        n_pix = w * h
+        if tys.size == 0:
+            out["image_id"].append(image_id)
+            out["n_pix"].append(n_pix)
+            out["n_valid"].append(0)
+            out["sum_d2"].append(0)
+            out["max_d2"].append(0)
+            out["n_nodata"].append(n_pix)
+            return
+        ys, xs = np.mgrid[0:h, 0:w]
+        dx = xs.ravel()[:, None] - txs[None, :]
+        dy = ys.ravel()[:, None] - tys[None, :]
+        d2 = (dx * dx + dy * dy).min(axis=1)
+        valid = d2 <= md2
+        out["image_id"].append(image_id)
+        out["n_pix"].append(n_pix)
+        out["n_valid"].append(int(valid.sum()))
+        out["sum_d2"].append(int(d2[valid].sum()))
+        out["max_d2"].append(int(d2[valid].max())
+                             if valid.any() else 0)
+        out["n_nodata"].append(int((~valid).sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_DIST_SCHEMA)
+    return codec.map_images(images, per_image, _DIST_SCHEMA, dtype=np.int64)
 
 
 _OTSU_SCHEMA = StructType([
@@ -1243,34 +1170,27 @@ def otsu_threshold_stats(images: DataFrame) -> DataFrame:
     and SQL — bit-exact, ties resolved to the smallest threshold).
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _OTSU_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64).ravel()
-                vals, cnts = np.unique(arr, return_counts=True)
-                if vals.size < 2:
-                    continue
-                w0 = np.cumsum(cnts)[:-1]
-                s0 = np.cumsum(vals * cnts)[:-1]
-                n = arr.size
-                s = int((vals * cnts).sum())
-                w1 = n - w0
-                nn = s0 * w1 - (s - s0) * w0
-                score = (nn.astype(np.float64) / w0) \
-                    * nn.astype(np.float64) / w1
-                i = int(np.argmax(score))          # first max = smallest t
-                out["image_id"].append(image_id)
-                out["thres"].append(int(vals[i]))
-                out["n_below"].append(int(w0[i]))
-                out["n_above"].append(int(w1[i]))
-                out["score"].append(float(score[i]))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        arr = arr.ravel()
+        vals, cnts = np.unique(arr, return_counts=True)
+        if vals.size < 2:
+            return
+        w0 = np.cumsum(cnts)[:-1]
+        s0 = np.cumsum(vals * cnts)[:-1]
+        n = arr.size
+        s = int((vals * cnts).sum())
+        w1 = n - w0
+        nn = s0 * w1 - (s - s0) * w0
+        score = (nn.astype(np.float64) / w0) \
+            * nn.astype(np.float64) / w1
+        i = int(np.argmax(score))          # first max = smallest t
+        out["image_id"].append(image_id)
+        out["thres"].append(int(vals[i]))
+        out["n_below"].append(int(w0[i]))
+        out["n_above"].append(int(w1[i]))
+        out["score"].append(float(score[i]))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_OTSU_SCHEMA)
+    return codec.map_images(images, per_image, _OTSU_SCHEMA, dtype=np.int64)
 
 
 _STRETCH_SCHEMA = StructType([
@@ -1305,45 +1225,38 @@ def stretch_stats(images: DataFrame, mode: str = "minmax",
     if mode not in ("minmax", "percent", "power2"):
         raise ValueError(mode)
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _STRETCH_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64).ravel()
-                vals, cnts = np.unique(arr, return_counts=True)
-                n = arr.size
-                if mode == "power2":
-                    # STRETCH_POWERLAW, power=2 (RSGISPowerLawStretch-
-                    # Function, RSGISStretchImage.cpp:1077): stretch the
-                    # f(v)=v^2 plane — integer-exact, so the same
-                    # histogram kernel applies to the squared values
-                    vals = vals * vals
-                    lo, hi = int(vals[0]), int(vals[-1])
-                elif mode == "minmax":
-                    lo, hi = int(vals[0]), int(vals[-1])
-                else:
-                    cum = np.cumsum(cnts)
-                    r_lo = (n * percent + 99) // 100
-                    r_hi = (n * (100 - percent) + 99) // 100
-                    lo = int(vals[np.searchsorted(cum, r_lo)])
-                    hi = int(vals[np.searchsorted(cum, r_hi)])
-                if hi > lo:
-                    sv = (np.clip(vals, lo, hi) - lo) * 255 // (hi - lo)
-                else:
-                    sv = np.zeros_like(vals)
-                out["image_id"].append(image_id)
-                out["lo"].append(lo)
-                out["hi"].append(hi)
-                out["n_pix"].append(int(n))
-                out["sum_out"].append(int((cnts * sv).sum()))
-                out["min_out"].append(int(sv.min()))
-                out["max_out"].append(int(sv.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        arr = arr.ravel()
+        vals, cnts = np.unique(arr, return_counts=True)
+        n = arr.size
+        if mode == "power2":
+            # STRETCH_POWERLAW, power=2 (RSGISPowerLawStretch-
+            # Function, RSGISStretchImage.cpp:1077): stretch the
+            # f(v)=v^2 plane — integer-exact, so the same
+            # histogram kernel applies to the squared values
+            vals = vals * vals
+            lo, hi = int(vals[0]), int(vals[-1])
+        elif mode == "minmax":
+            lo, hi = int(vals[0]), int(vals[-1])
+        else:
+            cum = np.cumsum(cnts)
+            r_lo = (n * percent + 99) // 100
+            r_hi = (n * (100 - percent) + 99) // 100
+            lo = int(vals[np.searchsorted(cum, r_lo)])
+            hi = int(vals[np.searchsorted(cum, r_hi)])
+        if hi > lo:
+            sv = (np.clip(vals, lo, hi) - lo) * 255 // (hi - lo)
+        else:
+            sv = np.zeros_like(vals)
+        out["image_id"].append(image_id)
+        out["lo"].append(lo)
+        out["hi"].append(hi)
+        out["n_pix"].append(int(n))
+        out["sum_out"].append(int((cnts * sv).sum()))
+        out["min_out"].append(int(sv.min()))
+        out["max_out"].append(int(sv.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_STRETCH_SCHEMA)
+    return codec.map_images(images, per_image, _STRETCH_SCHEMA, dtype=np.int64)
 
 
 _STRETCH_SD_SCHEMA = StructType([
@@ -1373,39 +1286,33 @@ def stretch_stddev_stats(images: DataFrame, n_sd: float = 2.0) -> DataFrame:
     Same histogram-space kernel as ``stretch_stats``.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _STRETCH_SD_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64).ravel()
-                vals, cnts = np.unique(arr, return_counts=True)
-                n = int(arr.size)
-                s1 = int((vals * cnts).sum())
-                s2 = int((vals * vals * cnts).sum())
-                mean = s1 / n
-                var = s2 / n - mean * mean
-                sd = float(np.sqrt(max(var, 0.0)))
-                lo = max(mean - sd * n_sd, float(vals[0]))
-                hi = min(mean + sd * n_sd, float(vals[-1]))
-                if hi > lo:
-                    vd = vals.astype(np.float64)
-                    sv = np.floor((np.minimum(np.maximum(vd, lo), hi) - lo)
-                                  * 255.0 / (hi - lo)).astype(np.int64)
-                else:
-                    sv = np.zeros_like(vals)
-                out["image_id"].append(image_id)
-                out["lo"].append(lo)
-                out["hi"].append(hi)
-                out["n_pix"].append(n)
-                out["sum_out"].append(int((cnts * sv).sum()))
-                out["min_out"].append(int(sv.min()))
-                out["max_out"].append(int(sv.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        arr = arr.ravel()
+        vals, cnts = np.unique(arr, return_counts=True)
+        n = int(arr.size)
+        s1 = int((vals * cnts).sum())
+        s2 = int((vals * vals * cnts).sum())
+        mean = s1 / n
+        var = s2 / n - mean * mean
+        sd = float(np.sqrt(max(var, 0.0)))
+        lo = max(mean - sd * n_sd, float(vals[0]))
+        hi = min(mean + sd * n_sd, float(vals[-1]))
+        if hi > lo:
+            vd = vals.astype(np.float64)
+            sv = np.floor((np.minimum(np.maximum(vd, lo), hi) - lo)
+                          * 255.0 / (hi - lo)).astype(np.int64)
+        else:
+            sv = np.zeros_like(vals)
+        out["image_id"].append(image_id)
+        out["lo"].append(lo)
+        out["hi"].append(hi)
+        out["n_pix"].append(n)
+        out["sum_out"].append(int((cnts * sv).sum()))
+        out["min_out"].append(int(sv.min()))
+        out["max_out"].append(int(sv.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_STRETCH_SD_SCHEMA)
+    return codec.map_images(images, per_image, _STRETCH_SD_SCHEMA,
+                            dtype=np.int64)
 
 
 _MINIMA_SCHEMA = StructType([
@@ -1435,37 +1342,29 @@ def local_minima_stats(images: DataFrame,
     by ascending (y, x)) — pins both membership AND numbering order.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _MINIMA_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                w, h = int(w), int(h)
-                a = codec.decode_image(bytes(buf), w, h,
-                                       str(fmt)).astype(np.int64)
-                if h < 3 or w < 3:
-                    continue
-                v = a[1:-1, 1:-1]
-                dmin = np.minimum(np.minimum(a[:-2, :-2], a[2:, :-2]),
-                                  np.minimum(a[:-2, 2:], a[2:, 2:]))
-                m = (dmin >= v) if allow_equal else (dmin > v)
-                ys, xs = np.nonzero(m)
-                if ys.size == 0:
-                    out["image_id"].append(image_id)
-                    out["n_minima"].append(0)
-                    out["sum_min_v"].append(0)
-                    out["seq_ck"].append(0)
-                    continue
-                seq = np.arange(1, ys.size + 1, dtype=np.int64)
-                flat = (ys + 1) * np.int64(w) + (xs + 1)
-                out["image_id"].append(image_id)
-                out["n_minima"].append(int(ys.size))
-                out["sum_min_v"].append(int(v[ys, xs].sum()))
-                out["seq_ck"].append(int((seq * flat).sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, a):
+        h, w = a.shape
+        if h < 3 or w < 3:
+            return
+        v = a[1:-1, 1:-1]
+        dmin = np.minimum(np.minimum(a[:-2, :-2], a[2:, :-2]),
+                          np.minimum(a[:-2, 2:], a[2:, 2:]))
+        m = (dmin >= v) if allow_equal else (dmin > v)
+        ys, xs = np.nonzero(m)
+        if ys.size == 0:
+            out["image_id"].append(image_id)
+            out["n_minima"].append(0)
+            out["sum_min_v"].append(0)
+            out["seq_ck"].append(0)
+            return
+        seq = np.arange(1, ys.size + 1, dtype=np.int64)
+        flat = (ys + 1) * np.int64(w) + (xs + 1)
+        out["image_id"].append(image_id)
+        out["n_minima"].append(int(ys.size))
+        out["sum_min_v"].append(int(v[ys, xs].sum()))
+        out["seq_ck"].append(int((seq * flat).sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_MINIMA_SCHEMA)
+    return codec.map_images(images, per_image, _MINIMA_SCHEMA, dtype=np.int64)
 
 
 _UNMIX_SCHEMA = StructType([
@@ -1507,39 +1406,31 @@ def unmix_ucls_stats(images: DataFrame) -> DataFrame:
     g22 = e21 * e21 + e22 * e22 + w_ * w_
     det = g11 * g22 - g12 * g12
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _UNMIX_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                a = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                p1, p2 = a, a[:, ::-1]
-                valid = (p1 > 0) & (p2 > 0)
-                n = int(valid.sum())
-                if n == 0:
-                    out["image_id"].append(image_id)
-                    out["n_valid"].append(0)
-                    out["sum_num1"].append(0)
-                    out["sum_num2"].append(0)
-                    out["mean_a1"].append(0.0)
-                    out["mean_a2"].append(0.0)
-                    continue
-                v1, v2 = p1[valid], p2[valid]
-                c1 = e11 * v1 + e12 * v2 + w_ * w_
-                c2 = e21 * v1 + e22 * v2 + w_ * w_
-                s1 = int((c1 * g22 - c2 * g12).sum())
-                s2 = int((g11 * c2 - g12 * c1).sum())
-                out["image_id"].append(image_id)
-                out["n_valid"].append(n)
-                out["sum_num1"].append(s1)
-                out["sum_num2"].append(s2)
-                out["mean_a1"].append(s1 / (n * det))
-                out["mean_a2"].append(s2 / (n * det))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, a):
+        p1, p2 = a, a[:, ::-1]
+        valid = (p1 > 0) & (p2 > 0)
+        n = int(valid.sum())
+        if n == 0:
+            out["image_id"].append(image_id)
+            out["n_valid"].append(0)
+            out["sum_num1"].append(0)
+            out["sum_num2"].append(0)
+            out["mean_a1"].append(0.0)
+            out["mean_a2"].append(0.0)
+            return
+        v1, v2 = p1[valid], p2[valid]
+        c1 = e11 * v1 + e12 * v2 + w_ * w_
+        c2 = e21 * v1 + e22 * v2 + w_ * w_
+        s1 = int((c1 * g22 - c2 * g12).sum())
+        s2 = int((g11 * c2 - g12 * c1).sum())
+        out["image_id"].append(image_id)
+        out["n_valid"].append(n)
+        out["sum_num1"].append(s1)
+        out["sum_num2"].append(s2)
+        out["mean_a1"].append(s1 / (n * det))
+        out["mean_a2"].append(s2 / (n * det))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_UNMIX_SCHEMA)
+    return codec.map_images(images, per_image, _UNMIX_SCHEMA, dtype=np.int64)
 
 
 _RESID_SCHEMA = StructType([
@@ -1582,44 +1473,36 @@ def unmix_residual_stats(images: DataFrame) -> DataFrame:
     g22 = e21 * e21 + e22 * e22 + w_ * w_
     det = g11 * g22 - g12 * g12
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _RESID_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                a = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                p1, p2 = a, a[:, ::-1]
-                valid = (p1 > 0) & (p2 > 0)
-                n = int(valid.sum())
-                if n == 0:
-                    out["image_id"].append(image_id)
-                    out["n_valid"].append(0)
-                    out["n_neg"].append(0)
-                    out["sum_sq_num"].append(0)
-                    out["mse"].append(0.0)
-                    out["rmse"].append(0.0)
-                    continue
-                v1, v2 = p1[valid], p2[valid]
-                c1 = e11 * v1 + e12 * v2 + w_ * w_
-                c2 = e21 * v1 + e22 * v2 + w_ * w_
-                n1 = c1 * g22 - c2 * g12
-                n2 = g11 * c2 - g12 * c1
-                r1 = det * v1 - e11 * n1 - e21 * n2
-                r2 = det * v2 - e12 * n1 - e22 * n2
-                ssq = int((r1 * r1 + r2 * r2).sum())
-                nneg = int(((n1 < 0) | (n2 < 0)).sum())
-                mse = ssq / (2 * n * det * det)
-                out["image_id"].append(image_id)
-                out["n_valid"].append(n)
-                out["n_neg"].append(nneg)
-                out["sum_sq_num"].append(ssq)
-                out["mse"].append(mse)
-                out["rmse"].append(float(np.sqrt(np.float64(mse))))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, a):
+        p1, p2 = a, a[:, ::-1]
+        valid = (p1 > 0) & (p2 > 0)
+        n = int(valid.sum())
+        if n == 0:
+            out["image_id"].append(image_id)
+            out["n_valid"].append(0)
+            out["n_neg"].append(0)
+            out["sum_sq_num"].append(0)
+            out["mse"].append(0.0)
+            out["rmse"].append(0.0)
+            return
+        v1, v2 = p1[valid], p2[valid]
+        c1 = e11 * v1 + e12 * v2 + w_ * w_
+        c2 = e21 * v1 + e22 * v2 + w_ * w_
+        n1 = c1 * g22 - c2 * g12
+        n2 = g11 * c2 - g12 * c1
+        r1 = det * v1 - e11 * n1 - e21 * n2
+        r2 = det * v2 - e12 * n1 - e22 * n2
+        ssq = int((r1 * r1 + r2 * r2).sum())
+        nneg = int(((n1 < 0) | (n2 < 0)).sum())
+        mse = ssq / (2 * n * det * det)
+        out["image_id"].append(image_id)
+        out["n_valid"].append(n)
+        out["n_neg"].append(nneg)
+        out["sum_sq_num"].append(ssq)
+        out["mse"].append(mse)
+        out["rmse"].append(float(np.sqrt(np.float64(mse))))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_RESID_SCHEMA)
+    return codec.map_images(images, per_image, _RESID_SCHEMA, dtype=np.int64)
 
 
 def circular_se_offsets(radius: int) -> list[tuple[int, int]]:
@@ -1690,56 +1573,48 @@ def find_image_offset_stats(images: DataFrame, search: int = 3) -> DataFrame:
     (dy, dx).  Emits the winning shift and its metric.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _OFFSET_SCHEMA.fields}
-            for img_id, image_id, buf, w, h, fmt in zip(
-                    pdf["id"], pdf["image_id"], pdf["bytes"], pdf["w"],
-                    pdf["h"], pdf["fmt"]):
-                w, h = int(w), int(h)
-                ref = codec.decode_image(bytes(buf), w, h,
-                                         str(fmt)).astype(np.int64)
-                sx, sy = int(img_id) % 5 - 2, int(img_id) % 7 - 3
-                xs = np.arange(w, dtype=np.int64)[None, :]
-                ys = np.arange(h, dtype=np.int64)[:, None]
-                # floating plane: ref shifted by (sx, sy) + (x*y)%3,
-                # defined where the source pixel exists
-                fx, fy = xs - sx, ys - sy
-                fvalid = (fx >= 0) & (fx < w) & (fy >= 0) & (fy < h)
-                flt = np.zeros((h, w), dtype=np.int64)
-                flt[fvalid] = ref[np.broadcast_to(fy, (h, w))[fvalid],
-                                  np.broadcast_to(fx, (h, w))[fvalid]]
-                flt = flt + (xs * ys) % 3
-                best = None
-                for dy in range(-search, search + 1):
-                    for dx in range(-search, search + 1):
-                        rx, ry = xs - dx, ys - dy
-                        val = fvalid & (rx >= 0) & (rx < w) \
-                            & (ry >= 0) & (ry < h)
-                        n = int(val.sum())
-                        if n == 0:
-                            continue
-                        rsh = ref[np.broadcast_to(ry, (h, w))[val],
-                                  np.broadcast_to(rx, (h, w))[val]]
-                        d = rsh - flt[val]
-                        s = int((d * d).sum())
-                        msd = s / n
-                        key = (msd, dy, dx)
-                        if best is None or key < best[0]:
-                            best = (key, dx, dy, n, s, msd)
-                _k, bdx, bdy, n, s, msd = best
-                out["image_id"].append(image_id)
-                out["planted_dx"].append(sx)
-                out["planted_dy"].append(sy)
-                out["found_dx"].append(bdx)
-                out["found_dy"].append(bdy)
-                out["n_overlap"].append(n)
-                out["sum_sq"].append(s)
-                out["msd"].append(msd)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, ref, img_id):
+        h, w = ref.shape
+        sx, sy = int(img_id) % 5 - 2, int(img_id) % 7 - 3
+        xs = np.arange(w, dtype=np.int64)[None, :]
+        ys = np.arange(h, dtype=np.int64)[:, None]
+        # floating plane: ref shifted by (sx, sy) + (x*y)%3,
+        # defined where the source pixel exists
+        fx, fy = xs - sx, ys - sy
+        fvalid = (fx >= 0) & (fx < w) & (fy >= 0) & (fy < h)
+        flt = np.zeros((h, w), dtype=np.int64)
+        flt[fvalid] = ref[np.broadcast_to(fy, (h, w))[fvalid],
+                          np.broadcast_to(fx, (h, w))[fvalid]]
+        flt = flt + (xs * ys) % 3
+        best = None
+        for dy in range(-search, search + 1):
+            for dx in range(-search, search + 1):
+                rx, ry = xs - dx, ys - dy
+                val = fvalid & (rx >= 0) & (rx < w) \
+                    & (ry >= 0) & (ry < h)
+                n = int(val.sum())
+                if n == 0:
+                    continue
+                rsh = ref[np.broadcast_to(ry, (h, w))[val],
+                          np.broadcast_to(rx, (h, w))[val]]
+                d = rsh - flt[val]
+                s = int((d * d).sum())
+                msd = s / n
+                key = (msd, dy, dx)
+                if best is None or key < best[0]:
+                    best = (key, dx, dy, n, s, msd)
+        _k, bdx, bdy, n, s, msd = best
+        out["image_id"].append(image_id)
+        out["planted_dx"].append(sx)
+        out["planted_dy"].append(sy)
+        out["found_dx"].append(bdx)
+        out["found_dy"].append(bdy)
+        out["n_overlap"].append(n)
+        out["sum_sq"].append(s)
+        out["msd"].append(msd)
 
-    return images.select("id", "image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_OFFSET_SCHEMA)
+    return codec.map_images(images, per_image, _OFFSET_SCHEMA,
+                            extra_cols=("id",), dtype=np.int64)
 
 
 def laplacian_kernel(size: int = 5) -> tuple:
@@ -1803,39 +1678,31 @@ def mask_val_prob_stats(images: DataFrame,
     IEEE division each, mirrored in SQL.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _VALPROB_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                a = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                m = a[:, ::-1] >= mask_thres
-                v = a[m]
-                n = int(v.size)
-                if n == 0:
-                    out["image_id"].append(image_id)
-                    out["n_mask"].append(0)
-                    out["n_distinct"].append(0)
-                    out["sum_cnt_sq"].append(0)
-                    out["max_cnt"].append(0)
-                    out["mean_prob"].append(0.0)
-                    out["mean_resc"].append(0.0)
-                    continue
-                _u, cnt = np.unique(v, return_counts=True)
-                scs = int((cnt * cnt).sum())
-                mx = int(cnt.max())
-                out["image_id"].append(image_id)
-                out["n_mask"].append(n)
-                out["n_distinct"].append(int(cnt.size))
-                out["sum_cnt_sq"].append(scs)
-                out["max_cnt"].append(mx)
-                out["mean_prob"].append(scs / (n * n))
-                out["mean_resc"].append(scs / (n * mx))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, a):
+        m = a[:, ::-1] >= mask_thres
+        v = a[m]
+        n = int(v.size)
+        if n == 0:
+            out["image_id"].append(image_id)
+            out["n_mask"].append(0)
+            out["n_distinct"].append(0)
+            out["sum_cnt_sq"].append(0)
+            out["max_cnt"].append(0)
+            out["mean_prob"].append(0.0)
+            out["mean_resc"].append(0.0)
+            return
+        _u, cnt = np.unique(v, return_counts=True)
+        scs = int((cnt * cnt).sum())
+        mx = int(cnt.max())
+        out["image_id"].append(image_id)
+        out["n_mask"].append(n)
+        out["n_distinct"].append(int(cnt.size))
+        out["sum_cnt_sq"].append(scs)
+        out["max_cnt"].append(mx)
+        out["mean_prob"].append(scs / (n * n))
+        out["mean_resc"].append(scs / (n * mx))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_VALPROB_SCHEMA)
+    return codec.map_images(images, per_image, _VALPROB_SCHEMA, dtype=np.int64)
 
 
 _HCS_SCHEMA = StructType([
@@ -1875,57 +1742,49 @@ def pan_sharpen_hcs_stats(images: DataFrame) -> DataFrame:
     out0/out1 are sampled at the FIRST valid pixel (min flat index).
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _HCS_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                a = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                v1, v2 = a // 32, a[:, ::-1] // 32
-                valid = (v1 > 0).ravel()
-                n = int(valid.sum())
-                if n == 0:
-                    out["image_id"].append(image_id)
-                    for f in _HCS_SCHEMA.fields[1:]:
-                        out[f.name].append(0 if f.dataType == LongType()
-                                           else 0.0)
-                    continue
-                b0, b1 = v1.ravel()[valid], v2.ravel()[valid]
-                x = b0 * b0 + b1 * b1
-                pan = (b0 + b1) // 2
-                y = pan * pan
-                s_ms, ss_ms = int(x.sum()), int((x * x).sum())
-                s_p, ss_p = int(y.sum()), int((y * y).sum())
-                mean_ms = s_ms / n
-                sd_ms = float(np.sqrt(np.float64(n * ss_ms - s_ms * s_ms))) / n
-                mean_pan = s_p / n
-                sd_pan = float(np.sqrt(np.float64(n * ss_p - s_p * s_p))) / n
-                r = sd_ms / sd_pan
-                psq = r * ((y.astype(np.float64) - mean_pan) + sd_pan) \
-                    + (mean_ms - sd_ms)
-                n_neg = int((psq < 0).sum())
-                fb0, fb1 = float(b0[0]), float(b1[0])
-                p0 = float(psq[0])
-                i_adj = float(np.sqrt(np.float64(p0))) if p0 >= 0 else 0.0
-                s0 = 2.0 * fb0 * fb0 + fb1 * fb1
-                out0 = i_adj * (fb0 / float(np.sqrt(np.float64(s0))))
-                out1 = i_adj * (float(np.sqrt(np.float64(fb0 * fb0
-                                                         + fb1 * fb1)))
-                                / float(np.sqrt(np.float64(s0))))
-                out["image_id"].append(image_id)
-                out["n_valid"].append(n)
-                out["n_neg"].append(n_neg)
-                out["mean_ms"].append(mean_ms)
-                out["sd_ms"].append(sd_ms)
-                out["mean_pan"].append(mean_pan)
-                out["sd_pan"].append(sd_pan)
-                out["out0"].append(out0)
-                out["out1"].append(out1)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, a):
+        v1, v2 = a // 32, a[:, ::-1] // 32
+        valid = (v1 > 0).ravel()
+        n = int(valid.sum())
+        if n == 0:
+            out["image_id"].append(image_id)
+            for f in _HCS_SCHEMA.fields[1:]:
+                out[f.name].append(0 if f.dataType == LongType()
+                                   else 0.0)
+            return
+        b0, b1 = v1.ravel()[valid], v2.ravel()[valid]
+        x = b0 * b0 + b1 * b1
+        pan = (b0 + b1) // 2
+        y = pan * pan
+        s_ms, ss_ms = int(x.sum()), int((x * x).sum())
+        s_p, ss_p = int(y.sum()), int((y * y).sum())
+        mean_ms = s_ms / n
+        sd_ms = float(np.sqrt(np.float64(n * ss_ms - s_ms * s_ms))) / n
+        mean_pan = s_p / n
+        sd_pan = float(np.sqrt(np.float64(n * ss_p - s_p * s_p))) / n
+        r = sd_ms / sd_pan
+        psq = r * ((y.astype(np.float64) - mean_pan) + sd_pan) \
+            + (mean_ms - sd_ms)
+        n_neg = int((psq < 0).sum())
+        fb0, fb1 = float(b0[0]), float(b1[0])
+        p0 = float(psq[0])
+        i_adj = float(np.sqrt(np.float64(p0))) if p0 >= 0 else 0.0
+        s0 = 2.0 * fb0 * fb0 + fb1 * fb1
+        out0 = i_adj * (fb0 / float(np.sqrt(np.float64(s0))))
+        out1 = i_adj * (float(np.sqrt(np.float64(fb0 * fb0
+                                                 + fb1 * fb1)))
+                        / float(np.sqrt(np.float64(s0))))
+        out["image_id"].append(image_id)
+        out["n_valid"].append(n)
+        out["n_neg"].append(n_neg)
+        out["mean_ms"].append(mean_ms)
+        out["sd_ms"].append(sd_ms)
+        out["mean_pan"].append(mean_pan)
+        out["sd_pan"].append(sd_pan)
+        out["out0"].append(out0)
+        out["out1"].append(out1)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_HCS_SCHEMA)
+    return codec.map_images(images, per_image, _HCS_SCHEMA, dtype=np.int64)
 
 
 _UNPACK_SCHEMA = StructType([
@@ -1943,22 +1802,15 @@ def unpack_bits_stats(images: DataFrame, n_bits: int = 10) -> DataFrame:
     flat index (-1 if the plane is empty) — pins every bit plane
     exactly."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _UNPACK_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                a = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64).ravel()
-                for b in range(n_bits):
-                    plane = (a >> b) & 1
-                    n = int(plane.sum())
-                    first = int(np.argmax(plane)) if n else -1
-                    out["image_id"].append(image_id)
-                    out["bit"].append(b)
-                    out["n_set"].append(n)
-                    out["first_set"].append(first)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, a):
+        a = a.ravel()
+        for b in range(n_bits):
+            plane = (a >> b) & 1
+            n = int(plane.sum())
+            first = int(np.argmax(plane)) if n else -1
+            out["image_id"].append(image_id)
+            out["bit"].append(b)
+            out["n_set"].append(n)
+            out["first_set"].append(first)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_UNPACK_SCHEMA)
+    return codec.map_images(images, per_image, _UNPACK_SCHEMA, dtype=np.int64)

@@ -43,26 +43,19 @@ def pixel_stats(images: DataFrame, nodata=None) -> DataFrame:
     order (no float accumulation).
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {k: [] for k in ("image_id", "n_pix", "sum_pix",
-                                   "sumsq_pix", "min_pix", "max_pix")}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64).ravel()
-                if nodata is not None:
-                    arr = arr[arr != nodata]
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(arr.size))
-                out["sum_pix"].append(int(arr.sum()))
-                out["sumsq_pix"].append(int((arr * arr).sum()))
-                out["min_pix"].append(int(arr.min()) if arr.size else 0)
-                out["max_pix"].append(int(arr.max()) if arr.size else 0)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        arr = arr.ravel()
+        if nodata is not None:
+            arr = arr[arr != nodata]
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(arr.size))
+        out["sum_pix"].append(int(arr.sum()))
+        out["sumsq_pix"].append(int((arr * arr).sum()))
+        out["min_pix"].append(int(arr.min()) if arr.size else 0)
+        out["max_pix"].append(int(arr.max()) if arr.size else 0)
 
-    stats = images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_STATS_SCHEMA)
+    stats = codec.map_images(images, per_image, _STATS_SCHEMA,
+                             dtype=np.int64)
     return stats.withColumn(
         "mean_pix",
         F.col("sum_pix").cast("double") / F.col("n_pix").cast("double"),
@@ -83,20 +76,18 @@ def pixel_histogram(images: DataFrame, bins: int = 1024,
     the classic partial+final design (``histogram``, imagecalc.cpp:2056).
     """
 
-    def gen(it):
+    def imagestats_pixel_histogram(it):
         for pdf in it:
             ids, hists = [], []
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h), str(fmt))
-                v = (arr.astype(np.int64).ravel() // bin_width).clip(0, bins - 1)
+            for image_id, arr in codec.planes(pdf, dtype=np.int64):
+                v = (arr.ravel() // bin_width).clip(0, bins - 1)
                 ids.append(image_id)
                 hists.append(np.bincount(v, minlength=bins).astype(np.int64))
             if ids:  # empty batch: Arrow can't cast empty float64->list
                 yield pd.DataFrame({"image_id": ids, "hist": hists})
 
-    partials = images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_HIST_SCHEMA)
+    partials = images.select(*codec.IMAGE_COLS) \
+        .mapInPandas(imagestats_pixel_histogram, schema=_HIST_SCHEMA)
     return (
         partials.select(F.posexplode("hist").alias("bin", "cnt"))
         .where(F.col("cnt") > 0)
@@ -126,24 +117,15 @@ def imgs_equal_stats(pairs: DataFrame, flt_dif: float = 0.0001) -> DataFrame:
     Catalyst.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {k: [] for k in ("image_id", "cmp_image_id", "n_px",
-                                   "n_eq")}
-            for (image_id, buf, fmt, cid, cbuf, cfmt, w, h) in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["fmt"],
-                    pdf["cmp_image_id"], pdf["cmp_bytes"], pdf["cmp_fmt"],
-                    pdf["w"], pdf["h"]):
-                a = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                b = codec.decode_image(bytes(cbuf), int(w), int(h),
-                                       str(cfmt)).astype(np.int64)
-                out["image_id"].append(image_id)
-                out["cmp_image_id"].append(cid)
-                out["n_px"].append(int(a.size))
-                out["n_eq"].append(int((np.abs(a - b) < flt_dif).sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, a, cid, cbuf, cfmt):
+        h, w = a.shape
+        # the pair's second payload rides in its own columns
+        b = codec.decode_image(bytes(cbuf), w, h, str(cfmt)).astype(np.int64)
+        out["image_id"].append(image_id)
+        out["cmp_image_id"].append(cid)
+        out["n_px"].append(int(a.size))
+        out["n_eq"].append(int((np.abs(a - b) < flt_dif).sum()))
 
-    return pairs.select("image_id", "bytes", "fmt", "cmp_image_id",
-                        "cmp_bytes", "cmp_fmt", "w", "h") \
-        .mapInPandas(gen, schema=_EQ_SCHEMA)
+    return codec.map_images(
+        pairs, per_image, _EQ_SCHEMA,
+        extra_cols=("cmp_image_id", "cmp_bytes", "cmp_fmt"), dtype=np.int64)

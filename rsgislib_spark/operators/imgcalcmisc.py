@@ -30,7 +30,6 @@ coordinate with the identical expression tree both engines evaluate:
 lon + (x+0.5)*res >= L0 etc. — no index rounding anywhere.
 """
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
@@ -51,27 +50,6 @@ _Q = 1048576.0
 ENV_DEFAULT = (-180.0, 11.0, -60.0, 45.0009)
 
 
-def _iter_images(pdf, cols=("image_id", "bytes", "w", "h", "fmt")):
-    for row in zip(*(pdf[c] for c in cols)):
-        image_id, buf, w, h, fmt = row[:5]
-        v = codec.decode_image(bytes(buf), int(w), int(h),
-                               str(fmt)).astype(np.int64)
-        yield (image_id, v, v[:, ::-1]) + tuple(row[5:])
-
-
-def _simple(images: DataFrame, schema, per_image, extra_cols=()):
-    cols = ("image_id", "bytes", "w", "h", "fmt") + tuple(extra_cols)
-
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in schema.fields}
-            for tup in _iter_images(pdf, cols):
-                per_image(out, *tup)
-            yield pd.DataFrame(out)
-
-    return images.select(*cols).mapInPandas(gen, schema=schema)
-
-
 _PROP_SCHEMA = StructType([
     StructField("image_id", StringType()),
     StructField("n_pix", LongType()),
@@ -83,14 +61,15 @@ _PROP_SCHEMA = StructType([
 def prop_true_stats(images: DataFrame) -> DataFrame:
     """calc_prop_true_exp with the expression ``b1 > b2``."""
 
-    def one(out, image_id, v, m):
+    def one(out, image_id, v):
+        m = v[:, ::-1]
         n, t = int(v.size), int((v > m).sum())
         out["image_id"].append(image_id)
         out["n_pix"].append(n)
         out["n_true"].append(t)
         out["prop_q"].append(int(np.floor((float(t) / float(n)) * _Q)))
 
-    return _simple(images, _PROP_SCHEMA, one)
+    return codec.map_images(images, one, _PROP_SCHEMA, dtype=np.int64)
 
 
 _RMSE_SCHEMA = StructType([
@@ -104,7 +83,8 @@ _RMSE_SCHEMA = StructType([
 def band_rmse_stats(images: DataFrame) -> DataFrame:
     """calculate_img_band_rmse between band1 and band2."""
 
-    def one(out, image_id, v, m):
+    def one(out, image_id, v):
+        m = v[:, ::-1]
         d = v - m
         n, sd2 = int(v.size), int((d * d).sum())
         out["image_id"].append(image_id)
@@ -113,7 +93,7 @@ def band_rmse_stats(images: DataFrame) -> DataFrame:
         out["rmse_q"].append(int(np.floor(
             np.sqrt(float(sd2) / float(n)) * _Q)))
 
-    return _simple(images, _RMSE_SCHEMA, one)
+    return codec.map_images(images, one, _RMSE_SCHEMA, dtype=np.int64)
 
 
 _RESC_SCHEMA = StructType([
@@ -131,7 +111,7 @@ def rescale_stats(images: DataFrame, c_nodata=0, c_offset=1.0,
                   n_gain=8.0) -> DataFrame:
     """calc_img_rescale on band1; dyadic constants keep the plane exact."""
 
-    def one(out, image_id, v, m):
+    def one(out, image_id, v):
         nod = v == c_nodata
         res = np.where(nod, n_nodata,
                        ((v - c_offset) / c_gain) * n_gain + n_offset)
@@ -143,7 +123,7 @@ def rescale_stats(images: DataFrame, c_nodata=0, c_offset=1.0,
         out["min_out_q"].append(int(q.min()))
         out["max_out_q"].append(int(q.max()))
 
-    return _simple(images, _RESC_SCHEMA, one)
+    return codec.map_images(images, one, _RESC_SCHEMA, dtype=np.int64)
 
 
 _MIM_SCHEMA = StructType([
@@ -158,7 +138,8 @@ def mean_in_mask_stats(images: DataFrame, msk_value: int = 3) -> DataFrame:
     """calc_img_mean_in_mask: band1 mean where the mask plane
     (band2 // 64) equals msk_value, noDataVal 0 excluded."""
 
-    def one(out, image_id, v, m):
+    def one(out, image_id, v):
+        m = v[:, ::-1]
         sel = ((m // 64) == msk_value) & (v != 0)
         n, s = int(sel.sum()), int(v[sel].sum())
         out["image_id"].append(image_id)
@@ -167,7 +148,7 @@ def mean_in_mask_stats(images: DataFrame, msk_value: int = 3) -> DataFrame:
         out["mean_q"].append(
             -1 if n == 0 else int(np.floor((float(s) / float(n)) * _Q)))
 
-    return _simple(images, _MIM_SCHEMA, one)
+    return codec.map_images(images, one, _MIM_SCHEMA, dtype=np.int64)
 
 
 _ABE_SCHEMA = StructType([
@@ -184,7 +165,8 @@ def all_bands_equal_stats(images: DataFrame, img_value: int = 100,
     """all_bands_equal_to over the (v, mirror) stack: both bands must
     equal img_value (possible only on the mirror symmetry axis)."""
 
-    def one(out, image_id, v, m):
+    def one(out, image_id, v):
+        m = v[:, ::-1]
         t = int(((v == img_value) & (m == img_value)).sum())
         n = int(v.size)
         out["image_id"].append(image_id)
@@ -192,7 +174,7 @@ def all_bands_equal_stats(images: DataFrame, img_value: int = 100,
         out["n_true"].append(t)
         out["sum_out"].append(t * true_val + (n - t) * false_val)
 
-    return _simple(images, _ABE_SCHEMA, one)
+    return codec.map_images(images, one, _ABE_SCHEMA, dtype=np.int64)
 
 
 _ENV_SCHEMA = StructType([
@@ -214,7 +196,7 @@ def stats_in_env(images: DataFrame, env=ENV_DEFAULT) -> DataFrame:
     L0, L1, B0, B1 = env
     res = synth.IMG_RES_DEG
 
-    def one(out, image_id, v, m, lon, lat):
+    def one(out, image_id, v, lon, lat):
         h, w = v.shape
         cx = float(lon) + (np.arange(w, dtype=np.float64)[None, :]
                            + 0.5) * res
@@ -241,7 +223,9 @@ def stats_in_env(images: DataFrame, env=ENV_DEFAULT) -> DataFrame:
         out["std_q"].append(int(np.floor(np.sqrt(
             float(n * s2 - s * s) / float(n * n)) * _Q)))
 
-    return _simple(images, _ENV_SCHEMA, one, extra_cols=("lon", "lat"))
+    return codec.map_images(images, one, _ENV_SCHEMA,
+                            extra_cols=("lon", "lat"),
+                            dtype=np.int64)
 
 
 _COL_SCHEMA = StructType([
@@ -261,7 +245,8 @@ def column_summary_stats(images: DataFrame) -> DataFrame:
     For two bands mean = (b1+b2)/2 and population stddev = |b1-b2|/2 —
     both exactly representable, so the quantization is exact."""
 
-    def one(out, image_id, v, m):
+    def one(out, image_id, v):
+        m = v[:, ::-1]
         mn = np.minimum(v, m)
         mx = np.maximum(v, m)
         sm = v + m
@@ -275,7 +260,7 @@ def column_summary_stats(images: DataFrame) -> DataFrame:
         out["sum_mean_q"].append(int(mean_q.astype(np.int64).sum()))
         out["sum_std_q"].append(int(std_q.astype(np.int64).sum()))
 
-    return _simple(images, _COL_SCHEMA, one)
+    return codec.map_images(images, one, _COL_SCHEMA, dtype=np.int64)
 
 
 _NORM_SCHEMA = StructType([
@@ -294,7 +279,7 @@ def norm_pxl_stats(images: DataFrame) -> DataFrame:
     2^20-quantized and summed.  Constant images emit -1 (degenerate
     range)."""
 
-    def one(out, image_id, v, m):
+    def one(out, image_id, v):
         mn, mx = int(v.min()), int(v.max())
         out["image_id"].append(image_id)
         out["n_pix"].append(int(v.size))
@@ -307,7 +292,7 @@ def norm_pxl_stats(images: DataFrame) -> DataFrame:
                      * _Q).astype(np.int64)
         out["sum_norm_q"].append(int(q.sum()))
 
-    return _simple(images, _NORM_SCHEMA, one)
+    return codec.map_images(images, one, _NORM_SCHEMA, dtype=np.int64)
 
 
 # 4-class colour table (class -> r, g, b), shared with the SQL oracle
@@ -330,27 +315,20 @@ def colour_classes_stats(images: DataFrame) -> DataFrame:
     quartile class plane through the colour table; per (image, class)
     pixel count and the exact r/g/b sums of the rendered plane."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _CLR_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                cls = (v * 4) // pmax
-                for c, (r, g, b) in enumerate(CLR_TABLE):
-                    n = int((cls == c).sum())
-                    out["image_id"].append(image_id)
-                    out["cls"].append(c)
-                    out["n_pix"].append(n)
-                    out["sum_r"].append(n * r)
-                    out["sum_g"].append(n * g)
-                    out["sum_b"].append(n * b)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt):
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        cls = (v * 4) // pmax
+        for c, (r, g, b) in enumerate(CLR_TABLE):
+            n = int((cls == c).sum())
+            out["image_id"].append(image_id)
+            out["cls"].append(c)
+            out["n_pix"].append(n)
+            out["sum_r"].append(n * r)
+            out["sum_g"].append(n * g)
+            out["sum_b"].append(n * b)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_CLR_SCHEMA)
+    return codec.map_images(images, per_image, _CLR_SCHEMA,
+                            extra_cols=("fmt",), dtype=np.int64)
 
 
 _TSF_SCHEMA = StructType([
@@ -373,35 +351,28 @@ def ts_fill_composite_stats(images: DataFrame) -> DataFrame:
     circular shifts; validity = value % 5 != 0 (so ~20% gaps chain
     through the stack and the unfilled branch occurs).  All integer."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _TSF_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                dates = (v, np.roll(v, 3, axis=1), np.roll(v, 5, axis=0))
-                comp = np.zeros_like(v)
-                ref = np.zeros_like(v)
-                for i, p in enumerate(dates, start=1):
-                    take = (ref == 0) & (p % 5 != 0)
-                    comp = np.where(take, p, comp)
-                    ref = np.where(take, i, ref)
-                ww = int(w)
-                ys, xs = np.nonzero(ref)
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(v.size))
-                out["n_ref1"].append(int((ref == 1).sum()))
-                out["n_ref2"].append(int((ref == 2).sum()))
-                out["n_ref3"].append(int((ref == 3).sum()))
-                out["n_unfilled"].append(int((ref == 0).sum()))
-                out["sum_comp"].append(int(comp.sum()))
-                out["ref_ck"].append(int((ref[ys, xs]
-                                          * (ys * ww + xs)).sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        _, w = v.shape
+        dates = (v, np.roll(v, 3, axis=1), np.roll(v, 5, axis=0))
+        comp = np.zeros_like(v)
+        ref = np.zeros_like(v)
+        for i, p in enumerate(dates, start=1):
+            take = (ref == 0) & (p % 5 != 0)
+            comp = np.where(take, p, comp)
+            ref = np.where(take, i, ref)
+        ww = int(w)
+        ys, xs = np.nonzero(ref)
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(v.size))
+        out["n_ref1"].append(int((ref == 1).sum()))
+        out["n_ref2"].append(int((ref == 2).sum()))
+        out["n_ref3"].append(int((ref == 3).sum()))
+        out["n_unfilled"].append(int((ref == 0).sum()))
+        out["sum_comp"].append(int(comp.sum()))
+        out["ref_ck"].append(int((ref[ys, xs]
+                                  * (ys * ww + xs)).sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_TSF_SCHEMA)
+    return codec.map_images(images, per_image, _TSF_SCHEMA, dtype=np.int64)
 
 
 _CSH_SCHEMA = StructType([
@@ -426,29 +397,22 @@ def cloud_shadow_stats(images: DataFrame) -> DataFrame:
     ROWS BETWEEN 6 PRECEDING AND 3 PRECEDING); cloud = bit 7 of the
     value plane.  All integer."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _CSH_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                cloud = ((v // 128) % 2) == 1
-                sh = np.zeros_like(cloud)
-                for d in range(CSH_DMIN, CSH_DMAX + 1):
-                    sh[:, d:] |= cloud[:, :-d]
-                shadow = sh & ~cloud
-                ys, xs = np.nonzero(shadow)
-                ww = int(w)
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(v.size))
-                out["n_cloud"].append(int(cloud.sum()))
-                out["n_shadow"].append(int(shadow.sum()))
-                out["shadow_ck"].append(int((ys * ww + xs).sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        _, w = v.shape
+        cloud = ((v // 128) % 2) == 1
+        sh = np.zeros_like(cloud)
+        for d in range(CSH_DMIN, CSH_DMAX + 1):
+            sh[:, d:] |= cloud[:, :-d]
+        shadow = sh & ~cloud
+        ys, xs = np.nonzero(shadow)
+        ww = int(w)
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(v.size))
+        out["n_cloud"].append(int(cloud.sum()))
+        out["n_shadow"].append(int(shadow.sum()))
+        out["shadow_ck"].append(int((ys * ww + xs).sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_CSH_SCHEMA)
+    return codec.map_images(images, per_image, _CSH_SCHEMA, dtype=np.int64)
 
 
 _SG_SCHEMA = StructType([
@@ -466,23 +430,16 @@ def sampling_grid_stats(images: DataFrame) -> DataFrame:
     table): a regular sample lattice over each image — offset 4,
     step 8 in both axes — emitting the sampled value per node."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SG_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                for gy in range(SG_OFF, int(h), SG_STEP):
-                    for gx in range(SG_OFF, int(w), SG_STEP):
-                        out["image_id"].append(image_id)
-                        out["gx"].append(gx)
-                        out["gy"].append(gy)
-                        out["v"].append(int(v[gy, gx]))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        h, w = v.shape
+        for gy in range(SG_OFF, int(h), SG_STEP):
+            for gx in range(SG_OFF, int(w), SG_STEP):
+                out["image_id"].append(image_id)
+                out["gx"].append(gx)
+                out["gy"].append(gy)
+                out["v"].append(int(v[gy, gx]))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SG_SCHEMA)
+    return codec.map_images(images, per_image, _SG_SCHEMA, dtype=np.int64)
 
 
 _SWS_SCHEMA = StructType([
@@ -504,7 +461,7 @@ def stretch_with_stats(images: DataFrame, in_min: int = SWS_MIN,
     saturating at [0, 255].  One exact-int division per pixel,
     2^20-quantized; both clamp branches counted."""
 
-    def one(out, image_id, v, m):
+    def one(out, image_id, v):
         num = (v - in_min) * 255
         lo = num <= 0
         hi = num >= 255 * (in_max - in_min)
@@ -519,7 +476,7 @@ def stretch_with_stats(images: DataFrame, in_min: int = SWS_MIN,
         out["n_hi"].append(int(hi.sum()))
         out["sum_out_q"].append(int(q.sum()))
 
-    return _simple(images, _SWS_SCHEMA, one)
+    return codec.map_images(images, one, _SWS_SCHEMA, dtype=np.int64)
 
 
 # --------------------------------------------------------------------------
@@ -549,39 +506,30 @@ def buffer_pxl_vals_stats(images: DataFrame, pxl_vals=(42, 99),
     vals = tuple(int(a) for a in pxl_vals)
     bt2 = int(buf_thres) * int(buf_thres)
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _BUF_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                w, h = int(w), int(h)
-                arr = codec.decode_image(bytes(buf), w, h,
-                                         str(fmt)).astype(np.int64)
-                src = np.isin(arr, vals)
-                tys, txs = np.nonzero(src)
-                n_pix = w * h
-                if tys.size == 0:
-                    out["image_id"].append(image_id)
-                    out["n_pix"].append(n_pix)
-                    out["n_src"].append(0)
-                    out["n_buf"].append(0)
-                    out["sum_d2_in"].append(0)
-                    continue
-                ys, xs = np.mgrid[0:h, 0:w]
-                dx = xs.ravel()[:, None] - txs[None, :]
-                dy = ys.ravel()[:, None] - tys[None, :]
-                d2 = (dx * dx + dy * dy).min(axis=1)
-                inb = d2 <= bt2
-                out["image_id"].append(image_id)
-                out["n_pix"].append(n_pix)
-                out["n_src"].append(int(tys.size))
-                out["n_buf"].append(int(inb.sum()))
-                out["sum_d2_in"].append(int(d2[inb].sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        h, w = arr.shape
+        src = np.isin(arr, vals)
+        tys, txs = np.nonzero(src)
+        n_pix = w * h
+        if tys.size == 0:
+            out["image_id"].append(image_id)
+            out["n_pix"].append(n_pix)
+            out["n_src"].append(0)
+            out["n_buf"].append(0)
+            out["sum_d2_in"].append(0)
+            return
+        ys, xs = np.mgrid[0:h, 0:w]
+        dx = xs.ravel()[:, None] - txs[None, :]
+        dy = ys.ravel()[:, None] - tys[None, :]
+        d2 = (dx * dx + dy * dy).min(axis=1)
+        inb = d2 <= bt2
+        out["image_id"].append(image_id)
+        out["n_pix"].append(n_pix)
+        out["n_src"].append(int(tys.size))
+        out["n_buf"].append(int(inb.sum()))
+        out["sum_d2_in"].append(int(d2[inb].sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_BUF_SCHEMA)
+    return codec.map_images(images, per_image, _BUF_SCHEMA, dtype=np.int64)
 
 
 _MVH_SCHEMA = StructType([
@@ -604,30 +552,22 @@ def msk_val_hist_stats(images: DataFrame,
     zero-padded arrays; the dense pad carries no information)."""
     bw = int(bin_width)
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _MVH_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                w, h = int(w), int(h)
-                v = codec.decode_image(bytes(buf), w, h,
-                                       str(fmt)).astype(np.int64).ravel()
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                b = (v * 7 + 3) % pmax
-                m = (v // 64) % 8
-                keep = m != 0
-                key = m[keep] * 1024 + b[keep] // bw
-                uniq, cnt = np.unique(key, return_counts=True)
-                for k, c in zip(uniq, cnt):
-                    out["image_id"].append(image_id)
-                    out["msk_val"].append(int(k // 1024))
-                    out["bin"].append(int(k % 1024))
-                    out["cnt"].append(int(c))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt):
+        v = v.ravel()
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        b = (v * 7 + 3) % pmax
+        m = (v // 64) % 8
+        keep = m != 0
+        key = m[keep] * 1024 + b[keep] // bw
+        uniq, cnt = np.unique(key, return_counts=True)
+        for k, c in zip(uniq, cnt):
+            out["image_id"].append(image_id)
+            out["msk_val"].append(int(k // 1024))
+            out["bin"].append(int(k % 1024))
+            out["cnt"].append(int(c))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_MVH_SCHEMA)
+    return codec.map_images(images, per_image, _MVH_SCHEMA,
+                            extra_cols=("fmt",), dtype=np.int64)
 
 
 _FILL_SCHEMA = StructType([
@@ -658,51 +598,42 @@ def fill_regions_knn_stats(images: DataFrame, k: int = 5) -> DataFrame:
     Mode ties -> smallest value (scipy.stats.mode).  Emits per-image
     aggregates of the filled plane, all exact ints."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _FILL_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                w, h = int(w), int(h)
-                v = codec.decode_image(bytes(buf), w, h,
-                                       str(fmt)).astype(np.int64)
-                ys, xs = np.mgrid[0:h, 0:w]
-                fill = (xs + ys) % 9 == 0
-                fy, fx = np.nonzero(fill)
-                n_fill = int(fy.size)
-                s = mn = mx = skd = 0
-                mn = None
-                for py, px in zip(fy, fx):
-                    cand = []
-                    for dx, dy in _FILL_OFFS:
-                        nx, ny = px + dx, py + dy
-                        if 0 <= nx < w and 0 <= ny < h:
-                            cand.append((dx * dx + dy * dy,
-                                         ny * w + nx,
-                                         int(v[ny, nx])))
-                    cand.sort()
-                    top = cand[:k]
-                    vals = sorted(c[2] for c in top)
-                    best_v, best_c = -1, 0
-                    for val in vals:
-                        c = sum(1 for q in vals if q == val)
-                        if c > best_c:
-                            best_v, best_c = val, c
-                    s += best_v
-                    skd += sum(c[0] for c in top)
-                    mn = best_v if mn is None else min(mn, best_v)
-                    mx = max(mx, best_v)
-                out["image_id"].append(image_id)
-                out["n_fill"].append(n_fill)
-                out["sum_fill"].append(int(s))
-                out["min_fill"].append(int(mn if mn is not None else -1))
-                out["max_fill"].append(int(mx))
-                out["sum_kd2"].append(int(skd))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        h, w = v.shape
+        ys, xs = np.mgrid[0:h, 0:w]
+        fill = (xs + ys) % 9 == 0
+        fy, fx = np.nonzero(fill)
+        n_fill = int(fy.size)
+        s = mn = mx = skd = 0
+        mn = None
+        for py, px in zip(fy, fx):
+            cand = []
+            for dx, dy in _FILL_OFFS:
+                nx, ny = px + dx, py + dy
+                if 0 <= nx < w and 0 <= ny < h:
+                    cand.append((dx * dx + dy * dy,
+                                 ny * w + nx,
+                                 int(v[ny, nx])))
+            cand.sort()
+            top = cand[:k]
+            vals = sorted(c[2] for c in top)
+            best_v, best_c = -1, 0
+            for val in vals:
+                c = sum(1 for q in vals if q == val)
+                if c > best_c:
+                    best_v, best_c = val, c
+            s += best_v
+            skd += sum(c[0] for c in top)
+            mn = best_v if mn is None else min(mn, best_v)
+            mx = max(mx, best_v)
+        out["image_id"].append(image_id)
+        out["n_fill"].append(n_fill)
+        out["sum_fill"].append(int(s))
+        out["min_fill"].append(int(mn if mn is not None else -1))
+        out["max_fill"].append(int(mx))
+        out["sum_kd2"].append(int(skd))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_FILL_SCHEMA)
+    return codec.map_images(images, per_image, _FILL_SCHEMA, dtype=np.int64)
 
 
 # --------------------------------------------------------------------------
@@ -737,7 +668,7 @@ def recode_raster_stats(images: DataFrame) -> DataFrame:
     The reference applies each dict entry as a mask on the INPUT plane,
     so entry order is immaterial.  Exact int64 throughout."""
 
-    def per_image(out, image_id, v, _vm):
+    def per_image(out, image_id, v):
         keep = v.copy()
         drop = np.zeros_like(v)
         nrec = 0
@@ -753,7 +684,7 @@ def recode_raster_stats(images: DataFrame) -> DataFrame:
         out["sum_drop"].append(int(drop.sum()))
         out["n_drop_nonzero"].append(int((drop != 0).sum()))
 
-    return _simple(images, _RECODE_SCHEMA, per_image)
+    return codec.map_images(images, per_image, _RECODE_SCHEMA, dtype=np.int64)
 
 
 _BNORM_SCHEMA = StructType([
@@ -775,7 +706,7 @@ def band_normalise_stats(images: DataFrame) -> DataFrame:
     quantisation multiply is exact, so Σ floor(norm * 2^30) passes the
     exact-hash gate."""
 
-    def per_image(out, image_id, v, _vm):
+    def per_image(out, image_id, v):
         valid = v != IC_NODATA
         mn = int(v[valid].min())
         mx = int(v[valid].max())
@@ -791,7 +722,7 @@ def band_normalise_stats(images: DataFrame) -> DataFrame:
         out["n_nodata"].append(int((~valid).sum()))
         out["sum_norm_q"].append(int(np.floor(norm * _Q30).sum()))
 
-    return _simple(images, _BNORM_SCHEMA, per_image)
+    return codec.map_images(images, per_image, _BNORM_SCHEMA, dtype=np.int64)
 
 
 _RIOS_SCHEMA = StructType([
@@ -816,7 +747,7 @@ def rescale_rios_stats(images: DataFrame) -> DataFrame:
     step in the oracle; quantised at 2^20."""
     in_min, in_max, out_min, out_max, out_nd = RESCALE_PARAMS
 
-    def per_image(out, image_id, v, _vm):
+    def per_image(out, image_id, v):
         vf = v.astype(np.float64)
         num = vf - in_min
         den = vf - in_max - vf - in_min
@@ -833,7 +764,7 @@ def rescale_rios_stats(images: DataFrame) -> DataFrame:
         out["n_clamp_hi"].append(int(hi.sum()))
         out["sum_out_q"].append(int(np.floor(o * _Q).sum()))
 
-    return _simple(images, _RIOS_SCHEMA, per_image)
+    return codec.map_images(images, per_image, _RIOS_SCHEMA, dtype=np.int64)
 
 
 #: ref-region stack: T derived input planes + nodata holes
@@ -873,41 +804,33 @@ def ref_region_stats(images: DataFrame) -> DataFrame:
     then division) — algebraically identical to nanstd, bit-exact
     across engines.  2^20-quantised sums."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _RR_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                w, h = int(w), int(h)
-                v = codec.decode_image(bytes(buf), w, h,
-                                       str(fmt)).astype(np.int64)
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                x = np.arange(w, dtype=np.int64)[None, :]
-                y = np.arange(h, dtype=np.int64)[:, None]
-                x = np.broadcast_to(x, v.shape)
-                y = np.broadcast_to(y, v.shape)
-                planes = _rr_planes(v, x, y, pmax)
-                stack = np.stack(planes)                  # (T, h, w)
-                valid = stack != RR_NODATA
-                n = valid.sum(axis=0).astype(np.int64)
-                s = np.where(valid, stack, 0).sum(axis=0)
-                ss = np.where(valid, stack * stack, 0).sum(axis=0)
-                nz = n > 0
-                mean = np.where(
-                    nz, s / np.where(nz, n, 1), float(RR_NODATA))
-                std = np.where(
-                    nz,
-                    np.sqrt((n * ss - s * s).astype(np.float64))
-                    / np.where(nz, n, 1),
-                    0.0)
-                out["image_id"].append(image_id)
-                out["n_allnodata"].append(int((~nz).sum()))
-                out["sum_n"].append(int(n.sum()))
-                out["sum_mean_q"].append(
-                    int(np.floor(mean * _Q).sum()))
-                out["sum_std_q"].append(int(np.floor(std * _Q).sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt):
+        h, w = v.shape
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        x = np.arange(w, dtype=np.int64)[None, :]
+        y = np.arange(h, dtype=np.int64)[:, None]
+        x = np.broadcast_to(x, v.shape)
+        y = np.broadcast_to(y, v.shape)
+        planes = _rr_planes(v, x, y, pmax)
+        stack = np.stack(planes)                  # (T, h, w)
+        valid = stack != RR_NODATA
+        n = valid.sum(axis=0).astype(np.int64)
+        s = np.where(valid, stack, 0).sum(axis=0)
+        ss = np.where(valid, stack * stack, 0).sum(axis=0)
+        nz = n > 0
+        mean = np.where(
+            nz, s / np.where(nz, n, 1), float(RR_NODATA))
+        std = np.where(
+            nz,
+            np.sqrt((n * ss - s * s).astype(np.float64))
+            / np.where(nz, n, 1),
+            0.0)
+        out["image_id"].append(image_id)
+        out["n_allnodata"].append(int((~nz).sum()))
+        out["sum_n"].append(int(n.sum()))
+        out["sum_mean_q"].append(
+            int(np.floor(mean * _Q).sum()))
+        out["sum_std_q"].append(int(np.floor(std * _Q).sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_RR_SCHEMA)
+    return codec.map_images(images, per_image, _RR_SCHEMA,
+                            extra_cols=("fmt",), dtype=np.int64)

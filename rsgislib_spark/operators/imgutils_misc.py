@@ -27,7 +27,6 @@ aggregate.
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
@@ -115,30 +114,22 @@ def pxl_sample_stats(images: DataFrame) -> DataFrame:
     indices {0, s, 2s, ..., (n//s - 1)*s} of the valid subsequence
     (the reference's arange(n//s)*s)."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SAMP_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64).ravel()
-                valid = v[v != SAMPLE_NODATA]
-                n = valid.size
-                ns = n // SAMPLE_STEP
-                if ns == 0:
-                    continue
-                samp = valid[np.arange(ns) * SAMPLE_STEP]
-                out["image_id"].append(image_id)
-                out["n_valid"].append(int(n))
-                out["n_samp"].append(int(ns))
-                out["sum_samp"].append(int(samp.sum()))
-                out["min_samp"].append(int(samp.min()))
-                out["max_samp"].append(int(samp.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        v = v.ravel()
+        valid = v[v != SAMPLE_NODATA]
+        n = valid.size
+        ns = n // SAMPLE_STEP
+        if ns == 0:
+            return
+        samp = valid[np.arange(ns) * SAMPLE_STEP]
+        out["image_id"].append(image_id)
+        out["n_valid"].append(int(n))
+        out["n_samp"].append(int(ns))
+        out["sum_samp"].append(int(samp.sum()))
+        out["min_samp"].append(int(samp.min()))
+        out["max_samp"].append(int(samp.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SAMP_SCHEMA)
+    return codec.map_images(images, per_image, _SAMP_SCHEMA, dtype=np.int64)
 
 
 _RAND_SCHEMA = StructType([
@@ -162,37 +153,29 @@ def rand_pxls_stats(images: DataFrame) -> DataFrame:
     hash_y(k, id) in [edge, h-edge)); first 20 candidates whose value
     is not nodata win (duplicates allowed, as with randint)."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _RAND_SCHEMA.fields}
-            for image_id, buf, w, h, fmt, iid in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"], pdf["id"]):
-                w, h = int(w), int(h)
-                v = codec.decode_image(bytes(buf), w, h, str(fmt)) \
-                    .astype(np.int64)
-                iid = int(iid)
-                rnk = 0
-                for k in range(RAND_K):
-                    x = (k * _RMX + iid * 97) % (w - 2 * RAND_EDGE) \
-                        + RAND_EDGE
-                    y = (k * _RMY + iid * 31) % (h - 2 * RAND_EDGE) \
-                        + RAND_EDGE
-                    val = int(v[y, x])
-                    if val == SAMPLE_NODATA:
-                        continue
-                    rnk += 1
-                    out["image_id"].append(image_id)
-                    out["rnk"].append(rnk)
-                    out["x"].append(x)
-                    out["y"].append(y)
-                    out["v"].append(val)
-                    if rnk >= RAND_N_PTS:
-                        break
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, iid):
+        h, w = v.shape
+        iid = int(iid)
+        rnk = 0
+        for k in range(RAND_K):
+            x = (k * _RMX + iid * 97) % (w - 2 * RAND_EDGE) \
+                + RAND_EDGE
+            y = (k * _RMY + iid * 31) % (h - 2 * RAND_EDGE) \
+                + RAND_EDGE
+            val = int(v[y, x])
+            if val == SAMPLE_NODATA:
+                continue
+            rnk += 1
+            out["image_id"].append(image_id)
+            out["rnk"].append(rnk)
+            out["x"].append(x)
+            out["y"].append(y)
+            out["v"].append(val)
+            if rnk >= RAND_N_PTS:
+                break
 
-    return images.select("image_id", "bytes", "w", "h", "fmt", "id") \
-        .mapInPandas(gen, schema=_RAND_SCHEMA)
+    return codec.map_images(images, per_image, _RAND_SCHEMA,
+                            extra_cols=("id",), dtype=np.int64)
 
 
 #: WGS84 semi-major / semi-minor (degrees_to_metres, projection.py:87)

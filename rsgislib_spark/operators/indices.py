@@ -42,7 +42,6 @@ int64 columns out per image, pixels never cross a shuffle.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -105,25 +104,17 @@ def spectral_indices_stats(images: DataFrame) -> DataFrame:
     plus ``mn_ndwi / mx_ndwi`` representative bounds.
     """
 
-    def gen(it):
-        for pdf in it:
-            rows = {f.name: [] for f in _SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"],
-                                                pdf["bytes"], pdf["w"],
-                                                pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                planes = _index_planes(arr, pmax)
-                rows["image_id"].append(str(image_id))
-                rows["n_pix"].append(int(arr.size))
-                for c in _IDX_COLS:
-                    q = np.floor(planes[c] * _Q).astype(np.int64)
-                    rows[f"s_{c}"].append(int(q.sum()))
-                    if c == "ndwi":
-                        rows["mn_ndwi"].append(int(q.min()))
-                        rows["mx_ndwi"].append(int(q.max()))
-            yield pd.DataFrame(rows)
+    def per_image(rows, image_id, arr, fmt):
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        planes = _index_planes(arr, pmax)
+        rows["image_id"].append(str(image_id))
+        rows["n_pix"].append(int(arr.size))
+        for c in _IDX_COLS:
+            q = np.floor(planes[c] * _Q).astype(np.int64)
+            rows[f"s_{c}"].append(int(q.sum()))
+            if c == "ndwi":
+                rows["mn_ndwi"].append(int(q.min()))
+                rows["mx_ndwi"].append(int(q.max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SCHEMA)
+    return codec.map_images(images, per_image, _SCHEMA,
+                            extra_cols=("fmt",), dtype=np.int64)

@@ -29,7 +29,6 @@ round count has converged-with-margin, NOTES lesson 20 discipline).
 import heapq
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
@@ -96,29 +95,20 @@ _LCP_SCHEMA = StructType([
 
 
 def least_cost_path_stats(images: DataFrame) -> DataFrame:
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _LCP_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                c = block_costs(v)
-                gh, gw = c.shape
-                ds = dijkstra_grid(c, 0, 0)
-                dt = dijkstra_grid(c, gh - 1, gw - 1)
-                total = int(ds[gh - 1, gw - 1])
-                opt = (ds + dt) == total
-                ys, xs = np.nonzero(opt)
-                out["image_id"].append(image_id)
-                out["gw"].append(gw)
-                out["gh"].append(gh)
-                out["total_cost"].append(total)
-                out["n_opt"].append(int(opt.sum()))
-                out["sum_opt_idx"].append(
-                    int((ys.astype(np.int64) * gw + xs).sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        c = block_costs(v)
+        gh, gw = c.shape
+        ds = dijkstra_grid(c, 0, 0)
+        dt = dijkstra_grid(c, gh - 1, gw - 1)
+        total = int(ds[gh - 1, gw - 1])
+        opt = (ds + dt) == total
+        ys, xs = np.nonzero(opt)
+        out["image_id"].append(image_id)
+        out["gw"].append(gw)
+        out["gh"].append(gh)
+        out["total_cost"].append(total)
+        out["n_opt"].append(int(opt.sum()))
+        out["sum_opt_idx"].append(
+            int((ys.astype(np.int64) * gw + xs).sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_LCP_SCHEMA)
+    return codec.map_images(images, per_image, _LCP_SCHEMA, dtype=np.int64)

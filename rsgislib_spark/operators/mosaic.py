@@ -68,6 +68,28 @@ _OUT_SCHEMA = StructType([
 ])
 
 
+#: columns of a candidate image: the payload plus its id and bbox
+_CAND_COLS = codec.IMAGE_COLS + ("id", "xmin", "xmax", "ymin", "ymax")
+
+
+def _window_hits(pdf, cxs, cys, res):
+    """``(id, plane, sel_y, sel_x, sy, sx)`` for each image of ``pdf``
+    that covers an output pixel centre: the covered output rows/columns
+    and their nearest source rows/columns on the image's own grid."""
+    for _, arr, iid, xmin, xmax, ymin, ymax in codec.planes(
+            pdf, "id", "xmin", "xmax", "ymin", "ymax"):
+        sel_x = np.nonzero((cxs >= xmin) & (cxs < xmax))[0]
+        sel_y = np.nonzero((cys > ymin) & (cys <= ymax))[0]
+        if sel_x.size == 0 or sel_y.size == 0:
+            continue
+        h, w = arr.shape
+        sx = np.minimum(np.floor((cxs[sel_x] - xmin) / res)
+                        .astype(np.int64), w - 1)
+        sy = np.minimum(np.floor((ymax - cys[sel_y]) / res)
+                        .astype(np.int64), h - 1)
+        yield int(iid), arr, sel_y, sel_x, sy, sx
+
+
 def mosaic_window(images: DataFrame, x0: float, y0: float,
                   npx: int, npy: int, res: float) -> DataFrame:
     """Composite all overlapping images onto an output window grid.
@@ -85,12 +107,12 @@ def mosaic_window(images: DataFrame, x0: float, y0: float,
     cand = images.where(
         (F.col("xmax") > F.lit(x0)) & (F.col("xmin") < F.lit(xw))
         & (F.col("ymax") > F.lit(y0)) & (F.col("ymin") < F.lit(yh))
-    ).select("id", "bytes", "w", "h", "fmt", "xmin", "xmax", "ymin", "ymax")
+    ).select(*_CAND_COLS)
 
     cxs = x0 + (np.arange(npx, dtype=np.float64) + 0.5) * res
     cys = y0 + (np.arange(npy, dtype=np.float64) + 0.5) * res
 
-    def partials(it):
+    def mosaic_window_partials(it):
         for pdf in it:
             n = npx * npy
             cnt = np.zeros(n, np.int64)
@@ -103,19 +125,9 @@ def mosaic_window(images: DataFrame, x0: float, y0: float,
             mn2 = vmin.reshape(npy, npx)
             mx2 = vmax.reshape(npy, npx)
             ei2 = enc_idx.reshape(npy, npx)
-            for row in pdf.itertuples(index=False):
-                arr = codec.decode_image(bytes(row.bytes), int(row.w),
-                                         int(row.h), str(row.fmt))
-                sel_x = np.nonzero((cxs >= row.xmin) & (cxs < row.xmax))[0]
-                sel_y = np.nonzero((cys > row.ymin) & (cys <= row.ymax))[0]
-                if sel_x.size == 0 or sel_y.size == 0:
-                    continue
-                sx = np.floor((cxs[sel_x] - row.xmin) / res).astype(np.int64)
-                sy = np.floor((row.ymax - cys[sel_y]) / res).astype(np.int64)
-                sx = np.minimum(sx, int(row.w) - 1)
-                sy = np.minimum(sy, int(row.h) - 1)
+            for iid, arr, sel_y, sel_x, sy, sx in _window_hits(
+                    pdf, cxs, cys, res):
                 v = arr[np.ix_(sy, sx)].astype(np.int64)
-                iid = int(row.id)
                 ix = np.ix_(sel_y, sel_x)
                 c2[ix] += 1
                 el2[ix] = np.maximum(el2[ix], iid * _ENC_LAST + v)
@@ -150,7 +162,7 @@ def mosaic_window(images: DataFrame, x0: float, y0: float,
             "idx_max": enc_idx[covered] % _ENC_IDX,
         })
 
-    return cand.mapInPandas(partials, schema=_PARTIAL_SCHEMA) \
+    return cand.mapInPandas(mosaic_window_partials, schema=_PARTIAL_SCHEMA) \
         .groupBy("window_id").applyInPandas(merge, schema=_OUT_SCHEMA)
 
 
@@ -190,13 +202,13 @@ def mosaic_thresh_window(images: DataFrame, x0: float, y0: float,
     cand = images.where(
         (F.col("xmax") > F.lit(x0)) & (F.col("xmin") < F.lit(xw))
         & (F.col("ymax") > F.lit(y0)) & (F.col("ymin") < F.lit(yh))
-    ).select("id", "bytes", "w", "h", "fmt", "xmin", "xmax", "ymin", "ymax")
+    ).select(*_CAND_COLS)
 
     cxs = x0 + (np.arange(npx, dtype=np.float64) + 0.5) * res
     cys = y0 + (np.arange(npy, dtype=np.float64) + 0.5) * res
     big = np.iinfo(np.int64).max
 
-    def partials(it):
+    def mosaic_thresh_window_partials(it):
         for pdf in it:
             n = npx * npy
             cnt = np.zeros(n, np.int64)
@@ -207,20 +219,10 @@ def mosaic_thresh_window(images: DataFrame, x0: float, y0: float,
             el2 = enc_last.reshape(npy, npx)
             mn2 = vmin.reshape(npy, npx)
             mx2 = vmax.reshape(npy, npx)
-            for row in pdf.itertuples(index=False):
-                arr = codec.decode_image(bytes(row.bytes), int(row.w),
-                                         int(row.h), str(row.fmt))
-                sel_x = np.nonzero((cxs >= row.xmin) & (cxs < row.xmax))[0]
-                sel_y = np.nonzero((cys > row.ymin) & (cys <= row.ymax))[0]
-                if sel_x.size == 0 or sel_y.size == 0:
-                    continue
-                sx = np.minimum(np.floor((cxs[sel_x] - row.xmin) / res)
-                                .astype(np.int64), int(row.w) - 1)
-                sy = np.minimum(np.floor((row.ymax - cys[sel_y]) / res)
-                                .astype(np.int64), int(row.h) - 1)
+            for iid, arr, sel_y, sel_x, sy, sx in _window_hits(
+                    pdf, cxs, cys, res):
                 v = arr[np.ix_(sy, sx)].astype(np.int64)
                 ok = (v > lower) & (v < upper)   # strict, the reference rule
-                iid = int(row.id)
                 ix = np.ix_(sel_y, sel_x)
                 c2[ix] += ok
                 el2[ix] = np.maximum(el2[ix],
@@ -252,7 +254,8 @@ def mosaic_thresh_window(images: DataFrame, x0: float, y0: float,
             "v_max": vmax[covered],
         })
 
-    return cand.mapInPandas(partials, schema=_THRESH_PARTIAL_SCHEMA) \
+    return cand.mapInPandas(
+        mosaic_thresh_window_partials, schema=_THRESH_PARTIAL_SCHEMA) \
         .groupBy("window_id").applyInPandas(merge, schema=_THRESH_OUT_SCHEMA)
 
 
@@ -290,30 +293,21 @@ def pixel_trend_window(images: DataFrame, x0: float, y0: float,
     cand = images.where(
         (F.col("xmax") > F.lit(x0)) & (F.col("xmin") < F.lit(xw))
         & (F.col("ymax") > F.lit(y0)) & (F.col("ymin") < F.lit(yh))
-    ).select("id", "bytes", "w", "h", "fmt", "xmin", "xmax", "ymin", "ymax")
+    ).select(*_CAND_COLS)
 
     cxs = x0 + (np.arange(npx, dtype=np.float64) + 0.5) * res
     cys = y0 + (np.arange(npy, dtype=np.float64) + 0.5) * res
 
-    def partials(it):
+    def mosaic_pixel_trend_window_partials(it):
         for pdf in it:
             size = npx * npy
             acc = {k: np.zeros(size, np.int64)
                    for k in ("n", "st", "stt", "sv", "stv")}
             a2 = {k: v.reshape(npy, npx) for k, v in acc.items()}
-            for row in pdf.itertuples(index=False):
-                arr = codec.decode_image(bytes(row.bytes), int(row.w),
-                                         int(row.h), str(row.fmt))
-                sel_x = np.nonzero((cxs >= row.xmin) & (cxs < row.xmax))[0]
-                sel_y = np.nonzero((cys > row.ymin) & (cys <= row.ymax))[0]
-                if sel_x.size == 0 or sel_y.size == 0:
-                    continue
-                sx = np.minimum(np.floor((cxs[sel_x] - row.xmin) / res)
-                                .astype(np.int64), int(row.w) - 1)
-                sy = np.minimum(np.floor((row.ymax - cys[sel_y]) / res)
-                                .astype(np.int64), int(row.h) - 1)
+            for iid, arr, sel_y, sel_x, sy, sx in _window_hits(
+                    pdf, cxs, cys, res):
                 v = arr[np.ix_(sy, sx)].astype(np.int64)
-                t = np.int64(row.id)
+                t = np.int64(iid)
                 ix = np.ix_(sel_y, sel_x)
                 a2["n"][ix] += 1
                 a2["st"][ix] += t
@@ -347,7 +341,8 @@ def pixel_trend_window(images: DataFrame, x0: float, y0: float,
             "slope": slope, "intercept": intercept,
         })
 
-    return cand.mapInPandas(partials, schema=_TREND_PARTIAL_SCHEMA) \
+    return cand.mapInPandas(
+        mosaic_pixel_trend_window_partials, schema=_TREND_PARTIAL_SCHEMA) \
         .groupBy("window_id").applyInPandas(merge, schema=_TREND_OUT_SCHEMA)
 
 
@@ -396,36 +391,26 @@ def composite_max_index_window(images: DataFrame, x0: float, y0: float,
     cand = images.where(
         (F.col("xmax") > F.lit(x0)) & (F.col("xmin") < F.lit(xw))
         & (F.col("ymax") > F.lit(y0)) & (F.col("ymin") < F.lit(yh))
-    ).select("id", "bytes", "w", "h", "fmt", "xmin", "xmax", "ymin", "ymax")
+    ).select(*_CAND_COLS)
 
     cxs = x0 + (np.arange(npx, dtype=np.float64) + 0.5) * res
     cys = y0 + (np.arange(npy, dtype=np.float64) + 0.5) * res
 
-    def partials(it):
+    def mosaic_composite_max_index_window_partials(it):
         for pdf in it:
             n = npx * npy
             cnt = np.zeros(n, np.int64)
             enc = np.full(n, -1, np.int64)
             c2 = cnt.reshape(npy, npx)
             e2 = enc.reshape(npy, npx)
-            for row in pdf.itertuples(index=False):
-                arr = codec.decode_image(bytes(row.bytes), int(row.w),
-                                         int(row.h), str(row.fmt))
-                sel_x = np.nonzero((cxs >= row.xmin) & (cxs < row.xmax))[0]
-                sel_y = np.nonzero((cys > row.ymin) & (cys <= row.ymax))[0]
-                if sel_x.size == 0 or sel_y.size == 0:
-                    continue
-                sx = np.minimum(np.floor((cxs[sel_x] - row.xmin) / res)
-                                .astype(np.int64), int(row.w) - 1)
-                sy = np.minimum(np.floor((row.ymax - cys[sel_y]) / res)
-                                .astype(np.int64), int(row.h) - 1)
+            for iid, arr, sel_y, sel_x, sy, sx in _window_hits(
+                    pdf, cxs, cys, res):
                 b1 = arr.astype(np.int64)
                 b2 = b1[:, ::-1]
                 idx_plane = np.floor(
                     (b2 - b1) * 1000000.0 / (b2 + b1 + 1)).astype(np.int64)
                 v = b1[np.ix_(sy, sx)]
                 ix_v = idx_plane[np.ix_(sy, sx)]
-                iid = int(row.id)
                 e_new = ((ix_v + _CMI_IDX_OFF) * _CMI_ID_SHIFT
                          + iid * _CMI_V_SHIFT + v)
                 ix = np.ix_(sel_y, sel_x)
@@ -452,7 +437,9 @@ def composite_max_index_window(images: DataFrame, x0: float, y0: float,
             "best_v": e % _CMI_V_SHIFT,
         })
 
-    return cand.mapInPandas(partials, schema=_CMI_PARTIAL_SCHEMA) \
+    return cand.mapInPandas(
+        mosaic_composite_max_index_window_partials,
+        schema=_CMI_PARTIAL_SCHEMA) \
         .groupBy("window_id").applyInPandas(merge, schema=_CMI_OUT_SCHEMA)
 
 
@@ -481,25 +468,16 @@ def mosaic_mode_window(images: DataFrame, x0: float, y0: float,
     cand = images.where(
         (F.col("xmax") > F.lit(x0)) & (F.col("xmin") < F.lit(xw))
         & (F.col("ymax") > F.lit(y0)) & (F.col("ymin") < F.lit(yh))
-    ).select("id", "bytes", "w", "h", "fmt", "xmin", "xmax", "ymin", "ymax")
+    ).select(*_CAND_COLS)
 
     cxs = x0 + (np.arange(npx, dtype=np.float64) + 0.5) * res
     cys = y0 + (np.arange(npy, dtype=np.float64) + 0.5) * res
 
-    def partials(it):
+    def mosaic_mode_window_partials(it):
         for pdf in it:
             codes = []
-            for row in pdf.itertuples(index=False):
-                arr = codec.decode_image(bytes(row.bytes), int(row.w),
-                                         int(row.h), str(row.fmt))
-                sel_x = np.nonzero((cxs >= row.xmin) & (cxs < row.xmax))[0]
-                sel_y = np.nonzero((cys > row.ymin) & (cys <= row.ymax))[0]
-                if sel_x.size == 0 or sel_y.size == 0:
-                    continue
-                sx = np.minimum(np.floor((cxs[sel_x] - row.xmin) / res)
-                                .astype(np.int64), int(row.w) - 1)
-                sy = np.minimum(np.floor((row.ymax - cys[sel_y]) / res)
-                                .astype(np.int64), int(row.h) - 1)
+            for iid, arr, sel_y, sel_x, sy, sx in _window_hits(
+                    pdf, cxs, cys, res):
                 v = arr[np.ix_(sy, sx)].astype(np.int64)
                 flat = (sel_y[:, None] * npx + sel_x[None, :]).astype(np.int64)
                 codes.append((flat * 2048 + v).ravel())
@@ -513,7 +491,8 @@ def mosaic_mode_window(images: DataFrame, x0: float, y0: float,
                                     "cnt": np.zeros(0, np.int64)})
 
     counts = (
-        cand.mapInPandas(partials, schema=_MODE_PARTIAL_SCHEMA)
+        cand.mapInPandas(mosaic_mode_window_partials,
+                         schema=_MODE_PARTIAL_SCHEMA)
         .groupBy("code").agg(F.sum("cnt").alias("n"))
         .withColumn("flat", (F.col("code") / 2048).cast("long"))
         .withColumn("v", F.col("code") % 2048)
@@ -561,12 +540,12 @@ def composite_ndvi_ndwi_window(images: DataFrame, x0: float, y0: float,
     cand = images.where(
         (F.col("xmax") > F.lit(x0)) & (F.col("xmin") < F.lit(xw))
         & (F.col("ymax") > F.lit(y0)) & (F.col("ymin") < F.lit(yh))
-    ).select("id", "bytes", "w", "h", "fmt", "xmin", "xmax", "ymin", "ymax")
+    ).select(*_CAND_COLS)
 
     cxs = x0 + (np.arange(npx, dtype=np.float64) + 0.5) * res
     cys = y0 + (np.arange(npy, dtype=np.float64) + 0.5) * res
 
-    def partials(it):
+    def mosaic_composite_ndvi_ndwi_window_partials(it):
         for pdf in it:
             n = npx * npy
             cnt = np.zeros(n, np.int64)
@@ -577,17 +556,8 @@ def composite_ndvi_ndwi_window(images: DataFrame, x0: float, y0: float,
             t2 = votes.reshape(npy, npx)
             ev2 = encv.reshape(npy, npx)
             ew2 = encw.reshape(npy, npx)
-            for row in pdf.itertuples(index=False):
-                arr = codec.decode_image(bytes(row.bytes), int(row.w),
-                                         int(row.h), str(row.fmt))
-                sel_x = np.nonzero((cxs >= row.xmin) & (cxs < row.xmax))[0]
-                sel_y = np.nonzero((cys > row.ymin) & (cys <= row.ymax))[0]
-                if sel_x.size == 0 or sel_y.size == 0:
-                    continue
-                sx = np.minimum(np.floor((cxs[sel_x] - row.xmin) / res)
-                                .astype(np.int64), int(row.w) - 1)
-                sy = np.minimum(np.floor((row.ymax - cys[sel_y]) / res)
-                                .astype(np.int64), int(row.h) - 1)
+            for iid, arr, sel_y, sel_x, sy, sx in _window_hits(
+                    pdf, cxs, cys, res):
                 red = arr.astype(np.int64)
                 nir = red[:, ::-1]
                 green = red[::-1, :]
@@ -597,7 +567,6 @@ def composite_ndvi_ndwi_window(images: DataFrame, x0: float, y0: float,
                                 / (green + nir + 1)).astype(np.int64)
                 pick = np.ix_(sy, sx)
                 v = red[pick]
-                iid = int(row.id)
                 ev_new = ((ndvi[pick] + _CMI_IDX_OFF) * _CMI_ID_SHIFT
                           + iid * _CMI_V_SHIFT + v)
                 ew_new = ((ndwi[pick] + _CMI_IDX_OFF) * _CMI_ID_SHIFT
@@ -635,5 +604,7 @@ def composite_ndvi_ndwi_window(images: DataFrame, x0: float, y0: float,
             "best_v": e % _CMI_V_SHIFT,
         })
 
-    return cand.mapInPandas(partials, schema=_CNW_PARTIAL_SCHEMA) \
+    return cand.mapInPandas(
+        mosaic_composite_ndvi_ndwi_window_partials,
+        schema=_CNW_PARTIAL_SCHEMA) \
         .groupBy("window_id").applyInPandas(merge, schema=_CNW_OUT_SCHEMA)

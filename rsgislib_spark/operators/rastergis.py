@@ -52,7 +52,6 @@ than pixels).  Cross-tile images would use the seam-merge labeling of
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
@@ -197,38 +196,30 @@ def rat_table(images: DataFrame, quant: int = 128,
     identical in spirit to ``polygonize_bboxes``.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _RAT_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                lab = _label_regions(arr // quant)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                ys, xs = np.nonzero(lab)
-                ls = lab[ys, xs]
-                vs = arr[ys, xs]
-                npix = np.bincount(ls, minlength=n + 1)[1:]
-                mode = _clump_mode(ls, vs, n)[1:]
-                pvals = _clump_percentiles(ls, vs, n, pcts)
-                n_ng, mn_ng, mx_ng = _clump_neighbours(lab, n)
-                out["image_id"].extend([image_id] * n)
-                out["clump_id"].extend(range(1, n + 1))
-                out["n_pix"].extend(int(v) for v in npix)
-                out["mode_val"].extend(int(v) for v in mode)
-                out["p25"].extend(int(v) for v in pvals[0])
-                out["p50"].extend(int(v) for v in pvals[1])
-                out["p75"].extend(int(v) for v in pvals[2])
-                out["n_neigh"].extend(int(v) for v in n_ng[1:])
-                out["min_neigh"].extend(int(v) for v in mn_ng[1:])
-                out["max_neigh"].extend(int(v) for v in mx_ng[1:])
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        lab = _label_regions(arr // quant)
+        n = int(lab.max())
+        if n == 0:
+            return
+        ys, xs = np.nonzero(lab)
+        ls = lab[ys, xs]
+        vs = arr[ys, xs]
+        npix = np.bincount(ls, minlength=n + 1)[1:]
+        mode = _clump_mode(ls, vs, n)[1:]
+        pvals = _clump_percentiles(ls, vs, n, pcts)
+        n_ng, mn_ng, mx_ng = _clump_neighbours(lab, n)
+        out["image_id"].extend([image_id] * n)
+        out["clump_id"].extend(range(1, n + 1))
+        out["n_pix"].extend(int(v) for v in npix)
+        out["mode_val"].extend(int(v) for v in mode)
+        out["p25"].extend(int(v) for v in pvals[0])
+        out["p50"].extend(int(v) for v in pvals[1])
+        out["p75"].extend(int(v) for v in pvals[2])
+        out["n_neigh"].extend(int(v) for v in n_ng[1:])
+        out["min_neigh"].extend(int(v) for v in mn_ng[1:])
+        out["max_neigh"].extend(int(v) for v in mx_ng[1:])
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_RAT_SCHEMA)
+    return codec.map_images(images, per_image, _RAT_SCHEMA, dtype=np.int64)
 
 
 def collapse_rat(rat: DataFrame, min_pix: int = 8) -> DataFrame:
@@ -268,49 +259,41 @@ def merge_small_clumps(images: DataFrame, quant: int = 128,
     unit step; iterating rounds reproduces the stepwise algorithm.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _MERGE_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                lab = _label_regions(arr // quant)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                npix = np.bincount(lab[lab > 0], minlength=n + 1)
-                # adjacency pairs (both directions, deduped)
-                pa, pb = [], []
-                a, b = lab[:, :-1], lab[:, 1:]
-                sel = (a > 0) & (b > 0) & (a != b)
-                pa.append(a[sel]); pb.append(b[sel])
-                a, b = lab[:-1, :], lab[1:, :]
-                sel = (a > 0) & (b > 0) & (a != b)
-                pa.append(a[sel]); pb.append(b[sel])
-                new = np.arange(n + 1, dtype=np.int64)
-                if any(x.size for x in pa):
-                    fa = np.concatenate(pa + pb).astype(np.int64)
-                    fb = np.concatenate(pb + pa).astype(np.int64)
-                    code = np.unique(fa * (n + 1) + fb)
-                    ca, cb = code // (n + 1), code % (n + 1)
-                    # per ca: neighbour with (max size, then min id) —
-                    # sort by (ca, -size_b, cb), keep first
-                    order = np.lexsort((cb, -npix[cb], ca))
-                    first = np.ones(order.shape, dtype=bool)
-                    first[1:] = ca[order][1:] != ca[order][:-1]
-                    tgt_a = ca[order][first]
-                    tgt_b = cb[order][first]
-                    small = npix[tgt_a] < min_pix
-                    new[tgt_a[small]] = tgt_b[small]
-                out["image_id"].extend([image_id] * n)
-                out["clump_id"].extend(range(1, n + 1))
-                out["n_pix"].extend(int(v) for v in npix[1:])
-                out["new_label"].extend(int(v) for v in new[1:])
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        lab = _label_regions(arr // quant)
+        n = int(lab.max())
+        if n == 0:
+            return
+        npix = np.bincount(lab[lab > 0], minlength=n + 1)
+        # adjacency pairs (both directions, deduped)
+        pa, pb = [], []
+        a, b = lab[:, :-1], lab[:, 1:]
+        sel = (a > 0) & (b > 0) & (a != b)
+        pa.append(a[sel]); pb.append(b[sel])
+        a, b = lab[:-1, :], lab[1:, :]
+        sel = (a > 0) & (b > 0) & (a != b)
+        pa.append(a[sel]); pb.append(b[sel])
+        new = np.arange(n + 1, dtype=np.int64)
+        if any(x.size for x in pa):
+            fa = np.concatenate(pa + pb).astype(np.int64)
+            fb = np.concatenate(pb + pa).astype(np.int64)
+            code = np.unique(fa * (n + 1) + fb)
+            ca, cb = code // (n + 1), code % (n + 1)
+            # per ca: neighbour with (max size, then min id) —
+            # sort by (ca, -size_b, cb), keep first
+            order = np.lexsort((cb, -npix[cb], ca))
+            first = np.ones(order.shape, dtype=bool)
+            first[1:] = ca[order][1:] != ca[order][:-1]
+            tgt_a = ca[order][first]
+            tgt_b = cb[order][first]
+            small = npix[tgt_a] < min_pix
+            new[tgt_a[small]] = tgt_b[small]
+        out["image_id"].extend([image_id] * n)
+        out["clump_id"].extend(range(1, n + 1))
+        out["n_pix"].extend(int(v) for v in npix[1:])
+        out["new_label"].extend(int(v) for v in new[1:])
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_MERGE_SCHEMA)
+    return codec.map_images(images, per_image, _MERGE_SCHEMA, dtype=np.int64)
 
 
 _GEO_SCHEMA = StructType([
@@ -341,49 +324,40 @@ def clump_geo_stats(images: DataFrame, quant: int = 128,
     in SQL.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _GEO_SCHEMA.fields}
-            for image_id, buf, w, h, fmt, lon, lat in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"], pdf["lon"], pdf["lat"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                lab = _label_regions(arr // quant)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                ys, xs = np.nonzero(lab)
-                ls = lab[ys, xs]
-                npix = np.bincount(ls, minlength=n + 1)[1:]
-                sx = np.zeros(n + 1, dtype=np.int64)
-                np.add.at(sx, ls, xs)
-                sy = np.zeros(n + 1, dtype=np.int64)
-                np.add.at(sy, ls, ys)
-                big = np.int64(1) << 60
-                x0 = np.full(n + 1, big); x1 = np.full(n + 1, -big)
-                y0 = np.full(n + 1, big); y1 = np.full(n + 1, -big)
-                np.minimum.at(x0, ls, xs); np.maximum.at(x1, ls, xs)
-                np.minimum.at(y0, ls, ys); np.maximum.at(y1, ls, ys)
-                lon, lat = float(lon), float(lat)
-                for c in range(1, n + 1):
-                    npx = int(npix[c - 1])
-                    out["image_id"].append(image_id)
-                    out["clump_id"].append(c)
-                    out["n_pix"].append(npx)
-                    out["mean_e"].append(
-                        lon + (int(sx[c]) / npx + 0.5) * res)
-                    out["mean_n"].append(
-                        lat - (int(sy[c]) / npx + 0.5) * res)
-                    out["min_e"].append(lon + int(x0[c]) * res)
-                    out["max_e"].append(lon + int(x1[c] + 1) * res)
-                    out["max_n"].append(lat - int(y0[c]) * res)
-                    out["min_n"].append(lat - int(y1[c] + 1) * res)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr, lon, lat):
+        lab = _label_regions(arr // quant)
+        n = int(lab.max())
+        if n == 0:
+            return
+        ys, xs = np.nonzero(lab)
+        ls = lab[ys, xs]
+        npix = np.bincount(ls, minlength=n + 1)[1:]
+        sx = np.zeros(n + 1, dtype=np.int64)
+        np.add.at(sx, ls, xs)
+        sy = np.zeros(n + 1, dtype=np.int64)
+        np.add.at(sy, ls, ys)
+        big = np.int64(1) << 60
+        x0 = np.full(n + 1, big); x1 = np.full(n + 1, -big)
+        y0 = np.full(n + 1, big); y1 = np.full(n + 1, -big)
+        np.minimum.at(x0, ls, xs); np.maximum.at(x1, ls, xs)
+        np.minimum.at(y0, ls, ys); np.maximum.at(y1, ls, ys)
+        lon, lat = float(lon), float(lat)
+        for c in range(1, n + 1):
+            npx = int(npix[c - 1])
+            out["image_id"].append(image_id)
+            out["clump_id"].append(c)
+            out["n_pix"].append(npx)
+            out["mean_e"].append(
+                lon + (int(sx[c]) / npx + 0.5) * res)
+            out["mean_n"].append(
+                lat - (int(sy[c]) / npx + 0.5) * res)
+            out["min_e"].append(lon + int(x0[c]) * res)
+            out["max_e"].append(lon + int(x1[c] + 1) * res)
+            out["max_n"].append(lat - int(y0[c]) * res)
+            out["min_n"].append(lat - int(y1[c] + 1) * res)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt",
-                         "lon", "lat") \
-        .mapInPandas(gen, schema=_GEO_SCHEMA)
+    return codec.map_images(images, per_image, _GEO_SCHEMA,
+                            extra_cols=("lon", "lat"), dtype=np.int64)
 
 
 _BORDER_SCHEMA = StructType([
@@ -411,47 +385,39 @@ def clump_border_stats(images: DataFrame, quant: int = 128,
     clump has no border.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _BORDER_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                q = arr // quant
-                lab = _label_regions(q)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                flat_lab, flat_q = lab.ravel(), q.ravel()
-                npix = np.bincount(flat_lab, minlength=n + 1)[1:]
-                first = np.full(n + 1, flat_lab.size, dtype=np.int64)
-                np.minimum.at(first, flat_lab,
-                              np.arange(flat_lab.size, dtype=np.int64))
-                cls = np.zeros(n + 1, dtype=np.int64)
-                cls[1:] = flat_q[first[1:]]
-                blen = np.zeros(n + 1, dtype=np.int64)
-                bcls = np.zeros(n + 1, dtype=np.int64)
-                for a, b in ((lab[:, :-1], lab[:, 1:]),
-                             (lab[:-1, :], lab[1:, :])):
-                    sel = a != b
-                    ea, eb = a[sel], b[sel]
-                    np.add.at(blen, ea, 1)
-                    np.add.at(blen, eb, 1)
-                    np.add.at(bcls, ea, (cls[eb] == rel_cls).astype(np.int64))
-                    np.add.at(bcls, eb, (cls[ea] == rel_cls).astype(np.int64))
-                out["image_id"].extend([image_id] * n)
-                out["clump_id"].extend(range(1, n + 1))
-                out["n_pix"].extend(int(v) for v in npix)
-                out["border_len"].extend(int(v) for v in blen[1:])
-                out["border_cls0"].extend(int(v) for v in bcls[1:])
-                out["rel_border"].extend(
-                    (int(b0) / int(bl)) if bl > 0 else 0.0
-                    for b0, bl in zip(bcls[1:], blen[1:]))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        q = arr // quant
+        lab = _label_regions(q)
+        n = int(lab.max())
+        if n == 0:
+            return
+        flat_lab, flat_q = lab.ravel(), q.ravel()
+        npix = np.bincount(flat_lab, minlength=n + 1)[1:]
+        first = np.full(n + 1, flat_lab.size, dtype=np.int64)
+        np.minimum.at(first, flat_lab,
+                      np.arange(flat_lab.size, dtype=np.int64))
+        cls = np.zeros(n + 1, dtype=np.int64)
+        cls[1:] = flat_q[first[1:]]
+        blen = np.zeros(n + 1, dtype=np.int64)
+        bcls = np.zeros(n + 1, dtype=np.int64)
+        for a, b in ((lab[:, :-1], lab[:, 1:]),
+                     (lab[:-1, :], lab[1:, :])):
+            sel = a != b
+            ea, eb = a[sel], b[sel]
+            np.add.at(blen, ea, 1)
+            np.add.at(blen, eb, 1)
+            np.add.at(bcls, ea, (cls[eb] == rel_cls).astype(np.int64))
+            np.add.at(bcls, eb, (cls[ea] == rel_cls).astype(np.int64))
+        out["image_id"].extend([image_id] * n)
+        out["clump_id"].extend(range(1, n + 1))
+        out["n_pix"].extend(int(v) for v in npix)
+        out["border_len"].extend(int(v) for v in blen[1:])
+        out["border_cls0"].extend(int(v) for v in bcls[1:])
+        out["rel_border"].extend(
+            (int(b0) / int(bl)) if bl > 0 else 0.0
+            for b0, bl in zip(bcls[1:], blen[1:]))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_BORDER_SCHEMA)
+    return codec.map_images(images, per_image, _BORDER_SCHEMA, dtype=np.int64)
 
 
 _CAT_SCHEMA = StructType([
@@ -481,35 +447,27 @@ def clump_cat_stats(images: DataFrame, quant: int = 128,
     mirrored in the oracle.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _CAT_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                lab = _label_regions(arr // quant)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                ls, cs = lab.ravel(), (arr % cat_mod).ravel()
-                npix = np.bincount(ls, minlength=n + 1)
-                code = ls * cat_mod + cs
-                cnt = np.bincount(code, minlength=(n + 1) * cat_mod)
-                nz = np.nonzero(cnt)[0]
-                nz = nz[nz >= cat_mod]                  # skip label 0
-                cid, cat = nz // cat_mod, nz % cat_mod
-                out["image_id"].extend([image_id] * len(nz))
-                out["clump_id"].extend(int(v) for v in cid)
-                out["n_pix"].extend(int(npix[v]) for v in cid)
-                out["category"].extend(int(v) for v in cat)
-                out["cat_pix"].extend(int(cnt[v]) for v in nz)
-                out["prop"].extend(
-                    int(cnt[v]) / int(npix[c]) for v, c in zip(nz, cid))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        lab = _label_regions(arr // quant)
+        n = int(lab.max())
+        if n == 0:
+            return
+        ls, cs = lab.ravel(), (arr % cat_mod).ravel()
+        npix = np.bincount(ls, minlength=n + 1)
+        code = ls * cat_mod + cs
+        cnt = np.bincount(code, minlength=(n + 1) * cat_mod)
+        nz = np.nonzero(cnt)[0]
+        nz = nz[nz >= cat_mod]                  # skip label 0
+        cid, cat = nz // cat_mod, nz % cat_mod
+        out["image_id"].extend([image_id] * len(nz))
+        out["clump_id"].extend(int(v) for v in cid)
+        out["n_pix"].extend(int(npix[v]) for v in cid)
+        out["category"].extend(int(v) for v in cat)
+        out["cat_pix"].extend(int(cnt[v]) for v in nz)
+        out["prop"].extend(
+            int(cnt[v]) / int(npix[c]) for v, c in zip(nz, cid))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_CAT_SCHEMA)
+    return codec.map_images(images, per_image, _CAT_SCHEMA, dtype=np.int64)
 
 
 def clump_cat_majority(images: DataFrame, quant: int = 128,
@@ -561,51 +519,43 @@ def rel_diff_neigh_stats(images: DataFrame, quant: int = 128,
     equal on integer inputs well under 2^53).
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _NDIFF_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                lab = _label_regions(arr // quant)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                npix = np.bincount(lab.ravel(), minlength=n + 1)
-                pa, pb = [], []
-                for a, b in ((lab[:, :-1], lab[:, 1:]),
-                             (lab[:-1, :], lab[1:, :])):
-                    sel = a != b
-                    pa.append(a[sel]); pb.append(b[sel])
-                fa = np.concatenate(pa + pb)
-                fb = np.concatenate(pb + pa)
-                code = np.unique(fa * np.int64(n + 1) + fb)
-                na, nb = code // (n + 1), code % (n + 1)
-                d = npix[na] - npix[nb]
-                if use_abs:
-                    d = np.abs(d)
-                cnt = np.bincount(na, minlength=n + 1)
-                big = np.int64(1) << 60
-                mn = np.full(n + 1, big); mx = np.full(n + 1, -big)
-                sm = np.zeros(n + 1, dtype=np.int64)
-                np.minimum.at(mn, na, d)
-                np.maximum.at(mx, na, d)
-                np.add.at(sm, na, d)
-                for c in range(1, n + 1):
-                    k = int(cnt[c])
-                    out["image_id"].append(image_id)
-                    out["clump_id"].append(c)
-                    out["n_pix"].append(int(npix[c]))
-                    out["n_neigh"].append(k)
-                    out["min_diff"].append(float(mn[c]) if k else 0.0)
-                    out["max_diff"].append(float(mx[c]) if k else 0.0)
-                    out["mean_diff"].append(int(sm[c]) / k if k else 0.0)
-                    out["sum_diff"].append(float(sm[c]) if k else 0.0)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        lab = _label_regions(arr // quant)
+        n = int(lab.max())
+        if n == 0:
+            return
+        npix = np.bincount(lab.ravel(), minlength=n + 1)
+        pa, pb = [], []
+        for a, b in ((lab[:, :-1], lab[:, 1:]),
+                     (lab[:-1, :], lab[1:, :])):
+            sel = a != b
+            pa.append(a[sel]); pb.append(b[sel])
+        fa = np.concatenate(pa + pb)
+        fb = np.concatenate(pb + pa)
+        code = np.unique(fa * np.int64(n + 1) + fb)
+        na, nb = code // (n + 1), code % (n + 1)
+        d = npix[na] - npix[nb]
+        if use_abs:
+            d = np.abs(d)
+        cnt = np.bincount(na, minlength=n + 1)
+        big = np.int64(1) << 60
+        mn = np.full(n + 1, big); mx = np.full(n + 1, -big)
+        sm = np.zeros(n + 1, dtype=np.int64)
+        np.minimum.at(mn, na, d)
+        np.maximum.at(mx, na, d)
+        np.add.at(sm, na, d)
+        for c in range(1, n + 1):
+            k = int(cnt[c])
+            out["image_id"].append(image_id)
+            out["clump_id"].append(c)
+            out["n_pix"].append(int(npix[c]))
+            out["n_neigh"].append(k)
+            out["min_diff"].append(float(mn[c]) if k else 0.0)
+            out["max_diff"].append(float(mx[c]) if k else 0.0)
+            out["mean_diff"].append(int(sm[c]) / k if k else 0.0)
+            out["sum_diff"].append(float(sm[c]) if k else 0.0)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_NDIFF_SCHEMA)
+    return codec.map_images(images, per_image, _NDIFF_SCHEMA, dtype=np.int64)
 
 
 _MEANLIT_SCHEMA = StructType([
@@ -636,45 +586,37 @@ def clump_meanlit_stats(images: DataFrame, quant: int = 128) -> DataFrame:
     lit subset is never empty (the clump max always satisfies >= mean).
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _MEANLIT_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                b2 = arr[:, ::-1]
-                lab = _label_regions(arr // quant)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                ls = lab.ravel()
-                v1, v2 = arr.ravel(), b2.ravel()
-                npix = np.bincount(ls, minlength=n + 1)
-                s2 = np.zeros(n + 1, dtype=np.int64)
-                np.add.at(s2, ls, v2)
-                lit = v2 * npix[ls] >= s2[ls]
-                ll, lv = ls[lit], v1[lit]
-                lcnt = np.bincount(ll, minlength=n + 1)
-                lsum = np.zeros(n + 1, dtype=np.int64)
-                np.add.at(lsum, ll, lv)
-                big = np.int64(1) << 60
-                lmn = np.full(n + 1, big); lmx = np.full(n + 1, -big)
-                np.minimum.at(lmn, ll, lv)
-                np.maximum.at(lmx, ll, lv)
-                out["image_id"].extend([image_id] * n)
-                out["clump_id"].extend(range(1, n + 1))
-                out["n_pix"].extend(int(v) for v in npix[1:])
-                out["lit_pix"].extend(int(v) for v in lcnt[1:])
-                out["lit_min"].extend(int(v) for v in lmn[1:])
-                out["lit_max"].extend(int(v) for v in lmx[1:])
-                out["lit_sum"].extend(int(v) for v in lsum[1:])
-                out["lit_mean"].extend(
-                    int(s) / int(c) for s, c in zip(lsum[1:], lcnt[1:]))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        b2 = arr[:, ::-1]
+        lab = _label_regions(arr // quant)
+        n = int(lab.max())
+        if n == 0:
+            return
+        ls = lab.ravel()
+        v1, v2 = arr.ravel(), b2.ravel()
+        npix = np.bincount(ls, minlength=n + 1)
+        s2 = np.zeros(n + 1, dtype=np.int64)
+        np.add.at(s2, ls, v2)
+        lit = v2 * npix[ls] >= s2[ls]
+        ll, lv = ls[lit], v1[lit]
+        lcnt = np.bincount(ll, minlength=n + 1)
+        lsum = np.zeros(n + 1, dtype=np.int64)
+        np.add.at(lsum, ll, lv)
+        big = np.int64(1) << 60
+        lmn = np.full(n + 1, big); lmx = np.full(n + 1, -big)
+        np.minimum.at(lmn, ll, lv)
+        np.maximum.at(lmx, ll, lv)
+        out["image_id"].extend([image_id] * n)
+        out["clump_id"].extend(range(1, n + 1))
+        out["n_pix"].extend(int(v) for v in npix[1:])
+        out["lit_pix"].extend(int(v) for v in lcnt[1:])
+        out["lit_min"].extend(int(v) for v in lmn[1:])
+        out["lit_max"].extend(int(v) for v in lmx[1:])
+        out["lit_sum"].extend(int(v) for v in lsum[1:])
+        out["lit_mean"].extend(
+            int(s) / int(c) for s, c in zip(lsum[1:], lcnt[1:]))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_MEANLIT_SCHEMA)
+    return codec.map_images(images, per_image, _MEANLIT_SCHEMA, dtype=np.int64)
 
 
 _DIST_SCHEMA = StructType([
@@ -739,38 +681,30 @@ def dist_to_large_clumps(images: DataFrame, quant: int = 128,
     geometry search has no target there).
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _DIST_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                lab = _label_regions(arr // quant)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                npix = np.bincount(lab.ravel(), minlength=n + 1)
-                large = npix >= size_thres
-                large[0] = False
-                small_ids = np.nonzero(~large[1:])[0] + 1
-                if not large.any() or small_ids.size == 0:
-                    continue
-                dt = _sq_edt(large[lab])
-                mn = np.full(n + 1, _EDT_INF, dtype=np.int64)
-                np.minimum.at(mn, lab.ravel(), dt.ravel())
-                for c in small_ids:
-                    sq = int(mn[c])
-                    out["image_id"].append(image_id)
-                    out["clump_id"].append(int(c))
-                    out["n_pix"].append(int(npix[c]))
-                    out["min_sq_px"].append(sq)
-                    out["dist_deg"].append(float(np.sqrt(np.float64(sq))
-                                                 * np.float64(res)))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        lab = _label_regions(arr // quant)
+        n = int(lab.max())
+        if n == 0:
+            return
+        npix = np.bincount(lab.ravel(), minlength=n + 1)
+        large = npix >= size_thres
+        large[0] = False
+        small_ids = np.nonzero(~large[1:])[0] + 1
+        if not large.any() or small_ids.size == 0:
+            return
+        dt = _sq_edt(large[lab])
+        mn = np.full(n + 1, _EDT_INF, dtype=np.int64)
+        np.minimum.at(mn, lab.ravel(), dt.ravel())
+        for c in small_ids:
+            sq = int(mn[c])
+            out["image_id"].append(image_id)
+            out["clump_id"].append(int(c))
+            out["n_pix"].append(int(npix[c]))
+            out["min_sq_px"].append(sq)
+            out["dist_deg"].append(float(np.sqrt(np.float64(sq))
+                                         * np.float64(res)))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_DIST_SCHEMA)
+    return codec.map_images(images, per_image, _DIST_SCHEMA, dtype=np.int64)
 
 
 _TILEPOS_SCHEMA = StructType([
@@ -807,54 +741,46 @@ def clump_tile_positions(images: DataFrame, quant: int = 128,
     lesson 15); the diamond lattice has genuine interior clumps.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _TILEPOS_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                w, h = int(w), int(h)
-                arr = codec.decode_image(bytes(buf), w, h,
-                                         str(fmt)).astype(np.int64)
-                if mix:
-                    q = ((arr // quant) * (arr[:, ::-1] // quant)) % 2
-                else:
-                    q = arr // quant
-                lab = _label_regions(q)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                xs = np.arange(w, dtype=np.int64)[None, :]
-                ys = np.arange(h, dtype=np.int64)[:, None]
-                tx0 = (xs // tw) * tw
-                tx1 = np.minimum(tx0 + tw, w)
-                ty0 = (ys // th) * th
-                ty1 = np.minimum(ty0 + th, h)
-                d = np.minimum(np.minimum(xs - tx0, tx1 - 1 - xs),
-                               np.minimum(ys - ty0, ty1 - 1 - ys))
-                code = np.where(d < overlap, 1,
-                                np.where(d < overlap + boundary, 2, 3))
-                ls = lab.ravel()
-                npix = np.bincount(ls, minlength=n + 1)
-                has = np.zeros((4, n + 1), dtype=bool)
-                for c in (1, 2, 3):
-                    sel = (code == c).ravel()
-                    has[c, np.unique(ls[sel])] = True
-                pos = np.where(
-                    has[2] | (has[1] & has[3]), 2,
-                    np.where(has[1], 1, np.where(has[3], 3, 0)))
-                border = np.zeros(n + 1, dtype=np.int64)
-                edge = np.concatenate([lab[0, :], lab[-1, :],
-                                       lab[:, 0], lab[:, -1]])
-                border[np.unique(edge)] = 1
-                out["image_id"].extend([image_id] * n)
-                out["clump_id"].extend(range(1, n + 1))
-                out["n_pix"].extend(int(v) for v in npix[1:])
-                out["tile_pos"].extend(int(v) for v in pos[1:])
-                out["on_border"].extend(int(v) for v in border[1:])
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        h, w = arr.shape
+        if mix:
+            q = ((arr // quant) * (arr[:, ::-1] // quant)) % 2
+        else:
+            q = arr // quant
+        lab = _label_regions(q)
+        n = int(lab.max())
+        if n == 0:
+            return
+        xs = np.arange(w, dtype=np.int64)[None, :]
+        ys = np.arange(h, dtype=np.int64)[:, None]
+        tx0 = (xs // tw) * tw
+        tx1 = np.minimum(tx0 + tw, w)
+        ty0 = (ys // th) * th
+        ty1 = np.minimum(ty0 + th, h)
+        d = np.minimum(np.minimum(xs - tx0, tx1 - 1 - xs),
+                       np.minimum(ys - ty0, ty1 - 1 - ys))
+        code = np.where(d < overlap, 1,
+                        np.where(d < overlap + boundary, 2, 3))
+        ls = lab.ravel()
+        npix = np.bincount(ls, minlength=n + 1)
+        has = np.zeros((4, n + 1), dtype=bool)
+        for c in (1, 2, 3):
+            sel = (code == c).ravel()
+            has[c, np.unique(ls[sel])] = True
+        pos = np.where(
+            has[2] | (has[1] & has[3]), 2,
+            np.where(has[1], 1, np.where(has[3], 3, 0)))
+        border = np.zeros(n + 1, dtype=np.int64)
+        edge = np.concatenate([lab[0, :], lab[-1, :],
+                               lab[:, 0], lab[:, -1]])
+        border[np.unique(edge)] = 1
+        out["image_id"].extend([image_id] * n)
+        out["clump_id"].extend(range(1, n + 1))
+        out["n_pix"].extend(int(v) for v in npix[1:])
+        out["tile_pos"].extend(int(v) for v in pos[1:])
+        out["on_border"].extend(int(v) for v in border[1:])
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_TILEPOS_SCHEMA)
+    return codec.map_images(images, per_image, _TILEPOS_SCHEMA, dtype=np.int64)
 
 
 _CHANGE_SCHEMA = StructType([
@@ -883,44 +809,36 @@ def find_change_clumps(images: DataFrame, quant: int = 128,
     the DuckDB oracle runs the identical integer arithmetic.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _CHANGE_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                q = arr // quant
-                lab = _label_regions(q)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                flat_lab, flat_q = lab.ravel(), q.ravel()
-                npix = np.bincount(flat_lab, minlength=n + 1)
-                first = np.full(n + 1, flat_lab.size, dtype=np.int64)
-                np.minimum.at(first, flat_lab,
-                              np.arange(flat_lab.size, dtype=np.int64))
-                cls = np.zeros(n + 1, dtype=np.int64)
-                cls[1:] = flat_q[first[1:]]
-                ncls = int(cls.max()) + 1
-                cc = np.bincount(cls[1:], minlength=ncls)
-                s = np.zeros(ncls, dtype=np.int64)
-                ss = np.zeros(ncls, dtype=np.int64)
-                np.add.at(s, cls[1:], npix[1:])
-                np.add.at(ss, cls[1:], npix[1:] * npix[1:])
-                v, c = npix[1:], cls[1:]
-                lhs = (v * cc[c] - s[c]) ** 2
-                rhs = k * k * (cc[c] * ss[c] - s[c] * s[c])
-                chg = (lhs > rhs).astype(np.int64)
-                out["image_id"].extend([image_id] * n)
-                out["clump_id"].extend(range(1, n + 1))
-                out["cls"].extend(int(x) for x in c)
-                out["n_pix"].extend(int(x) for x in v)
-                out["change"].extend(int(x) for x in chg)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        q = arr // quant
+        lab = _label_regions(q)
+        n = int(lab.max())
+        if n == 0:
+            return
+        flat_lab, flat_q = lab.ravel(), q.ravel()
+        npix = np.bincount(flat_lab, minlength=n + 1)
+        first = np.full(n + 1, flat_lab.size, dtype=np.int64)
+        np.minimum.at(first, flat_lab,
+                      np.arange(flat_lab.size, dtype=np.int64))
+        cls = np.zeros(n + 1, dtype=np.int64)
+        cls[1:] = flat_q[first[1:]]
+        ncls = int(cls.max()) + 1
+        cc = np.bincount(cls[1:], minlength=ncls)
+        s = np.zeros(ncls, dtype=np.int64)
+        ss = np.zeros(ncls, dtype=np.int64)
+        np.add.at(s, cls[1:], npix[1:])
+        np.add.at(ss, cls[1:], npix[1:] * npix[1:])
+        v, c = npix[1:], cls[1:]
+        lhs = (v * cc[c] - s[c]) ** 2
+        rhs = k * k * (cc[c] * ss[c] - s[c] * s[c])
+        chg = (lhs > rhs).astype(np.int64)
+        out["image_id"].extend([image_id] * n)
+        out["clump_id"].extend(range(1, n + 1))
+        out["cls"].extend(int(x) for x in c)
+        out["n_pix"].extend(int(x) for x in v)
+        out["change"].extend(int(x) for x in chg)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_CHANGE_SCHEMA)
+    return codec.map_images(images, per_image, _CHANGE_SCHEMA, dtype=np.int64)
 
 
 def select_clumps_on_grid(images: DataFrame, quant: int = 128,
@@ -980,34 +898,26 @@ def prop_valid_stats(images: DataFrame, quant: int = 128) -> DataFrame:
     exact-int division per clump over the ``value // quant``
     segmentation lattice (same labels as :func:`rat_table`)."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _PV_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                lab = _label_regions(arr // quant)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                ys, xs = np.nonzero(lab)
-                ls = lab[ys, xs]
-                valid = (arr[ys, xs] % 5 != 0).astype(np.int64)
-                npix = np.bincount(ls, minlength=n + 1)[1:]
-                nval = np.bincount(ls, weights=valid,
-                                   minlength=n + 1)[1:].astype(np.int64)
-                out["image_id"].extend([image_id] * n)
-                out["clump_id"].extend(range(1, n + 1))
-                out["n_pix"].extend(int(x) for x in npix)
-                out["n_valid"].extend(int(x) for x in nval)
-                out["prop_q"].extend(
-                    int(np.floor((float(a) / float(b)) * 1048576.0))
-                    for a, b in zip(nval, npix))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        lab = _label_regions(arr // quant)
+        n = int(lab.max())
+        if n == 0:
+            return
+        ys, xs = np.nonzero(lab)
+        ls = lab[ys, xs]
+        valid = (arr[ys, xs] % 5 != 0).astype(np.int64)
+        npix = np.bincount(ls, minlength=n + 1)[1:]
+        nval = np.bincount(ls, weights=valid,
+                           minlength=n + 1)[1:].astype(np.int64)
+        out["image_id"].extend([image_id] * n)
+        out["clump_id"].extend(range(1, n + 1))
+        out["n_pix"].extend(int(x) for x in npix)
+        out["n_valid"].extend(int(x) for x in nval)
+        out["prop_q"].extend(
+            int(np.floor((float(a) / float(b)) * 1048576.0))
+            for a, b in zip(nval, npix))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_PV_SCHEMA)
+    return codec.map_images(images, per_image, _PV_SCHEMA, dtype=np.int64)
 
 
 _MEQ_SCHEMA = StructType([
@@ -1028,38 +938,30 @@ def merge_equiv_clumps_stats(images: DataFrame,
     are the distinct q values; merged ids are dense ranks of q
     (ascending)."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _MEQ_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                q = arr // quant
-                lab = _label_regions(q)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                ys, xs = np.nonzero(lab)
-                ls = lab[ys, xs]
-                qs = q[ys, xs]
-                # q per clump (constant by construction): first pixel
-                clump_q = np.zeros(n + 1, dtype=np.int64)
-                clump_q[ls[::-1]] = qs[::-1]   # first occurrence wins
-                uq = np.unique(clump_q[1:])
-                sizes = np.bincount(ls, minlength=n + 1)[1:]
-                for mi, qv in enumerate(sorted(int(x) for x in uq),
-                                        start=1):
-                    sel = clump_q[1:] == qv
-                    out["image_id"].append(image_id)
-                    out["merged_id"].append(mi)
-                    out["q_val"].append(qv)
-                    out["n_clumps"].append(int(sel.sum()))
-                    out["n_pix"].append(int(sizes[sel].sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        q = arr // quant
+        lab = _label_regions(q)
+        n = int(lab.max())
+        if n == 0:
+            return
+        ys, xs = np.nonzero(lab)
+        ls = lab[ys, xs]
+        qs = q[ys, xs]
+        # q per clump (constant by construction): first pixel
+        clump_q = np.zeros(n + 1, dtype=np.int64)
+        clump_q[ls[::-1]] = qs[::-1]   # first occurrence wins
+        uq = np.unique(clump_q[1:])
+        sizes = np.bincount(ls, minlength=n + 1)[1:]
+        for mi, qv in enumerate(sorted(int(x) for x in uq),
+                                start=1):
+            sel = clump_q[1:] == qv
+            out["image_id"].append(image_id)
+            out["merged_id"].append(mi)
+            out["q_val"].append(qv)
+            out["n_clumps"].append(int(sel.sum()))
+            out["n_pix"].append(int(sizes[sel].sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_MEQ_SCHEMA)
+    return codec.map_images(images, per_image, _MEQ_SCHEMA, dtype=np.int64)
 
 
 _DROP_SCHEMA = StructType([
@@ -1077,31 +979,23 @@ def drop_clumps_stats(images: DataFrame, quant: int = 128,
     small units, the reference's usual selection) and densely relabel
     the survivors in ascending old-label order."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _DROP_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                lab = _label_regions(arr // quant)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                sizes = np.bincount(lab[lab > 0], minlength=n + 1)[1:]
-                new_id = 0
-                for old in range(1, n + 1):
-                    if int(sizes[old - 1]) < min_pix:
-                        continue
-                    new_id += 1
-                    out["image_id"].append(image_id)
-                    out["new_id"].append(new_id)
-                    out["old_id"].append(old)
-                    out["n_pix"].append(int(sizes[old - 1]))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        lab = _label_regions(arr // quant)
+        n = int(lab.max())
+        if n == 0:
+            return
+        sizes = np.bincount(lab[lab > 0], minlength=n + 1)[1:]
+        new_id = 0
+        for old in range(1, n + 1):
+            if int(sizes[old - 1]) < min_pix:
+                continue
+            new_id += 1
+            out["image_id"].append(image_id)
+            out["new_id"].append(new_id)
+            out["old_id"].append(old)
+            out["n_pix"].append(int(sizes[old - 1]))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_DROP_SCHEMA)
+    return codec.map_images(images, per_image, _DROP_SCHEMA, dtype=np.int64)
 
 
 # --------------------------------------------------------------------------
@@ -1139,60 +1033,51 @@ def dist_between_clumps(images: DataFrame, quant: int = 128,
     other odd-band clump in their image emit no row (the reference's
     nearest-geometry search has no target)."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _DBC_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                q = arr // quant
-                lab = _label_regions(q)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                # 8-boundary pixels: any neighbour differs (or edge)
-                pad = np.pad(lab, 1, constant_values=-1)
-                bnd = np.zeros_like(lab, dtype=bool)
-                for dx, dy in _OFFS8:
-                    bnd |= pad[1 + dy:pad.shape[0] - 1 + dy,
-                               1 + dx:pad.shape[1] - 1 + dx] != lab
-                odd = (q % 2) == 1
-                ys, xs = np.nonzero(bnd & odd)
-                if ys.size == 0:
-                    continue
-                ls = lab[ys, xs]
-                if np.unique(ls).size < 2:
-                    continue
-                # chunk the pair scan: the full matrix is O(n_bnd^2)
-                # int64 (~200 MB on a 128x128 sf0.1 image, x32 workers)
-                INF = np.int64(1) << 60
-                per_pt = np.full(ys.size, INF, dtype=np.int64)
-                for s0 in range(0, ys.size, 512):
-                    s1 = min(s0 + 512, ys.size)
-                    d2 = ((xs[s0:s1, None] - xs[None, :]) ** 2
-                          + (ys[s0:s1, None] - ys[None, :]) ** 2)
-                    d2[ls[s0:s1, None] == ls[None, :]] = INF
-                    per_pt[s0:s1] = d2.min(axis=1)
-                mn = np.full(n + 1, INF, dtype=np.int64)
-                np.minimum.at(mn, ls, per_pt)
-                npix = np.bincount(lab.ravel(), minlength=n + 1)
-                qv = np.zeros(n + 1, dtype=np.int64)
-                qv[lab[ys, xs]] = q[ys, xs]
-                for c in sorted(set(int(l) for l in ls)):
-                    sq = int(mn[c])
-                    out["image_id"].append(image_id)
-                    out["clump_id"].append(c)
-                    out["n_pix"].append(int(npix[c]))
-                    out["cls"].append(int(qv[c]))
-                    out["min_sq_px"].append(sq)
-                    out["dist_deg"].append(
-                        float(np.sqrt(np.float64(sq)) * np.float64(res)))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        q = arr // quant
+        lab = _label_regions(q)
+        n = int(lab.max())
+        if n == 0:
+            return
+        # 8-boundary pixels: any neighbour differs (or edge)
+        pad = np.pad(lab, 1, constant_values=-1)
+        bnd = np.zeros_like(lab, dtype=bool)
+        for dx, dy in _OFFS8:
+            bnd |= pad[1 + dy:pad.shape[0] - 1 + dy,
+                       1 + dx:pad.shape[1] - 1 + dx] != lab
+        odd = (q % 2) == 1
+        ys, xs = np.nonzero(bnd & odd)
+        if ys.size == 0:
+            return
+        ls = lab[ys, xs]
+        if np.unique(ls).size < 2:
+            return
+        # chunk the pair scan: the full matrix is O(n_bnd^2)
+        # int64 (~200 MB on a 128x128 sf0.1 image, x32 workers)
+        INF = np.int64(1) << 60
+        per_pt = np.full(ys.size, INF, dtype=np.int64)
+        for s0 in range(0, ys.size, 512):
+            s1 = min(s0 + 512, ys.size)
+            d2 = ((xs[s0:s1, None] - xs[None, :]) ** 2
+                  + (ys[s0:s1, None] - ys[None, :]) ** 2)
+            d2[ls[s0:s1, None] == ls[None, :]] = INF
+            per_pt[s0:s1] = d2.min(axis=1)
+        mn = np.full(n + 1, INF, dtype=np.int64)
+        np.minimum.at(mn, ls, per_pt)
+        npix = np.bincount(lab.ravel(), minlength=n + 1)
+        qv = np.zeros(n + 1, dtype=np.int64)
+        qv[lab[ys, xs]] = q[ys, xs]
+        for c in sorted(set(int(l) for l in ls)):
+            sq = int(mn[c])
+            out["image_id"].append(image_id)
+            out["clump_id"].append(c)
+            out["n_pix"].append(int(npix[c]))
+            out["cls"].append(int(qv[c]))
+            out["min_sq_px"].append(sq)
+            out["dist_deg"].append(
+                float(np.sqrt(np.float64(sq)) * np.float64(res)))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_DBC_SCHEMA)
+    return codec.map_images(images, per_image, _DBC_SCHEMA, dtype=np.int64)
 
 
 _DTC_SCHEMA = StructType([
@@ -1216,33 +1101,25 @@ def dist_to_classes(images: DataFrame, k: int = 4) -> DataFrame:
     d2 <= 256; per (image, class) the count of within-range pixels
     (class pixels at d2=0 included), their d2 sum and max."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _DTC_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                rc = (arr * k) // pmax
-                for c in range(k):
-                    m = rc == c
-                    n_src = int(m.sum())
-                    if n_src == 0:
-                        continue
-                    dt = _sq_edt(m)
-                    within = dt <= DTC_CAP_SQ
-                    out["image_id"].append(image_id)
-                    out["cls"].append(c)
-                    out["n_src"].append(n_src)
-                    out["n_within"].append(int(within.sum()))
-                    out["sum_d2"].append(int(dt[within].sum()))
-                    out["max_d2"].append(int(dt[within].max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr, fmt):
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        rc = (arr * k) // pmax
+        for c in range(k):
+            m = rc == c
+            n_src = int(m.sum())
+            if n_src == 0:
+                continue
+            dt = _sq_edt(m)
+            within = dt <= DTC_CAP_SQ
+            out["image_id"].append(image_id)
+            out["cls"].append(c)
+            out["n_src"].append(n_src)
+            out["n_within"].append(int(within.sum()))
+            out["sum_d2"].append(int(dt[within].sum()))
+            out["max_d2"].append(int(dt[within].max()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_DTC_SCHEMA)
+    return codec.map_images(images, per_image, _DTC_SCHEMA,
+                            extra_cols=("fmt",), dtype=np.int64)
 
 
 _UID_SCHEMA = StructType([
@@ -1260,30 +1137,21 @@ def rat_uid_rows(images: DataFrame, quant: int = 128) -> DataFrame:
     row-major encounter, identical to the oracle's
     row_number-over-root cid).  Base rows for take_random_sample."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _UID_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                q = arr // quant
-                lab = _label_regions(q)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                npix = np.bincount(lab.ravel(), minlength=n + 1)
-                ys, xs = np.nonzero(lab >= 1)
-                qv = np.zeros(n + 1, dtype=np.int64)
-                qv[lab[ys, xs]] = q[ys, xs]
-                for c in range(1, n + 1):
-                    out["image_id"].append(image_id)
-                    out["clump_id"].append(c)
-                    out["uid"].append(c - 1)
-                    out["cls"].append(int(qv[c]))
-                    out["n_pix"].append(int(npix[c]))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        q = arr // quant
+        lab = _label_regions(q)
+        n = int(lab.max())
+        if n == 0:
+            return
+        npix = np.bincount(lab.ravel(), minlength=n + 1)
+        ys, xs = np.nonzero(lab >= 1)
+        qv = np.zeros(n + 1, dtype=np.int64)
+        qv[lab[ys, xs]] = q[ys, xs]
+        for c in range(1, n + 1):
+            out["image_id"].append(image_id)
+            out["clump_id"].append(c)
+            out["uid"].append(c - 1)
+            out["cls"].append(int(qv[c]))
+            out["n_pix"].append(int(npix[c]))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_UID_SCHEMA)
+    return codec.map_images(images, per_image, _UID_SCHEMA, dtype=np.int64)

@@ -121,39 +121,31 @@ def polygonize_bboxes(images: DataFrame, threshold: int) -> DataFrame:
     reference's raster-attribute-table rows (rastergis §2.5).
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {k: [] for k in ("image_id", "clump_id", "n_pix",
-                                   "bxmin", "bxmax", "bymin", "bymax")}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h), str(fmt))
-                lab = label_components(arr.astype(np.int64) >= threshold)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                ys, xs = np.nonzero(lab)
-                ls = lab[ys, xs]
-                npix = np.bincount(ls, minlength=n + 1)[1:]
-                bxmin = np.full(n + 1, 1 << 30, np.int64)
-                bymin = np.full(n + 1, 1 << 30, np.int64)
-                bxmax = np.full(n + 1, -1, np.int64)
-                bymax = np.full(n + 1, -1, np.int64)
-                np.minimum.at(bxmin, ls, xs)
-                np.minimum.at(bymin, ls, ys)
-                np.maximum.at(bxmax, ls, xs)
-                np.maximum.at(bymax, ls, ys)
-                out["image_id"].extend([image_id] * n)
-                out["clump_id"].extend(range(1, n + 1))
-                out["n_pix"].extend(int(v) for v in npix)
-                out["bxmin"].extend(int(v) for v in bxmin[1:])
-                out["bxmax"].extend(int(v) + 1 for v in bxmax[1:])
-                out["bymin"].extend(int(v) for v in bymin[1:])
-                out["bymax"].extend(int(v) + 1 for v in bymax[1:])
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        lab = label_components(arr.astype(np.int64) >= threshold)
+        n = int(lab.max())
+        if n == 0:
+            return
+        ys, xs = np.nonzero(lab)
+        ls = lab[ys, xs]
+        npix = np.bincount(ls, minlength=n + 1)[1:]
+        bxmin = np.full(n + 1, 1 << 30, np.int64)
+        bymin = np.full(n + 1, 1 << 30, np.int64)
+        bxmax = np.full(n + 1, -1, np.int64)
+        bymax = np.full(n + 1, -1, np.int64)
+        np.minimum.at(bxmin, ls, xs)
+        np.minimum.at(bymin, ls, ys)
+        np.maximum.at(bxmax, ls, xs)
+        np.maximum.at(bymax, ls, ys)
+        out["image_id"].extend([image_id] * n)
+        out["clump_id"].extend(range(1, n + 1))
+        out["n_pix"].extend(int(v) for v in npix)
+        out["bxmin"].extend(int(v) for v in bxmin[1:])
+        out["bxmax"].extend(int(v) + 1 for v in bxmax[1:])
+        out["bymin"].extend(int(v) for v in bymin[1:])
+        out["bymax"].extend(int(v) + 1 for v in bymax[1:])
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_CLUMP_SCHEMA)
+    return codec.map_images(images, per_image, _CLUMP_SCHEMA)
 
 
 _TILED_SCHEMA = StructType([

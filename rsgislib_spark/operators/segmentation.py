@@ -35,7 +35,6 @@ an Exchange.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
@@ -94,23 +93,15 @@ def kmeans_centres(images: DataFrame, k: int = 4,
     n_pix = 0.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _KM_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                c, cls = kmeans_values(arr, k=k, iters=iters)
-                npix = np.bincount(cls, minlength=k)
-                out["image_id"].extend([image_id] * k)
-                out["cls"].extend(range(k))
-                out["centre"].extend(int(v) for v in c)
-                out["n_pix"].extend(int(v) for v in npix)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        c, cls = kmeans_values(arr, k=k, iters=iters)
+        npix = np.bincount(cls, minlength=k)
+        out["image_id"].extend([image_id] * k)
+        out["cls"].extend(range(k))
+        out["centre"].extend(int(v) for v in c)
+        out["n_pix"].extend(int(v) for v in npix)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_KM_SCHEMA)
+    return codec.map_images(images, per_image, _KM_SCHEMA, dtype=np.int64)
 
 
 _SEG_SCHEMA = StructType([
@@ -130,33 +121,25 @@ def shepherd_segments(images: DataFrame, k: int = 4,
     order (identical convention to ``rastergis.rat_table``).
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SEG_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                _c, cls = kmeans_values(arr, k=k, iters=iters)
-                plane = cls.reshape(arr.shape)
-                lab = _label_regions(plane)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                flat_lab, flat_q = lab.ravel(), plane.ravel()
-                npix = np.bincount(flat_lab, minlength=n + 1)[1:]
-                first = np.full(n + 1, flat_lab.size, dtype=np.int64)
-                np.minimum.at(first, flat_lab,
-                              np.arange(flat_lab.size, dtype=np.int64))
-                seg_cls = flat_q[first[1:]]
-                out["image_id"].extend([image_id] * n)
-                out["seg_id"].extend(range(1, n + 1))
-                out["cls"].extend(int(v) for v in seg_cls)
-                out["n_pix"].extend(int(v) for v in npix)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        _c, cls = kmeans_values(arr, k=k, iters=iters)
+        plane = cls.reshape(arr.shape)
+        lab = _label_regions(plane)
+        n = int(lab.max())
+        if n == 0:
+            return
+        flat_lab, flat_q = lab.ravel(), plane.ravel()
+        npix = np.bincount(flat_lab, minlength=n + 1)[1:]
+        first = np.full(n + 1, flat_lab.size, dtype=np.int64)
+        np.minimum.at(first, flat_lab,
+                      np.arange(flat_lab.size, dtype=np.int64))
+        seg_cls = flat_q[first[1:]]
+        out["image_id"].extend([image_id] * n)
+        out["seg_id"].extend(range(1, n + 1))
+        out["cls"].extend(int(v) for v in seg_cls)
+        out["n_pix"].extend(int(v) for v in npix)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SEG_SCHEMA)
+    return codec.map_images(images, per_image, _SEG_SCHEMA, dtype=np.int64)
 
 
 _ELIM_SCHEMA = StructType([
@@ -191,63 +174,55 @@ def eliminate_small_segments(images: DataFrame, quant: int = 128,
     final size of that label's merged group.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _ELIM_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                lab = _label_regions(arr // quant)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                npix0 = np.bincount(lab[lab > 0], minlength=n + 1)
-                pa, pb = [], []
-                a, b = lab[:, :-1], lab[:, 1:]
-                sel = (a > 0) & (b > 0) & (a != b)
-                pa.append(a[sel]); pb.append(b[sel])
-                a, b = lab[:-1, :], lab[1:, :]
-                sel = (a > 0) & (b > 0) & (a != b)
-                pa.append(a[sel]); pb.append(b[sel])
-                if any(x.size for x in pa):
-                    ca = np.concatenate(pa + pb).astype(np.int64)
-                    cb = np.concatenate(pb + pa).astype(np.int64)
-                else:
-                    ca = cb = np.zeros(0, dtype=np.int64)
-                cur = np.arange(n + 1, dtype=np.int64)
-                for _ in range(rounds):
-                    s = np.zeros(n + 1, dtype=np.int64)
-                    np.add.at(s, cur[1:], npix0[1:])
-                    A, B = cur[ca], cur[cb]
-                    keep = A != B
-                    A, B = A[keep], B[keep]
-                    if A.size == 0:
-                        break
-                    code = np.unique(A * (n + 1) + B)
-                    A, B = code // (n + 1), code % (n + 1)
-                    elig = (s[A] < min_pix) & \
-                        ((s[B] > s[A]) | ((s[B] == s[A]) & (B < A)))
-                    A, B = A[elig], B[elig]
-                    if A.size == 0:
-                        break
-                    order = np.lexsort((B, -s[B], A))
-                    first = np.ones(order.shape, dtype=bool)
-                    first[1:] = A[order][1:] != A[order][:-1]
-                    mp = np.arange(n + 1, dtype=np.int64)
-                    mp[A[order][first]] = B[order][first]
-                    cur = mp[cur]
-                s = np.zeros(n + 1, dtype=np.int64)
-                np.add.at(s, cur[1:], npix0[1:])
-                out["image_id"].extend([image_id] * n)
-                out["seg_id"].extend(range(1, n + 1))
-                out["n_pix"].extend(int(v) for v in npix0[1:])
-                out["new_label"].extend(int(v) for v in cur[1:])
-                out["new_size"].extend(int(v) for v in s[cur[1:]])
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        lab = _label_regions(arr // quant)
+        n = int(lab.max())
+        if n == 0:
+            return
+        npix0 = np.bincount(lab[lab > 0], minlength=n + 1)
+        pa, pb = [], []
+        a, b = lab[:, :-1], lab[:, 1:]
+        sel = (a > 0) & (b > 0) & (a != b)
+        pa.append(a[sel]); pb.append(b[sel])
+        a, b = lab[:-1, :], lab[1:, :]
+        sel = (a > 0) & (b > 0) & (a != b)
+        pa.append(a[sel]); pb.append(b[sel])
+        if any(x.size for x in pa):
+            ca = np.concatenate(pa + pb).astype(np.int64)
+            cb = np.concatenate(pb + pa).astype(np.int64)
+        else:
+            ca = cb = np.zeros(0, dtype=np.int64)
+        cur = np.arange(n + 1, dtype=np.int64)
+        for _ in range(rounds):
+            s = np.zeros(n + 1, dtype=np.int64)
+            np.add.at(s, cur[1:], npix0[1:])
+            A, B = cur[ca], cur[cb]
+            keep = A != B
+            A, B = A[keep], B[keep]
+            if A.size == 0:
+                break
+            code = np.unique(A * (n + 1) + B)
+            A, B = code // (n + 1), code % (n + 1)
+            elig = (s[A] < min_pix) & \
+                ((s[B] > s[A]) | ((s[B] == s[A]) & (B < A)))
+            A, B = A[elig], B[elig]
+            if A.size == 0:
+                break
+            order = np.lexsort((B, -s[B], A))
+            first = np.ones(order.shape, dtype=bool)
+            first[1:] = A[order][1:] != A[order][:-1]
+            mp = np.arange(n + 1, dtype=np.int64)
+            mp[A[order][first]] = B[order][first]
+            cur = mp[cur]
+        s = np.zeros(n + 1, dtype=np.int64)
+        np.add.at(s, cur[1:], npix0[1:])
+        out["image_id"].extend([image_id] * n)
+        out["seg_id"].extend(range(1, n + 1))
+        out["n_pix"].extend(int(v) for v in npix0[1:])
+        out["new_label"].extend(int(v) for v in cur[1:])
+        out["new_size"].extend(int(v) for v in s[cur[1:]])
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_ELIM_SCHEMA)
+    return codec.map_images(images, per_image, _ELIM_SCHEMA, dtype=np.int64)
 
 
 _UNION_SCHEMA = StructType([
@@ -272,36 +247,29 @@ def union_clumps(images: DataFrame) -> DataFrame:
     ``ClumpVal_`` RAT columns (val_a, val_b).
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _UNION_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                qa = arr // 128
-                qb = ((arr * 7 + 3) % pmax) // 256
-                q = qa * 16 + qb
-                lab = _label_regions(q)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                flat_lab, flat_q = lab.ravel(), q.ravel()
-                npix = np.bincount(flat_lab, minlength=n + 1)[1:]
-                first = np.full(n + 1, flat_lab.size, dtype=np.int64)
-                np.minimum.at(first, flat_lab,
-                              np.arange(flat_lab.size, dtype=np.int64))
-                cls = flat_q[first[1:]]
-                out["image_id"].extend([image_id] * n)
-                out["clump_id"].extend(range(1, n + 1))
-                out["n_pix"].extend(int(v) for v in npix)
-                out["val_a"].extend(int(v) for v in cls // 16)
-                out["val_b"].extend(int(v) for v in cls % 16)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr, fmt):
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        qa = arr // 128
+        qb = ((arr * 7 + 3) % pmax) // 256
+        q = qa * 16 + qb
+        lab = _label_regions(q)
+        n = int(lab.max())
+        if n == 0:
+            return
+        flat_lab, flat_q = lab.ravel(), q.ravel()
+        npix = np.bincount(flat_lab, minlength=n + 1)[1:]
+        first = np.full(n + 1, flat_lab.size, dtype=np.int64)
+        np.minimum.at(first, flat_lab,
+                      np.arange(flat_lab.size, dtype=np.int64))
+        cls = flat_q[first[1:]]
+        out["image_id"].extend([image_id] * n)
+        out["clump_id"].extend(range(1, n + 1))
+        out["n_pix"].extend(int(v) for v in npix)
+        out["val_a"].extend(int(v) for v in cls // 16)
+        out["val_b"].extend(int(v) for v in cls % 16)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_UNION_SCHEMA)
+    return codec.map_images(images, per_image, _UNION_SCHEMA,
+                            extra_cols=("fmt",), dtype=np.int64)
 
 
 _MEAN_SCHEMA = StructType([
@@ -321,31 +289,23 @@ def segment_means(images: DataFrame, quant: int = 128) -> DataFrame:
     exact integers, so the exact-hash gate passes.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _MEAN_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                lab = _label_regions(arr // quant)
-                n = int(lab.max())
-                if n == 0:
-                    continue
-                flat_lab, flat_v = lab.ravel(), arr.ravel()
-                npix = np.bincount(flat_lab, minlength=n + 1)[1:]
-                sums = np.zeros(n + 1, dtype=np.int64)
-                np.add.at(sums, flat_lab, flat_v)
-                out["image_id"].extend([image_id] * n)
-                out["clump_id"].extend(range(1, n + 1))
-                out["n_pix"].extend(int(v) for v in npix)
-                out["sum_val"].extend(int(v) for v in sums[1:])
-                out["mean_val"].extend(int(s) / int(c)
-                                       for s, c in zip(sums[1:], npix))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        lab = _label_regions(arr // quant)
+        n = int(lab.max())
+        if n == 0:
+            return
+        flat_lab, flat_v = lab.ravel(), arr.ravel()
+        npix = np.bincount(flat_lab, minlength=n + 1)[1:]
+        sums = np.zeros(n + 1, dtype=np.int64)
+        np.add.at(sums, flat_lab, flat_v)
+        out["image_id"].extend([image_id] * n)
+        out["clump_id"].extend(range(1, n + 1))
+        out["n_pix"].extend(int(v) for v in npix)
+        out["sum_val"].extend(int(v) for v in sums[1:])
+        out["mean_val"].extend(int(s) / int(c)
+                               for s, c in zip(sums[1:], npix))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_MEAN_SCHEMA)
+    return codec.map_images(images, per_image, _MEAN_SCHEMA, dtype=np.int64)
 
 
 _ISO_SCHEMA = StructType([
@@ -438,23 +398,15 @@ def isodata_centres(images: DataFrame, **kw) -> DataFrame:
     """Per-image deterministic-ISODATA classes: one row per final
     class with its centre and population (empty classes report 0)."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _ISO_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                centres, cls = isodata_values(arr, **kw)
-                npix = np.bincount(cls, minlength=centres.size)
-                out["image_id"].extend([image_id] * centres.size)
-                out["cls"].extend(range(centres.size))
-                out["centre"].extend(int(v) for v in centres)
-                out["n_pix"].extend(int(v) for v in npix)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        centres, cls = isodata_values(arr, **kw)
+        npix = np.bincount(cls, minlength=centres.size)
+        out["image_id"].extend([image_id] * centres.size)
+        out["cls"].extend(range(centres.size))
+        out["centre"].extend(int(v) for v in centres)
+        out["n_pix"].extend(int(v) for v in npix)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_ISO_SCHEMA)
+    return codec.map_images(images, per_image, _ISO_SCHEMA, dtype=np.int64)
 
 
 SLIC_S = 8          # superpixel grid step
@@ -504,64 +456,55 @@ def slic_superpixels(images: DataFrame, s: int = SLIC_S, m: int = SLIC_M,
         raise ValueError("slic_superpixels needs iters >= 1")
     reach = 2 * s       # search window |dx|, |dy| <= 2s, as in the oracle
 
-    def segmentation_slic(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SLIC_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                w, h = int(w), int(h)
-                v = codec.decode_image(bytes(buf), w, h, str(fmt)) \
-                    .astype(np.int64)
-                gx, gy = w // s, h // s
-                if gx == 0 or gy == 0:
-                    continue
-                jj, ii = np.meshgrid(np.arange(gx), np.arange(gy))
-                cx = (jj * s + s // 2).ravel().astype(np.int64)
-                cy = (ii * s + s // 2).ravel().astype(np.int64)
-                cv = v[cy, cx]
-                px, py = np.meshgrid(np.arange(w, dtype=np.int64),
-                                     np.arange(h, dtype=np.int64))
-                px, py, pv = px.ravel(), py.ravel(), v.ravel()
-                nk = cx.size
-                bestk = None
-                for _ in range(iters):
-                    best = np.full(px.size, np.iinfo(np.int64).max,
-                                   dtype=np.int64)
-                    bestk = np.full(px.size, -1, dtype=np.int64)
-                    for k in range(nk):
-                        dx = px - cx[k]
-                        dy = py - cy[k]
-                        win = (np.abs(dx) <= reach) \
-                            & (np.abs(dy) <= reach)
-                        dv = pv - cv[k]
-                        d2 = m * m * (dx * dx + dy * dy) + s * s * dv * dv
-                        upd = win & (d2 < best)
-                        best[upd] = d2[upd]
-                        bestk[upd] = k
-                    for k in range(nk):
-                        mem = bestk == k
-                        n = int(mem.sum())
-                        if n > 0:
-                            cx[k] = int(px[mem].sum()) // n
-                            cy[k] = int(py[mem].sum()) // n
-                            cv[k] = int(pv[mem].sum()) // n
-                for k in range(nk):
-                    mem = bestk == k
-                    n = int(mem.sum())
-                    if n == 0:
-                        continue
-                    out["image_id"].append(image_id)
-                    out["k"].append(k)
-                    out["n_pix"].append(n)
-                    out["cx"].append(int(cx[k]))
-                    out["cy"].append(int(cy[k]))
-                    out["cv"].append(int(cv[k]))
-                    out["px_ck"].append(int((py[mem] * w + px[mem]).sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        h, w = v.shape
+        gx, gy = w // s, h // s
+        if gx == 0 or gy == 0:
+            return
+        jj, ii = np.meshgrid(np.arange(gx), np.arange(gy))
+        cx = (jj * s + s // 2).ravel().astype(np.int64)
+        cy = (ii * s + s // 2).ravel().astype(np.int64)
+        cv = v[cy, cx]
+        px, py = np.meshgrid(np.arange(w, dtype=np.int64),
+                             np.arange(h, dtype=np.int64))
+        px, py, pv = px.ravel(), py.ravel(), v.ravel()
+        nk = cx.size
+        bestk = None
+        for _ in range(iters):
+            best = np.full(px.size, np.iinfo(np.int64).max,
+                           dtype=np.int64)
+            bestk = np.full(px.size, -1, dtype=np.int64)
+            for k in range(nk):
+                dx = px - cx[k]
+                dy = py - cy[k]
+                win = (np.abs(dx) <= reach) \
+                    & (np.abs(dy) <= reach)
+                dv = pv - cv[k]
+                d2 = m * m * (dx * dx + dy * dy) + s * s * dv * dv
+                upd = win & (d2 < best)
+                best[upd] = d2[upd]
+                bestk[upd] = k
+            for k in range(nk):
+                mem = bestk == k
+                n = int(mem.sum())
+                if n > 0:
+                    cx[k] = int(px[mem].sum()) // n
+                    cy[k] = int(py[mem].sum()) // n
+                    cv[k] = int(pv[mem].sum()) // n
+        for k in range(nk):
+            mem = bestk == k
+            n = int(mem.sum())
+            if n == 0:
+                continue
+            out["image_id"].append(image_id)
+            out["k"].append(k)
+            out["n_pix"].append(n)
+            out["cx"].append(int(cx[k]))
+            out["cy"].append(int(cy[k]))
+            out["cv"].append(int(cv[k]))
+            out["px_ck"].append(int((py[mem] * w + px[mem]).sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(segmentation_slic, schema=_SLIC_SCHEMA)
+    return codec.map_images(images, per_image, _SLIC_SCHEMA, dtype=np.int64)
 
 
 QS_DENS_WIN = 2     # density window (Chebyshev radius, 5x5)
@@ -612,73 +555,64 @@ def quickshift_segments(images: DataFrame) -> DataFrame:
     """
     from ..functions.detmath import exp_np
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _QS_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                w, h = int(w), int(h)
-                v = codec.decode_image(bytes(buf), w, h, str(fmt)) \
-                    .astype(np.int64)
-                dens = np.zeros((h, w), dtype=np.int64)
-                for dy in range(-QS_DENS_WIN, QS_DENS_WIN + 1):
-                    for dx in range(-QS_DENS_WIN, QS_DENS_WIN + 1):
-                        ys0, ys1 = max(0, -dy), min(h, h - dy)
-                        xs0, xs1 = max(0, -dx), min(w, w - dx)
-                        dv = (v[ys0 + dy:ys1 + dy, xs0 + dx:xs1 + dx]
-                              - v[ys0:ys1, xs0:xs1])
-                        d2 = QS_SPACE_W * (dx * dx + dy * dy) + dv * dv
-                        arg = np.maximum(
-                            0.0 - (d2.astype(np.float64) / QS_SIGMA2X2),
-                            -700.0)
-                        dens[ys0:ys1, xs0:xs1] += np.floor(
-                            exp_np(arg) * QS_QSCALE).astype(np.int64)
-                pid = (np.arange(h, dtype=np.int64)[:, None] * w
-                       + np.arange(w, dtype=np.int64)[None, :])
-                best_d2 = np.full((h, w), np.iinfo(np.int64).max,
-                                  dtype=np.int64)
-                best_pid = np.full((h, w), -1, dtype=np.int64)
-                for dy in range(-QS_LINK_WIN, QS_LINK_WIN + 1):
-                    for dx in range(-QS_LINK_WIN, QS_LINK_WIN + 1):
-                        if dx == 0 and dy == 0:
-                            continue
-                        ys0, ys1 = max(0, -dy), min(h, h - dy)
-                        xs0, xs1 = max(0, -dx), min(w, w - dx)
-                        nb = (slice(ys0 + dy, ys1 + dy),
-                              slice(xs0 + dx, xs1 + dx))
-                        me = (slice(ys0, ys1), slice(xs0, xs1))
-                        dv = v[nb] - v[me]
-                        d2 = QS_SPACE_W * (dx * dx + dy * dy) + dv * dv
-                        cand = dens[nb] > dens[me]
-                        better = cand & (
-                            (d2 < best_d2[me])
-                            | ((d2 == best_d2[me])
-                               & (pid[nb] < best_pid[me])))
-                        bd, bp = best_d2[me], best_pid[me]
-                        bd[better] = d2[better]
-                        bp[better] = pid[nb][better]
-                        best_d2[me], best_pid[me] = bd, bp
-                parent = np.where(best_pid >= 0, best_pid, pid).ravel()
-                while True:
-                    gp = parent[parent]
-                    if (gp == parent).all():
-                        break
-                    parent = gp
-                roots, inv, counts = np.unique(
-                    parent, return_inverse=True, return_counts=True)
-                cks = np.zeros(roots.size, dtype=np.int64)
-                np.add.at(cks, inv, pid.ravel())
-                for si in range(roots.size):
-                    out["image_id"].append(image_id)
-                    out["seg_id"].append(si + 1)
-                    out["root"].append(int(roots[si]))
-                    out["n_pix"].append(int(counts[si]))
-                    out["px_ck"].append(int(cks[si]))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        h, w = v.shape
+        dens = np.zeros((h, w), dtype=np.int64)
+        for dy in range(-QS_DENS_WIN, QS_DENS_WIN + 1):
+            for dx in range(-QS_DENS_WIN, QS_DENS_WIN + 1):
+                ys0, ys1 = max(0, -dy), min(h, h - dy)
+                xs0, xs1 = max(0, -dx), min(w, w - dx)
+                dv = (v[ys0 + dy:ys1 + dy, xs0 + dx:xs1 + dx]
+                      - v[ys0:ys1, xs0:xs1])
+                d2 = QS_SPACE_W * (dx * dx + dy * dy) + dv * dv
+                arg = np.maximum(
+                    0.0 - (d2.astype(np.float64) / QS_SIGMA2X2),
+                    -700.0)
+                dens[ys0:ys1, xs0:xs1] += np.floor(
+                    exp_np(arg) * QS_QSCALE).astype(np.int64)
+        pid = (np.arange(h, dtype=np.int64)[:, None] * w
+               + np.arange(w, dtype=np.int64)[None, :])
+        best_d2 = np.full((h, w), np.iinfo(np.int64).max,
+                          dtype=np.int64)
+        best_pid = np.full((h, w), -1, dtype=np.int64)
+        for dy in range(-QS_LINK_WIN, QS_LINK_WIN + 1):
+            for dx in range(-QS_LINK_WIN, QS_LINK_WIN + 1):
+                if dx == 0 and dy == 0:
+                    continue
+                ys0, ys1 = max(0, -dy), min(h, h - dy)
+                xs0, xs1 = max(0, -dx), min(w, w - dx)
+                nb = (slice(ys0 + dy, ys1 + dy),
+                      slice(xs0 + dx, xs1 + dx))
+                me = (slice(ys0, ys1), slice(xs0, xs1))
+                dv = v[nb] - v[me]
+                d2 = QS_SPACE_W * (dx * dx + dy * dy) + dv * dv
+                cand = dens[nb] > dens[me]
+                better = cand & (
+                    (d2 < best_d2[me])
+                    | ((d2 == best_d2[me])
+                       & (pid[nb] < best_pid[me])))
+                bd, bp = best_d2[me], best_pid[me]
+                bd[better] = d2[better]
+                bp[better] = pid[nb][better]
+                best_d2[me], best_pid[me] = bd, bp
+        parent = np.where(best_pid >= 0, best_pid, pid).ravel()
+        while True:
+            gp = parent[parent]
+            if (gp == parent).all():
+                break
+            parent = gp
+        roots, inv, counts = np.unique(
+            parent, return_inverse=True, return_counts=True)
+        cks = np.zeros(roots.size, dtype=np.int64)
+        np.add.at(cks, inv, pid.ravel())
+        for si in range(roots.size):
+            out["image_id"].append(image_id)
+            out["seg_id"].append(si + 1)
+            out["root"].append(int(roots[si]))
+            out["n_pix"].append(int(counts[si]))
+            out["px_ck"].append(int(cks[si]))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_QS_SCHEMA)
+    return codec.map_images(images, per_image, _QS_SCHEMA, dtype=np.int64)
 
 
 WS_ROUNDS = 48      # oracle relaxation unroll (margin pytest: <= 40)
@@ -718,33 +652,24 @@ def watershed_basins(images: DataFrame) -> DataFrame:
     """
     from .leastcost import block_costs
 
-    def gen(it):
-        for pdf in it:
-            out = {"image_id": [], "basin": [], "n_cells": [],
-                   "cell_ck": [], "marker_c": []}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                c = block_costs(codec.decode_image(
-                    bytes(buf), int(w), int(h), str(fmt))
-                    .astype(np.int64))
-                key, gh, gw = _ws_relax(c)
-                m = np.where(key < _WS_INF, key % _WS_PACK,
-                             np.int64(-1)).ravel()
-                fid = np.arange(gh * gw, dtype=np.int64)
-                basins, inv, counts = np.unique(
-                    m, return_inverse=True, return_counts=True)
-                cks = np.zeros(basins.size, dtype=np.int64)
-                np.add.at(cks, inv, fid)
-                for bi in range(basins.size):
-                    b = int(basins[bi])
-                    out["image_id"].append(image_id)
-                    out["basin"].append(b)
-                    out["n_cells"].append(int(counts[bi]))
-                    out["cell_ck"].append(int(cks[bi]))
-                    out["marker_c"].append(
-                        int(c.ravel()[b]) if b >= 0 else None)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        c = block_costs(v)
+        key, gh, gw = _ws_relax(c)
+        m = np.where(key < _WS_INF, key % _WS_PACK,
+                     np.int64(-1)).ravel()
+        fid = np.arange(gh * gw, dtype=np.int64)
+        basins, inv, counts = np.unique(
+            m, return_inverse=True, return_counts=True)
+        cks = np.zeros(basins.size, dtype=np.int64)
+        np.add.at(cks, inv, fid)
+        for bi in range(basins.size):
+            b = int(basins[bi])
+            out["image_id"].append(image_id)
+            out["basin"].append(b)
+            out["n_cells"].append(int(counts[bi]))
+            out["cell_ck"].append(int(cks[bi]))
+            out["marker_c"].append(
+                int(c.ravel()[b]) if b >= 0 else None)
 
     schema = StructType([
         StructField("image_id", StringType()),
@@ -753,8 +678,7 @@ def watershed_basins(images: DataFrame) -> DataFrame:
         StructField("cell_ck", LongType()),
         StructField("marker_c", LongType()),
     ])
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=schema)
+    return codec.map_images(images, per_image, schema, dtype=np.int64)
 
 
 def _ws_relax(c: np.ndarray, max_rounds: int | None = None):
@@ -827,23 +751,14 @@ def felzenszwalb_segments(images: DataFrame, k: int = FH_K) -> DataFrame:
     """
     from .leastcost import block_costs
 
-    def gen(it):
-        for pdf in it:
-            out = {"image_id": [], "root": [], "n_cells": [],
-                   "cell_ck": [], "int_max": []}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                c = block_costs(codec.decode_image(
-                    bytes(buf), int(w), int(h), str(fmt))
-                    .astype(np.int64))
-                roots, nc, ck, im = _fh_run(c, k)
-                out["image_id"].extend([image_id] * len(roots))
-                out["root"].extend(roots)
-                out["n_cells"].extend(nc)
-                out["cell_ck"].extend(ck)
-                out["int_max"].extend(im)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        c = block_costs(v)
+        roots, nc, ck, im = _fh_run(c, k)
+        out["image_id"].extend([image_id] * len(roots))
+        out["root"].extend(roots)
+        out["n_cells"].extend(nc)
+        out["cell_ck"].extend(ck)
+        out["int_max"].extend(im)
 
     schema = StructType([
         StructField("image_id", StringType()),
@@ -852,8 +767,7 @@ def felzenszwalb_segments(images: DataFrame, k: int = FH_K) -> DataFrame:
         StructField("cell_ck", LongType()),
         StructField("int_max", LongType()),
     ])
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=schema)
+    return codec.map_images(images, per_image, schema, dtype=np.int64)
 
 
 def _fh_run(c: np.ndarray, k: int):
@@ -945,70 +859,61 @@ def random_walker_basins(images: DataFrame,
     from ..functions.detmath import exp_np
     from .leastcost import block_costs
 
-    def gen(it):
-        for pdf in it:
-            out = {"image_id": [], "n_cells": [], "n_a": [], "n_b": [],
-                   "seed_a": [], "seed_b": [], "pot_ck": []}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                c = block_costs(codec.decode_image(
-                    bytes(buf), int(w), int(h), str(fmt))
-                    .astype(np.int64))
-                gh, gw = c.shape
-                cf = c.ravel()
-                sa = int(np.argmin(cf))         # first min -> lowest fid
-                sb = int(np.argmax(cf))         # first max -> lowest fid
-                if sa == sb:
-                    continue
-                # edge weight to each of the 4 neighbours (0 outside)
-                wgt = {}
-                for tag, dy, dx in (("N", -1, 0), ("S", 1, 0),
-                                    ("W", 0, -1), ("E", 0, 1)):
-                    g = np.zeros((gh, gw), dtype=np.float64)
-                    ys0, ys1 = max(0, -dy), min(gh, gh - dy)
-                    xs0, xs1 = max(0, -dx), min(gw, gw - dx)
-                    me = (slice(ys0, ys1), slice(xs0, xs1))
-                    nb = (slice(ys0 + dy, ys1 + dy),
-                          slice(xs0 + dx, xs1 + dx))
-                    dv = (c[nb] - c[me]).astype(np.float64)
-                    arg = np.maximum(
-                        0.0 - ((dv * dv) / RW_BETA_DEN), -700.0)
-                    g[me] = exp_np(arg)
-                    wgt[tag] = g
-                x = np.zeros((gh, gw), dtype=np.float64)
-                x.ravel()[sa] = 1.0
-                seeds = np.zeros((gh, gw), dtype=bool)
-                seeds.ravel()[[sa, sb]] = True
+    def per_image(out, image_id, v):
+        c = block_costs(v)
+        gh, gw = c.shape
+        cf = c.ravel()
+        sa = int(np.argmin(cf))         # first min -> lowest fid
+        sb = int(np.argmax(cf))         # first max -> lowest fid
+        if sa == sb:
+            return
+        # edge weight to each of the 4 neighbours (0 outside)
+        wgt = {}
+        for tag, dy, dx in (("N", -1, 0), ("S", 1, 0),
+                            ("W", 0, -1), ("E", 0, 1)):
+            g = np.zeros((gh, gw), dtype=np.float64)
+            ys0, ys1 = max(0, -dy), min(gh, gh - dy)
+            xs0, xs1 = max(0, -dx), min(gw, gw - dx)
+            me = (slice(ys0, ys1), slice(xs0, xs1))
+            nb = (slice(ys0 + dy, ys1 + dy),
+                  slice(xs0 + dx, xs1 + dx))
+            dv = (c[nb] - c[me]).astype(np.float64)
+            arg = np.maximum(
+                0.0 - ((dv * dv) / RW_BETA_DEN), -700.0)
+            g[me] = exp_np(arg)
+            wgt[tag] = g
+        x = np.zeros((gh, gw), dtype=np.float64)
+        x.ravel()[sa] = 1.0
+        seeds = np.zeros((gh, gw), dtype=bool)
+        seeds.ravel()[[sa, sb]] = True
 
-                def shift(a, dy, dx):
-                    o = np.zeros_like(a)
-                    ys0, ys1 = max(0, -dy), min(gh, gh - dy)
-                    xs0, xs1 = max(0, -dx), min(gw, gw - dx)
-                    o[ys0:ys1, xs0:xs1] = a[ys0 + dy:ys1 + dy,
-                                            xs0 + dx:xs1 + dx]
-                    return o
+        def shift(a, dy, dx):
+            o = np.zeros_like(a)
+            ys0, ys1 = max(0, -dy), min(gh, gh - dy)
+            xs0, xs1 = max(0, -dx), min(gw, gw - dx)
+            o[ys0:ys1, xs0:xs1] = a[ys0 + dy:ys1 + dy,
+                                    xs0 + dx:xs1 + dx]
+            return o
 
-                for _ in range(rounds):
-                    num = wgt["N"] * shift(x, -1, 0)
-                    num = num + wgt["S"] * shift(x, 1, 0)
-                    num = num + wgt["W"] * shift(x, 0, -1)
-                    num = num + wgt["E"] * shift(x, 0, 1)
-                    den = wgt["N"] + wgt["S"]
-                    den = den + wgt["W"]
-                    den = den + wgt["E"]
-                    xn = num / den
-                    x = np.where(seeds, x, xn)
-                lab_a = x > 0.5
-                pot = np.floor(x * RW_POT_Q).astype(np.int64)
-                out["image_id"].append(image_id)
-                out["n_cells"].append(gh * gw)
-                out["n_a"].append(int(lab_a.sum()))
-                out["n_b"].append(int(gh * gw - lab_a.sum()))
-                out["seed_a"].append(sa)
-                out["seed_b"].append(sb)
-                out["pot_ck"].append(int(pot.sum()))
-            yield pd.DataFrame(out)
+        for _ in range(rounds):
+            num = wgt["N"] * shift(x, -1, 0)
+            num = num + wgt["S"] * shift(x, 1, 0)
+            num = num + wgt["W"] * shift(x, 0, -1)
+            num = num + wgt["E"] * shift(x, 0, 1)
+            den = wgt["N"] + wgt["S"]
+            den = den + wgt["W"]
+            den = den + wgt["E"]
+            xn = num / den
+            x = np.where(seeds, x, xn)
+        lab_a = x > 0.5
+        pot = np.floor(x * RW_POT_Q).astype(np.int64)
+        out["image_id"].append(image_id)
+        out["n_cells"].append(gh * gw)
+        out["n_a"].append(int(lab_a.sum()))
+        out["n_b"].append(int(gh * gw - lab_a.sum()))
+        out["seed_a"].append(sa)
+        out["seed_b"].append(sb)
+        out["pot_ck"].append(int(pot.sum()))
 
     schema = StructType([
         StructField("image_id", StringType()),
@@ -1019,5 +924,4 @@ def random_walker_basins(images: DataFrame,
         StructField("seed_b", LongType()),
         StructField("pot_ck", LongType()),
     ])
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=schema)
+    return codec.map_images(images, per_image, schema, dtype=np.int64)

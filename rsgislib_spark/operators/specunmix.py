@@ -18,7 +18,6 @@ first-win tie rule (smallest A1, then A2 — the C++ loop order) are
 bit-exact across engines with no sqrt anywhere).
 """
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
@@ -55,34 +54,26 @@ def exh_unmix_stats(images: DataFrame) -> DataFrame:
     e1, e2 = EM_SPECTRA
     S = UNMIX_STEPS
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _EXH_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                s1, s2 = v.ravel(), v[:, ::-1].ravel()
-                # dists: (n_combos, n_pix) exact ints; argmin axis=0
-                # returns the FIRST minimum = the C++ loop-order winner
-                d = np.stack([
-                    (S * s1 - a1 * e1[0] - a2 * e2[0]) ** 2
-                    + (S * s2 - a1 * e1[1] - a2 * e2[1]) ** 2
-                    for a1, a2 in _COMBOS])
-                k = d.argmin(axis=0)
-                a1 = np.array([c[0] for c in _COMBOS], dtype=np.int64)[k]
-                a2 = np.array([c[1] for c in _COMBOS], dtype=np.int64)[k]
-                sse = d[k, np.arange(d.shape[1])]
-                out["image_id"].append(image_id)
-                out["n_pix"].append(int(s1.size))
-                out["sum_a1"].append(int(a1.sum()))
-                out["sum_a2"].append(int(a2.sum()))
-                out["sum_sse"].append(int(sse.sum()))
-                out["n_full"].append(int((a1 + a2 == S).sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        s1, s2 = v.ravel(), v[:, ::-1].ravel()
+        # dists: (n_combos, n_pix) exact ints; argmin axis=0
+        # returns the FIRST minimum = the C++ loop-order winner
+        d = np.stack([
+            (S * s1 - a1 * e1[0] - a2 * e2[0]) ** 2
+            + (S * s2 - a1 * e1[1] - a2 * e2[1]) ** 2
+            for a1, a2 in _COMBOS])
+        k = d.argmin(axis=0)
+        a1 = np.array([c[0] for c in _COMBOS], dtype=np.int64)[k]
+        a2 = np.array([c[1] for c in _COMBOS], dtype=np.int64)[k]
+        sse = d[k, np.arange(d.shape[1])]
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(s1.size))
+        out["sum_a1"].append(int(a1.sum()))
+        out["sum_a2"].append(int(a2.sum()))
+        out["sum_sse"].append(int(sse.sum()))
+        out["n_full"].append(int((a1 + a2 == S).sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_EXH_SCHEMA)
+    return codec.map_images(images, per_image, _EXH_SCHEMA, dtype=np.int64)
 
 
 _AVG_SCHEMA = StructType([
@@ -103,35 +94,28 @@ def avg_endmember_stats(images: DataFrame) -> DataFrame:
     (class plane = b1 quartile, the classification convention); one
     exact-int division per mean, -1 sentinel for empty classes."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _AVG_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                m = v[:, ::-1]
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                cls = (v * 4) // pmax
-                for c in range(4):
-                    sel = cls == c
-                    n = int(sel.sum())
-                    sb1, sb2 = int(v[sel].sum()), int(m[sel].sum())
-                    out["image_id"].append(image_id)
-                    out["cls"].append(c)
-                    out["n_pix"].append(n)
-                    out["sum_b1"].append(sb1)
-                    out["sum_b2"].append(sb2)
-                    out["mean_b1_q"].append(
-                        -1 if n == 0 else
-                        int(np.floor((float(sb1) / float(n)) * _Q)))
-                    out["mean_b2_q"].append(
-                        -1 if n == 0 else
-                        int(np.floor((float(sb2) / float(n)) * _Q)))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt):
+        m = v[:, ::-1]
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        cls = (v * 4) // pmax
+        for c in range(4):
+            sel = cls == c
+            n = int(sel.sum())
+            sb1, sb2 = int(v[sel].sum()), int(m[sel].sum())
+            out["image_id"].append(image_id)
+            out["cls"].append(c)
+            out["n_pix"].append(n)
+            out["sum_b1"].append(sb1)
+            out["sum_b2"].append(sb2)
+            out["mean_b1_q"].append(
+                -1 if n == 0 else
+                int(np.floor((float(sb1) / float(n)) * _Q)))
+            out["mean_b2_q"].append(
+                -1 if n == 0 else
+                int(np.floor((float(sb2) / float(n)) * _Q)))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_AVG_SCHEMA)
+    return codec.map_images(images, per_image, _AVG_SCHEMA,
+                            extra_cols=("fmt",), dtype=np.int64)
 
 
 # --------------------------------------------------------------------------
@@ -174,30 +158,23 @@ def ppi_counts(images: DataFrame, n_proj: int = PPI_NPROJ) -> DataFrame:
     One Arrow pass, zero shuffles.
     """
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _PPI_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                w, h = int(w), int(h)
-                v = codec.decode_image(bytes(buf), w, h,
-                                       str(fmt)).astype(np.int64).ravel()
-                pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-                bands = [v, (v * 7 + 3) % pmax, (v * 13 + 5) % pmax]
-                counts = {}
-                for k in range(n_proj):
-                    s = sum(ppi_proj(k, b) * bands[b] for b in range(3))
-                    imin = int(np.argmin(s))
-                    imax = int(np.argmax(s))
-                    counts[imin] = counts.get(imin, 0) + 1
-                    counts[imax] = counts.get(imax, 0) + 1
-                for idx in sorted(counts):
-                    out["image_id"].append(image_id)
-                    out["x"].append(idx % w)
-                    out["y"].append(idx // w)
-                    out["ppi_count"].append(counts[idx])
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v, fmt):
+        _, w = v.shape
+        v = v.ravel()
+        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        bands = [v, (v * 7 + 3) % pmax, (v * 13 + 5) % pmax]
+        counts = {}
+        for k in range(n_proj):
+            s = sum(ppi_proj(k, b) * bands[b] for b in range(3))
+            imin = int(np.argmin(s))
+            imax = int(np.argmax(s))
+            counts[imin] = counts.get(imin, 0) + 1
+            counts[imax] = counts.get(imax, 0) + 1
+        for idx in sorted(counts):
+            out["image_id"].append(image_id)
+            out["x"].append(idx % w)
+            out["y"].append(idx // w)
+            out["ppi_count"].append(counts[idx])
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_PPI_SCHEMA)
+    return codec.map_images(images, per_image, _PPI_SCHEMA,
+                            extra_cols=("fmt",), dtype=np.int64)

@@ -30,7 +30,6 @@ non-triviality witness), ``sum_q`` / ``min_q`` / ``max_q`` of the
 quantized plane.
 """
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
@@ -140,22 +139,14 @@ def window_texture_stats(images: DataFrame, kind: str,
     if size % 2 == 0:
         raise ValueError("size must be odd")
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SF_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                arr = codec.decode_image(bytes(buf), int(w), int(h),
-                                         str(fmt)).astype(np.int64)
-                q, guard = _texture_plane(arr, kind, size)
-                q = q.ravel()
-                out["image_id"].append(image_id)
-                out["n_interior"].append(int(q.size))
-                out["n_guard"].append(int(guard.sum()))
-                out["sum_q"].append(int(q.sum()) if q.size else 0)
-                out["min_q"].append(int(q.min()) if q.size else 0)
-                out["max_q"].append(int(q.max()) if q.size else 0)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        q, guard = _texture_plane(arr, kind, size)
+        q = q.ravel()
+        out["image_id"].append(image_id)
+        out["n_interior"].append(int(q.size))
+        out["n_guard"].append(int(guard.sum()))
+        out["sum_q"].append(int(q.sum()) if q.size else 0)
+        out["min_q"].append(int(q.min()) if q.size else 0)
+        out["max_q"].append(int(q.max()) if q.size else 0)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SF_SCHEMA)
+    return codec.map_images(images, per_image, _SF_SCHEMA, dtype=np.int64)

@@ -126,6 +126,14 @@ def token_count(docs: DataFrame, text: str = "text") -> DataFrame:
         F.expr(f"CAST(length({text}) AS BIGINT)").alias("n_chars_tot"))
 
 
+def _ascii_code(ch: str):
+    """Code point of ``ch``; raises for a non-ASCII character, which
+    would overflow the base-256 gram pack (the DuckDB twin raises too)."""
+    code = F.ascii(ch).cast("long")
+    return F.when(code < 128, code).otherwise(F.raise_error(
+        F.concat(F.lit("non-ASCII character in gram text: "), F.col(ch))))
+
+
 def winnow_fingerprints(docs: DataFrame, k: int = 8, w: int = 4,
                         text: str = "text") -> DataFrame:
     """Winnowing document fingerprints (rolling-hash selection).
@@ -170,7 +178,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 8, w: int = 4,
                  .alias("pos0", "ch"))
          .select("doc_id", "_ng",
                  (F.col("pos0") + 1).alias("pos"),
-                 F.ascii("ch").cast("long").alias("code")))
+                 _ascii_code("ch").alias("code")))
     ord_win = "OVER (PARTITION BY doc_id ORDER BY pos)"
     pack = " + ".join(
         f"lead(code, {i}) {ord_win} * {256 ** (k - 1 - i)}L"

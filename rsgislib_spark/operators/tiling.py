@@ -252,15 +252,12 @@ def _window_sums(plane: np.ndarray, width: int, height: int, overlap: int,
     return ys, xs, (ry @ plane @ rx.T).astype(np.int64).ravel()
 
 
-def _columns(batch, names):
-    return zip(*(batch.column(c).to_pylist() for c in names))
-
-
 def _synth_planes(batch):
     """``(plane, fmt)`` per (id, w, h, fmt) row of an Arrow batch: the
     payload synthesized, encoded and decoded again -- the plane
     ``tile_pixels(synth.attach_bytes(...))`` sees."""
-    for img_id, w, h, fmt in _columns(batch, _PAYLOAD_INPUTS):
+    for img_id, w, h, fmt in zip(*(batch.column(c).to_pylist()
+                                   for c in _PAYLOAD_INPUTS)):
         buf = codec.encode_image(synth.pixel_array(img_id, w, h, fmt), fmt)
         yield codec.decode_image(buf, w, h, fmt), fmt
 
@@ -315,15 +312,13 @@ def tile_pixels(images: DataFrame, width: int, height: int,
 
     def tiling_tile_pixels(batches):
         for batch in batches:
-            planes = ((codec.decode_image(buf, w, h, fmt), fmt)
-                      for buf, w, h, fmt in _columns(
-                          batch, ("bytes", "w", "h", "fmt")))
+            planes = ((plane, fmt)
+                      for _, plane, fmt in codec.planes(batch, "fmt"))
             yield _tile_batch(batch, planes, tw, th, ov, TILE_PIXEL_SCHEMA,
                               encode)
 
-    cols = [c for c in ("image_id", "bytes", "w", "h", "fmt") if c in images.columns]
-    return images.select(*cols).mapInArrow(tiling_tile_pixels,
-                                           schema=TILE_PIXEL_SCHEMA)
+    return images.select(*codec.IMAGE_COLS).mapInArrow(
+        tiling_tile_pixels, schema=TILE_PIXEL_SCHEMA)
 
 
 def tile_checksums_fused(meta: DataFrame, width: int, height: int,

@@ -20,7 +20,6 @@ pytest invariants assert the planted outliers are flagged and clean
 steps are not.
 """
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
@@ -99,36 +98,27 @@ _TMASK_SCHEMA = StructType([
 
 
 def tmask_stats(images: DataFrame) -> DataFrame:
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _TMASK_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                w, h = int(w), int(h)
-                v = codec.decode_image(bytes(buf), w, h, str(fmt)) \
-                    .astype(np.int64)
-                t = np.arange(TMASK_T, dtype=np.int64)
-                days = 16.0 * t
-                for i in range(SAMPLE_PX):
-                    x = (i * 7 + 3) % w
-                    y = (i * 11 + 5) % h
-                    v0 = int(v[y, x])
-                    g, nir, swir, cloud, shadow = _series(
-                        np.int64(v0), t)
-                    dg = _rlm_delta(days, g)
-                    dn = _rlm_delta(days, nir)
-                    ds = _rlm_delta(days, swir)
-                    flagged = ~((dg < TMASK_THRES)
-                                & ((dn > -TMASK_THRES)
-                                   | (ds > -TMASK_THRES)))
-                    planted = cloud | shadow
-                    out["image_id"].append(image_id)
-                    out["px"].append(i)
-                    out["n_flagged"].append(int(flagged.sum()))
-                    out["n_planted"].append(int(planted.sum()))
-                    out["n_hits"].append(int((flagged & planted).sum()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        h, w = v.shape
+        t = np.arange(TMASK_T, dtype=np.int64)
+        days = 16.0 * t
+        for i in range(SAMPLE_PX):
+            x = (i * 7 + 3) % w
+            y = (i * 11 + 5) % h
+            v0 = int(v[y, x])
+            g, nir, swir, cloud, shadow = _series(
+                np.int64(v0), t)
+            dg = _rlm_delta(days, g)
+            dn = _rlm_delta(days, nir)
+            ds = _rlm_delta(days, swir)
+            flagged = ~((dg < TMASK_THRES)
+                        & ((dn > -TMASK_THRES)
+                           | (ds > -TMASK_THRES)))
+            planted = cloud | shadow
+            out["image_id"].append(image_id)
+            out["px"].append(i)
+            out["n_flagged"].append(int(flagged.sum()))
+            out["n_planted"].append(int(planted.sum()))
+            out["n_hits"].append(int((flagged & planted).sum()))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_TMASK_SCHEMA)
+    return codec.map_images(images, per_image, _TMASK_SCHEMA, dtype=np.int64)

@@ -214,7 +214,7 @@ def warp_img_stats(images: DataFrame, epsg: int = 27700, out_w: int = 24,
     bilinear = kernel == "bilinear"
     schema = _BL_SCHEMA if bilinear else _NN_SCHEMA
 
-    def gen(it):
+    def warp_img_stats(it):
         for pdf in it:
             n = len(pdf)
             if n == 0:
@@ -233,12 +233,9 @@ def warp_img_stats(images: DataFrame, epsg: int = 27700, out_w: int = 24,
             })
             out = {f.name: [] for f in schema.fields}
             kw = np.arange(K, dtype=np.int64) + 1  # position weights
-            for i, (image_id, buf, w, h, fmt) in enumerate(zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"])):
-                w, h = int(w), int(h)
-                arr = codec.decode_image(bytes(buf), w, h,
-                                         str(fmt)).astype(np.int64)
+            for i, (image_id, arr) in enumerate(
+                    codec.planes(pdf, dtype=np.int64)):
+                h, w = arr.shape
                 sl = slice(i * K, (i + 1) * K)
                 out["image_id"].append(image_id)
                 if bilinear:
@@ -274,4 +271,5 @@ def warp_img_stats(images: DataFrame, epsg: int = 27700, out_w: int = 24,
             yield pd.DataFrame(out)
 
     return images.select("image_id", "bytes", "w", "h", "fmt",
-                         "lon", "lat").mapInPandas(gen, schema=schema)
+                         "lon", "lat").mapInPandas(warp_img_stats,
+                                                   schema=schema)

@@ -29,7 +29,6 @@ Per-pixel outputs are 2^20-quantized to ints BEFORE the per-image
 aggregation so the final sums are exact.  Windows are interior-only.
 """
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
@@ -84,28 +83,20 @@ def mahal_neighbour_stats(images: DataFrame) -> DataFrame:
     """mahalanobis_dist_filter, winSize=3: one row per image with the
     2^20-quantized window mean/median summed and global min/max."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                c = v[1:-1, 1:-1]
-                d2 = [(s - c) ** 2 for s in _interior_shifts(v, NEIGH_OFFSETS)]
-                sd2 = _chain_sum(d2)              # exact int
-                nz = _chain_sum([(t == 0).astype(np.int64) for t in d2])
-                cov = sd2.astype(np.float64) + nz.astype(np.float64) * 0.001
-                s = [np.sqrt(t.astype(np.float64) / cov) for t in d2]
-                mean = _chain_sum(s) / 8.0
-                srt = np.sort(np.stack(s, axis=0), axis=0)
-                med = (srt[3] + srt[4]) * 0.5
-                mn, mx = srt[0], srt[7]
-                _agg_row(out, image_id, mean, med, mn, mx)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        c = v[1:-1, 1:-1]
+        d2 = [(s - c) ** 2 for s in _interior_shifts(v, NEIGH_OFFSETS)]
+        sd2 = _chain_sum(d2)              # exact int
+        nz = _chain_sum([(t == 0).astype(np.int64) for t in d2])
+        cov = sd2.astype(np.float64) + nz.astype(np.float64) * 0.001
+        s = [np.sqrt(t.astype(np.float64) / cov) for t in d2]
+        mean = _chain_sum(s) / 8.0
+        srt = np.sort(np.stack(s, axis=0), axis=0)
+        med = (srt[3] + srt[4]) * 0.5
+        mn, mx = srt[0], srt[7]
+        _agg_row(out, image_id, mean, med, mn, mx)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SCHEMA)
+    return codec.map_images(images, per_image, _SCHEMA, dtype=np.int64)
 
 
 def mahal_to_image_stats(images: DataFrame) -> DataFrame:
@@ -113,30 +104,22 @@ def mahal_to_image_stats(images: DataFrame) -> DataFrame:
     window pixels to the global mean under the global covariance,
     dist^2 = (v*n - S)^2 / (n*(n*S2 - S^2)) — exact integer operands."""
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                v = codec.decode_image(bytes(buf), int(w), int(h),
-                                       str(fmt)).astype(np.int64)
-                n = int(v.size)
-                S = int(v.sum())
-                S2 = int((v * v).sum())
-                den = n * (n * S2 - S * S)
-                if den == 0:  # GSL inversion failure branch: all zeros
-                    zero = np.zeros((v.shape[0] - 2) * (v.shape[1] - 2))
-                    _agg_row(out, image_id, zero, zero, zero, zero)
-                    continue
-                num = (v * n - S) ** 2
-                dist = np.sqrt(num.astype(np.float64) / float(den))
-                s = _interior_shifts(dist, WIN_OFFSETS)
-                mean = _chain_sum(s) / 9.0
-                srt = np.sort(np.stack(s, axis=0), axis=0)
-                med = srt[4]
-                mn, mx = srt[0], srt[8]
-                _agg_row(out, image_id, mean, med, mn, mx)
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, v):
+        n = int(v.size)
+        S = int(v.sum())
+        S2 = int((v * v).sum())
+        den = n * (n * S2 - S * S)
+        if den == 0:  # GSL inversion failure branch: all zeros
+            zero = np.zeros((v.shape[0] - 2) * (v.shape[1] - 2))
+            _agg_row(out, image_id, zero, zero, zero, zero)
+            return
+        num = (v * n - S) ** 2
+        dist = np.sqrt(num.astype(np.float64) / float(den))
+        s = _interior_shifts(dist, WIN_OFFSETS)
+        mean = _chain_sum(s) / 9.0
+        srt = np.sort(np.stack(s, axis=0), axis=0)
+        med = srt[4]
+        mn, mx = srt[0], srt[8]
+        _agg_row(out, image_id, mean, med, mn, mx)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_SCHEMA)
+    return codec.map_images(images, per_image, _SCHEMA, dtype=np.int64)

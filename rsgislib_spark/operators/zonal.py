@@ -57,6 +57,14 @@ _PARTIAL_SCHEMA = StructType([
 ])
 
 
+def _image_groups(pdf, dtype=np.int64):
+    """``(image_id, plane, rows)`` per image of a batch of (image, zone)
+    pair rows: each image is decoded once for all of its rows."""
+    for image_id, rows in pdf.groupby("image_id", sort=False):
+        _, plane = next(codec.planes(rows.iloc[:1], dtype=dtype))
+        yield image_id, plane, rows
+
+
 def _pair_partials(pdf_iter, res_deg: float, min_thres: float,
                    max_thres: float, nodata, membership: str = "center"):
     """mapInPandas kernel: decode each image once, emit one partial row per
@@ -95,11 +103,9 @@ def _pair_partials(pdf_iter, res_deg: float, min_thres: float,
     for pdf in pdf_iter:
         rows = {k: [] for k in ("zone_id", "image_id", "n", "s", "ss",
                                 "mn", "mx", "hist")}
-        for img_id_key, grp in pdf.groupby("image_id", sort=False):
+        for img_id_key, arr, grp in _image_groups(pdf):
             r0 = grp.iloc[0]
-            w, h = int(r0["w"]), int(r0["h"])
-            arr = codec.decode_image(bytes(r0["bytes"]), w, h,
-                                     str(r0["fmt"])).astype(np.int64)
+            h, w = arr.shape
             tlx = float(r0["xmin"])
             tly = float(r0["ymax"])
             cx = tlx + (np.arange(w) + 0.5) * res_deg          # pixel centers
@@ -307,15 +313,13 @@ def zonal_stats_poly(
         F.col("image_id"),
         F.pmod(F.xxhash64(F.col(poly_key)), F.lit(int(n_salt))))
 
-    def gen(it):
+    def zonal_poly_pairs(it):
         for pdf in it:
             rows = {"zone_id": [], "image_id": [], "n": [], "s": [],
                     "ss": [], "mn": [], "mx": [], "hist": []}
-            for img_id_key, grp in pdf.groupby("image_id", sort=False):
+            for img_id_key, arr, grp in _image_groups(pdf):
                 r0 = grp.iloc[0]
-                w, h = int(r0["w"]), int(r0["h"])
-                arr = codec.decode_image(bytes(r0["bytes"]), w, h,
-                                         str(r0["fmt"])).astype(np.int64)
+                h, w = arr.shape
                 cx = float(r0["xmin"]) + (np.arange(w) + 0.5) * res_deg
                 cy = float(r0["ymax"]) - (np.arange(h) + 0.5) * res_deg
                 gx, gy = np.meshgrid(cx, cy)
@@ -341,7 +345,7 @@ def zonal_stats_poly(
             if rows["zone_id"]:
                 yield pd.DataFrame(rows)
 
-    partials = work.mapInPandas(gen, schema=_PARTIAL_SCHEMA)
+    partials = work.mapInPandas(zonal_poly_pairs, schema=_PARTIAL_SCHEMA)
     stats = partials.select("zone_id", "hist").groupBy("zone_id") \
         .applyInPandas(_hist_finalize, schema=_FINAL_SCHEMA)
     out = polys.select(F.col(poly_key).alias("zone_id")) \
@@ -413,15 +417,13 @@ def zonal_stats_weighted(
         F.col("image_id"),
         F.pmod(F.xxhash64(F.col("zone_id")), F.lit(int(n_salt))))
 
-    def gen(it):
+    def zonal_weighted_pairs(it):
         for pdf in it:
             rows = {k: [] for k in ("zone_id", "n_touched", "sum_w",
                                     "sum_wv")}
-            for img_id_key, grp in pdf.groupby("image_id", sort=False):
+            for img_id_key, arr, grp in _image_groups(pdf):
                 r0 = grp.iloc[0]
-                w, h = int(r0["w"]), int(r0["h"])
-                arr = codec.decode_image(bytes(r0["bytes"]), w, h,
-                                         str(r0["fmt"])).astype(np.int64)
+                h, w = arr.shape
                 tlx, tly = float(r0["xmin"]), float(r0["ymax"])
                 # pixel box edges (identical formula in the oracle)
                 xl = tlx + np.arange(w) * res_deg
@@ -458,7 +460,7 @@ def zonal_stats_weighted(
                     rows["sum_wv"].append(int((wq * arr).sum()))
             yield pd.DataFrame(rows)
 
-    partials = work.mapInPandas(gen, schema=_WEIGHTED_SCHEMA)
+    partials = work.mapInPandas(zonal_weighted_pairs, schema=_WEIGHTED_SCHEMA)
     return (
         partials.groupBy("zone_id")
         .agg(F.sum("n_touched").alias("n_touched"),
@@ -520,32 +522,27 @@ def mask_by_vec_stats(
                          "xmin", "ymax") \
         .join(F.broadcast(rects), "image_id", "inner")
 
-    def gen(it):
-        for pdf in it:
-            out = {k: [] for k in ("image_id", "n_in", "sum_in",
-                                   "min_in", "max_in")}
-            for row in pdf.itertuples(index=False):
-                arr = codec.decode_image(bytes(row.bytes), int(row.w),
-                                         int(row.h), str(row.fmt)) \
-                    .astype(np.int64)
-                cx = float(row.xmin) + (np.arange(int(row.w)) + 0.5) * res_deg
-                cy = float(row.ymax) - (np.arange(int(row.h)) + 0.5) * res_deg
-                mask = np.zeros((int(row.h), int(row.w)), dtype=bool)
-                for r in row.zrects:
-                    in_x = (cx >= r["zxmin"]) & (cx < r["zxmax"])
-                    in_y = (cy >= r["zymin"]) & (cy < r["zymax"])
-                    mask |= in_y[:, None] & in_x[None, :]
-                vals = arr[mask]
-                if vals.size == 0:
-                    continue
-                out["image_id"].append(row.image_id)
-                out["n_in"].append(int(vals.size))
-                out["sum_in"].append(int(vals.sum()))
-                out["min_in"].append(int(vals.min()))
-                out["max_in"].append(int(vals.max()))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr, xmin, ymax, zrects):
+        h, w = arr.shape
+        cx = float(xmin) + (np.arange(w) + 0.5) * res_deg
+        cy = float(ymax) - (np.arange(h) + 0.5) * res_deg
+        mask = np.zeros((h, w), dtype=bool)
+        for r in zrects:
+            in_x = (cx >= r["zxmin"]) & (cx < r["zxmax"])
+            in_y = (cy >= r["zymin"]) & (cy < r["zymax"])
+            mask |= in_y[:, None] & in_x[None, :]
+        vals = arr[mask]
+        if vals.size == 0:
+            return
+        out["image_id"].append(image_id)
+        out["n_in"].append(int(vals.size))
+        out["sum_in"].append(int(vals.sum()))
+        out["min_in"].append(int(vals.min()))
+        out["max_in"].append(int(vals.max()))
 
-    return work.mapInPandas(gen, schema=_MASKVEC_SCHEMA)
+    return codec.map_images(work, per_image, _MASKVEC_SCHEMA,
+                            extra_cols=("xmin", "ymax", "zrects"),
+                            dtype=np.int64)
 
 
 _EXTRACT_SCHEMA = StructType([
@@ -612,13 +609,11 @@ def extract_point_values(
     ).repartition(F.col("image_id"),
                   F.pmod(F.xxhash64(F.col("pt_id")), F.lit(8)))
 
-    def gen(it):
+    def zonal_point_values(it):
         for pdf in it:
             out = {"pt_id": [], "image_id": [], "pix_val": []}
-            for img_id_key, grp in pdf.groupby("image_id", sort=False):
+            for img_id_key, arr, grp in _image_groups(pdf, dtype=None):
                 r0 = grp.iloc[0]
-                arr = codec.decode_image(bytes(r0["bytes"]), int(r0["w"]),
-                                         int(r0["h"]), str(r0["fmt"]))
                 sx = np.floor((grp["_plon"].to_numpy()
                                - float(r0["xmin"])) / res_deg).astype(np.int64)
                 sy = np.floor((float(r0["ymax"])
@@ -632,7 +627,7 @@ def extract_point_values(
                     float(v) for v in arr[sy, sx].astype(np.float64))
             yield pd.DataFrame(out)
 
-    sampled = work.mapInPandas(gen, schema=_EXTRACT_SCHEMA)
+    sampled = work.mapInPandas(zonal_point_values, schema=_EXTRACT_SCHEMA)
     return (
         pts.join(sampled, "pt_id", "left")
         .fillna({"pix_val": out_no_data_val})
@@ -684,11 +679,11 @@ def _zonal_stats_raw(
         F.col("image_id"),
         F.pmod(F.xxhash64(F.col("zone_id")), F.lit(int(n_salt))))
 
-    partials = work.mapInPandas(
-        lambda it: _pair_partials(it, res_deg, min_thres, max_thres, nodata,
-                                  membership),
-        schema=_PARTIAL_SCHEMA,
-    )
+    def zonal_pair_partials(it):
+        return _pair_partials(it, res_deg, min_thres, max_thres, nodata,
+                              membership)
+
+    partials = work.mapInPandas(zonal_pair_partials, schema=_PARTIAL_SCHEMA)
 
     # phase 3: ONE shuffle — per-zone histogram merge; every statistic
     # (moments included) finalizes from the exact bounded histogram.

@@ -321,7 +321,7 @@ def _px_partitions(spark, sf_dir, mod: int,
                    rows_per_task: int = 128) -> int:
     """Task count for a payload (two chained Python stages) subset.
 
-    Measured on this box (BENCH.md r3): the encode+decode pipeline pays
+    Measured at local[32]: the encode+decode pipeline pays
     two Python-runner launches per task, so small subsets at core-count
     tasks are launch-bound — 1053 images ran 1.3 s at 32 tasks vs
     0.74 s at 8.  Target ~128 wide rows per task for codec-cheap

@@ -2,9 +2,9 @@
 
 Tuned for the Arrow-UDF-heavy workload this engine runs: AQE on (runtime
 coalescing + skew-join splitting), Arrow batches sized so a batch of
-decoded images stays comfortably in executor memory, and a shuffle
-partition count appropriate for local[32] testing (cluster deployments
-override via spark-submit --conf; nothing here is cluster-size specific).
+decoded images stays comfortably in executor memory.  Core count, shuffle
+partitions and driver heap follow one sizing rule, :func:`host_defaults`
+(cluster deployments override via spark-submit --conf).
 """
 
 from __future__ import annotations
@@ -14,12 +14,23 @@ import re
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "TABLES"]
+__all__ = ["get_spark", "host_defaults", "TABLES"]
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
+
+
+def host_defaults() -> tuple[int, str]:
+    """``(cores, driver heap)`` sized to this host: the CPUs this process
+    may run on, and half of physical memory.  ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_DRIVER_MEM`` override them for a deployment."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    cpus = int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = os.environ.get("SPARK_DRIVER_MEM", f"{phys // 2 // 2**20}m")
+    return cpus, heap
 
 
 def get_spark(app: str = "rsgislib_spark", master: str | None = None,
@@ -35,9 +46,8 @@ def get_spark(app: str = "rsgislib_spark", master: str | None = None,
     # the environment BEFORE the JVM starts (workers inherit it).
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or (
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-    )
+    cpus, driver_mem = host_defaults()
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
     # plain local[N] runs with task maxFailures = 1, so ONE crashed
     # Python worker (the rare wedged-channel sibling, observed ~1 in
     # thousands of tasks on this guest) aborts the whole job; the
@@ -45,8 +55,7 @@ def get_spark(app: str = "rsgislib_spark", master: str | None = None,
     if re.fullmatch(r"local\[[0-9*]+\]", master):
         master = master[:-1] + ", 4]"
     if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(cpus) if cpus and cpus.isdigit() else 32
+        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.appName(app)
         .master(master)
@@ -63,7 +72,7 @@ def get_spark(app: str = "rsgislib_spark", master: str | None = None,
         # near the core count (see synth_images/tile callers).
         .config("spark.python.worker.reuse", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # measured on this box (BENCH.md): binary-payload rows make big
+        # measured at local[32]: binary-payload rows make big
         # Arrow batches ~100 MB; at 32 concurrent workers those huge
         # transient allocations collapse throughput ~6x (mmap/TLB
         # churn).  512-row batches (~7 MB) keep every parallelism level
@@ -81,7 +90,7 @@ def get_spark(app: str = "rsgislib_spark", master: str | None = None,
         .config("spark.speculation.multiplier", "4")
         .config("spark.speculation.quantile", "0.7")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "20g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )

@@ -32,7 +32,6 @@ push down to the scan at 10^12 rows.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -62,32 +61,24 @@ def chip_extract(images: DataFrame, mask_value: int = 42,
     """
     k = 2 * half + 1
 
-    def gen(it):
-        for pdf in it:
-            out = {f.name: [] for f in _CHIP_SCHEMA.fields}
-            for image_id, buf, w, h, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                                pdf["w"], pdf["h"], pdf["fmt"]):
-                w, h = int(w), int(h)
-                if w < k or h < k:
-                    continue
-                arr = codec.decode_image(bytes(buf), w, h,
-                                         str(fmt)).astype(np.int64)
-                inner = arr[half:h - half, half:w - half]
-                cys, cxs = np.nonzero(inner == mask_value)
-                if cys.size == 0:
-                    continue
-                win = np.lib.stride_tricks.sliding_window_view(arr, (k, k))
-                chips = win[cys, cxs]            # (n, k, k)
-                out["image_id"].extend([image_id] * cys.size)
-                out["cx"].extend(int(v) for v in (cxs + half))
-                out["cy"].extend(int(v) for v in (cys + half))
-                out["chip_sum"].extend(int(v) for v in chips.sum(axis=(1, 2)))
-                out["chip_min"].extend(int(v) for v in chips.min(axis=(1, 2)))
-                out["chip_max"].extend(int(v) for v in chips.max(axis=(1, 2)))
-            yield pd.DataFrame(out)
+    def per_image(out, image_id, arr):
+        h, w = arr.shape
+        if w < k or h < k:
+            return
+        inner = arr[half:h - half, half:w - half]
+        cys, cxs = np.nonzero(inner == mask_value)
+        if cys.size == 0:
+            return
+        win = np.lib.stride_tricks.sliding_window_view(arr, (k, k))
+        chips = win[cys, cxs]            # (n, k, k)
+        out["image_id"].extend([image_id] * cys.size)
+        out["cx"].extend(int(v) for v in (cxs + half))
+        out["cy"].extend(int(v) for v in (cys + half))
+        out["chip_sum"].extend(int(v) for v in chips.sum(axis=(1, 2)))
+        out["chip_min"].extend(int(v) for v in chips.min(axis=(1, 2)))
+        out["chip_max"].extend(int(v) for v in chips.max(axis=(1, 2)))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=_CHIP_SCHEMA)
+    return codec.map_images(images, per_image, _CHIP_SCHEMA, dtype=np.int64)
 
 
 def hash_split(df: DataFrame, key: str, threshold_hex: str = "cd") -> DataFrame:

@@ -323,3 +323,90 @@ def test_png_bad_filter_type_raises():
 def test_png_data_size_mismatch_raises():
     with pytest.raises(ValueError, match="size mismatch"):
         codec.decode_png(_png(2, 2, 8, b"\x00\x01\x02\x00\x03"))
+
+
+def _image_batch(extra=None):
+    """pandas batch of (image_id, bytes, w, h, fmt[, extra]) rows, one
+    per lossless format, plus the planes decode_image gives them."""
+    import pandas as pd
+
+    rows, want = [], []
+    for k, (fmt, w, h) in enumerate((("raw8", 19, 7), ("raw16", 11, 13),
+                                     ("png", 23, 5), ("png", 8, 9))):
+        img_id = 5 + 7 * k
+        buf = codec.encode_image(pixel_array(img_id, w, h, fmt), fmt)
+        rows.append((f"img{img_id}", buf, w, h, fmt, img_id * 10))
+        want.append(codec.decode_image(buf, w, h, fmt))
+    pdf = pd.DataFrame(rows, columns=list(codec.IMAGE_COLS) + ["lon"])
+    return pdf, want
+
+
+@pytest.mark.parametrize("arrow", [False, True], ids=["pandas", "arrow"])
+@pytest.mark.parametrize("dtype", [None, np.int64])
+def test_planes_match_decode_image(arrow, dtype):
+    import pyarrow as pa
+
+    pdf, want = _image_batch()
+    batch = pa.RecordBatch.from_pandas(pdf, preserve_index=False) \
+        if arrow else pdf
+    got = list(codec.planes(batch, "lon", "fmt", dtype=dtype))
+    assert [g[0] for g in got] == list(pdf["image_id"])
+    assert [g[2] for g in got] == list(pdf["lon"])
+    assert [g[3] for g in got] == list(pdf["fmt"])
+    for (_, plane, *_), ref in zip(got, want):
+        assert plane.dtype == (ref.dtype if dtype is None else dtype)
+        assert np.array_equal(plane, ref)
+        if dtype is not None:
+            plane[0, 0] = -1          # a cast plane is a writable copy
+
+
+class _CaptureFrame:
+    """Stands in for a Spark DataFrame: records the select and the
+    mapInPandas kernel instead of planning them."""
+
+    def select(self, *cols):
+        self.cols = cols
+        return self
+
+    def mapInPandas(self, fn, schema):
+        self.fn, self.schema = fn, schema
+        return self
+
+
+def test_map_images_kernel_contract():
+    from pyspark.sql.types import (LongType, StringType, StructField,
+                                   StructType)
+
+    schema = StructType([StructField("image_id", StringType()),
+                         StructField("n_pix", LongType()),
+                         StructField("lon", LongType())])
+
+    def per_image(out, image_id, plane, lon):
+        out["image_id"].append(image_id)
+        out["n_pix"].append(int(plane.size))
+        out["lon"].append(lon)
+
+    frame = codec.map_images(_CaptureFrame(), per_image, schema,
+                             extra_cols=("lon",), dtype=np.int64)
+    assert frame.cols == codec.IMAGE_COLS + ("lon",)
+    assert frame.fn.__name__ == "test_codec_test_map_images_kernel_contract"
+    pdf, want = _image_batch()
+    empty, full = frame.fn(iter([pdf.iloc[:0], pdf]))
+    assert list(empty.columns) == schema.names and len(empty) == 0
+    assert list(full["n_pix"]) == [p.size for p in want]
+    assert list(full["lon"]) == list(pdf["lon"])
+
+
+def test_migrated_operator_plan_names_its_stage(spark, sf_dir):
+    import re
+
+    from rsgislib_spark import synth
+    from rsgislib_spark.operators.imgcalcmisc import prop_true_stats
+
+    img = synth.synth_images(spark, sf_dir, with_bytes=True,
+                             with_footprint=False).where("id % 97 = 0")
+    df = prop_true_stats(img)
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas imgcalcmisc_prop_true_stats(" in plan
+    assert not re.search(r"\bgen\(", plan)

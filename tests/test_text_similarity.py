@@ -397,3 +397,23 @@ def test_winnow_short_doc_boundary_cross_engine(spark):
     for d, n in ((1, 8), (2, 9), (3, 10), (4, 11)):
         wins = [v for (dd, _), v in got.items() if dd == d]
         assert sum(wins) == max(n - 7 - 3, 1)
+
+
+def test_winnow_non_ascii_raises_in_both_engines(spark):
+    """A code point >= 128 would wrap the base-256 int64 gram pack:
+    the engine raises instead of wrapping, as the DuckDB oracle does."""
+    import duckdb
+
+    from rsgislib_spark.operators import textops as tx
+    from rsgislib_spark.oracles import ORACLES
+
+    rows = [(1, "plain ascii text here"), (2, "café au lait tout de suite")]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    with pytest.raises(Exception, match="non-ASCII"):
+        tx.winnow_fingerprints(docs).collect()
+    assert tx.winnow_fingerprints(docs.where("doc_id = 1")).count() > 0
+    con = duckdb.connect()
+    con.sql("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    with pytest.raises(duckdb.Error):
+        con.sql(ORACLES["doc_winnow"]).fetchall()
