@@ -15,8 +15,9 @@ dialect twin so the output vertices are oracle-checkable bit-for-bit
 (every intersection point is the same IEEE-double expression in both
 engines).
 
-Scale shape: candidate pairs via the usual bbox broadcast join; the
-clip itself is per-row column math (zero shuffle).  Arbitrary convex
+Scale shape: candidate pairs via the engine's one candidate join
+(``spatial_join.cell_pairs``, grid-cell rows, bbox-refined); the clip
+itself is per-row column math (zero shuffle).  Arbitrary convex
 clip polygons reduce to the same pass-per-edge unrolling; concave
 clips need the general Weiler–Atherton walk, which the reference
 itself delegates to GEOS.
@@ -25,6 +26,8 @@ itself delegates to GEOS.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from .spatial_join import _bbox_intersects, cell_pairs
 
 __all__ = [
     "clip_rect_expr_sql",
@@ -141,6 +144,18 @@ def diff_region_exprs_sql(dialect: str, verts: str, xmin: str, xmax: str,
     return out
 
 
+_PBOX = ("pxmin", "pxmax", "pymin", "pymax")
+_RBOX = ("rxmin", "rxmax", "rymin", "rymax")
+
+
+def _poly_rect_pairs(polys: DataFrame, rects: DataFrame,
+                     res: int) -> DataFrame:
+    """Every (polygon, rect) pair whose bboxes strictly overlap, once
+    (rects broadcast)."""
+    return cell_pairs(polys, rects, _PBOX, _RBOX,
+                      _bbox_intersects(_PBOX, _RBOX), res=res)
+
+
 def overlay_intersection_rect(
     polys: DataFrame,
     rects: DataFrame,
@@ -159,28 +174,7 @@ def overlay_intersection_rect(
     empty (or degenerate, < 3 vertices) produce no rows, matching
     geopandas ``overlay`` dropping empty geometries.
     """
-    # candidate generation on the grid-cell key (equi-join Catalyst can
-    # hash/sort-merge at any layer size), bbox-refined — a raw bbox
-    # predicate would force a nested-loop join that only works while
-    # the clip layer broadcasts.  The cell res must be COARSE relative
-    # to the clip rects: polyfilling a rect explodes one row per
-    # covered cell, so fine cells square the row count (measured: the
-    # default res-12 grid blew a 432-rect layer into 5.6 M exploded
-    # rows and a 10 s join on 25 polygons; res 5 covers each in 1-4).
-    from .spatial_join import with_bbox_cells
-
-    pc = with_bbox_cells(polys, "pxmin", "pxmax", "pymin", "pymax",
-                         res=res)
-    rc = with_bbox_cells(rects, "rxmin", "rxmax", "rymin", "rymax",
-                         res=res)
-    cand = (
-        pc.join(F.broadcast(rc), "cell", "inner")
-        .where((F.col("pxmax") > F.col("rxmin"))
-               & (F.col("rxmax") > F.col("pxmin"))
-               & (F.col("pymax") > F.col("rymin"))
-               & (F.col("rymax") > F.col("pymin")))
-        .dropDuplicates([poly_key, rect_key])
-    )
+    cand = _poly_rect_pairs(polys, rects, res)
     clipped = clip_rect_expr_sql("spark", verts_col,
                                  "rxmin", "rxmax", "rymin", "rymax")
     out = cand.select(
@@ -228,18 +222,7 @@ def overlay_difference_rect(
     rects the result is per-PAIR difference — for layer-level erase by
     many rects use :func:`rect_erase`.
     """
-    from .spatial_join import with_bbox_cells
-
-    pc = with_bbox_cells(polys, "pxmin", "pxmax", "pymin", "pymax", res=res)
-    rc = with_bbox_cells(rects, "rxmin", "rxmax", "rymin", "rymax", res=res)
-    cand = (
-        pc.join(F.broadcast(rc), "cell", "inner")
-        .where((F.col("pxmax") > F.col("rxmin"))
-               & (F.col("rxmax") > F.col("pxmin"))
-               & (F.col("pymax") > F.col("rymin"))
-               & (F.col("rymax") > F.col("pymin")))
-        .dropDuplicates([poly_key, rect_key])
-    )
+    cand = _poly_rect_pairs(polys, rects, res)
     parts = diff_region_exprs_sql("spark", verts_col,
                                   "rxmin", "rxmax", "rymin", "rymax")
     part_arr = ", ".join(
@@ -258,8 +241,7 @@ def overlay_difference_rect(
     )
     rect_type = rects.schema[rect_key].dataType.simpleString()
     untouched = (
-        polys.join(cand.select(F.col(poly_key)).distinct(), poly_key,
-                   "left_anti")
+        polys.join(cand.select(poly_key), poly_key, "left_anti")
         .select(F.col(poly_key).alias("poly_id"),
                 F.expr(f"CAST(NULL AS {rect_type})").alias("rect_id"),
                 F.lit(0).cast("long").alias("part_idx"),
@@ -300,32 +282,20 @@ def rect_erase(
     Output: (base_key, part_idx, rxmin, rxmax, rymin, rymax); bases
     untouched by any erase rect emit themselves as part 1.
     """
-    from .spatial_join import with_bbox_cells
-
     bx0, bx1, by0, by1 = base_bbox
-    ex0, ex1, ey0, ey1 = erase_bbox
-    bc = with_bbox_cells(
-        base.select(F.col(base_key).alias("_bk"),
-                    F.col(bx0).alias("_bx0"), F.col(bx1).alias("_bx1"),
-                    F.col(by0).alias("_by0"), F.col(by1).alias("_by1")),
-        "_bx0", "_bx1", "_by0", "_by1", res=res)
-    ec = with_bbox_cells(
-        erase.select(F.col(ex0).alias("_ex0"), F.col(ex1).alias("_ex1"),
-                     F.col(ey0).alias("_ey0"), F.col(ey1).alias("_ey1")),
-        "_ex0", "_ex1", "_ey0", "_ey1", res=res)
+    bbox = ("_bx0", "_bx1", "_by0", "_by1")
+    ebox = ("_ex0", "_ex1", "_ey0", "_ey1")
     # clipped erase boxes per base (strict overlap only)
-    boxes = (
-        bc.join(ec, "cell", "inner")
-        .where((F.col("_bx1") > F.col("_ex0")) & (F.col("_ex1") > F.col("_bx0"))
-               & (F.col("_by1") > F.col("_ey0"))
-               & (F.col("_ey1") > F.col("_by0")))
-        .select("_bk", "_bx0", "_bx1", "_by0", "_by1",
-                F.greatest("_ex0", "_bx0").alias("_cx0"),
-                F.least("_ex1", "_bx1").alias("_cx1"),
-                F.greatest("_ey0", "_by0").alias("_cy0"),
-                F.least("_ey1", "_by1").alias("_cy1"))
-        .dropDuplicates(["_bk", "_cx0", "_cx1", "_cy0", "_cy1"])
-    )
+    boxes = cell_pairs(
+        base.select(F.col(base_key).alias("_bk"),
+                    *[F.col(c).alias(a) for c, a in zip(base_bbox, bbox)]),
+        erase.select(*[F.col(c).alias(a) for c, a in zip(erase_bbox, ebox)]),
+        bbox, ebox, _bbox_intersects(bbox, ebox), res=res, broadcast=False,
+    ).select("_bk", *bbox,
+             F.greatest("_ex0", "_bx0").alias("_cx0"),
+             F.least("_ex1", "_bx1").alias("_cx1"),
+             F.greatest("_ey0", "_by0").alias("_cy0"),
+             F.least("_ey1", "_by1").alias("_cy1"))
     # x breakpoints -> slabs [x, next_x); ONE scan of boxes (explode),
     # not four union branches re-deriving the candidate join
     bps = (
@@ -383,7 +353,7 @@ def rect_erase(
         base.select(F.col(base_key).alias("_bk"),
                     F.col(bx0).alias("rxmin"), F.col(bx1).alias("rxmax"),
                     F.col(by0).alias("rymin"), F.col(by1).alias("rymax"))
-        .join(boxes.select("_bk").distinct(), "_bk", "left_anti")
+        .join(boxes.select("_bk"), "_bk", "left_anti")
     )
     parts = gaps_before.unionByName(gaps_after).unionByName(untouched)
     w_part = Window.partitionBy("_bk").orderBy("rxmin", "rymin")
@@ -427,6 +397,27 @@ def rect_sym_difference(
     )
 
 
+def _rect_inter(a: DataFrame, b: DataFrame, a_key: str, b_key: str,
+                a_bbox, b_bbox, res: int) -> DataFrame:
+    """The pairwise A∩B intersection boxes of :func:`rect_union` and
+    :func:`rect_identity` (kind 'int', both keys, part 1)."""
+    ax0, ax1, ay0, ay1 = a_bbox
+    bx0, bx1, by0, by1 = b_bbox
+    return cell_pairs(
+        a.select(F.col(a_key).alias("_ak"), *a_bbox),
+        b.select(F.col(b_key).alias("_bk2"), *b_bbox),
+        a_bbox, b_bbox, _bbox_intersects(a_bbox, b_bbox), res=res,
+        broadcast=False,
+    ).select(F.lit("int").alias("kind"),
+             F.col("_ak").cast("long").alias("a_id"),
+             F.col("_bk2").cast("long").alias("b_id"),
+             F.greatest(ax0, bx0).alias("rxmin"),
+             F.least(ax1, bx1).alias("rxmax"),
+             F.greatest(ay0, by0).alias("rymin"),
+             F.least(ay1, by1).alias("rymax"),
+             F.lit(1).cast("long").alias("part_idx"))
+
+
 def rect_union(
     a: DataFrame,
     b: DataFrame,
@@ -442,30 +433,7 @@ def rect_union(
     pairwise A∩B intersection boxes (kind 'int', both keys) plus the
     symmetric-difference remainders (kind 'a'/'b', one key each).
     """
-    from .spatial_join import with_bbox_cells
-
-    ax0, ax1, ay0, ay1 = a_bbox
-    bx0, bx1, by0, by1 = b_bbox
-    ac = with_bbox_cells(a.select(F.col(a_key).alias("_ak"),
-                                  *[F.col(c) for c in a_bbox]),
-                         ax0, ax1, ay0, ay1, res=res)
-    bc = with_bbox_cells(b.select(F.col(b_key).alias("_bk2"),
-                                  *[F.col(c) for c in b_bbox]),
-                         bx0, bx1, by0, by1, res=res)
-    inter = (
-        ac.join(bc, "cell", "inner")
-        .where((F.col(ax1) > F.col(bx0)) & (F.col(bx1) > F.col(ax0))
-               & (F.col(ay1) > F.col(by0)) & (F.col(by1) > F.col(ay0)))
-        .dropDuplicates(["_ak", "_bk2"])
-        .select(F.lit("int").alias("kind"),
-                F.col("_ak").cast("long").alias("a_id"),
-                F.col("_bk2").cast("long").alias("b_id"),
-                F.greatest(ax0, bx0).alias("rxmin"),
-                F.least(ax1, bx1).alias("rxmax"),
-                F.greatest(ay0, by0).alias("rymin"),
-                F.least(ay1, by1).alias("rymax"),
-                F.lit(1).cast("long").alias("part_idx"))
-    )
+    inter = _rect_inter(a, b, a_key, b_key, a_bbox, b_bbox, res)
     sym = rect_sym_difference(a, b, a_key=a_key, b_key=b_key,
                               a_bbox=a_bbox, b_bbox=b_bbox, res=res)
     rest = sym.select(
@@ -493,30 +461,7 @@ def rect_identity(
     B-only pieces, so the result's coverage is exactly layer A.  One
     slab-decomposition erase pass instead of union's two.
     """
-    from .spatial_join import with_bbox_cells
-
-    ax0, ax1, ay0, ay1 = a_bbox
-    bx0, bx1, by0, by1 = b_bbox
-    ac = with_bbox_cells(a.select(F.col(a_key).alias("_ak"),
-                                  *[F.col(c) for c in a_bbox]),
-                         ax0, ax1, ay0, ay1, res=res)
-    bc = with_bbox_cells(b.select(F.col(b_key).alias("_bk2"),
-                                  *[F.col(c) for c in b_bbox]),
-                         bx0, bx1, by0, by1, res=res)
-    inter = (
-        ac.join(bc, "cell", "inner")
-        .where((F.col(ax1) > F.col(bx0)) & (F.col(bx1) > F.col(ax0))
-               & (F.col(ay1) > F.col(by0)) & (F.col(by1) > F.col(ay0)))
-        .dropDuplicates(["_ak", "_bk2"])
-        .select(F.lit("int").alias("kind"),
-                F.col("_ak").cast("long").alias("a_id"),
-                F.col("_bk2").cast("long").alias("b_id"),
-                F.greatest(ax0, bx0).alias("rxmin"),
-                F.least(ax1, bx1).alias("rxmax"),
-                F.greatest(ay0, by0).alias("rymin"),
-                F.least(ay1, by1).alias("rymax"),
-                F.lit(1).cast("long").alias("part_idx"))
-    )
+    inter = _rect_inter(a, b, a_key, b_key, a_bbox, b_bbox, res)
     a_only = rect_erase(
         a.select(F.col(a_key).alias("base_id"),
                  F.col(a_bbox[0]).alias("bxmin"),

@@ -5,12 +5,14 @@ python/rsgislib/vectorutils/__init__.py:2159-2223 — geopandas ``sjoin`` with
 ``how in {left, right, inner}`` and ``op in {intersects, within,
 contains}``) as a two-phase Spark plan:
 
-1. **candidate generation** — both sides are keyed by integer grid cells
-   (``geo.cellindex``): points get ``cell_of_point``; bbox geometries get
-   their ``polyfill`` covering exploded to one row per cell.  The join is a
-   plain equi-join on ``cell`` so Catalyst gets a hash/broadcast/sort-merge
-   join with all its machinery (AQE, DPP).  The rtree of the reference is
-   replaced by this key — the "spatial pushdown".
+1. **candidate generation** — :func:`cell_pairs`, the engine's one
+   candidate join: each side is keyed by the grid-cell ROWS its bbox
+   spans (``geo.cellindex``'s latitude index; a point is one row) and
+   the two equi-join on ``cell_row``, so Catalyst gets a hash/broadcast/
+   sort-merge join with all its machinery (AQE, DPP).  As in Raptor
+   (VLDB 2019), rows grow with a geometry's height, not its area: a
+   world bbox at res 12 is 4,096 rows, not 16.7 M cells.  The rtree of
+   the reference is replaced by this key — the "spatial pushdown".
 
 2. **exact refinement** — a deterministic geometry predicate over the
    candidate pairs.  For the bbox fast path this is pure Catalyst column
@@ -24,11 +26,11 @@ Scale levers (SURVEY.md §4.2):
 
 * small zone layers are broadcast (`broadcast=True`, the default) — no
   shuffle of the big side at all;
-* big-big joins use sort-merge on ``cell`` with optional **explicit
-  salting**: the probe side adds ``salt = pmod(xxhash64(id), n_salt)``,
-  the build side explodes all ``n_salt`` values per cell.  This splits a
-  single hot cell (AQE skew-join cannot split one key) — the megacity
-  cell in the synthetic world is exactly that case.
+* big-big joins use sort-merge on ``cell_row`` with optional **explicit
+  salting**: the probe side adds ``salt = pmod(xxhash64(bbox), n_salt)``,
+  the build side explodes all ``n_salt`` values per row.  This splits a
+  single hot row (AQE skew-join cannot split one key) — the megacity's
+  latitude band in the synthetic world is exactly that case.
 
 Like geopandas sjoin, the output keeps base-side rows/geometry plus the
 joined side's attributes and an ``index_right`` column; ``how='left'``
@@ -40,6 +42,7 @@ vectorutils/__init__.py:2219-2223, belongs to the sink layer).
 
 from __future__ import annotations
 
+import operator
 from typing import Iterable
 
 import numpy as np
@@ -51,6 +54,7 @@ from ..geo.cellindex import DEFAULT_RES, _RES_SHIFT, _X_SHIFT, cell_sql_expr
 __all__ = [
     "with_point_cell",
     "with_bbox_cells",
+    "cell_pairs",
     "spatial_join",
     "spatial_join_poly",
     "vec_intersects_vec",
@@ -62,6 +66,7 @@ __all__ = [
 
 JOIN_OPS = ("intersects", "within", "contains")
 JOIN_HOWS = ("left", "right", "inner")
+_XY = ("xmin", "xmax", "ymin", "ymax")
 
 
 def with_point_cell(df: DataFrame, lon: str = "lon", lat: str = "lat",
@@ -109,14 +114,15 @@ def _point_in_bbox(lon: str, lat: str, bxmin: str, bxmax: str,
     )
 
 
-def _bbox_intersects(a: Iterable[str], b: Iterable[str]) -> Column:
-    """Strict bbox-bbox overlap (geometrytools.py:82-102)."""
-    axmin, axmax, aymin, aymax = a
-    bxmin, bxmax, bymin, bymax = b
-    return (
-        (F.col(axmax) > F.col(bxmin)) & (F.col(bxmax) > F.col(axmin))
-        & (F.col(aymax) > F.col(bymin)) & (F.col(bymax) > F.col(aymin))
-    )
+def _bbox_intersects(a: Iterable[str], b: Iterable[str],
+                     strict: bool = True) -> Column:
+    """Bbox-bbox overlap: strict (geometrytools.py:82-102) or, with
+    ``strict=False``, inclusive (touching bboxes overlap)."""
+    axmin, axmax, aymin, aymax = map(F.col, a)
+    bxmin, bxmax, bymin, bymax = map(F.col, b)
+    gt = operator.gt if strict else operator.ge
+    return (gt(axmax, bxmin) & gt(bxmax, axmin)
+            & gt(aymax, bymin) & gt(bymax, aymin))
 
 
 def _bbox_contains(a: Iterable[str], b: Iterable[str]) -> Column:
@@ -127,6 +133,51 @@ def _bbox_contains(a: Iterable[str], b: Iterable[str]) -> Column:
         (F.col(axmin) < F.col(bxmin)) & (F.col(axmax) > F.col(bxmax))
         & (F.col(aymin) < F.col(bymin)) & (F.col(aymax) > F.col(bymax))
     )
+
+
+def _with_cell_rows(df: DataFrame, box: Iterable[str], res: int,
+                    row0: str) -> DataFrame:
+    """One row per grid-cell row the bbox spans (``cell_row``), plus its
+    first row in ``row0``; a one-column y-range (a point) is not exploded."""
+    n = 1 << res
+    _, _, ymin, ymax = box
+    df = df.withColumn(row0, _axis_idx(ymin, 90.0, 180.0, n))
+    if ymin == ymax:
+        return df.withColumn("cell_row", F.col(row0))
+    return df.withColumn("cell_row", F.explode(F.sequence(
+        F.col(row0), _axis_idx(ymax, 90.0, 180.0, n))))
+
+
+def cell_pairs(left: DataFrame, right: DataFrame,
+               left_box: Iterable[str], right_box: Iterable[str],
+               on: Column, *, res: int, broadcast: bool = True,
+               n_salt: int | None = None) -> DataFrame:
+    """Every (left, right) row pair satisfying ``on``, each exactly once.
+
+    ``left_box`` / ``right_box`` name each side's (xmin, xmax, ymin,
+    ymax) columns; a point side passes ``(lon, lon, lat, lat)`` and is
+    not exploded.  The sides equi-join on ``cell_row`` under ``on``,
+    which must imply overlapping closed y-ranges (every predicate here
+    does); x is not keyed, ``on`` decides it.  A pair sharing several
+    rows is kept on the first, the ``greatest`` of the two start rows.
+    ``broadcast`` hints the right side; otherwise ``n_salt`` splits a hot
+    row over ``n_salt`` tasks (left salted by a hash of its bbox, right
+    replicated per salt).
+    """
+    lk = _with_cell_rows(left, left_box, res, "_row0_l")
+    rk = _with_cell_rows(right, right_box, res, "_row0_r")
+    keys = ["cell_row"]
+    if broadcast:
+        rk = F.broadcast(rk)
+    elif n_salt:
+        lk = lk.withColumn("_salt", F.pmod(
+            F.xxhash64(*[F.col(c) for c in left_box]), F.lit(n_salt)))
+        rk = rk.withColumn(
+            "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)])))
+        keys.append("_salt")
+    first_row = F.col("cell_row") == F.greatest("_row0_l", "_row0_r")
+    return (lk.join(rk, keys, "inner").where(on & first_row)
+            .drop(*keys, "_row0_l", "_row0_r"))
 
 
 def spatial_join(
@@ -168,73 +219,37 @@ def spatial_join(
         join_bbox = tuple(f"{c}_right" if c in clash else c
                           for c in join_bbox)
 
-    # --- candidate keying ------------------------------------------------
     if base_geom == "point":
         lon, lat = base_cols
-        keyed_base = with_point_cell(base, lon, lat, res)
-    elif base_geom == "bbox":
-        keyed_base = with_bbox_cells(base, *base_cols, res=res)
-    else:
-        raise ValueError(f"unknown base_geom {base_geom!r}")
-
-    keyed_join = with_bbox_cells(join, *join_bbox, res=res)
-
-    # --- exact predicate -------------------------------------------------
-    if base_geom == "point":
-        lon, lat = base_cols
+        base_box = (lon, lon, lat, lat)
         # for a point, within == intersects; contains never holds for a
         # non-degenerate polygon — mirror geopandas' row-wise predicate.
         if op in ("within", "intersects"):
             pred = _point_in_bbox(lon, lat, *join_bbox)
         else:  # contains
             pred = F.lit(False)
-    else:
+    elif base_geom == "bbox":
+        base_box = tuple(base_cols)
         if op == "intersects":
-            pred = _bbox_intersects(base_cols, join_bbox)
+            pred = _bbox_intersects(base_box, join_bbox)
         elif op == "within":
-            pred = _bbox_contains(join_bbox, base_cols)
+            pred = _bbox_contains(join_bbox, base_box)
         else:  # contains
-            pred = _bbox_contains(base_cols, join_bbox)
+            pred = _bbox_contains(base_box, join_bbox)
+    else:
+        raise ValueError(f"unknown base_geom {base_geom!r}")
 
     join_attrs = [c for c in join.columns if c != join_key]
-
-    # --- join strategy ---------------------------------------------------
-    if broadcast:
-        matched = (
-            keyed_base.join(F.broadcast(keyed_join), "cell", "inner")
-            .where(pred)
-        )
-    elif n_salt:
-        # explicit hot-cell salting: probe side one salt value, build side
-        # replicated n_salt times -> a hot cell splits into n_salt tasks.
-        salted_base = keyed_base.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(base_key)), F.lit(n_salt))
-        )
-        salted_join = keyed_join.withColumn(
-            "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
-        )
-        matched = (
-            salted_base.join(salted_join, ["cell", "_salt"], "inner")
-            .where(pred)
-            .drop("_salt")
-        )
-    else:
-        matched = keyed_base.join(keyed_join, "cell", "inner").where(pred)
-
-    # bbox bases can match a zone through several shared cells -> dedupe
-    # pairs; point bases sit in exactly one cell so pairs are unique.
-    if base_geom == "bbox":
-        matched = matched.dropDuplicates([base_key, join_key])
-
-    matched = matched.drop("cell").withColumn("index_right", F.col(join_key))
+    matched = cell_pairs(base, join, base_box, join_bbox, pred, res=res,
+                         broadcast=broadcast, n_salt=n_salt) \
+        .withColumn("index_right", F.col(join_key))
 
     if how == "inner":
         return matched
     if how == "semi":
         # spatial semi-join: base rows with >= 1 match, each exactly once
         # (spatial_select_gp's sjoin + dedupe-on-FID, vectorutils:1562-1615).
-        return base.join(matched.select(base_key).distinct(),
-                         base_key, "left_semi")
+        return base.join(matched.select(base_key), base_key, "left_semi")
     if how == "left":
         attach = matched.select(base_key, "index_right", *join_attrs)
         return base.join(attach, base_key, "left")
@@ -262,35 +277,27 @@ def spatial_join_poly(
     """Point-in-POLYGON join for general (non-bbox) polygon layers.
 
     The general-geometry path of ``perform_spatial_join``: candidate
-    generation is the same cell equi-join (polygon bboxes polyfilled to
-    cells), refinement is the vectorized ray-casting PIP of
-    ``geo.geometry.points_in_polygon`` run over Arrow batches with
-    ``mapInPandas`` on the candidates' EXISTING partitioning — each
-    batch vectorizes per polygon-within-batch, so no shuffle is spent
-    on refinement and a continent-sized hot polygon's candidates stay
-    spread across however many tasks produced them (the per-point PIP
-    test is row-independent, so any partitioning is correct).
+    generation is the same :func:`cell_pairs` row join, refinement is
+    the vectorized ray-casting PIP of ``geo.geometry.points_in_polygon``
+    run over Arrow batches with ``mapInPandas`` on the candidates'
+    EXISTING partitioning — each batch vectorizes per polygon-within-
+    batch, so no shuffle is spent on refinement and a continent-sized
+    hot polygon's candidates stay spread across however many tasks
+    produced them (the per-point PIP test is row-independent, so any
+    partitioning is correct).
 
     ``polys`` needs (poly_key, verts_col = array<array<double>> ring
     vertices, pxmin/pxmax/pymin/pymax bbox columns).  Output: matched
     (point_key, poly_key) pairs.
     """
-    import pandas as pd
-
     from ..geo.geometry import points_in_polygon
 
-    keyed_pts = with_point_cell(
-        points.select(F.col(point_key), F.col(lon), F.col(lat)),
-        lon, lat, res)
-    keyed_polys = with_bbox_cells(
-        polys.select(poly_key, verts_col, "pxmin", "pxmax", "pymin", "pymax"),
-        "pxmin", "pxmax", "pymin", "pymax", res=res)
-    cand = (
-        keyed_pts.join(F.broadcast(keyed_polys), "cell", "inner")
-        .where((F.col(lon) >= F.col("pxmin")) & (F.col(lon) < F.col("pxmax"))
-               & (F.col(lat) >= F.col("pymin")) & (F.col(lat) < F.col("pymax")))
-        .select(point_key, lon, lat, poly_key, verts_col)
-    )
+    pbox = tuple(f"p{c}" for c in _XY)
+    cand = cell_pairs(
+        points.select(point_key, lon, lat),
+        polys.select(poly_key, verts_col, *pbox),
+        (lon, lon, lat, lat), pbox, _point_in_bbox(lon, lat, *pbox), res=res,
+    ).select(point_key, lon, lat, poly_key, verts_col)
 
     def refine(it):
         for pdf in it:
@@ -317,7 +324,7 @@ def spatial_select(base: DataFrame, roi: DataFrame, **kw) -> DataFrame:
     Reference: ``spatial_select_gp`` (vectorutils/__init__.py:1562-1615) —
     inner sjoin then dedupe on a temp FID; and the slow-path
     ``spatial_select`` (:2565-2610).  Here it is a ``left_semi`` join on
-    the cell key + exact refinement, so the base side is never duplicated
+    the cell-row key + exact refinement, so the base side is never duplicated
     and no join-side attributes are shuffled at all.
     """
     kw.setdefault("op", "intersects")
@@ -344,12 +351,12 @@ def vec_predicate_vec(
     vectorgeoms/__init__.py:2608, 2675, 2746 et seq.) — for every A
     feature, whether (and how many) B features satisfy the predicate.
 
-    Scale shape: candidate pairs come from a grid-CELL equi-join
-    (coarse ``res``, one row per covered cell — the same key as every
-    other join here, so Catalyst gets hash/sort-merge + AQE skew
-    handling at ANY layer size; set ``broadcast=True`` only to force
-    the hint for a provably tiny B layer — by default AQE's runtime
-    size statistics make that call), refined by an INCLUSIVE bbox test
+    Scale shape: candidate pairs come from the :func:`cell_pairs` row
+    equi-join (coarse ``res`` — the same key as every other join here,
+    so Catalyst gets hash/sort-merge + AQE skew handling at ANY layer
+    size; set ``broadcast=True`` only to force the hint for a provably
+    tiny B layer — by default AQE's runtime size statistics make that
+    call), refined by an INCLUSIVE bbox test
     (touching bboxes stay candidates — required for ``touches``), then
     the exact predicate runs VECTORIZED over each Arrow batch
     (``geo.geometry.poly_pair_predicate``: pad-to-max-verts tensors,
@@ -374,35 +381,19 @@ def vec_predicate_vec(
         StructField("hit", LongType(), True),
     ])
 
-    a = with_bbox_cells(
-        polys_a.select(F.col(a_key).alias("akey"),
-                       F.col(verts_col).alias("av"),
-                       F.col("pxmin").alias("_axmin"),
-                       F.col("pxmax").alias("_axmax"),
-                       F.col("pymin").alias("_aymin"),
-                       F.col("pymax").alias("_aymax")),
-        "_axmin", "_axmax", "_aymin", "_aymax", res=res)
-    b = with_bbox_cells(
-        polys_b.select(F.col(b_key).alias("bkey"),
-                       F.col(verts_col).alias("bv"),
-                       F.col("pxmin").alias("_bxmin"),
-                       F.col("pxmax").alias("_bxmax"),
-                       F.col("pymin").alias("_bymin"),
-                       F.col("pymax").alias("_bymax")),
-        "_bxmin", "_bxmax", "_bymin", "_bymax", res=res)
-    if broadcast:
-        b = F.broadcast(b)
+    def layer(polys: DataFrame, key: str, s: str) -> DataFrame:
+        return polys.select(F.col(key).alias(f"{s}key"),
+                            F.col(verts_col).alias(f"{s}v"),
+                            *[F.col(f"p{c}").alias(f"_{s}{c}") for c in _XY])
+
+    abox, bbox = (tuple(f"_{s}{c}" for c in _XY) for s in "ab")
     # inclusive bbox prefilter: touching bboxes remain candidates
-    cand = (
-        a.join(b, "cell", "inner")
-        .where((F.col("_axmax") >= F.col("_bxmin"))
-               & (F.col("_bxmax") >= F.col("_axmin"))
-               & (F.col("_aymax") >= F.col("_bymin"))
-               & (F.col("_bymax") >= F.col("_aymin")))
-    )
+    on = _bbox_intersects(abox, bbox, strict=False)
     if exclude_same_key:
-        cand = cand.where(F.col("akey") != F.col("bkey"))
-    cand = cand.dropDuplicates(["akey", "bkey"]).select("akey", "av", "bv")
+        on = on & (F.col("akey") != F.col("bkey"))
+    cand = cell_pairs(layer(polys_a, a_key, "a"), layer(polys_b, b_key, "b"),
+                      abox, bbox, on,
+                      res=res, broadcast=broadcast).select("akey", "av", "bv")
 
     def refine(it):
         for pdf in it:

@@ -11,8 +11,9 @@ zonalstats/__init__.py:424-476; an empty pixel set writes
 
 Spark shape (SURVEY.md §3.3): instead of exploding pixels into rows,
 
-1. candidate pairs: image footprints x zones joined on grid cells
-   (broadcast zones), refined by strict bbox intersection;
+1. candidate pairs: image footprints x zones joined on grid-cell rows
+   (``spatial_join.cell_pairs``, broadcast zones), refined by strict
+   bbox intersection;
 2. per-(image, zone) partial aggregates computed inside one Arrow pass
    over the image's decoded plane: count / sum / sumsq / min / max plus
    an exact integer histogram (pixel domain is bounded: uint8/uint16 —
@@ -37,7 +38,7 @@ from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
 
 from ..functions import codec
 from ..geo.cellindex import DEFAULT_RES
-from .spatial_join import with_bbox_cells
+from .spatial_join import _bbox_intersects, cell_pairs
 
 __all__ = ["zonal_stats", "zonal_stats_poly", "zonal_stats_hybrid",
            "zonal_stats_weighted", "mask_by_vec_stats",
@@ -55,6 +56,33 @@ _PARTIAL_SCHEMA = StructType([
     StructField("mx", LongType()),
     StructField("hist", ArrayType(LongType())),
 ])
+
+
+_IMG_BOX = ("xmin", "xmax", "ymin", "ymax")
+_ZONE_BOX = ("zxmin", "zxmax", "zymin", "zymax")
+
+
+def _footprint_pairs(images: DataFrame, zones: DataFrame, zone_box,
+                     res: int) -> DataFrame:
+    """(image_id, zones' columns) for every image footprint strictly
+    overlapping a zone's bbox, each pair once (zones broadcast)."""
+    return cell_pairs(images.select("image_id", *_IMG_BOX), zones,
+                      _IMG_BOX, zone_box, _bbox_intersects(_IMG_BOX, zone_box),
+                      res=res).drop(*_IMG_BOX)
+
+
+def _pair_work(pairs: DataFrame, images: DataFrame, salt_key: str,
+               n_salt: int = 8) -> DataFrame:
+    """Candidate pairs joined to their image's payload columns, laid out by
+    (image, salt-of-``salt_key``): an image with many pairs fans across up
+    to ``n_salt`` tasks instead of one straggler.  Each task decodes the
+    image once; the kernels' outputs are order-independent, so salting
+    cannot change results."""
+    px_cols = images.select("image_id", "bytes", "w", "h", "fmt",
+                            "xmin", "ymax")
+    return pairs.join(px_cols, "image_id", "inner").repartition(
+        F.col("image_id"),
+        F.pmod(F.xxhash64(F.col(salt_key)), F.lit(int(n_salt))))
 
 
 def _image_groups(pdf, dtype=np.int64):
@@ -294,24 +322,11 @@ def zonal_stats_poly(
     """
     from ..geo.geometry import points_in_polygon
 
-    pc = with_bbox_cells(
-        polys.select(poly_key, verts_col, "pxmin", "pxmax", "pymin", "pymax"),
-        "pxmin", "pxmax", "pymin", "pymax", res=res)
-    ic = with_bbox_cells(
-        images.select("image_id", "xmin", "xmax", "ymin", "ymax"),
-        "xmin", "xmax", "ymin", "ymax", res=res)
-    pairs = (
-        ic.join(F.broadcast(pc), "cell", "inner")
-        .where((F.col("xmax") > F.col("pxmin")) & (F.col("pxmax") > F.col("xmin"))
-               & (F.col("ymax") > F.col("pymin")) & (F.col("pymax") > F.col("ymin")))
-        .select("image_id", poly_key, verts_col)
-        .dropDuplicates(["image_id", poly_key])
-    )
-    px_cols = images.select("image_id", "bytes", "w", "h", "fmt",
-                            "xmin", "ymax")
-    work = pairs.join(px_cols, "image_id", "inner").repartition(
-        F.col("image_id"),
-        F.pmod(F.xxhash64(F.col(poly_key)), F.lit(int(n_salt))))
+    pbox = ("pxmin", "pxmax", "pymin", "pymax")
+    pairs = _footprint_pairs(
+        images, polys.select(poly_key, verts_col, *pbox), pbox, res
+    ).select("image_id", poly_key, verts_col)
+    work = _pair_work(pairs, images, poly_key, n_salt)
 
     def zonal_poly_pairs(it):
         for pdf in it:
@@ -398,24 +413,9 @@ def zonal_stats_weighted(
     (sum of fractions), ``wmean`` (area-weighted mean pixel value) —
     zones touching no pixel are absent.
     """
-    zc = with_bbox_cells(zones.select("zone_id", "zxmin", "zxmax",
-                                      "zymin", "zymax"),
-                         "zxmin", "zxmax", "zymin", "zymax", res=res)
-    ic = with_bbox_cells(images.select("image_id", "xmin", "xmax",
-                                       "ymin", "ymax"),
-                         "xmin", "xmax", "ymin", "ymax", res=res)
-    pairs = (
-        ic.join(F.broadcast(zc), "cell", "inner")
-        .where((F.col("xmax") > F.col("zxmin")) & (F.col("zxmax") > F.col("xmin"))
-               & (F.col("ymax") > F.col("zymin")) & (F.col("zymax") > F.col("ymin")))
-        .select("image_id", "zone_id", "zxmin", "zxmax", "zymin", "zymax")
-        .dropDuplicates(["image_id", "zone_id"])
-    )
-    px_cols = images.select("image_id", "bytes", "w", "h", "fmt",
-                            "xmin", "ymax")
-    work = pairs.join(px_cols, "image_id", "inner").repartition(
-        F.col("image_id"),
-        F.pmod(F.xxhash64(F.col("zone_id")), F.lit(int(n_salt))))
+    pairs = _footprint_pairs(images, zones.select("zone_id", *_ZONE_BOX),
+                             _ZONE_BOX, res)
+    work = _pair_work(pairs, images, "zone_id", n_salt)
 
     def zonal_weighted_pairs(it):
         for pdf in it:
@@ -502,19 +502,8 @@ def mask_by_vec_stats(
     row-independent (each row carries its image + its zone list).
     Images with no pixel inside any zone emit no row.
     """
-    zc = with_bbox_cells(zones.select("zone_id", "zxmin", "zxmax",
-                                      "zymin", "zymax"),
-                         "zxmin", "zxmax", "zymin", "zymax", res=res)
-    ic = with_bbox_cells(images.select("image_id", "xmin", "xmax",
-                                       "ymin", "ymax"),
-                         "xmin", "xmax", "ymin", "ymax", res=res)
-    pairs = (
-        ic.join(F.broadcast(zc), "cell", "inner")
-        .where((F.col("xmax") > F.col("zxmin")) & (F.col("zxmax") > F.col("xmin"))
-               & (F.col("ymax") > F.col("zymin")) & (F.col("zymax") > F.col("ymin")))
-        .select("image_id", "zone_id", "zxmin", "zxmax", "zymin", "zymax")
-        .dropDuplicates(["image_id", "zone_id"])
-    )
+    pairs = _footprint_pairs(images, zones.select(*_ZONE_BOX), _ZONE_BOX,
+                             res)
     rects = pairs.groupBy("image_id").agg(
         F.collect_list(F.struct("zxmin", "zxmax", "zymin", "zymax"))
         .alias("zrects"))
@@ -571,8 +560,8 @@ def extract_point_values(
     image with the highest ``id`` wins (a deterministic stand-in for the
     reference's single-raster context).
 
-    Plan: (1) Catalyst-only candidate join point->footprint on the cell
-    key (broadcast points' cells is unnecessary — the equi-join hashes),
+    Plan: (1) Catalyst-only candidate join point->footprint on the
+    cell-row key (no broadcast hint — the equi-join hashes),
     refined by half-open PIP; (2) ``row_number`` picks the winning image;
     (3) one Arrow pass decodes each winning image once and gathers all
     its points' pixels.  Pixel volume never shuffles; only (point, image)
@@ -583,31 +572,19 @@ def extract_point_values(
     pts = points.select(F.col(pt_id).alias("pt_id"),
                         F.col(pt_lon).alias("_plon"),
                         F.col(pt_lat).alias("_plat"))
-    keyed_pts = with_bbox_cells(pts, "_plon", "_plon", "_plat", "_plat",
-                                res=res)
-    keyed_img = with_bbox_cells(
-        images.select("id", "image_id", "xmin", "xmax", "ymin", "ymax"),
-        "xmin", "xmax", "ymin", "ymax", res=res)
-
-    cand = (
-        keyed_pts.join(keyed_img, "cell", "inner")
-        .where((F.col("_plon") >= F.col("xmin"))
-               & (F.col("_plon") < F.col("xmax"))
-               & (F.col("_plat") > F.col("ymin"))
-               & (F.col("_plat") <= F.col("ymax")))
-    )
+    # north-west anchored half-open: the pixel a point truncates into
+    cand = cell_pairs(
+        pts, images.select("id", "image_id", *_IMG_BOX),
+        ("_plon", "_plon", "_plat", "_plat"), _IMG_BOX,
+        (F.col("_plon") >= F.col("xmin")) & (F.col("_plon") < F.col("xmax"))
+        & (F.col("_plat") > F.col("ymin")) & (F.col("_plat") <= F.col("ymax")),
+        res=res, broadcast=False)
     w = Window.partitionBy("pt_id").orderBy(F.desc("id"))
     won = cand.withColumn("_rn", F.row_number().over(w)) \
         .where(F.col("_rn") == 1) \
         .select("pt_id", "_plon", "_plat", "image_id")
 
-    # (image, salt-of-point) layout: an image winning many points fans
-    # across up to 8 tasks instead of one straggler
-    work = won.join(
-        images.select("image_id", "bytes", "w", "h", "fmt", "xmin", "ymax"),
-        "image_id", "inner",
-    ).repartition(F.col("image_id"),
-                  F.pmod(F.xxhash64(F.col("pt_id")), F.lit(8)))
+    work = _pair_work(won, images, "pt_id")
 
     def zonal_point_values(it):
         for pdf in it:
@@ -656,28 +633,13 @@ def _zonal_stats_raw(
     overlapped by many zones fans across up to ``n_salt`` tasks (the
     partials are order-independent, so salting cannot change results).
     """
-    # phase 1: candidate pairs (broadcast zones on cell key + bbox refine)
-    zc = with_bbox_cells(zones.select("zone_id", "zxmin", "zxmax",
-                                      "zymin", "zymax"),
-                         "zxmin", "zxmax", "zymin", "zymax", res=res)
-    ic = with_bbox_cells(images.select("image_id", "xmin", "xmax",
-                                       "ymin", "ymax"),
-                         "xmin", "xmax", "ymin", "ymax", res=res)
-    pairs = (
-        ic.join(F.broadcast(zc), "cell", "inner")
-        .where((F.col("xmax") > F.col("zxmin")) & (F.col("zxmax") > F.col("xmin"))
-               & (F.col("ymax") > F.col("zymin")) & (F.col("zymax") > F.col("ymin")))
-        .select("image_id", "zone_id", "zxmin", "zxmax", "zymin", "zymax")
-        .dropDuplicates(["image_id", "zone_id"])
-    )
+    # phase 1: candidate pairs (broadcast zones on cell row + bbox refine)
+    pairs = _footprint_pairs(images, zones.select("zone_id", *_ZONE_BOX),
+                             _ZONE_BOX, res)
 
     # phase 2: Arrow partials — ship pixels into the pair rows via an
     # image-keyed join (each image decoded once per task batch).
-    px_cols = images.select("image_id", "bytes", "w", "h", "fmt",
-                            "xmin", "ymax")
-    work = pairs.join(px_cols, "image_id", "inner").repartition(
-        F.col("image_id"),
-        F.pmod(F.xxhash64(F.col("zone_id")), F.lit(int(n_salt))))
+    work = _pair_work(pairs, images, "zone_id", n_salt)
 
     def zonal_pair_partials(it):
         return _pair_partials(it, res_deg, min_thres, max_thres, nodata,

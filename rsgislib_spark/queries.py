@@ -144,8 +144,8 @@ def q_sjoin_inner_within(spark, sf_dir) -> DataFrame:
 
 
 def q_sjoin_salted(spark, sf_dir) -> DataFrame:
-    """the big-big join path: sort-merge on cell with explicit salting
-    (8-way salt-explode splits the hot megacity cell, §2.3/§4.2) —
+    """the big-big join path: sort-merge on cell row with explicit salting
+    (8-way salt-explode splits the megacity's hot row, §2.3/§4.2) —
     result-identical to the broadcast plan, different physical strategy."""
     img = _images(spark, sf_dir, with_footprint=False)
     zones = synth.synth_zones(spark, sf_dir)

@@ -246,3 +246,116 @@ def test_vec_predicate_refine_is_vectorized(spark):
                         if (di, dj) != (0, 0)
                         and 0 <= i + di < n and 0 <= j + dj < n)
     assert dt < 60, f"refine too slow: {dt:.1f}s"
+
+
+def _box_layer(spark, boxes, prefix):
+    """boxes: [(xmin, xmax, ymin, ymax)] -> (<prefix>id, <prefix>xmin, ...)."""
+    cols = [f"{prefix}{c}" for c in ("xmin", "xmax", "ymin", "ymax")]
+    rows = [(i, *map(float, b)) for i, b in enumerate(boxes)]
+    df = spark.createDataFrame(
+        rows, f"{prefix}id long, " + ", ".join(f"{c} double" for c in cols))
+    return df, tuple(cols), pd.DataFrame(rows, columns=[f"{prefix}id", *cols])
+
+
+def _edge_boxes(rng, n, res):
+    """Random boxes plus the edge cases of a row-keyed join: edges exactly
+    on row boundaries, touching neighbours, the lat/lon clamps (and
+    beyond), and degenerate point boxes."""
+    row_h = 180.0 / (1 << res)
+    out = []
+    for _ in range(n):
+        x0, y0 = rng.uniform(-180, 180), rng.uniform(-90, 90)
+        out.append((x0, x0 + rng.uniform(0, 60), y0, y0 + rng.uniform(0, 40)))
+    for _ in range(n):
+        k0 = int(rng.integers(0, 1 << res))
+        k1 = k0 + int(rng.integers(0, 3))
+        x0 = float(rng.integers(-8, 8)) * 22.5
+        out.append((x0, x0 + 22.5, -90.0 + k0 * row_h, -90.0 + k1 * row_h))
+    out += [(-180.0, 180.0, -90.0, 90.0), (-200.0, -170.0, 80.0, 95.0),
+            (170.0, 180.0, -95.0, -90.0), (0.0, 22.5, 0.0, row_h),
+            (22.5, 45.0, row_h, 2 * row_h), (10.0, 10.0, row_h, row_h),
+            (45.0, 45.0, 90.0, 90.0), (-180.0, -180.0, -90.0, -90.0)]
+    return out
+
+
+def _brute(lpdf, rpdf, pred):
+    cross = lpdf.merge(rpdf, how="cross")
+    hit = cross[pred(cross)]
+    return sorted(zip(hit.lid.astype(int), hit.rid.astype(int)))
+
+
+@pytest.mark.parametrize("strict", [True, False])
+def test_cell_pairs_equals_brute_force_bbox(spark, strict):
+    """Row-keyed candidates + ``on`` == the cross join filtered by ``on``,
+    each pair exactly once, under the broadcast, plain and salted plans."""
+    from rsgislib_spark.operators.spatial_join import (_bbox_intersects,
+                                                       cell_pairs)
+
+    res = 4
+    rng = np.random.default_rng(7)
+    left, lbox, lpdf = _box_layer(spark, _edge_boxes(rng, 40, res), "l")
+    right, rbox, rpdf = _box_layer(spark, _edge_boxes(rng, 25, res), "r")
+    on = _bbox_intersects(lbox, rbox, strict=strict)
+
+    def gt(a, b):
+        return a > b if strict else a >= b
+
+    exp = _brute(lpdf, rpdf, lambda c: (
+        gt(c.lxmax, c.rxmin) & gt(c.rxmax, c.lxmin)
+        & gt(c.lymax, c.rymin) & gt(c.rymax, c.lymin)))
+    assert len(exp) > 50
+    for kw in ({}, {"broadcast": False}, {"broadcast": False, "n_salt": 3}):
+        out = cell_pairs(left, right, lbox, rbox, on, res=res, **kw)
+        assert set(out.columns) == set(left.columns) | set(right.columns)
+        got = sorted((r.lid, r.rid) for r in out.select("lid", "rid").collect())
+        assert got == exp, kw
+
+
+def test_cell_pairs_equals_brute_force_points(spark):
+    """Point layers key on one row each (no explode) and still meet every
+    box spanning that row; lat on a row boundary and at the ±90 clamp."""
+    from rsgislib_spark.operators.spatial_join import _point_in_bbox, cell_pairs
+
+    res = 4
+    row_h = 180.0 / (1 << res)
+    rng = np.random.default_rng(11)
+    pts = [(rng.uniform(-180, 180), rng.uniform(-90, 90)) for _ in range(300)]
+    pts += [(0.0, row_h), (5.0, -90.0), (179.0, 90.0), (-180.0, 0.0),
+            (22.5, 3 * row_h)]
+    lpdf = pd.DataFrame([(i, x, y) for i, (x, y) in enumerate(pts)],
+                        columns=["lid", "lon", "lat"])
+    left = spark.createDataFrame(lpdf)
+    right, rbox, rpdf = _box_layer(spark, _edge_boxes(rng, 30, res), "r")
+    out = cell_pairs(left, right, ("lon", "lon", "lat", "lat"), rbox,
+                     _point_in_bbox("lon", "lat", *rbox), res=res)
+    got = sorted((r.lid, r.rid) for r in out.select("lid", "rid").collect())
+    exp = _brute(lpdf, rpdf, lambda c: (
+        (c.lon >= c.rxmin) & (c.lon < c.rxmax)
+        & (c.lat >= c.rymin) & (c.lat < c.rymax)))
+    assert got == exp and len(exp) > 50
+
+
+def test_world_bbox_keys_to_one_row_per_cell_row(spark):
+    """Keying grows with height, not area: a world bbox at res 12 is
+    4,096 cell rows (a cell polyfill made it 4,096^2 = 16.7 M)."""
+    from rsgislib_spark.operators.spatial_join import _with_cell_rows
+
+    world, box, _ = _box_layer(spark, [(-180.0, 180.0, -90.0, 90.0)], "w")
+    keyed = _with_cell_rows(world, box, 12, "_row0")
+    assert keyed.count() == 4096
+    assert keyed.select("cell_row").distinct().count() == 4096
+
+
+def test_zonal_plan_has_no_pair_dedupe(spark, sf_dir):
+    """Candidate pairs come out of the join once each, so the executed
+    zonal_stats plan aggregates nothing on (image_id, zone_id)."""
+    import re
+
+    from rsgislib_spark.operators.zonal import zonal_stats
+
+    images = synth.synth_images(spark, sf_dir, with_bytes=True).limit(40)
+    out = zonal_stats(images, synth.synth_zones(spark, sf_dir))
+    assert out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    aggs = re.findall(r"Aggregate\(keys=\[([^\]]*)\]", plan)
+    assert not [k for k in aggs if "image_id" in k and "zone_id" in k], aggs
