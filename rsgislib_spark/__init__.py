@@ -8,7 +8,7 @@ Spark engine over a table of geotagged image+caption rows:
      caption string, phash long)
 
 Design (see SURVEY.md):
-  * all compute is DataFrame ops + Arrow-vectorized pandas UDFs — no
+  * all compute is DataFrame ops + Arrow-vectorized batch UDFs — no
     per-row Python UDFs anywhere;
   * spatial indexing via an integer grid cell index (H3-role, see
     ``geo.cellindex``) used as an equi-join key so Catalyst handles

@@ -19,7 +19,9 @@ inside Arrow-vectorized UDFs (SURVEY.md §1.1a).  Formats carried in the
 The per-image functions operate on single images (ndarray (h, w) or
 (bands, h, w)).  :func:`planes` and :func:`map_images` are the one place
 a batch of ``(image_id, bytes, w, h, fmt)`` rows is decoded: every
-operator kernel reads its pixels through them.
+operator kernel reads its pixels through them.  Every Python stage is an
+Arrow stage (``mapInArrow`` / ``applyInArrow``), and :func:`to_batch` is
+the one place its Python output becomes an Arrow batch.
 """
 
 from __future__ import annotations
@@ -29,10 +31,13 @@ import zlib
 
 import numpy as np
 import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 
 __all__ = [
     "IMAGE_COLS",
     "planes",
+    "to_batch",
+    "to_table",
     "map_images",
     "decode_image",
     "encode_image",
@@ -194,54 +199,63 @@ IMAGE_COLS = ("image_id", "bytes", "w", "h", "fmt")
 def planes(batch, *extra_cols, dtype=None):
     """Yield ``(image_id, plane, *extras)`` for each row of ``batch``.
 
-    ``batch`` is a pandas frame (``mapInPandas``) or an Arrow
-    ``RecordBatch`` (``mapInArrow``, read with ``to_pylist`` -- never
-    through pandas) carrying ``IMAGE_COLS`` plus ``extra_cols``.  The
-    plane is :func:`decode_image`'s array, cast with ``astype(dtype)``
-    (a writable copy) when ``dtype`` is given.
+    ``batch`` is an Arrow ``RecordBatch`` carrying ``IMAGE_COLS`` plus
+    ``extra_cols``, read with ``to_pylist``.  The plane is
+    :func:`decode_image`'s array, cast with ``astype(dtype)`` (a
+    writable copy) when ``dtype`` is given.
     """
     cols = IMAGE_COLS + extra_cols
-    if isinstance(batch, pa.RecordBatch):
-        rows = zip(*(batch.column(c).to_pylist() for c in cols))
-    else:
-        rows = zip(*(batch[c] for c in cols))
+    rows = zip(*(batch.column(c).to_pylist() for c in cols))
     for image_id, buf, w, h, fmt, *extras in rows:
-        plane = decode_image(bytes(buf), int(w), int(h), str(fmt))
+        plane = decode_image(buf, int(w), int(h), fmt)
         if dtype is not None:
             plane = plane.astype(dtype)
         yield (image_id, plane, *extras)
 
 
+def to_batch(out, schema) -> pa.RecordBatch:
+    """``out``, a dict of lists (or arrays) keyed by ``schema``'s field
+    names, as one Arrow batch typed by the Spark ``schema``.
+
+    The one place a Python stage's output format is decided: every
+    ``mapInArrow`` kernel and ``applyInArrow`` finaliser that builds
+    columns from Python values returns through here.  An empty column
+    keeps its Spark type (an ``array<bigint>`` field is an empty
+    ``list<int64>``), so a kernel may yield an empty batch."""
+    return pa.RecordBatch.from_pydict(out, schema=to_arrow_schema(schema))
+
+
+def to_table(out, schema) -> pa.Table:
+    """:func:`to_batch` as the ``pyarrow.Table`` a grouped
+    ``applyInArrow`` finaliser returns."""
+    return pa.Table.from_batches([to_batch(out, schema)])
+
+
 def map_images(images, per_image, schema, extra_cols=(), dtype=None):
     """Run ``per_image`` over every image of ``images`` in one
-    ``mapInPandas`` stage.
+    ``mapInArrow`` stage.
 
     ``per_image(out, image_id, plane, *extras)`` appends any number of
     rows to ``out``, a dict of lists keyed by ``schema``'s field names;
-    each Arrow batch yields ``pd.DataFrame(out)``.  The stage is named
-    ``<module>_<operator>`` after the function that defined
-    ``per_image``, e.g. ``MapInPandas imgcalcmisc_prop_true_stats(...)``.
+    each input batch yields ``to_batch(out, schema)``.  The stage is
+    named ``<module>_<operator>`` after the function that defined
+    ``per_image``, e.g. ``MapInArrow imgcalcmisc_prop_true_stats(...)``.
     """
     extra_cols = tuple(extra_cols)
     names = schema.names
 
-    def kernel(it):
-        # imported here, not at module level: the mapInArrow kernels
-        # (tiling, synth) import this module in workers that never load
-        # pandas, where importing it costs ~0.4 s (4-core Xeon VM)
-        import pandas as pd
-
-        for pdf in it:
+    def kernel(batches):
+        for batch in batches:
             out = {n: [] for n in names}
-            for row in planes(pdf, *extra_cols, dtype=dtype):
+            for row in planes(batch, *extra_cols, dtype=dtype):
                 per_image(out, *row)
-            yield pd.DataFrame(out)
+            yield to_batch(out, schema)
 
     module = per_image.__module__.rpartition(".")[2]
     operator = per_image.__qualname__.split(".<locals>")[0].strip("_")
     kernel.__name__ = kernel.__qualname__ = f"{module}_{operator}"
     cols = IMAGE_COLS + tuple(c for c in extra_cols if c not in IMAGE_COLS)
-    return images.select(*cols).mapInPandas(kernel, schema=schema)
+    return images.select(*cols).mapInArrow(kernel, schema=schema)
 
 
 def encode_image(arr: np.ndarray, fmt: str) -> bytes:

@@ -142,7 +142,7 @@ def k_ring(cell: int, k: int = 1):
 def k_ring_lists(cells, k: int = 1):
     """Vectorized k_ring for an int64 array -> list of int64 arrays.
 
-    Used to build explode()-ready neighbour lists inside pandas UDFs for
+    Used to build explode()-ready neighbour lists inside Arrow UDFs for
     the kNN ring-expansion join (SURVEY.md §2.3 match_closest_vec_pts).
     """
     cells = np.asarray(cells, np.int64)

@@ -3,7 +3,7 @@
 Re-expresses ``create_alpha_shape`` (reference: python/rsgislib/
 vectorgeoms/__init__.py:1432 — alphashape package over an OGR point
 layer, with an optional alpha search).  Spark-first shape: one group =
-one geometry, built inside ``applyInPandas`` from the classic
+one geometry, built inside ``applyInArrow`` from the classic
 Delaunay-filter formulation (Edelsbrunner 1983):
 
 * Delaunay-triangulate the group's points (scipy.spatial, qhull —
@@ -31,10 +31,11 @@ expressible) — correctness is covered by geometric pytest invariants
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (DoubleType, LongType, StructField,
                                StructType)
+
+from ..functions import codec
 
 __all__ = ["alpha_shape_edges_pdf", "alpha_shape_edges", "delaunay"]
 
@@ -175,20 +176,19 @@ def alpha_shape_edges(
         StructField("y2", DoubleType()),
     ])
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = pdf[group_col].iloc[0]
+    def alphashape_edges(table):
+        g = table.column(group_col)[0].as_py()
         edges = alpha_shape_edges_pdf(
-            np.column_stack([pdf[lon].to_numpy(np.float64),
-                             pdf[lat].to_numpy(np.float64)]), alpha)
-        if not edges:
-            return pd.DataFrame({c.name: [] for c in schema.fields})
-        arr = np.asarray(edges, np.float64)
-        return pd.DataFrame({
+            np.column_stack([np.asarray(table.column(c).to_numpy(),
+                                        np.float64) for c in (lon, lat)]),
+            alpha)
+        arr = np.asarray(edges, np.float64).reshape(-1, 4)
+        return codec.to_table({
             "grp": [g] * len(edges),
-            "edge_idx": np.arange(1, len(edges) + 1, dtype=np.int64),
+            "edge_idx": np.arange(1, len(edges) + 1),
             "x1": arr[:, 0], "y1": arr[:, 1],
             "x2": arr[:, 2], "y2": arr[:, 3],
-        })
+        }, schema)
 
     return points.select(group_col, lon, lat) \
-        .groupBy(group_col).applyInPandas(fn, schema)
+        .groupBy(group_col).applyInArrow(alphashape_edges, schema)

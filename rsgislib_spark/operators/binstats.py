@@ -39,7 +39,7 @@ a *quantized residual* ``r16 = floor(16 * resid_num / det)`` (exact
 integer floor division — no >2^53 value ever passes through a double,
 the DuckDB HUGEINT->DOUBLE cast is not IEEE-nearest above 2^53).
 
-Scale note: one shuffle-free ``mapInPandas`` pass; all statistics are
+Scale note: one shuffle-free ``mapInArrow`` pass; all statistics are
 per-image (partitionable by construction), so the plan at 100 TB is
 embarrassingly parallel over the image dimension.
 """

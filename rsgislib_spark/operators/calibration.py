@@ -496,8 +496,6 @@ def qa_pixel_parse_stats(images: DataFrame) -> DataFrame:
     counts, confidence sums, and the high-cloud-confidence count.
     All exact integer arithmetic.
     """
-    import pandas as pd
-
     schema = _qa_schema()
 
     def per_image(out, image_id, v):

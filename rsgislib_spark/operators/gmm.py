@@ -59,11 +59,11 @@ engine sums to float128/objects and the oracle casts to HUGEINT before
 the DOUBLE division.
 """
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..functions import codec
 from ..functions.detmath import exp_np
 
 __all__ = ["gmm_hist_fit", "GMM_BIN_WIDTH", "GMM_ROUNDS", "GMM_KMAX",
@@ -188,18 +188,15 @@ def gmm_hist_fit(rat: DataFrame, var_col: str = "mode_val",
 
     bw, half = GMM_BIN_WIDTH, GMM_BIN_WIDTH // 2
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        cls = int(pdf["cls"].iloc[0])
-        vmin = int(pdf["vmin"].iloc[0])
-        vmax = int(pdf["vmax"].iloc[0])
-        total = int(pdf["nv"].iloc[0])
+    def fit(table):
+        cls, vmin, vmax, total = (table.column(c)[0].as_py()
+                                  for c in ("cls", "vmin", "vmax", "nv"))
         nbins = (vmax - vmin) // bw + 1
-        cols = {f.name: [] for f in _GMM_SCHEMA.fields}
+        cols = {n: [] for n in _GMM_SCHEMA.names}
         if nbins < 4:
-            return pd.DataFrame(cols)
+            return codec.to_table(cols, _GMM_SCHEMA)
         counts = np.zeros(nbins, dtype=np.int64)
-        counts[pdf["ibin"].to_numpy(dtype=np.int64)] = \
-            pdf["n"].to_numpy(dtype=np.int64)
+        counts[table.column("ibin").to_numpy()] = table.column("n").to_numpy()
         peaks = _find_peaks(counts, total)
         n_peaks = len(peaks)
 
@@ -214,7 +211,7 @@ def gmm_hist_fit(rat: DataFrame, var_col: str = "mode_val",
 
         if n_peaks == 0:
             row(0, None, None, None, total)
-            return pd.DataFrame(cols)
+            return codec.to_table(cols, _GMM_SCHEMA)
         sel = sorted(sorted(peaks, key=lambda i: (-counts[i], i))
                      [:GMM_KMAX])
         k = len(sel)
@@ -233,9 +230,9 @@ def gmm_hist_fit(rat: DataFrame, var_col: str = "mode_val",
                 int(np.floor(var[j] * GMM_MU_Q)),
                 int(np.floor(pi[j] * GMM_MU_Q)),
                 int(asgn[j + 1]))
-        return pd.DataFrame(cols)
+        return codec.to_table(cols, _GMM_SCHEMA)
 
-    return h.groupBy("cls").applyInPandas(fit, schema=_GMM_SCHEMA)
+    return h.groupBy("cls").applyInArrow(fit, schema=_GMM_SCHEMA)
 
 
 def gmm_em_float(counts: np.ndarray, vmin: int, rounds: int = GMM_ROUNDS):

@@ -6,7 +6,7 @@ Reference semantics re-expressed Spark-first:
   python/src/imagecalc.cpp:1799-1830; muParser compile at
   src/cmds/RSGISCmdImageCalc.cpp:79).  Here the expression is a
   numpy-vectorized formula evaluated over the whole decoded plane inside
-  one Arrow pass (``mapInPandas``) — per-pixel scalar callbacks (the
+  one Arrow pass (``mapInArrow``) — per-pixel scalar callbacks (the
   reference's RSGISCalcImageValue loop, src/img/RSGISCalcImage.cpp:
   163-184) become one vectorized expression per image;
 * ``mask_img`` — set pixels to a value where the mask matches
@@ -33,7 +33,6 @@ oracle comparison regardless of partition order.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (BooleanType, DoubleType, LongType, StringType,
                                StructField, StructType)
@@ -971,27 +970,22 @@ def hist2d(images: DataFrame, bin_width: int = 128,
     """
     nb = int(bins)
 
-    def imagemath_hist2d(it):
-        for pdf in it:
-            codes_all = []
-            for _, arr in codec.planes(pdf, dtype=np.int64):
-                b1 = (arr // bin_width).clip(0, nb - 1)
-                b2 = (arr[:, ::-1] // bin_width).clip(0, nb - 1)
-                codes_all.append((b1 * nb + b2).ravel())
-            if codes_all:
-                uniq, cnt = np.unique(np.concatenate(codes_all),
-                                      return_counts=True)
-                yield pd.DataFrame({"code": uniq,
-                                    "cnt": cnt.astype(np.int64)})
-            else:
-                yield pd.DataFrame({"code": np.zeros(0, np.int64),
-                                    "cnt": np.zeros(0, np.int64)})
-
     schema = StructType([StructField("code", LongType()),
                          StructField("cnt", LongType())])
+
+    def imagemath_hist2d(batches):
+        for batch in batches:
+            codes = [np.zeros(0, np.int64)]
+            for _, arr in codec.planes(batch, dtype=np.int64):
+                b1 = (arr // bin_width).clip(0, nb - 1)
+                b2 = (arr[:, ::-1] // bin_width).clip(0, nb - 1)
+                codes.append((b1 * nb + b2).ravel())
+            uniq, cnt = np.unique(np.concatenate(codes), return_counts=True)
+            yield codec.to_batch({"code": uniq, "cnt": cnt}, schema)
+
     return (
-        images.select("image_id", "bytes", "w", "h", "fmt")
-        .mapInPandas(imagemath_hist2d, schema=schema)
+        images.select(*codec.IMAGE_COLS)
+        .mapInArrow(imagemath_hist2d, schema=schema)
         .groupBy("code").agg(F.sum("cnt").alias("n"))
         .select((F.col("code") / nb).cast("long").alias("b1"),
                 (F.col("code") % nb).alias("b2"), "n")

@@ -16,7 +16,6 @@ per-format stats, histograms) is ordinary Catalyst over one row per image.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (ArrayType, LongType, StringType, StructField,
                                StructType)
@@ -76,18 +75,13 @@ def pixel_histogram(images: DataFrame, bins: int = 1024,
     the classic partial+final design (``histogram``, imagecalc.cpp:2056).
     """
 
-    def imagestats_pixel_histogram(it):
-        for pdf in it:
-            ids, hists = [], []
-            for image_id, arr in codec.planes(pdf, dtype=np.int64):
-                v = (arr.ravel() // bin_width).clip(0, bins - 1)
-                ids.append(image_id)
-                hists.append(np.bincount(v, minlength=bins).astype(np.int64))
-            if ids:  # empty batch: Arrow can't cast empty float64->list
-                yield pd.DataFrame({"image_id": ids, "hist": hists})
+    def per_image(out, image_id, arr):
+        v = (arr.ravel() // bin_width).clip(0, bins - 1)
+        out["image_id"].append(image_id)
+        out["hist"].append(np.bincount(v, minlength=bins))
 
-    partials = images.select(*codec.IMAGE_COLS) \
-        .mapInPandas(imagestats_pixel_histogram, schema=_HIST_SCHEMA)
+    partials = codec.map_images(images, per_image, _HIST_SCHEMA,
+                                dtype=np.int64)
     return (
         partials.select(F.posexplode("hist").alias("bin", "cnt"))
         .where(F.col("cnt") > 0)

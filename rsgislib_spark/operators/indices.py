@@ -36,7 +36,7 @@ identical inputs, hence bit-equal across engines (NOTES lesson 19).
 CTVI is ``sign(ndvi+0.5)*sqrt(|ndvi+0.5|)`` — add and sqrt are single
 correctly-rounded ops on the one-division NDVI.
 
-Scale shape: one mapInPandas over late-materialised payloads, 14
+Scale shape: one mapInArrow over late-materialised payloads, 14
 int64 columns out per image, pixels never cross a shuffle.
 """
 from __future__ import annotations

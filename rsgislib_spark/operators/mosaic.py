@@ -17,7 +17,7 @@ Spark shape — partial+final composite, never per-pixel rows:
 1. each Arrow batch decodes its images once and *locally combines* them
    into fixed-size accumulator arrays over the output window (one partial
    row per batch, not per image, not per pixel);
-2. a single tiny ``applyInPandas`` merge folds the <=#partitions partials.
+2. a single tiny ``applyInArrow`` merge folds the <=#partitions partials.
 
 Every behaviour is encoded as an order-preserving int64 so all merges are
 plain max/min — associative, commutative, partition-order independent:
@@ -35,7 +35,6 @@ holds the whole mosaic; the window here is one tile of that scheme.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
                                StructType)
@@ -47,47 +46,98 @@ __all__ = ["mosaic_window", "mosaic_thresh_window", "mosaic_mode_window",
 
 _ENC_LAST = 2048                 # id * 2048 + v
 _ENC_IDX = 1 << 40               # v * 2^40 + id
-
-_PARTIAL_SCHEMA = StructType([
-    StructField("window_id", LongType()),
-    StructField("cnt", ArrayType(LongType())),
-    StructField("enc_last", ArrayType(LongType())),
-    StructField("v_min", ArrayType(LongType())),
-    StructField("v_max", ArrayType(LongType())),
-    StructField("enc_idx", ArrayType(LongType())),
-])
-
-_OUT_SCHEMA = StructType([
-    StructField("px", LongType()),
-    StructField("py", LongType()),
-    StructField("n_imgs", LongType()),
-    StructField("v_last", LongType()),
-    StructField("v_min", LongType()),
-    StructField("v_max", LongType()),
-    StructField("idx_max", LongType()),
-])
-
+_BIG = np.iinfo(np.int64).max
 
 #: columns of a candidate image: the payload plus its id and bbox
 _CAND_COLS = codec.IMAGE_COLS + ("id", "xmin", "xmax", "ymin", "ymax")
 
 
-def _window_hits(pdf, cxs, cys, res):
-    """``(id, plane, sel_y, sel_x, sy, sx)`` for each image of ``pdf``
-    that covers an output pixel centre: the covered output rows/columns
-    and their nearest source rows/columns on the image's own grid."""
-    for _, arr, iid, xmin, xmax, ymin, ymax in codec.planes(
-            pdf, "id", "xmin", "xmax", "ymin", "ymax"):
-        sel_x = np.nonzero((cxs >= xmin) & (cxs < xmax))[0]
-        sel_y = np.nonzero((cys > ymin) & (cys <= ymax))[0]
-        if sel_x.size == 0 or sel_y.size == 0:
-            continue
-        h, w = arr.shape
-        sx = np.minimum(np.floor((cxs[sel_x] - xmin) / res)
-                        .astype(np.int64), w - 1)
-        sy = np.minimum(np.floor((ymax - cys[sel_y]) / res)
-                        .astype(np.int64), h - 1)
-        yield int(iid), arr, sel_y, sel_x, sy, sx
+def _schema(*fields) -> StructType:
+    """``(name, type)`` pairs -> StructType; a bare name is a long."""
+    return StructType([StructField(*f) if isinstance(f, tuple)
+                       else StructField(f, LongType()) for f in fields])
+
+
+def _window_images(images, x0, y0, npx, npy, res):
+    """``(images, hits)``: the images overlapping the output window
+    (bbox pushdown, before any decode), and ``hits(batch)`` yielding
+    ``(id, plane, ix, pick)`` for each image of an Arrow batch that
+    covers an output pixel centre: ``plane[pick]`` are the nearest
+    source pixels, on the image's own grid, of the output cells
+    ``[ix]``."""
+    xw, yh = x0 + npx * res, y0 + npy * res
+    cand = images.where(
+        (F.col("xmax") > F.lit(x0)) & (F.col("xmin") < F.lit(xw))
+        & (F.col("ymax") > F.lit(y0)) & (F.col("ymin") < F.lit(yh))
+    ).select(*_CAND_COLS)
+    cxs = x0 + (np.arange(npx, dtype=np.float64) + 0.5) * res
+    cys = y0 + (np.arange(npy, dtype=np.float64) + 0.5) * res
+
+    def hits(batch):
+        for _, arr, iid, xmin, xmax, ymin, ymax in codec.planes(
+                batch, "id", "xmin", "xmax", "ymin", "ymax"):
+            sel_x = np.nonzero((cxs >= xmin) & (cxs < xmax))[0]
+            sel_y = np.nonzero((cys > ymin) & (cys <= ymax))[0]
+            if sel_x.size == 0 or sel_y.size == 0:
+                continue
+            h, w = arr.shape
+            sx = np.minimum(np.floor((cxs[sel_x] - xmin) / res)
+                            .astype(np.int64), w - 1)
+            sy = np.minimum(np.floor((ymax - cys[sel_y]) / res)
+                            .astype(np.int64), h - 1)
+            yield int(iid), arr, np.ix_(sel_y, sel_x), np.ix_(sy, sx)
+
+    return cand, hits
+
+
+def _composite(images, x0, y0, npx, npy, res, accs, update, finish,
+               out_schema):
+    """The window composite plan shared by every order-encoded mosaic.
+
+    ``accs`` maps each int64 per-pixel accumulator to ``(fill, fold)``,
+    where ``fold`` (``np.add``/``np.maximum``/``np.minimum``) is
+    associative and commutative.  Each Arrow batch starts from the
+    fills, calls ``update(acc, iid, plane, ix, pick)`` per image hit
+    (``acc`` holds ``(npy, npx)`` views) and yields ONE partial row; one
+    grouped ``applyInArrow`` folds the partials and returns
+    ``finish(tot)``, a dict of ``out_schema`` columns.  The Arrow stage
+    is named ``mosaic_<update>_partials``."""
+    cand, hits = _window_images(images, x0, y0, npx, npy, res)
+    n = npx * npy
+    partial_schema = _schema(
+        "window_id", *((k, ArrayType(LongType())) for k in accs))
+
+    def fresh():
+        return {k: np.full(n, fill, np.int64)
+                for k, (fill, _) in accs.items()}
+
+    def partials(batches):
+        for batch in batches:
+            acc = fresh()
+            views = {k: v.reshape(npy, npx) for k, v in acc.items()}
+            for hit in hits(batch):
+                update(views, *hit)
+            yield codec.to_batch(
+                {"window_id": [0], **{k: [v] for k, v in acc.items()}},
+                partial_schema)
+
+    def merge(table):
+        tot = fresh()
+        for k, (_, fold) in accs.items():
+            for part in table.column(k).to_numpy(zero_copy_only=False):
+                tot[k] = fold(tot[k], part)
+        return codec.to_table(finish(tot), out_schema)
+
+    partials.__name__ = partials.__qualname__ = \
+        f"mosaic_{update.__name__}_partials"
+    return cand.mapInArrow(partials, schema=partial_schema) \
+        .groupBy("window_id").applyInArrow(merge, schema=out_schema)
+
+
+def _pixels(covered, npx, cnt):
+    """The (px, py, n_imgs) columns of the ``covered`` flat pixels."""
+    return {"px": covered % npx, "py": covered // npx,
+            "n_imgs": cnt[covered]}
 
 
 def mosaic_window(images: DataFrame, x0: float, y0: float,
@@ -101,87 +151,31 @@ def mosaic_window(images: DataFrame, x0: float, y0: float,
     own grid (inputs share the output resolution, the reference mosaic
     precondition).
     """
-    xw, yh = x0 + npx * res, y0 + npy * res
 
-    # prune non-overlapping images before any decode (bbox pushdown)
-    cand = images.where(
-        (F.col("xmax") > F.lit(x0)) & (F.col("xmin") < F.lit(xw))
-        & (F.col("ymax") > F.lit(y0)) & (F.col("ymin") < F.lit(yh))
-    ).select(*_CAND_COLS)
+    def window(acc, iid, arr, ix, pick):
+        v = arr[pick].astype(np.int64)
+        acc["cnt"][ix] += 1
+        acc["enc_last"][ix] = np.maximum(acc["enc_last"][ix],
+                                         iid * _ENC_LAST + v)
+        acc["v_min"][ix] = np.minimum(acc["v_min"][ix], v)
+        acc["v_max"][ix] = np.maximum(acc["v_max"][ix], v)
+        acc["enc_idx"][ix] = np.maximum(acc["enc_idx"][ix],
+                                        v * _ENC_IDX + iid)
 
-    cxs = x0 + (np.arange(npx, dtype=np.float64) + 0.5) * res
-    cys = y0 + (np.arange(npy, dtype=np.float64) + 0.5) * res
+    def finish(tot):
+        covered = np.nonzero(tot["cnt"] > 0)[0]
+        return {**_pixels(covered, npx, tot["cnt"]),
+                "v_last": tot["enc_last"][covered] % _ENC_LAST,
+                "v_min": tot["v_min"][covered],
+                "v_max": tot["v_max"][covered],
+                "idx_max": tot["enc_idx"][covered] % _ENC_IDX}
 
-    def mosaic_window_partials(it):
-        for pdf in it:
-            n = npx * npy
-            cnt = np.zeros(n, np.int64)
-            enc_last = np.full(n, -1, np.int64)
-            vmin = np.full(n, np.iinfo(np.int64).max, np.int64)
-            vmax = np.full(n, -1, np.int64)
-            enc_idx = np.full(n, -1, np.int64)
-            c2 = cnt.reshape(npy, npx)
-            el2 = enc_last.reshape(npy, npx)
-            mn2 = vmin.reshape(npy, npx)
-            mx2 = vmax.reshape(npy, npx)
-            ei2 = enc_idx.reshape(npy, npx)
-            for iid, arr, sel_y, sel_x, sy, sx in _window_hits(
-                    pdf, cxs, cys, res):
-                v = arr[np.ix_(sy, sx)].astype(np.int64)
-                ix = np.ix_(sel_y, sel_x)
-                c2[ix] += 1
-                el2[ix] = np.maximum(el2[ix], iid * _ENC_LAST + v)
-                mn2[ix] = np.minimum(mn2[ix], v)
-                mx2[ix] = np.maximum(mx2[ix], v)
-                ei2[ix] = np.maximum(ei2[ix], v * _ENC_IDX + iid)
-            yield pd.DataFrame({"window_id": [0], "cnt": [cnt],
-                                "enc_last": [enc_last], "v_min": [vmin],
-                                "v_max": [vmax], "enc_idx": [enc_idx]})
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = npx * npy
-        cnt = np.zeros(n, np.int64)
-        enc_last = np.full(n, -1, np.int64)
-        vmin = np.full(n, np.iinfo(np.int64).max, np.int64)
-        vmax = np.full(n, -1, np.int64)
-        enc_idx = np.full(n, -1, np.int64)
-        for r in pdf.itertuples(index=False):
-            cnt += np.asarray(r.cnt, np.int64)
-            enc_last = np.maximum(enc_last, np.asarray(r.enc_last, np.int64))
-            vmin = np.minimum(vmin, np.asarray(r.v_min, np.int64))
-            vmax = np.maximum(vmax, np.asarray(r.v_max, np.int64))
-            enc_idx = np.maximum(enc_idx, np.asarray(r.enc_idx, np.int64))
-        covered = np.nonzero(cnt > 0)[0]
-        return pd.DataFrame({
-            "px": covered % npx,
-            "py": covered // npx,
-            "n_imgs": cnt[covered],
-            "v_last": enc_last[covered] % _ENC_LAST,
-            "v_min": vmin[covered],
-            "v_max": vmax[covered],
-            "idx_max": enc_idx[covered] % _ENC_IDX,
-        })
-
-    return cand.mapInPandas(mosaic_window_partials, schema=_PARTIAL_SCHEMA) \
-        .groupBy("window_id").applyInPandas(merge, schema=_OUT_SCHEMA)
-
-
-_THRESH_PARTIAL_SCHEMA = StructType([
-    StructField("window_id", LongType()),
-    StructField("cnt", ArrayType(LongType())),
-    StructField("enc_last", ArrayType(LongType())),
-    StructField("v_min", ArrayType(LongType())),
-    StructField("v_max", ArrayType(LongType())),
-])
-
-_THRESH_OUT_SCHEMA = StructType([
-    StructField("px", LongType()),
-    StructField("py", LongType()),
-    StructField("n_imgs", LongType()),
-    StructField("v_last", LongType()),
-    StructField("v_min", LongType()),
-    StructField("v_max", LongType()),
-])
+    accs = {"cnt": (0, np.add), "enc_last": (-1, np.maximum),
+            "v_min": (_BIG, np.minimum), "v_max": (-1, np.maximum),
+            "enc_idx": (-1, np.maximum)}
+    return _composite(images, x0, y0, npx, npy, res, accs, window, finish,
+                      _schema("px", "py", "n_imgs", "v_last", "v_min",
+                              "v_max", "idx_max"))
 
 
 def mosaic_thresh_window(images: DataFrame, x0: float, y0: float,
@@ -198,83 +192,30 @@ def mosaic_thresh_window(images: DataFrame, x0: float, y0: float,
     Output pixels with no valid contribution are absent (the reference
     leaves the background value there).
     """
-    xw, yh = x0 + npx * res, y0 + npy * res
-    cand = images.where(
-        (F.col("xmax") > F.lit(x0)) & (F.col("xmin") < F.lit(xw))
-        & (F.col("ymax") > F.lit(y0)) & (F.col("ymin") < F.lit(yh))
-    ).select(*_CAND_COLS)
 
-    cxs = x0 + (np.arange(npx, dtype=np.float64) + 0.5) * res
-    cys = y0 + (np.arange(npy, dtype=np.float64) + 0.5) * res
-    big = np.iinfo(np.int64).max
+    def thresh_window(acc, iid, arr, ix, pick):
+        v = arr[pick].astype(np.int64)
+        ok = (v > lower) & (v < upper)   # strict, the reference rule
+        acc["cnt"][ix] += ok
+        acc["enc_last"][ix] = np.maximum(
+            acc["enc_last"][ix], np.where(ok, iid * _ENC_LAST + v, -1))
+        acc["v_min"][ix] = np.minimum(acc["v_min"][ix],
+                                      np.where(ok, v, _BIG))
+        acc["v_max"][ix] = np.maximum(acc["v_max"][ix],
+                                      np.where(ok, v, -1))
 
-    def mosaic_thresh_window_partials(it):
-        for pdf in it:
-            n = npx * npy
-            cnt = np.zeros(n, np.int64)
-            enc_last = np.full(n, -1, np.int64)
-            vmin = np.full(n, big, np.int64)
-            vmax = np.full(n, -1, np.int64)
-            c2 = cnt.reshape(npy, npx)
-            el2 = enc_last.reshape(npy, npx)
-            mn2 = vmin.reshape(npy, npx)
-            mx2 = vmax.reshape(npy, npx)
-            for iid, arr, sel_y, sel_x, sy, sx in _window_hits(
-                    pdf, cxs, cys, res):
-                v = arr[np.ix_(sy, sx)].astype(np.int64)
-                ok = (v > lower) & (v < upper)   # strict, the reference rule
-                ix = np.ix_(sel_y, sel_x)
-                c2[ix] += ok
-                el2[ix] = np.maximum(el2[ix],
-                                     np.where(ok, iid * _ENC_LAST + v, -1))
-                mn2[ix] = np.minimum(mn2[ix], np.where(ok, v, big))
-                mx2[ix] = np.maximum(mx2[ix], np.where(ok, v, -1))
-            yield pd.DataFrame({"window_id": [0], "cnt": [cnt],
-                                "enc_last": [enc_last], "v_min": [vmin],
-                                "v_max": [vmax]})
+    def finish(tot):
+        covered = np.nonzero(tot["cnt"] > 0)[0]
+        return {**_pixels(covered, npx, tot["cnt"]),
+                "v_last": tot["enc_last"][covered] % _ENC_LAST,
+                "v_min": tot["v_min"][covered],
+                "v_max": tot["v_max"][covered]}
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = npx * npy
-        cnt = np.zeros(n, np.int64)
-        enc_last = np.full(n, -1, np.int64)
-        vmin = np.full(n, big, np.int64)
-        vmax = np.full(n, -1, np.int64)
-        for r in pdf.itertuples(index=False):
-            cnt += np.asarray(r.cnt, np.int64)
-            enc_last = np.maximum(enc_last, np.asarray(r.enc_last, np.int64))
-            vmin = np.minimum(vmin, np.asarray(r.v_min, np.int64))
-            vmax = np.maximum(vmax, np.asarray(r.v_max, np.int64))
-        covered = np.nonzero(cnt > 0)[0]
-        return pd.DataFrame({
-            "px": covered % npx,
-            "py": covered // npx,
-            "n_imgs": cnt[covered],
-            "v_last": enc_last[covered] % _ENC_LAST,
-            "v_min": vmin[covered],
-            "v_max": vmax[covered],
-        })
-
-    return cand.mapInPandas(
-        mosaic_thresh_window_partials, schema=_THRESH_PARTIAL_SCHEMA) \
-        .groupBy("window_id").applyInPandas(merge, schema=_THRESH_OUT_SCHEMA)
-
-
-_TREND_PARTIAL_SCHEMA = StructType([
-    StructField("window_id", LongType()),
-    StructField("n", ArrayType(LongType())),
-    StructField("st", ArrayType(LongType())),
-    StructField("stt", ArrayType(LongType())),
-    StructField("sv", ArrayType(LongType())),
-    StructField("stv", ArrayType(LongType())),
-])
-
-_TREND_OUT_SCHEMA = StructType([
-    StructField("px", LongType()),
-    StructField("py", LongType()),
-    StructField("n_imgs", LongType()),
-    StructField("slope", DoubleType()),
-    StructField("intercept", DoubleType()),
-])
+    accs = {"cnt": (0, np.add), "enc_last": (-1, np.maximum),
+            "v_min": (_BIG, np.minimum), "v_max": (-1, np.maximum)}
+    return _composite(images, x0, y0, npx, npy, res, accs, thresh_window,
+                      finish, _schema("px", "py", "n_imgs", "v_last",
+                                      "v_min", "v_max"))
 
 
 def pixel_trend_window(images: DataFrame, x0: float, y0: float,
@@ -289,82 +230,48 @@ def pixel_trend_window(images: DataFrame, x0: float, y0: float,
     two final IEEE divisions — bit-stable under any partitioning.
     Pixels seen by >= 2 images get a fit; others drop.
     """
-    xw, yh = x0 + npx * res, y0 + npy * res
-    cand = images.where(
-        (F.col("xmax") > F.lit(x0)) & (F.col("xmin") < F.lit(xw))
-        & (F.col("ymax") > F.lit(y0)) & (F.col("ymin") < F.lit(yh))
-    ).select(*_CAND_COLS)
 
-    cxs = x0 + (np.arange(npx, dtype=np.float64) + 0.5) * res
-    cys = y0 + (np.arange(npy, dtype=np.float64) + 0.5) * res
+    def pixel_trend_window(acc, iid, arr, ix, pick):
+        v = arr[pick].astype(np.int64)
+        t = np.int64(iid)
+        acc["n"][ix] += 1
+        acc["st"][ix] += t
+        acc["stt"][ix] += t * t
+        acc["sv"][ix] += v
+        acc["stv"][ix] += t * v
 
-    def mosaic_pixel_trend_window_partials(it):
-        for pdf in it:
-            size = npx * npy
-            acc = {k: np.zeros(size, np.int64)
-                   for k in ("n", "st", "stt", "sv", "stv")}
-            a2 = {k: v.reshape(npy, npx) for k, v in acc.items()}
-            for iid, arr, sel_y, sel_x, sy, sx in _window_hits(
-                    pdf, cxs, cys, res):
-                v = arr[np.ix_(sy, sx)].astype(np.int64)
-                t = np.int64(iid)
-                ix = np.ix_(sel_y, sel_x)
-                a2["n"][ix] += 1
-                a2["st"][ix] += t
-                a2["stt"][ix] += t * t
-                a2["sv"][ix] += v
-                a2["stv"][ix] += t * v
-            yield pd.DataFrame({"window_id": [0],
-                                **{k: [acc[k]] for k in acc}})
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        size = npx * npy
-        tot = {k: np.zeros(size, np.int64)
-               for k in ("n", "st", "stt", "sv", "stv")}
-        for r in pdf.itertuples(index=False):
-            for k in tot:
-                tot[k] += np.asarray(getattr(r, k), np.int64)
+    def finish(tot):
         ok = np.nonzero(tot["n"] >= 2)[0]
         n = tot["n"][ok].astype(np.float64)
         st = tot["st"][ok].astype(np.float64)
-        stt = tot["stt"][ok].astype(np.float64)
         sv = tot["sv"][ok].astype(np.float64)
-        stv = tot["stv"][ok].astype(np.float64)
         num = (tot["n"][ok] * tot["stv"][ok]
                - tot["st"][ok] * tot["sv"][ok]).astype(np.float64)
         den = (tot["n"][ok] * tot["stt"][ok]
                - tot["st"][ok] * tot["st"][ok]).astype(np.float64)
         slope = num / den
         intercept = (sv - slope * st) / n
-        return pd.DataFrame({
-            "px": ok % npx, "py": ok // npx, "n_imgs": tot["n"][ok],
-            "slope": slope, "intercept": intercept,
-        })
+        return {**_pixels(ok, npx, tot["n"]),
+                "slope": slope, "intercept": intercept}
 
-    return cand.mapInPandas(
-        mosaic_pixel_trend_window_partials, schema=_TREND_PARTIAL_SCHEMA) \
-        .groupBy("window_id").applyInPandas(merge, schema=_TREND_OUT_SCHEMA)
+    accs = {k: (0, np.add) for k in ("n", "st", "stt", "sv", "stv")}
+    return _composite(images, x0, y0, npx, npy, res, accs,
+                      pixel_trend_window, finish,
+                      _schema("px", "py", "n_imgs", ("slope", DoubleType()),
+                              ("intercept", DoubleType())))
 
-
-_CMI_PARTIAL_SCHEMA = StructType([
-    StructField("window_id", LongType()),
-    StructField("cnt", ArrayType(LongType())),
-    StructField("enc", ArrayType(LongType())),
-])
-
-_CMI_OUT_SCHEMA = StructType([
-    StructField("px", LongType()),
-    StructField("py", LongType()),
-    StructField("n_imgs", LongType()),
-    StructField("best_idx", LongType()),
-    StructField("best_id", LongType()),
-    StructField("best_v", LongType()),
-])
 
 #: composite encoding limits: |index| < 2^21, id < 2^21, v < 2^11
 _CMI_IDX_OFF = 1 << 21
 _CMI_ID_SHIFT = 1 << 32
 _CMI_V_SHIFT = 1 << 11
+
+
+def _best_cols(e):
+    """Decode ``(idx + 2^21) * 2^32 + id * 2^11 + v`` encodings."""
+    return {"best_idx": e // _CMI_ID_SHIFT - _CMI_IDX_OFF,
+            "best_id": (e % _CMI_ID_SHIFT) // _CMI_V_SHIFT,
+            "best_v": e % _CMI_V_SHIFT}
 
 
 def composite_max_index_window(images: DataFrame, x0: float, y0: float,
@@ -387,68 +294,32 @@ def composite_max_index_window(images: DataFrame, x0: float, y0: float,
     Encoding limits: ~2M distinct image ids and 11-bit pixel values;
     beyond that, widen to a struct max (documented, not needed here).
     """
-    xw, yh = x0 + npx * res, y0 + npy * res
-    cand = images.where(
-        (F.col("xmax") > F.lit(x0)) & (F.col("xmin") < F.lit(xw))
-        & (F.col("ymax") > F.lit(y0)) & (F.col("ymin") < F.lit(yh))
-    ).select(*_CAND_COLS)
 
-    cxs = x0 + (np.arange(npx, dtype=np.float64) + 0.5) * res
-    cys = y0 + (np.arange(npy, dtype=np.float64) + 0.5) * res
+    def composite_max_index_window(acc, iid, arr, ix, pick):
+        b1 = arr.astype(np.int64)
+        b2 = b1[:, ::-1]
+        idx_plane = np.floor(
+            (b2 - b1) * 1000000.0 / (b2 + b1 + 1)).astype(np.int64)
+        e_new = ((idx_plane[pick] + _CMI_IDX_OFF) * _CMI_ID_SHIFT
+                 + iid * _CMI_V_SHIFT + b1[pick])
+        acc["cnt"][ix] += 1
+        acc["enc"][ix] = np.maximum(acc["enc"][ix], e_new)
 
-    def mosaic_composite_max_index_window_partials(it):
-        for pdf in it:
-            n = npx * npy
-            cnt = np.zeros(n, np.int64)
-            enc = np.full(n, -1, np.int64)
-            c2 = cnt.reshape(npy, npx)
-            e2 = enc.reshape(npy, npx)
-            for iid, arr, sel_y, sel_x, sy, sx in _window_hits(
-                    pdf, cxs, cys, res):
-                b1 = arr.astype(np.int64)
-                b2 = b1[:, ::-1]
-                idx_plane = np.floor(
-                    (b2 - b1) * 1000000.0 / (b2 + b1 + 1)).astype(np.int64)
-                v = b1[np.ix_(sy, sx)]
-                ix_v = idx_plane[np.ix_(sy, sx)]
-                e_new = ((ix_v + _CMI_IDX_OFF) * _CMI_ID_SHIFT
-                         + iid * _CMI_V_SHIFT + v)
-                ix = np.ix_(sel_y, sel_x)
-                c2[ix] += 1
-                e2[ix] = np.maximum(e2[ix], e_new)
-            yield pd.DataFrame({"window_id": [0], "cnt": [cnt],
-                                "enc": [enc]})
+    def finish(tot):
+        covered = np.nonzero(tot["cnt"] > 0)[0]
+        return {**_pixels(covered, npx, tot["cnt"]),
+                **_best_cols(tot["enc"][covered])}
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = npx * npy
-        cnt = np.zeros(n, np.int64)
-        enc = np.full(n, -1, np.int64)
-        for r in pdf.itertuples(index=False):
-            cnt += np.asarray(r.cnt, np.int64)
-            enc = np.maximum(enc, np.asarray(r.enc, np.int64))
-        covered = np.nonzero(cnt > 0)[0]
-        e = enc[covered]
-        return pd.DataFrame({
-            "px": covered % npx,
-            "py": covered // npx,
-            "n_imgs": cnt[covered],
-            "best_idx": e // _CMI_ID_SHIFT - _CMI_IDX_OFF,
-            "best_id": (e % _CMI_ID_SHIFT) // _CMI_V_SHIFT,
-            "best_v": e % _CMI_V_SHIFT,
-        })
-
-    return cand.mapInPandas(
-        mosaic_composite_max_index_window_partials,
-        schema=_CMI_PARTIAL_SCHEMA) \
-        .groupBy("window_id").applyInPandas(merge, schema=_CMI_OUT_SCHEMA)
+    accs = {"cnt": (0, np.add), "enc": (-1, np.maximum)}
+    return _composite(images, x0, y0, npx, npy, res, accs,
+                      composite_max_index_window, finish,
+                      _schema("px", "py", "n_imgs", "best_idx", "best_id",
+                              "best_v"))
 
 
-_MODE_PARTIAL_SCHEMA = StructType([
-    StructField("code", LongType()),     # flat_pixel * 2048 + value
-    StructField("cnt", LongType()),
-])
-
-_MODE_OUT_SCHEMA = ["px", "py", "n_imgs", "mode_v"]
+_MODE_PARTIAL_SCHEMA = _schema(
+    "code",     # flat_pixel * 2048 + value
+    "cnt")
 
 
 def mosaic_mode_window(images: DataFrame, x0: float, y0: float,
@@ -464,35 +335,21 @@ def mosaic_mode_window(images: DataFrame, x0: float, y0: float,
 
         argmax(count, tie -> min value) = max(cnt * 2048 + (2047 - v))
     """
-    xw, yh = x0 + npx * res, y0 + npy * res
-    cand = images.where(
-        (F.col("xmax") > F.lit(x0)) & (F.col("xmin") < F.lit(xw))
-        & (F.col("ymax") > F.lit(y0)) & (F.col("ymin") < F.lit(yh))
-    ).select(*_CAND_COLS)
+    cand, hits = _window_images(images, x0, y0, npx, npy, res)
 
-    cxs = x0 + (np.arange(npx, dtype=np.float64) + 0.5) * res
-    cys = y0 + (np.arange(npy, dtype=np.float64) + 0.5) * res
-
-    def mosaic_mode_window_partials(it):
-        for pdf in it:
-            codes = []
-            for iid, arr, sel_y, sel_x, sy, sx in _window_hits(
-                    pdf, cxs, cys, res):
-                v = arr[np.ix_(sy, sx)].astype(np.int64)
-                flat = (sel_y[:, None] * npx + sel_x[None, :]).astype(np.int64)
-                codes.append((flat * 2048 + v).ravel())
-            if codes:
-                uniq, cnt = np.unique(np.concatenate(codes),
-                                      return_counts=True)
-                yield pd.DataFrame({"code": uniq,
-                                    "cnt": cnt.astype(np.int64)})
-            else:
-                yield pd.DataFrame({"code": np.zeros(0, np.int64),
-                                    "cnt": np.zeros(0, np.int64)})
+    def mosaic_mode_window_partials(batches):
+        for batch in batches:
+            codes = [np.zeros(0, np.int64)]
+            for _, arr, (sel_y, sel_x), pick in hits(batch):
+                flat = (sel_y * npx + sel_x).astype(np.int64)
+                codes.append((flat * 2048 + arr[pick]).ravel())
+            uniq, cnt = np.unique(np.concatenate(codes), return_counts=True)
+            yield codec.to_batch({"code": uniq, "cnt": cnt},
+                                 _MODE_PARTIAL_SCHEMA)
 
     counts = (
-        cand.mapInPandas(mosaic_mode_window_partials,
-                         schema=_MODE_PARTIAL_SCHEMA)
+        cand.mapInArrow(mosaic_mode_window_partials,
+                        schema=_MODE_PARTIAL_SCHEMA)
         .groupBy("code").agg(F.sum("cnt").alias("n"))
         .withColumn("flat", (F.col("code") / 2048).cast("long"))
         .withColumn("v", F.col("code") % 2048)
@@ -510,18 +367,6 @@ def mosaic_mode_window(images: DataFrame, x0: float, y0: float,
     )
 
 
-_CNW_PARTIAL_SCHEMA = StructType([
-    StructField("window_id", LongType()),
-    StructField("cnt", ArrayType(LongType())),
-    StructField("votes", ArrayType(LongType())),
-    StructField("encv", ArrayType(LongType())),
-    StructField("encw", ArrayType(LongType())),
-])
-
-_CNW_OUT_SCHEMA = ("px long, py long, n_imgs long, lw_mask long, "
-                   "best_idx long, best_id long, best_v long")
-
-
 def composite_ndvi_ndwi_window(images: DataFrame, x0: float, y0: float,
                                npx: int, npy: int, res: float) -> DataFrame:
     """imageutils.imagecomp.create_max_ndvi_ndwi_composite
@@ -536,75 +381,37 @@ def composite_ndvi_ndwi_window(images: DataFrame, x0: float, y0: float,
     the water vote count (NDWI > 0 per source image).  Band stand-ins:
     red = plane, nir = horizontal mirror, green = vertical flip (the
     indices-family convention)."""
-    xw, yh = x0 + npx * res, y0 + npy * res
-    cand = images.where(
-        (F.col("xmax") > F.lit(x0)) & (F.col("xmin") < F.lit(xw))
-        & (F.col("ymax") > F.lit(y0)) & (F.col("ymin") < F.lit(yh))
-    ).select(*_CAND_COLS)
 
-    cxs = x0 + (np.arange(npx, dtype=np.float64) + 0.5) * res
-    cys = y0 + (np.arange(npy, dtype=np.float64) + 0.5) * res
+    def composite_ndvi_ndwi_window(acc, iid, arr, ix, pick):
+        red = arr.astype(np.int64)
+        nir = red[:, ::-1]
+        green = red[::-1, :]
+        ndvi = np.floor((nir - red) * 1000000.0
+                        / (nir + red + 1)).astype(np.int64)
+        ndwi = np.floor((green - nir) * 1000000.0
+                        / (green + nir + 1)).astype(np.int64)
+        v = red[pick]
+        ev_new = ((ndvi[pick] + _CMI_IDX_OFF) * _CMI_ID_SHIFT
+                  + iid * _CMI_V_SHIFT + v)
+        ew_new = ((ndwi[pick] + _CMI_IDX_OFF) * _CMI_ID_SHIFT
+                  + iid * _CMI_V_SHIFT + v)
+        acc["cnt"][ix] += 1
+        acc["votes"][ix] += (ndwi[pick] > 0).astype(np.int64)
+        acc["encv"][ix] = np.maximum(acc["encv"][ix], ev_new)
+        acc["encw"][ix] = np.maximum(acc["encw"][ix], ew_new)
 
-    def mosaic_composite_ndvi_ndwi_window_partials(it):
-        for pdf in it:
-            n = npx * npy
-            cnt = np.zeros(n, np.int64)
-            votes = np.zeros(n, np.int64)
-            encv = np.full(n, -1, np.int64)
-            encw = np.full(n, -1, np.int64)
-            c2 = cnt.reshape(npy, npx)
-            t2 = votes.reshape(npy, npx)
-            ev2 = encv.reshape(npy, npx)
-            ew2 = encw.reshape(npy, npx)
-            for iid, arr, sel_y, sel_x, sy, sx in _window_hits(
-                    pdf, cxs, cys, res):
-                red = arr.astype(np.int64)
-                nir = red[:, ::-1]
-                green = red[::-1, :]
-                ndvi = np.floor((nir - red) * 1000000.0
-                                / (nir + red + 1)).astype(np.int64)
-                ndwi = np.floor((green - nir) * 1000000.0
-                                / (green + nir + 1)).astype(np.int64)
-                pick = np.ix_(sy, sx)
-                v = red[pick]
-                ev_new = ((ndvi[pick] + _CMI_IDX_OFF) * _CMI_ID_SHIFT
-                          + iid * _CMI_V_SHIFT + v)
-                ew_new = ((ndwi[pick] + _CMI_IDX_OFF) * _CMI_ID_SHIFT
-                          + iid * _CMI_V_SHIFT + v)
-                ix = np.ix_(sel_y, sel_x)
-                c2[ix] += 1
-                t2[ix] += (ndwi[pick] > 0).astype(np.int64)
-                ev2[ix] = np.maximum(ev2[ix], ev_new)
-                ew2[ix] = np.maximum(ew2[ix], ew_new)
-            yield pd.DataFrame({"window_id": [0], "cnt": [cnt],
-                                "votes": [votes], "encv": [encv],
-                                "encw": [encw]})
+    def finish(tot):
+        covered = np.nonzero(tot["cnt"] > 0)[0]
+        cnt = tot["cnt"]
+        water = 2 * tot["votes"][covered] > cnt[covered]
+        e = np.where(water, tot["encw"][covered], tot["encv"][covered])
+        return {**_pixels(covered, npx, cnt),
+                "lw_mask": np.where(water, 2, 1).astype(np.int64),
+                **_best_cols(e)}
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = npx * npy
-        cnt = np.zeros(n, np.int64)
-        votes = np.zeros(n, np.int64)
-        encv = np.full(n, -1, np.int64)
-        encw = np.full(n, -1, np.int64)
-        for r in pdf.itertuples(index=False):
-            cnt += np.asarray(r.cnt, np.int64)
-            votes += np.asarray(r.votes, np.int64)
-            encv = np.maximum(encv, np.asarray(r.encv, np.int64))
-            encw = np.maximum(encw, np.asarray(r.encw, np.int64))
-        covered = np.nonzero(cnt > 0)[0]
-        water = 2 * votes[covered] > cnt[covered]
-        e = np.where(water, encw[covered], encv[covered])
-        return pd.DataFrame({
-            "px": covered % npx,
-            "py": covered // npx,
-            "n_imgs": cnt[covered],
-            "lw_mask": np.where(water, 2, 1).astype(np.int64),
-            "best_idx": e // _CMI_ID_SHIFT - _CMI_IDX_OFF,
-            "best_id": (e % _CMI_ID_SHIFT) // _CMI_V_SHIFT,
-            "best_v": e % _CMI_V_SHIFT,
-        })
-
-    return cand.mapInPandas(
-        mosaic_composite_ndvi_ndwi_window_partials,
-        schema=_CNW_PARTIAL_SCHEMA) \
-        .groupBy("window_id").applyInPandas(merge, schema=_CNW_OUT_SCHEMA)
+    accs = {"cnt": (0, np.add), "votes": (0, np.add),
+            "encv": (-1, np.maximum), "encw": (-1, np.maximum)}
+    return _composite(images, x0, y0, npx, npy, res, accs,
+                      composite_ndvi_ndwi_window, finish,
+                      _schema("px", "py", "n_imgs", "lw_mask", "best_idx",
+                              "best_id", "best_v"))

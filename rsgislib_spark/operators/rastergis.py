@@ -37,7 +37,7 @@ regions differ by construction, exactly the lattice
 
 Spark-first shape: clumping is per-image (the image is the natural
 partition unit — see operators/rasterize.py), so the WHOLE enriched RAT
-is built in ONE ``mapInPandas`` pass: label once, then compute sizes,
+is built in ONE ``mapInArrow`` pass: label once, then compute sizes,
 bboxes, mode, percentiles and the neighbour aggregates with vectorized
 numpy on the labeled plane.  No pixel ever enters a shuffle; the output
 is one small row per clump.  ``collapse_rat`` is pure Catalyst (window

@@ -29,7 +29,6 @@ per-image labeling is exact, not approximate.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -191,10 +190,12 @@ def clump_stats_tiled(images: DataFrame, threshold: int,
     tiles = tile_pixels(images, tile, tile, encode=True) \
         .join(specs, ["image_id", "tile_idx"])
 
-    def kernel(it):
-        for pdf in it:
-            out = {k: [] for k in ("image_id", "kind", "lab", "k",
-                                   "side", "n")}
+    tile_cols = ("image_id", "bytes", "tile_w", "tile_h", "fmt", "txmin",
+                 "tymin", "img_w", "img_h")
+
+    def rasterize_clump_stats_tiled(batches):
+        for batch in batches:
+            out = {n: [] for n in _TILED_SCHEMA.names}
 
             def emit(image_id, kind, lab, k, side, n):
                 out["image_id"].append(image_id)
@@ -204,13 +205,13 @@ def clump_stats_tiled(images: DataFrame, threshold: int,
                 out["side"].append(int(side))
                 out["n"].append(int(n))
 
-            for row in pdf.itertuples(index=False):
-                arr = codec.decode_image(bytes(row.bytes), int(row.tile_w),
-                                         int(row.tile_h), str(row.fmt))
+            for (image_id, buf, tile_w, tile_h, fmt, x0, y0, iw,
+                 ih) in zip(*(batch.column(c).to_pylist()
+                             for c in tile_cols)):
+                arr = codec.decode_image(buf, tile_w, tile_h, fmt)
                 mask = arr.astype(np.int64) >= threshold
                 lab = label_components(mask)
                 th, tw = mask.shape
-                x0, y0, iw = int(row.txmin), int(row.tymin), int(row.img_w)
                 gidx = ((y0 + np.arange(th)[:, None]) * iw
                         + (x0 + np.arange(tw)[None, :])).astype(np.int64)
                 nlab = int(lab.max())
@@ -221,35 +222,35 @@ def clump_stats_tiled(images: DataFrame, threshold: int,
                     np.minimum.at(glab, lab.ravel(), gidx.ravel())
                     sizes = np.bincount(lab.ravel(), minlength=nlab + 1)
                     for c in range(1, nlab + 1):
-                        emit(row.image_id, 0, glab[c], 0, 0, sizes[c])
+                        emit(image_id, 0, glab[c], 0, 0, sizes[c])
                     # border cells: seams keyed so both sides join
-                    ih = int(row.img_h)
                     if x0 + tw < iw:                      # right edge
                         sel = mask[:, tw - 1]
                         ys = np.nonzero(sel)[0]
                         for y in ys:
-                            emit(row.image_id, 1, glab[lab[y, tw - 1]],
+                            emit(image_id, 1, glab[lab[y, tw - 1]],
                                  _SEAM_V + (x0 + tw) * (1 << 21) + y0 + y,
                                  0, 0)
                     if x0 > 0:                            # left edge
                         sel = mask[:, 0]
                         for y in np.nonzero(sel)[0]:
-                            emit(row.image_id, 1, glab[lab[y, 0]],
+                            emit(image_id, 1, glab[lab[y, 0]],
                                  _SEAM_V + x0 * (1 << 21) + y0 + y, 1, 0)
                     if y0 + th < ih:                      # bottom edge
                         sel = mask[th - 1, :]
                         for x in np.nonzero(sel)[0]:
-                            emit(row.image_id, 1, glab[lab[th - 1, x]],
+                            emit(image_id, 1, glab[lab[th - 1, x]],
                                  _SEAM_H + (y0 + th) * (1 << 21) + x0 + x,
                                  0, 0)
                     if y0 > 0:                            # top edge
                         sel = mask[0, :]
                         for x in np.nonzero(sel)[0]:
-                            emit(row.image_id, 1, glab[lab[0, x]],
+                            emit(image_id, 1, glab[lab[0, x]],
                                  _SEAM_H + y0 * (1 << 21) + x0 + x, 1, 0)
-            yield pd.DataFrame(out)
+            yield codec.to_batch(out, _TILED_SCHEMA)
 
-    rows = tiles.mapInPandas(kernel, schema=_TILED_SCHEMA).persist()
+    rows = tiles.mapInArrow(rasterize_clump_stats_tiled,
+                            schema=_TILED_SCHEMA).persist()
     comps = rows.where(F.col("kind") == 0).select("image_id", "lab", "n")
     borders = rows.where(F.col("kind") == 1).select("image_id", "lab",
                                                     "k", "side")

@@ -23,7 +23,7 @@ family as the pointer-doubling clump oracle.  ``k`` is parameterized
 k=4 so the SQL argmin stays a readable 4-way CASE — the engine kernel
 is k-agnostic).
 
-Spark-first shape: one ``mapInPandas`` pass per image (images are the
+Spark-first shape: one ``mapInArrow`` pass per image (images are the
 natural partition unit); k-means iterates on the 1024-bin value
 histogram, not the pixel plane, so the per-image cost is O(pixels) for
 histogram + assignment and O(k * bins) per iteration.  At 100 TB the

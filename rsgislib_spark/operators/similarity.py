@@ -314,34 +314,34 @@ def gram_matrix(vectors: DataFrame, dim: int = 64,
     (G is symmetric).
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
+    from ..functions import codec
+
     d = int(dim)
-
-    def partials(it):
-        acc = np.zeros((d, d), dtype=np.int64)
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            if quantized:
-                m = np.stack([np.asarray(e, np.int64)
-                              for e in pdf["embedding"]])
-            else:
-                m = np.stack([np.round(np.asarray(e, np.float64) * 1000)
-                              .astype(np.int64) for e in pdf["embedding"]])
-            acc += m.T @ m
-        iu, ju = np.triu_indices(d)
-        yield pd.DataFrame({"i": iu.astype(np.int64),
-                            "j": ju.astype(np.int64),
-                            "g": acc[iu, ju]})
-
     schema = StructType([StructField("i", LongType()),
                          StructField("j", LongType()),
                          StructField("g", LongType())])
+
+    def similarity_gram_matrix(batches):
+        acc = np.zeros((d, d), dtype=np.int64)
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            embs = batch.column("embedding").to_pylist()
+            if quantized:
+                m = np.asarray(embs, np.int64)
+            else:
+                m = np.round(np.asarray(embs, np.float64) * 1000) \
+                    .astype(np.int64)
+            acc += m.T @ m
+        iu, ju = np.triu_indices(d)
+        yield codec.to_batch({"i": iu, "j": ju, "g": acc[iu, ju]}, schema)
+
     # one partial d x d matrix per task (never per row), merged by a
     # groupBy over <= d*(d+1)/2 keys — constant-size shuffle at any scale
-    return vectors.select("embedding").mapInPandas(partials, schema=schema) \
+    return vectors.select("embedding") \
+        .mapInArrow(similarity_gram_matrix, schema=schema) \
         .groupBy("i", "j").agg(F.sum("g").alias("g"))
 
 

@@ -20,7 +20,7 @@ contains}``) as a two-phase Spark plan:
    *strict* inequalities for bbox-bbox intersects/contains; point-in-bbox
    uses the half-open ``min <= p < max`` convention so every point maps to
    exactly one cell-sized slot).  For general polygons the refinement is a
-   vectorized ray-casting PIP (``geo.geometry``) in an Arrow pandas UDF.
+   vectorized ray-casting PIP (``geo.geometry``) in an Arrow UDF.
 
 Scale levers (SURVEY.md §4.2):
 
@@ -46,9 +46,10 @@ import operator
 from typing import Iterable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..functions import codec
 from ..geo.cellindex import DEFAULT_RES, _RES_SHIFT, _X_SHIFT, cell_sql_expr
 
 __all__ = [
@@ -260,7 +261,8 @@ def spatial_join(
     )
 
 
-_POLY_PAIR_SCHEMA = "image_id string, poly_id long"
+_POLY_PAIR_SCHEMA = StructType([StructField("image_id", StringType()),
+                                StructField("poly_id", LongType())])
 
 
 def spatial_join_poly(
@@ -279,7 +281,7 @@ def spatial_join_poly(
     The general-geometry path of ``perform_spatial_join``: candidate
     generation is the same :func:`cell_pairs` row join, refinement is
     the vectorized ray-casting PIP of ``geo.geometry.points_in_polygon``
-    run over Arrow batches with ``mapInPandas`` on the candidates'
+    run over Arrow batches with ``mapInArrow`` on the candidates'
     EXISTING partitioning — each batch vectorizes per polygon-within-
     batch, so no shuffle is spent on refinement and a continent-sized
     hot polygon's candidates stay spread across however many tasks
@@ -299,23 +301,26 @@ def spatial_join_poly(
         (lon, lon, lat, lat), pbox, _point_in_bbox(lon, lat, *pbox), res=res,
     ).select(point_key, lon, lat, poly_key, verts_col)
 
-    def refine(it):
-        for pdf in it:
-            kept = []
-            for _pk, grp in pdf.groupby(poly_key, sort=False):
-                poly = np.asarray([list(v) for v in grp[verts_col].iloc[0]],
+    def spatial_join_poly_refine(batches):
+        for batch in batches:
+            keys = batch.column(poly_key).to_pylist()
+            xs, ys = (np.asarray(batch.column(c).to_pylist(), np.float64)
+                      for c in (lon, lat))
+            rows = {}
+            for i, k in enumerate(keys):
+                rows.setdefault(k, []).append(i)
+            inside = np.zeros(batch.num_rows, dtype=bool)
+            for idx in rows.values():
+                poly = np.asarray(batch.column(verts_col)[idx[0]].as_py(),
                                   dtype=np.float64)
-                inside = points_in_polygon(grp[lon].to_numpy(),
-                                           grp[lat].to_numpy(), poly)
-                kept.append(grp.loc[inside, [point_key, poly_key]])
-            if kept:
-                out = pd.concat(kept, ignore_index=True)
-            else:
-                out = pd.DataFrame({point_key: [], poly_key: []})
-            yield out.rename(columns={point_key: "image_id",
-                                      poly_key: "poly_id"})
+                inside[idx] = points_in_polygon(xs[idx], ys[idx], poly)
+            kept = np.nonzero(inside)[0]
+            yield codec.to_batch(
+                {"image_id": batch.column(point_key).take(kept),
+                 "poly_id": batch.column(poly_key).take(kept)},
+                _POLY_PAIR_SCHEMA)
 
-    return cand.mapInPandas(refine, _POLY_PAIR_SCHEMA)
+    return cand.mapInArrow(spatial_join_poly_refine, _POLY_PAIR_SCHEMA)
 
 
 def spatial_select(base: DataFrame, roi: DataFrame, **kw) -> DataFrame:
@@ -368,8 +373,6 @@ def vec_predicate_vec(
     any_match), zeros kept.  The output key column keeps ``polys_a``'s
     key name AND type (string keys work; nothing is coerced).
     """
-    from pyspark.sql.types import LongType, StructField, StructType
-
     from ..geo.geometry import PAIR_PREDICATES, poly_pair_predicate
 
     if predicate not in PAIR_PREDICATES:
@@ -395,19 +398,17 @@ def vec_predicate_vec(
                       abox, bbox, on,
                       res=res, broadcast=broadcast).select("akey", "av", "bv")
 
-    def refine(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"akey": pdf["akey"],
-                                    "hit": pd.Series([], dtype="int64")})
-                continue
-            hits = poly_pair_predicate(list(pdf["av"]), list(pdf["bv"]),
+    def vec_predicate_vec_refine(batches):
+        for batch in batches:
+            hits = poly_pair_predicate(batch.column("av").to_pylist(),
+                                       batch.column("bv").to_pylist(),
                                        predicate)
-            yield pd.DataFrame({"akey": pdf["akey"].to_numpy(),
-                                "hit": hits.astype("int64")})
+            yield codec.to_batch({"akey": batch.column("akey"),
+                                  "hit": np.asarray(hits, np.int64)},
+                                 out_schema)
 
     agg = (
-        cand.mapInPandas(refine, out_schema)
+        cand.mapInArrow(vec_predicate_vec_refine, out_schema)
         .groupBy("akey").agg(F.sum("hit").alias("n_match"))
     )
     return (

@@ -47,7 +47,6 @@ import math
 import re
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -214,15 +213,14 @@ def warp_img_stats(images: DataFrame, epsg: int = 27700, out_w: int = 24,
     bilinear = kernel == "bilinear"
     schema = _BL_SCHEMA if bilinear else _NN_SCHEMA
 
-    def warp_img_stats(it):
-        for pdf in it:
-            n = len(pdf)
+    def warp_img_stats(batches):
+        for batch in batches:
+            n = batch.num_rows
             if n == 0:
                 continue
             env = run_steps_np(img_steps, {
-                "lon": pdf["lon"].to_numpy(np.float64),
-                "lat": pdf["lat"].to_numpy(np.float64),
-            })
+                c: np.asarray(batch.column(c).to_pylist(), np.float64)
+                for c in ("lon", "lat")})
             kcol = np.tile(np.arange(K, dtype=np.int64), n)
             penv = run_steps_np(px_steps, {
                 "k": kcol,
@@ -234,7 +232,7 @@ def warp_img_stats(images: DataFrame, epsg: int = 27700, out_w: int = 24,
             out = {f.name: [] for f in schema.fields}
             kw = np.arange(K, dtype=np.int64) + 1  # position weights
             for i, (image_id, arr) in enumerate(
-                    codec.planes(pdf, dtype=np.int64)):
+                    codec.planes(batch, dtype=np.int64)):
                 h, w = arr.shape
                 sl = slice(i * K, (i + 1) * K)
                 out["image_id"].append(image_id)
@@ -268,8 +266,7 @@ def warp_img_stats(images: DataFrame, epsg: int = 27700, out_w: int = 24,
                     out["chk_warp"].append(int((kw[ok] * (v + 1)).sum()))
                     out["min_warp"].append(int(v.min()) if v.size else nodata)
                     out["max_warp"].append(int(v.max()) if v.size else nodata)
-            yield pd.DataFrame(out)
+            yield codec.to_batch(out, schema)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt",
-                         "lon", "lat").mapInPandas(warp_img_stats,
-                                                   schema=schema)
+    return images.select(*codec.IMAGE_COLS, "lon", "lat") \
+        .mapInArrow(warp_img_stats, schema=schema)

@@ -31,7 +31,6 @@ network, only (pairs x histogram) partials do.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
                                StructField, StructType)
@@ -85,17 +84,36 @@ def _pair_work(pairs: DataFrame, images: DataFrame, salt_key: str,
         F.pmod(F.xxhash64(F.col(salt_key)), F.lit(int(n_salt))))
 
 
-def _image_groups(pdf, dtype=np.int64):
-    """``(image_id, plane, rows)`` per image of a batch of (image, zone)
-    pair rows: each image is decoded once for all of its rows."""
-    for image_id, rows in pdf.groupby("image_id", sort=False):
-        _, plane = next(codec.planes(rows.iloc[:1], dtype=dtype))
-        yield image_id, plane, rows
+def _image_groups(batch, *pair_cols, dtype=np.int64):
+    """``(image_id, plane, xmin, ymax, pairs)`` per image of an Arrow
+    batch of (image, pair) rows: each image is decoded once, and
+    ``pairs`` holds the ``pair_cols`` values of each of its rows."""
+    groups = {}
+    for i, image_id in enumerate(batch.column("image_id").to_pylist()):
+        groups.setdefault(image_id, []).append(i)
+    cols = [batch.column(c).to_pylist() for c in pair_cols]
+    for rows in groups.values():
+        image_id, plane, xmin, ymax = next(codec.planes(
+            batch.slice(rows[0], 1), "xmin", "ymax", dtype=dtype))
+        yield (image_id, plane, float(xmin), float(ymax),
+               [tuple(c[i] for c in cols) for i in rows])
 
 
-def _pair_partials(pdf_iter, res_deg: float, min_thres: float,
+def _append_partial(rows, zone_id, image_id, vals):
+    """One (zone, image) histogram partial row of ``vals`` (int64)."""
+    rows["zone_id"].append(int(zone_id))
+    rows["image_id"].append(image_id)
+    rows["n"].append(int(vals.size))
+    rows["s"].append(int(vals.sum()))
+    rows["ss"].append(int((vals * vals).sum()))
+    rows["mn"].append(int(vals.min()))
+    rows["mx"].append(int(vals.max()))
+    rows["hist"].append(np.bincount(vals, minlength=HIST_BINS))
+
+
+def _pair_partials(batches, res_deg: float, min_thres: float,
                    max_thres: float, nodata, membership: str = "center"):
-    """mapInPandas kernel: decode each image once, emit one partial row per
+    """mapInArrow kernel: decode each image once, emit one partial row per
     (image, zone) candidate pair.  ``membership`` = the pixel-in-poly mode
     (reference enum src/img/RSGISPixelInPoly.h:48-60):
 
@@ -128,14 +146,11 @@ def _pair_partials(pdf_iter, res_deg: float, min_thres: float,
       identically false; we implement the documented intent, matching
       the branch CONDITIONS exactly.)
     """
-    for pdf in pdf_iter:
-        rows = {k: [] for k in ("zone_id", "image_id", "n", "s", "ss",
-                                "mn", "mx", "hist")}
-        for img_id_key, arr, grp in _image_groups(pdf):
-            r0 = grp.iloc[0]
+    for batch in batches:
+        rows = {n: [] for n in _PARTIAL_SCHEMA.names}
+        for img_id_key, arr, tlx, tly, pairs in _image_groups(
+                batch, "zone_id", *_ZONE_BOX):
             h, w = arr.shape
-            tlx = float(r0["xmin"])
-            tly = float(r0["ymax"])
             cx = tlx + (np.arange(w) + 0.5) * res_deg          # pixel centers
             cy = tly - (np.arange(h) + 0.5) * res_deg
             if membership != "center":
@@ -143,13 +158,12 @@ def _pair_partials(pdf_iter, res_deg: float, min_thres: float,
                 ex1 = tlx + (np.arange(w) + 1) * res_deg
                 ey1 = tly - np.arange(h) * res_deg             # top edge
                 ey0 = tly - (np.arange(h) + 1) * res_deg       # bottom edge
-            for _, pr in grp.iterrows():
+            for zone_id, zxmin, zxmax, zymin, zymax in pairs:
                 mode = membership
                 if mode == "adaptive":
                     # branch by relative areas, exactly the reference's
                     # conditions (RSGISPixelInPoly.cpp:97-120, factor=1)
-                    zone_area = ((pr["zxmax"] - pr["zxmin"])
-                                 * (pr["zymax"] - pr["zymin"]))
+                    zone_area = (zxmax - zxmin) * (zymax - zymin)
                     pixel_area = res_deg * res_deg
                     if zone_area > pixel_area:
                         mode = "contains"
@@ -158,20 +172,20 @@ def _pair_partials(pdf_iter, res_deg: float, min_thres: float,
                     else:
                         mode = "center"
                 if mode == "center":
-                    in_x = (cx >= pr["zxmin"]) & (cx < pr["zxmax"])
-                    in_y = (cy >= pr["zymin"]) & (cy < pr["zymax"])
+                    in_x = (cx >= zxmin) & (cx < zxmax)
+                    in_y = (cy >= zymin) & (cy < zymax)
                 elif mode == "envelope":
-                    in_x = (ex1 > pr["zxmin"]) & (ex0 < pr["zxmax"])
-                    in_y = (ey1 > pr["zymin"]) & (ey0 < pr["zymax"])
+                    in_x = (ex1 > zxmin) & (ex0 < zxmax)
+                    in_y = (ey1 > zymin) & (ey0 < zymax)
                 elif mode == "contains":
-                    in_x = (ex0 >= pr["zxmin"]) & (ex1 <= pr["zxmax"])
-                    in_y = (ey0 >= pr["zymin"]) & (ey1 <= pr["zymax"])
+                    in_x = (ex0 >= zxmin) & (ex1 <= zxmax)
+                    in_y = (ey0 >= zymin) & (ey1 <= zymax)
                 elif mode == "pixel_contains_poly":
-                    in_x = (ex0 <= pr["zxmin"]) & (ex1 >= pr["zxmax"])
-                    in_y = (ey0 <= pr["zymin"]) & (ey1 >= pr["zymax"])
+                    in_x = (ex0 <= zxmin) & (ex1 >= zxmax)
+                    in_y = (ey0 <= zymin) & (ey1 >= zymax)
                 elif mode == "pixel_contains_poly_center":
-                    zcx = (pr["zxmin"] + pr["zxmax"]) / 2.0
-                    zcy = (pr["zymin"] + pr["zymax"]) / 2.0
+                    zcx = (zxmin + zxmax) / 2.0
+                    zcy = (zymin + zymax) / 2.0
                     in_x = (ex0 < zcx) & (zcx < ex1)
                     in_y = (ey0 < zcy) & (zcy < ey1)
                 elif mode == "overlaps_or_contains":
@@ -182,12 +196,12 @@ def _pair_partials(pdf_iter, res_deg: float, min_thres: float,
                     # Contains(A,A) is true) while a pixel that swallows
                     # the zone, even sharing an edge, is excluded.
                     # Evaluated per axis, combined on the 2-D grid.
-                    ov_x = (ex1 > pr["zxmin"]) & (ex0 < pr["zxmax"])
-                    ov_y = (ey1 > pr["zymin"]) & (ey0 < pr["zymax"])
-                    pip_x = (ex0 >= pr["zxmin"]) & (ex1 <= pr["zxmax"])
-                    pip_y = (ey0 >= pr["zymin"]) & (ey1 <= pr["zymax"])
-                    zip_x = (ex0 <= pr["zxmin"]) & (ex1 >= pr["zxmax"])
-                    zip_y = (ey0 <= pr["zymin"]) & (ey1 >= pr["zymax"])
+                    ov_x = (ex1 > zxmin) & (ex0 < zxmax)
+                    ov_y = (ey1 > zymin) & (ey0 < zymax)
+                    pip_x = (ex0 >= zxmin) & (ex1 <= zxmax)
+                    pip_y = (ey0 >= zymin) & (ey1 <= zymax)
+                    zip_x = (ex0 <= zxmin) & (ex1 >= zxmax)
+                    zip_y = (ey0 <= zymin) & (ey1 >= zymax)
                     keep = (np.outer(ov_y, ov_x)
                             & (np.outer(pip_y, pip_x)
                                | ~np.outer(zip_y, zip_x)))
@@ -201,23 +215,9 @@ def _pair_partials(pdf_iter, res_deg: float, min_thres: float,
                 if nodata is not None:
                     vals = vals[vals != nodata]
                 vals = vals[(vals >= min_thres) & (vals <= max_thres)]
-                if vals.size == 0:
-                    continue
-                rows["zone_id"].append(int(pr["zone_id"]))
-                rows["image_id"].append(img_id_key)
-                rows["n"].append(int(vals.size))
-                rows["s"].append(int(vals.sum()))
-                rows["ss"].append(int((vals * vals).sum()))
-                rows["mn"].append(int(vals.min()))
-                rows["mx"].append(int(vals.max()))
-                rows["hist"].append(np.bincount(vals, minlength=HIST_BINS)
-                                    .astype(np.int64))
-        # an all-empty batch (possible under sparse memberships like
-        # pixel_contains_poly at tiny SF) must not be yielded: pandas
-        # types empty columns float64, which Arrow cannot convert to
-        # list<int64> (NumPyConverter error kills the whole task)
-        if rows["zone_id"]:
-            yield pd.DataFrame(rows)
+                if vals.size:
+                    _append_partial(rows, zone_id, img_id_key, vals)
+        yield codec.to_batch(rows, _PARTIAL_SCHEMA)
 
 
 _FINAL_SCHEMA = StructType([
@@ -236,8 +236,10 @@ _FINAL_SCHEMA_P = StructType(
     _FINAL_SCHEMA.fields + [StructField("perc_pix", DoubleType())])
 
 
-def _make_hist_finalize(percentile: float | None = None):
-    """Build the grouped-map kernel: merge one zone's histograms -> stats.
+def _zone_hist_stats(partials: DataFrame,
+                     percentile: float | None = None) -> DataFrame:
+    """Per-zone stats of the histogram ``partials``: one grouped
+    ``applyInArrow`` merges each zone's histograms.
 
     Every aggregate is derivable from the exact bounded histogram
     (moments included: sum = dot(v, hist), sumsq = dot(v^2, hist)), so
@@ -250,11 +252,12 @@ def _make_hist_finalize(percentile: float | None = None):
     75) every intermediate is an exact double, so DuckDB's
     quantile_cont reproduces it bit-for-bit.
     """
+    schema = _FINAL_SCHEMA if percentile is None else _FINAL_SCHEMA_P
 
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
+    def finalize(table):
         hist = np.zeros(HIST_BINS, dtype=np.int64)
-        for harr in pdf["hist"]:
-            hist += np.asarray(harr, dtype=np.int64)
+        for harr in table.column("hist").to_numpy(zero_copy_only=False):
+            hist += harr
         n = int(hist.sum())
         vals = np.arange(HIST_BINS, dtype=np.int64)
         s = int(np.dot(vals, hist))
@@ -265,7 +268,7 @@ def _make_hist_finalize(percentile: float | None = None):
         lo = int(np.searchsorted(cum, (n - 1) // 2 + 1))
         hi = int(np.searchsorted(cum, n // 2 + 1))
         out = {
-            "zone_id": [int(pdf["zone_id"].iloc[0])],
+            "zone_id": [table.column("zone_id")[0].as_py()],
             "n_pix": [float(n)],
             "sum_pix": [float(s)],
             "min_pix": [float(nz[0])],
@@ -282,13 +285,10 @@ def _make_hist_finalize(percentile: float | None = None):
             vk = int(np.searchsorted(cum, k + 1))
             vk1 = int(np.searchsorted(cum, min(k + 1, n - 1) + 1))
             out["perc_pix"] = [vk + (vk1 - vk) * frac]
-        return pd.DataFrame(out)
+        return codec.to_table(out, schema)
 
-    return finalize
-
-
-#: default kernel (no percentile) — the zonal_stats/zonal_stats_poly path
-_hist_finalize = _make_hist_finalize(None)
+    return partials.select("zone_id", "hist").groupBy("zone_id") \
+        .applyInArrow(finalize, schema=schema)
 
 
 def zonal_stats_poly(
@@ -328,41 +328,25 @@ def zonal_stats_poly(
     ).select("image_id", poly_key, verts_col)
     work = _pair_work(pairs, images, poly_key, n_salt)
 
-    def zonal_poly_pairs(it):
-        for pdf in it:
-            rows = {"zone_id": [], "image_id": [], "n": [], "s": [],
-                    "ss": [], "mn": [], "mx": [], "hist": []}
-            for img_id_key, arr, grp in _image_groups(pdf):
-                r0 = grp.iloc[0]
+    def zonal_poly_pairs(batches):
+        for batch in batches:
+            rows = {n: [] for n in _PARTIAL_SCHEMA.names}
+            for img_id_key, arr, xmin, ymax, pairs in _image_groups(
+                    batch, poly_key, verts_col):
                 h, w = arr.shape
-                cx = float(r0["xmin"]) + (np.arange(w) + 0.5) * res_deg
-                cy = float(r0["ymax"]) - (np.arange(h) + 0.5) * res_deg
+                cx = xmin + (np.arange(w) + 0.5) * res_deg
+                cy = ymax - (np.arange(h) + 0.5) * res_deg
                 gx, gy = np.meshgrid(cx, cy)
-                for _, pr in grp.iterrows():
-                    poly = np.asarray([list(v) for v in pr[verts_col]],
-                                      dtype=np.float64)
+                for zone_id, verts in pairs:
+                    poly = np.asarray(verts, dtype=np.float64)
                     inside = points_in_polygon(gx.ravel(), gy.ravel(), poly)
                     vals = arr.ravel()[inside]
-                    if vals.size == 0:
-                        continue
-                    rows["zone_id"].append(int(pr[poly_key]))
-                    rows["image_id"].append(img_id_key)
-                    rows["n"].append(int(vals.size))
-                    rows["s"].append(int(vals.sum()))
-                    rows["ss"].append(int((vals * vals).sum()))
-                    rows["mn"].append(int(vals.min()))
-                    rows["mx"].append(int(vals.max()))
-                    rows["hist"].append(
-                        np.bincount(vals, minlength=HIST_BINS)
-                        .astype(np.int64))
-            # never yield an all-empty batch: pandas types empty columns
-            # float64, which Arrow cannot convert to list<int64>
-            if rows["zone_id"]:
-                yield pd.DataFrame(rows)
+                    if vals.size:
+                        _append_partial(rows, zone_id, img_id_key, vals)
+            yield codec.to_batch(rows, _PARTIAL_SCHEMA)
 
-    partials = work.mapInPandas(zonal_poly_pairs, schema=_PARTIAL_SCHEMA)
-    stats = partials.select("zone_id", "hist").groupBy("zone_id") \
-        .applyInPandas(_hist_finalize, schema=_FINAL_SCHEMA)
+    stats = _zone_hist_stats(
+        work.mapInArrow(zonal_poly_pairs, schema=_PARTIAL_SCHEMA))
     out = polys.select(F.col(poly_key).alias("zone_id")) \
         .join(stats, "zone_id", "left")
     stat_cols = ["n_pix", "sum_pix", "min_pix", "max_pix", "mean_pix",
@@ -417,24 +401,20 @@ def zonal_stats_weighted(
                              _ZONE_BOX, res)
     work = _pair_work(pairs, images, "zone_id", n_salt)
 
-    def zonal_weighted_pairs(it):
-        for pdf in it:
-            rows = {k: [] for k in ("zone_id", "n_touched", "sum_w",
-                                    "sum_wv")}
-            for img_id_key, arr, grp in _image_groups(pdf):
-                r0 = grp.iloc[0]
+    def zonal_weighted_pairs(batches):
+        for batch in batches:
+            rows = {n: [] for n in _WEIGHTED_SCHEMA.names}
+            for _, arr, tlx, tly, pairs in _image_groups(
+                    batch, "zone_id", *_ZONE_BOX):
                 h, w = arr.shape
-                tlx, tly = float(r0["xmin"]), float(r0["ymax"])
                 # pixel box edges (identical formula in the oracle)
                 xl = tlx + np.arange(w) * res_deg
                 xr = tlx + (np.arange(w) + 1) * res_deg
                 yt = tly - np.arange(h) * res_deg
                 yb = tly - (np.arange(h) + 1) * res_deg
-                for _, pr in grp.iterrows():
-                    ox = (np.minimum(xr, pr["zxmax"])
-                          - np.maximum(xl, pr["zxmin"]))
-                    oy = (np.minimum(yt, pr["zymax"])
-                          - np.maximum(yb, pr["zymin"]))
+                for zone_id, zxmin, zxmax, zymin, zymax in pairs:
+                    ox = np.minimum(xr, zxmax) - np.maximum(xl, zxmin)
+                    oy = np.minimum(yt, zymax) - np.maximum(yb, zymin)
                     if mode == "pixel_area_in_poly":
                         ox = np.maximum(ox, 0.0) / res_deg
                         oy = np.maximum(oy, 0.0) / res_deg
@@ -443,8 +423,7 @@ def zonal_stats_weighted(
                         ox = np.maximum(ox, 0.0)
                         oy = np.maximum(oy, 0.0)
                         frac = (oy[:, None] * ox[None, :]) / (
-                            (pr["zxmax"] - pr["zxmin"])
-                            * (pr["zymax"] - pr["zymin"]))
+                            (zxmax - zxmin) * (zymax - zymin))
                     else:
                         raise ValueError(f"unknown weighted mode {mode!r}")
                     # floor(x + 0.5), NOT np.round: numpy rounds half to
@@ -454,13 +433,13 @@ def zonal_stats_weighted(
                     touched = wq > 0
                     if not touched.any():
                         continue
-                    rows["zone_id"].append(int(pr["zone_id"]))
+                    rows["zone_id"].append(int(zone_id))
                     rows["n_touched"].append(int(touched.sum()))
                     rows["sum_w"].append(int(wq.sum()))
                     rows["sum_wv"].append(int((wq * arr).sum()))
-            yield pd.DataFrame(rows)
+            yield codec.to_batch(rows, _WEIGHTED_SCHEMA)
 
-    partials = work.mapInPandas(zonal_weighted_pairs, schema=_WEIGHTED_SCHEMA)
+    partials = work.mapInArrow(zonal_weighted_pairs, schema=_WEIGHTED_SCHEMA)
     return (
         partials.groupBy("zone_id")
         .agg(F.sum("n_touched").alias("n_touched"),
@@ -586,25 +565,25 @@ def extract_point_values(
 
     work = _pair_work(won, images, "pt_id")
 
-    def zonal_point_values(it):
-        for pdf in it:
-            out = {"pt_id": [], "image_id": [], "pix_val": []}
-            for img_id_key, arr, grp in _image_groups(pdf, dtype=None):
-                r0 = grp.iloc[0]
-                sx = np.floor((grp["_plon"].to_numpy()
-                               - float(r0["xmin"])) / res_deg).astype(np.int64)
-                sy = np.floor((float(r0["ymax"])
-                               - grp["_plat"].to_numpy()) / res_deg) \
+    def zonal_point_values(batches):
+        for batch in batches:
+            out = {n: [] for n in _EXTRACT_SCHEMA.names}
+            for img_id_key, arr, xmin, ymax, pairs in _image_groups(
+                    batch, "pt_id", "_plon", "_plat", dtype=None):
+                pt_ids, plon, plat = zip(*pairs)
+                h, w = arr.shape
+                sx = np.floor((np.asarray(plon) - xmin) / res_deg) \
                     .astype(np.int64)
-                sx = np.minimum(sx, int(r0["w"]) - 1)
-                sy = np.minimum(sy, int(r0["h"]) - 1)
-                out["pt_id"].extend(int(v) for v in grp["pt_id"])
-                out["image_id"].extend([img_id_key] * len(grp))
-                out["pix_val"].extend(
-                    float(v) for v in arr[sy, sx].astype(np.float64))
-            yield pd.DataFrame(out)
+                sy = np.floor((ymax - np.asarray(plat)) / res_deg) \
+                    .astype(np.int64)
+                sx = np.minimum(sx, w - 1)
+                sy = np.minimum(sy, h - 1)
+                out["pt_id"].extend(pt_ids)
+                out["image_id"].extend([img_id_key] * len(pairs))
+                out["pix_val"].extend(arr[sy, sx].astype(np.float64))
+            yield codec.to_batch(out, _EXTRACT_SCHEMA)
 
-    sampled = work.mapInPandas(zonal_point_values, schema=_EXTRACT_SCHEMA)
+    sampled = work.mapInArrow(zonal_point_values, schema=_EXTRACT_SCHEMA)
     return (
         pts.join(sampled, "pt_id", "left")
         .fillna({"pix_val": out_no_data_val})
@@ -645,17 +624,15 @@ def _zonal_stats_raw(
         return _pair_partials(it, res_deg, min_thres, max_thres, nodata,
                               membership)
 
-    partials = work.mapInPandas(zonal_pair_partials, schema=_PARTIAL_SCHEMA)
+    partials = work.mapInArrow(zonal_pair_partials, schema=_PARTIAL_SCHEMA)
 
     # phase 3: ONE shuffle — per-zone histogram merge; every statistic
     # (moments included) finalizes from the exact bounded histogram.
     # All stats surface as doubles: the reference writes every zonal
     # field as OFTReal (zonalstats/__init__.py:289-319), and a uniform
     # type lets empty zones take out_no_data_val.
-    schema = _FINAL_SCHEMA if percentile is None else _FINAL_SCHEMA_P
-    stats = partials.select("zone_id", "hist").groupBy("zone_id") \
-        .applyInPandas(_make_hist_finalize(percentile), schema=schema)
-    return zones.join(stats, "zone_id", "left")
+    return zones.join(_zone_hist_stats(partials, percentile), "zone_id",
+                      "left")
 
 
 def zonal_stats(

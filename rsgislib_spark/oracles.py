@@ -2809,9 +2809,9 @@ ORACLES["clump_eliminate"] = f"""
 {_cc_segments_cte()},
 {_RL},
 {_SEG_ADJ},
-msz AS (SELECT rl.image_id, rl.cid, cl.n_pix
+msz AS MATERIALIZED (SELECT rl.image_id, rl.cid, cl.n_pix
         FROM rl JOIN cl ON cl.image_id = rl.image_id AND cl.root = rl.root),
-ol0 AS (SELECT image_id, cid AS seg, cid AS cur FROM rl),
+ol0 AS MATERIALIZED (SELECT image_id, cid AS seg, cid AS cur FROM rl),
 sz1 AS (SELECT o.image_id, o.cur AS lab, CAST(sum(m.n_pix) AS BIGINT) AS s
          FROM ol0 o
          JOIN msz m ON m.image_id = o.image_id AND m.cid = o.seg
@@ -2830,7 +2830,7 @@ mg1 AS (SELECT image_id, ca, cb FROM (
            JOIN sz1 sb ON sb.image_id = a.image_id AND sb.lab = a.cb
            WHERE sa.s < 200 AND (sb.s > sa.s OR (sb.s = sa.s AND a.cb < a.ca)))
           WHERE rn = 1),
-ol1 AS (SELECT o.image_id, o.seg, coalesce(g.cb, o.cur) AS cur
+ol1 AS MATERIALIZED (SELECT o.image_id, o.seg, coalesce(g.cb, o.cur) AS cur
          FROM ol0 o LEFT JOIN mg1 g
            ON g.image_id = o.image_id AND g.ca = o.cur),
 sz2 AS (SELECT o.image_id, o.cur AS lab, CAST(sum(m.n_pix) AS BIGINT) AS s
@@ -2851,7 +2851,7 @@ mg2 AS (SELECT image_id, ca, cb FROM (
            JOIN sz2 sb ON sb.image_id = a.image_id AND sb.lab = a.cb
            WHERE sa.s < 200 AND (sb.s > sa.s OR (sb.s = sa.s AND a.cb < a.ca)))
           WHERE rn = 1),
-ol2 AS (SELECT o.image_id, o.seg, coalesce(g.cb, o.cur) AS cur
+ol2 AS MATERIALIZED (SELECT o.image_id, o.seg, coalesce(g.cb, o.cur) AS cur
          FROM ol1 o LEFT JOIN mg2 g
            ON g.image_id = o.image_id AND g.ca = o.cur),
 sz3 AS (SELECT o.image_id, o.cur AS lab, CAST(sum(m.n_pix) AS BIGINT) AS s
@@ -2872,7 +2872,7 @@ mg3 AS (SELECT image_id, ca, cb FROM (
            JOIN sz3 sb ON sb.image_id = a.image_id AND sb.lab = a.cb
            WHERE sa.s < 200 AND (sb.s > sa.s OR (sb.s = sa.s AND a.cb < a.ca)))
           WHERE rn = 1),
-ol3 AS (SELECT o.image_id, o.seg, coalesce(g.cb, o.cur) AS cur
+ol3 AS MATERIALIZED (SELECT o.image_id, o.seg, coalesce(g.cb, o.cur) AS cur
          FROM ol2 o LEFT JOIN mg3 g
            ON g.image_id = o.image_id AND g.ca = o.cur),
 fsz AS (SELECT o.image_id, o.cur AS lab, CAST(sum(m.n_pix) AS BIGINT) AS s

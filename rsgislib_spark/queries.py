@@ -13,6 +13,8 @@ results.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import synth
@@ -115,6 +117,15 @@ from .streaming.events import (sessionize_batch, sessionize_stream,
 
 __all__ = ["QUERIES", "flagship"]
 
+#: every named query, ``<name>`` -> ``q_<name>``, filled by :func:`query`
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+
+
+def query(fn):
+    """Register ``q_<name>`` in :data:`QUERIES` under ``<name>``."""
+    QUERIES[fn.__name__.removeprefix("q_")] = fn
+    return fn
+
 
 def _images(spark, sf_dir, **kw):
     return synth.synth_images(spark, sf_dir, **kw)
@@ -124,6 +135,7 @@ def _images(spark, sf_dir, **kw):
 # spatial / imaging core
 # --------------------------------------------------------------------------
 
+@query
 def q_cell_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H3-role cell assignment + per-cell aggregation (SURVEY §1.4, §2.2)."""
     img = _images(spark, sf_dir, with_footprint=False)
@@ -135,6 +147,7 @@ def q_cell_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def q_sjoin_inner_within(spark, sf_dir) -> DataFrame:
     """perform_spatial_join how=inner op=within (SURVEY §2.3)."""
     img = _images(spark, sf_dir)
@@ -143,6 +156,7 @@ def q_sjoin_inner_within(spark, sf_dir) -> DataFrame:
     return out.select("image_id", "zone_id", "zname", "lon", "lat")
 
 
+@query
 def q_sjoin_salted(spark, sf_dir) -> DataFrame:
     """the big-big join path: sort-merge on cell row with explicit salting
     (8-way salt-explode splits the megacity's hot row, §2.3/§4.2) —
@@ -154,6 +168,7 @@ def q_sjoin_salted(spark, sf_dir) -> DataFrame:
     return out.select("image_id", "zone_id", "zname", "lon", "lat")
 
 
+@query
 def q_zone_point_counts(spark, sf_dir) -> DataFrame:
     """count_pt_intersects: per-polygon point counts, zeros kept (§2.3)."""
     img = _images(spark, sf_dir)
@@ -167,6 +182,7 @@ def q_zone_point_counts(spark, sf_dir) -> DataFrame:
     )
 
 
+@query
 def q_tile_specs(spark, sf_dir) -> DataFrame:
     """create_tiles grid arithmetic as a Catalyst-only query (§2.4)."""
     img = _images(spark, sf_dir, with_footprint=False)
@@ -198,18 +214,21 @@ def _spec_cols(t):
     )
 
 
+@query
 def q_tile_specs_overlap(spark, sf_dir) -> DataFrame:
     """create_tiles with tileOverlap=8: expanded + clamped windows (§2.4)."""
     img = _images(spark, sf_dir, with_footprint=False)
     return _spec_cols(tile_spec_df(img, 48, 32, overlap=8))
 
 
+@query
 def q_tile_specs_offset(spark, sf_dir) -> DataFrame:
     """offsetTiling half-tile grid with leading half tiles (§2.4)."""
     img = _images(spark, sf_dir, with_footprint=False)
     return _spec_cols(tile_spec_offset_df(img, 48, 32))
 
 
+@query
 def q_block_iter(spark, sf_dir) -> DataFrame:
     """StdImgBlockIter shifted-end-block windows (§2.4)."""
     img = _images(spark, sf_dir, with_footprint=False)
@@ -224,6 +243,7 @@ def q_block_iter(spark, sf_dir) -> DataFrame:
     )
 
 
+@query
 def q_point_extract(spark, sf_dir) -> DataFrame:
     """ext_point_band_values: pixel under each point, -9999 outside (§2.5)."""
     img = _images(spark, sf_dir, with_bytes=True)
@@ -232,6 +252,7 @@ def q_point_extract(spark, sf_dir) -> DataFrame:
         .select("qid", "qlon", "qlat", "image_id", "pix_val")
 
 
+@query
 def q_zonal_centroid(spark, sf_dir) -> DataFrame:
     """calc_zonal_poly_pts_band_stats: sample at zone centroids (§2.5)."""
     img = _images(spark, sf_dir, with_bytes=True)
@@ -245,6 +266,7 @@ def q_zonal_centroid(spark, sf_dir) -> DataFrame:
         .select("zone_id", "c_lon", "c_lat", "image_id", "pix_val")
 
 
+@query
 def q_knn_closest(spark, sf_dir) -> DataFrame:
     """match_closest_vec_pts: exact 1-NN with dist (§2.3).
 
@@ -258,6 +280,7 @@ def q_knn_closest(spark, sf_dir) -> DataFrame:
                       "x_match", "y_match", "dist_match")
 
 
+@query
 def q_knn_classify(spark, sf_dir) -> DataFrame:
     """apply_rat_knn with k=5: majority-vote classification by the five
     nearest images (class = id % 5), via the top-k escalation ladder —
@@ -273,6 +296,7 @@ def q_knn_classify(spark, sf_dir) -> DataFrame:
                       F.col("n_votes").cast("long").alias("n_votes"))
 
 
+@query
 def q_alpha_shape(spark, sf_dir) -> DataFrame:
     """create_alpha_shape: per-group concave hull boundary edges via
     Delaunay circumradius filtering (§2.9, vectorgeoms/__init__.py:1432).
@@ -288,6 +312,7 @@ def q_alpha_shape(spark, sf_dir) -> DataFrame:
                 "x1", "y1", "x2", "y2")
 
 
+@query
 def q_npts_radius(spark, sf_dir) -> DataFrame:
     """calc_npts_in_radius r=0.2 deg on the image layer itself (§2.3)."""
     img = _images(spark, sf_dir, with_footprint=False)
@@ -295,6 +320,7 @@ def q_npts_radius(spark, sf_dir) -> DataFrame:
     return out.select("image_id", F.col("n_pts_r").cast("long").alias("n_pts_r"))
 
 
+@query
 def q_pixel_stats(spark, sf_dir) -> DataFrame:
     """pop_img_stats over decoded payloads, id%7 subset (§2.5)."""
     img = _px_images(spark, sf_dir, mod=7)
@@ -346,7 +372,7 @@ def _px_images(spark, sf_dir, mod: int = 7, with_footprint: bool = False,
                rows_per_task: int = 128):
     """Subset of images WITH payloads — filter pushed BELOW the codec.
 
-    Filters cannot push through mapInPandas, so the id-subset must be
+    Filters cannot push through mapInArrow, so the id-subset must be
     applied on metadata BEFORE payload materialization (late
     materialization, same rule as the flagship): synthesize bytes only
     for surviving rows, laid out at ~128 rows/task (see
@@ -371,6 +397,7 @@ def _triangle_zones(zones):
         F.col("zymin").alias("pymin"), F.col("zymax").alias("pymax"))
 
 
+@query
 def q_zonal_stats_poly(spark, sf_dir) -> DataFrame:
     """calc_zonal_band_stats over GENERAL polygon zones (triangles):
     ray-casting pixel-center masks replace the rect mask (§2.5, §2.3)."""
@@ -381,6 +408,7 @@ def q_zonal_stats_poly(spark, sf_dir) -> DataFrame:
                       "max_pix", "mean_pix", "stddev_pix", "median_pix")
 
 
+@query
 def q_band_math(spark, sf_dir) -> DataFrame:
     """band_math 'cond ? expr : 0' over decoded planes (§2.2, §2.11)."""
     img = _px_images(spark, sf_dir)
@@ -388,6 +416,7 @@ def q_band_math(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "sum_pix", "min_pix", "max_pix")
 
 
+@query
 def q_mask_img(spark, sf_dir) -> DataFrame:
     """mask_img: v in {0..3} -> 255, with masked-count stats (§2.2)."""
     img = _px_images(spark, sf_dir)
@@ -396,6 +425,7 @@ def q_mask_img(spark, sf_dir) -> DataFrame:
                 "min_pix", "max_pix")
 
 
+@query
 def q_filter_mean3(spark, sf_dir) -> DataFrame:
     """apply_mean_filter 3x3 (valid interior), integer-exact (§2.6)."""
     img = _px_images(spark, sf_dir, mod=19)
@@ -403,6 +433,7 @@ def q_filter_mean3(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_conv", "min_conv", "max_conv")
 
 
+@query
 def q_filter_sobel(spark, sf_dir) -> DataFrame:
     """apply_sobel_x_filter |gx| over the interior (§2.6)."""
     img = _px_images(spark, sf_dir, mod=19)
@@ -410,6 +441,7 @@ def q_filter_sobel(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_conv", "min_conv", "max_conv")
 
 
+@query
 def q_filter_median5(spark, sf_dir) -> DataFrame:
     """apply_median_filter(filter_size=5): exact sliding median (§2.6,
     imagefilter/__init__.py:37)."""
@@ -419,6 +451,7 @@ def q_filter_median5(spark, sf_dir) -> DataFrame:
                 "min_median", "max_median")
 
 
+@query
 def q_filter_mode3(spark, sf_dir) -> DataFrame:
     """apply_mode_filter(filter_size=3), ties -> smallest value (§2.6,
     imagefilter/__init__.py:161)."""
@@ -428,6 +461,7 @@ def q_filter_mode3(spark, sf_dir) -> DataFrame:
                 "min_mode", "max_mode")
 
 
+@query
 def q_filter_range5(spark, sf_dir) -> DataFrame:
     """apply_range_filter(filter_size=5): window max - min (§2.6,
     imagefilter/__init__.py:223)."""
@@ -437,6 +471,7 @@ def q_filter_range5(spark, sf_dir) -> DataFrame:
                 "min_range", "max_range")
 
 
+@query
 def q_filter_mean5(spark, sf_dir) -> DataFrame:
     """apply_mean_filter at filter_size=5 — evidences the arbitrary-k
     convolution path (§2.6, imagefilter/__init__.py:68)."""
@@ -445,6 +480,7 @@ def q_filter_mean5(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_conv", "min_conv", "max_conv")
 
 
+@query
 def q_filter_gauss5(spark, sf_dir) -> DataFrame:
     """apply_gaussian_smooth_filter, integer binomial kernel (§2.6,
     imagefilter/__init__.py:763)."""
@@ -453,6 +489,7 @@ def q_filter_gauss5(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_conv", "min_conv", "max_conv")
 
 
+@query
 def q_filter_gauss_d1(spark, sf_dir) -> DataFrame:
     """apply_gaussian_1st_deriv_filter along x (§2.6,
     imagefilter/__init__.py:813)."""
@@ -461,6 +498,7 @@ def q_filter_gauss_d1(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_conv", "min_conv", "max_conv")
 
 
+@query
 def q_filter_gauss_d2(spark, sf_dir) -> DataFrame:
     """apply_gaussian_2nd_deriv_filter along x (§2.6,
     imagefilter/__init__.py:863)."""
@@ -469,6 +507,7 @@ def q_filter_gauss_d2(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_conv", "min_conv", "max_conv")
 
 
+@query
 def q_spectral_smooth(spark, sf_dir) -> DataFrame:
     """spectral_smoothing: SavGol 5/2 along the spectral axis (§2.9)."""
     img = _px_images(spark, sf_dir, mod=19)
@@ -476,6 +515,7 @@ def q_spectral_smooth(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_valid", "sum_sg35", "min_sg35", "max_sg35")
 
 
+@query
 def q_filter_texture_var(spark, sf_dir) -> DataFrame:
     """texture-variance window filter, 81-scaled exact (§2.6)."""
     img = _px_images(spark, sf_dir, mod=19)
@@ -484,6 +524,7 @@ def q_filter_texture_var(spark, sf_dir) -> DataFrame:
                 "min_var81", "max_var81")
 
 
+@query
 def q_embed_ann_multiprobe(spark, sf_dir) -> DataFrame:
     """multi-probe LSH 1-NN (Hamming-1 bucket ring; near-exact recall)."""
     t = load_tables(spark, sf_dir, ["embeddings"])
@@ -491,6 +532,7 @@ def q_embed_ann_multiprobe(spark, sf_dir) -> DataFrame:
         .select("qid", "vec_id", "sim")
 
 
+@query
 def q_embed_neardup(spark, sf_dir) -> DataFrame:
     """embedding-cosine near-dup pairs (LSH buckets + threshold 0.8)."""
     t = load_tables(spark, sf_dir, ["embeddings"])
@@ -499,6 +541,7 @@ def q_embed_neardup(spark, sf_dir) -> DataFrame:
         .select("vec_a", "vec_b", "sim")
 
 
+@query
 def q_morph_dilate(spark, sf_dir) -> DataFrame:
     """3x3 grayscale dilation (window max) over the interior (§2.6)."""
     img = _px_images(spark, sf_dir, mod=19)
@@ -506,6 +549,7 @@ def q_morph_dilate(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_m", "min_m", "max_m")
 
 
+@query
 def q_morph_erode(spark, sf_dir) -> DataFrame:
     """3x3 grayscale erosion (window min) over the interior (§2.6)."""
     img = _px_images(spark, sf_dir, mod=19)
@@ -513,6 +557,7 @@ def q_morph_erode(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_m", "min_m", "max_m")
 
 
+@query
 def q_unmix_ucls(spark, sf_dir) -> DataFrame:
     """specunmixing.spec_unmix_spts_ucls (Scarth sum-to-one weight):
     per-image mean endmember abundances over strictly-positive spectra,
@@ -523,6 +568,7 @@ def q_unmix_ucls(spark, sf_dir) -> DataFrame:
                 "mean_a1", "mean_a2")
 
 
+@query
 def q_unmix_residual(spark, sf_dir) -> DataFrame:
     """specunmixing.predict_refl_linear_unmixing +
     calc_unmixing_rmse_residual_err: reconstruct spectra from UCLS
@@ -534,6 +580,7 @@ def q_unmix_residual(spark, sf_dir) -> DataFrame:
                 "rmse")
 
 
+@query
 def q_season_trend(spark, sf_dir) -> DataFrame:
     """timeseries.modelfitting season-trend OLS (one-harmonic Zhu et
     al. model) over event value-cents vs day-of-year, quantized-cos
@@ -544,6 +591,7 @@ def q_season_trend(spark, sf_dir) -> DataFrame:
         .select("event_type", "n", "sy", "sxy", "a_cents", "b_cents")
 
 
+@query
 def q_register_offset(spark, sf_dir) -> DataFrame:
     """imageregistration.find_image_offset, METRIC_SQDIFF: recover a
     planted (id%5-2, id%7-3) shift by mean-squared-difference argmin
@@ -554,6 +602,7 @@ def q_register_offset(spark, sf_dir) -> DataFrame:
                 "found_dy", "n_overlap", "sum_sq", "msd")
 
 
+@query
 def q_mask_val_prob(spark, sf_dir) -> DataFrame:
     """imagecalc.calc_mask_img_pxl_val_prob: value-probability plane
     over the b2>=512 mask, mean prob = sum(count^2)/n^2 and the
@@ -564,6 +613,7 @@ def q_mask_val_prob(spark, sf_dir) -> DataFrame:
                 "max_cnt", "mean_prob", "mean_resc")
 
 
+@query
 def q_pan_sharpen(spark, sf_dir) -> DataFrame:
     """imageutils.pan_sharpen_hcs (HCS): squared-intensity stats, the
     reference's pSq expression tree, clamp-branch counts, and the
@@ -574,6 +624,7 @@ def q_pan_sharpen(spark, sf_dir) -> DataFrame:
                 "mean_pan", "sd_pan", "out0", "out1")
 
 
+@query
 def q_unpack_bits(spark, sf_dir) -> DataFrame:
     """imageutils.unpack_pxl_vals: per-bit QA planes — set counts and
     first set flat index per (image, bit)."""
@@ -582,6 +633,7 @@ def q_unpack_bits(spark, sf_dir) -> DataFrame:
         .select("image_id", "bit", "n_set", "first_set")
 
 
+@query
 def q_local_minima(spark, sf_dir) -> DataFrame:
     """imagemorphology.image_local_minima (sequencial_out=True,
     allow_equal=True): per-image minima count, value sum, and the
@@ -591,6 +643,7 @@ def q_local_minima(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_minima", "sum_min_v", "seq_ck")
 
 
+@query
 def q_morph_dilate_circ(spark, sf_dir) -> DataFrame:
     """imagemorphology.create_circular_op (r=2 disk, 21 cells) +
     image_dilate: window max over the circular operator."""
@@ -599,6 +652,7 @@ def q_morph_dilate_circ(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_m", "min_m", "max_m")
 
 
+@query
 def q_filter_laplacian(spark, sf_dir) -> DataFrame:
     """apply_laplacian_filter: binomial LoG (d2x+d2y of the quantized
     Gaussian), integer conv over the 5x5 interior."""
@@ -608,6 +662,7 @@ def q_filter_laplacian(spark, sf_dir) -> DataFrame:
                 "max_conv")
 
 
+@query
 def q_filter_total_diff(spark, sf_dir) -> DataFrame:
     """apply_total_diff_filter: sum over the 3x3 window of
     (center - neighbour) = conv with the center-8 kernel."""
@@ -617,6 +672,7 @@ def q_filter_total_diff(spark, sf_dir) -> DataFrame:
                 "max_conv")
 
 
+@query
 def q_filter_total_diff_abs(spark, sf_dir) -> DataFrame:
     """apply_total_diff_abs_filter: sum of |center - neighbour| over
     the 3x3 window (nonlinear; own shifted-abs kernel)."""
@@ -626,6 +682,7 @@ def q_filter_total_diff_abs(spark, sf_dir) -> DataFrame:
                 "max_tda")
 
 
+@query
 def q_filter_mean_diff(spark, sf_dir) -> DataFrame:
     """apply_mean_diff_filter (imagefilter/__init__.py:254;
     RSGISStatsFilters.cpp:673): mean of (neighbour - centre) over the
@@ -640,6 +697,7 @@ def q_filter_mean_diff(spark, sf_dir) -> DataFrame:
         (F.col("max_conv").cast("double") / F.lit(8.0)).alias("max_md"))
 
 
+@query
 def q_filter_mean_diff_abs(spark, sf_dir) -> DataFrame:
     """apply_mean_diff_abs_filter (imagefilter/__init__.py:285;
     RSGISStatsFilters.cpp:728): mean |neighbour - centre| over the 3x3
@@ -653,6 +711,7 @@ def q_filter_mean_diff_abs(spark, sf_dir) -> DataFrame:
         (F.col("max_tda").cast("double") / F.lit(8.0)).alias("max_mda"))
 
 
+@query
 def q_filter_coeff_var(spark, sf_dir) -> DataFrame:
     """apply_coeff_of_var_filter (imagefilter/__init__.py:382;
     RSGISStatsFilters.cpp:295): window stddev/mean, rationalised to
@@ -661,6 +720,7 @@ def q_filter_coeff_var(spark, sf_dir) -> DataFrame:
     return sfilt.window_texture_stats(img, "cov")
 
 
+@query
 def q_filter_norm_var(spark, sf_dir) -> DataFrame:
     """apply_norm_var_filter (imagefilter/__init__.py:444;
     RSGISSARTextureFilters.cpp:29): normalised variance of the power
@@ -669,6 +729,7 @@ def q_filter_norm_var(spark, sf_dir) -> DataFrame:
     return sfilt.window_texture_stats(img, "nv_power")
 
 
+@query
 def q_filter_norm_var_sqrt(spark, sf_dir) -> DataFrame:
     """apply_norm_var_sqrt_filter (imagefilter/__init__.py:475;
     RSGISSARTextureFilters.cpp:84): normalised variance of amplitudes
@@ -677,6 +738,7 @@ def q_filter_norm_var_sqrt(spark, sf_dir) -> DataFrame:
     return sfilt.window_texture_stats(img, "nv_sqrt")
 
 
+@query
 def q_filter_norm_var_ln(spark, sf_dir) -> DataFrame:
     """apply_norm_var_ln_filter (imagefilter/__init__.py:507;
     RSGISSARTextureFilters.cpp:142): normalised variance of ln(power)
@@ -685,6 +747,7 @@ def q_filter_norm_var_ln(spark, sf_dir) -> DataFrame:
     return sfilt.window_texture_stats(img, "nv_ln")
 
 
+@query
 def q_spectral_indices(spark, sf_dir) -> DataFrame:
     """The 12-index calcindices family in one decoded pass (§2.9):
     ndwi/gndvi/ndsi/nbr/wbi/whiteness/brightness/bai/ctvi/evi/evi2/mvi
@@ -695,6 +758,7 @@ def q_spectral_indices(spark, sf_dir) -> DataFrame:
     return spectral_indices_stats(img)
 
 
+@query
 def q_morph_open(spark, sf_dir) -> DataFrame:
     """grayscale opening: dilate(erode) over the two-pass interior
     (§2.6, python/src/imagemorphology.cpp:655)."""
@@ -703,6 +767,7 @@ def q_morph_open(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_m", "min_m", "max_m")
 
 
+@query
 def q_morph_close(spark, sf_dir) -> DataFrame:
     """grayscale closing: erode(dilate) (§2.6, imagemorphology.cpp:671)."""
     img = _px_images(spark, sf_dir, mod=19)
@@ -710,6 +775,7 @@ def q_morph_close(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_m", "min_m", "max_m")
 
 
+@query
 def q_morph_gradient(spark, sf_dir) -> DataFrame:
     """morphological gradient: dilate - erode (§2.6)."""
     img = _px_images(spark, sf_dir, mod=19)
@@ -717,6 +783,7 @@ def q_morph_gradient(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_m", "min_m", "max_m")
 
 
+@query
 def q_morph_tophat(spark, sf_dir) -> DataFrame:
     """white top-hat: img - opening (§2.6, imagemorphology.cpp:687)."""
     img = _px_images(spark, sf_dir, mod=19)
@@ -724,6 +791,7 @@ def q_morph_tophat(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_m", "min_m", "max_m")
 
 
+@query
 def q_corr_window(spark, sf_dir) -> DataFrame:
     """correlation_window: 3x3 Pearson r (x1000, floored) between the
     plane and its mirror band (§2.6, python/src/imagecalc.cpp:875)."""
@@ -733,6 +801,7 @@ def q_corr_window(spark, sf_dir) -> DataFrame:
                 "max_r1000")
 
 
+@query
 def q_win_min_idx(spark, sf_dir) -> DataFrame:
     """identify_min_pxl_value_in_win: per-pixel 3x3 window min across
     the b1/mirror/flip band set plus the 1-based band index attaining
@@ -744,6 +813,7 @@ def q_win_min_idx(spark, sf_dir) -> DataFrame:
                 "max_minval", "sum_bandref", "n_band1")
 
 
+@query
 def q_resize_bilinear(spark, sf_dir) -> DataFrame:
     """resample_img_to_match INTERP_BILINEAR: rational half-pixel
     bilinear with integer-scaled outputs (§2.9,
@@ -753,6 +823,7 @@ def q_resize_bilinear(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_out", "sum_sc", "min_sc", "max_sc")
 
 
+@query
 def q_resize_cubic(spark, sf_dir) -> DataFrame:
     """resample_img_to_match INTERP_CUBIC: Catmull-Rom 4x4 taps with
     exact integer weights (scaled by 4*Dx^3*Dy^3) (§2.9,
@@ -762,6 +833,7 @@ def q_resize_cubic(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_out", "sum_sc", "min_sc", "max_sc")
 
 
+@query
 def q_resize_cubicspline(spark, sf_dir) -> DataFrame:
     """resample_img_to_match INTERP_CUBICSPLINE: uniform cubic B-spline
     4x4 taps, non-negative exact integer weights (scaled by
@@ -771,6 +843,7 @@ def q_resize_cubicspline(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_out", "sum_sc", "min_sc", "max_sc")
 
 
+@query
 def q_resize_lanczos(spark, sf_dir) -> DataFrame:
     """resample_img_to_match INTERP_LANCZOS: Lanczos-3 6x6 taps via the
     driver-quantized integer weight table (scale 4096/axis, exact
@@ -780,6 +853,7 @@ def q_resize_lanczos(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_out", "sum_sc", "min_sc", "max_sc")
 
 
+@query
 def q_resize_average(spark, sf_dir) -> DataFrame:
     """resample_img_to_match INTERP_AVERAGE: block-mean pyramid
     downsample to 16x12, floor(sum/n) exact integers (§2.9,
@@ -789,6 +863,7 @@ def q_resize_average(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_out", "sum_sc", "min_sc", "max_sc")
 
 
+@query
 def q_resize_mode(spark, sf_dir) -> DataFrame:
     """resample_img_to_match INTERP_MODE: block most-frequent-value
     downsample to 16x12, ties -> smallest (§2.9,
@@ -798,6 +873,7 @@ def q_resize_mode(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_out", "sum_sc", "min_sc", "max_sc")
 
 
+@query
 def q_warp_img(spark, sf_dir) -> DataFrame:
     """resample_img_to_match ACROSS CRS (imageutils/__init__.py:2104):
     inverse-mapping warp of every image onto a per-image EPSG:27700
@@ -811,6 +887,7 @@ def q_warp_img(spark, sf_dir) -> DataFrame:
         "min_warp", "max_warp")
 
 
+@query
 def q_warp_img_bilinear(spark, sf_dir) -> DataFrame:
     """resample_img_to_match GRA_Bilinear across CRS: 2x2-support
     interpolation, edge support -> nodata, values quantized 2^20 so the
@@ -821,6 +898,7 @@ def q_warp_img_bilinear(spark, sf_dir) -> DataFrame:
         "image_id", "n_valid", "sum_q", "chk_q")
 
 
+@query
 def q_psnr_check(spark, sf_dir) -> DataFrame:
     """lossy roundtrip + PSNR>=40dB invariant as integer math (§2.9)."""
     img = _px_images(spark, sf_dir)
@@ -828,6 +906,7 @@ def q_psnr_check(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "sum_sq_err", "max_abs_err", "psnr_ok")
 
 
+@query
 def q_mosaic_mode(spark, sf_dir) -> DataFrame:
     """calc_imgs_pxl_mode per output pixel over the megacity (§2.5)."""
     img = _px_images(spark, sf_dir, mod=5, with_footprint=True)
@@ -835,6 +914,7 @@ def q_mosaic_mode(spark, sf_dir) -> DataFrame:
         .select("px", "py", "n_imgs", "mode_v")
 
 
+@query
 def q_pixel_trend(spark, sf_dir) -> DataFrame:
     """image_pixel_linear_fit / timeseries model fit: per-pixel OLS
     trend across the megacity image stack (§2.6, timeseries module)."""
@@ -843,6 +923,7 @@ def q_pixel_trend(spark, sf_dir) -> DataFrame:
         .select("px", "py", "n_imgs", "slope", "intercept")
 
 
+@query
 def q_rasterize_zones(spark, sf_dir) -> DataFrame:
     """rasterize: burn the zone layer onto a pixel grid, max-id wins
     (gdal.RasterizeLayer semantics; Catalyst-only plan)."""
@@ -851,6 +932,7 @@ def q_rasterize_zones(spark, sf_dir) -> DataFrame:
         .select("px", "py", "burn")
 
 
+@query
 def q_clump_stats(spark, sf_dir) -> DataFrame:
     """segmentation.clump rollup: per-image component count/extremes
     (BFS-verified in tests/test_segmentation.py; DuckDB oracle =
@@ -860,6 +942,7 @@ def q_clump_stats(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_clumps", "max_clump", "n_fg")
 
 
+@query
 def q_polygonize(spark, sf_dir) -> DataFrame:
     """polygonise_raster: one bbox-geometry row per clump (BFS-verified
     in tests/test_segmentation.py; DuckDB oracle = pointer-doubling
@@ -878,6 +961,7 @@ def _rat(spark, sf_dir):
     return rat_table(img, quant=128)
 
 
+@query
 def q_rat_neighbours(spark, sf_dir) -> DataFrame:
     """rastergis.find_neighbours (python/src/rastergis.cpp:1907; 4-neigh
     kernel src/rastergis/RSGISFindClumpNeighbours.cpp:331): per-clump
@@ -886,6 +970,7 @@ def q_rat_neighbours(spark, sf_dir) -> DataFrame:
         .select("image_id", "clump_id", "n_neigh", "min_neigh", "max_neigh")
 
 
+@query
 def q_rat_mode(spark, sf_dir) -> DataFrame:
     """rastergis.populate_rat_with_mode (python/src/rastergis.cpp:488):
     per-clump modal pixel value, ties -> smallest (ascending-histogram
@@ -893,6 +978,7 @@ def q_rat_mode(spark, sf_dir) -> DataFrame:
     return _rat(spark, sf_dir).select("image_id", "clump_id", "mode_val")
 
 
+@query
 def q_rat_percentiles(spark, sf_dir) -> DataFrame:
     """rastergis.populate_rat_with_percentiles (python/src/
     rastergis.cpp:352): per-clump nearest-rank p25/p50/p75 (exact — the
@@ -901,6 +987,7 @@ def q_rat_percentiles(spark, sf_dir) -> DataFrame:
         .select("image_id", "clump_id", "p25", "p50", "p75")
 
 
+@query
 def q_gmm_hist_fit(spark, sf_dir) -> DataFrame:
     """rastergis.fit_hist_gausian_mixture_model + class_split variant
     (python/src/rastergis.cpp:1382,1425; RSGISSelectClumps.cpp:602):
@@ -913,6 +1000,7 @@ def q_gmm_hist_fit(spark, sf_dir) -> DataFrame:
                 "n_assigned")
 
 
+@query
 def q_histo_sampling(spark, sf_dir) -> DataFrame:
     """rastergis.histo_sampling (rastergis.cpp binding; kernel
     RSGISSelectClumps.cpp histogramSampling -> RSGISMathsUtils.cpp:1038
@@ -940,6 +1028,7 @@ def q_histo_sampling(spark, sf_dir) -> DataFrame:
                            "ELSE 0 END AS BIGINT)").alias("sel")))
 
 
+@query
 def q_rat_collapse(spark, sf_dir) -> DataFrame:
     """rastergis.collapse_rat (python/src/rastergis.cpp:1214): dense
     consecutive re-key of the selected (n_pix >= 8) RAT rows."""
@@ -947,6 +1036,7 @@ def q_rat_collapse(spark, sf_dir) -> DataFrame:
         .select("image_id", "clump_id", "new_id")
 
 
+@query
 def q_random_walker(spark, sf_dir) -> DataFrame:
     """segmentation.skimgseg random_walker wrapper (Grady 2006) —
     deterministic fixed-round Jacobi form with bitwise-reproducible
@@ -958,6 +1048,7 @@ def q_random_walker(spark, sf_dir) -> DataFrame:
                 "seed_a", "seed_b", "pot_ck")
 
 
+@query
 def q_felzenszwalb_seg(spark, sf_dir) -> DataFrame:
     """segmentation.skimgseg felzenszwalb wrapper — the FH IJCV 2004
     graph segmentation itself; ROWS-ONLY (sequential sorted-edge
@@ -969,6 +1060,7 @@ def q_felzenszwalb_seg(spark, sf_dir) -> DataFrame:
         .select("image_id", "root", "n_cells", "cell_ck", "int_max")
 
 
+@query
 def q_watershed_basins(spark, sf_dir) -> DataFrame:
     """segmentation.skimgseg watershed wrapper — deterministic
     bottleneck/minimax topographic-distance form
@@ -979,6 +1071,7 @@ def q_watershed_basins(spark, sf_dir) -> DataFrame:
         .select("image_id", "basin", "n_cells", "cell_ck", "marker_c")
 
 
+@query
 def q_quickshift_seg(spark, sf_dir) -> DataFrame:
     """segmentation.skimgseg quickshift wrapper (Vedaldi & Soatto 2008)
     — deterministic density-forest form
@@ -989,6 +1082,7 @@ def q_quickshift_seg(spark, sf_dir) -> DataFrame:
         .select("image_id", "seg_id", "root", "n_pix", "px_ck")
 
 
+@query
 def q_slic_superpixels(spark, sf_dir) -> DataFrame:
     """segmentation.skimgseg.perform_slic_segmentation (skimgseg.py:281)
     — the SLIC algorithm itself, deterministic fixed-round form
@@ -999,6 +1093,7 @@ def q_slic_superpixels(spark, sf_dir) -> DataFrame:
         .select("image_id", "k", "n_pix", "cx", "cy", "cv", "px_ck")
 
 
+@query
 def q_clump_merge(spark, sf_dir) -> DataFrame:
     """rm_small_clumps_stepwise unit step (segmentation.cpp:151): merge
     each segment below min_pix into its largest 4-neighbour (ties ->
@@ -1009,6 +1104,7 @@ def q_clump_merge(spark, sf_dir) -> DataFrame:
         .select("image_id", "clump_id", "n_pix", "new_label")
 
 
+@query
 def q_clump_eliminate(spark, sf_dir) -> DataFrame:
     """rm_small_clumps_stepwise loop (RSGISEliminateSmallClumps.cpp):
     3 BSP elimination rounds (min_pix=200 — at this lattice the
@@ -1022,6 +1118,7 @@ def q_clump_eliminate(spark, sf_dir) -> DataFrame:
         .select("image_id", "seg_id", "n_pix", "new_label", "new_size")
 
 
+@query
 def q_clump_locations(spark, sf_dir) -> DataFrame:
     """rastergis.clumps_spatial_location + clumps_spatial_extent:
     per-clump mean pixel-centre easting/northing and corner-based
@@ -1032,6 +1129,7 @@ def q_clump_locations(spark, sf_dir) -> DataFrame:
                 "min_e", "max_e", "min_n", "max_n")
 
 
+@query
 def q_clump_borders(spark, sf_dir) -> DataFrame:
     """rastergis.calc_border_length + calc_rel_border
     (RSGISClumpBorders.cpp:32): per-clump inter-clump 4-edge count,
@@ -1042,6 +1140,7 @@ def q_clump_borders(spark, sf_dir) -> DataFrame:
                 "border_cls0", "rel_border")
 
 
+@query
 def q_rat_cat_props(spark, sf_dir) -> DataFrame:
     """rastergis.populate_rat_with_cat_proportions
     (RSGISFindClumpCatagoryStats.cpp:32): per (clump, category) pixel
@@ -1052,6 +1151,7 @@ def q_rat_cat_props(spark, sf_dir) -> DataFrame:
                 "prop")
 
 
+@query
 def q_rat_cat_majority(spark, sf_dir) -> DataFrame:
     """Majority column of populate_rat_with_cat_proportions: highest
     proportion, ties to the SMALLEST category (the reference's
@@ -1061,6 +1161,7 @@ def q_rat_cat_majority(spark, sf_dir) -> DataFrame:
         .select("image_id", "clump_id", "n_pix", "maj_cat", "maj_prop")
 
 
+@query
 def q_rel_diff_neigh(spark, sf_dir) -> DataFrame:
     """rastergis.calc_rel_diff_neigh_stats
     (RSGISCalcNeighbourStats.cpp:124): per-clump min/max/mean/sum of
@@ -1073,6 +1174,7 @@ def q_rel_diff_neigh(spark, sf_dir) -> DataFrame:
                 "max_diff", "mean_diff", "sum_diff")
 
 
+@query
 def q_rat_meanlit(spark, sf_dir) -> DataFrame:
     """rastergis.populate_rat_with_meanlit_stats
     (RSGISPopRATWithStats.cpp:596): per-clump stats of b1 restricted to
@@ -1083,6 +1185,7 @@ def q_rat_meanlit(spark, sf_dir) -> DataFrame:
                 "lit_max", "lit_sum", "lit_mean")
 
 
+@query
 def q_dist_large_clumps(spark, sf_dir) -> DataFrame:
     """rastergis.calc_dist_to_large_clumps (rastergis/__init__.py:1029):
     per small clump (< 500 px), min pixel distance to the large-clump
@@ -1093,6 +1196,7 @@ def q_dist_large_clumps(spark, sf_dir) -> DataFrame:
         .select("image_id", "clump_id", "n_pix", "min_sq_px", "dist_deg")
 
 
+@query
 def q_clump_tile_pos(spark, sf_dir) -> DataFrame:
     """rastergis.define_clump_tile_positions + define_border_clumps
     (RSGISDefineClumpsInTiles.cpp:32,209): per-clump tile-position
@@ -1105,6 +1209,7 @@ def q_clump_tile_pos(spark, sf_dir) -> DataFrame:
         .select("image_id", "clump_id", "n_pix", "tile_pos", "on_border")
 
 
+@query
 def q_change_clumps(spark, sf_dir) -> DataFrame:
     """changedetect find_change_clumps_from_std_dev
     (RSGISFindChangeClumps.cpp): clump flagged change iff its Histogram
@@ -1116,6 +1221,7 @@ def q_change_clumps(spark, sf_dir) -> DataFrame:
         .select("image_id", "clump_id", "cls", "n_pix", "change")
 
 
+@query
 def q_select_on_grid(spark, sf_dir) -> DataFrame:
     """rastergis.select_clumps_on_grid method='min'
     (RSGISSelectClumps.cpp:33): per 4x4 grid cell, flag the clump with
@@ -1128,6 +1234,7 @@ def q_select_on_grid(spark, sf_dir) -> DataFrame:
                 "sel")
 
 
+@query
 def q_seg_mean(spark, sf_dir) -> DataFrame:
     """segmentation.mean_image: per-clump mean attribution (the
     shepherdseg out_mean_img product); one exact IEEE division."""
@@ -1136,6 +1243,7 @@ def q_seg_mean(spark, sf_dir) -> DataFrame:
         .select("image_id", "clump_id", "n_pix", "sum_val", "mean_val")
 
 
+@query
 def q_union_clumps(spark, sf_dir) -> DataFrame:
     """segmentation.union_of_clumps (segmentation.cpp:212): overlay of
     two clump lattices — components of the label tuple; per-region
@@ -1145,6 +1253,7 @@ def q_union_clumps(spark, sf_dir) -> DataFrame:
         .select("image_id", "clump_id", "n_pix", "val_a", "val_b")
 
 
+@query
 def q_dem_slope(spark, sf_dir) -> DataFrame:
     """elevation.slope (python/src/elevation.cpp:46, Horn 3x3 kernel
     RSGISDEMTools.cpp:38) binned by exact (8*res*tan T)^2 thresholds
@@ -1154,6 +1263,7 @@ def q_dem_slope(spark, sf_dir) -> DataFrame:
         .select("image_id", "slope_cls", "n_pix", "sum_g2")
 
 
+@query
 def q_dem_aspect(spark, sf_dir) -> DataFrame:
     """elevation.aspect + catagorise_aspect (RSGISDEMTools.cpp:214,
     :411): 8 compass sectors + flat as exact integer octant tests."""
@@ -1162,6 +1272,7 @@ def q_dem_aspect(spark, sf_dir) -> DataFrame:
         .select("image_id", "aspect_cat", "n_pix")
 
 
+@query
 def q_dem_hillshade(spark, sf_dir) -> DataFrame:
     """elevation.hillshade (RSGISDEMTools.cpp:479): pinned IEEE tree,
     sun az 315 zen 45, res 30 m; 2^20-quantized shade stats."""
@@ -1171,6 +1282,7 @@ def q_dem_hillshade(spark, sf_dir) -> DataFrame:
                 "min_shade_q", "max_shade_q")
 
 
+@query
 def q_toa_radiance(spark, sf_dir) -> DataFrame:
     """imagecalibration: landsat_to_radiance_multi_add (L = G*DN + O,
     all-band-zero border rule) fused with
@@ -1183,6 +1295,7 @@ def q_toa_radiance(spark, sf_dir) -> DataFrame:
                 "min_rho_q", "max_rho_q")
 
 
+@query
 def q_sref_6s(spark, sf_dir) -> DataFrame:
     """imagecalibration.apply_6s_coeff_single_param
     (RSGISApply6SCoefficients.cpp:40): y = aX*v - bX, t =
@@ -1194,6 +1307,7 @@ def q_sref_6s(spark, sf_dir) -> DataFrame:
                 "sum_sref_q", "min_sref_q", "max_sref_q")
 
 
+@query
 def q_dos_subtract(spark, sf_dir) -> DataFrame:
     """imagecalibration.apply_subtract_single_offsets + perform_dos_calc
     (RSGISApplySubtractOffsets.cpp:98): dark-object offset = min valid
@@ -1204,6 +1318,7 @@ def q_dos_subtract(spark, sf_dir) -> DataFrame:
                 "sum_out", "min_out", "max_out")
 
 
+@query
 def q_kurt_skew_thresh(spark, sf_dir) -> DataFrame:
     """tools.stats.calc_kurt_skew_threshold (tools/stats.py:900):
     minimise |kurtosis|+|skew| of the above-threshold population —
@@ -1215,6 +1330,7 @@ def q_kurt_skew_thresh(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_cand", "thr_v", "crit_q", "n_sub")
 
 
+@query
 def q_dem_fill(spark, sf_dir) -> DataFrame:
     """elevation.fill_dem_soille_gratin_1994: depression fill as the
     reconstruction-by-erosion fixpoint (== the reference's
@@ -1226,6 +1342,7 @@ def q_dem_fill(spark, sf_dir) -> DataFrame:
                 "sum_raise", "n_rounds")
 
 
+@query
 def q_local_incidence(spark, sf_dir) -> DataFrame:
     """elevation.local_incidence_angle at sun (az 135, zen 60): the
     quantized COSINE of the incidence angle (the reference's final
@@ -1237,6 +1354,7 @@ def q_local_incidence(spark, sf_dir) -> DataFrame:
                 "min_cosi_q", "max_cosi_q")
 
 
+@query
 def q_sref_6s_aot_lut(spark, sf_dir) -> DataFrame:
     """apply_6s_coeff_elev_aot_lut_param — the 2-D elevation x AOT LUT
     (python/src/imagecalibration.cpp:705; RSGISApply6SCoefficients.cpp:
@@ -1249,6 +1367,7 @@ def q_sref_6s_aot_lut(spark, sf_dir) -> DataFrame:
                 "sum_sref_q", "min_sref_q", "max_sref_q")
 
 
+@query
 def q_sref_6s_lut_interp(spark, sf_dir) -> DataFrame:
     """The elevation-LUT linear-interpolation variant of
     apply_6s_coeff_elev_lut_param (RSGISApply6SCoefficients.cpp:
@@ -1260,6 +1379,7 @@ def q_sref_6s_lut_interp(spark, sf_dir) -> DataFrame:
                 "max_sref_q")
 
 
+@query
 def q_local_incidence_deg(spark, sf_dir) -> DataFrame:
     """local_incidence_angle emitting DEGREES — the reference's actual
     output (acos * 180/pi, src/calibration/RSGISDEMTools.cpp via
@@ -1272,6 +1392,7 @@ def q_local_incidence_deg(spark, sf_dir) -> DataFrame:
                 "min_deg_q", "max_deg_q")
 
 
+@query
 def q_sref_sd2010(spark, sf_dir) -> DataFrame:
     """calc_standardised_reflectance_sd2010 — the full topographic-
     correction chain (python/src/imagecalibration.cpp:1543; core
@@ -1286,6 +1407,7 @@ def q_sref_sd2010(spark, sf_dir) -> DataFrame:
                 "min_sd_q", "max_sd_q")
 
 
+@query
 def q_sref_6s_lut(spark, sf_dir) -> DataFrame:
     """imagecalibration.apply_6s_coeff_elev_lut_param
     (RSGISApply6SCoefficients.cpp:140): per-pixel 6S coefficients
@@ -1298,6 +1420,7 @@ def q_sref_6s_lut(spark, sf_dir) -> DataFrame:
                 "min_sref_q", "max_sref_q")
 
 
+@query
 def q_toa_to_radiance(spark, sf_dir) -> DataFrame:
     """imagecalibration.toa_refl_to_radiance: the exact inverse of the
     TOA reflectance transform — L = ((rho/SC)*ED)/(PI*DSQ) with the
@@ -1307,6 +1430,7 @@ def q_toa_to_radiance(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "sum_l_q", "min_l_q", "max_l_q")
 
 
+@query
 def q_dem_slope_pxlres(spark, sf_dir) -> DataFrame:
     """elevation.slope_pxl_res_img: Horn slope classes with a
     PER-PIXEL resolution plane (30/35/40 m by (x+y)%3) — the class
@@ -1316,6 +1440,7 @@ def q_dem_slope_pxlres(spark, sf_dir) -> DataFrame:
         .select("image_id", "slope_cls", "n_pix", "sum_g2")
 
 
+@query
 def q_aspect_med(spark, sf_dir) -> DataFrame:
     """elevation.dtm_aspect_median_filter: 3x3 median over the aspect
     CATEGORY plane (exact small-int median of 9); per-category counts
@@ -1325,6 +1450,7 @@ def q_aspect_med(spark, sf_dir) -> DataFrame:
         .select("image_id", "aspect_cat", "n_pix", "cat_ck")
 
 
+@query
 def q_rand_sample(spark, sf_dir) -> DataFrame:
     """classification.generate_random_accuracy_pts: 5 points per image
     by the deterministic hash ranking (unstratified sibling of
@@ -1334,6 +1460,7 @@ def q_rand_sample(spark, sf_dir) -> DataFrame:
         .select("image_id", "cls", "rank", "x", "y", "v")
 
 
+@query
 def q_sampling_grid(spark, sf_dir) -> DataFrame:
     """imageutils.gen_sampling_grid: regular sample lattice (offset 4,
     step 8) over each image with the sampled value per node."""
@@ -1341,6 +1468,7 @@ def q_sampling_grid(spark, sf_dir) -> DataFrame:
     return sampling_grid_stats(img).select("image_id", "gx", "gy", "v")
 
 
+@query
 def q_stretch_with_stats(spark, sf_dir) -> DataFrame:
     """imageutils.stretch_img_with_stats: linear stretch with SUPPLIED
     in_min/in_max (50/800) saturating at [0,255]; one exact-int
@@ -1350,6 +1478,7 @@ def q_stretch_with_stats(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "n_lo", "n_hi", "sum_out_q")
 
 
+@query
 def q_merge_equiv(spark, sf_dir) -> DataFrame:
     """segmentation.merge_equiv_clumps: clumps with equal attribute
     values merge (adjacent or not); on the value//128 lattice the
@@ -1359,6 +1488,7 @@ def q_merge_equiv(spark, sf_dir) -> DataFrame:
         .select("image_id", "merged_id", "q_val", "n_clumps", "n_pix")
 
 
+@query
 def q_drop_clumps(spark, sf_dir) -> DataFrame:
     """segmentation.drop_selected_clumps: remove the < 50 px clumps
     and densely relabel survivors in ascending old-label order."""
@@ -1367,6 +1497,7 @@ def q_drop_clumps(spark, sf_dir) -> DataFrame:
         .select("image_id", "new_id", "old_id", "n_pix")
 
 
+@query
 def q_isodata_thresh(spark, sf_dir) -> DataFrame:
     """tools.stats.calc_isodata_threshold (tools/stats.py:717,
     Ridler-Calvard inter-means): first value with
@@ -1377,6 +1508,7 @@ def q_isodata_thresh(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "n_fixed", "thr_v")
 
 
+@query
 def q_cross_entropy(spark, sf_dir) -> DataFrame:
     """tools.stats.calc_hist_cross_entropy (tools/stats.py:787, Li &
     Lee 1993 eq. 8): nu = -m1a ln(mua) - m1b ln(mub) at threshold 100
@@ -1386,6 +1518,7 @@ def q_cross_entropy(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_lo", "n_hi", "ce_q")
 
 
+@query
 def q_li_threshold(spark, sf_dir) -> DataFrame:
     """tools.stats.calc_li_threshold (tools/stats.py:834, Li's minimum
     cross-entropy gradient iteration): 16 fixed unrolled rounds of
@@ -1396,6 +1529,7 @@ def q_li_threshold(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "n_fore", "t_q")
 
 
+@query
 def q_cloud_shadow(spark, sf_dir) -> DataFrame:
     """imagecalibration.calc_cloud_shadow_mask: cloud mask projected
     along the sun vector over the height range — ONE sliding-window
@@ -1406,6 +1540,7 @@ def q_cloud_shadow(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "n_cloud", "n_shadow", "shadow_ck")
 
 
+@query
 def q_global_class_stats(spark, sf_dir) -> DataFrame:
     """rastergis.get_global_class_stats: per-class statistics over the
     WHOLE corpus — per-image moment partials, ONE tiny shuffle, 12
@@ -1416,6 +1551,7 @@ def q_global_class_stats(spark, sf_dir) -> DataFrame:
                 "std_q")
 
 
+@query
 def q_prop_valid(spark, sf_dir) -> DataFrame:
     """rastergis.populate_rat_with_prop_valid_pxls: valid-pixel
     proportion per clump of the value//128 segmentation lattice; one
@@ -1425,6 +1561,7 @@ def q_prop_valid(spark, sf_dir) -> DataFrame:
         .select("image_id", "clump_id", "n_pix", "n_valid", "prop_q")
 
 
+@query
 def q_vec_maths(spark, sf_dir) -> DataFrame:
     """vectorutils.vector_maths: sandboxed arithmetic expressions over
     attribute columns, handed verbatim to Catalyst AND DuckDB
@@ -1436,6 +1573,7 @@ def q_vec_maths(spark, sf_dir) -> DataFrame:
                         "aspect_ratio")
 
 
+@query
 def q_lines_points(spark, sf_dir) -> DataFrame:
     """vectorutils.create_lines_of_points: consecutive query points
     (qid order) -> line segments with 2^20-quantized lengths."""
@@ -1444,6 +1582,7 @@ def q_lines_points(spark, sf_dir) -> DataFrame:
         .select("seg_id", "x1", "y1", "x2", "y2", "len_q")
 
 
+@query
 def q_colour_classes(spark, sf_dir) -> DataFrame:
     """classification.gen_rgb_img_from_clr_tbl +
     rastergis.colour_rat_classes: quartile class plane through the
@@ -1453,6 +1592,7 @@ def q_colour_classes(spark, sf_dir) -> DataFrame:
         .select("image_id", "cls", "n_pix", "sum_r", "sum_g", "sum_b")
 
 
+@query
 def q_spot_radiance(spark, sf_dir) -> DataFrame:
     """imagecalibration.spot5_to_radiance
     (RSGISStandardDN2RadianceCalibration.cpp:107: L = DN/gain + bias —
@@ -1463,6 +1603,7 @@ def q_spot_radiance(spark, sf_dir) -> DataFrame:
                 "max_l_q")
 
 
+@query
 def q_subtract_offsets(spark, sf_dir) -> DataFrame:
     """imagecalibration.apply_subtract_offsets (constant per-band
     offsets; RSGISApplySubtractOffsets.cpp): nonNegative lift + nodata
@@ -1473,6 +1614,7 @@ def q_subtract_offsets(spark, sf_dir) -> DataFrame:
                 "sum_out")
 
 
+@query
 def q_ts_fill_composite(spark, sf_dir) -> DataFrame:
     """imageutils.gen_timeseries_fill_composite_img
     (python/src/imageutils.cpp:2706): first-valid-by-date composite
@@ -1484,6 +1626,7 @@ def q_ts_fill_composite(spark, sf_dir) -> DataFrame:
                 "n_unfilled", "sum_comp", "ref_ck")
 
 
+@query
 def q_jm_dist(spark, sf_dir) -> DataFrame:
     """rastergis.calc_1d_jm_distance (RSGISRATStats.cpp:130-141):
     JM = sqrt(2(1 - sum_i sqrt(p1_i p2_i))) over the shared band-2
@@ -1494,6 +1637,7 @@ def q_jm_dist(spark, sf_dir) -> DataFrame:
         .select("image_id", "n1", "n2", "n_bins", "sum_bc_q", "jm_q")
 
 
+@query
 def q_jm2d_dist(spark, sf_dir) -> DataFrame:
     """rastergis.calc_2d_jm_distance: same JM over the 2-D histogram
     of (b2, b1 % 64) packed bins."""
@@ -1502,6 +1646,7 @@ def q_jm2d_dist(spark, sf_dir) -> DataFrame:
         .select("image_id", "n1", "n2", "n_bins", "sum_bc_q", "jm_q")
 
 
+@query
 def q_thermal_bright(spark, sf_dir) -> DataFrame:
     """imagecalibration.landsat_thermal_rad_to_brightness
     (RSGISCalculateTopOfAtmosphereReflectance.cpp:75: T = K2/ln(K1/L+1)).
@@ -1514,6 +1659,7 @@ def q_thermal_bright(spark, sf_dir) -> DataFrame:
                 "max_tb_q")
 
 
+@query
 def q_bhatt_dist(spark, sf_dir) -> DataFrame:
     """rastergis.calc_bhattacharyya_distance between the band-1
     populations of quartile classes 0 and 1: exact-integer moment
@@ -1524,6 +1670,7 @@ def q_bhatt_dist(spark, sf_dir) -> DataFrame:
                 "b_q")
 
 
+@query
 def q_yen_threshold(spark, sf_dir) -> DataFrame:
     """tools.stats.calc_yen_threshold (tools/stats.py:679, Yen 1995):
     crit rationalised to 2(ln c + ln(N-c)) - ln A1 - ln A2 with every
@@ -1535,6 +1682,7 @@ def q_yen_threshold(spark, sf_dir) -> DataFrame:
                 "sum_crit_q")
 
 
+@query
 def q_strat_sample(spark, sf_dir) -> DataFrame:
     """classification.generate_stratified_random_accuracy_pts: 3 points
     per (image, class), drawn by ranking the documented deterministic
@@ -1544,6 +1692,7 @@ def q_strat_sample(spark, sf_dir) -> DataFrame:
         .select("image_id", "cls", "rank", "x", "y", "v")
 
 
+@query
 def q_exh_unmix(spark, sf_dir) -> DataFrame:
     """specunmixing.exhcon_linear_spec_unmix
     (RSGISLinearSpectralUnmixing.cpp:99): exhaustive constrained
@@ -1555,6 +1704,7 @@ def q_exh_unmix(spark, sf_dir) -> DataFrame:
                 "n_full")
 
 
+@query
 def q_avg_endmembers(spark, sf_dir) -> DataFrame:
     """specunmixing.extract_avg_endmembers: mean (b1, b2) spectrum per
     class plane quartile; exact-int divisions, -1 empty sentinel."""
@@ -1564,6 +1714,7 @@ def q_avg_endmembers(spark, sf_dir) -> DataFrame:
                 "mean_b1_q", "mean_b2_q")
 
 
+@query
 def q_dem_detrend(spark, sf_dir) -> DataFrame:
     """elevation.plane_fit_detreat_dem: 3x3 LSQ-plane detrend — the
     symmetric design makes the fitted centre the window mean, so the
@@ -1574,6 +1725,7 @@ def q_dem_detrend(spark, sf_dir) -> DataFrame:
                 "max_res_q")
 
 
+@query
 def q_shadow_mask(spark, sf_dir) -> DataFrame:
     """elevation.shadow_mask (RSGISCalcShadowBinaryMask,
     RSGISCmdElevationTools.cpp:388) for azimuth 270: the ray test
@@ -1584,6 +1736,7 @@ def q_shadow_mask(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "n_shadow", "shadow_ck")
 
 
+@query
 def q_saturated_mask(spark, sf_dir) -> DataFrame:
     """imagecalibration.saturated_pixels_mask: per-band count +
     flat-index checksum of pixels at the format saturation value."""
@@ -1592,6 +1745,7 @@ def q_saturated_mask(spark, sf_dir) -> DataFrame:
         .select("image_id", "band", "n_pix", "n_sat", "sat_ck")
 
 
+@query
 def q_norm_pxl_vals(spark, sf_dir) -> DataFrame:
     """imageutils.normalise_img_pxl_vals: per-image min-max
     normalisation, one exact-int division per pixel, 2^20-quantized."""
@@ -1600,6 +1754,7 @@ def q_norm_pxl_vals(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "v_min", "v_max", "sum_norm_q")
 
 
+@query
 def q_prop_true(spark, sf_dir) -> DataFrame:
     """imagecalc.calc_prop_true_exp (RSGISCalcPropExpTruePxls,
     RSGISCmdImageCalc.cpp:2325) with the expression b1 > b2."""
@@ -1608,6 +1763,7 @@ def q_prop_true(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "n_true", "prop_q")
 
 
+@query
 def q_band_rmse(spark, sf_dir) -> DataFrame:
     """imagecalc.calculate_img_band_rmse between band 1 and band 2:
     one exact-int division + one correctly-rounded sqrt."""
@@ -1616,6 +1772,7 @@ def q_band_rmse(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "sum_d2", "rmse_q")
 
 
+@query
 def q_img_rescale(spark, sf_dir) -> DataFrame:
     """imagecalc.calc_img_rescale (RSGISRescaleImageData,
     RSGISApplyGainOffset2Img.cpp:40): ((v-cOff)/cGain)*nGain + nOff
@@ -1626,6 +1783,7 @@ def q_img_rescale(spark, sf_dir) -> DataFrame:
                 "min_out_q", "max_out_q")
 
 
+@query
 def q_mean_in_mask(spark, sf_dir) -> DataFrame:
     """imagecalc.calc_img_mean_in_mask (RSGISCmdImageCalc.cpp:2801):
     band-1 mean where the mask plane (b2 // 64) == 3, nodata 0
@@ -1635,6 +1793,7 @@ def q_mean_in_mask(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_msk", "sum_v", "mean_q")
 
 
+@query
 def q_all_bands_equal(spark, sf_dir) -> DataFrame:
     """imagecalc.all_bands_equal_to (RSGISAllBandsEqualTo,
     RSGISCmdImageCalc.cpp:1532): trueVal where every band == 100 —
@@ -1645,6 +1804,7 @@ def q_all_bands_equal(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "n_true", "sum_out")
 
 
+@query
 def q_stats_in_env(spark, sf_dir) -> DataFrame:
     """imagecalc.get_img_band_stats_in_env + get_img_band_mode_in_env
     (RSGISCmdImageCalc.cpp:1766): band stats over pixels whose centre
@@ -1656,6 +1816,7 @@ def q_stats_in_env(spark, sf_dir) -> DataFrame:
                 "mode_v", "mean_q", "std_q")
 
 
+@query
 def q_column_summary(spark, sf_dir) -> DataFrame:
     """imagecalc.image_pixel_column_summary (RSGISImagePixelSummary,
     RSGISImageStatistics.cpp:1445): per-pixel min/max/sum/mean/stddev
@@ -1666,6 +1827,7 @@ def q_column_summary(spark, sf_dir) -> DataFrame:
                 "sum_mean_q", "sum_std_q")
 
 
+@query
 def q_mahal_window(spark, sf_dir) -> DataFrame:
     """imagecalc.mahalanobis_dist_filter (RSGISCmdImageCalc.cpp:581;
     kernel RSGISImageWindowStats.cpp:35): 3x3 neighbour-delta
@@ -1678,6 +1840,7 @@ def q_mahal_window(spark, sf_dir) -> DataFrame:
                 "min_q", "max_q")
 
 
+@query
 def q_mahal_global(spark, sf_dir) -> DataFrame:
     """imagecalc.mahalanobis_dist_to_img_filter
     (RSGISCmdImageCalc.cpp:619; kernel RSGISImageWindowStats.cpp:177):
@@ -1690,6 +1853,7 @@ def q_mahal_global(spark, sf_dir) -> DataFrame:
                 "min_q", "max_q")
 
 
+@query
 def q_class_accuracy(spark, sf_dir) -> DataFrame:
     """classification.classaccuracymetrics.calc_class_accuracy_metrics
     (classaccuracymetrics.py:121-239): per-image confusion matrix with
@@ -1702,6 +1866,7 @@ def q_class_accuracy(spark, sf_dir) -> DataFrame:
                 "rec_q", "f1_q", "oa_q", "kappa_q")
 
 
+@query
 def q_regress_stats(spark, sf_dir) -> DataFrame:
     """regression.get_regression_stats (regression/__init__.py:10-100)
     + tools.stats bias_score / decompose_bias_variance: r2, explained
@@ -1715,6 +1880,7 @@ def q_regress_stats(spark, sf_dir) -> DataFrame:
                 "nrmse_q", "bias_q", "nbias_q", "var_q")
 
 
+@query
 def q_isodata(spark, sf_dir) -> DataFrame:
     """imagecalc.isodata_clustering (deterministic engine round):
     kmeans -> merge closest adjacent pair (<100) -> split the highest-
@@ -1725,6 +1891,7 @@ def q_isodata(spark, sf_dir) -> DataFrame:
         .select("image_id", "cls", "centre", "n_pix")
 
 
+@query
 def q_kmeans_centres(spark, sf_dir) -> DataFrame:
     """shepherdseg KMeans stage (segmentation/shepherdseg.py:68;
     imagecalc kmeans_clustering): deterministic integer 1-D k-means
@@ -1736,6 +1903,7 @@ def q_kmeans_centres(spark, sf_dir) -> DataFrame:
         .select("image_id", "cls", "centre", "n_pix")
 
 
+@query
 def q_shepherd_seg(spark, sf_dir) -> DataFrame:
     """shepherdseg kmeans->clump stage (Shepherd et al. 2019, RS
     11(6):658): 4-connected equal-class regions of the k-means
@@ -1747,6 +1915,7 @@ def q_shepherd_seg(spark, sf_dir) -> DataFrame:
         .select("image_id", "seg_id", "cls", "n_pix")
 
 
+@query
 def q_stretch_minmax(spark, sf_dir) -> DataFrame:
     """stretch_img STRETCH_LINEARMINMAX (imageutils.cpp:1927): scale
     [min,max] -> 0..255, integer floor mapping; per-image out stats."""
@@ -1756,6 +1925,7 @@ def q_stretch_minmax(spark, sf_dir) -> DataFrame:
                 "max_out")
 
 
+@query
 def q_stretch_percent(spark, sf_dir) -> DataFrame:
     """stretch_img STRETCH_LINEARPERCENT (imageutils.cpp:1927): scale
     the [2%, 98%] nearest-rank window -> 0..255 with clipping."""
@@ -1765,6 +1935,7 @@ def q_stretch_percent(spark, sf_dir) -> DataFrame:
                 "max_out")
 
 
+@query
 def q_otsu_threshold(spark, sf_dir) -> DataFrame:
     """calc_otsu_threshold / calc_split_win_thresholds (tools/stats.py
     :641, imagecalc/__init__.py:1556): per-image Otsu over the exact
@@ -1774,6 +1945,7 @@ def q_otsu_threshold(spark, sf_dir) -> DataFrame:
         .select("image_id", "thres", "n_below", "n_above", "score")
 
 
+@query
 def q_dist_to_vals(spark, sf_dir) -> DataFrame:
     """calc_dist_to_img_vals (imagecalc/__init__.py:136): distance to
     the nearest target-valued pixel, max_dist/out_no_data semantics,
@@ -1784,6 +1956,7 @@ def q_dist_to_vals(spark, sf_dir) -> DataFrame:
                 "n_nodata")
 
 
+@query
 def q_pts_bboxes(spark, sf_dir) -> DataFrame:
     """create_bboxs_for_pts (createvectors.py:890): fixed-size boxes
     centred on the query-point layer."""
@@ -1792,6 +1965,7 @@ def q_pts_bboxes(spark, sf_dir) -> DataFrame:
         .select("qid", "bxmin", "bxmax", "bymin", "bymax")
 
 
+@query
 def q_stretch_power(spark, sf_dir) -> DataFrame:
     """stretch_img STRETCH_POWERLAW power=2 (RSGISStretchImage.cpp:
     1077): linear 0..255 map of the v^2 plane, all-integer."""
@@ -1801,6 +1975,7 @@ def q_stretch_power(spark, sf_dir) -> DataFrame:
                 "min_out", "max_out")
 
 
+@query
 def q_stretch_stddev(spark, sf_dir) -> DataFrame:
     """stretch_img STRETCH_LINEARSTDDEV (RSGISStretchImage.cpp:263):
     [mean - 2sd, mean + 2sd] window clamped to [min, max]; double
@@ -1811,6 +1986,7 @@ def q_stretch_stddev(spark, sf_dir) -> DataFrame:
                 "min_out", "max_out")
 
 
+@query
 def q_poly_bbox_cols(spark, sf_dir) -> DataFrame:
     """pop_bbox_cols (vectorattrs/__init__.py:280): per-feature geometry
     bbox attributes from the triangle layer's vertex arrays."""
@@ -1819,6 +1995,7 @@ def q_poly_bbox_cols(spark, sf_dir) -> DataFrame:
         .select("poly_id", "xmin", "xmax", "ymin", "ymax")
 
 
+@query
 def q_poly_centroids(spark, sf_dir) -> DataFrame:
     """calc_poly_centroids (vectorgeoms/__init__.py:1066): shoelace area
     centroid of every triangle feature."""
@@ -1827,6 +2004,7 @@ def q_poly_centroids(spark, sf_dir) -> DataFrame:
         .select("poly_id", "cx", "cy")
 
 
+@query
 def q_imgs_equal(spark, sf_dir) -> DataFrame:
     """are_imgs_equal (imagecalc/__init__.py:1408): proportion of pixels
     within flt_dif between two same-grid images + the >= prop_eql
@@ -1865,6 +2043,7 @@ def q_imgs_equal(spark, sf_dir) -> DataFrame:
          .otherwise(F.lit(0)).cast("long").alias("eq_flag"))
 
 
+@query
 def q_chip_extract(spark, sf_dir) -> DataFrame:
     """extract_chip_zone_image_band_values_to_hdf (zonalstats/__init__.py
     :1674): 7x7 chips centred on mask==42 pixels; per-chip sum/min/max
@@ -1874,6 +2053,7 @@ def q_chip_extract(spark, sf_dir) -> DataFrame:
         .select("image_id", "cx", "cy", "chip_sum", "chip_min", "chip_max")
 
 
+@query
 def q_sample_split(spark, sf_dir) -> DataFrame:
     """split_sample_hdf5_file / random_sample_hdf5_file (python/src/
     zonalstats.cpp:216,248): seeded split as a DETERMINISTIC md5-hash
@@ -1888,6 +2068,7 @@ def q_sample_split(spark, sf_dir) -> DataFrame:
                  F.countDistinct("label").alias("n_labels")))
 
 
+@query
 def q_sample_finite(spark, sf_dir) -> DataFrame:
     """msk_h5_smpls_to_finite_values (zonalstats/__init__.py:2583):
     all-finite row gate + ANY(> lower)/ANY(< upper) limits.  Non-finite
@@ -1909,6 +2090,7 @@ def q_sample_finite(spark, sf_dir) -> DataFrame:
                  F.max("vec_id").alias("max_vec")))
 
 
+@query
 def q_ndvi_index(spark, sf_dir) -> DataFrame:
     """calc_ndvi-shaped scaled spectral index stats (§2.9)."""
     img = _px_images(spark, sf_dir)
@@ -1916,12 +2098,14 @@ def q_ndvi_index(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "sum_idx", "min_idx", "max_idx")
 
 
+@query
 def q_hist2d(spark, sf_dir) -> DataFrame:
     """get_2d_img_histogram over (plane, mirror) joint bins (§2.5)."""
     img = _px_images(spark, sf_dir)
     return im.hist2d(img, bin_width=128, bins=8).select("b1", "b2", "n")
 
 
+@query
 def q_valid_frac_rank(spark, sf_dir) -> DataFrame:
     """order_img_using_prop_valid_pxls top-10 (§2.7)."""
     img = _px_images(spark, sf_dir)
@@ -1929,6 +2113,7 @@ def q_valid_frac_rank(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "n_valid", "valid_frac", "rank")
 
 
+@query
 def q_coarse_cell_stats(spark, sf_dir) -> DataFrame:
     """get_img_sum_stats_in_pxl 16x16 downsample stats (§2.5)."""
     img = _px_images(spark, sf_dir, mod=19)
@@ -1936,6 +2121,7 @@ def q_coarse_cell_stats(spark, sf_dir) -> DataFrame:
         .select("image_id", "cx", "cy", "n", "s", "mn", "mx")
 
 
+@query
 def q_stats_by_fmt(spark, sf_dir) -> DataFrame:
     """calc_multi_img_band_stats: global per-format stats (§2.5)."""
     img = _px_images(spark, sf_dir)
@@ -1951,6 +2137,7 @@ def q_stats_by_fmt(spark, sf_dir) -> DataFrame:
          / F.sum("n_pix").cast("double")).alias("mean_pix"))
 
 
+@query
 def q_pxl_value_counts(spark, sf_dir) -> DataFrame:
     """count_pxls_of_val / get_unique_values for v < 40 (§2.5)."""
     img = _px_images(spark, sf_dir)
@@ -1958,6 +2145,7 @@ def q_pxl_value_counts(spark, sf_dir) -> DataFrame:
     return out.select(F.col("val").cast("long").alias("val"), "n")
 
 
+@query
 def q_img_histogram(spark, sf_dir) -> DataFrame:
     """histogram with bin width 64 over all subset pixels (§2.5)."""
     img = _px_images(spark, sf_dir)
@@ -1965,6 +2153,7 @@ def q_img_histogram(spark, sf_dir) -> DataFrame:
     return out.select(F.col("bin").cast("long").alias("bin"), "n")
 
 
+@query
 def q_band_percentiles(spark, sf_dir) -> DataFrame:
     """calc_band_percentile: exact nearest-rank percentiles (§2.5)."""
     img = _px_images(spark, sf_dir)
@@ -1972,6 +2161,7 @@ def q_band_percentiles(spark, sf_dir) -> DataFrame:
     return out.select("p", F.col("value").cast("long").alias("value"))
 
 
+@query
 def q_zonal_stats(spark, sf_dir) -> DataFrame:
     """calc_zonal_band_stats per zone across the id%7 image subset (§2.5)."""
     img = _px_images(spark, sf_dir, mod=7, with_footprint=True)
@@ -1981,6 +2171,7 @@ def q_zonal_stats(spark, sf_dir) -> DataFrame:
                       "max_pix", "mean_pix", "stddev_pix", "median_pix")
 
 
+@query
 def q_zonal_envelope(spark, sf_dir) -> DataFrame:
     """calc_zonal_band_stats with the polyOverlapsPixel (envelope)
     membership mode: every pixel whose BOX overlaps the zone counts
@@ -1992,6 +2183,7 @@ def q_zonal_envelope(spark, sf_dir) -> DataFrame:
                       "max_pix", "mean_pix", "stddev_pix", "median_pix")
 
 
+@query
 def q_zonal_contains(spark, sf_dir) -> DataFrame:
     """calc_zonal_band_stats with the polyContainsPixel mode: only
     pixels whose box lies FULLY inside the zone count (§2.5)."""
@@ -2025,6 +2217,7 @@ _ZONAL_OUT = ["zone_id", "zname", "n_pix", "sum_pix", "min_pix",
               "max_pix", "mean_pix", "stddev_pix", "median_pix"]
 
 
+@query
 def q_zonal_adaptive(spark, sf_dir) -> DataFrame:
     """calc_zonal_band_stats with the ADAPTIVE pixel-in-poly mode
     (reference default for small polygons, RSGISPixelInPoly.cpp:97-120):
@@ -2038,6 +2231,7 @@ def q_zonal_adaptive(spark, sf_dir) -> DataFrame:
     return out.select(*_ZONAL_OUT)
 
 
+@query
 def q_zonal_overlaps_contains(spark, sf_dir) -> DataFrame:
     """polyOverlapsOrContainsPixel: GEOS Overlaps|Contains on the pixel
     box (RSGISPixelInPoly.cpp:63-74; §2.3 pixel-in-poly modes)."""
@@ -2047,6 +2241,7 @@ def q_zonal_overlaps_contains(spark, sf_dir) -> DataFrame:
     return out.select(*_ZONAL_OUT)
 
 
+@query
 def q_zonal_pixcontains(spark, sf_dir) -> DataFrame:
     """pixelContainsPoly over the sub-pixel tiny-zone layer (a zone
     larger than a pixel can never be pixel-contained, so the tiny layer
@@ -2057,6 +2252,7 @@ def q_zonal_pixcontains(spark, sf_dir) -> DataFrame:
     return out.select(*_ZONAL_OUT)
 
 
+@query
 def q_zonal_pixcenter(spark, sf_dir) -> DataFrame:
     """pixelContainsPolyCenter (documented semantics: the zone's
     centroid lies strictly inside the pixel box — the reference's
@@ -2068,6 +2264,7 @@ def q_zonal_pixcenter(spark, sf_dir) -> DataFrame:
     return out.select(*_ZONAL_OUT)
 
 
+@query
 def q_zonal_polyarea(spark, sf_dir) -> DataFrame:
     """polyAreaInPixel: pixels weighted by the fraction of the ZONE's
     area inside each pixel box (§2.3 pixel-in-poly modes,
@@ -2078,6 +2275,7 @@ def q_zonal_polyarea(spark, sf_dir) -> DataFrame:
         .select("zone_id", "n_touched", "wsum", "wmean")
 
 
+@query
 def q_vec_intersects(spark, sf_dir) -> DataFrame:
     """vec_intersects_vec exists-join: for each triangle zone, how many
     OTHER zone triangles it intersects (§2.3)."""
@@ -2101,6 +2299,7 @@ def _rect_zones(zones):
         F.col("zymin").alias("pymin"), F.col("zymax").alias("pymax"))
 
 
+@query
 def q_vec_within(spark, sf_dir) -> DataFrame:
     """vec_within_vec: for each zone triangle, how many zone RECTS it
     lies within — boundary sharing allowed, so every triangle is within
@@ -2113,6 +2312,7 @@ def q_vec_within(spark, sf_dir) -> DataFrame:
                       F.col("any_match").alias("any_within"))
 
 
+@query
 def q_vec_overlaps(spark, sf_dir) -> DataFrame:
     """vec_overlaps_vec: zone triangles that partially overlap OTHER
     zone triangles — interiors intersect, neither within the other
@@ -2126,6 +2326,7 @@ def q_vec_overlaps(spark, sf_dir) -> DataFrame:
                       F.col("any_match").alias("any_overlaps"))
 
 
+@query
 def q_vec_touches(spark, sf_dir) -> DataFrame:
     """vec_touches_vec over the 10-deg world grid: each cell touches its
     edge/corner neighbours (boundary contact, disjoint interiors) —
@@ -2148,6 +2349,7 @@ def q_vec_touches(spark, sf_dir) -> DataFrame:
                       F.col("any_match").alias("any_touches"))
 
 
+@query
 def q_vec_contains(spark, sf_dir) -> DataFrame:
     """vec_contains_vec: for each zone RECT, how many zone triangles it
     contains — the converse of within, boundary sharing allowed, so
@@ -2161,6 +2363,7 @@ def q_vec_contains(spark, sf_dir) -> DataFrame:
                       F.col("any_match").alias("any_contains"))
 
 
+@query
 def q_vec_crosses(spark, sf_dir) -> DataFrame:
     """vec_crosses_vec over polygon layers: per OGC DE-9IM, crosses is
     identically FALSE for area/area pairs (mixed-dimension only), so
@@ -2174,6 +2377,7 @@ def q_vec_crosses(spark, sf_dir) -> DataFrame:
                       F.col("any_match").alias("any_crosses"))
 
 
+@query
 def q_overlay_intersection(spark, sf_dir) -> DataFrame:
     """vec_lyr_intersection_gp with geometry output: triangle zones
     clipped by the 10-deg world grid — Sutherland–Hodgman entirely in
@@ -2202,6 +2406,7 @@ def _band_rect(spark):
         F.lit(_BAND[2]).alias("rymin"), F.lit(_BAND[3]).alias("rymax"))
 
 
+@query
 def q_overlay_difference(spark, sf_dir) -> DataFrame:
     """vec_lyr_difference_gp with geometry output: triangle zones minus
     an equatorial band rect — poly \\ rect as the four complementary
@@ -2212,6 +2417,7 @@ def q_overlay_difference(spark, sf_dir) -> DataFrame:
     return out.select("poly_id", "rect_id", "part_idx", "v_idx", "vx", "vy")
 
 
+@query
 def q_overlay_erase(spark, sf_dir) -> DataFrame:
     """LAYER-level rect difference: 10-deg grid cells minus the UNION of
     every zone rect — vertical-slab decomposition + interval-gap
@@ -2248,6 +2454,7 @@ def _band_rect_layer_b(spark):
                                     F.col("rymax").alias("bymax"))
 
 
+@query
 def q_overlay_sym_difference(spark, sf_dir) -> DataFrame:
     """sym_difference with geometry output: zone rects vs the band —
     A-outside-every-B plus B-outside-every-A rect parts (two slab-
@@ -2259,6 +2466,7 @@ def q_overlay_sym_difference(spark, sf_dir) -> DataFrame:
                       "rxmin", "rxmax", "rymin", "rymax")
 
 
+@query
 def q_overlay_union(spark, sf_dir) -> DataFrame:
     """overlay union with geometry output: pairwise intersection boxes
     plus both difference remainders, geopandas how='union' semantics
@@ -2269,6 +2477,7 @@ def q_overlay_union(spark, sf_dir) -> DataFrame:
                       "rxmin", "rxmax", "rymin", "rymax")
 
 
+@query
 def q_overlay_identity(spark, sf_dir) -> DataFrame:
     """overlay identity with geometry output: A∩B pieces + the A-only
     remainder — geopandas how='identity' (§2.8, vec_lyr_identity_gp,
@@ -2280,6 +2489,7 @@ def q_overlay_identity(spark, sf_dir) -> DataFrame:
                       "rxmin", "rxmax", "rymin", "rymax")
 
 
+@query
 def q_line_intersect(spark, sf_dir) -> DataFrame:
     """closest_line_intersection / line_intersection_range /
     scnd_line_intersection_range (vectorgeoms/__init__.py:432/626/833):
@@ -2292,6 +2502,7 @@ def q_line_intersect(spark, sf_dir) -> DataFrame:
     return line_zone_intersections(qpts, zones)
 
 
+@query
 def q_line_project(spark, sf_dir) -> DataFrame:
     """get_pt_on_line / find_pt_to_side / create_orthg_lines
     (vectorgeoms/__init__.py:154/206/270): distance-along point and
@@ -2304,6 +2515,7 @@ def q_line_project(spark, sf_dir) -> DataFrame:
     return qpts.selectExpr("qid", *[f"{x} AS {k}" for k, x in e.items()])
 
 
+@query
 def q_quantity_acc(spark, sf_dir) -> DataFrame:
     """cls_quantity_accuracy (classaccuracymetrics.py:46, Pontius &
     Millones 2011): quantity / allocation disagreement, proportion
@@ -2313,6 +2525,7 @@ def q_quantity_acc(spark, sf_dir) -> DataFrame:
     return quantity_accuracy_stats(img)
 
 
+@query
 def q_qa_c2_parse(spark, sf_dir) -> DataFrame:
     """parse_landsat_c2_qa_pixel_img (imagecalibration/
     sensorlvl2data.py:535): C2 QA_PIXEL bit decode — 8 flag bands +
@@ -2322,6 +2535,7 @@ def q_qa_c2_parse(spark, sf_dir) -> DataFrame:
     return qa_pixel_parse_stats(img)
 
 
+@query
 def q_extent_on_grid(spark, sf_dir) -> DataFrame:
     """tools.geometrytools find_extent_on_grid /
     find_extent_on_whole_num_grid / find_common_extent_on_grid
@@ -2352,6 +2566,7 @@ def q_extent_on_grid(spark, sf_dir) -> DataFrame:
     ).selectExpr(*cols)
 
 
+@query
 def q_cqv_select(spark, sf_dir) -> DataFrame:
     """tools.stats.cqv_threshold (tools/stats.py:85): quartile
     coefficient of variation (Q3-Q1)/(Q3+Q1) per predictor column,
@@ -2377,6 +2592,7 @@ def q_cqv_select(spark, sf_dir) -> DataFrame:
                "AS BIGINT)").alias("good"))
 
 
+@query
 def q_shift_layer(spark, sf_dir) -> DataFrame:
     """shiftxy_vec_lyr: translate the query-point layer by (0.25, -0.125)
     (§2.9, vectorgeoms/__init__.py:3022)."""
@@ -2385,6 +2601,7 @@ def q_shift_layer(spark, sf_dir) -> DataFrame:
         .select("qid", "sx", "sy")
 
 
+@query
 def q_poly_polyline(spark, sf_dir) -> DataFrame:
     """polygon -> closed polyline vertex rows (§2.9,
     vectorgeoms/__init__.py:20)."""
@@ -2394,6 +2611,7 @@ def q_poly_polyline(spark, sf_dir) -> DataFrame:
     return poly_to_polyline(tri).select("poly_id", "v_idx", "vx", "vy")
 
 
+@query
 def q_explode_multi(spark, sf_dir) -> DataFrame:
     """multi -> single parts with per-part area (§2.9,
     vectorgeoms/__init__.py:1609 explode_vec_lyr)."""
@@ -2405,6 +2623,7 @@ def q_explode_multi(spark, sf_dir) -> DataFrame:
                                        "n_verts", "area")
 
 
+@query
 def q_remove_holes(spark, sf_dir) -> DataFrame:
     """delete_polygon_holes with area threshold: exterior kept, the
     large hole survives, the sliver hole drops (§2.9,
@@ -2426,6 +2645,7 @@ def q_remove_holes(spark, sf_dir) -> DataFrame:
         .select("geom_id", "ring_idx", "n_verts", "area")
 
 
+@query
 def q_simplify_geom(spark, sf_dir) -> DataFrame:
     """simplify_geometries (one-pass decimation): rect rings with
     collinear edge midpoints collapse back to the 4 corners (§2.9,
@@ -2442,6 +2662,7 @@ def q_simplify_geom(spark, sf_dir) -> DataFrame:
         .select("poly_id", "v_idx", "vx", "vy")
 
 
+@query
 def q_zonal_stats_hybrid(spark, sf_dir) -> DataFrame:
     """calc_zonal_band_stats_test_poly_pts: polygon stats + centroid
     fallback for empty zones + per-zone 75th percentile (§2.5)."""
@@ -2453,6 +2674,7 @@ def q_zonal_stats_hybrid(spark, sf_dir) -> DataFrame:
                       "perc_pix")
 
 
+@query
 def q_sjoin_polygon(spark, sf_dir) -> DataFrame:
     """general-polygon PIP join: zones cut to triangles, refined by the
     vectorized ray-casting kernel in Arrow batches (§2.3, §2.11)."""
@@ -2462,6 +2684,7 @@ def q_sjoin_polygon(spark, sf_dir) -> DataFrame:
         .select("image_id", "poly_id")
 
 
+@query
 def q_sjoin_left_intersects(spark, sf_dir) -> DataFrame:
     """perform_spatial_join how=left op=intersects: unmatched kept (§2.3)."""
     img = _images(spark, sf_dir, with_footprint=False)
@@ -2470,6 +2693,7 @@ def q_sjoin_left_intersects(spark, sf_dir) -> DataFrame:
     return out.select("image_id", "lon", "lat", "index_right", "zname")
 
 
+@query
 def q_sjoin_right_within(spark, sf_dir) -> DataFrame:
     """perform_spatial_join how=right: every join-layer row kept (§2.3)."""
     img = _images(spark, sf_dir, with_footprint=False)
@@ -2478,6 +2702,7 @@ def q_sjoin_right_within(spark, sf_dir) -> DataFrame:
     return out.select("zone_id", "zname", "image_id")
 
 
+@query
 def q_sjoin_bbox_intersects(spark, sf_dir) -> DataFrame:
     """footprint-vs-zone bbox join (vec_lyr_intersection overlay, §2.3)."""
     img = _images(spark, sf_dir)  # with footprint bbox cols
@@ -2488,6 +2713,7 @@ def q_sjoin_bbox_intersects(spark, sf_dir) -> DataFrame:
     return out.select("image_id", "zone_id", "zname")
 
 
+@query
 def q_spatial_select(spark, sf_dir) -> DataFrame:
     """spatial_select_gp: semi-join, each matching base row once (§2.3)."""
     img = _images(spark, sf_dir)
@@ -2497,6 +2723,7 @@ def q_spatial_select(spark, sf_dir) -> DataFrame:
     return out.select("image_id", "lon", "lat")
 
 
+@query
 def q_zone_geom_cols(spark, sf_dir) -> DataFrame:
     """geometry accessors + buffer_bbox as appended columns (§2.9)."""
     zones = synth.synth_zones(spark, sf_dir)
@@ -2505,6 +2732,7 @@ def q_zone_geom_cols(spark, sf_dir) -> DataFrame:
                       "g_cx", "g_cy", "b_xmin", "b_xmax", "b_ymin", "b_ymax")
 
 
+@query
 def q_unwrap_bbox(spark, sf_dir) -> DataFrame:
     """antimeridian unwrap: shift zone boxes +340 deg (wrapped) so some
     cross the dateline, then split crossers into two rows (§2.9)."""
@@ -2519,6 +2747,7 @@ def q_unwrap_bbox(spark, sf_dir) -> DataFrame:
         .select("zone_id", "part", "pxmin", "pxmax")
 
 
+@query
 def q_bbox_algebra(spark, sf_dir) -> DataFrame:
     """bbox_intersection / find_bbox_union / calc_bbox_area over every
     strictly-intersecting zone pair (tools/geometrytools.py:82-506) —
@@ -2546,6 +2775,7 @@ def q_bbox_algebra(spark, sf_dir) -> DataFrame:
         F.greatest(F.col("a.zymax"), F.col("b.zymax")).alias("uymax"))
 
 
+@query
 def q_grid_gen(spark, sf_dir) -> DataFrame:
     """define_grid / create_wgs84_vector_grid: 10-deg world grid (§2.9)."""
     g = vec.define_grid(spark, -180.0, 180.0, -60.0, 60.0, 10.0, 10.0)
@@ -2553,6 +2783,7 @@ def q_grid_gen(spark, sf_dir) -> DataFrame:
                     "gymin", "gymax", "g_cx", "g_cy")
 
 
+@query
 def q_hex_grid(spark, sf_dir) -> DataFrame:
     """create_hex_grid_bbox: pointy-top hex lattice over a bbox, one
     row per hex vertex (§2.9, vectorutils/createvectors.py:1235)."""
@@ -2560,6 +2791,7 @@ def q_hex_grid(spark, sf_dir) -> DataFrame:
         .select("hex_id", "q", "r", "cx", "cy", "v_idx", "vx", "vy")
 
 
+@query
 def q_reproj_utm(spark, sf_dir) -> DataFrame:
     """TRUE reproj_wgs84_vec_to_utm: transverse-Mercator series with
     polynomial trig — bit-exact across engines (§2.9)."""
@@ -2568,6 +2800,7 @@ def q_reproj_utm(spark, sf_dir) -> DataFrame:
         .select("qid", "utm_x", "utm_y")
 
 
+@query
 def q_reproj_epsg(spark, sf_dir) -> DataFrame:
     """arbitrary-EPSG TM-family reprojection to EPSG:27700
     (parameterized Snyder series; §2.9, vectorutils/__init__.py:779).
@@ -2601,6 +2834,7 @@ def _remapped_qpts(spark, sf_dir, lon0: float, lon_span: float,
         .alias("qlat"))
 
 
+@query
 def q_web_tiles(spark, sf_dir) -> DataFrame:
     """Web-mercator tile-grid math at zoom 12 (§2.9; tools web-tile
     helpers: get_web_mercator_xy, get_tile_for_point, get_tile_bbox /
@@ -2619,6 +2853,7 @@ def q_web_tiles(spark, sf_dir) -> DataFrame:
                      "lon_tl", "bxmin", "bxmax", "bymin", "bymax")
 
 
+@query
 def q_reproj_lcc(spark, sf_dir) -> DataFrame:
     """Lambert Conformal Conic 2SP forward (EPSG:2154, RGF93 /
     Lambert-93): rho via the band-fitted isometric-latitude polynomial
@@ -2629,6 +2864,7 @@ def q_reproj_lcc(spark, sf_dir) -> DataFrame:
         .select("qid", "x_proj", "y_proj")
 
 
+@query
 def q_reproj_albers(spark, sf_dir) -> DataFrame:
     """Albers Equal Area forward (EPSG:5070, NAD83 / Conus Albers —
     the judge-named continental CRS): closed-form authalic math, the
@@ -2638,6 +2874,7 @@ def q_reproj_albers(spark, sf_dir) -> DataFrame:
         .select("qid", "x_proj", "y_proj")
 
 
+@query
 def q_reproj_laea(spark, sf_dir) -> DataFrame:
     """Lambert Azimuthal Equal Area forward (EPSG:3035, ETRS89 / LAEA
     Europe): sin/cos of the authalic latitude consumed directly —
@@ -2647,6 +2884,7 @@ def q_reproj_laea(spark, sf_dir) -> DataFrame:
         .select("qid", "x_proj", "y_proj")
 
 
+@query
 def q_pixel_area_wgs84(spark, sf_dir) -> DataFrame:
     """calc_wgs84_pixel_area (imageutils/__init__.py:2722) with the
     oracle-exact polynomial cos — closes the one operator that was
@@ -2657,6 +2895,7 @@ def q_pixel_area_wgs84(spark, sf_dir) -> DataFrame:
         "qid", "qlat", F.expr(area).alias("px_area_m2"))
 
 
+@query
 def q_token_count(spark, sf_dir) -> DataFrame:
     """BPE-ish regex token counting over documents (LLM-pipeline op):
     lexer-token count + ceil(len/4) subword estimate, exact ints."""
@@ -2664,6 +2903,7 @@ def q_token_count(spark, sf_dir) -> DataFrame:
     return tx.token_count(t["documents"])
 
 
+@query
 def q_doc_winnow(spark, sf_dir) -> DataFrame:
     """Winnowing rolling-hash fingerprints (k=8 grams, w=4 windows)
     over documents — the shared-substring-detecting fingerprint set
@@ -2672,6 +2912,7 @@ def q_doc_winnow(spark, sf_dir) -> DataFrame:
     return tx.winnow_fingerprints(t["documents"], k=8, w=4)
 
 
+@query
 def q_caption_replace(spark, sf_dir) -> DataFrame:
     """find_replace_str_vec_lyr over the caption column (§2.2)."""
     img = _images(spark, sf_dir, with_footprint=False)
@@ -2680,6 +2921,7 @@ def q_caption_replace(spark, sf_dir) -> DataFrame:
     return out.select("image_id", "caption2")
 
 
+@query
 def q_rank_layer(spark, sf_dir) -> DataFrame:
     """sort_vec_lyr + add_fid_col: deterministic 1-based fid (§2.7)."""
     img = _images(spark, sf_dir, with_footprint=False)
@@ -2687,6 +2929,7 @@ def q_rank_layer(spark, sf_dir) -> DataFrame:
     return out.select("image_id", "h", F.col("fid").cast("long").alias("fid"))
 
 
+@query
 def q_merge_layers(spark, sf_dir) -> DataFrame:
     """merge_vector_layers with schema union / null fill (§2.1, §2.8)."""
     zones = synth.synth_zones(spark, sf_dir)
@@ -2695,6 +2938,7 @@ def q_merge_layers(spark, sf_dir) -> DataFrame:
     return vec.merge_layers([a, b]).select("zone_id", "zname", "zxmin", "zymax")
 
 
+@query
 def q_mosaic_window(spark, sf_dir) -> DataFrame:
     """create_img_mosaic behaviours 0/1/2 + get_img_idx_for_stat (§2.4).
 
@@ -2707,6 +2951,7 @@ def q_mosaic_window(spark, sf_dir) -> DataFrame:
         .select("px", "py", "n_imgs", "v_last", "v_min", "v_max", "idx_max")
 
 
+@query
 def q_band_select(spark, sf_dir) -> DataFrame:
     """stack_img_bands + select_img_bands: 3-band stack, reordered
     2-band selection, per-band stats (§2.2)."""
@@ -2716,6 +2961,7 @@ def q_band_select(spark, sf_dir) -> DataFrame:
                 "min_pix", "max_pix")
 
 
+@query
 def q_filter_bank(spark, sf_dir) -> DataFrame:
     """leung_malik_filter_bank — the FULL 48-filter bank (6 orientations
     x 3 scales of 1st/2nd Gaussian derivatives + 8 LoG + 4 Gaussians),
@@ -2727,6 +2973,7 @@ def q_filter_bank(spark, sf_dir) -> DataFrame:
                 "min_conv", "max_conv")
 
 
+@query
 def q_filter_bank15(spark, sf_dir) -> DataFrame:
     """leung_malik_filter_bank at 15x15 sampled supports — the
     reference-geometry bank (sigmas scale with support; reference uses
@@ -2741,6 +2988,7 @@ def q_filter_bank15(spark, sf_dir) -> DataFrame:
                 "min_conv", "max_conv")
 
 
+@query
 def q_filter_lee(spark, sf_dir) -> DataFrame:
     """apply_lee_filter 3x3: adaptive speckle smoothing, division-free
     integer scaling (§2.6, imagefilter/__init__.py:950)."""
@@ -2749,6 +2997,7 @@ def q_filter_lee(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_lee", "min_lee", "max_lee")
 
 
+@query
 def q_filter_kuwahara(spark, sf_dir) -> DataFrame:
     """apply_kuwahara_filter 5x5: least-variance quadrant mean, 9-scaled
     exact (§2.6, imagefilter/__init__.py:570)."""
@@ -2757,6 +3006,7 @@ def q_filter_kuwahara(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_interior", "sum_k9", "min_k9", "max_k9")
 
 
+@query
 def q_composite_max_ndvi(spark, sf_dir) -> DataFrame:
     """max-NDVI composite: get_img_idx_for_stat + gather fused into one
     order-encoded max pass (§2.4)."""
@@ -2765,6 +3015,7 @@ def q_composite_max_ndvi(spark, sf_dir) -> DataFrame:
         .select("px", "py", "n_imgs", "best_idx", "best_id", "best_v")
 
 
+@query
 def q_block_iter_batches(spark, sf_dir) -> DataFrame:
     """StdImgBlockIterBatches: block windows grouped into fixed-size
     batches (§2.4, imageutils/stdimgblockiter.py batched variant)."""
@@ -2780,6 +3031,7 @@ def q_block_iter_batches(spark, sf_dir) -> DataFrame:
     )
 
 
+@query
 def q_mask_img_vec(spark, sf_dir) -> DataFrame:
     """mask_img_with_vec / subset_to_vec: per-image stats of pixels
     inside ANY zone, overlap counted once (§2.1, §2.2)."""
@@ -2789,6 +3041,7 @@ def q_mask_img_vec(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_in", "sum_in", "min_in", "max_in")
 
 
+@query
 def q_zonal_weighted(spark, sf_dir) -> DataFrame:
     """pixelAreaInPoly membership mode: area-weighted zonal stats
     (§2.3 pixel-in-poly modes, RSGISPixelInPoly.h:48-60)."""
@@ -2798,6 +3051,7 @@ def q_zonal_weighted(spark, sf_dir) -> DataFrame:
         .select("zone_id", "n_touched", "wsum", "wmean")
 
 
+@query
 def q_mosaic_thresh(spark, sf_dir) -> DataFrame:
     """mosaicSkipThresh: composite only pixels with 200 < v < 900
     (strict validity window; §2.4, RSGISImageMosaic.cpp:627)."""
@@ -2810,6 +3064,7 @@ def q_mosaic_thresh(spark, sf_dir) -> DataFrame:
 # relational / vector-attribute operators over the driver tables
 # --------------------------------------------------------------------------
 
+@query
 def q_attr_filter(spark, sf_dir) -> DataFrame:
     """subset_by_attribute: predicate row filter + projection (§2.2)."""
     t = load_tables(spark, sf_dir, ["orders"])
@@ -2818,6 +3073,7 @@ def q_attr_filter(spark, sf_dir) -> DataFrame:
     ).select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
 
 
+@query
 def q_check_validate_geoms(spark, sf_dir) -> DataFrame:
     """vectorutils.check_validate_geometries (vectorutils.cpp:247;
     RSGISCopyCheckPolygons.cpp:34): ring <4-points error path + the
@@ -2829,6 +3085,7 @@ def q_check_validate_geoms(spark, sf_dir) -> DataFrame:
     return spark.sql(ring_check_sql("spark"))
 
 
+@query
 def q_value_counts(spark, sf_dir) -> DataFrame:
     """count_feats_per_att_val (§2.5)."""
     t = load_tables(spark, sf_dir, ["customer"])
@@ -2836,6 +3093,7 @@ def q_value_counts(spark, sf_dir) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_feats"))
 
 
+@query
 def q_dedup_exact(spark, sf_dir) -> DataFrame:
     """rm_feat_att_duplicates via content hash: exact text dedup (§2.2)."""
     t = load_tables(spark, sf_dir, ["documents"])
@@ -2847,6 +3105,7 @@ def q_dedup_exact(spark, sf_dir) -> DataFrame:
     )
 
 
+@query
 def q_text_quality(spark, sf_dir) -> DataFrame:
     """quality scoring: token counts, lengths, stopword ratio."""
     t = load_tables(spark, sf_dir, ["documents"])
@@ -2860,18 +3119,21 @@ def q_text_quality(spark, sf_dir) -> DataFrame:
         F.col("n_re_tokens").cast("long").alias("n_re_tokens"))
 
 
+@query
 def q_lang_id(spark, sf_dir) -> DataFrame:
     """stopword-vote language identification heuristic."""
     t = load_tables(spark, sf_dir, ["documents"])
     return tx.lang_id(t["documents"]).select("doc_id", "lang", "pred_lang")
 
 
+@query
 def q_doc_fingerprint(spark, sf_dir) -> DataFrame:
     """normalized document fingerprint (rolling-hash role, md5-based)."""
     t = load_tables(spark, sf_dir, ["documents"])
     return tx.doc_fingerprint(t["documents"]).select("doc_id", "fp16")
 
 
+@query
 def q_ngram_jaccard(spark, sf_dir) -> DataFrame:
     """near-dup pairs by exact word-3-gram Jaccard (threshold 0.2).
 
@@ -2886,6 +3148,7 @@ def q_ngram_jaccard(spark, sf_dir) -> DataFrame:
         .select("doc_a", "doc_b", "n_common", "jaccard")
 
 
+@query
 def q_minhash_lsh(spark, sf_dir) -> DataFrame:
     """MinHash+LSH near-dup: band-bucket candidates + exact verify."""
     t = load_tables(spark, sf_dir, ["documents"])
@@ -2893,6 +3156,7 @@ def q_minhash_lsh(spark, sf_dir) -> DataFrame:
         .select("doc_a", "doc_b", "n_common", "jaccard")
 
 
+@query
 def q_dedup_clusters(spark, sf_dir) -> DataFrame:
     """Near-dup CLUSTERS: connected components over the verified
     MinHash+LSH pairs (jaccard >= 0.8) via distributed hash-to-min
@@ -2903,12 +3167,14 @@ def q_dedup_clusters(spark, sf_dir) -> DataFrame:
         .select("doc_id", "cluster_id", "cluster_size", "is_canonical")
 
 
+@query
 def q_simhash(spark, sf_dir) -> DataFrame:
     """16-bit SimHash fingerprints over distinct tokens."""
     t = load_tables(spark, sf_dir, ["documents"])
     return tx.simhash(t["documents"]).select("doc_id", "simhash16")
 
 
+@query
 def q_embed_topk(spark, sf_dir) -> DataFrame:
     """brute-force cosine top-5 over the embeddings table (exact ANN
     baseline; integer-quantized so results are bit-stable).
@@ -2924,6 +3190,7 @@ def q_embed_topk(spark, sf_dir) -> DataFrame:
         .select("qid", "vec_id", "rank", "sim")
 
 
+@query
 def q_embed_ann_lsh(spark, sf_dir) -> DataFrame:
     """hyperplane-LSH bucketed approximate 1-NN (the scale path)."""
     t = load_tables(spark, sf_dir, ["embeddings"])
@@ -2933,6 +3200,7 @@ def q_embed_ann_lsh(spark, sf_dir) -> DataFrame:
         .select("qid", "vec_id", "bucket", "sim")
 
 
+@query
 def q_embed_ann_ivf(spark, sf_dir) -> DataFrame:
     """IVF approximate 1-NN (faiss IndexIVFFlat shape): seeded one-sweep
     Lloyd coarse quantizer with exact-integer assignment, never-divided
@@ -2945,6 +3213,7 @@ def q_embed_ann_ivf(spark, sf_dir) -> DataFrame:
         .select("qid", "vec_id", "sim")
 
 
+@query
 def q_gram_matrix(spark, sf_dir) -> DataFrame:
     """PCA/whitening distributed core: exact integer scatter matrix
     (perform_image_pca / whiten_image, §2.9)."""
@@ -2952,6 +3221,7 @@ def q_gram_matrix(spark, sf_dir) -> DataFrame:
     return simi.gram_matrix(t["embeddings"]).select("i", "j", "g")
 
 
+@query
 def q_pca_project(spark, sf_dir) -> DataFrame:
     """perform_image_pca END-TO-END: distributed exact-int scatter ->
     driver-side fixed-point power iteration (the pinned, oracle-exact
@@ -2962,6 +3232,7 @@ def q_pca_project(spark, sf_dir) -> DataFrame:
         .select("vec_id", "pc1")
 
 
+@query
 def q_mnf_gram(spark, sf_dir) -> DataFrame:
     """perform_image_mnf distributed core: exact-int noise scatter of
     adjacent-id vector differences (Green et al. shift estimator;
@@ -2970,6 +3241,7 @@ def q_mnf_gram(spark, sf_dir) -> DataFrame:
     return simi.mnf_noise_gram(t["embeddings"]).select("i", "j", "g")
 
 
+@query
 def q_centroid_assign(spark, sf_dir) -> DataFrame:
     """nearest-centroid classification with exact integer ordering."""
     t = load_tables(spark, sf_dir, ["embeddings"])
@@ -2977,6 +3249,7 @@ def q_centroid_assign(spark, sf_dir) -> DataFrame:
         .select("vec_id", "label", "pred_label", "is_correct")
 
 
+@query
 def q_recode_region(spark, sf_dir) -> DataFrame:
     """recode/lookup via broadcast-join LUT (add_numeric_col_lut, §2.2)."""
     t = load_tables(spark, sf_dir, ["customer", "nation", "region"])
@@ -2990,6 +3263,7 @@ def q_recode_region(spark, sf_dir) -> DataFrame:
     )
 
 
+@query
 def q_pricing_summary(spark, sf_dir) -> DataFrame:
     """TPC-H Q1-shaped pricing summary in exact integer cents — the
     relational agg workhorse (join-free groupBy; deterministic because
@@ -3007,6 +3281,7 @@ def q_pricing_summary(spark, sf_dir) -> DataFrame:
         F.count(F.lit(1)).alias("n_rows"))
 
 
+@query
 def q_revenue_by_nation(spark, sf_dir) -> DataFrame:
     """multi-join revenue rollup (orders x lineitem x customer x nation)
     — exercises Catalyst join reordering + broadcast of the dims."""
@@ -3026,6 +3301,7 @@ def q_revenue_by_nation(spark, sf_dir) -> DataFrame:
     )
 
 
+@query
 def q_topk_largest(spark, sf_dir) -> DataFrame:
     """order_img_using_prop_valid_pxls-style top-k (§2.7)."""
     img = _images(spark, sf_dir, with_footprint=False)
@@ -3037,6 +3313,7 @@ def q_topk_largest(spark, sf_dir) -> DataFrame:
     )
 
 
+@query
 def q_lut_query(spark, sf_dir) -> DataFrame:
     """image LUT build + bbox query with cell pruning (§2.1)."""
     img = _images(spark, sf_dir)
@@ -3045,6 +3322,7 @@ def q_lut_query(spark, sf_dir) -> DataFrame:
         .select("image_id", "xmin", "xmax", "ymin", "ymax")
 
 
+@query
 def q_resize_stats(spark, sf_dir) -> DataFrame:
     """nearest-neighbour resize to 16x16 with exact checksums (§2.9,
     multimodal plumbing)."""
@@ -3055,6 +3333,7 @@ def q_resize_stats(spark, sf_dir) -> DataFrame:
                 F.col("out_h").cast("long").alias("out_h"), "sum_pix")
 
 
+@query
 def q_frame_sample(spark, sf_dir) -> DataFrame:
     """strided frame sampling over binary payloads (multimodal)."""
     img = _px_images(spark, sf_dir)
@@ -3062,6 +3341,7 @@ def q_frame_sample(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_frames", "sum_sampled")
 
 
+@query
 def q_audio_rms(spark, sf_dir) -> DataFrame:
     """audio feature extraction: PCM16 windowed RMS/energy over raw16
     payloads (multimodal decode -> feature pipeline).  The fmt filter
@@ -3073,6 +3353,7 @@ def q_audio_rms(spark, sf_dir) -> DataFrame:
     return rsz.audio_window_rms(img, win=1024)
 
 
+@query
 def q_lineage_records(spark, sf_dir) -> DataFrame:
     """per-cell lineage rows (checkpoint/resume content, §2.10)."""
     img = _images(spark, sf_dir, with_footprint=False)
@@ -3081,12 +3362,14 @@ def q_lineage_records(spark, sf_dir) -> DataFrame:
                       "snapshot_id")
 
 
+@query
 def q_stream_hourly(spark, sf_dir) -> DataFrame:
     """Structured Streaming tumbling-window agg, AvailableNow (§2.10)."""
     return stream_hourly_counts(spark, sf_dir) \
         .select("hour", "event_type", "n_events", "min_value", "max_value")
 
 
+@query
 def q_stream_dedup(spark, sf_dir) -> DataFrame:
     """streaming exactly-once ingest dedup via
     dropDuplicatesWithinWatermark (§2.10); the cross-micro-batch
@@ -3096,6 +3379,7 @@ def q_stream_dedup(spark, sf_dir) -> DataFrame:
         .select("event_id", "user_id", "event_type", "value")
 
 
+@query
 def q_sessionize(spark, sf_dir) -> DataFrame:
     """gap-based sessionization (30 min) per user (§2.10)."""
     t = load_tables(spark, sf_dir, ["events"])
@@ -3103,13 +3387,16 @@ def q_sessionize(spark, sf_dir) -> DataFrame:
         .select("user_id", "n_sessions", "n_events")
 
 
+@query
 def q_sessionize_stateful(spark, sf_dir) -> DataFrame:
     """custom stateful streaming sessionization via
-    applyInPandasWithState (§2.10) — same semantics as q_sessionize."""
+    ``streaming.events.sessionize_stream`` (§2.10) — same semantics as
+    q_sessionize."""
     return sessionize_stream(spark, sf_dir, gap_minutes=30) \
         .select("user_id", "n_sessions", "n_events")
 
 
+@query
 def q_events_hourly(spark, sf_dir) -> DataFrame:
     """batch analog of a streaming tumbling-window aggregation (§2.10)."""
     t = load_tables(spark, sf_dir, ["events"])
@@ -3159,6 +3446,7 @@ def flagship(spark, sf_dir) -> DataFrame:
     )
 
 
+@query
 def q_binary_scores(spark, sf_dir) -> DataFrame:
     """tools.stats.accuracy_scores_binary
     (/root/reference/python/rsgislib/tools/stats.py:452-600): the full
@@ -3166,7 +3454,7 @@ def q_binary_scores(spark, sf_dir) -> DataFrame:
     reference's own FP/FA binding and its ``prevalence = (TP/FA)/n``
     expression reproduced verbatim (operators/binstats.py docstring).
     NMI runs through the deterministic detmath ln tree; MCC through one
-    pinned sqrt.  Zero shuffles (per-image mapInPandas pass)."""
+    pinned sqrt.  Zero shuffles (per-image mapInArrow pass)."""
     img = _px_images(spark, sf_dir, mod=19)
     return bstat.binary_scores_stats(img) \
         .select("image_id", "n", "tp", "ta", "fp", "fa", "prev_q",
@@ -3175,18 +3463,20 @@ def q_binary_scores(spark, sf_dir) -> DataFrame:
                 "mcc_q", "kappa_q", "nmi_q", "tss_q")
 
 
+@query
 def q_prob_scores(spark, sf_dir) -> DataFrame:
     """tools.stats.bin_accuracy_scores_prob (stats.py:376-450):
     ROC-AUC (Mann-Whitney, average-rank ties), point-biserial r,
     average precision (per-term 2^30 exact-integer staircase), Brier
     score and Laplace-smoothed log-loss (per-term quantized detmath
-    ln) over y_prob = clip(v+e)/pmax.  One mapInPandas pass."""
+    ln) over y_prob = clip(v+e)/pmax.  One mapInArrow pass."""
     img = _px_images(spark, sf_dir, mod=19)
     return bstat.prob_scores_stats(img) \
         .select("image_id", "n", "n1", "n0", "auc_q", "pbr_q",
                 "ap_q30", "brier_q", "logloss_q30")
 
 
+@query
 def q_breusch_pagan(spark, sf_dir) -> DataFrame:
     """tools.stats.breusch_pagan_test (stats.py:313-373): OLS of
     y = clip(v+e) on x = v%8, auxiliary regression of the quantized
@@ -3199,6 +3489,7 @@ def q_breusch_pagan(spark, sf_dir) -> DataFrame:
         .select("image_id", "n", "ssr16", "lm_q", "ci_class")
 
 
+@query
 def q_vif_scores(spark, sf_dir) -> DataFrame:
     """tools.stats.calc_pandas_vif (stats.py:11-82): per-predictor
     variance inflation factors over three correlated 2-bit planes
@@ -3210,6 +3501,7 @@ def q_vif_scores(spark, sf_dir) -> DataFrame:
         .select("image_id", "col_id", "n", "ssr16", "vif_q")
 
 
+@query
 def q_hist_nbins(spark, sf_dir) -> DataFrame:
     """tools.stats.get_nbins_histogram + get_bin_centres
     (stats.py:604-639): Freedman-Diaconis bin count rationalised to an
@@ -3223,6 +3515,7 @@ def q_hist_nbins(spark, sf_dir) -> DataFrame:
                 "cg1_q", "cg2_q", "cg3_q", "cg4_q")
 
 
+@query
 def q_utm_zone_pts(spark, sf_dir) -> DataFrame:
     """tools.utm latlon_to_zone_number / latitude_to_zone_letter /
     epsg_for_utm / zone_number_to_central_longitude / check_valid_zone
@@ -3235,6 +3528,7 @@ def q_utm_zone_pts(spark, sf_dir) -> DataFrame:
     return utmops.utm_point_zones(qpts)
 
 
+@query
 def q_utm_zone_mode(spark, sf_dir) -> DataFrame:
     """tools.utm.latlon_to_mode_utm_zone_number (utm.py:469+): modal
     UTM zone of the layer, smallest zone on ties (numpy mode
@@ -3243,6 +3537,7 @@ def q_utm_zone_mode(spark, sf_dir) -> DataFrame:
     return utmops.utm_zone_mode(qpts)
 
 
+@query
 def q_utm_bbox_split(spark, sf_dir) -> DataFrame:
     """tools.utm.split_wgs84_bbox_utm_zones (utm.py:107-146): the
     layer's WGS84 bbox split at UTM zone boundaries — corner zones via
@@ -3251,6 +3546,7 @@ def q_utm_bbox_split(spark, sf_dir) -> DataFrame:
     return utmops.utm_bbox_split(qpts)
 
 
+@query
 def q_utm_eastings(spark, sf_dir) -> DataFrame:
     """tools.utm.min_max_eastings_for_lat (utm.py:41-60): TM-forward
     easting at central-meridian -/+3 deg (zone 1) on a 25-step
@@ -3260,6 +3556,7 @@ def q_utm_eastings(spark, sf_dir) -> DataFrame:
     return utmops.utm_min_max_eastings(nation, zone=1)
 
 
+@query
 def q_ppi_counts(spark, sf_dir) -> DataFrame:
     """imagecalc.specunmixing.calc_ppi (specunmixing/__init__.py:
     1278-1408, Boardman 1995): pixel purity index — per pinned integer
@@ -3272,6 +3569,7 @@ def q_ppi_counts(spark, sf_dir) -> DataFrame:
         .select("image_id", "x", "y", "ppi_count")
 
 
+@query
 def q_buffer_pxl_vals(spark, sf_dir) -> DataFrame:
     """imagecalc.buffer_img_pxl_vals (imagecalc/__init__.py:459-520):
     distance-to-target-values plane thresholded into a binary buffer
@@ -3283,6 +3581,7 @@ def q_buffer_pxl_vals(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "n_src", "n_buf", "sum_d2_in")
 
 
+@query
 def q_msk_val_hists(spark, sf_dir) -> DataFrame:
     """imagecalc.calc_histograms_for_msk_vals (imagecalc/__init__.py:
     908-960): one values-plane histogram per mask value, mask 0
@@ -3292,6 +3591,7 @@ def q_msk_val_hists(spark, sf_dir) -> DataFrame:
         .select("image_id", "msk_val", "bin", "cnt")
 
 
+@query
 def q_fill_regions_knn(spark, sf_dir) -> DataFrame:
     """imagecalc.calc_fill_regions_knn (imagecalc/__init__.py:
     1233-1330, SUMTYPE_MODE): fill-lattice pixels take the modal value
@@ -3303,6 +3603,7 @@ def q_fill_regions_knn(spark, sf_dir) -> DataFrame:
                 "max_fill", "sum_kd2")
 
 
+@query
 def q_class_ts_fill(spark, sf_dir) -> DataFrame:
     """classification.fill_class_timeseries
     (classification/__init__.py:1370-1515): gap-fill a 6-step class
@@ -3315,6 +3616,7 @@ def q_class_ts_fill(spark, sf_dir) -> DataFrame:
                 "sum_after")
 
 
+@query
 def q_poly_hole_area(spark, sf_dir) -> DataFrame:
     """vectorgeoms.get_poly_hole_area + remove_polygon_area
     (vectorgeoms/__init__.py:2009-2060,2073-2130): interior-ring
@@ -3324,6 +3626,7 @@ def q_poly_hole_area(spark, sf_dir) -> DataFrame:
     return vec.poly_hole_stats(zones, area_thres=30.0)
 
 
+@query
 def q_vec_layer_pts(spark, sf_dir) -> DataFrame:
     """vectorgeoms.get_vec_lyr_as_pts / get_geom_pts /
     convert_polys_to_lines_gp: polygon vertices as a point layer, each
@@ -3332,6 +3635,7 @@ def q_vec_layer_pts(spark, sf_dir) -> DataFrame:
     return vec.zones_to_segments(zones)
 
 
+@query
 def q_clip_vec_lyr(spark, sf_dir) -> DataFrame:
     """vectorgeoms.clip_vec_lyr (gpd.clip wrapper): zones clipped to a
     rectangular window, empties dropped."""
@@ -3339,6 +3643,7 @@ def q_clip_vec_lyr(spark, sf_dir) -> DataFrame:
     return vec.clip_zone_rects(zones)
 
 
+@query
 def q_bbox_reproj(spark, sf_dir) -> DataFrame:
     """tools.geometrytools get_bbox_centre_pt / bbox_equal /
     bboxes_intersection / reproj_bbox_epsg (geometrytools.py:14-79,
@@ -3349,6 +3654,7 @@ def q_bbox_reproj(spark, sf_dir) -> DataFrame:
     return vec.bbox_centre_reproj(zones, epsg=32630)
 
 
+@query
 def q_recode_raster(spark, sf_dir) -> DataFrame:
     """imagecalc.recode_int_raster (imagecalc/__init__.py:1172-1232):
     dict recode under both keep_vals_not_in_dict modes; exact int64."""
@@ -3358,6 +3664,7 @@ def q_recode_raster(spark, sf_dir) -> DataFrame:
                 "sum_drop", "n_drop_nonzero")
 
 
+@query
 def q_band_normalise(spark, sf_dir) -> DataFrame:
     """imagecalc.normalise_image_band (imagecalc/__init__.py:1140-1169):
     (v - min)/range with the nodata->0.0 remap and nodata-excluded
@@ -3367,6 +3674,7 @@ def q_band_normalise(spark, sf_dir) -> DataFrame:
         .select("image_id", "v_min", "v_max", "n_nodata", "sum_norm_q")
 
 
+@query
 def q_rescale_rios(spark, sf_dir) -> DataFrame:
     """imagecalc.rescale_img_pxl_vals (imagecalc/__init__.py:819-918):
     the RIOS _applyRescale expression replicated verbatim (including
@@ -3377,6 +3685,7 @@ def q_rescale_rios(spark, sf_dir) -> DataFrame:
                 "sum_out_q")
 
 
+@query
 def q_ref_region_stats(spark, sf_dir) -> DataFrame:
     """imagecalc.calc_img_basic_stats_for_ref_region
     (imagecalc/__init__.py:1018-1137): per-pixel nanmean/nanstd across
@@ -3388,6 +3697,7 @@ def q_ref_region_stats(spark, sf_dir) -> DataFrame:
                 "sum_std_q")
 
 
+@query
 def q_cd_otsu_outliers(spark, sf_dir) -> DataFrame:
     """changedetect.find_class_otsu_outliers (pxloutlierchng.py:344),
     low_thres=True: Otsu over the class-masked, nodata-free values,
@@ -3397,6 +3707,7 @@ def q_cd_otsu_outliers(spark, sf_dir) -> DataFrame:
         .select("image_id", "thres", "n_mask", "n_chng", "n_nochng")
 
 
+@query
 def q_cd_li_outliers(spark, sf_dir) -> DataFrame:
     """changedetect.find_class_li_outliers (pxloutlierchng.py:436),
     low_thres=False: Li minimum-cross-entropy over the masked subset
@@ -3406,6 +3717,7 @@ def q_cd_li_outliers(spark, sf_dir) -> DataFrame:
         .select("image_id", "t_q", "n_mask", "n_chng", "n_nochng")
 
 
+@query
 def q_cd_kurtskew_outliers(spark, sf_dir) -> DataFrame:
     """changedetect.find_class_kurt_skew_outliers
     (pxloutlierchng.py:229), low_thres=True: |kurt|+|skew| minimising
@@ -3417,6 +3729,7 @@ def q_cd_kurtskew_outliers(spark, sf_dir) -> DataFrame:
                 "n_nochng")
 
 
+@query
 def q_dist_between_clumps(spark, sf_dir) -> DataFrame:
     """rastergis.calc_dist_between_clumps (rastergis/__init__.py:972):
     per odd-band clump the exact-int64 min boundary-pixel-pair distance
@@ -3427,6 +3740,7 @@ def q_dist_between_clumps(spark, sf_dir) -> DataFrame:
                 "dist_deg")
 
 
+@query
 def q_dist_to_classes(spark, sf_dir) -> DataFrame:
     """rastergis.calc_dist_to_classes (rastergis/__init__.py:810):
     per-class proximity raster capped at max_dist (d2 <= 256), nodata
@@ -3437,6 +3751,7 @@ def q_dist_to_classes(spark, sf_dir) -> DataFrame:
                 "max_d2")
 
 
+@query
 def q_rat_uid_sample(spark, sf_dir) -> DataFrame:
     """rastergis.create_uid_col + take_random_sample
     (rastergis/__init__.py:570,583): UID in RAT row order and the
@@ -3460,6 +3775,7 @@ def q_rat_uid_sample(spark, sf_dir) -> DataFrame:
         " THEN 1 ELSE 0 END AS BIGINT) AS sel")
 
 
+@query
 def q_pixel_locations(spark, sf_dir) -> DataFrame:
     """imageutils.calc_pixel_locations (imageutils/__init__.py:2681):
     X/Y pixel-centre world-coordinate planes; quantised plane sums fold
@@ -3469,6 +3785,7 @@ def q_pixel_locations(spark, sf_dir) -> DataFrame:
         .select("image_id", "n_pix", "sum_xq", "sum_yq")
 
 
+@query
 def q_imgs_overlap(spark, sf_dir) -> DataFrame:
     """imageutils.do_images_overlap (imageutils/__init__.py:2778):
     bbox-overlap flag for same-1°-cell image pairs with the reference's
@@ -3480,6 +3797,7 @@ def q_imgs_overlap(spark, sf_dir) -> DataFrame:
                 "iymax", "overlaps")
 
 
+@query
 def q_pxl_sample(spark, sf_dir) -> DataFrame:
     """imageutils.extract_img_pxl_sample (imageutils/__init__.py:2949):
     every 50th valid pixel of the row-major flatten (nodata 7
@@ -3490,6 +3808,7 @@ def q_pxl_sample(spark, sf_dir) -> DataFrame:
                 "min_samp", "max_samp")
 
 
+@query
 def q_rand_pxls(spark, sf_dir) -> DataFrame:
     """imageutils.assign_random_pxls (imageutils/__init__.py:3665):
     20 edge-buffered random pixels per image rejecting nodata — the
@@ -3500,6 +3819,7 @@ def q_rand_pxls(spark, sf_dir) -> DataFrame:
         .select("image_id", "rnk", "x", "y", "v")
 
 
+@query
 def q_wgs84_pxl_size(spark, sf_dir) -> DataFrame:
     """imageutils.calc_wsg84_pixel_size (imageutils/__init__.py:4193)
     via tools.projection.degrees_to_metres (projection.py:66): per-row
@@ -3523,6 +3843,7 @@ def q_wgs84_pxl_size(spark, sf_dir) -> DataFrame:
         F.sum(F.expr("w * yq")).cast("long").alias("sum_yszq"))
 
 
+@query
 def q_season_predict(spark, sf_dir) -> DataFrame:
     """timeseries.modelfitting.predict_for_date / gen_prediction
     (modelfitting.py:394-470): the fitted one-harmonic season-trend
@@ -3531,6 +3852,7 @@ def q_season_predict(spark, sf_dir) -> DataFrame:
     return ts_ops.season_trend_predict(t["events"])
 
 
+@query
 def q_least_cost_path(spark, sf_dir) -> DataFrame:
     """imagecalc.leastcostpath.perform_least_cost_path_calc
     (leastcostpath.py:103): MCP_Geometric least-cost path from the
@@ -3543,6 +3865,7 @@ def q_least_cost_path(spark, sf_dir) -> DataFrame:
                 "sum_opt_idx")
 
 
+@query
 def q_corr_feat_panel(spark, sf_dir) -> DataFrame:
     """tools.stats.corr_feature_selection (stats.py:142-240): the
     Pearson + Fisher-z panel the reference's feature clustering
@@ -3553,6 +3876,7 @@ def q_corr_feat_panel(spark, sf_dir) -> DataFrame:
     return bstat.corr_feat_panel(t["lineitem"])
 
 
+@query
 def q_vec_attr_cols(spark, sf_dir) -> DataFrame:
     """vectorattrs.create_name_col + add_unq_numeric_col +
     add_numeric_col_lut (vectorattrs/__init__.py:454,568,611): tile
@@ -3562,6 +3886,7 @@ def q_vec_attr_cols(spark, sf_dir) -> DataFrame:
     return vec.vec_attr_cols(zones)
 
 
+@query
 def q_fft_dem_fusion(spark, sf_dir) -> DataFrame:
     """elevation.fft_dem_fusion (elevation/__init__.py:10): spectral
     DEM fusion — replace the centered low-frequency block of the
@@ -3574,6 +3899,7 @@ def q_fft_dem_fusion(spark, sf_dir) -> DataFrame:
                 "min_mag", "max_mag")
 
 
+@query
 def q_tmask(spark, sf_dir) -> DataFrame:
     """timeseries.tmask.run_tmask (tmask.py:52-193): Tukey-biweight
     RLM season-trend fits of green/NIR/SWIR with the reference's
@@ -3584,6 +3910,7 @@ def q_tmask(spark, sf_dir) -> DataFrame:
         .select("image_id", "px", "n_flagged", "n_planted", "n_hits")
 
 
+@query
 def q_solar_angles(spark, sf_dir) -> DataFrame:
     """imagecalibration.solarangles.calc_solar_azimuth_zenith +
     both azimuth convention converters (solarangles.py:40,64,90):
@@ -3594,6 +3921,7 @@ def q_solar_angles(spark, sf_dir) -> DataFrame:
     return solar_angles(img)
 
 
+@query
 def q_train_valid_test(spark, sf_dir) -> DataFrame:
     """classification.create_train_valid_test_sets
     (classification/__init__.py): three-way sample split.  The
@@ -3615,6 +3943,7 @@ def q_train_valid_test(spark, sf_dir) -> DataFrame:
         F.max("doc_id").alias("max_doc"))
 
 
+@query
 def q_merge_utm_wgs84(spark, sf_dir) -> DataFrame:
     """vectorutils.merge_utm_vecs_wgs84 (vectorutils/__init__.py:3045):
     two per-zone UTM layers (qpoints fmod-remapped into the zone 30 and
@@ -3629,6 +3958,7 @@ def q_merge_utm_wgs84(spark, sf_dir) -> DataFrame:
     return la.unionAll(lb)
 
 
+@query
 def q_kfold_regress(spark, sf_dir) -> DataFrame:
     """regression.regresssklearn.perform_kfold_fit
     (regresssklearn.py:213): k-fold fit/validate with per-fold metrics
@@ -3639,6 +3969,7 @@ def q_kfold_regress(spark, sf_dir) -> DataFrame:
     return bstat.kfold_regress(t["lineitem"])
 
 
+@query
 def q_composite_ndvi_ndwi(spark, sf_dir) -> DataFrame:
     """imageutils.imagecomp.create_max_ndvi_ndwi_composite
     (imagecomp.py:212): max-NDVI-over-land / max-NDWI-over-water
@@ -3650,6 +3981,7 @@ def q_composite_ndvi_ndwi(spark, sf_dir) -> DataFrame:
                 "best_id", "best_v")
 
 
+@query
 def q_modelled_acc_pts(spark, sf_dir) -> DataFrame:
     """classification.classaccuracymetrics.create_norm_modelled_err_matrix
     + create_modelled_acc_pts (classaccuracymetrics.py:1989,1548):
@@ -3662,6 +3994,7 @@ def q_modelled_acc_pts(spark, sf_dir) -> DataFrame:
                 "n_dropped")
 
 
+@query
 def q_calib_scalars(spark, sf_dir) -> DataFrame:
     """imagecalibration.visibility_to_aot + get_esun_value
     (imagecalibration/__init__.py:417,391): AOT from visibility and
@@ -3672,6 +4005,7 @@ def q_calib_scalars(spark, sf_dir) -> DataFrame:
     return calib_scalar_panel(img)
 
 
+@query
 def q_embed_sq8(spark, sf_dir) -> DataFrame:
     """SQ8 embedding compression (LLM-pipeline op, the faiss
     ScalarQuantizer 8-bit analog): per-dimension corpus min/max train
@@ -3681,6 +4015,7 @@ def q_embed_sq8(spark, sf_dir) -> DataFrame:
     return simi.embed_sq8(t["embeddings"])
 
 
+@query
 def q_doc_decontaminate(spark, sf_dir) -> DataFrame:
     """Benchmark decontamination (LLM-pipeline op): per training doc
     the count of word 3-gram shingles shared with the held-out
@@ -3688,329 +4023,3 @@ def q_doc_decontaminate(spark, sf_dir) -> DataFrame:
     t = load_tables(spark, sf_dir, ["documents"])
     return tx.decontaminate(t["documents"])
 
-
-QUERIES = {
-    "cell_encode": q_cell_encode,
-    "binary_scores": q_binary_scores,
-    "prob_scores": q_prob_scores,
-    "breusch_pagan": q_breusch_pagan,
-    "vif_scores": q_vif_scores,
-    "hist_nbins": q_hist_nbins,
-    "utm_zone_pts": q_utm_zone_pts,
-    "utm_zone_mode": q_utm_zone_mode,
-    "utm_bbox_split": q_utm_bbox_split,
-    "utm_eastings": q_utm_eastings,
-    "ppi_counts": q_ppi_counts,
-    "buffer_pxl_vals": q_buffer_pxl_vals,
-    "msk_val_hists": q_msk_val_hists,
-    "fill_regions_knn": q_fill_regions_knn,
-    "class_ts_fill": q_class_ts_fill,
-    "recode_raster": q_recode_raster,
-    "band_normalise": q_band_normalise,
-    "rescale_rios": q_rescale_rios,
-    "ref_region_stats": q_ref_region_stats,
-    "cd_otsu_outliers": q_cd_otsu_outliers,
-    "cd_li_outliers": q_cd_li_outliers,
-    "cd_kurtskew_outliers": q_cd_kurtskew_outliers,
-    "dist_between_clumps": q_dist_between_clumps,
-    "dist_to_classes": q_dist_to_classes,
-    "rat_uid_sample": q_rat_uid_sample,
-    "pixel_locations": q_pixel_locations,
-    "imgs_overlap": q_imgs_overlap,
-    "pxl_sample": q_pxl_sample,
-    "rand_pxls": q_rand_pxls,
-    "wgs84_pxl_size": q_wgs84_pxl_size,
-    "season_predict": q_season_predict,
-    "least_cost_path": q_least_cost_path,
-    "corr_feat_panel": q_corr_feat_panel,
-    "vec_attr_cols": q_vec_attr_cols,
-    "fft_dem_fusion": q_fft_dem_fusion,
-    "tmask": q_tmask,
-    "solar_angles": q_solar_angles,
-    "train_valid_test": q_train_valid_test,
-    "merge_utm_wgs84": q_merge_utm_wgs84,
-    "kfold_regress": q_kfold_regress,
-    "composite_ndvi_ndwi": q_composite_ndvi_ndwi,
-    "modelled_acc_pts": q_modelled_acc_pts,
-    "calib_scalars": q_calib_scalars,
-    "embed_sq8": q_embed_sq8,
-    "doc_decontaminate": q_doc_decontaminate,
-    "poly_hole_area": q_poly_hole_area,
-    "vec_layer_pts": q_vec_layer_pts,
-    "clip_vec_lyr": q_clip_vec_lyr,
-    "bbox_reproj": q_bbox_reproj,
-    "sjoin_salted": q_sjoin_salted,
-    "sjoin_polygon": q_sjoin_polygon,
-    "sjoin_left_intersects": q_sjoin_left_intersects,
-    "sjoin_right_within": q_sjoin_right_within,
-    "sjoin_bbox_intersects": q_sjoin_bbox_intersects,
-    "spatial_select": q_spatial_select,
-    "vec_intersects": q_vec_intersects,
-    "vec_within": q_vec_within,
-    "vec_overlaps": q_vec_overlaps,
-    "vec_touches": q_vec_touches,
-    "vec_contains": q_vec_contains,
-    "vec_crosses": q_vec_crosses,
-    "zone_geom_cols": q_zone_geom_cols,
-    "grid_gen": q_grid_gen,
-    "hex_grid": q_hex_grid,
-    "bbox_algebra": q_bbox_algebra,
-    "overlay_intersection": q_overlay_intersection,
-    "overlay_difference": q_overlay_difference,
-    "overlay_erase": q_overlay_erase,
-    "overlay_sym_difference": q_overlay_sym_difference,
-    "overlay_union": q_overlay_union,
-    "poly_polyline": q_poly_polyline,
-    "shift_layer": q_shift_layer,
-    "explode_multi": q_explode_multi,
-    "remove_holes": q_remove_holes,
-    "simplify_geom": q_simplify_geom,
-    "unwrap_bbox": q_unwrap_bbox,
-    "reproj_utm": q_reproj_utm,
-    "reproj_epsg": q_reproj_epsg,
-    "reproj_lcc": q_reproj_lcc,
-    "reproj_albers": q_reproj_albers,
-    "reproj_laea": q_reproj_laea,
-    "pixel_area_wgs84": q_pixel_area_wgs84,
-    "caption_replace": q_caption_replace,
-    "rank_layer": q_rank_layer,
-    "merge_layers": q_merge_layers,
-    "sjoin_inner_within": q_sjoin_inner_within,
-    "zone_point_counts": q_zone_point_counts,
-    "tile_specs": q_tile_specs,
-    "tile_specs_overlap": q_tile_specs_overlap,
-    "tile_specs_offset": q_tile_specs_offset,
-    "block_iter": q_block_iter,
-    "block_iter_batches": q_block_iter_batches,
-    "point_extract": q_point_extract,
-    "zonal_centroid": q_zonal_centroid,
-    "knn_closest": q_knn_closest,
-    "knn_classify": q_knn_classify,
-    "alpha_shape": q_alpha_shape,
-    "npts_radius": q_npts_radius,
-    "pixel_stats": q_pixel_stats,
-    "zonal_stats": q_zonal_stats,
-    "zonal_stats_poly": q_zonal_stats_poly,
-    "zonal_envelope": q_zonal_envelope,
-    "zonal_contains": q_zonal_contains,
-    "zonal_adaptive": q_zonal_adaptive,
-    "zonal_overlaps_contains": q_zonal_overlaps_contains,
-    "zonal_pixcontains": q_zonal_pixcontains,
-    "zonal_pixcenter": q_zonal_pixcenter,
-    "zonal_polyarea": q_zonal_polyarea,
-    "zonal_stats_hybrid": q_zonal_stats_hybrid,
-    "zonal_weighted": q_zonal_weighted,
-    "band_math": q_band_math,
-    "mask_img": q_mask_img,
-    "filter_mean3": q_filter_mean3,
-    "filter_sobel": q_filter_sobel,
-    "filter_median5": q_filter_median5,
-    "filter_mode3": q_filter_mode3,
-    "filter_range5": q_filter_range5,
-    "filter_mean5": q_filter_mean5,
-    "filter_gauss5": q_filter_gauss5,
-    "filter_gauss_d1": q_filter_gauss_d1,
-    "filter_gauss_d2": q_filter_gauss_d2,
-    "ndvi_index": q_ndvi_index,
-    "pxl_value_counts": q_pxl_value_counts,
-    "hist2d": q_hist2d,
-    "valid_frac_rank": q_valid_frac_rank,
-    "coarse_cell_stats": q_coarse_cell_stats,
-    "stats_by_fmt": q_stats_by_fmt,
-    "img_histogram": q_img_histogram,
-    "band_percentiles": q_band_percentiles,
-    "mosaic_window": q_mosaic_window,
-    "mosaic_thresh": q_mosaic_thresh,
-    "mosaic_mode": q_mosaic_mode,
-    "pixel_trend": q_pixel_trend,
-    "rasterize_zones": q_rasterize_zones,
-    "clump_stats": q_clump_stats,
-    "polygonize": q_polygonize,
-    "rat_neighbours": q_rat_neighbours,
-    "rat_mode": q_rat_mode,
-    "rat_percentiles": q_rat_percentiles,
-    "gmm_hist_fit": q_gmm_hist_fit,
-    "histo_sampling": q_histo_sampling,
-    "rat_collapse": q_rat_collapse,
-    "imgs_equal": q_imgs_equal,
-    "pts_bboxes": q_pts_bboxes,
-    "dist_to_vals": q_dist_to_vals,
-    "otsu_threshold": q_otsu_threshold,
-    "clump_merge": q_clump_merge,
-    "slic_superpixels": q_slic_superpixels,
-    "quickshift_seg": q_quickshift_seg,
-    "watershed_basins": q_watershed_basins,
-    "felzenszwalb_seg": q_felzenszwalb_seg,
-    "random_walker": q_random_walker,
-    "clump_eliminate": q_clump_eliminate,
-    "union_clumps": q_union_clumps,
-    "seg_mean": q_seg_mean,
-    "clump_locations": q_clump_locations,
-    "clump_borders": q_clump_borders,
-    "rat_cat_props": q_rat_cat_props,
-    "rat_cat_majority": q_rat_cat_majority,
-    "rel_diff_neigh": q_rel_diff_neigh,
-    "rat_meanlit": q_rat_meanlit,
-    "dist_large_clumps": q_dist_large_clumps,
-    "clump_tile_pos": q_clump_tile_pos,
-    "change_clumps": q_change_clumps,
-    "select_on_grid": q_select_on_grid,
-    "local_minima": q_local_minima,
-    "unmix_ucls": q_unmix_ucls,
-    "unmix_residual": q_unmix_residual,
-    "season_trend": q_season_trend,
-    "morph_dilate_circ": q_morph_dilate_circ,
-    "register_offset": q_register_offset,
-    "filter_laplacian": q_filter_laplacian,
-    "filter_total_diff": q_filter_total_diff,
-    "filter_total_diff_abs": q_filter_total_diff_abs,
-    "filter_mean_diff": q_filter_mean_diff,
-    "filter_mean_diff_abs": q_filter_mean_diff_abs,
-    "filter_coeff_var": q_filter_coeff_var,
-    "filter_norm_var": q_filter_norm_var,
-    "filter_norm_var_sqrt": q_filter_norm_var_sqrt,
-    "filter_norm_var_ln": q_filter_norm_var_ln,
-    "spectral_indices": q_spectral_indices,
-    "web_tiles": q_web_tiles,
-    "overlay_identity": q_overlay_identity,
-    "cqv_select": q_cqv_select,
-    "extent_on_grid": q_extent_on_grid,
-    "qa_c2_parse": q_qa_c2_parse,
-    "quantity_acc": q_quantity_acc,
-    "line_intersect": q_line_intersect,
-    "line_project": q_line_project,
-    "mask_val_prob": q_mask_val_prob,
-    "pan_sharpen": q_pan_sharpen,
-    "unpack_bits": q_unpack_bits,
-    "isodata": q_isodata,
-    "class_accuracy": q_class_accuracy,
-    "mahal_window": q_mahal_window,
-    "mahal_global": q_mahal_global,
-    "prop_true": q_prop_true,
-    "band_rmse": q_band_rmse,
-    "img_rescale": q_img_rescale,
-    "mean_in_mask": q_mean_in_mask,
-    "all_bands_equal": q_all_bands_equal,
-    "stats_in_env": q_stats_in_env,
-    "column_summary": q_column_summary,
-    "thermal_bright": q_thermal_bright,
-    "jm_dist": q_jm_dist,
-    "jm2d_dist": q_jm2d_dist,
-    "kurt_skew_thresh": q_kurt_skew_thresh,
-    "dem_fill": q_dem_fill,
-    "local_incidence": q_local_incidence,
-    "local_incidence_deg": q_local_incidence_deg,
-    "sref_sd2010": q_sref_sd2010,
-    "sref_6s_lut": q_sref_6s_lut,
-    "sref_6s_aot_lut": q_sref_6s_aot_lut,
-    "sref_6s_lut_interp": q_sref_6s_lut_interp,
-    "toa_to_radiance": q_toa_to_radiance,
-    "dem_slope_pxlres": q_dem_slope_pxlres,
-    "aspect_med": q_aspect_med,
-    "rand_sample": q_rand_sample,
-    "sampling_grid": q_sampling_grid,
-    "stretch_with_stats": q_stretch_with_stats,
-    "merge_equiv": q_merge_equiv,
-    "drop_clumps": q_drop_clumps,
-    "isodata_thresh": q_isodata_thresh,
-    "cross_entropy": q_cross_entropy,
-    "li_threshold": q_li_threshold,
-    "cloud_shadow": q_cloud_shadow,
-    "global_class_stats": q_global_class_stats,
-    "prop_valid": q_prop_valid,
-    "vec_maths": q_vec_maths,
-    "lines_points": q_lines_points,
-    "colour_classes": q_colour_classes,
-    "spot_radiance": q_spot_radiance,
-    "subtract_offsets": q_subtract_offsets,
-    "ts_fill_composite": q_ts_fill_composite,
-    "bhatt_dist": q_bhatt_dist,
-    "yen_threshold": q_yen_threshold,
-    "strat_sample": q_strat_sample,
-    "exh_unmix": q_exh_unmix,
-    "avg_endmembers": q_avg_endmembers,
-    "dem_detrend": q_dem_detrend,
-    "shadow_mask": q_shadow_mask,
-    "saturated_mask": q_saturated_mask,
-    "norm_pxl_vals": q_norm_pxl_vals,
-    "regress_stats": q_regress_stats,
-    "dem_slope": q_dem_slope,
-    "dem_aspect": q_dem_aspect,
-    "dem_hillshade": q_dem_hillshade,
-    "toa_radiance": q_toa_radiance,
-    "sref_6s": q_sref_6s,
-    "dos_subtract": q_dos_subtract,
-    "kmeans_centres": q_kmeans_centres,
-    "shepherd_seg": q_shepherd_seg,
-    "stretch_minmax": q_stretch_minmax,
-    "stretch_percent": q_stretch_percent,
-    "stretch_stddev": q_stretch_stddev,
-    "stretch_power": q_stretch_power,
-    "poly_bbox_cols": q_poly_bbox_cols,
-    "poly_centroids": q_poly_centroids,
-    "chip_extract": q_chip_extract,
-    "sample_split": q_sample_split,
-    "sample_finite": q_sample_finite,
-    "morph_dilate": q_morph_dilate,
-    "morph_open": q_morph_open,
-    "morph_close": q_morph_close,
-    "morph_gradient": q_morph_gradient,
-    "morph_tophat": q_morph_tophat,
-    "corr_window": q_corr_window,
-    "win_min_idx": q_win_min_idx,
-    "resize_bilinear": q_resize_bilinear,
-    "resize_cubic": q_resize_cubic,
-    "resize_cubicspline": q_resize_cubicspline,
-    "resize_lanczos": q_resize_lanczos,
-    "resize_average": q_resize_average,
-    "resize_mode": q_resize_mode,
-    "warp_img": q_warp_img,
-    "warp_img_bilinear": q_warp_img_bilinear,
-    "morph_erode": q_morph_erode,
-    "filter_texture_var": q_filter_texture_var,
-    "filter_kuwahara": q_filter_kuwahara,
-    "filter_lee": q_filter_lee,
-    "filter_bank": q_filter_bank,
-    "filter_bank15": q_filter_bank15,
-    "band_select": q_band_select,
-    "composite_max_ndvi": q_composite_max_ndvi,
-    "mask_img_vec": q_mask_img_vec,
-    "spectral_smooth": q_spectral_smooth,
-    "embed_neardup": q_embed_neardup,
-    "embed_ann_multiprobe": q_embed_ann_multiprobe,
-    "psnr_check": q_psnr_check,
-    "attr_filter": q_attr_filter,
-    "check_validate_geoms": q_check_validate_geoms,
-    "value_counts": q_value_counts,
-    "dedup_exact": q_dedup_exact,
-    "text_quality": q_text_quality,
-    "token_count": q_token_count,
-    "doc_winnow": q_doc_winnow,
-    "lang_id": q_lang_id,
-    "doc_fingerprint": q_doc_fingerprint,
-    "ngram_jaccard": q_ngram_jaccard,
-    "minhash_lsh": q_minhash_lsh,
-    "dedup_clusters": q_dedup_clusters,
-    "simhash": q_simhash,
-    "embed_topk": q_embed_topk,
-    "embed_ann_lsh": q_embed_ann_lsh,
-    "embed_ann_ivf": q_embed_ann_ivf,
-    "centroid_assign": q_centroid_assign,
-    "gram_matrix": q_gram_matrix,
-    "pca_project": q_pca_project,
-    "mnf_gram": q_mnf_gram,
-    "recode_region": q_recode_region,
-    "pricing_summary": q_pricing_summary,
-    "revenue_by_nation": q_revenue_by_nation,
-    "topk_largest": q_topk_largest,
-    "events_hourly": q_events_hourly,
-    "lut_query": q_lut_query,
-    "resize_stats": q_resize_stats,
-    "frame_sample": q_frame_sample,
-    "audio_rms": q_audio_rms,
-    "lineage_records": q_lineage_records,
-    "stream_hourly": q_stream_hourly,
-    "stream_dedup": q_stream_dedup,
-    "sessionize": q_sessionize,
-    "sessionize_stateful": q_sessionize_stateful,
-}

@@ -1,7 +1,7 @@
 """Multimodal binary-payload plumbing: decode / resize / frame-sample.
 
 Treats image/audio/video payloads as opaque ``binary`` columns with typed
-metadata, processed in Arrow batches (``mapInPandas``).  The *plumbing* —
+metadata, processed in Arrow batches (``mapInArrow``).  The *plumbing* —
 schemas, batch shapes, partitioning, UDF signatures — is real and tested;
 codecs the container lacks are STUBBED exactly as the task prescribes:
 

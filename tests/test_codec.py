@@ -325,10 +325,10 @@ def test_png_data_size_mismatch_raises():
         codec.decode_png(_png(2, 2, 8, b"\x00\x01\x02\x00\x03"))
 
 
-def _image_batch(extra=None):
-    """pandas batch of (image_id, bytes, w, h, fmt[, extra]) rows, one
-    per lossless format, plus the planes decode_image gives them."""
-    import pandas as pd
+def _image_batch():
+    """Arrow batch of (image_id, bytes, w, h, fmt, lon) rows, one per
+    lossless format, plus the planes decode_image gives them."""
+    import pyarrow as pa
 
     rows, want = [], []
     for k, (fmt, w, h) in enumerate((("raw8", 19, 7), ("raw16", 11, 13),
@@ -337,22 +337,18 @@ def _image_batch(extra=None):
         buf = codec.encode_image(pixel_array(img_id, w, h, fmt), fmt)
         rows.append((f"img{img_id}", buf, w, h, fmt, img_id * 10))
         want.append(codec.decode_image(buf, w, h, fmt))
-    pdf = pd.DataFrame(rows, columns=list(codec.IMAGE_COLS) + ["lon"])
-    return pdf, want
+    names = list(codec.IMAGE_COLS) + ["lon"]
+    batch = pa.RecordBatch.from_pylist([dict(zip(names, r)) for r in rows])
+    return batch, want
 
 
-@pytest.mark.parametrize("arrow", [False, True], ids=["pandas", "arrow"])
 @pytest.mark.parametrize("dtype", [None, np.int64])
-def test_planes_match_decode_image(arrow, dtype):
-    import pyarrow as pa
-
-    pdf, want = _image_batch()
-    batch = pa.RecordBatch.from_pandas(pdf, preserve_index=False) \
-        if arrow else pdf
+def test_planes_match_decode_image(dtype):
+    batch, want = _image_batch()
     got = list(codec.planes(batch, "lon", "fmt", dtype=dtype))
-    assert [g[0] for g in got] == list(pdf["image_id"])
-    assert [g[2] for g in got] == list(pdf["lon"])
-    assert [g[3] for g in got] == list(pdf["fmt"])
+    assert [g[0] for g in got] == batch.column("image_id").to_pylist()
+    assert [g[2] for g in got] == batch.column("lon").to_pylist()
+    assert [g[3] for g in got] == batch.column("fmt").to_pylist()
     for (_, plane, *_), ref in zip(got, want):
         assert plane.dtype == (ref.dtype if dtype is None else dtype)
         assert np.array_equal(plane, ref)
@@ -362,18 +358,19 @@ def test_planes_match_decode_image(arrow, dtype):
 
 class _CaptureFrame:
     """Stands in for a Spark DataFrame: records the select and the
-    mapInPandas kernel instead of planning them."""
+    mapInArrow kernel instead of planning them."""
 
     def select(self, *cols):
         self.cols = cols
         return self
 
-    def mapInPandas(self, fn, schema):
+    def mapInArrow(self, fn, schema):
         self.fn, self.schema = fn, schema
         return self
 
 
 def test_map_images_kernel_contract():
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType)
 
@@ -390,11 +387,55 @@ def test_map_images_kernel_contract():
                              extra_cols=("lon",), dtype=np.int64)
     assert frame.cols == codec.IMAGE_COLS + ("lon",)
     assert frame.fn.__name__ == "test_codec_test_map_images_kernel_contract"
-    pdf, want = _image_batch()
-    empty, full = frame.fn(iter([pdf.iloc[:0], pdf]))
-    assert list(empty.columns) == schema.names and len(empty) == 0
-    assert list(full["n_pix"]) == [p.size for p in want]
-    assert list(full["lon"]) == list(pdf["lon"])
+    batch, want = _image_batch()
+    empty, full = frame.fn(iter([batch.slice(0, 0), batch]))
+    assert empty.schema == to_arrow_schema(schema) and empty.num_rows == 0
+    assert full.schema == to_arrow_schema(schema)
+    assert full.column("n_pix").to_pylist() == [p.size for p in want]
+    assert full.column("lon").to_pylist() == batch.column("lon").to_pylist()
+
+
+def test_empty_batch_keeps_array_type():
+    """An empty output batch types an ``array<bigint>`` field as
+    ``list<int64>``: a kernel may yield it (a pandas frame typed such
+    an empty column float64, which Arrow cannot convert)."""
+    import pyarrow as pa
+    from pyspark.sql.types import (ArrayType, LongType, StringType,
+                                   StructField, StructType)
+
+    schema = StructType([StructField("image_id", StringType()),
+                         StructField("hist", ArrayType(LongType()))])
+    out = codec.to_batch({"image_id": [], "hist": []}, schema)
+    assert out.num_rows == 0
+    assert out.schema.field("hist").type == pa.list_(pa.int64())
+
+    frame = codec.map_images(_CaptureFrame(), lambda out, *row: None,
+                             schema)
+    batch, _ = _image_batch()
+    (got,) = frame.fn(iter([batch]))
+    assert got.num_rows == 0
+    assert got.schema.field("hist").type == pa.list_(pa.int64())
+
+
+def test_empty_array_batches_through_spark(spark, sf_dir):
+    """A Python stage whose batches are all empty still runs when the
+    schema holds an ``array<bigint>`` field."""
+    from pyspark.sql.types import (ArrayType, LongType, StringType,
+                                   StructField, StructType)
+
+    from rsgislib_spark import synth
+
+    schema = StructType([StructField("image_id", StringType()),
+                         StructField("hist", ArrayType(LongType()))])
+
+    def per_image(out, image_id, plane):
+        if plane.size < 0:            # never: every batch is empty
+            out["image_id"].append(image_id)
+            out["hist"].append(np.bincount(plane.ravel()))
+
+    img = synth.synth_images(spark, sf_dir, with_bytes=True,
+                             with_footprint=False).where("id % 97 = 0")
+    assert codec.map_images(img, per_image, schema).collect() == []
 
 
 def test_migrated_operator_plan_names_its_stage(spark, sf_dir):
@@ -408,5 +449,5 @@ def test_migrated_operator_plan_names_its_stage(spark, sf_dir):
     df = prop_true_stats(img)
     assert df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas imgcalcmisc_prop_true_stats(" in plan
+    assert "MapInArrow imgcalcmisc_prop_true_stats(" in plan
     assert not re.search(r"\bgen\(", plan)

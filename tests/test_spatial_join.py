@@ -119,7 +119,7 @@ def test_sjoin_poly_hot_polygon_multi_task(spark):
     out = spatial_join_poly(pts, polys)
     # no aggregation/grouping shuffle in the refinement plan
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan
+    assert "FlatMapGroupsIn" not in plan
     rows = out.collect()
     got = {r.image_id for r in rows}
     # brute-force PIP: strictly below the hypotenuse lat < -lon (scaled)
