@@ -32,6 +32,7 @@ derived from partition order (SURVEY.md §4.2 determinism rule).
 from __future__ import annotations
 
 import functools
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -206,6 +207,13 @@ _TILE_CHECKSUM_SCHEMA = StructType(
 #: the metadata a fused kernel consumes to synthesize an image payload
 _PAYLOAD_INPUTS = ("id", "w", "h", "fmt")
 
+#: rows the image-rollup kernel regroups by (w, h, fmt) at a time; its
+#: input is metadata only (~60 B a row), so a chunk stays near 1 MB
+_ROLLUP_CHUNK = 16384
+
+#: most pixels synthesized, decoded and rolled up in one stack
+_STACK_PIXELS = 1 << 20
+
 
 @functools.lru_cache(maxsize=1024)
 def _axis_windows(size: int, tile: int, overlap: int):
@@ -227,6 +235,42 @@ def _axis_windows(size: int, tile: int, overlap: int):
     return spans, r, c
 
 
+class _SumPlan(NamedTuple):
+    """What the exact tile sums of an (h, w) plane need (see
+    :func:`_sum_plan`)."""
+    ys: tuple
+    xs: tuple
+    ry: np.ndarray
+    rx: np.ndarray
+    cy: np.ndarray
+    cx: np.ndarray
+    k: np.ndarray | None     # flattened coverage cy (x) cx; None if all ones
+    wide: bool               # partial sums may reach 2^53: multiply in int64
+
+
+@functools.lru_cache(maxsize=4096)
+def _sum_plan(h: int, w: int, dtype: np.dtype, width: int, height: int,
+              overlap: int) -> _SumPlan:
+    """The window matrices and exactness branch for every plane of one
+    ``(shape, dtype, tile, overlap)``, decided once.
+
+    float64 BLAS is exact while every partial sum is an integer below
+    2^53; the coverage-weighted image total bounds them all.  Above the
+    bound the factors come back as int64 (``wide``).
+    """
+    ys, ry, cy = _axis_windows(h, height, overlap)
+    xs, rx, cx = _axis_windows(w, width, overlap)
+    info = np.iinfo(dtype)
+    bound = max(info.max, -info.min) * h * w \
+        * cy.max(initial=0) * cx.max(initial=0)
+    wide = bound >= 2.0 ** 53
+    if wide:
+        ry, rx, cy, cx = (a.astype(np.int64) for a in (ry, rx, cy, cx))
+    k = None if (cy == 1).all() and (cx == 1).all() \
+        else np.outer(cy, cx).ravel()
+    return _SumPlan(ys, xs, ry, rx, cy, cx, k, wide)
+
+
 def _window_sums(plane: np.ndarray, width: int, height: int, overlap: int,
                  rollup: bool = False):
     """Exact pixel sums of every tile window of ``plane``.
@@ -236,20 +280,30 @@ def _window_sums(plane: np.ndarray, width: int, height: int, overlap: int,
     order) -- or, with ``rollup``, their total ``cy . P . cx`` as one
     int, without forming the tiles.  Either is exact for any overlap.
     """
-    h, w = plane.shape
-    ys, ry, cy = _axis_windows(h, height, overlap)
-    xs, rx, cx = _axis_windows(w, width, overlap)
-    # float64 BLAS is exact while every partial sum is an integer below
-    # 2^53; the coverage-weighted image total bounds them all
-    info = np.iinfo(plane.dtype)
-    bound = max(info.max, -info.min) * plane.size \
-        * cy.max(initial=0) * cx.max(initial=0)
-    if bound >= 2.0 ** 53:
-        plane, ry, cy, rx, cx = (a.astype(np.int64)
-                                 for a in (plane, ry, cy, rx, cx))
+    p = _sum_plan(*plane.shape, plane.dtype, width, height, overlap)
+    if p.wide:
+        plane = plane.astype(np.int64)
     if rollup:
-        return ys, xs, int(cy @ plane @ cx)
-    return ys, xs, (ry @ plane @ rx.T).astype(np.int64).ravel()
+        return p.ys, p.xs, int(p.cy @ plane @ p.cx)
+    return p.ys, p.xs, (p.ry @ plane @ p.rx.T).astype(np.int64).ravel()
+
+
+def _stack_rollups(stack: np.ndarray, width: int, height: int,
+                   overlap: int):
+    """``(n_tiles, totals)`` of an (n, h, w) plane stack: the per-plane
+    ``_window_sums(..., rollup=True)`` totals as one int64 vector, from
+    one product ``stack.reshape(n, h w) @ (cy (x) cx)`` -- a plain
+    int64 row sum when the coverage is all ones."""
+    n, h, w = stack.shape
+    p = _sum_plan(h, w, stack.dtype, width, height, overlap)
+    flat = stack.reshape(n, h * w)
+    if p.k is None:
+        totals = flat.sum(axis=1, dtype=np.int64)
+    elif p.wide:
+        totals = flat.astype(np.int64) @ p.k
+    else:
+        totals = (flat @ p.k).astype(np.int64)
+    return len(p.ys) * len(p.xs), totals
 
 
 def _synth_planes(batch):
@@ -258,8 +312,81 @@ def _synth_planes(batch):
     ``tile_pixels(synth.attach_bytes(...))`` sees."""
     for img_id, w, h, fmt in zip(*(batch.column(c).to_pylist()
                                    for c in _PAYLOAD_INPUTS)):
-        buf = codec.encode_image(synth.pixel_array(img_id, w, h, fmt), fmt)
+        buf = codec.encode_image(synth.pixel_planes((img_id,), w, h, fmt)[0],
+                                 fmt)
         yield codec.decode_image(buf, w, h, fmt), fmt
+
+
+def _chunks(batches, rows: int):
+    """Consecutive runs of ``batches`` of at least ``rows`` rows each
+    (the last run may be shorter)."""
+    run, n = [], 0
+    for batch in batches:
+        run.append(batch)
+        n += batch.num_rows
+        if n >= rows:
+            yield run
+            run, n = [], 0
+    if run:
+        yield run
+
+
+def _image_rollups(meta: pa.Table, width: int, height: int, overlap: int):
+    """``(n_tiles, pix_sum)`` int64 vectors over the (id, w, h, fmt) rows
+    of ``meta``, in row order, one ``(w, h, fmt)`` group at a time.
+
+    Per group: one synthesized plane stack (``synth.pixel_planes``), an
+    ``encode_image`` + ``decode_image`` per image into a preallocated
+    stack, and one rollup product (``_stack_rollups``).  A group is cut
+    into pieces of at most ``_STACK_PIXELS`` pixels so memory stays
+    bounded whatever the shape mix.
+    """
+    ids, ws, hs = (meta.column(c).to_numpy() for c in ("id", "w", "h"))
+    fmt = meta.column("fmt").combine_chunks().dictionary_encode()
+    keys, group = np.unique(
+        np.column_stack([ws, hs, fmt.indices.to_numpy()]), axis=0,
+        return_inverse=True)
+    group = group.ravel()
+    order = np.argsort(group, kind="stable")
+    starts = np.searchsorted(group[order], np.arange(len(keys) + 1))
+    fmts = fmt.dictionary.to_pylist()
+    n_tiles = np.empty(len(ids), np.int64)
+    pix_sum = np.empty(len(ids), np.int64)
+    for (w, h, f), lo, hi in zip(keys.tolist(), starts[:-1], starts[1:]):
+        step = max(1, _STACK_PIXELS // max(1, w * h))
+        for a in range(lo, hi, step):
+            rows = order[a:min(a + step, hi)]
+            stack = synth.pixel_planes(ids[rows], w, h, fmts[f])
+            planes = np.empty_like(stack)
+            for i, arr in enumerate(stack):
+                planes[i] = codec.decode_image(
+                    codec.encode_image(arr, fmts[f]), w, h, fmts[f])
+            n_tiles[rows], pix_sum[rows] = _stack_rollups(
+                planes, width, height, overlap)
+    return n_tiles, pix_sum
+
+
+def _rollup_batches(batches, keep, names, width: int, height: int,
+                    overlap: int):
+    """The ``rollup="image"`` kernel: per input row, the ``keep``
+    columns plus ``n_tiles`` and ``pix_sum``, as batches named
+    ``names``.
+
+    One Arrow batch holds only ~2 rows per ``(w, h, fmt)``, so the rows
+    are regrouped across ``_ROLLUP_CHUNK``-row runs of batches; the
+    output keeps the input's order and batch boundaries.
+    """
+    for run in _chunks(batches, _ROLLUP_CHUNK):
+        n_tiles, pix_sum = _image_rollups(pa.Table.from_batches(run),
+                                          width, height, overlap)
+        at = 0
+        for batch in run:
+            end = at + batch.num_rows
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in keep]
+                + [pa.array(n_tiles[at:end]), pa.array(pix_sum[at:end])],
+                names=names)
+            at = end
 
 
 def _tile_batch(batch, planes, width: int, height: int, overlap: int,
@@ -348,7 +475,10 @@ def tile_checksums_fused(meta: DataFrame, width: int, height: int,
     carrying every input column except the consumed (id, w, h, fmt)
     through unchanged, plus ``n_tiles`` and ``pix_sum`` (the sum of
     the tile checksums, formed without forming the tiles).  Input rows
-    may be (image, zone) pairs: each pair is rolled up on its own.
+    may be (image, zone) pairs: each pair is rolled up on its own.  The
+    kernel regroups rows by ``(w, h, fmt)`` and works one group at a
+    time (``_rollup_batches``); every image is still synthesized,
+    encoded and decoded on its own.
     """
     tw, th, ov = int(width), int(height), int(overlap)
 
@@ -360,18 +490,7 @@ def tile_checksums_fused(meta: DataFrame, width: int, height: int,
         ])
 
         def tiling_image_rollup(batches):
-            for batch in batches:
-                n_out, s_out = [], []
-                for plane, _ in _synth_planes(batch):
-                    ys, xs, total = _window_sums(plane, tw, th, ov,
-                                                 rollup=True)
-                    n_out.append(len(ys) * len(xs))
-                    s_out.append(total)
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(c) for c in keep]
-                    + [pa.array(n_out, pa.int64()),
-                       pa.array(s_out, pa.int64())],
-                    names=schema.names)
+            return _rollup_batches(batches, keep, schema.names, tw, th, ov)
 
         return meta.mapInArrow(tiling_image_rollup, schema=schema)
 

@@ -39,8 +39,10 @@ Zone (polygon) layer: 25 rectangular zones derived from ``nation``
 
 from __future__ import annotations
 
-import numpy as np
+import functools
+import os
 
+import numpy as np
 
 from .functions import codec
 
@@ -52,6 +54,7 @@ __all__ = [
     "synth_images",
     "synth_zones",
     "pixel_array",
+    "pixel_planes",
     "fmt_of_id",
     "pmax_sql",
     "pixel_value_sql",
@@ -157,11 +160,18 @@ FROM (SELECT CAST(s_suppkey AS BIGINT) AS qid FROM {supplier})
 """.strip()
 
 
-def synth_qpoints(spark, sf_dir: str):
-    import os
+def _read_view(spark, sf_dir: str, table: str, schema: str) -> None:
+    """Register ``{sf_dir}/{table}.parquet`` as a temp view with a
+    declared ``schema`` (the columns the synth SQL reads), so the read
+    launches no schema-inference job.  A narrower integer file column
+    (e.g. an INT32 ``n_nationkey``) is widened to a declared BIGINT."""
+    spark.read.schema(schema) \
+        .parquet(os.path.join(sf_dir, f"{table}.parquet")) \
+        .createOrReplaceTempView(table)
 
-    spark.read.parquet(os.path.join(sf_dir, "supplier.parquet")) \
-        .createOrReplaceTempView("supplier")
+
+def synth_qpoints(spark, sf_dir: str):
+    _read_view(spark, sf_dir, "supplier", "s_suppkey BIGINT")
     return spark.sql(qpoints_sql("spark"))
 
 
@@ -193,13 +203,43 @@ def pixel_array(img_id: int, w: int, h: int, fmt: str) -> np.ndarray:
     return v.astype(np.uint8 if fmt == "raw8" else np.uint16)
 
 
+@functools.lru_cache(maxsize=1024)
+def _base_plane(w: int, h: int, pmax: int, dtype: type) -> np.ndarray:
+    """The id-free part of the pixel formula, ``(7x + 13y) mod pmax``, as
+    a read-only (h, w) plane of ``dtype`` -- one per shape and format."""
+    x = np.arange(w, dtype=np.int64)[None, :]
+    y = np.arange(h, dtype=np.int64)[:, None]
+    base = ((x * 7 + y * 13) % pmax).astype(dtype)
+    base.flags.writeable = False
+    return base
+
+
+def pixel_planes(ids, w: int, h: int, fmt: str) -> np.ndarray:
+    """Fast twin of :func:`pixel_array`: the (n, h, w) stack of the
+    planes of ``n`` ids that share one shape and format.
+
+    Each plane is the cached base plane plus the per-id offset
+    ``(31 id) mod pmax``, reduced with ``& (pmax - 1)`` in the target
+    dtype (both moduli are powers of two, and ``&`` is the floor modulo
+    for negative ids too).  Tests hold it equal to ``pixel_array``.
+    """
+    pmax = 256 if fmt in ("raw8", "png") else 1024
+    dtype = np.uint8 if fmt == "raw8" else np.uint16
+    off = ((np.asarray(ids, np.int64) * 31) & (pmax - 1)).astype(dtype)
+    stack = _base_plane(int(w), int(h), pmax, dtype)[None] \
+        + off[:, None, None]
+    stack &= dtype(pmax - 1)
+    return stack
+
+
 def synth_attach_bytes(batches):
     """mapInArrow kernel appending the encoded ``bytes`` payload."""
     import pyarrow as pa
 
     for batch in batches:
         cols = (batch.column(c).to_pylist() for c in ("id", "w", "h", "fmt"))
-        payloads = [codec.encode_image(pixel_array(img_id, w, h, fmt), fmt)
+        payloads = [codec.encode_image(pixel_planes((img_id,), w, h, fmt)[0],
+                                       fmt)
                     for img_id, w, h, fmt in zip(*cols)]
         yield batch.append_column("bytes", pa.array(payloads, pa.binary()))
 
@@ -228,11 +268,7 @@ def synth_images(spark, sf_dir: str, with_bytes: bool = False,
     right plan shape for queries that never touch pixels (column pruning
     for free).  ``with_bytes=True`` runs the Arrow codec stage.
     """
-    import os
-
-
-    spark.read.parquet(os.path.join(sf_dir, "part.parquet")) \
-        .createOrReplaceTempView("part")
+    _read_view(spark, sf_dir, "part", "p_partkey BIGINT")
     sql = images_sql("spark")
     if with_footprint:
         sql = footprint_sql(sql)
@@ -253,8 +289,5 @@ def synth_images(spark, sf_dir: str, with_bytes: bool = False,
 
 
 def synth_zones(spark, sf_dir: str):
-    import os
-
-    spark.read.parquet(os.path.join(sf_dir, "nation.parquet")) \
-        .createOrReplaceTempView("nation")
+    _read_view(spark, sf_dir, "nation", "n_nationkey BIGINT, n_name STRING")
     return spark.sql(zones_sql("spark"))

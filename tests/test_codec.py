@@ -270,9 +270,9 @@ def _row_loop_png(arr):
 
 
 @pytest.mark.parametrize("arr", [
-    pixel_array(11, 57, 43, "png"),
+    pixel_array(11, 57, 43, "raw8"),
     pixel_array(11, 57, 43, "raw16"),
-    pixel_array(3, 128, 97, "png")[5:70, 9:100],      # non-contiguous
+    pixel_array(3, 128, 97, "raw8")[5:70, 9:100],     # non-contiguous
     pixel_array(3, 128, 97, "raw16")[5:70, 9:100],
     np.full((1, 1), 200, np.uint8),
     np.zeros((4, 0), np.uint16),

@@ -68,3 +68,23 @@ def test_flagship_plan_is_one_pass(spark, sf_dir):
     assert len(re.findall(r"MapIn(?:Arrow|Pandas)|EvalPython", final)) == 1
     assert "MapInArrow tiling_image_rollup(" in final
     assert "SortAggregate" not in final
+
+
+def test_synth_reads_launch_no_job(spark, sf_dir, overlap_tables):
+    """The synth tables read their parquet with declared schemas: building
+    the frames runs no schema-inference job, and the INT32
+    ``n_nationkey`` of ``overlap_tables`` is widened to the declared
+    BIGINT."""
+    sc = spark.sparkContext
+    sc.setJobGroup("synth_reads", "synth frame build")
+    try:
+        img = synth.synth_images(spark, sf_dir)
+        zones = synth.synth_zones(spark, overlap_tables)
+        qpts = synth.synth_qpoints(spark, sf_dir)
+        assert sc.statusTracker().getJobIdsForGroup("synth_reads") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert img.schema["id"].dataType.simpleString() == "bigint"
+    assert qpts.schema["qid"].dataType.simpleString() == "bigint"
+    assert sorted(tuple(r) for r in zones.select("zone_id", "zname")
+                  .collect()) == sorted(ZONES)

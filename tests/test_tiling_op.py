@@ -1,11 +1,13 @@
 """Distributed tiling operator vs the pure-python tile-grid oracle."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from rsgislib_spark import synth
 from rsgislib_spark.geo.tilegrid import tile_specs
 from rsgislib_spark.functions import codec
+from rsgislib_spark.operators import tiling
 from rsgislib_spark.operators.tiling import (
     _window_sums, tile_checksums_fused, tile_pixels, tile_spec_df)
 
@@ -147,3 +149,94 @@ def test_image_rollup_passes_other_columns_through(spark, sf_dir):
         plane = synth.pixel_array(m.id, m.w, m.h, m.fmt).astype(np.int64)
         assert r.n_tiles == len(tile_specs(m.w, m.h, 48, 32))
         assert r.pix_sum == int(plane.sum())
+
+
+#: the 97 (w, h) shapes of the synthetic table: both depend on id mod 97
+SHAPES = [(32 + (7 * k) % 97, 32 + (13 * k) % 97) for k in range(97)]
+
+
+@pytest.mark.parametrize("fmt", ["raw8", "raw16", "png"])
+def test_pixel_planes_equal_pixel_array(fmt):
+    """The cached base-plane twin equals the ``pixel_array`` oracle for
+    every synthetic shape, with ids whose ``31 id`` wraps the modulus
+    once, many times, past 2^32 and below zero."""
+    for k, (w, h) in enumerate(SHAPES):
+        ids = [k, k + 97, k + 97 * 1009, 2 ** 40 + k, -k - 1]
+        stack = synth.pixel_planes(ids, w, h, fmt)
+        assert stack.shape == (len(ids), h, w)
+        for plane, img_id in zip(stack, ids):
+            want = synth.pixel_array(img_id, w, h, fmt)
+            assert plane.dtype == want.dtype
+            assert np.array_equal(plane, want), (img_id, w, h, fmt)
+
+
+def _meta(ids):
+    """(id, w, h, fmt, key) rows of the synthetic table for ``ids``."""
+    ids = np.asarray(ids, np.int64)
+    return pa.table({
+        "id": ids,
+        "w": pa.array(32 + (ids * 7) % 97, pa.int32()),
+        "h": pa.array(32 + (ids * 13) % 97, pa.int32()),
+        "fmt": synth.fmt_of_id(ids).tolist(),
+        "key": ids * 10,
+    })
+
+
+def _per_image(meta, width, height, overlap):
+    """Per-row ``(n_tiles, pix_sum)`` of the one-image-at-a-time path."""
+    out = []
+    for img_id, w, h, fmt in zip(*(meta.column(c).to_pylist()
+                                   for c in ("id", "w", "h", "fmt"))):
+        arr = synth.pixel_array(img_id, w, h, fmt)
+        plane = codec.decode_image(codec.encode_image(arr, fmt), w, h, fmt)
+        ys, xs, total = _window_sums(plane, width, height, overlap,
+                                     rollup=True)
+        out.append((len(ys) * len(xs), total))
+    return out
+
+
+@pytest.mark.parametrize("overlap", [0, 7])
+def test_grouped_rollup_equals_per_image(overlap):
+    """One rollup product per (w, h, fmt) group equals the per-image
+    ``_window_sums(..., rollup=True)``, row for row in input order."""
+    # (w, h, fmt) repeats every 388 ids: all 291 groups, each 2+ times
+    meta = _meta(np.arange(5, 5 + 388 * 2)[::-1])
+    n_tiles, pix_sum = tiling._image_rollups(meta, 48, 32, overlap)
+    assert list(zip(n_tiles.tolist(), pix_sum.tolist())) \
+        == _per_image(meta, 48, 32, overlap)
+
+
+@pytest.mark.parametrize("overlap", [0, 7])
+@pytest.mark.parametrize("dtype", [np.uint16, np.uint64])
+def test_stack_rollups_take_both_exactness_branches(dtype, overlap):
+    """uint16 planes multiply in float64, uint64 ones (bound past 2^53)
+    in int64; overlap 7 weights the product, overlap 0 is a row sum.
+    Every branch equals the per-plane rollup."""
+    planes = np.stack([synth.pixel_array(i, 61, 45, "raw16")
+                       for i in range(5)]).astype(dtype)
+    plan = tiling._sum_plan(45, 61, planes.dtype, 48, 32, overlap)
+    assert plan.wide == (dtype == np.uint64)
+    assert (plan.k is None) == (overlap == 0)
+    n, totals = tiling._stack_rollups(planes, 48, 32, overlap)
+    assert totals.dtype == np.int64
+    want = [_window_sums(p, 48, 32, overlap, rollup=True) for p in planes]
+    assert n == len(want[0][0]) * len(want[0][1])
+    assert totals.tolist() == [t for _, _, t in want]
+
+
+def test_rollup_chunks_keep_input_order(monkeypatch):
+    """A chunk boundary that splits (w, h, fmt) groups still gives every
+    row back in input order, batch for batch."""
+    monkeypatch.setattr(tiling, "_ROLLUP_CHUNK", 500)
+    # 4-batch runs: a run holds some groups twice, and splits others
+    meta = _meta(np.arange(1, 1 + 97 * 9))
+    batches = meta.to_batches(max_chunksize=128)
+    out = list(tiling._rollup_batches(iter(batches), ["key"],
+                                      ["key", "n_tiles", "pix_sum"],
+                                      48, 32, 0))
+    assert [b.num_rows for b in out] == [b.num_rows for b in batches]
+    got = pa.Table.from_batches(out)
+    assert got.column("key").to_pylist() == meta.column("key").to_pylist()
+    assert list(zip(got.column("n_tiles").to_pylist(),
+                    got.column("pix_sum").to_pylist())) \
+        == _per_image(meta, 48, 32, 0)
