@@ -31,3 +31,9 @@ SUMTYPE_STDDEV = "stddev"
 SUMTYPE_COUNT = "count"
 SUMTYPE_RANGE = "range"
 SUMTYPE_SUM = "sum"
+
+# inside a Spark Python worker, stop every task from re-reading the
+# unchanged pyspark.zip / spark-core jar directories (see workerinit)
+from .workerinit import guard_zip_rereads as _guard_zip_rereads  # noqa: E402
+
+_guard_zip_rereads()

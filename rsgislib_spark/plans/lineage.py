@@ -30,6 +30,7 @@ data.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -65,6 +66,17 @@ def completed_cells(spark: SparkSession, lineage_path: str) -> DataFrame:
     if os.path.exists(lineage_path):
         return spark.read.parquet(lineage_path).select("cell").distinct()
     return spark.range(0).select(F.col("id").alias("cell"))
+
+
+def _cell_dirs(jvm, fs, data_p) -> set[int]:
+    """The ``cell=<n>`` entries of ``data_p``, from one Hadoop
+    ``listStatus``.  The listing crosses py4j as one newline-joined
+    string of paths, not as a Java array read element by element: a
+    committed table holds thousands of cell directories."""
+    paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(data_p))
+    listing = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        paths).mkString("\n")
+    return {int(c) for c in re.findall(r"/cell=(-?\d+)$", listing, re.M)}
 
 
 def run_resumable(images: DataFrame, out_dir: str, process,
@@ -108,17 +120,19 @@ def run_resumable(images: DataFrame, out_dir: str, process,
     # local os.path/shutil delete would silently no-op for non-local
     # URIs and reintroduce the stale-partial hazard (ADVICE r3).  Cell
     # ids are plain integers, so the ``cell=<n>`` directory name never
-    # needs Hive escaping.
+    # needs Hive escaping.  One listing of ``data/`` finds the cells on
+    # disk (almost always none of the pending ones), so the commit makes
+    # a constant number of py4j calls rather than one per pending cell.
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
     data_p = jvm.org.apache.hadoop.fs.Path(data_path)
     fs = data_p.getFileSystem(hconf)
     if fs.exists(data_p):
-        for row in todo.select("cell").collect():
-            d = jvm.org.apache.hadoop.fs.Path(data_path,
-                                              f"cell={row.cell}")
-            if fs.exists(d):
-                fs.delete(d, True)
+        stale = _cell_dirs(jvm, fs, data_p) & {
+            row.cell for row in todo.select("cell").collect()}
+        for cell in sorted(stale):
+            fs.delete(jvm.org.apache.hadoop.fs.Path(data_path,
+                                                    f"cell={cell}"), True)
 
     out = process(pending)
     mode_key = "spark.sql.sources.partitionOverwriteMode"

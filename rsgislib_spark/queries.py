@@ -347,10 +347,14 @@ def _px_partitions(spark, sf_dir, mod: int,
                    rows_per_task: int = 128) -> int:
     """Task count for a payload (two chained Python stages) subset.
 
-    Measured at local[32]: the encode+decode pipeline pays
-    two Python-runner launches per task, so small subsets at core-count
-    tasks are launch-bound — 1053 images ran 1.3 s at 32 tasks vs
-    0.74 s at 8.  Target ~128 wide rows per task for codec-cheap
+    Measured at local[32], before ``workerinit``: the encode+decode
+    pipeline runs two Python stages per task, and each Python task then
+    paid 0.1-0.3 s re-reading pyspark.zip and the spark-core jar
+    (pyspark's per-task ``importlib.invalidate_caches()``; NOTES.md), so
+    small subsets were set-up-bound — 1053 images ran 1.3 s at 32 tasks
+    vs 0.74 s at 8.  ``workerinit.guard_zip_rereads`` cut that set-up
+    to ~0.2 ms; the numbers below were tuned under the old cost and are
+    kept as they are.  Target ~128 wide rows per task for codec-cheap
     kernels, capped at 3x the task slots (the usual oversubscription
     factor on a real cluster — at 10^12 rows the cap binds and the
     heuristic degenerates to "spread everywhere", which is correct
@@ -3417,10 +3421,10 @@ def q_events_hourly(spark, sf_dir) -> DataFrame:
 def flagship(spark, sf_dir) -> DataFrame:
     """H3 encode -> spatial join -> tiling, per-zone rollup.
 
-    The BASELINE.json metric pipeline: every image is cell-encoded and
-    joined to the zone layer; matched images are tiled (48x32) with real
-    pixel decode and per-tile checksums; result is one row per zone with
-    image/tile/pixel totals.  An image inside two zones counts once in
+    The headline metric's pipeline (README.md): every image is
+    cell-encoded and joined to the zone layer; matched images are tiled
+    (48x32) with real pixel decode and per-tile checksums; result is one
+    row per zone with image/tile/pixel totals.  An image inside two zones counts once in
     each.
     """
     # one pass, late materialization: the join runs once on metadata

@@ -67,9 +67,12 @@ def get_spark(app: str = "rsgislib_spark", master: str | None = None,
         # advisory size would coalesce them onto a handful of tasks and
         # serialize the Python stage; 8 MB keeps them at ~core count.
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-        # measured: each Python-runner launch costs ~0.25 core-seconds
-        # on this build, so Arrow-stage partition counts should stay
-        # near the core count (see synth_images/tile callers).
+        # reused workers skip the fork and interpreter start.  A task's
+        # own set-up used to cost 0.1-0.3 s: pyspark's per-task
+        # importlib.invalidate_caches() re-read every zip on sys.path
+        # (Python < 3.13).  workerinit.guard_zip_rereads cuts that to
+        # ~0.2 ms; ~50 ms of pythonTotalTime a task is left (4-core VM,
+        # NOTES.md), so Arrow stages still run at the core count.
         .config("spark.python.worker.reuse", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # measured at local[32]: binary-payload rows make big

@@ -1,6 +1,7 @@
 """Deterministic synthesis of the geotagged image+caption input table.
 
-The engine's input contract (BASELINE.json input_hint) is an Iceberg table
+The engine's input contract (FIXTURES.md, "Input contract") is an Iceberg
+table
 
     (image_id string, bytes binary, w int, h int, fmt string,
      caption string, phash long)
@@ -281,8 +282,9 @@ def synth_images(spark, sf_dir: str, with_bytes: bool = False,
         # (the expensive part) would run on ONE task no matter how many
         # executors exist.  Shuffling metadata-only rows is cheap; the
         # heavy bytes column is born already-parallel.  Exactly core
-        # count: every extra Python task costs ~0.25 core-s of runner
-        # startup on this build.
+        # count: more tasks than cores only adds per-task cost (~50 ms
+        # of pythonTotalTime each, down from ~0.25 s before workerinit
+        # stopped the per-task zip re-reads; NOTES.md).
         df = df.repartition(spark.sparkContext.defaultParallelism)
         df = attach_bytes(df)
     return df

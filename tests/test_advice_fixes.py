@@ -139,6 +139,49 @@ def test_run_resumable_crash_between_writes_no_duplicates(spark, sf_dir,
     assert data.select("image_id").distinct().count() == img.count()
 
 
+def test_run_resumable_crash_after_delete(spark, sf_dir, tmp_path):
+    """Simulate a crash right AFTER the stale-partition delete, before
+    any data is written: the pending cells lost their partial data and
+    still have no lineage row, so the resume pass must rebuild them and
+    the result must equal a clean single run."""
+    from rsgislib_spark import synth
+    from rsgislib_spark.operators.spatial_join import with_point_cell
+    from rsgislib_spark.plans.lineage import run_resumable
+
+    img = synth.synth_images(spark, sf_dir, with_footprint=False)
+    out = str(tmp_path / "job")
+    data = os.path.join(out, "data")
+
+    def process(df):
+        return df.select("cell", "image_id", "phash")
+
+    # a partial earlier attempt: data for every cell, no lineage
+    with_point_cell(img).select("cell", "image_id", "phash") \
+        .limit(50).write.partitionBy("cell").parquet(data)
+    partial = [d for d in os.listdir(data) if d.startswith("cell=")]
+    assert partial
+
+    def crash(df):
+        raise RuntimeError("crash after the delete")
+
+    with pytest.raises(RuntimeError, match="crash after the delete"):
+        run_resumable(img, out, crash)
+    assert not any(os.path.exists(os.path.join(data, d)) for d in partial)
+    assert not os.path.exists(os.path.join(out, "lineage"))
+
+    n = run_resumable(img, out, process)
+    clean = str(tmp_path / "clean")
+    assert run_resumable(img, clean, process) == n
+
+    def rows(path):
+        return sorted(tuple(r) for r in spark.read.parquet(path).select(
+            *sorted(spark.read.parquet(path).columns)).collect())
+
+    assert rows(data) == rows(os.path.join(clean, "data"))
+    assert rows(os.path.join(out, "lineage")) == \
+        rows(os.path.join(clean, "lineage"))
+
+
 def test_write_partitioned_roundtrip(spark, sf_dir, tmp_path):
     from rsgislib_spark import synth
     from rsgislib_spark.operators.spatial_join import with_point_cell
@@ -220,27 +263,44 @@ def test_corr_window_16bit_no_wrap():
 def test_lineage_delete_via_hadoop_fs(spark, tmp_path):
     """ADVICE r3: the stale-partition delete goes through the Hadoop
     FileSystem API, so it works (and is exercised here) on file: URIs
-    exactly as it would on hdfs:/s3a:."""
+    exactly as it would on hdfs:/s3a:.  The commit lists ``data/`` once
+    and deletes only cells that are both pending and on disk: a
+    completed cell's directory and files survive, a pending cell with
+    no directory is fine, and a pending cell's stale file goes."""
+    from rsgislib_spark.operators.spatial_join import with_point_cell
     from rsgislib_spark.plans.lineage import run_resumable
 
-    img = spark.createDataFrame(
-        [(1, 10.01, 45.01, 7), (2, 10.02, 45.02, 9)],
-        "id long, lon double, lat double, phash long")
+    schema = "id long, lon double, lat double, phash long"
+    rows = [(1, 10.01, 45.01, 7), (2, 20.02, 30.02, 9),
+            (3, -70.03, -20.03, 11)]
+    cells = [r.cell for r in with_point_cell(
+        spark.createDataFrame(rows, schema)).orderBy("id").collect()]
+    assert len(set(cells)) == 3
     out = str(tmp_path / "out")
-
-    # first run writes cells; plant a stale extra file in one partition,
-    # drop its lineage row, and resume: the stale file must be gone
-    run_resumable(img, out, lambda df: df.select("id", "cell"))
     data = os.path.join(out, "data")
-    cells = [d for d in os.listdir(data) if d.startswith("cell=")]
-    assert cells
-    stale = os.path.join(data, cells[0], "stale-leftover.parquet")
-    open(stale, "w").write("junk")
-    # wipe lineage so every cell is pending again
-    import shutil
 
-    shutil.rmtree(os.path.join(out, "lineage"))
-    run_resumable(img, out, lambda df: df.select("id", "cell"))
+    # commit row 1 only: its cell is complete; plant a marker beside
+    # its parquet files, which the next commit must not touch
+    run_resumable(spark.createDataFrame(rows[:1], schema), out,
+                  lambda df: df.select("id", "cell"))
+    done_dir = os.path.join(data, f"cell={cells[0]}")
+    done_files = sorted(os.listdir(done_dir))
+    # a leading "_" keeps the parquet reader off it
+    keep = os.path.join(done_dir, "_keep-me")
+    open(keep, "w").write("completed")
+
+    # row 2's cell is pending with a crashed run's stale file on disk;
+    # row 3's cell is pending with no directory at all
+    stale_dir = os.path.join(data, f"cell={cells[1]}")
+    os.makedirs(stale_dir)
+    stale = os.path.join(stale_dir, "stale-leftover.parquet")
+    open(stale, "w").write("junk")
+    assert not os.path.exists(os.path.join(data, f"cell={cells[2]}"))
+
+    n = run_resumable(spark.createDataFrame(rows, schema), out,
+                      lambda df: df.select("id", "cell"))
+    assert n == 2
     assert not os.path.exists(stale)
-    got = spark.read.parquet(data).count()
-    assert got == 2
+    assert sorted(os.listdir(done_dir)) == sorted(done_files + ["_keep-me"])
+    got = sorted((r.id, r.cell) for r in spark.read.parquet(data).collect())
+    assert got == [(i + 1, c) for i, c in enumerate(cells)]

@@ -1,0 +1,176 @@
+"""The worker-side zip re-read guard (``rsgislib_spark.workerinit``).
+
+Spark-free tests drive ``guard_zip_rereads`` with a pretend active
+``TaskContext`` and count ``zipimport._read_directory`` calls; one Spark
+test checks that a real Python worker runs with the guard installed.
+"""
+
+import importlib
+import os
+import sys
+import zipfile
+import zipimport
+
+import pytest
+
+from rsgislib_spark import workerinit
+
+before_py313 = pytest.mark.skipif(
+    sys.version_info >= (3, 13),
+    reason="Python 3.13 re-reads zip directories lazily; no guard there")
+
+
+@pytest.fixture
+def reads(monkeypatch):
+    """Act as a Spark Python worker with the guard installed; yields the
+    list of archives ``zipimport`` reads.  Every patch is undone."""
+    from pyspark.taskcontext import TaskContext
+
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        zipimport.zipimporter.invalidate_caches)
+    monkeypatch.setattr(TaskContext, "_taskContext", object())
+    seen = []
+    read_directory = zipimport._read_directory
+
+    def counting(archive):
+        seen.append(archive)
+        return read_directory(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    assert workerinit.guard_zip_rereads()
+    return seen
+
+
+def _write_zip(path, members):
+    with zipfile.ZipFile(path, "w") as z:
+        for name, text in members.items():
+            z.writestr(name, text)
+
+
+@before_py313
+def test_unchanged_archive_is_not_reread(reads, tmp_path):
+    path = str(tmp_path / "lib.zip")
+    _write_zip(path, {"mod_a.py": "X = 1\n"})
+    z = zipimport.zipimporter(path)
+    reads.clear()
+    z.invalidate_caches()            # the first call always reads
+    assert reads == [path]
+    for _ in range(3):
+        z.invalidate_caches()
+    assert reads == [path]
+    assert "mod_a.py" in z._files
+
+
+@before_py313
+def test_rewritten_archive_is_reread(reads, tmp_path, monkeypatch):
+    path = str(tmp_path / "lib.zip")
+    _write_zip(path, {"gw_mod_a.py": "X = 1\n"})
+    monkeypatch.syspath_prepend(path)
+    for name in ("gw_mod_a", "gw_mod_b"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    assert importlib.import_module("gw_mod_a").X == 1
+    importlib.invalidate_caches()    # what every worker task calls
+    n = len(reads)
+    importlib.invalidate_caches()
+    assert len(reads) == n           # nothing changed, nothing read
+
+    _write_zip(path, {"gw_mod_a.py": "X = 1\n", "gw_mod_b.py": "Y = 2\n"})
+    importlib.invalidate_caches()
+    assert reads[n:] == [path]
+    z = sys.path_importer_cache[path]
+    assert z.get_data(os.path.join(path, "gw_mod_b.py")) == b"Y = 2\n"
+    assert importlib.import_module("gw_mod_b").Y == 2
+
+
+@before_py313
+def test_same_size_rewrite_is_reread(reads, tmp_path):
+    """Only the modification time tells this rewrite apart."""
+    path = str(tmp_path / "lib.zip")
+    _write_zip(path, {"mod_a.py": "X = 1\n"})
+    z = zipimport.zipimporter(path)
+    z.invalidate_caches()
+    before = os.stat(path)
+    _write_zip(path, {"mod_b.py": "X = 1\n"})
+    os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns + 10**9))
+    assert os.stat(path).st_size == before.st_size
+    n = len(reads)
+    z.invalidate_caches()
+    assert len(reads) == n + 1
+    assert "mod_b.py" in z._files and "mod_a.py" not in z._files
+
+
+@before_py313
+def test_deleted_archive_empties_the_importer(reads, tmp_path):
+    path = str(tmp_path / "lib.zip")
+    _write_zip(path, {"mod_a.py": "X = 1\n"})
+    z = zipimport.zipimporter(path)
+    z.invalidate_caches()
+    os.remove(path)
+    n = len(reads)
+    z.invalidate_caches()            # falls through to the stdlib
+    assert len(reads) == n + 1
+    assert z._files == {}
+    assert path not in zipimport._zip_directory_cache
+
+    _write_zip(path, {"mod_c.py": "Z = 3\n"})
+    z.invalidate_caches()
+    assert len(reads) == n + 2
+    assert "mod_c.py" in z._files
+
+
+def test_driver_and_new_pythons_are_left_unpatched(monkeypatch):
+    from pyspark.taskcontext import TaskContext
+
+    stdlib = zipimport.zipimporter.invalidate_caches
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", stdlib)
+    assert TaskContext.get() is None           # the driver
+    assert not workerinit.guard_zip_rereads()
+    assert zipimport.zipimporter.invalidate_caches is stdlib
+
+    monkeypatch.setattr(TaskContext, "_taskContext", object())
+    monkeypatch.setattr(sys, "version_info", (3, 13, 0, "final", 0))
+    assert not workerinit.guard_zip_rereads()
+    assert zipimport.zipimporter.invalidate_caches is stdlib
+
+
+@before_py313
+def test_installing_twice_is_a_noop(reads):
+    guarded = zipimport.zipimporter.invalidate_caches
+    assert not workerinit.guard_zip_rereads()
+    assert zipimport.zipimporter.invalidate_caches is guarded
+
+
+@before_py313
+def test_spark_worker_runs_guarded(spark):
+    """A worker that has run an engine kernel has the guard installed,
+    and its per-task ``importlib.invalidate_caches()`` reads no zip."""
+
+    def probe(batches):
+        import importlib
+        import zipimport
+
+        from rsgislib_spark.functions import codec
+
+        importlib.invalidate_caches()   # each importer's first read
+        seen = []
+        read_directory = zipimport._read_directory
+        zipimport._read_directory = lambda a: seen.append(a) or read_directory(a)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        code = zipimport.zipimporter.invalidate_caches.__code__
+        for b in batches:
+            yield codec.to_batch({
+                "id": b.column(0).to_pylist(),
+                "guard": [os.path.basename(code.co_filename)] * b.num_rows,
+                "reads": [len(seen)] * b.num_rows}, schema)
+
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    schema = StructType([StructField("id", LongType()),
+                         StructField("guard", StringType()),
+                         StructField("reads", LongType())])
+    rows = spark.range(4).repartition(2).mapInArrow(probe, schema).collect()
+    assert sorted(r.id for r in rows) == [0, 1, 2, 3]
+    assert {(r.guard, r.reads) for r in rows} == {("workerinit.py", 0)}
