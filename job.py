@@ -13,6 +13,11 @@ per-cell lineage so a killed run resumes idempotently.
 On a real cluster, swap the parquet read/write for the Iceberg catalog
 (the lineage protocol is snapshot-aware either way).  Exits 0 printing
 one JSON line with row counts and the number of newly processed cells.
+
+The job always resumes: cells already recorded in ``{out}/lineage`` are
+skipped, so re-running over the same ``--out`` after a crash finishes
+only the missing cells.  For a fresh run, point ``--out`` at a new or
+empty directory.
 """
 
 from __future__ import annotations
@@ -25,8 +30,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--out", required=True)
-    ap.add_argument("--resume", action="store_true",
-                    help="skip cells already recorded in the lineage table")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F

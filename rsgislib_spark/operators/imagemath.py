@@ -373,8 +373,6 @@ def min_pxl_value_in_win_stats(images: DataFrame, size: int = 3,
     return codec.map_images(images, per_image, schema, dtype=np.int64)
 
 
-LAPLACIAN3 = ((0, 1, 0), (1, -4, 1), (0, 1, 0))
-
 #: derivable bands over the single-plane payloads (the engine's stand-in
 #: for multi-band imagery): identity, horizontal mirror, vertical flip,
 #: half-intensity
@@ -427,29 +425,6 @@ def band_stack_stats(images: DataFrame, bands) -> DataFrame:
             out["max_pix"].append(int(b.max()))
 
     return codec.map_images(images, per_image, schema, dtype=np.int64)
-
-
-def lm_lite_bank() -> dict:
-    """A Leung–Malik-style filter bank from the engine's integer kernels.
-
-    Reference: ``leung_malik_filter_bank`` (imagefilter/__init__.py:950)
-    — a bank of Gaussian smoothings, 1st/2nd derivatives at several
-    scales/orientations and blob filters, applied together.  This bank
-    keeps the exact-integer property: smoothings + x/y derivatives at
-    two scales (y = transposed x kernel), Sobel pair, Laplacian blob.
-    """
-    def t(k):
-        return tuple(tuple(row) for row in zip(*k))
-
-    g3, g5 = gaussian_kernel(3, 0), gaussian_kernel(5, 0)
-    d1, d2 = gaussian_kernel(5, 1), gaussian_kernel(5, 2)
-    return {
-        "gauss3": g3, "gauss5": g5,
-        "d1x5": d1, "d1y5": t(d1),
-        "d2x5": d2, "d2y5": t(d2),
-        "sobel_x": SOBEL_X, "sobel_y": t(SOBEL_X),
-        "laplace3": LAPLACIAN3,
-    }
 
 
 def filter_bank_stats(images: DataFrame, kernels: dict) -> DataFrame:

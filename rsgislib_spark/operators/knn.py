@@ -3,13 +3,14 @@
 Re-expresses:
 
 * ``match_closest_vec_pts`` (reference: python/rsgislib/vectorutils/
-  __init__.py:3359-3473) — 1-NN point->point match.  The reference builds
-  the full O(n*m) distance matrix; here a *density-adaptive two-phase
-  plan*: (1) pick a coarse grid resolution where the expected 1-NN
-  distance fits inside one cell (cell height ~ 3x the Poisson-expected
-  NN distance from the match-layer count), join base->match on the 3x3
-  coarse-cell ring (a single hash equi-join; ~tens of candidates per
-  base point at any density), and accept a best candidate at distance
+  __init__.py:3359-3473) — 1-NN point->point match — and
+  ``apply_rat_knn`` (k > 1 majority vote).  The reference builds the
+  full O(n*m) distance matrix; here both run one *density-adaptive
+  escalation ladder* (``_ladder``): (1) pick a coarse grid resolution
+  where the expected k-NN distance fits inside one cell (from the
+  match-layer count), join base->match on the 3x3 coarse-cell ring (a
+  single hash equi-join; ~tens of candidates per base point at any
+  density), and accept a base point whose best candidates lie at
   ``d < coarse_cell_height`` — every unexplored cell lies provably
   farther; (2) unresolved stragglers ESCALATE through coarser levels
   (res - 3, res - 6, ...) with the same 3x3-ring invariant, ending at
@@ -20,11 +21,11 @@ Re-expresses:
   is exact with no unbounded or hot-keyed join anywhere — a
   pathological distribution (heavy clustering + empty oceans) just
   climbs a couple of extra rungs, each a small equi-join over the
-  surviving stragglers.  All rungs are lazy — one
-  union'd plan, no per-rung driver actions.  Distances are planar
-  euclidean in
-  coordinate units, exactly ``calc_pt_distance`` (tools/geometrytools.
-  py:592).  Ties raise, as the reference does (vectorutils/__init__.py:
+  surviving stragglers.  The operators differ only in the per-rung
+  reduction (top-1 with a tie flag, or a salted top-k tournament) and
+  its resolution test.  Distances are planar euclidean in coordinate
+  units, exactly ``calc_pt_distance`` (tools/geometrytools.py:592).
+  Ties raise, as the reference does (vectorutils/__init__.py:
   3430-3434); output columns default to ``x_match / y_match /
   dist_match`` and ``tolerance`` filters matches ``dist < tolerance``
   (strict, :3464).
@@ -33,61 +34,37 @@ Re-expresses:
   __init__.py:997-1049) — per-point count of same-layer points within an
   inclusive radius, minus self (KDTree ``query_ball_point`` semantics).
   Implemented as a cell-ring-bounded self-equi-join: each point explodes
-  its (2K+1)^2 neighbour cells (pure Catalyst ``sequence``/``explode``
-  with longitude wrap via pmod), joins back on cell, filters
-  ``dist <= radius``, aggregates.  No UDF anywhere; the shuffle key is
-  the cell, so density hot-spots parallelize across their neighbour
-  cells and AQE handles residual skew.
+  its (2K+1)^2 neighbour cells (``_ring``, the ladder's probe with K
+  rings; pure Catalyst ``sequence``/``explode`` with longitude wrap via
+  pmod), joins back on cell, filters ``dist <= radius``, aggregates.
+  No UDF anywhere; the shuffle key is the cell, so density hot-spots
+  parallelize across their neighbour cells and AQE handles residual
+  skew.
+
+Intermediates with two consumers (the keyed layers, each rung's
+resolved set, the tie-checked union) are ``localCheckpoint(eager=
+False)``: computed once, kept while a plan derived from them lives,
+freed by the ContextCleaner at the next JVM GC after that.  Nothing
+enters the CacheManager, which matches cached frames by *plan* and so
+would serve a later call over a rewritten table an earlier call's
+data.  Checkpointing a plan with an exchange runs its shuffle map
+stages at once, so the ring rungs' candidate joins run inside the call.
 """
 
 from __future__ import annotations
 
+import functools
 import math
-from collections import deque
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..geo.cellindex import DEFAULT_RES, _X_SHIFT
 
-__all__ = ["match_closest_points", "knn_classify", "npts_in_radius",
-           "release_cached"]
+__all__ = ["match_closest_points", "knn_classify", "npts_in_radius"]
 
 
 class TieError(RuntimeError):
     """Multiple equally-near matches (the reference raises here too)."""
-
-
-#: bounded LRU of per-call cached intermediates (ADVICE r2: a long-
-#: lived session issuing many kNN calls must not accumulate cached
-#: blocks).  Eager unpersist tied to the returned DataFrame's lifetime
-#: does NOT work: callers derive `.select(...)` and drop the original,
-#: which would release the caches BEFORE the lazy plan executes and
-#: trigger full rung-recompute storms (measured 3x slowdowns).  A small
-#: LRU keeps the most recent calls' caches hot and evicts older ones —
-#: evicted frames are safe to unpersist (Spark just recomputes if some
-#: straggler plan still references them).
-_CACHE_LRU: deque = deque()
-_CACHE_LRU_LIMIT = 6
-
-
-def _register_cached(frames) -> None:
-    _CACHE_LRU.append(list(frames))
-    while len(_CACHE_LRU) > _CACHE_LRU_LIMIT:
-        for f in _CACHE_LRU.popleft():
-            try:
-                f.unpersist()
-            except Exception:
-                pass
-
-
-def release_cached() -> None:
-    """Unpersist every registered kNN intermediate (explicit cleanup)."""
-    while _CACHE_LRU:
-        for f in _CACHE_LRU.popleft():
-            try:
-                f.unpersist()
-            except Exception:
-                pass
 
 
 def _dist(ax, ay, bx, by):
@@ -105,6 +82,111 @@ def _cell_parts(lon, lat, res: int):
                                     * F.lit(float(n))), F.lit(0.0)),
                  F.lit(float(n - 1))).cast("long")
     return nx, ny
+
+
+def _ring(df: DataFrame, nx, ny, k: int, n: int) -> DataFrame:
+    """``df`` exploded to one row per cell of the (2k+1)^2 ring around
+    cell ``(nx, ny)`` of an n x n grid, keyed ``_xy``.  Rows past a pole
+    are dropped; longitude wraps (pmod), so a ring spanning the grid
+    repeats cells — consumers must be idempotent to that."""
+    return (
+        df.withColumn("_rx", F.explode(F.sequence(nx - k, nx + k)))
+        .withColumn("_ry", F.explode(F.sequence(ny - k, ny + k)))
+        .where((F.col("_ry") >= 0) & (F.col("_ry") < n))
+        .withColumn("_xy", F.pmod(F.col("_rx"), F.lit(n)) * F.lit(_X_SHIFT)
+                    + F.col("_ry"))
+        .drop("_rx", "_ry")
+    )
+
+
+def _keyed(df: DataFrame, side: str, key: str, lon: str, lat: str,
+           res_c: int, *extra) -> DataFrame:
+    """One ladder input: ``_{side}key/lon/lat`` (+ ``extra`` columns) and
+    the cell at the finest rung, ``_{side}nx/ny``.  Coarser rungs take
+    an exact shiftright of it (power-of-2 grids nest), so no rung
+    re-derives cells or re-scans the input."""
+    nx, ny = _cell_parts(F.col(lon), F.col(lat), res_c)
+    return df.select(
+        F.col(key).alias(f"_{side}key"), *extra,
+        F.col(lon).alias(f"_{side}lon"), F.col(lat).alias(f"_{side}lat"),
+        nx.alias(f"_{side}nx"), ny.alias(f"_{side}ny"),
+    ).localCheckpoint(eager=False)
+
+
+def _ladder(keyed_base: DataFrame, keyed_match: DataFrame, res_c: int,
+            reduce, resolved_when) -> DataFrame:
+    """The escalation ladder shared by the kNN operators.
+
+    ``reduce(cand)`` maps candidate rows (``_bkey`` + match columns +
+    distance ``_d``) to one row per ``_bkey``; ``resolved_when(cell_h)``
+    is the Column that proves a reduced row final at a rung whose
+    unexplored cells lie >= ``cell_h`` away.  Rungs run at res_c,
+    res_c-3, ... while res > 3 (step 3 = 8x cell area per rung, so
+    straggler populations collapse fast; typical densities need one
+    ring rung), then the terminal brute force.  Returns the union of
+    every rung's reduced rows.
+    """
+    def reduced(cand):
+        return reduce(cand.withColumn("_d", _dist(
+            F.col("_blon"), F.col("_blat"), F.col("_mlon"), F.col("_mlat"))))
+
+    pending, parts = keyed_base, []
+    for r in range(res_c, 3, -3):
+        n, shift = 1 << r, res_c - r
+        probe = _ring(pending, F.shiftright("_bnx", shift),
+                      F.shiftright("_bny", shift), 1, n)
+        rung_match = keyed_match.withColumn(
+            "_xy", F.shiftright("_mnx", shift) * F.lit(_X_SHIFT)
+            + F.shiftright("_mny", shift))
+        # checkpoint: the rung feeds BOTH the union and the next rung's
+        # anti-join — without it the union branch would recompute every
+        # earlier rung (O(rungs^2) subplan blowup)
+        parts.append(reduced(probe.join(rung_match, "_xy", "inner")).where(
+            resolved_when(180.0 / n)).localCheckpoint(eager=False))
+        pending = pending.join(parts[-1].select("_bkey"), "_bkey",
+                               "left_anti")
+    # terminal bounded brute force: a ring join on the <= 8x8 grid would
+    # funnel |pending| x |match| rows through a handful of hot cell keys
+    # (measured: the whole stage on 2-4 tasks, 8-41 s swings).  Broadcast
+    # the provably-small side and scan the other in place — even spread,
+    # no shuffle, provably global.  After >= 1 ring rung that is the
+    # doubly-exponentially-shrunk stragglers; a ladder that STARTS
+    # terminal means the match layer is tiny (res_c <= 3 ⇔ ~hundreds of
+    # points), so broadcast the match side and keep the base in place.
+    slim = pending.select("_bkey", "_blon", "_blat")
+    cand = (keyed_match.crossJoin(F.broadcast(slim)) if parts
+            else slim.crossJoin(F.broadcast(keyed_match)))
+    parts.append(reduced(cand))
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+def _best(cand: DataFrame) -> DataFrame:
+    """Top-1 per base key as a partial-aggregating groupBy.
+
+    Deliberately NOT a window function: a window shuffles every
+    candidate of a key to one task and sorts (the megacity hot cell
+    makes that a straggler); min/max of ordered structs combine
+    map-side, so only one row per (partition, key) crosses the shuffle
+    regardless of candidate skew.  Tie detection: the smallest and
+    largest match key at the minimum distance differ iff >= 2 distinct
+    equally-near matches exist (idempotent, so ring-wrap duplicate
+    candidates cannot false-trigger it).
+    """
+    ag = cand.groupBy("_bkey").agg(
+        F.min(F.struct(F.col("_d"), F.col("_mkey"),
+                       F.col("_mlon"), F.col("_mlat"))).alias("_a"),
+        F.max(F.struct((-F.col("_d")).alias("_nd"),
+                       F.col("_mkey").alias("_k"))).alias("_z"),
+    )
+    return ag.select(
+        "_bkey",
+        F.col("_a._mkey").alias("_mkey"),
+        F.col("_a._mlon").alias("_mlon"),
+        F.col("_a._mlat").alias("_mlat"),
+        F.col("_a._d").alias("_d"),
+        F.when(F.col("_z._k") != F.col("_a._mkey"), F.lit(2))
+        .otherwise(F.lit(1)).alias("_nbest"),
+    )
 
 
 def match_closest_points(
@@ -127,14 +209,13 @@ def match_closest_points(
 ) -> DataFrame:
     """Exact 1-NN of every base point into the match layer.
 
-    Escalation ladder: a 3x3-ring candidate join at a density-chosen
-    coarse resolution (a best candidate at ``d < cell_height`` is
-    provably the true 1-NN — no unexplored cell can be nearer), then
-    the same join at successively coarser levels for the stragglers;
-    the terminal level broadcasts the shrunken straggler set against
-    the full match table (bounded brute force, evenly spread), so the
-    result is exact with no unbounded or hot-keyed join.  Every rung
-    is lazy — no driver-side iteration.
+    Escalation ladder (``_ladder``): a 3x3-ring candidate join at a
+    density-chosen coarse resolution (a best candidate at ``d <
+    cell_height`` is provably the true 1-NN — no unexplored cell can be
+    nearer), then the same join at successively coarser levels for the
+    stragglers; the terminal level broadcasts the shrunken straggler
+    set against the full match table (bounded brute force, evenly
+    spread), so the result is exact with no unbounded or hot-keyed join.
 
     ``match_count`` seeds the density heuristic; pass it when known to
     avoid the one metadata-only ``count()`` action (a wrong value only
@@ -144,7 +225,6 @@ def match_closest_points(
     :class:`TieError` when a base point has two equally-near matches
     (skip with ``check_ties=False`` to avoid the validation action).
     """
-    # ---- density-adaptive coarse resolution ------------------------------
     # Poisson-expected NN distance ~ 0.5 / sqrt(m / world_area); make the
     # coarse cell ~3x that so the first rung resolves the vast majority.
     if match_count is None:
@@ -152,144 +232,14 @@ def match_closest_points(
     exp_nn = 0.5 / math.sqrt(max(match_count, 1) / (360.0 * 180.0))
     res_c = int(max(1, min(res,
                            math.floor(math.log2(180.0 / (3.0 * exp_nn))))))
-    # rung resolutions: res_c, res_c-3, ... (step 3 = 8x cell area per
-    # rung, so straggler populations collapse fast), ending at a
-    # TERMINAL rung of res <= 3 (grid <= 8x8) whose ring radius is the
-    # full grid (K = n-1, deduped) — provably global coverage, at most
-    # (2n-1)^2 <= 225 probe cells per surviving straggler.  Typical
-    # densities need exactly 2 rungs.
-    non_term = list(range(res_c, 3, -3))
-    rungs = non_term + [max(non_term[-1] - 3 if non_term else res_c, 0)]
+    matched = _ladder(
+        _keyed(base, "b", base_key, base_lon, base_lat, res_c),
+        _keyed(match, "m", match_key, match_lon, match_lat, res_c),
+        res_c, _best, lambda cell_h: F.col("_d") < F.lit(cell_h))
 
-    # key both layers ONCE at the finest rung resolution; every coarser
-    # rung's cell id is an exact shiftright (power-of-2 grids nest), so
-    # no rung re-derives cells from coordinates or re-scans the inputs.
-    # The persisted projections are key + 2 doubles + 2 ints — at
-    # extreme scale swap persist() for a re-scan of the pruned columns.
-    b_nx, b_ny = _cell_parts(F.col(base_lon), F.col(base_lat), res_c)
-    keyed_base = base.select(
-        F.col(base_key).alias("_bkey"),
-        F.col(base_lon).alias("_blon"),
-        F.col(base_lat).alias("_blat"),
-        b_nx.alias("_bnx"), b_ny.alias("_bny"),
-    ).persist()
-    m_nx, m_ny = _cell_parts(F.col(match_lon), F.col(match_lat), res_c)
-    keyed_match = match.select(
-        F.col(match_key).alias("_mkey"),
-        F.col(match_lon).alias("_mlon"),
-        F.col(match_lat).alias("_mlat"),
-        m_nx.alias("_mnx"), m_ny.alias("_mny"),
-    ).persist()
-
-    def _best(cand):
-        """Top-1 per base key as a partial-aggregating groupBy.
-
-        Deliberately NOT a window function: a window shuffles every
-        candidate of a key to one task and sorts (the megacity hot cell
-        makes that a straggler); min/max of ordered structs combine
-        map-side, so only one row per (partition, key) crosses the
-        shuffle regardless of candidate skew.  Tie detection: the
-        smallest and largest match key at the minimum distance differ
-        iff >= 2 distinct equally-near matches exist (idempotent, so
-        ring-wrap duplicate candidates cannot false-trigger it).
-        """
-        ag = cand.groupBy("_bkey").agg(
-            F.min(F.struct(F.col("_d"), F.col("_mkey"),
-                           F.col("_mlon"), F.col("_mlat"))).alias("_a"),
-            F.max(F.struct((-F.col("_d")).alias("_nd"),
-                           F.col("_mkey").alias("_k"))).alias("_z"),
-        )
-        return ag.select(
-            "_bkey",
-            F.col("_a._mkey").alias("_mkey"),
-            F.col("_a._mlon").alias("_mlon"),
-            F.col("_a._mlat").alias("_mlat"),
-            F.col("_a._d").alias("_d"),
-            F.col("_a._d").alias("_mind"),
-            F.when(F.col("_z._k") != F.col("_a._mkey"), F.lit(2))
-            .otherwise(F.lit(1)).alias("_nbest"),
-        )
-
-    pending = keyed_base
-    resolved_parts = []
-    for r in rungs:
-        n = 1 << r
-        cell_h = 180.0 / n
-        terminal = (r == rungs[-1])
-        shift = res_c - r
-
-        if terminal:
-            # bounded brute force for the stragglers: a terminal ring
-            # join would funnel |pending| x |match| rows through the
-            # <= 4x4 grid's handful of cell keys (a few hot tasks);
-            # broadcast the provably-small side instead and scan the
-            # other in place — same row volume, even spread, no
-            # shuffle, provably global.  After >= 1 ring rung the
-            # straggler set has shrunk doubly-exponentially (broadcast
-            # pending); a ladder that STARTS terminal means the match
-            # layer itself is tiny (res_c <= 3 ⇔ ~hundreds of points),
-            # so broadcast the match side and keep the base in place.
-            if len(rungs) > 1:
-                cand = keyed_match.crossJoin(F.broadcast(
-                    pending.select("_bkey", "_blon", "_blat")))
-            else:
-                cand = pending.select("_bkey", "_blon", "_blat") \
-                    .crossJoin(F.broadcast(keyed_match))
-            cand = cand.withColumn(
-                "_d", _dist(F.col("_blon"), F.col("_blat"),
-                            F.col("_mlon"), F.col("_mlat")))
-        else:
-            rb_nx = F.shiftright(F.col("_bnx"), shift)
-            rb_ny = F.shiftright(F.col("_bny"), shift)
-            probe = (
-                pending
-                .withColumn("_rx",
-                            F.explode(F.sequence(rb_nx - 1, rb_nx + 1)))
-                .withColumn("_ry",
-                            F.explode(F.sequence(rb_ny - 1, rb_ny + 1)))
-                .where((F.col("_ry") >= 0) & (F.col("_ry") < n))
-                .withColumn("_mxy",
-                            F.pmod(F.col("_rx"), F.lit(n)) * F.lit(_X_SHIFT)
-                            + F.col("_ry"))
-                .drop("_rx", "_ry")
-            )
-            # (longitude wrap can duplicate ring cells when the ring
-            # spans the grid; the duplicated candidates are harmless —
-            # _best's min/max aggs are idempotent — so no dedup
-            # exchange is spent on them)
-            rung_match = keyed_match.withColumn(
-                "_mxy",
-                F.shiftright(F.col("_mnx"), shift) * F.lit(_X_SHIFT)
-                + F.shiftright(F.col("_mny"), shift))
-            cand = probe.join(rung_match, "_mxy", "inner").withColumn(
-                "_d", _dist(F.col("_blon"), F.col("_blat"),
-                            F.col("_mlon"), F.col("_mlat"))
-            )
-        best = _best(cand)
-        # any unexplored cell is >= cell_h away, so a best below that
-        # bound is the global 1-NN; the terminal ring explored everything
-        resolved = best if terminal else best.where(
-            F.col("_mind") < F.lit(cell_h))
-        # persist: each rung's result feeds BOTH the final union and the
-        # next rung's anti-join — without this the union branch would
-        # recompute every earlier rung (O(rungs^2) subplan blowup)
-        resolved = resolved.select("_bkey", "_mkey", "_mlon", "_mlat",
-                                   "_d", "_nbest").persist()
-        resolved_parts.append(resolved)
-        if terminal:
-            break
-        pending = pending.join(resolved.select("_bkey"), "_bkey",
-                               "left_anti")
-
-    matched = resolved_parts[0]
-    for part in resolved_parts[1:]:
-        matched = matched.unionByName(part)
-
-    cached_final = []
     if check_ties:
-        # cache only when the tie probe adds a second consumer
-        matched = matched.cache()
-        cached_final.append(matched)
+        # checkpoint only when the tie probe adds a second consumer
+        matched = matched.localCheckpoint(eager=False)
         if matched.where(F.col("_nbest") > 1).limit(1).count():
             raise TieError(
                 "Multiple features found - don't know what to do with that!"
@@ -304,8 +254,6 @@ def match_closest_points(
     out = base.join(matched, base_key, "left")
     if tolerance is not None:
         out = out.where(F.col(out_dist_col) < tolerance)
-    _register_cached([keyed_base, keyed_match, *resolved_parts,
-                      *cached_final])
     return out
 
 
@@ -358,24 +306,6 @@ def knn_classify(
         max(match_count, 1) / (360.0 * 180.0))
     res_c = int(max(1, min(res,
                            math.ceil(math.log2(180.0 / (3.0 * exp_nn))))))
-    non_term = list(range(res_c, 3, -3))
-    rungs = non_term + [max(non_term[-1] - 3 if non_term else res_c, 0)]
-
-    b_nx, b_ny = _cell_parts(F.col(base_lon), F.col(base_lat), res_c)
-    keyed_base = base.select(
-        F.col(base_key).alias("_bkey"),
-        F.col(base_lon).alias("_blon"),
-        F.col(base_lat).alias("_blat"),
-        b_nx.alias("_bnx"), b_ny.alias("_bny"),
-    ).persist()
-    m_nx, m_ny = _cell_parts(F.col(match_lon), F.col(match_lat), res_c)
-    keyed_match = match.select(
-        F.col(match_key).alias("_mkey"),
-        F.col(class_col).alias("_cls"),
-        F.col(match_lon).alias("_mlon"),
-        F.col(match_lat).alias("_mlat"),
-        m_nx.alias("_mnx"), m_ny.alias("_mny"),
-    ).persist()
 
     def _topk(cand):
         part = cand.groupBy(
@@ -390,71 +320,14 @@ def knn_classify(
             f" 1, {k})"
         ).alias("_t"))
 
-    pending = keyed_base
-    resolved_parts = []
-    for r in rungs:
-        n = 1 << r
-        cell_h = 180.0 / n
-        terminal = (r == rungs[-1])
-        shift = res_c - r
-
-        if terminal:
-            # bounded brute force for the stragglers: at the terminal
-            # rung the grid is <= 4x4, so a ring join funnels
-            # |pending| x |match| rows through a handful of hot cell
-            # keys (measured: the whole stage on 2-4 tasks, 8-41 s
-            # swings).  Broadcast the provably-small side instead (the
-            # doubly-exponentially-shrunk stragglers; or, for a ladder
-            # that STARTS terminal — possible only when the match
-            # layer is ~hundreds of points — the match side) and scan
-            # the other in place: even spread, no shuffle, no hot key.
-            if len(rungs) > 1:
-                cand = keyed_match.crossJoin(
-                    F.broadcast(pending.select("_bkey", "_blon", "_blat")))
-            else:
-                cand = pending.select("_bkey", "_blon", "_blat") \
-                    .crossJoin(F.broadcast(keyed_match))
-            cand = cand.withColumn(
-                "_d", _dist(F.col("_blon"), F.col("_blat"),
-                            F.col("_mlon"), F.col("_mlat")))
-        else:
-            rb_nx = F.shiftright(F.col("_bnx"), shift)
-            rb_ny = F.shiftright(F.col("_bny"), shift)
-            probe = (
-                pending
-                .withColumn("_rx",
-                            F.explode(F.sequence(rb_nx - 1, rb_nx + 1)))
-                .withColumn("_ry",
-                            F.explode(F.sequence(rb_ny - 1, rb_ny + 1)))
-                .where((F.col("_ry") >= 0) & (F.col("_ry") < n))
-                .withColumn("_mxy",
-                            F.pmod(F.col("_rx"), F.lit(n)) * F.lit(_X_SHIFT)
-                            + F.col("_ry"))
-                .drop("_rx", "_ry")
-            )
-            rung_match = keyed_match.withColumn(
-                "_mxy",
-                F.shiftright(F.col("_mnx"), shift) * F.lit(_X_SHIFT)
-                + F.shiftright(F.col("_mny"), shift))
-            cand = probe.join(rung_match, "_mxy", "inner").withColumn(
-                "_d", _dist(F.col("_blon"), F.col("_blat"),
-                            F.col("_mlon"), F.col("_mlat")))
-        top = _topk(cand)
-        resolved = top if terminal else top.where(
-            (F.size("_t") >= k)
-            & (F.element_at("_t", k)["_d"] < F.lit(cell_h)))
-        resolved = resolved.persist()
-        resolved_parts.append(resolved)
-        if terminal:
-            break
-        pending = pending.join(resolved.select("_bkey"), "_bkey",
-                               "left_anti")
-
-    topk = resolved_parts[0]
-    for part in resolved_parts[1:]:
-        topk = topk.unionByName(part)
-
-    votes = (
+    topk = _ladder(
+        _keyed(base, "b", base_key, base_lon, base_lat, res_c),
+        _keyed(match, "m", match_key, match_lon, match_lat, res_c,
+               F.col(class_col).alias("_cls")),
+        res_c, _topk,
+        lambda cell_h: (F.size("_t") >= k)
+        & (F.element_at("_t", k)["_d"] < F.lit(cell_h)))
+    return (
         topk.select("_bkey", F.explode("_t").alias("_nb"))
         .groupBy("_bkey", F.col("_nb._cls").alias("_c"))
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -465,8 +338,6 @@ def knn_classify(
                 (-F.col("_w._negc")).alias("pred_cls"),
                 F.col("_w._n").alias("n_votes"))
     )
-    _register_cached([keyed_base, keyed_match, *resolved_parts])
-    return votes
 
 
 def npts_in_radius(
@@ -494,20 +365,10 @@ def npts_in_radius(
         F.col(lat).alias("_lat"),
         (p_nx * F.lit(_X_SHIFT) + p_ny).alias("_xy"),
     )
-    probe = (
-        points.select(
-            F.col(key).alias("_bk"), F.col(lon).alias("_blon"),
-            F.col(lat).alias("_blat"), p_nx.alias("_bnx"), p_ny.alias("_bny"),
-        )
-        .withColumn("_rx", F.explode(F.sequence(F.col("_bnx") - K,
-                                                F.col("_bnx") + K)))
-        .withColumn("_ry", F.explode(F.sequence(F.col("_bny") - K,
-                                                F.col("_bny") + K)))
-        .where((F.col("_ry") >= 0) & (F.col("_ry") < n))
-        .withColumn("_xy", F.pmod(F.col("_rx"), F.lit(n)) * F.lit(_X_SHIFT)
-                    + F.col("_ry"))
-        .drop("_rx", "_ry", "_bnx", "_bny")
-    )
+    probe = _ring(
+        points.select(F.col(key).alias("_bk"), F.col(lon).alias("_blon"),
+                      F.col(lat).alias("_blat")),
+        *_cell_parts(F.col("_blon"), F.col("_blat"), res), K, n)
     counts = (
         probe.join(keyed, "_xy", "inner")
         .where(_dist(F.col("_blon"), F.col("_blat"),

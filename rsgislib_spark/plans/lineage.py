@@ -61,10 +61,30 @@ def lineage_records(images: DataFrame, res: int = DEFAULT_RES,
     )
 
 
+#: the lineage table as ``lineage_records`` writes it; declared, so the
+#: read launches no schema-inference job
+_LINEAGE_SCHEMA = ("cell BIGINT, n_rows BIGINT, sum_phash BIGINT, "
+                   "min_id BIGINT, max_id BIGINT, snapshot_id BIGINT")
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """``(jvm, FileSystem, Path)`` for ``path``: the store its URI names
+    (file:, hdfs:, s3a:, ...), or the default one for a plain path."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return jvm, p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def completed_cells(spark: SparkSession, lineage_path: str) -> DataFrame:
-    """Cells already recorded as done (empty frame if no lineage yet)."""
-    if os.path.exists(lineage_path):
-        return spark.read.parquet(lineage_path).select("cell").distinct()
+    """Cells already recorded as done (empty frame if no lineage yet).
+
+    Existence is checked through the path's Hadoop ``FileSystem``, like
+    the commit's delete: a local ``os.path`` check is False for any URI
+    (``file://...`` too), so a resume would redo every cell."""
+    _, fs, p = _hadoop_fs(spark, lineage_path)
+    if fs.exists(p):
+        return spark.read.schema(_LINEAGE_SCHEMA).parquet(lineage_path) \
+            .select("cell").distinct()
     return spark.range(0).select(F.col("id").alias("cell"))
 
 
@@ -123,10 +143,7 @@ def run_resumable(images: DataFrame, out_dir: str, process,
     # needs Hive escaping.  One listing of ``data/`` finds the cells on
     # disk (almost always none of the pending ones), so the commit makes
     # a constant number of py4j calls rather than one per pending cell.
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    data_p = jvm.org.apache.hadoop.fs.Path(data_path)
-    fs = data_p.getFileSystem(hconf)
+    jvm, fs, data_p = _hadoop_fs(spark, data_path)
     if fs.exists(data_p):
         stale = _cell_dirs(jvm, fs, data_p) & {
             row.cell for row in todo.select("cell").collect()}

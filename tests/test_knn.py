@@ -138,3 +138,64 @@ def test_knn_classify_matches_bruteforce_under_skew(spark):
         best = vals[np.lexsort((vals, -counts))][0]
         want = (int(best), int(counts[vals == best][0]))
         assert got[i] == want, (i, got[i], want)
+
+
+def test_match_closest_rereads_rewritten_table(spark, tmp_path):
+    """A table rewritten in place by an external writer (same path, same
+    row count) is matched against its NEW rows.  Spark's CacheManager
+    matches cached frames by plan, so a persisted intermediate of the
+    first call would serve the second call the first table's data."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.RandomState(7)
+    path = str(tmp_path / "match.parquet")
+    base = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(
+            zip(rng.uniform(-170, 170, 20), rng.uniform(-80, 80, 20)))],
+        "qid long, qlon double, qlat double")
+    bpdf = base.toPandas().sort_values("qid")
+    for tag in ("m1", "m2"):
+        lon, lat = rng.uniform(-180, 180, 500), rng.uniform(-90, 90, 500)
+        keys = [f"{tag}_{i}" for i in range(500)]
+        pq.write_table(pa.table({"image_id": keys, "lon": lon, "lat": lat}),
+                       path)
+        out = match_closest_points(base, spark.read.parquet(path))
+        got = dict(out.select("qid", "match_image_id").collect())
+        want = {int(q): keys[int(np.argmin(np.hypot(lon - x, lat - y)))]
+                for q, x, y in zip(bpdf.qid, bpdf.qlon, bpdf.qlat)}
+        assert got == want, tag
+
+
+def test_knn_operators_register_no_cache(spark, layers):
+    """The kNN operators leave nothing in the CacheManager once their
+    results are collected (their intermediates are local checkpoints)."""
+    from pyspark.sql import functions as F
+
+    from rsgislib_spark.operators.knn import knn_classify
+
+    images, qpts, _, _ = layers
+    spark.catalog.clearCache()
+    match_closest_points(qpts, images).collect()
+    knn_classify(qpts, images.withColumn("cls", F.col("id") % 5),
+                 k=3).collect()
+    npts_in_radius(images, 0.2).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_repeated_knn_closest_does_full_work(spark, sf_dir):
+    """An identical repeat of q_knn_closest launches as many jobs as the
+    first call: no result of the first call is reused by the second."""
+    from rsgislib_spark.queries import q_knn_closest
+
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    jobs = []
+    try:
+        for group in ("knn_first", "knn_repeat"):
+            sc.setJobGroup(group, "q_knn_closest")
+            q_knn_closest(spark, sf_dir).collect()
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs[0] > 0 and jobs[1] == jobs[0], jobs

@@ -57,6 +57,29 @@ def test_run_resumable_processes_only_missing(spark, sf_dir, tmp_path):
     assert data.count() == img.count()
 
 
+def test_run_resumable_resumes_on_uri_out_dir(spark, sf_dir, tmp_path):
+    """A ``file://`` out_dir resumes like a plain path: the second run
+    finds every cell's lineage row, commits nothing and appends none."""
+    from rsgislib_spark import synth
+    from rsgislib_spark.plans.lineage import run_resumable
+
+    img = synth.synth_images(spark, sf_dir, with_footprint=False)
+    out = "file://" + str(tmp_path / "job")
+
+    def process(df):
+        return df.select("cell", "image_id", "phash")
+
+    n1 = run_resumable(img, out, process)
+    assert n1 > 0
+    assert run_resumable(img, out, process) == 0
+    lineage = spark.read.parquet(out + "/lineage")
+    assert lineage.count() == lineage.select("cell").distinct().count() == n1
+    # the declared read schema is the one the commit writes
+    from rsgislib_spark.plans.lineage import _LINEAGE_SCHEMA
+    declared = spark.read.schema(_LINEAGE_SCHEMA).parquet(out + "/lineage")
+    assert dict(lineage.dtypes) == dict(declared.dtypes)
+
+
 def test_stream_append_withholds_open_windows(spark, sf_dir):
     from rsgislib_spark.streaming.events import (
         stream_hourly_counts, stream_hourly_counts_append)
