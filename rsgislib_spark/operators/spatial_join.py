@@ -42,7 +42,6 @@ vectorutils/__init__.py:2219-2223, belongs to the sink layer).
 
 from __future__ import annotations
 
-import operator
 from typing import Iterable
 
 import numpy as np
@@ -76,9 +75,19 @@ def with_point_cell(df: DataFrame, lon: str = "lon", lat: str = "lat",
     return df.withColumn(out, F.expr(cell_sql_expr(lon, lat, res)))
 
 
-def _axis_idx(expr: str, origin: float, extent: float, n: int) -> Column:
-    c = F.floor((F.expr(expr) + F.lit(origin)) / F.lit(extent) * F.lit(float(n)))
-    return F.least(F.greatest(c, F.lit(0)), F.lit(n - 1)).cast("long")
+def _axis_idx(expr: str, origin: float, extent: float, n: int) -> str:
+    """SQL text of the clamped grid index of ``expr`` along one axis:
+    ``cellindex.cell_of_point``'s ``nx``/``ny`` with double literals."""
+    c = (f"floor((({expr}) + CAST({origin!r} AS DOUBLE)) / "
+         f"CAST({extent!r} AS DOUBLE) * CAST({float(n)!r} AS DOUBLE))")
+    return f"CAST(least(greatest({c}, 0), {n - 1}) AS BIGINT)"
+
+
+def _axis_range(lo: str, hi: str, origin: float, extent: float,
+                n: int) -> str:
+    """SQL text exploding ``[idx(lo), idx(hi)]`` to one row per index."""
+    return (f"explode(sequence({_axis_idx(lo, origin, extent, n)}, "
+            f"{_axis_idx(hi, origin, extent, n)}))")
 
 
 def with_bbox_cells(df: DataFrame, xmin: str, xmax: str, ymin: str, ymax: str,
@@ -90,50 +99,43 @@ def with_bbox_cells(df: DataFrame, xmin: str, xmax: str, ymin: str, ymax: str,
     removes false positives).
     """
     n = 1 << res
-    nx0 = _axis_idx(xmin, 180.0, 360.0, n)
-    nx1 = _axis_idx(xmax, 180.0, 360.0, n)
-    ny0 = _axis_idx(ymin, 90.0, 180.0, n)
-    ny1 = _axis_idx(ymax, 90.0, 180.0, n)
     return (
-        df.withColumn("_nx", F.explode(F.sequence(nx0, nx1)))
-        .withColumn("_ny", F.explode(F.sequence(ny0, ny1)))
-        .withColumn(
-            out,
-            F.lit(res).cast("long") * F.lit(_RES_SHIFT)
-            + F.col("_nx") * F.lit(_X_SHIFT) + F.col("_ny"),
-        )
+        df.withColumn("_nx", F.expr(_axis_range(xmin, xmax, 180.0, 360.0, n)))
+        .withColumn("_ny", F.expr(_axis_range(ymin, ymax, 90.0, 180.0, n)))
+        .withColumn(out, F.expr(f"CAST({res} AS BIGINT) * {_RES_SHIFT}"
+                                f" + _nx * {_X_SHIFT} + _ny"))
         .drop("_nx", "_ny")
     )
 
 
+# The refinement predicates are SQL text: a Python-built Column costs a
+# dozen or more py4j round trips per ``F.col`` or operator, an
+# ``F.expr`` three (NOTES.md).  ``a AND b AND c`` nests to the left,
+# exactly as ``a & b & c`` does.
 def _point_in_bbox(lon: str, lat: str, bxmin: str, bxmax: str,
                    bymin: str, bymax: str) -> Column:
     """Half-open point-in-bbox: min <= p < max (one slot per point)."""
-    return (
-        (F.col(lon) >= F.col(bxmin)) & (F.col(lon) < F.col(bxmax))
-        & (F.col(lat) >= F.col(bymin)) & (F.col(lat) < F.col(bymax))
-    )
+    return F.expr(f"{lon} >= {bxmin} AND {lon} < {bxmax}"
+                  f" AND {lat} >= {bymin} AND {lat} < {bymax}")
 
 
 def _bbox_intersects(a: Iterable[str], b: Iterable[str],
                      strict: bool = True) -> Column:
     """Bbox-bbox overlap: strict (geometrytools.py:82-102) or, with
     ``strict=False``, inclusive (touching bboxes overlap)."""
-    axmin, axmax, aymin, aymax = map(F.col, a)
-    bxmin, bxmax, bymin, bymax = map(F.col, b)
-    gt = operator.gt if strict else operator.ge
-    return (gt(axmax, bxmin) & gt(bxmax, axmin)
-            & gt(aymax, bymin) & gt(bymax, aymin))
+    axmin, axmax, aymin, aymax = a
+    bxmin, bxmax, bymin, bymax = b
+    gt = ">" if strict else ">="
+    return F.expr(f"{axmax} {gt} {bxmin} AND {bxmax} {gt} {axmin}"
+                  f" AND {aymax} {gt} {bymin} AND {bymax} {gt} {aymin}")
 
 
 def _bbox_contains(a: Iterable[str], b: Iterable[str]) -> Column:
     """Strict a-contains-b (geometrytools.py:104-123)."""
     axmin, axmax, aymin, aymax = a
     bxmin, bxmax, bymin, bymax = b
-    return (
-        (F.col(axmin) < F.col(bxmin)) & (F.col(axmax) > F.col(bxmax))
-        & (F.col(aymin) < F.col(bymin)) & (F.col(aymax) > F.col(bymax))
-    )
+    return F.expr(f"{axmin} < {bxmin} AND {axmax} > {bxmax}"
+                  f" AND {aymin} < {bymin} AND {aymax} > {bymax}")
 
 
 def _with_cell_rows(df: DataFrame, box: Iterable[str], res: int,
@@ -142,11 +144,9 @@ def _with_cell_rows(df: DataFrame, box: Iterable[str], res: int,
     first row in ``row0``; a one-column y-range (a point) is not exploded."""
     n = 1 << res
     _, _, ymin, ymax = box
-    df = df.withColumn(row0, _axis_idx(ymin, 90.0, 180.0, n))
-    if ymin == ymax:
-        return df.withColumn("cell_row", F.col(row0))
-    return df.withColumn("cell_row", F.explode(F.sequence(
-        F.col(row0), _axis_idx(ymax, 90.0, 180.0, n))))
+    first = _axis_idx(ymin, 90.0, 180.0, n)
+    rows = first if ymin == ymax else _axis_range(ymin, ymax, 90.0, 180.0, n)
+    return df.selectExpr("*", f"{first} AS {row0}", f"{rows} AS cell_row")
 
 
 def cell_pairs(left: DataFrame, right: DataFrame,
@@ -171,13 +171,13 @@ def cell_pairs(left: DataFrame, right: DataFrame,
     if broadcast:
         rk = F.broadcast(rk)
     elif n_salt:
-        lk = lk.withColumn("_salt", F.pmod(
-            F.xxhash64(*[F.col(c) for c in left_box]), F.lit(n_salt)))
-        rk = rk.withColumn(
-            "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)])))
+        lk = lk.selectExpr("*", f"pmod(xxhash64({', '.join(left_box)}), "
+                                f"{n_salt}) AS _salt")
+        rk = rk.selectExpr("*", "explode(array("
+                           + ", ".join(map(str, range(n_salt))) + ")) AS _salt")
         keys.append("_salt")
-    first_row = F.col("cell_row") == F.greatest("_row0_l", "_row0_r")
-    return (lk.join(rk, keys, "inner").where(on & first_row)
+    return (lk.join(rk, keys, "inner").where(on)
+            .where("cell_row = greatest(_row0_l, _row0_r)")
             .drop(*keys, "_row0_l", "_row0_r"))
 
 

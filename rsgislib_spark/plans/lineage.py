@@ -47,18 +47,22 @@ def lineage_records(images: DataFrame, res: int = DEFAULT_RES,
     All aggregates are exact integers; ``sum_phash`` is the cheap
     content checksum (sums commute, so partitioning cannot change it).
     """
-    return (
-        with_point_cell(images, res=res)
-        .groupBy("cell")
-        # modular sum: overflow-proof at any cell population (the hot
-        # megacity cell would overflow a raw int64 phash sum), still an
-        # order-independent content checksum.
-        .agg(F.count(F.lit(1)).alias("n_rows"),
-             F.sum(F.pmod(F.col("phash"), F.lit(1000003))).alias("sum_phash"),
-             F.min("id").alias("min_id"),
-             F.max("id").alias("max_id"))
-        .withColumn("snapshot_id", F.lit(snapshot_id).cast("long"))
-    )
+    return _cell_records(with_point_cell(images, res=res), snapshot_id)
+
+
+def _cell_records(keyed: DataFrame, snapshot_id: int) -> DataFrame:
+    """:func:`lineage_records` of rows already keyed by ``cell``.  The
+    aggregate is SQL text: each Python-built Column costs a dozen or
+    more py4j round trips, an ``F.expr`` three (NOTES.md)."""
+    # modular sum: overflow-proof at any cell population (the hot
+    # megacity cell would overflow a raw int64 phash sum), still an
+    # order-independent content checksum.
+    return keyed.groupBy("cell").agg(
+        F.expr("count(1) AS n_rows"),
+        F.expr("sum(pmod(phash, 1000003)) AS sum_phash"),
+        F.expr("min(id) AS min_id"),
+        F.expr("max(id) AS max_id"),
+        F.expr(f"CAST({int(snapshot_id)} AS BIGINT) AS snapshot_id"))
 
 
 #: the lineage table as ``lineage_records`` writes it; declared, so the
@@ -75,8 +79,9 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return jvm, p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
-def completed_cells(spark: SparkSession, lineage_path: str) -> DataFrame:
-    """Cells already recorded as done (empty frame if no lineage yet).
+def _lineage_cells(spark: SparkSession, lineage_path: str) -> DataFrame:
+    """The ``cell`` column of the lineage table, one row per lineage
+    record (empty frame if no lineage yet).
 
     Existence is checked through the path's Hadoop ``FileSystem``, like
     the commit's delete: a local ``os.path`` check is False for any URI
@@ -84,8 +89,14 @@ def completed_cells(spark: SparkSession, lineage_path: str) -> DataFrame:
     _, fs, p = _hadoop_fs(spark, lineage_path)
     if fs.exists(p):
         return spark.read.schema(_LINEAGE_SCHEMA).parquet(lineage_path) \
-            .select("cell").distinct()
-    return spark.range(0).select(F.col("id").alias("cell"))
+            .select("cell")
+    return spark.range(0).selectExpr("id AS cell")
+
+
+def completed_cells(spark: SparkSession, lineage_path: str) -> DataFrame:
+    """Cells already recorded as done, one row per cell (empty frame if
+    no lineage yet)."""
+    return _lineage_cells(spark, lineage_path).distinct()
 
 
 def _cell_dirs(jvm, fs, data_p) -> set[int]:
@@ -111,19 +122,34 @@ def run_resumable(images: DataFrame, out_dir: str, process,
     duplicated); the matching lineage rows are appended under
     ``{out_dir}/lineage`` *after* the data commit.
     """
-    spark = images.sparkSession
+    # A left-anti join ignores duplicate keys on its right side, so the
+    # lineage needs no ``distinct`` (and its shuffle).  ``pending`` is
+    # computed once: a local checkpoint (NOTES.md lesson 9) feeds the
+    # cell list, ``process`` and the lineage write, and never enters the
+    # CacheManager.  Its blocks are freed on the way out, failed commit
+    # or not, rather than at a JVM GC after the last reference goes, and
+    # the call waits for their removal, so none of it runs on into the
+    # next call.
+    lineage_path = os.path.join(out_dir, "lineage")
+    pending = with_point_cell(images, res=res).join(
+        _lineage_cells(images.sparkSession, lineage_path), "cell",
+        "left_anti").localCheckpoint(eager=False)
+    try:
+        return _commit(pending, out_dir, process, snapshot_id)
+    finally:
+        pending._jdf.queryExecution().logical().rdd().unpersist(True)
+
+
+def _commit(pending: DataFrame, out_dir: str, process,
+            snapshot_id: int) -> int:
+    """Write ``process(pending)`` and then its lineage rows; returns the
+    number of pending cells."""
+    spark = pending.sparkSession
     lineage_path = os.path.join(out_dir, "lineage")
     data_path = os.path.join(out_dir, "data")
-
-    keyed = with_point_cell(images, res=res)
-    done = completed_cells(spark, lineage_path)
-    pending = keyed.join(done, "cell", "left_anti")
-
-    todo = lineage_records(pending.drop("cell"), res=res,
-                           snapshot_id=snapshot_id).persist()
-    n_cells = todo.count()
-    if n_cells == 0:
-        todo.unpersist()
+    todo = _cell_records(pending, snapshot_id)
+    cells = {row.cell for row in todo.select("cell").collect()}
+    if not cells:
         return 0
 
     # dynamic overwrite only replaces partitions PRESENT in this run's
@@ -145,8 +171,7 @@ def run_resumable(images: DataFrame, out_dir: str, process,
     # a constant number of py4j calls rather than one per pending cell.
     jvm, fs, data_p = _hadoop_fs(spark, data_path)
     if fs.exists(data_p):
-        stale = _cell_dirs(jvm, fs, data_p) & {
-            row.cell for row in todo.select("cell").collect()}
+        stale = _cell_dirs(jvm, fs, data_p) & cells
         for cell in sorted(stale):
             fs.delete(jvm.org.apache.hadoop.fs.Path(data_path,
                                                     f"cell={cell}"), True)
@@ -162,5 +187,4 @@ def run_resumable(images: DataFrame, out_dir: str, process,
     finally:
         spark.conf.set(mode_key, prev)
     todo.write.mode("append").parquet(lineage_path)
-    todo.unpersist()
-    return int(n_cells)
+    return len(cells)

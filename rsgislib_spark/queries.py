@@ -288,10 +288,10 @@ def q_knn_classify(spark, sf_dir) -> DataFrame:
     img = _images(spark, sf_dir, with_footprint=False) \
         .withColumn("cls", F.col("id") % 5)
     qpts = synth.synth_qpoints(spark, sf_dir)
-    # the images view is 1:1 with part.parquet, whose (cached) metadata
-    # count _px_partitions already tracks — saves the density-count job
+    # the images view is 1:1 with part.parquet, whose footer row count
+    # _px_partitions already reads: saves the density-count job
     out = knn_classify(qpts, img, k=5,
-                       match_count=_npart_count(spark, sf_dir))
+                       match_count=_npart_count(sf_dir))
     return out.select("qid", F.col("pred_cls").cast("long").alias("pred_cls"),
                       F.col("n_votes").cast("long").alias("n_votes"))
 
@@ -328,19 +328,14 @@ def q_pixel_stats(spark, sf_dir) -> DataFrame:
                                    "min_pix", "max_pix", "mean_pix")
 
 
-#: cached part.parquet row counts per sf_dir (metadata-only read)
-_NPART_CACHE: dict = {}
+def _npart_count(sf_dir) -> int:
+    """part.parquet's row count, from the file footer: no Spark job, and
+    read afresh on every call, so a rewritten table is counted anew."""
+    import os
 
+    import pyarrow.parquet as pq
 
-def _npart_count(spark, sf_dir) -> int:
-    """Cached part.parquet row count (parquet metadata only)."""
-    import os as _os
-
-    key = (sf_dir,)
-    if key not in _NPART_CACHE:
-        _NPART_CACHE[key] = spark.read.parquet(
-            _os.path.join(sf_dir, "part.parquet")).count()
-    return _NPART_CACHE[key]
+    return pq.read_metadata(os.path.join(sf_dir, "part.parquet")).num_rows
 
 
 def _px_partitions(spark, sf_dir, mod: int,
@@ -367,7 +362,7 @@ def _px_partitions(spark, sf_dir, mod: int,
     """
     import math as _m
 
-    n_sub = max(1, _npart_count(spark, sf_dir) // max(1, mod))
+    n_sub = max(1, _npart_count(sf_dir) // max(1, mod))
     dp = spark.sparkContext.defaultParallelism
     return max(1, min(_m.ceil(n_sub / rows_per_task), 3 * dp))
 

@@ -199,3 +199,36 @@ def test_repeated_knn_closest_does_full_work(spark, sf_dir):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert jobs[0] > 0 and jobs[1] == jobs[0], jobs
+
+
+def test_repeated_knn_classify_does_full_work(spark, sf_dir):
+    """An identical repeat of q_knn_classify launches as many jobs as the
+    first call: the part row count hint is read afresh, not memoised."""
+    from rsgislib_spark.queries import q_knn_classify
+
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    jobs = []
+    try:
+        for group in ("knn_classify_first", "knn_classify_repeat"):
+            sc.setJobGroup(group, "q_knn_classify")
+            q_knn_classify(spark, sf_dir).collect()
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs[0] > 0 and jobs[1] == jobs[0], jobs
+
+
+def test_npart_count_follows_rewritten_table(tmp_path):
+    """The part row count hint is the file's current row count: rewriting
+    part.parquet changes it, and reading it needs no Spark session."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rsgislib_spark.queries import _npart_count
+
+    path = str(tmp_path / "part.parquet")
+    for n in (7, 19):
+        pq.write_table(pa.table({"p_partkey": pa.array(range(n), pa.int64())}),
+                       path)
+        assert _npart_count(str(tmp_path)) == n

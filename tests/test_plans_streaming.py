@@ -80,6 +80,88 @@ def test_run_resumable_resumes_on_uri_out_dir(spark, sf_dir, tmp_path):
     assert dict(lineage.dtypes) == dict(declared.dtypes)
 
 
+def _committed(spark, sf_dir, out):
+    """The sf table committed once under ``out``; returns (images,
+    process, cells committed)."""
+    from rsgislib_spark import synth
+    from rsgislib_spark.plans.lineage import run_resumable
+
+    img = synth.synth_images(spark, sf_dir, with_footprint=False)
+
+    def process(df):
+        return df.select("cell", "image_id", "phash")
+
+    return img, process, run_resumable(img, out, process)
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_failed_commit_leaves_no_cached_frame(spark, sf_dir, tmp_path):
+    """A commit whose ``process`` raises leaves nothing in the
+    CacheManager and no persisted RDD: the pending slice is a local
+    checkpoint, freed on the way out, not a persisted frame that only
+    the success path unpersists."""
+    from rsgislib_spark import synth
+    from rsgislib_spark.plans.lineage import run_resumable
+
+    img = synth.synth_images(spark, sf_dir, with_footprint=False)
+
+    def crash(df):
+        raise RuntimeError("process failed")
+
+    spark.catalog.clearCache()
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="process failed"):
+        run_resumable(img, str(tmp_path / "job"), crash)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert _persistent_rdds(spark) <= before
+
+
+def test_idle_resume_job_count(spark, sf_dir, tmp_path):
+    """An idle resume over a fully committed out_dir runs at most 2 Spark
+    jobs: the lineage broadcast and one collect of the pending cells,
+    whose scan materialises the pending slice."""
+    from rsgislib_spark.plans.lineage import run_resumable
+
+    out = str(tmp_path / "job")
+    before = _persistent_rdds(spark)
+    img, process, n1 = _committed(spark, sf_dir, out)
+    assert n1 > 0
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("idle_resume", "idle_resume")
+        assert run_resumable(img, out, process) == 0
+        jobs = sc.statusTracker().getJobIdsForGroup("idle_resume")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < len(jobs) <= 2, jobs
+    # neither run leaves its pending slice's blocks behind
+    assert _persistent_rdds(spark) <= before
+
+
+def test_resume_ignores_duplicated_lineage_cell(spark, sf_dir, tmp_path):
+    """A lineage holding one cell's record twice (what a ``file://``
+    out_dir wrote before existence went through the Hadoop FileSystem)
+    still resumes with nothing pending, and ``completed_cells`` lists
+    that cell once."""
+    from rsgislib_spark.plans.lineage import completed_cells, run_resumable
+
+    out = str(tmp_path / "job")
+    img, process, n1 = _committed(spark, sf_dir, out)
+    lineage = os.path.join(out, "lineage")
+    first = spark.read.parquet(lineage).orderBy("cell").limit(1)
+    cell = first.first().cell
+    first.write.mode("append").parquet(lineage)
+    assert spark.read.parquet(lineage).where(F.col("cell") == cell).count() == 2
+
+    assert run_resumable(img, out, process) == 0
+    done = completed_cells(spark, lineage)
+    assert done.count() == n1
+    assert done.where(F.col("cell") == cell).count() == 1
+
+
 def test_stream_append_withholds_open_windows(spark, sf_dir):
     from rsgislib_spark.streaming.events import (
         stream_hourly_counts, stream_hourly_counts_append)
