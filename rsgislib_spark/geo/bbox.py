@@ -1,4 +1,4 @@
-"""Bbox algebra with rsgislib semantics, numpy-vectorized.
+"""Bbox algebra with rsgislib semantics.
 
 Bboxes are ``(xMin, xMax, yMin, yMax)`` in that order, matching the
 reference throughout (reference: python/rsgislib/tools/geometrytools.py).
@@ -10,15 +10,12 @@ Important semantic details preserved:
   (geometrytools.py:160-189);
 * ``buffer_bbox`` expands all four edges (geometrytools.py:210-224).
 
-Scalar helpers return plain python values; the ``*_arr`` forms broadcast
-over numpy arrays for use in Arrow batches.  The same predicates are also
+Scalar helpers return plain python values.  The same predicates are also
 emitted as Catalyst column expressions by the operators layer (they are
 plain comparisons, so Catalyst handles them natively).
 """
 
 from __future__ import annotations
-
-import numpy as np
 
 __all__ = [
     "do_bboxes_intersect",
@@ -27,9 +24,6 @@ __all__ = [
     "find_bbox_union",
     "buffer_bbox",
     "calc_bbox_area",
-    "bbox_grid",
-    "intersects_arr",
-    "contains_arr",
 ]
 
 
@@ -86,46 +80,6 @@ def buffer_bbox(bbox, buf):
 def calc_bbox_area(bbox) -> float:
     """Width x height (geometrytools.py:126-136)."""
     return (bbox[1] - bbox[0]) * (bbox[3] - bbox[2])
-
-
-def bbox_grid(bbox, x_size: float, y_size: float):
-    """Split a bbox into a grid of x_size-by-y_size bboxes (row list).
-
-    Mirrors ``get_bbox_grid`` (geometrytools.py:456-506): whole cells from
-    the min corner; a partial trailing column/row is clipped to the bbox.
-    Returns list of (xmin, xmax, ymin, ymax).
-    """
-    out = []
-    y = bbox[2]
-    while y < bbox[3]:
-        y_top = min(y + y_size, bbox[3])
-        x = bbox[0]
-        while x < bbox[1]:
-            x_rgt = min(x + x_size, bbox[1])
-            out.append((x, x_rgt, y, y_top))
-            x += x_size
-        y += y_size
-    return out
-
-
-def intersects_arr(axmin, axmax, aymin, aymax, bxmin, bxmax, bymin, bymax):
-    """Vectorized strict bbox-overlap predicate (broadcasts)."""
-    return (
-        (np.asarray(axmax) > np.asarray(bxmin))
-        & (np.asarray(bxmax) > np.asarray(axmin))
-        & (np.asarray(aymax) > np.asarray(bymin))
-        & (np.asarray(bymax) > np.asarray(aymin))
-    )
-
-
-def contains_arr(axmin, axmax, aymin, aymax, bxmin, bxmax, bymin, bymax):
-    """Vectorized strict a-contains-b predicate (broadcasts)."""
-    return (
-        (np.asarray(axmin) < np.asarray(bxmin))
-        & (np.asarray(axmax) > np.asarray(bxmax))
-        & (np.asarray(aymin) < np.asarray(bymin))
-        & (np.asarray(aymax) > np.asarray(bymax))
-    )
 
 
 def extent_on_grid_sql(xmin: str, xmax: str, ymin: str, ymax: str,

@@ -32,9 +32,7 @@ __all__ = [
     "cell_of_point",
     "cell_decode",
     "cell_bounds",
-    "cell_center",
     "k_ring",
-    "k_ring_lists",
     "polyfill_bbox",
     "parent",
     "cell_sql_expr",
@@ -101,12 +99,6 @@ def cell_bounds(cell):
     return lonmin, lonmin + w, latmin, latmin + h
 
 
-def cell_center(cell):
-    """cell id -> (lon, lat) center arrays."""
-    lonmin, lonmax, latmin, latmax = cell_bounds(cell)
-    return (lonmin + lonmax) / 2.0, (latmin + latmax) / 2.0
-
-
 def parent(cell, parent_res: int):
     """Coarser-resolution ancestor cell id."""
     res, nx, ny = cell_decode(cell)
@@ -137,29 +129,6 @@ def k_ring(cell: int, k: int = 1):
     keep = (ys >= 0) & (ys < n)
     cells = np.int64(res) * _RES_SHIFT + xs[keep].astype(np.int64) * _X_SHIFT + ys[keep].astype(np.int64)
     return np.unique(cells)
-
-
-def k_ring_lists(cells, k: int = 1):
-    """Vectorized k_ring for an int64 array -> list of int64 arrays.
-
-    Used to build explode()-ready neighbour lists inside Arrow UDFs for
-    the kNN ring-expansion join (SURVEY.md §2.3 match_closest_vec_pts).
-    """
-    cells = np.asarray(cells, np.int64)
-    res, nx, ny = cell_decode(cells)
-    out = []
-    side = 2 * k + 1
-    dx, dy = np.meshgrid(np.arange(-k, k + 1), np.arange(-k, k + 1))
-    dx = dx.ravel()
-    dy = dy.ravel()
-    for i in range(cells.shape[0]):
-        n = _n(int(res[i]))
-        xs = (int(nx[i]) + dx) % n
-        ys = int(ny[i]) + dy
-        keep = (ys >= 0) & (ys < n)
-        cc = np.int64(res[i]) * _RES_SHIFT + xs[keep].astype(np.int64) * _X_SHIFT + ys[keep].astype(np.int64)
-        out.append(np.unique(cc))
-    return out
 
 
 def polyfill_bbox(xmin: float, xmax: float, ymin: float, ymax: float,

@@ -30,7 +30,6 @@ from dataclasses import dataclass
 
 __all__ = [
     "utm_forward_sql",
-    "utm_zone",
     "central_meridian_deg",
     "TMParams",
     "tm_forward_sql",
@@ -144,10 +143,6 @@ def inline_steps(steps, finals):
             f = f.replace(k, v)
         out.append(f)
     return out
-
-
-def utm_zone(lon_deg: float) -> int:
-    return int(math.floor((lon_deg + 180.0) / 6.0)) % 60 + 1
 
 
 def central_meridian_deg(zone: int) -> float:

@@ -38,6 +38,7 @@ from pyspark.sql.types import (BooleanType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
 from ..functions import codec
+from ..functions.groupmode import group_mode
 
 __all__ = [
     "band_math_stats",
@@ -291,21 +292,9 @@ def window_rank_stats(images: DataFrame, size: int,
             return win.min(axis=1)
         if stat == "max":
             return win.max(axis=1)
-        # mode: per-row run lengths over the sorted window, argmax of
-        # (count, -value) — fully vectorized, bounded-domain (< 2048)
-        s = np.sort(win, axis=1)
-        m = s.shape[0]
-        pos = np.broadcast_to(np.arange(kk, dtype=np.int64), (m, kk))
-        isnew = np.ones((m, kk), dtype=bool)
-        isnew[:, 1:] = s[:, 1:] != s[:, :-1]
-        first = np.maximum.accumulate(np.where(isnew, pos, 0), axis=1)
-        isend = np.ones((m, kk), dtype=bool)
-        isend[:, :-1] = isnew[:, 1:]
-        last = np.minimum.accumulate(
-            np.where(isend, pos, kk - 1)[:, ::-1], axis=1)[:, ::-1]
-        cnt = last - first + 1
-        key = cnt * 2048 + (2047 - s)
-        return 2047 - (key.max(axis=1) % 2048)
+        # mode: one group per window row
+        m = win.shape[0]
+        return group_mode(np.repeat(np.arange(m), kk), win.ravel(), m - 1)
 
     return _plane_agg(images, fn).withColumnRenamed("n_pix", "n_interior") \
         .withColumnRenamed("sum_pix", f"sum_{stat}") \

@@ -19,13 +19,15 @@ Spark shape — partial+final composite, never per-pixel rows:
    row per batch, not per image, not per pixel);
 2. a single tiny ``applyInArrow`` merge folds the <=#partitions partials.
 
-Every behaviour is encoded as an order-preserving int64 so all merges are
-plain max/min — associative, commutative, partition-order independent:
+Every behaviour is a plain max/min or a lexicographic max over a tuple
+of int64 fields, so every merge is associative, commutative and
+partition-order independent, and no pixel value or image id has an
+encoding limit:
 
-    last-wins  : max(id * 2048 + v)        (input order = id, v < 2048)
+    last-wins  : max((id, v))              (input order = id)
     keep-min   : min(v)
-    keep-max   : max(v)
-    argmax idx : max(v * 2^40 + id)        (value first, id tiebreak)
+    keep-max   : max((v, id))[0]
+    argmax idx : max((v, id))[1]           (value first, id tiebreak)
 
 At cluster scale the output window is tiled (one accumulator per output
 tile — the ``groupBy(tile_id)`` in SURVEY.md §2.4) so no single reducer
@@ -40,13 +42,15 @@ from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
                                StructType)
 
 from ..functions import codec
+from ..functions.groupmode import pair_counts
 
 __all__ = ["mosaic_window", "mosaic_thresh_window", "mosaic_mode_window",
            "composite_max_index_window", "pixel_trend_window"]
 
-_ENC_LAST = 2048                 # id * 2048 + v
-_ENC_IDX = 1 << 40               # v * 2^40 + id
 _BIG = np.iinfo(np.int64).max
+_LOW = np.iinfo(np.int64).min
+#: the fields of a composite's ``(idx, id, v)`` winner
+_BEST = ("best_idx", "best_id", "best_v")
 
 #: columns of a candidate image: the payload plus its id and bbox
 _CAND_COLS = codec.IMAGE_COLS + ("id", "xmin", "xmax", "ymin", "ymax")
@@ -90,42 +94,67 @@ def _window_images(images, x0, y0, npx, npy, res):
     return cand, hits
 
 
+def _lexmax(a, b):
+    """Lexicographic max of two field stacks, per element: ``a`` is an
+    ``(nfields, ...)`` int64 array, ``b`` that many arrays or scalars;
+    where ``b`` is larger on the first field that differs, every field
+    comes from ``b``."""
+    win = np.zeros(a.shape[1:], dtype=bool)
+    tie = np.ones(a.shape[1:], dtype=bool)
+    for x, y in zip(a, b):
+        win |= tie & (y > x)
+        tie &= y == x
+    return np.stack([np.where(win, y, x) for x, y in zip(a, b)])
+
+
+def _keep_max(acc, ix, *fields):
+    """Fold one image's ``fields`` into the tuple accumulator ``acc`` at
+    the output cells ``ix``."""
+    at = (slice(None), *ix)
+    acc[at] = _lexmax(acc[at], fields)
+
+
 def _composite(images, x0, y0, npx, npy, res, accs, update, finish,
                out_schema):
-    """The window composite plan shared by every order-encoded mosaic.
+    """The window composite plan shared by every mosaic but the mode.
 
     ``accs`` maps each int64 per-pixel accumulator to ``(fill, fold)``,
-    where ``fold`` (``np.add``/``np.maximum``/``np.minimum``) is
-    associative and commutative.  Each Arrow batch starts from the
-    fills, calls ``update(acc, iid, plane, ix, pick)`` per image hit
-    (``acc`` holds ``(npy, npx)`` views) and yields ONE partial row; one
-    grouped ``applyInArrow`` folds the partials and returns
-    ``finish(tot)``, a dict of ``out_schema`` columns.  The Arrow stage
-    is named ``mosaic_<update>_partials``."""
+    where ``fold`` is associative and commutative: ``np.add``,
+    ``np.maximum`` or ``np.minimum`` for a scalar fill, :func:`_lexmax`
+    for a tuple fill, whose accumulator holds one ``(npx * npy)`` array
+    per field, stacked.  Each Arrow batch starts from the fills, calls
+    ``update(acc, iid, plane, ix, pick)`` per image hit (``acc`` holds
+    ``(npy, npx)`` views, after the field axis of a tuple accumulator)
+    and yields ONE partial row; one grouped ``applyInArrow`` folds the
+    partials the same way and returns ``finish(tot)``, a dict of
+    ``out_schema`` columns.  The Arrow stage is named
+    ``mosaic_<update>_partials``."""
     cand, hits = _window_images(images, x0, y0, npx, npy, res)
     n = npx * npy
     partial_schema = _schema(
         "window_id", *((k, ArrayType(LongType())) for k in accs))
 
     def fresh():
-        return {k: np.full(n, fill, np.int64)
+        return {k: np.repeat(np.asarray(fill, np.int64)[..., None], n, -1)
                 for k, (fill, _) in accs.items()}
 
     def partials(batches):
         for batch in batches:
             acc = fresh()
-            views = {k: v.reshape(npy, npx) for k, v in acc.items()}
+            views = {k: v.reshape(*v.shape[:-1], npy, npx)
+                     for k, v in acc.items()}
             for hit in hits(batch):
                 update(views, *hit)
             yield codec.to_batch(
-                {"window_id": [0], **{k: [v] for k, v in acc.items()}},
+                {"window_id": [0],
+                 **{k: [v.ravel()] for k, v in acc.items()}},
                 partial_schema)
 
     def merge(table):
         tot = fresh()
         for k, (_, fold) in accs.items():
             for part in table.column(k).to_numpy(zero_copy_only=False):
-                tot[k] = fold(tot[k], part)
+                tot[k] = fold(tot[k], part.reshape(tot[k].shape))
         return codec.to_table(finish(tot), out_schema)
 
     partials.__name__ = partials.__qualname__ = \
@@ -155,24 +184,20 @@ def mosaic_window(images: DataFrame, x0: float, y0: float,
     def window(acc, iid, arr, ix, pick):
         v = arr[pick].astype(np.int64)
         acc["cnt"][ix] += 1
-        acc["enc_last"][ix] = np.maximum(acc["enc_last"][ix],
-                                         iid * _ENC_LAST + v)
+        _keep_max(acc["last"], ix, iid, v)
         acc["v_min"][ix] = np.minimum(acc["v_min"][ix], v)
-        acc["v_max"][ix] = np.maximum(acc["v_max"][ix], v)
-        acc["enc_idx"][ix] = np.maximum(acc["enc_idx"][ix],
-                                        v * _ENC_IDX + iid)
+        _keep_max(acc["top"], ix, v, iid)
 
     def finish(tot):
         covered = np.nonzero(tot["cnt"] > 0)[0]
         return {**_pixels(covered, npx, tot["cnt"]),
-                "v_last": tot["enc_last"][covered] % _ENC_LAST,
+                "v_last": tot["last"][1, covered],
                 "v_min": tot["v_min"][covered],
-                "v_max": tot["v_max"][covered],
-                "idx_max": tot["enc_idx"][covered] % _ENC_IDX}
+                "v_max": tot["top"][0, covered],
+                "idx_max": tot["top"][1, covered]}
 
-    accs = {"cnt": (0, np.add), "enc_last": (-1, np.maximum),
-            "v_min": (_BIG, np.minimum), "v_max": (-1, np.maximum),
-            "enc_idx": (-1, np.maximum)}
+    accs = {"cnt": (0, np.add), "last": ((_LOW, _LOW), _lexmax),
+            "v_min": (_BIG, np.minimum), "top": ((_LOW, _LOW), _lexmax)}
     return _composite(images, x0, y0, npx, npy, res, accs, window, finish,
                       _schema("px", "py", "n_imgs", "v_last", "v_min",
                               "v_max", "idx_max"))
@@ -188,7 +213,7 @@ def mosaic_thresh_window(images: DataFrame, x0: float, y0: float,
     contributes iff ``lower < v < upper`` (STRICT both sides, :772);
     within the valid set the overlap behaviours are the usual 0/1/2
     (last-wins / min / max), all resolved here in one pass with the
-    same order-encoded integer partials as :func:`mosaic_window`.
+    same lexicographic-max partials as :func:`mosaic_window`.
     Output pixels with no valid contribution are absent (the reference
     leaves the background value there).
     """
@@ -197,8 +222,8 @@ def mosaic_thresh_window(images: DataFrame, x0: float, y0: float,
         v = arr[pick].astype(np.int64)
         ok = (v > lower) & (v < upper)   # strict, the reference rule
         acc["cnt"][ix] += ok
-        acc["enc_last"][ix] = np.maximum(
-            acc["enc_last"][ix], np.where(ok, iid * _ENC_LAST + v, -1))
+        _keep_max(acc["last"], ix, np.where(ok, iid, _LOW),
+                  np.where(ok, v, _LOW))
         acc["v_min"][ix] = np.minimum(acc["v_min"][ix],
                                       np.where(ok, v, _BIG))
         acc["v_max"][ix] = np.maximum(acc["v_max"][ix],
@@ -207,11 +232,11 @@ def mosaic_thresh_window(images: DataFrame, x0: float, y0: float,
     def finish(tot):
         covered = np.nonzero(tot["cnt"] > 0)[0]
         return {**_pixels(covered, npx, tot["cnt"]),
-                "v_last": tot["enc_last"][covered] % _ENC_LAST,
+                "v_last": tot["last"][1, covered],
                 "v_min": tot["v_min"][covered],
                 "v_max": tot["v_max"][covered]}
 
-    accs = {"cnt": (0, np.add), "enc_last": (-1, np.maximum),
+    accs = {"cnt": (0, np.add), "last": ((_LOW, _LOW), _lexmax),
             "v_min": (_BIG, np.minimum), "v_max": (-1, np.maximum)}
     return _composite(images, x0, y0, npx, npy, res, accs, thresh_window,
                       finish, _schema("px", "py", "n_imgs", "v_last",
@@ -261,19 +286,6 @@ def pixel_trend_window(images: DataFrame, x0: float, y0: float,
                               ("intercept", DoubleType())))
 
 
-#: composite encoding limits: |index| < 2^21, id < 2^21, v < 2^11
-_CMI_IDX_OFF = 1 << 21
-_CMI_ID_SHIFT = 1 << 32
-_CMI_V_SHIFT = 1 << 11
-
-
-def _best_cols(e):
-    """Decode ``(idx + 2^21) * 2^32 + id * 2^11 + v`` encodings."""
-    return {"best_idx": e // _CMI_ID_SHIFT - _CMI_IDX_OFF,
-            "best_id": (e % _CMI_ID_SHIFT) // _CMI_V_SHIFT,
-            "best_v": e % _CMI_V_SHIFT}
-
-
 def composite_max_index_window(images: DataFrame, x0: float, y0: float,
                                npx: int, npy: int, res: float) -> DataFrame:
     """Max-index composite: per output pixel, keep the source pixel whose
@@ -283,16 +295,11 @@ def composite_max_index_window(images: DataFrame, x0: float, y0: float,
     build the index raster, then ``create_ref_img_composite_img`` to
     gather pixels by it (python/src/imageutils.cpp method table; the
     classic max-NDVI compositing workflow) — fuses into a single
-    order-encoded max:
-
-        enc = (idx + 2^21) * 2^32 + id * 2^11 + v
-
-    which is associative/commutative, so partials merge exactly like
-    :func:`mosaic_window`'s.  Index = ``floor((b2-b1)*1e6/(b2+b1+1))``
-    (|idx| <= 1e6 < 2^21; b2 = mirrored plane — the engine's standing
-    two-band stand-in, see imagemath.index_scaled_stats).
-    Encoding limits: ~2M distinct image ids and 11-bit pixel values;
-    beyond that, widen to a struct max (documented, not needed here).
+    lexicographic max over ``(idx, id, v)``, which is associative and
+    commutative, so partials merge exactly like :func:`mosaic_window`'s.
+    Index = ``floor((b2-b1)*1e6/(b2+b1+1))`` (b2 = mirrored plane — the
+    engine's standing two-band stand-in, see
+    imagemath.index_scaled_stats).
     """
 
     def composite_max_index_window(acc, iid, arr, ix, pick):
@@ -300,26 +307,21 @@ def composite_max_index_window(images: DataFrame, x0: float, y0: float,
         b2 = b1[:, ::-1]
         idx_plane = np.floor(
             (b2 - b1) * 1000000.0 / (b2 + b1 + 1)).astype(np.int64)
-        e_new = ((idx_plane[pick] + _CMI_IDX_OFF) * _CMI_ID_SHIFT
-                 + iid * _CMI_V_SHIFT + b1[pick])
         acc["cnt"][ix] += 1
-        acc["enc"][ix] = np.maximum(acc["enc"][ix], e_new)
+        _keep_max(acc["best"], ix, idx_plane[pick], iid, b1[pick])
 
     def finish(tot):
         covered = np.nonzero(tot["cnt"] > 0)[0]
         return {**_pixels(covered, npx, tot["cnt"]),
-                **_best_cols(tot["enc"][covered])}
+                **dict(zip(_BEST, tot["best"][:, covered]))}
 
-    accs = {"cnt": (0, np.add), "enc": (-1, np.maximum)}
+    accs = {"cnt": (0, np.add), "best": ((_LOW,) * 3, _lexmax)}
     return _composite(images, x0, y0, npx, npy, res, accs,
                       composite_max_index_window, finish,
-                      _schema("px", "py", "n_imgs", "best_idx", "best_id",
-                              "best_v"))
+                      _schema("px", "py", "n_imgs", *_BEST))
 
 
-_MODE_PARTIAL_SCHEMA = _schema(
-    "code",     # flat_pixel * 2048 + value
-    "cnt")
+_MODE_PARTIAL_SCHEMA = _schema("flat", "v", "cnt")
 
 
 def mosaic_mode_window(images: DataFrame, x0: float, y0: float,
@@ -329,41 +331,34 @@ def mosaic_mode_window(images: DataFrame, x0: float, y0: float,
     Reference: imagecalc/__init__.py:966 (scipy mode across stacked
     arrays — ties resolve to the smallest value).  Mode needs per-pixel
     value counts, so each Arrow batch pre-aggregates its images into
-    sparse ``(pixel, value) -> count`` partials (np.unique — one row per
-    distinct pair per batch, NOT per pixel-sample); Catalyst sums the
-    partials and an order-encoding max picks the mode:
-
-        argmax(count, tie -> min value) = max(cnt * 2048 + (2047 - v))
+    sparse ``(pixel, value) -> count`` partials (``pair_counts`` — one
+    row per distinct pair per batch, NOT per pixel-sample); Catalyst
+    sums the partials and the struct max ``max((count, -v))`` picks the
+    mode, the smallest value on count ties (as ``utm_zone_mode``).
     """
     cand, hits = _window_images(images, x0, y0, npx, npy, res)
 
     def mosaic_mode_window_partials(batches):
         for batch in batches:
-            codes = [np.zeros(0, np.int64)]
+            flats, vals = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
             for _, arr, (sel_y, sel_x), pick in hits(batch):
-                flat = (sel_y * npx + sel_x).astype(np.int64)
-                codes.append((flat * 2048 + arr[pick]).ravel())
-            uniq, cnt = np.unique(np.concatenate(codes), return_counts=True)
-            yield codec.to_batch({"code": uniq, "cnt": cnt},
+                flats.append((sel_y * npx + sel_x).ravel())
+                vals.append(arr[pick].astype(np.int64).ravel())
+            flat, v, cnt = pair_counts(np.concatenate(flats),
+                                       np.concatenate(vals))
+            yield codec.to_batch({"flat": flat, "v": v, "cnt": cnt},
                                  _MODE_PARTIAL_SCHEMA)
 
-    counts = (
-        cand.mapInArrow(mosaic_mode_window_partials,
-                        schema=_MODE_PARTIAL_SCHEMA)
-        .groupBy("code").agg(F.sum("cnt").alias("n"))
-        .withColumn("flat", (F.col("code") / 2048).cast("long"))
-        .withColumn("v", F.col("code") % 2048)
-    )
+    counts = cand.mapInArrow(mosaic_mode_window_partials,
+                             schema=_MODE_PARTIAL_SCHEMA) \
+        .groupBy("flat", "v").agg(F.sum("cnt").alias("n"))
     return (
         counts.groupBy("flat")
         .agg(F.sum("n").alias("n_imgs"),
-             F.max(F.col("n") * 2048 + (F.lit(2047) - F.col("v")))
-             .alias("_enc"))
+             F.max(F.struct("n", (-F.col("v")).alias("nv"))).alias("b"))
         .select((F.col("flat") % npx).alias("px"),
                 (F.col("flat") / npx).cast("long").alias("py"),
-                "n_imgs",
-                (F.lit(2047) - F.pmod(F.col("_enc"), F.lit(2048)))
-                .alias("mode_v"))
+                "n_imgs", (-F.col("b.nv")).alias("mode_v"))
     )
 
 
@@ -375,12 +370,12 @@ def composite_ndvi_ndwi_window(images: DataFrame, x0: float, y0: float,
     mask (0 nodata / 1 land / 2 water) combined across images with the
     MODE (use_mode=True; binary mode = majority, tie -> land).
 
-    Engine shape: the same one-pass order-encoded max as
+    Engine shape: the same one-pass lexicographic max as
     :func:`composite_max_index_window`, with THREE associative
-    accumulators per pixel — max NDVI encoding, max NDWI encoding and
-    the water vote count (NDWI > 0 per source image).  Band stand-ins:
-    red = plane, nir = horizontal mirror, green = vertical flip (the
-    indices-family convention)."""
+    accumulators per pixel — the ``(ndvi, id, v)`` and ``(ndwi, id, v)``
+    winners and the water vote count (NDWI > 0 per source image).  Band
+    stand-ins: red = plane, nir = horizontal mirror, green = vertical
+    flip (the indices-family convention)."""
 
     def composite_ndvi_ndwi_window(acc, iid, arr, ix, pick):
         red = arr.astype(np.int64)
@@ -391,27 +386,23 @@ def composite_ndvi_ndwi_window(images: DataFrame, x0: float, y0: float,
         ndwi = np.floor((green - nir) * 1000000.0
                         / (green + nir + 1)).astype(np.int64)
         v = red[pick]
-        ev_new = ((ndvi[pick] + _CMI_IDX_OFF) * _CMI_ID_SHIFT
-                  + iid * _CMI_V_SHIFT + v)
-        ew_new = ((ndwi[pick] + _CMI_IDX_OFF) * _CMI_ID_SHIFT
-                  + iid * _CMI_V_SHIFT + v)
         acc["cnt"][ix] += 1
         acc["votes"][ix] += (ndwi[pick] > 0).astype(np.int64)
-        acc["encv"][ix] = np.maximum(acc["encv"][ix], ev_new)
-        acc["encw"][ix] = np.maximum(acc["encw"][ix], ew_new)
+        _keep_max(acc["ndvi"], ix, ndvi[pick], iid, v)
+        _keep_max(acc["ndwi"], ix, ndwi[pick], iid, v)
 
     def finish(tot):
         covered = np.nonzero(tot["cnt"] > 0)[0]
         cnt = tot["cnt"]
         water = 2 * tot["votes"][covered] > cnt[covered]
-        e = np.where(water, tot["encw"][covered], tot["encv"][covered])
+        best = np.where(water, tot["ndwi"][:, covered],
+                        tot["ndvi"][:, covered])
         return {**_pixels(covered, npx, cnt),
                 "lw_mask": np.where(water, 2, 1).astype(np.int64),
-                **_best_cols(e)}
+                **dict(zip(_BEST, best))}
 
     accs = {"cnt": (0, np.add), "votes": (0, np.add),
-            "encv": (-1, np.maximum), "encw": (-1, np.maximum)}
+            "ndvi": ((_LOW,) * 3, _lexmax), "ndwi": ((_LOW,) * 3, _lexmax)}
     return _composite(images, x0, y0, npx, npy, res, accs,
                       composite_ndvi_ndwi_window, finish,
-                      _schema("px", "py", "n_imgs", "lw_mask", "best_idx",
-                              "best_id", "best_v"))
+                      _schema("px", "py", "n_imgs", "lw_mask", *_BEST))

@@ -57,6 +57,7 @@ from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
 from ..functions import codec
+from ..functions.groupmode import group_mode
 
 __all__ = ["rat_table", "collapse_rat", "merge_small_clumps",
            "clump_geo_stats", "clump_border_stats", "clump_cat_stats",
@@ -77,28 +78,6 @@ _RAT_SCHEMA = StructType([
     StructField("min_neigh", LongType()),
     StructField("max_neigh", LongType()),
 ])
-
-
-def _clump_mode(ls: np.ndarray, vs: np.ndarray, n: int) -> np.ndarray:
-    """Per-clump modal value, ties -> smallest value (reference order)."""
-    order = np.lexsort((vs, ls))
-    sl, sv = ls[order], vs[order]
-    # run-length encode (clump, value) pairs
-    new = np.empty(sl.shape, dtype=bool)
-    new[0] = True
-    new[1:] = (sl[1:] != sl[:-1]) | (sv[1:] != sv[:-1])
-    starts = np.nonzero(new)[0]
-    counts = np.diff(np.append(starts, sl.shape[0]))
-    gl, gv = sl[starts], sv[starts]
-    # sort by (clump, -count, value): first row per clump is the mode
-    # with smallest-value tie-break (the reference's ascending-histogram
-    # first-maximum order)
-    mode = np.zeros(n + 1, dtype=np.int64)
-    sel = np.lexsort((gv, -counts, gl))
-    first = np.ones(sel.shape, dtype=bool)
-    first[1:] = gl[sel][1:] != gl[sel][:-1]
-    mode[gl[sel][first]] = gv[sel][first]
-    return mode
 
 
 def _clump_percentiles(ls: np.ndarray, vs: np.ndarray, n: int,
@@ -205,7 +184,7 @@ def rat_table(images: DataFrame, quant: int = 128,
         ls = lab[ys, xs]
         vs = arr[ys, xs]
         npix = np.bincount(ls, minlength=n + 1)[1:]
-        mode = _clump_mode(ls, vs, n)[1:]
+        mode = group_mode(ls, vs, n)[1:]
         pvals = _clump_percentiles(ls, vs, n, pcts)
         n_ng, mn_ng, mx_ng = _clump_neighbours(lab, n)
         out["image_id"].extend([image_id] * n)

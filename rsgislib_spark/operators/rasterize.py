@@ -249,8 +249,11 @@ def clump_stats_tiled(images: DataFrame, threshold: int,
                                  _SEAM_H + y0 * (1 << 21) + x0 + x, 1, 0)
             yield codec.to_batch(out, _TILED_SCHEMA)
 
+    # the inputs the rounds re-read are local checkpoints, not persisted
+    # frames: nothing enters the CacheManager, so a raise leaves none
+    # behind (NOTES lesson 9)
     rows = tiles.mapInArrow(rasterize_clump_stats_tiled,
-                            schema=_TILED_SCHEMA).persist()
+                            schema=_TILED_SCHEMA).localCheckpoint(eager=False)
     comps = rows.where(F.col("kind") == 0).select("image_id", "lab", "n")
     borders = rows.where(F.col("kind") == 1).select("image_id", "lab",
                                                     "k", "side")
@@ -263,11 +266,13 @@ def clump_stats_tiled(images: DataFrame, threshold: int,
         .select("image_id", "lab_a", "lab_b").distinct()
     edges_sym = edges.unionByName(
         edges.select("image_id", F.col("lab_b").alias("lab_a"),
-                     F.col("lab_a").alias("lab_b"))).persist()
+                     F.col("lab_a").alias("lab_b"))) \
+        .localCheckpoint(eager=False)
 
     # iterative min-root propagation to fixpoint
     roots = comps.select("image_id", "lab",
-                         F.col("lab").alias("root")).persist()
+                         F.col("lab").alias("root")) \
+        .localCheckpoint(eager=False)
     for _ in range(max_rounds):
         nb = (
             edges_sym
@@ -300,15 +305,10 @@ def clump_stats_tiled(images: DataFrame, threshold: int,
 
     sizes = comps.join(roots, ["image_id", "lab"]) \
         .groupBy("image_id", "root").agg(F.sum("n").alias("n_pix"))
-    out = sizes.groupBy("image_id").agg(
+    return sizes.groupBy("image_id").agg(
         F.count(F.lit(1)).alias("n_clumps"),
         F.max("n_pix").alias("max_clump"),
         F.sum("n_pix").alias("n_fg"))
-    out = out.localCheckpoint()   # materialize before unpersisting inputs
-    rows.unpersist()
-    edges_sym.unpersist()
-    roots.unpersist()
-    return out
 
 
 def clump_stats(images: DataFrame, threshold: int) -> DataFrame:

@@ -47,7 +47,6 @@ __all__ = [
     "buffer_bbox_cols",
     "define_grid",
     "create_hex_grid_bbox",
-    "reproj_affine",
     "reproj_wgs84_to_utm",
     "reproj_epsg",
     "reproj_webmerc",
@@ -201,23 +200,6 @@ def create_hex_grid_bbox(spark: SparkSession, xmin: float, xmax: float,
          * (F.col("q") + F.pmod(F.col("r"), F.lit(2)).cast("double") * 0.5))
         .alias("vx"),
         (F.element_at("_o", 2) + F.lit(vstep) * F.col("r")).alias("vy"))
-
-
-def reproj_affine(df: DataFrame, lon: str = "lon", lat: str = "lat",
-                  lon0: float = 9.0, lat0: float = 0.0,
-                  scale: float = 111320.0, false_easting: float = 500000.0,
-                  x_out: str = "utm_x", y_out: str = "utm_y") -> DataFrame:
-    """Local UTM-style affine reprojection (reproj_wgs84_vec_to_utm role).
-
-    Exact column arithmetic (deterministic to the bit on any engine); the
-    zone-local planar approximation the reference's UTM path produces for
-    small extents.
-    """
-    return (
-        df.withColumn(x_out, (F.col(lon) - F.lit(lon0)) * F.lit(scale)
-                      + F.lit(false_easting))
-        .withColumn(y_out, (F.col(lat) - F.lit(lat0)) * F.lit(scale))
-    )
 
 
 def reproj_wgs84_to_utm(df: DataFrame, zone: int, lon: str = "lon",

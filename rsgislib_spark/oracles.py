@@ -711,9 +711,9 @@ ORACLES["filter_median5"] = _conv_oracle(
     f"list_sort({_L5})[13]", r=2, suffix="median")
 
 ORACLES["filter_mode3"] = _conv_oracle(
-    f"2047 - (list_max(list_transform(list_distinct({_L3}),"
-    f" v -> len(list_filter({_L3}, x -> x = v)) * 2048 + (2047 - v)))"
-    f" % 2048)", r=1, suffix="mode")
+    f"-(list_max(list_transform(list_distinct({_L3}),"
+    f" v -> {{'n': len(list_filter({_L3}, x -> x = v)), 'nv': -v}})).nv)",
+    r=1, suffix="mode")
 
 ORACLES["filter_range5"] = _conv_oracle(
     f"list_max({_L5}) - list_min({_L5})", r=2, suffix="range")
@@ -841,12 +841,9 @@ v AS (SELECT px, py, id,
                         / ({_PXSRC_B2} + {synth.pixel_value_sql("id", "sx", "sy", "fmt")} + 1)) AS BIGINT) AS idx
       FROM j),
 e AS (SELECT px, py, count(*) AS n_imgs,
-             max((idx + 2097152) * 4294967296 + id * 2048 + v) AS enc
+             max({{'idx': idx, 'id': id, 'v': v}}) AS b
       FROM v GROUP BY px, py)
-SELECT px, py, n_imgs,
-       enc // 4294967296 - 2097152 AS best_idx,
-       (enc % 4294967296) // 2048 AS best_id,
-       enc % 2048 AS best_v
+SELECT px, py, n_imgs, b.idx AS best_idx, b.id AS best_id, b.v AS best_v
 FROM e
 """
 
@@ -2252,9 +2249,9 @@ j AS (SELECT g.px, g.py, i.id, i.fmt,
        AND g.cy > i.ymin AND g.cy <= i.ymax),
 v AS (SELECT px, py, id, {_PXSRC} AS v FROM j)
 SELECT px, py, count(*) AS n_imgs,
-       max(id * 2048 + v) % 2048 AS v_last,
+       max({{'id': id, 'v': v}}).v AS v_last,
        min(v) AS v_min, max(v) AS v_max,
-       max(v * 1099511627776 + id) % 1099511627776 AS idx_max
+       max({{'v': v, 'id': id}}).id AS idx_max
 FROM v GROUP BY px, py
 """
 
@@ -2277,7 +2274,7 @@ j AS (SELECT g.px, g.py, i.id, i.fmt,
 v AS (SELECT px, py, id, {_PXSRC} AS v FROM j
       WHERE {_PXSRC} > 200 AND {_PXSRC} < 900)
 SELECT px, py, count(*) AS n_imgs,
-       max(id * 2048 + v) % 2048 AS v_last,
+       max({{'id': id, 'v': v}}).v AS v_last,
        min(v) AS v_min, max(v) AS v_max
 FROM v GROUP BY px, py
 """
@@ -3180,7 +3177,7 @@ j AS (SELECT g.px, g.py, i.id, i.fmt,
 v AS (SELECT px, py, {_PXSRC} AS v FROM j),
 c AS (SELECT px, py, v, count(*) AS n FROM v GROUP BY px, py, v)
 SELECT px, py, CAST(sum(n) AS BIGINT) AS n_imgs,
-       2047 - (max(n * 2048 + (2047 - v)) % 2048) AS mode_v
+       -(max({{'n': n, 'nv': -v}}).nv) AS mode_v
 FROM c GROUP BY px, py
 """
 
@@ -8100,19 +8097,17 @@ cv AS (SELECT px, py, id,
 ce AS (SELECT px, py, count(*) AS n_imgs,
               CAST(sum(CASE WHEN ndwi > 0 THEN 1 ELSE 0 END) AS BIGINT)
                   AS votes,
-              max((ndvi + 2097152) * 4294967296 + id * 2048 + v) AS encv,
-              max((ndwi + 2097152) * 4294967296 + id * 2048 + v) AS encw
+              max({{'idx': ndvi, 'id': id, 'v': v}}) AS bv,
+              max({{'idx': ndwi, 'id': id, 'v': v}}) AS bw
        FROM cv GROUP BY px, py),
 cp AS (SELECT px, py, n_imgs,
               CASE WHEN 2 * votes > n_imgs THEN 2 ELSE 1 END AS lw_mask,
-              CASE WHEN 2 * votes > n_imgs THEN encw ELSE encv END AS enc
+              CASE WHEN 2 * votes > n_imgs THEN bw ELSE bv END AS b
        FROM ce)
 SELECT CAST(px AS BIGINT) AS px, CAST(py AS BIGINT) AS py,
        CAST(n_imgs AS BIGINT) AS n_imgs,
        CAST(lw_mask AS BIGINT) AS lw_mask,
-       enc // 4294967296 - 2097152 AS best_idx,
-       (enc % 4294967296) // 2048 AS best_id,
-       enc % 2048 AS best_v
+       b.idx AS best_idx, b.id AS best_id, b.v AS best_v
 FROM cp
 """
 

@@ -3008,7 +3008,7 @@ def q_filter_kuwahara(spark, sf_dir) -> DataFrame:
 @query
 def q_composite_max_ndvi(spark, sf_dir) -> DataFrame:
     """max-NDVI composite: get_img_idx_for_stat + gather fused into one
-    order-encoded max pass (§2.4)."""
+    lexicographic max pass (§2.4)."""
     img = _px_images(spark, sf_dir, mod=5, with_footprint=True)
     return composite_max_index_window(img, 10.0, 45.0, 60, 60, 0.001) \
         .select("px", "py", "n_imgs", "best_idx", "best_id", "best_v")
@@ -3973,7 +3973,7 @@ def q_composite_ndvi_ndwi(spark, sf_dir) -> DataFrame:
     """imageutils.imagecomp.create_max_ndvi_ndwi_composite
     (imagecomp.py:212): max-NDVI-over-land / max-NDWI-over-water
     composite with the majority (mode) land/water mask, one
-    order-encoded associative pass (§2.4)."""
+    lexicographic max pass (§2.4)."""
     img = _px_images(spark, sf_dir, mod=5, with_footprint=True)
     return composite_ndvi_ndwi_window(img, 10.0, 45.0, 60, 60, 0.001) \
         .select("px", "py", "n_imgs", "lw_mask", "best_idx",

@@ -31,6 +31,7 @@ from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from ..functions import codec
+from ..functions.groupmode import group_mode
 
 __all__ = ["decode_media", "resize_nn", "resize_bilinear_stats",
            "resize_cubic_stats", "resize_cubicspline_stats",
@@ -413,8 +414,8 @@ def resize_average_stats(images: DataFrame, out_w: int,
                             dtype=np.int64)
 
 
-def resize_mode_stats(images: DataFrame, out_w: int, out_h: int,
-                      domain: int = 2048) -> DataFrame:
+def resize_mode_stats(images: DataFrame, out_w: int,
+                      out_h: int) -> DataFrame:
     """Block-mode downsample (INTERP_MODE) with exact integers.
 
     Reference: ``resample_img_to_match`` with ``INTERP_MODE``
@@ -422,13 +423,11 @@ def resize_mode_stats(images: DataFrame, out_w: int, out_h: int,
     classification-raster downsampler.  Each output pixel is the most
     frequent value of its source block, ties -> SMALLEST value (the
     engine's standing deterministic tiebreak, same as ``mosaic_mode`` /
-    ``window_rank_stats``).  Bounded-domain vectorization: one
-    ``np.bincount`` over ``block_idx * domain + value`` then a per-block
-    argmax, whose first-wins semantics pick the smallest value on ties.
-    Output: per-image exact stats of the mode plane.
+    ``window_rank_stats``), one :func:`group_mode` over the block index
+    of every source pixel.  Output: per-image exact stats of the mode
+    plane.
     """
     ow, oh = int(out_w), int(out_h)
-    dom = int(domain)
 
     def per_image(out, image_id, a):
         hh, ww = a.shape
@@ -437,10 +436,7 @@ def resize_mode_stats(images: DataFrame, out_w: int, out_h: int,
         bx = _block_index(ww, ow)
         by = _block_index(hh, oh)
         idx = by[:, None] * ow + bx[None, :]
-        counts = np.bincount((idx * dom + a).ravel(),
-                             minlength=ow * oh * dom)
-        res = counts.reshape(ow * oh, dom).argmax(axis=1) \
-            .astype(np.int64)
+        res = group_mode(idx.ravel(), a.ravel(), ow * oh - 1)
         out["image_id"].append(image_id)
         out["n_out"].append(int(res.size))
         out["sum_sc"].append(int(res.sum()))

@@ -30,8 +30,6 @@ __all__ = [
     "stream_dedup",
     "sessionize_batch",
     "sessionize_stream",
-    "sessionize_stream_tws",
-    "tws_available",
 ]
 
 
@@ -200,88 +198,3 @@ def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
         .agg((F.max("session_idx") + 1).alias("n_sessions"),
              F.count(F.lit(1)).alias("n_events"))
     )
-
-
-def tws_available() -> bool:
-    """Whether transformWithStateInPandas can run here.
-
-    Spark 4's transformWithState Python driver worker needs the
-    ``google.protobuf`` runtime; this sandbox ships without it, so the
-    operator is gated (the task's stub-absent-dependencies rule) — the
-    surrounding plumbing is real and exercised wherever protobuf
-    exists.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def sessionize_stream_tws(spark: SparkSession, sf_dir: str,
-                          gap_minutes: int = 30,
-                          max_files_per_trigger: int | None = None
-                          ) -> DataFrame:
-    """Sessionization on Spark 4's ``transformWithStateInPandas``.
-
-    The successor API to ``applyInPandasWithState`` (StatefulProcessor
-    + typed ValueState, RocksDB-backed) with identical semantics to
-    :func:`sessionize_stream`; raises ``NotImplementedError`` when the
-    protobuf runtime the TWS python worker requires is absent (see
-    :func:`tws_available`).
-    """
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs google.protobuf, which is "
-            "not installed in this environment")
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    gap = gap_minutes * 60
-    out_schema = StructType([StructField("user_id", LongType()),
-                             StructField("n_sessions", LongType()),
-                             StructField("n_events", LongType())])
-    state_schema = StructType([StructField("last_ts", LongType()),
-                               StructField("n_sessions", LongType()),
-                               StructField("n_events", LongType())])
-
-    class SessionProc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.state = handle.getValueState("sess", state_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self.state.exists():
-                last_ts, n_sessions, n_events = self.state.get()
-            else:
-                last_ts, n_sessions, n_events = None, 0, 0
-            all_ts = []
-            for pdf in rows:
-                all_ts.extend(int(t.timestamp())
-                              for t in pd.to_datetime(pdf["ts"]))
-            for t in sorted(all_ts):
-                if last_ts is None or t - last_ts > gap:
-                    n_sessions += 1
-                last_ts = t
-                n_events += 1
-            self.state.update((last_ts, n_sessions, n_events))
-            yield pd.DataFrame({"user_id": [key[0]],
-                                "n_sessions": [n_sessions],
-                                "n_events": [n_events]})
-
-        def close(self) -> None:
-            pass
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    ev = _events_stream(spark, sf_dir, max_files_per_trigger) \
-        .withColumn("ts", F.col("ts").cast("timestamp")) \
-        .select("user_id", "ts", "event_id")
-    agg = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionProc(), outputStructType=out_schema,
-        outputMode="Update", timeMode="None")
-    return _run_to_memory(agg, "update")

@@ -263,26 +263,6 @@ def test_resize_roundtrip_bytes(spark, sf_dir):
         assert int(arr.astype(np.int64).sum()) == r.sum_pix
 
 
-def test_tws_sessionize_gated_or_matches_batch(spark, sf_dir):
-    """transformWithStateInPandas variant: runs (and matches the batch
-    oracle) where protobuf exists; raises the documented gate error
-    here (sandbox ships without google.protobuf)."""
-    from rsgislib_spark.streaming.events import (sessionize_batch,
-                                                 sessionize_stream_tws,
-                                                 tws_available)
-
-    if not tws_available():
-        with pytest.raises(NotImplementedError):
-            sessionize_stream_tws(spark, sf_dir)
-        return
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ref = {r.user_id: (r.n_sessions, r.n_events)
-           for r in sessionize_batch(events).collect()}
-    got = {r.user_id: (r.n_sessions, r.n_events)
-           for r in sessionize_stream_tws(spark, sf_dir).collect()}
-    assert got == ref
-
-
 def test_stream_dedup_replayed_batches_exactly_once(spark, sf_dir, tmp_path):
     """dropDuplicatesWithinWatermark: the same event file replayed in a
     LATER micro-batch must be fully suppressed by cross-batch dedup

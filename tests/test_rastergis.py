@@ -6,8 +6,8 @@ import pandas as pd
 import pytest
 
 from rsgislib_spark import synth
-from rsgislib_spark.operators.rastergis import (_clump_mode,
-                                                _clump_neighbours,
+from rsgislib_spark.functions.groupmode import group_mode
+from rsgislib_spark.operators.rastergis import (_clump_neighbours,
                                                 _clump_percentiles,
                                                 collapse_rat, rat_table)
 from rsgislib_spark.operators.rasterize import label_components
@@ -52,17 +52,19 @@ def test_neighbour_symmetry_numpy():
 def test_mode_and_percentile_bounds():
     rng = np.random.RandomState(11)
     ls = rng.randint(1, 9, 4000).astype(np.int64)
-    vs = rng.randint(0, 50, 4000).astype(np.int64)
     n = int(ls.max())
-    mode = _clump_mode(ls, vs, n)
-    p25, p50, p75 = _clump_percentiles(ls, vs, n)
-    for c in range(1, n + 1):
-        cv = vs[ls == c]
-        assert mode[c] in cv
-        assert (cv == mode[c]).sum() == max(
-            np.bincount(cv).max(), 0)
-        assert cv.min() <= p25[c - 1] <= p50[c - 1] <= p75[c - 1] <= cv.max()
-        assert p50[c - 1] == np.sort(cv)[(len(cv) * 50 + 99) // 100 - 1]
+    draws = rng.randint(0, 50, 4000).astype(np.int64)
+    # 8-bit-range values, then 16-bit ones (2048..65748)
+    for vs in (draws, 2048 + 1300 * draws):
+        mode = group_mode(ls, vs, n)
+        p25, p50, p75 = _clump_percentiles(ls, vs, n)
+        for c in range(1, n + 1):
+            cv = vs[ls == c]
+            uniq, cnt = np.unique(cv, return_counts=True)
+            assert mode[c] == uniq[cnt == cnt.max()].min()
+            assert (cv.min() <= p25[c - 1] <= p50[c - 1] <= p75[c - 1]
+                    <= cv.max())
+            assert p50[c - 1] == np.sort(cv)[(len(cv) * 50 + 99) // 100 - 1]
 
 
 def test_rat_table_spark(spark, sf_dir):

@@ -100,6 +100,25 @@ def test_tiled_clumping_equals_whole_image(spark, sf_dir):
     assert whole == tiled and whole
 
 
+def test_tiled_clumping_leaves_no_cached_frame(spark, sf_dir):
+    """Neither a seam merge that does not converge nor one that does
+    leaves anything in the CacheManager: the frames its rounds re-read
+    are local checkpoints, not persisted frames that only the success
+    path unpersists."""
+    from rsgislib_spark import synth
+    from rsgislib_spark.operators.rasterize import clump_stats_tiled
+
+    img = synth.synth_images(spark, sf_dir, with_bytes=True,
+                             with_footprint=False).where("id % 31 = 0")
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        clump_stats_tiled(img, 700, tile=32, max_rounds=1)
+    assert cache.isEmpty()
+    assert clump_stats_tiled(img, 700, tile=32).collect()
+    assert cache.isEmpty()
+
+
 def test_rasterize_window_burn(spark, sf_dir):
     from rsgislib_spark import synth
     from rsgislib_spark.operators.rasterize import rasterize_window
