@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
+from .. import synth
 from ..functions import codec
 from ..functions.detmath import ln_pos_np
 
@@ -228,7 +229,7 @@ def saturated_stats(images: DataFrame) -> DataFrame:
 
     def per_image(out, image_id, v, fmt):
         _, w = v.shape
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        pmax = synth.pmax(fmt)
         ww = int(w)
         for bi, plane in enumerate((v, v[:, ::-1]), start=1):
             ys, xs = _np.nonzero(plane == pmax - 1)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
+from .. import synth
 from ..functions import codec
 from ..functions.detmath import ln_pos_np
 
@@ -99,11 +100,10 @@ def _perturbed(v, fmt, iid):
     """vp = the engine's perturbed mirror plane (synth twin of bstv.vp:
     clamp(v + ((x*7 + y*3 + id) % 21 - 10)))."""
     h, w = v.shape
-    pmax = 256 if str(fmt) in ("raw8", "png") else 1024
     x = np.arange(w, dtype=np.int64)[None, :]
     y = np.arange(h, dtype=np.int64)[:, None]
     e = (x * 7 + y * 3 + np.int64(iid)) % 21 - 10
-    return np.clip(v + e, 0, pmax - 1)
+    return np.clip(v + e, 0, synth.pmax(fmt) - 1)
 
 
 _LI_CD_SCHEMA = StructType([

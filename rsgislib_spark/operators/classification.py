@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
+from .. import synth
 from ..functions import codec
 
 __all__ = ["class_accuracy_stats", "regression_stats", "strat_sample",
@@ -50,11 +51,10 @@ def residual_plane(v, fmt, img_id):
     """Residual plane e (a writable copy) and pmax for the decoded int64
     plane v of image ``img_id``; shared with binstats."""
     h, w = v.shape
-    pmax = 256 if str(fmt) in ("raw8", "png") else 1024
     x = np.arange(w, dtype=np.int64)[None, :]
     y = np.arange(h, dtype=np.int64)[:, None]
     e = (x * 7 + y * 3 + int(img_id)) % 21 - 10
-    return np.broadcast_to(e, v.shape).copy(), pmax
+    return np.broadcast_to(e, v.shape).copy(), synth.pmax(fmt)
 
 
 _CLS_SCHEMA = StructType([
@@ -215,8 +215,7 @@ def strat_sample(images: DataFrame, n_per_cls: int = 3) -> DataFrame:
 
     def per_image(out, image_id, v, fmt, img_id):
         h, w = v.shape
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-        cls = (v * _K) // pmax
+        cls = (v * _K) // synth.pmax(fmt)
         ww = int(w)
         x = np.arange(ww, dtype=np.int64)[None, :]
         y = np.arange(int(h), dtype=np.int64)[:, None]
@@ -273,8 +272,7 @@ def global_class_stats(images: DataFrame) -> DataFrame:
     import pyspark.sql.functions as F
 
     def per_image(out, _image_id, v, fmt):
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-        cls = (v * _K) // pmax
+        cls = (v * _K) // synth.pmax(fmt)
         for c in range(_K):
             sel = cls == c
             if not sel.any():
@@ -308,8 +306,7 @@ def rand_sample(images: DataFrame, n_per_img: int = 5) -> DataFrame:
 
     def per_image(out, image_id, v, fmt, img_id):
         h, w = v.shape
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-        cls = (v * _K) // pmax
+        cls = (v * _K) // synth.pmax(fmt)
         x = np.arange(int(w), dtype=np.int64)[None, :]
         y = np.arange(int(h), dtype=np.int64)[:, None]
         hsh = (int(img_id) * _MIX_A + x * _MIX_B
@@ -358,7 +355,7 @@ def quantity_accuracy_stats(images: DataFrame) -> DataFrame:
     ])
 
     def per_image(out, image_id, v, fmt):
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        pmax = synth.pmax(fmt)
         c = (v * 4) // pmax
         p = (v[:, ::-1] * 4) // pmax
         cm = [[int(((c == i) & (p == j)).sum()) for j in range(4)]
@@ -438,8 +435,7 @@ def class_ts_fill_stats(images: DataFrame) -> DataFrame:
     """
 
     def per_image(out, image_id, v, fmt):
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-        p = _tsf_planes(v, pmax)
+        p = _tsf_planes(v, synth.pmax(fmt))
         before = [int((q == 0).sum()) for q in p]
         for _ in range(TSF_ITERS):
             for n in range(TSF_T - 1):          # forward

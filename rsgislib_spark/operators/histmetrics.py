@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
+from .. import synth
 from ..functions import codec
 from ..functions.detmath import LN2, ln_pos_np
 
@@ -57,8 +58,7 @@ def bhatt_dist_stats(images: DataFrame) -> DataFrame:
     """
 
     def per_image(out, image_id, v, fmt):
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-        cls = (v * 4) // pmax
+        cls = (v * 4) // synth.pmax(fmt)
         row = {"image_id": image_id}
         pops = []
         for c in (0, 1):
@@ -192,8 +192,7 @@ def jm_dist_stats(images: DataFrame) -> DataFrame:
 
     def per_image(out, image_id, v, fmt):
         mv = v[:, ::-1]
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-        m0, m1 = _cls_split(v, pmax)
+        m0, m1 = _cls_split(v, synth.pmax(fmt))
         c1 = dict(zip(*[a.tolist() for a in
                         np.unique(mv[m0], return_counts=True)]))
         c2 = dict(zip(*[a.tolist() for a in
@@ -211,8 +210,7 @@ def jm2d_dist_stats(images: DataFrame) -> DataFrame:
 
     def per_image(out, image_id, v, fmt):
         mv = v[:, ::-1]
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-        m0, m1 = _cls_split(v, pmax)
+        m0, m1 = _cls_split(v, synth.pmax(fmt))
         key = mv * 64 + (v % 64)   # 2-D bin packed
         c1 = dict(zip(*[a.tolist() for a in
                         np.unique(key[m0], return_counts=True)]))

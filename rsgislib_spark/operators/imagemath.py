@@ -21,9 +21,10 @@ Reference semantics re-expressed Spark-first:
   plane (horizontal mirror) since payloads are single-band;
 * ``histogram`` / ``calc_band_percentile`` / ``count_pxls_of_val`` /
   ``get_unique_values`` (python/src/imagecalc.cpp:2056,2087;
-  imagecalc/__init__.py:517,568): bounded-domain exact histograms as
-  per-image bincount partials merged by Catalyst — the partial+final
-  design that makes order statistics exact at any scale.
+  imagecalc/__init__.py:517,568): exact histograms as sparse per-batch
+  value counts merged by Catalyst (``imagestats.pixel_counts``) — the
+  partial+final design that makes order statistics exact at any scale
+  and any pixel value.
 
 Determinism: every partial is integer (counts/sums/min/max of int64);
 doubles only appear as final single divisions — safe for bit-exact
@@ -39,6 +40,7 @@ from pyspark.sql.types import (BooleanType, DoubleType, LongType, StringType,
 
 from ..functions import codec
 from ..functions.groupmode import group_mode
+from .imagestats import pixel_counts
 
 __all__ = [
     "band_math_stats",
@@ -907,18 +909,14 @@ def index_scaled_stats(images: DataFrame) -> DataFrame:
         .withColumnRenamed("max_pix", "max_idx")
 
 
-def value_counts(images: DataFrame, max_val: int | None = None,
-                 bins: int = 1024) -> DataFrame:
-    """count_pxls_of_val / get_unique_values: exact per-value counts.
+def value_counts(images: DataFrame, max_val: int | None = None) -> DataFrame:
+    """count_pxls_of_val / get_unique_values: exact per-value counts
+    ``(val, n)`` of every pixel value, with no limit on the value.
 
-    Per-image bincount partial (Arrow) -> posexplode -> groupBy(value):
-    the pixel volume never becomes rows; only <= ``bins`` partial entries
-    per image cross the shuffle.
+    Per-batch sparse value counts (Arrow) -> groupBy(value): the pixel
+    volume never becomes rows (``imagestats.pixel_counts``).
     """
-    from .imagestats import pixel_histogram
-
-    out = pixel_histogram(images, bins=bins, bin_width=1) \
-        .withColumnRenamed("bin", "val")
+    out = pixel_counts(images, lambda arr: arr, "val")
     if max_val is not None:
         out = out.where(F.col("val") < max_val)
     return out
@@ -928,32 +926,20 @@ def hist2d(images: DataFrame, bin_width: int = 128,
            bins: int = 8) -> DataFrame:
     """get_2d_img_histogram: joint histogram of (plane, mirrored plane).
 
-    Per-image 2-D bincount partials flattened to codes, merged by
-    Catalyst — same partial+final shape as the 1-D histogram
+    Per-batch 2-D bin counts flattened to codes, merged by Catalyst —
+    the same partial+final kernel as the 1-D histogram
     (python/src/imagecalc.cpp:2174).
     """
     nb = int(bins)
 
-    schema = StructType([StructField("code", LongType()),
-                         StructField("cnt", LongType())])
+    def codes(arr):
+        b1 = (arr // bin_width).clip(0, nb - 1)
+        b2 = (arr[:, ::-1] // bin_width).clip(0, nb - 1)
+        return b1 * nb + b2
 
-    def imagemath_hist2d(batches):
-        for batch in batches:
-            codes = [np.zeros(0, np.int64)]
-            for _, arr in codec.planes(batch, dtype=np.int64):
-                b1 = (arr // bin_width).clip(0, nb - 1)
-                b2 = (arr[:, ::-1] // bin_width).clip(0, nb - 1)
-                codes.append((b1 * nb + b2).ravel())
-            uniq, cnt = np.unique(np.concatenate(codes), return_counts=True)
-            yield codec.to_batch({"code": uniq, "cnt": cnt}, schema)
-
-    return (
-        images.select(*codec.IMAGE_COLS)
-        .mapInArrow(imagemath_hist2d, schema=schema)
-        .groupBy("code").agg(F.sum("cnt").alias("n"))
-        .select((F.col("code") / nb).cast("long").alias("b1"),
-                (F.col("code") % nb).alias("b2"), "n")
-    )
+    return pixel_counts(images, codes, "code").select(
+        (F.col("code") / nb).cast("long").alias("b1"),
+        (F.col("code") % nb).alias("b2"), "n")
 
 
 def valid_frac_rank(images: DataFrame, threshold: int,
@@ -1022,28 +1008,25 @@ def coarse_cell_stats(images: DataFrame, cell: int = 16) -> DataFrame:
     return codec.map_images(images, per_image, _COARSE_SCHEMA, dtype=np.int64)
 
 
-def percentiles_from_hist(images: DataFrame, ps=(0.25, 0.5, 0.75, 0.9),
-                          bins: int = 1024) -> DataFrame:
+def percentiles_from_hist(images: DataFrame,
+                          ps=(0.25, 0.5, 0.75, 0.9)) -> DataFrame:
     """calc_band_percentile: exact nearest-rank percentiles of all pixels.
 
     rank = ceil(p * n); value = smallest pixel value whose cumulative
-    count reaches the rank.  Histogram partials merge in Catalyst; the
-    cumulative scan runs over <= ``bins`` rows — trivially cheap at any
-    data scale.
+    count reaches the rank.  Value-count partials merge in Catalyst; the
+    cumulative scan runs over one row per distinct pixel value.
     """
-    from .imagestats import pixel_histogram
-
-    hist = pixel_histogram(images, bins=bins, bin_width=1)
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
+    hist = value_counts(images)
+    w = Window.orderBy("val").rowsBetween(Window.unboundedPreceding, 0)
     cum = hist.withColumn("cum", F.sum("n").over(w)) \
         .withColumn("total", F.sum("n").over(Window.partitionBy()))
     plist = F.explode(F.array(*[F.lit(float(p)) for p in ps])).alias("p")
-    ranked = cum.select("bin", "cum", "total").crossJoin(
+    ranked = cum.select("val", "cum", "total").crossJoin(
         cum.sparkSession.range(1).select(plist)
     )
     return (
         ranked.where(F.col("cum") >= F.ceil(F.col("p") * F.col("total")))
-        .groupBy("p").agg(F.min("bin").alias("value"))
+        .groupBy("p").agg(F.min("val").alias("value"))
     )
 
 

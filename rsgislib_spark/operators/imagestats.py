@@ -8,21 +8,22 @@ min/max/mean/stddev honouring nodata (src/cmds/RSGISCmdImageUtils.cpp:
 2056) are per-value aggregations.
 
 Spark shape: one Arrow pass decodes each image and emits scalar partials —
-integer-exact count/sum/sumsq/min/max (plus an optional bounded histogram).
+integer-exact count/sum/sumsq/min/max — or, for histograms, sparse
+``(key, cnt)`` value counts per batch with no limit on the pixel value.
 Nothing per-pixel ever becomes a row; downstream aggregation (global stats,
-per-format stats, histograms) is ordinary Catalyst over one row per image.
+per-format stats, histograms) is ordinary Catalyst over the partials.
 """
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (ArrayType, LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions import codec
 
-__all__ = ["pixel_stats", "pixel_histogram", "imgs_equal_stats"]
+__all__ = ["pixel_stats", "pixel_counts", "pixel_histogram",
+           "imgs_equal_stats"]
 
 _STATS_SCHEMA = StructType([
     StructField("image_id", StringType()),
@@ -61,32 +62,39 @@ def pixel_stats(images: DataFrame, nodata=None) -> DataFrame:
     )
 
 
-_HIST_SCHEMA = StructType([
-    StructField("image_id", StringType()),
-    StructField("hist", ArrayType(LongType())),
-])
+def pixel_counts(images: DataFrame, keys_of, name: str) -> DataFrame:
+    """``(name, n)``: how many pixels of all ``images`` have each key,
+    where ``keys_of(plane)`` maps a decoded int64 plane to one int64 key
+    per pixel.
 
-
-def pixel_histogram(images: DataFrame, bins: int = 1024,
-                    bin_width: int = 1) -> DataFrame:
-    """Exploded (bin, count) histogram over all images (exact, bounded).
-
-    Per-image bincount partials in Arrow, merged by a Catalyst groupBy —
-    the classic partial+final design (``histogram``, imagecalc.cpp:2056).
+    The kernel emits each batch's ``np.unique`` ``(key, cnt)`` rows and a
+    Catalyst groupBy sums them — the classic partial+final design
+    (``histogram``, imagecalc.cpp:2056), exact for any key range.
     """
+    schema = StructType([StructField(name, LongType()),
+                         StructField("cnt", LongType())])
 
-    def per_image(out, image_id, arr):
-        v = (arr.ravel() // bin_width).clip(0, bins - 1)
-        out["image_id"].append(image_id)
-        out["hist"].append(np.bincount(v, minlength=bins))
+    def kernel(batches):
+        for batch in batches:
+            keys = [np.zeros(0, np.int64)]
+            for _, arr in codec.planes(batch, dtype=np.int64):
+                keys.append(np.ravel(keys_of(arr)))
+            uniq, cnt = np.unique(np.concatenate(keys), return_counts=True)
+            yield codec.to_batch({name: uniq, "cnt": cnt}, schema)
 
-    partials = codec.map_images(images, per_image, _HIST_SCHEMA,
-                                dtype=np.int64)
-    return (
-        partials.select(F.posexplode("hist").alias("bin", "cnt"))
-        .where(F.col("cnt") > 0)
-        .groupBy("bin").agg(F.sum("cnt").alias("n"))
-    )
+    kernel.__name__ = kernel.__qualname__ = f"imagestats_{name}_counts"
+    return (images.select(*codec.IMAGE_COLS)
+            .mapInArrow(kernel, schema=schema)
+            .groupBy(name).agg(F.sum("cnt").alias("n")))
+
+
+def pixel_histogram(images: DataFrame, bins: int,
+                    bin_width: int = 1) -> DataFrame:
+    """``(bin, n)`` histogram over all images: bin = value // bin_width,
+    clipped into ``[0, bins)`` (the reference's ``histogram`` binning,
+    imagecalc.cpp:2056)."""
+    return pixel_counts(
+        images, lambda arr: (arr // bin_width).clip(0, bins - 1), "bin")
 
 
 _EQ_SCHEMA = StructType([

@@ -36,6 +36,7 @@ from pyspark.sql.types import (DoubleType, LongType, StringType,
 
 from .. import synth
 from ..functions import codec
+from ..functions.groupmode import pair_counts
 
 __all__ = ["prop_true_stats", "band_rmse_stats", "rescale_stats",
            "mean_in_mask_stats", "all_bands_equal_stats",
@@ -316,8 +317,7 @@ def colour_classes_stats(images: DataFrame) -> DataFrame:
     pixel count and the exact r/g/b sums of the rendered plane."""
 
     def per_image(out, image_id, v, fmt):
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-        cls = (v * 4) // pmax
+        cls = (v * 4) // synth.pmax(fmt)
         for c, (r, g, b) in enumerate(CLR_TABLE):
             n = int((cls == c).sum())
             out["image_id"].append(image_id)
@@ -554,17 +554,14 @@ def msk_val_hist_stats(images: DataFrame,
 
     def per_image(out, image_id, v, fmt):
         v = v.ravel()
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-        b = (v * 7 + 3) % pmax
+        b = (v * 7 + 3) % synth.pmax(fmt)
         m = (v // 64) % 8
         keep = m != 0
-        key = m[keep] * 1024 + b[keep] // bw
-        uniq, cnt = np.unique(key, return_counts=True)
-        for k, c in zip(uniq, cnt):
-            out["image_id"].append(image_id)
-            out["msk_val"].append(int(k // 1024))
-            out["bin"].append(int(k % 1024))
-            out["cnt"].append(int(c))
+        msk, bins, cnt = pair_counts(m[keep], b[keep] // bw)
+        out["image_id"].extend([image_id] * msk.size)
+        out["msk_val"].extend(msk)
+        out["bin"].extend(bins)
+        out["cnt"].extend(cnt)
 
     return codec.map_images(images, per_image, _MVH_SCHEMA,
                             extra_cols=("fmt",), dtype=np.int64)
@@ -806,12 +803,11 @@ def ref_region_stats(images: DataFrame) -> DataFrame:
 
     def per_image(out, image_id, v, fmt):
         h, w = v.shape
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
         x = np.arange(w, dtype=np.int64)[None, :]
         y = np.arange(h, dtype=np.int64)[:, None]
         x = np.broadcast_to(x, v.shape)
         y = np.broadcast_to(y, v.shape)
-        planes = _rr_planes(v, x, y, pmax)
+        planes = _rr_planes(v, x, y, synth.pmax(fmt))
         stack = np.stack(planes)                  # (T, h, w)
         valid = stack != RR_NODATA
         n = valid.sum(axis=0).astype(np.int64)

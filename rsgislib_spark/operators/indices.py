@@ -45,6 +45,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .. import synth
 from ..functions import codec
 
 _Q = 1048576.0  # 2^20 per-term quantiser (exact power-of-two multiply)
@@ -105,8 +106,7 @@ def spectral_indices_stats(images: DataFrame) -> DataFrame:
     """
 
     def per_image(rows, image_id, arr, fmt):
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-        planes = _index_planes(arr, pmax)
+        planes = _index_planes(arr, synth.pmax(fmt))
         rows["image_id"].append(str(image_id))
         rows["n_pix"].append(int(arr.size))
         for c in _IDX_COLS:

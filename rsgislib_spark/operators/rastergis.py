@@ -16,9 +16,10 @@ from pixel data:
   the first maximum).
 * ``populate_rat_with_percentiles`` — per-clump percentiles of a band
   (python/src/rastergis.cpp:352).  The reference approximates via an
-  ``n_hist_bins`` histogram; synthetic pixel values here are integers
-  in [0, 1024), so the exact nearest-rank percentile equals the binned
-  one at full value resolution (rank = ceil(p/100 * n), 1-based).
+  ``n_hist_bins`` histogram; here each clump's integer pixel values are
+  sorted, so the percentile is the exact nearest-rank one (rank =
+  ceil(p/100 * n), 1-based) — the binned value at full value
+  resolution, for any pixel value.
 * ``collapse_rat`` — re-key SELECTED rows to consecutive ids
   (python/src/rastergis.cpp:1214): rows passing ``select_col`` keep
   their relative order but get dense new ids 1..k.
@@ -56,6 +57,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
+from .. import synth
 from ..functions import codec
 from ..functions.groupmode import group_mode
 
@@ -1081,8 +1083,7 @@ def dist_to_classes(images: DataFrame, k: int = 4) -> DataFrame:
     (class pixels at d2=0 included), their d2 sum and max."""
 
     def per_image(out, image_id, arr, fmt):
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-        rc = (arr * k) // pmax
+        rc = (arr * k) // synth.pmax(fmt)
         for c in range(k):
             m = rc == c
             n_src = int(m.sum())

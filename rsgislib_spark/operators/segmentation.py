@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
+from .. import synth
 from ..functions import codec
 from .rastergis import _label_regions
 
@@ -248,9 +249,8 @@ def union_clumps(images: DataFrame) -> DataFrame:
     """
 
     def per_image(out, image_id, arr, fmt):
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
         qa = arr // 128
-        qb = ((arr * 7 + 3) % pmax) // 256
+        qb = ((arr * 7 + 3) % synth.pmax(fmt)) // 256
         q = qa * 16 + qb
         lab = _label_regions(q)
         n = int(lab.max())

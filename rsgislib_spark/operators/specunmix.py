@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
+from .. import synth
 from ..functions import codec
 
 __all__ = ["EM_SPECTRA", "UNMIX_STEPS", "exh_unmix_stats",
@@ -96,8 +97,7 @@ def avg_endmember_stats(images: DataFrame) -> DataFrame:
 
     def per_image(out, image_id, v, fmt):
         m = v[:, ::-1]
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
-        cls = (v * 4) // pmax
+        cls = (v * 4) // synth.pmax(fmt)
         for c in range(4):
             sel = cls == c
             n = int(sel.sum())
@@ -161,7 +161,7 @@ def ppi_counts(images: DataFrame, n_proj: int = PPI_NPROJ) -> DataFrame:
     def per_image(out, image_id, v, fmt):
         _, w = v.shape
         v = v.ravel()
-        pmax = 256 if str(fmt) in ("raw8", "png") else 1024
+        pmax = synth.pmax(fmt)
         bands = [v, (v * 7 + 3) % pmax, (v * 13 + 5) % pmax]
         counts = {}
         for k in range(n_proj):

@@ -14,46 +14,41 @@ Spark shape (SURVEY.md §3.3): instead of exploding pixels into rows,
 1. candidate pairs: image footprints x zones joined on grid-cell rows
    (``spatial_join.cell_pairs``, broadcast zones), refined by strict
    bbox intersection;
-2. per-(image, zone) partial aggregates computed inside one Arrow pass
-   over the image's decoded plane: count / sum / sumsq / min / max plus
-   an exact integer histogram (pixel domain is bounded: uint8/uint16 —
-   SURVEY.md §7.2 hard part (c));
-3. final per-zone merge: moments combine in plain Catalyst aggregates;
-   histograms combine by element-wise sum, from which median / mode /
-   percentiles are *exact* (mode ties resolve to the smallest value, the
-   scipy.stats.mstats.mode convention the reference inherits).
+2. per-image sparse value counts computed inside one Arrow pass over the
+   image's decoded plane: one ``(zone_id, v, cnt)`` row per distinct
+   pixel value of each candidate zone (``groupmode.pair_counts``), with
+   no limit on the pixel value;
+3. final per-zone merge: one grouped ``applyInArrow`` sums the counts of
+   repeated values, and every statistic is *exact* from the zone's
+   sorted distinct values and counts (moments, median, percentiles;
+   mode ties resolve to the smallest value, the scipy.stats.mstats.mode
+   convention the reference inherits).
 
 Two shuffles total (candidate join is broadcast -> zero; final merge ->
 one), independent of pixel count: the pixel volume never crosses the
-network, only (pairs x histogram) partials do.
+network, only the sparse value-count partials do.
 """
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
+from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
 from ..functions import codec
+from ..functions.groupmode import pair_counts
 from ..geo.cellindex import DEFAULT_RES
 from .spatial_join import _bbox_intersects, cell_pairs
 
 __all__ = ["zonal_stats", "zonal_stats_poly", "zonal_stats_hybrid",
            "zonal_stats_weighted", "mask_by_vec_stats",
-           "extract_point_values", "HIST_BINS"]
-
-HIST_BINS = 1024  # pixel values are < 1024 in every supported format
+           "extract_point_values"]
 
 _PARTIAL_SCHEMA = StructType([
     StructField("zone_id", LongType()),
-    StructField("image_id", StringType()),
-    StructField("n", LongType()),
-    StructField("s", LongType()),
-    StructField("ss", LongType()),
-    StructField("mn", LongType()),
-    StructField("mx", LongType()),
-    StructField("hist", ArrayType(LongType())),
+    StructField("v", LongType()),
+    StructField("cnt", LongType()),
 ])
 
 
@@ -99,23 +94,26 @@ def _image_groups(batch, *pair_cols, dtype=np.int64):
                [tuple(c[i] for c in cols) for i in rows])
 
 
-def _append_partial(rows, zone_id, image_id, vals):
-    """One (zone, image) histogram partial row of ``vals`` (int64)."""
-    rows["zone_id"].append(int(zone_id))
-    rows["image_id"].append(image_id)
-    rows["n"].append(int(vals.size))
-    rows["s"].append(int(vals.sum()))
-    rows["ss"].append(int((vals * vals).sum()))
-    rows["mn"].append(int(vals.min()))
-    rows["mx"].append(int(vals.max()))
-    rows["hist"].append(np.bincount(vals, minlength=HIST_BINS))
+def _zone_counts(zone_vals):
+    """One image's sparse ``(zone_id, v, cnt)`` arrays, from the (zone_id,
+    int64 pixel values) of each of its candidate zones."""
+    zones, vals = zip(*zone_vals)
+    keys = np.repeat(np.asarray(zones, np.int64), [a.size for a in vals])
+    return pair_counts(keys, np.concatenate(vals))
+
+
+def _partial_batch(parts):
+    """The Arrow batch of a kernel's :func:`_zone_counts` arrays."""
+    cols = [np.concatenate(c) for c in zip(*parts)] if parts else [[]] * 3
+    return codec.to_batch(dict(zip(_PARTIAL_SCHEMA.names, cols)),
+                          _PARTIAL_SCHEMA)
 
 
 def _pair_partials(batches, res_deg: float, min_thres: float,
                    max_thres: float, nodata, membership: str = "center"):
-    """mapInArrow kernel: decode each image once, emit one partial row per
-    (image, zone) candidate pair.  ``membership`` = the pixel-in-poly mode
-    (reference enum src/img/RSGISPixelInPoly.h:48-60):
+    """mapInArrow kernel: decode each image once, emit the sparse value
+    counts of each (image, zone) candidate pair.  ``membership`` = the
+    pixel-in-poly mode (reference enum src/img/RSGISPixelInPoly.h:48-60):
 
     * ``center`` — pixel-center-in-rect, half-open on the max edges
       (``polyContainsPixelCenter``, the default everywhere);
@@ -147,9 +145,10 @@ def _pair_partials(batches, res_deg: float, min_thres: float,
       the branch CONDITIONS exactly.)
     """
     for batch in batches:
-        rows = {n: [] for n in _PARTIAL_SCHEMA.names}
-        for img_id_key, arr, tlx, tly, pairs in _image_groups(
+        parts = []
+        for _, arr, tlx, tly, pairs in _image_groups(
                 batch, "zone_id", *_ZONE_BOX):
+            zone_vals = []
             h, w = arr.shape
             cx = tlx + (np.arange(w) + 0.5) * res_deg          # pixel centers
             cy = tly - (np.arange(h) + 0.5) * res_deg
@@ -214,10 +213,10 @@ def _pair_partials(batches, res_deg: float, min_thres: float,
                     vals = sub.ravel()
                 if nodata is not None:
                     vals = vals[vals != nodata]
-                vals = vals[(vals >= min_thres) & (vals <= max_thres)]
-                if vals.size:
-                    _append_partial(rows, zone_id, img_id_key, vals)
-        yield codec.to_batch(rows, _PARTIAL_SCHEMA)
+                zone_vals.append(
+                    (zone_id, vals[(vals >= min_thres) & (vals <= max_thres)]))
+            parts.append(_zone_counts(zone_vals))
+        yield _partial_batch(parts)
 
 
 _FINAL_SCHEMA = StructType([
@@ -238,14 +237,15 @@ _FINAL_SCHEMA_P = StructType(
 
 def _zone_hist_stats(partials: DataFrame,
                      percentile: float | None = None) -> DataFrame:
-    """Per-zone stats of the histogram ``partials``: one grouped
-    ``applyInArrow`` merges each zone's histograms.
+    """Per-zone stats of the sparse ``(zone_id, v, cnt)`` ``partials``:
+    one grouped ``applyInArrow`` sums each zone's counts per distinct
+    value.
 
-    Every aggregate is derivable from the exact bounded histogram
-    (moments included: sum = dot(v, hist), sumsq = dot(v^2, hist)), so
-    the whole zonal pass needs exactly ONE shuffle (the per-zone
-    histogram merge).  Median = numpy convention (mean of the two
-    central order statistics); mode = smallest modal value on ties
+    Every aggregate is exact from the sorted distinct values and their
+    counts (moments included: sum = dot(v, cnt), sumsq = dot(v^2, cnt)),
+    so the whole zonal pass needs exactly ONE shuffle (the per-zone
+    merge).  Median = numpy convention (mean of the two central order
+    statistics); mode = smallest modal value on ties
     (scipy.stats.mstats.mode, the reference's convention); percentile
     (when requested) = numpy.percentile linear interpolation between
     the bracketing order statistics — with a dyadic percentile (25/50/
@@ -255,40 +255,39 @@ def _zone_hist_stats(partials: DataFrame,
     schema = _FINAL_SCHEMA if percentile is None else _FINAL_SCHEMA_P
 
     def finalize(table):
-        hist = np.zeros(HIST_BINS, dtype=np.int64)
-        for harr in table.column("hist").to_numpy(zero_copy_only=False):
-            hist += harr
+        vals, inv = np.unique(table.column("v").to_numpy(),
+                              return_inverse=True)
+        hist = np.zeros(vals.size, dtype=np.int64)
+        np.add.at(hist, inv, table.column("cnt").to_numpy())
         n = int(hist.sum())
-        vals = np.arange(HIST_BINS, dtype=np.int64)
         s = int(np.dot(vals, hist))
         ss = int(np.dot(vals * vals, hist))
-        nz = np.nonzero(hist)[0]
         mean = s / n
         cum = np.cumsum(hist)
-        lo = int(np.searchsorted(cum, (n - 1) // 2 + 1))
-        hi = int(np.searchsorted(cum, n // 2 + 1))
+
+        def at(rank):  # the value of 1-based ``rank`` in sorted order
+            return int(vals[np.searchsorted(cum, rank)])
+
         out = {
             "zone_id": [table.column("zone_id")[0].as_py()],
             "n_pix": [float(n)],
             "sum_pix": [float(s)],
-            "min_pix": [float(nz[0])],
-            "max_pix": [float(nz[-1])],
+            "min_pix": [float(vals[0])],
+            "max_pix": [float(vals[-1])],
             "mean_pix": [mean],
             "stddev_pix": [float(np.sqrt(ss / n - mean * mean))],
-            "median_pix": [(lo + hi) / 2.0],
-            "mode_pix": [float(np.argmax(hist))],
+            "median_pix": [(at((n - 1) // 2 + 1) + at(n // 2 + 1)) / 2.0],
+            "mode_pix": [float(vals[np.argmax(hist)])],
         }
         if percentile is not None:
             rank = (n - 1) * (percentile / 100.0)
             k = int(np.floor(rank))
-            frac = rank - k
-            vk = int(np.searchsorted(cum, k + 1))
-            vk1 = int(np.searchsorted(cum, min(k + 1, n - 1) + 1))
-            out["perc_pix"] = [vk + (vk1 - vk) * frac]
+            vk = at(k + 1)
+            out["perc_pix"] = [vk + (at(min(k + 1, n - 1) + 1) - vk)
+                               * (rank - k)]
         return codec.to_table(out, schema)
 
-    return partials.select("zone_id", "hist").groupBy("zone_id") \
-        .applyInArrow(finalize, schema=schema)
+    return partials.groupBy("zone_id").applyInArrow(finalize, schema=schema)
 
 
 def zonal_stats_poly(
@@ -308,7 +307,7 @@ def zonal_stats_poly(
     zonalstats/__init__.py:424-432 — pixel-center-in-polygon); here the
     mask is ``geo.geometry.points_in_polygon`` over the pixel-center
     grid, per (image, polygon) candidate pair, inside the same
-    Arrow-partial/histogram-merge plan as :func:`zonal_stats`.
+    Arrow-partial/value-count-merge plan as :func:`zonal_stats`.
 
     ``polys`` needs (poly_key, verts_col = array<array<double>>,
     pxmin/pxmax/pymin/pymax).  Output mirrors :func:`zonal_stats`.
@@ -317,7 +316,7 @@ def zonal_stats_poly(
     so a hot image overlapped by many polygons fans across up to
     ``n_salt`` tasks instead of one straggler (each task re-decodes the
     image once — decode is cheap next to the per-polygon PIP masks).
-    The histogram partials are order-independent, so salting cannot
+    The value-count partials are order-independent, so salting cannot
     change results.
     """
     from ..geo.geometry import points_in_polygon
@@ -330,20 +329,20 @@ def zonal_stats_poly(
 
     def zonal_poly_pairs(batches):
         for batch in batches:
-            rows = {n: [] for n in _PARTIAL_SCHEMA.names}
-            for img_id_key, arr, xmin, ymax, pairs in _image_groups(
+            parts = []
+            for _, arr, xmin, ymax, pairs in _image_groups(
                     batch, poly_key, verts_col):
                 h, w = arr.shape
                 cx = xmin + (np.arange(w) + 0.5) * res_deg
                 cy = ymax - (np.arange(h) + 0.5) * res_deg
                 gx, gy = np.meshgrid(cx, cy)
+                zone_vals = []
                 for zone_id, verts in pairs:
                     poly = np.asarray(verts, dtype=np.float64)
                     inside = points_in_polygon(gx.ravel(), gy.ravel(), poly)
-                    vals = arr.ravel()[inside]
-                    if vals.size:
-                        _append_partial(rows, zone_id, img_id_key, vals)
-            yield codec.to_batch(rows, _PARTIAL_SCHEMA)
+                    zone_vals.append((zone_id, arr.ravel()[inside]))
+                parts.append(_zone_counts(zone_vals))
+            yield _partial_batch(parts)
 
     stats = _zone_hist_stats(
         work.mapInArrow(zonal_poly_pairs, schema=_PARTIAL_SCHEMA))
@@ -626,8 +625,8 @@ def _zonal_stats_raw(
 
     partials = work.mapInArrow(zonal_pair_partials, schema=_PARTIAL_SCHEMA)
 
-    # phase 3: ONE shuffle — per-zone histogram merge; every statistic
-    # (moments included) finalizes from the exact bounded histogram.
+    # phase 3: ONE shuffle — per-zone value-count merge; every statistic
+    # (moments included) finalizes from the exact merged counts.
     # All stats surface as doubles: the reference writes every zonal
     # field as OFTReal (zonalstats/__init__.py:289-319), and a uniform
     # type lets empty zones take out_no_data_val.

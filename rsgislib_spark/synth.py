@@ -57,6 +57,7 @@ __all__ = [
     "pixel_array",
     "pixel_planes",
     "fmt_of_id",
+    "pmax",
     "pmax_sql",
     "pixel_value_sql",
 ]
@@ -176,6 +177,11 @@ def synth_qpoints(spark, sf_dir: str):
     return spark.sql(qpoints_sql("spark"))
 
 
+def pmax(fmt: str) -> int:
+    """Per-format pixel max+1 (modulus of the value formula)."""
+    return 256 if str(fmt) in ("raw8", "png") else 1024
+
+
 def pmax_sql(fmt_expr: str = "fmt") -> str:
     """Portable per-format pixel max+1 (modulus of the value formula)."""
     return f"(CASE WHEN {fmt_expr} IN ('raw8', 'png') THEN 256 ELSE 1024 END)"
@@ -197,10 +203,9 @@ def fmt_of_id(ids: np.ndarray) -> np.ndarray:
 
 def pixel_array(img_id: int, w: int, h: int, fmt: str) -> np.ndarray:
     """numpy oracle for the synthetic pixel plane (h, w)."""
-    pmax = 256 if fmt in ("raw8", "png") else 1024
     x = np.arange(w, dtype=np.int64)[None, :]
     y = np.arange(h, dtype=np.int64)[:, None]
-    v = (img_id * 31 + x * 7 + y * 13) % pmax
+    v = (img_id * 31 + x * 7 + y * 13) % pmax(fmt)
     return v.astype(np.uint8 if fmt == "raw8" else np.uint16)
 
 
@@ -224,12 +229,12 @@ def pixel_planes(ids, w: int, h: int, fmt: str) -> np.ndarray:
     dtype (both moduli are powers of two, and ``&`` is the floor modulo
     for negative ids too).  Tests hold it equal to ``pixel_array``.
     """
-    pmax = 256 if fmt in ("raw8", "png") else 1024
+    mod = pmax(fmt)
     dtype = np.uint8 if fmt == "raw8" else np.uint16
-    off = ((np.asarray(ids, np.int64) * 31) & (pmax - 1)).astype(dtype)
-    stack = _base_plane(int(w), int(h), pmax, dtype)[None] \
+    off = ((np.asarray(ids, np.int64) * 31) & (mod - 1)).astype(dtype)
+    stack = _base_plane(int(w), int(h), mod, dtype)[None] \
         + off[:, None, None]
-    stack &= dtype(pmax - 1)
+    stack &= dtype(mod - 1)
     return stack
 
 

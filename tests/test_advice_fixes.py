@@ -5,7 +5,8 @@
   half-tile offset;
 * band-math sandbox: attribute-chain escapes must be rejected;
 * run_resumable exactly-once: a crash between the data write and the
-  lineage write must not leave duplicated rows after resume.
+  lineage write, after the stale-partition delete, or during the data
+  write must not leave duplicated rows after resume.
 """
 
 import os
@@ -180,6 +181,55 @@ def test_run_resumable_crash_after_delete(spark, sf_dir, tmp_path):
     assert rows(data) == rows(os.path.join(clean, "data"))
     assert rows(os.path.join(out, "lineage")) == \
         rows(os.path.join(clean, "lineage"))
+
+
+def test_run_resumable_crash_during_data_write(spark, sf_dir, tmp_path):
+    """Simulate a crash partway through the data write: ``process``'s
+    Arrow stage raises on one cell while the other write tasks run.  No
+    lineage is committed, so the resume pass must rebuild every cell
+    once, and the result must equal a clean single run."""
+    from rsgislib_spark import synth
+    from rsgislib_spark.operators.spatial_join import with_point_cell
+    from rsgislib_spark.plans.lineage import run_resumable
+
+    img = synth.synth_images(spark, sf_dir, with_footprint=False)
+    out = str(tmp_path / "job")
+    cells = sorted(r.cell for r in
+                   with_point_cell(img).select("cell").distinct().collect())
+    victim = cells[len(cells) // 2]
+
+    def process(df):
+        return df.select("cell", "image_id", "phash")
+
+    def crashing(df):
+        def crash_on_victim(batches):
+            for batch in batches:
+                if victim in batch.column("cell").to_pylist():
+                    raise RuntimeError("crash during the data write")
+                yield batch
+
+        sel = process(df).repartition(4, "cell")
+        return sel.mapInArrow(crash_on_victim, schema=sel.schema)
+
+    with pytest.raises(Exception, match="crash during the data write"):
+        run_resumable(img, out, crashing)
+    assert not os.path.exists(os.path.join(out, "lineage"))
+
+    assert run_resumable(img, out, process) == len(cells)
+    assert run_resumable(img, out, process) == 0
+    clean = str(tmp_path / "clean")
+    assert run_resumable(img, clean, process) == len(cells)
+
+    def rows(path):
+        df = spark.read.parquet(path)
+        return sorted(tuple(r) for r in
+                      df.select(*sorted(df.columns)).collect())
+
+    lineage = spark.read.parquet(os.path.join(out, "lineage"))
+    assert lineage.count() == lineage.select("cell").distinct().count() \
+        == len(cells)
+    assert rows(os.path.join(out, "data")) == \
+        rows(os.path.join(clean, "data"))
 
 
 def test_write_partitioned_roundtrip(spark, sf_dir, tmp_path):
