@@ -20,18 +20,6 @@ Design (see SURVEY.md):
 
 __version__ = "0.1.0"
 
-# Aggregate type names mirroring rsgislib SUMTYPE_* constants
-# (reference: python/rsgislib/__init__.py:168-177).
-SUMTYPE_MODE = "mode"
-SUMTYPE_MEAN = "mean"
-SUMTYPE_MEDIAN = "median"
-SUMTYPE_MIN = "min"
-SUMTYPE_MAX = "max"
-SUMTYPE_STDDEV = "stddev"
-SUMTYPE_COUNT = "count"
-SUMTYPE_RANGE = "range"
-SUMTYPE_SUM = "sum"
-
 # inside a Spark Python worker, stop every task from re-reading the
 # unchanged pyspark.zip / spark-core jar directories (see workerinit)
 from .workerinit import guard_zip_rereads as _guard_zip_rereads  # noqa: E402

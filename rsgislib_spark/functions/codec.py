@@ -45,7 +45,6 @@ __all__ = [
     "decode_png",
     "encode_jpeg_stub",
     "decode_jpeg_stub",
-    "psnr",
 ]
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -138,6 +137,8 @@ def decode_png(buf: bytes) -> np.ndarray:
             idat += body
         elif tag == b"IEND":
             break
+    if depth is None:
+        raise ValueError("PNG has no IHDR chunk")
     bpp = depth // 8
     stride = w * bpp
     data = zlib.decompress(idat)
@@ -183,13 +184,11 @@ def decode_image(buf: bytes, w: int, h: int, fmt: str) -> np.ndarray:
         return np.frombuffer(buf, dtype="<u2").reshape(h, w)
     if fmt == "raw8":
         return np.frombuffer(buf, dtype=np.uint8).reshape(h, w)
-    if fmt == "png":
-        arr = decode_png(buf)
+    if fmt in ("png", "jpeg"):
+        arr = decode_png(buf) if fmt == "png" else decode_jpeg_stub(buf)
         if arr.shape != (h, w):
-            raise ValueError("png size mismatch vs metadata")
+            raise ValueError(f"{fmt} size mismatch vs metadata")
         return arr
-    if fmt == "jpeg":
-        return decode_jpeg_stub(buf)
     raise ValueError(f"unknown fmt {fmt!r}")
 
 
@@ -268,15 +267,3 @@ def encode_image(arr: np.ndarray, fmt: str) -> bytes:
     if fmt == "jpeg":
         return encode_jpeg_stub(arr)
     raise ValueError(f"unknown fmt {fmt!r}")
-
-
-def psnr(ref: np.ndarray, test: np.ndarray, peak: float | None = None) -> float:
-    """Peak signal-to-noise ratio in dB (inf for identical arrays)."""
-    ref = np.asarray(ref, np.float64)
-    test = np.asarray(test, np.float64)
-    mse = float(np.mean((ref - test) ** 2))
-    if mse == 0.0:
-        return float("inf")
-    if peak is None:
-        peak = float(ref.max()) or 1.0
-    return 10.0 * np.log10(peak * peak / mse)

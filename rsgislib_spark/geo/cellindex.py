@@ -6,8 +6,8 @@ The reference anchors hex-grid indexing as a native concept via
 ``h3`` package is not available in this environment, so the engine ships its
 own deterministic hierarchical lon/lat grid index with the same *role* in
 query plans: a 64-bit cell id used as an equi-join key (spatial "pushdown"),
-with ``k_ring`` neighbourhood expansion for kNN and ``polyfill`` for
-polygon covering.
+with ``polyfill_bbox`` for bbox covering.  kNN's neighbourhood rings are
+built in Catalyst from the same layout (``operators.knn._ring``).
 
 Cell id layout (64-bit signed, always positive):
 
@@ -28,16 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 
-__all__ = [
-    "cell_of_point",
-    "cell_decode",
-    "cell_bounds",
-    "k_ring",
-    "polyfill_bbox",
-    "parent",
-    "cell_sql_expr",
-    "DEFAULT_RES",
-]
+__all__ = ["cell_of_point", "polyfill_bbox", "cell_sql_expr", "DEFAULT_RES"]
 
 _RES_SHIFT = 2 ** 58
 _X_SHIFT = 2 ** 29
@@ -76,59 +67,6 @@ def cell_sql_expr(lon_expr: str, lat_expr: str, res: int = DEFAULT_RES) -> str:
         f" 0.0), {n - 1}.0) AS BIGINT)"
     )
     return f"(CAST({res} AS BIGINT) * {_RES_SHIFT} + {nx} * {_X_SHIFT} + {ny})"
-
-
-def cell_decode(cell):
-    """cell id -> (res, nx, ny) arrays."""
-    cell = np.asarray(cell, np.int64)
-    res = cell // _RES_SHIFT
-    rem = cell - res * _RES_SHIFT
-    nx = rem // _X_SHIFT
-    ny = rem - nx * _X_SHIFT
-    return res.astype(np.int64), nx.astype(np.int64), ny.astype(np.int64)
-
-
-def cell_bounds(cell):
-    """cell id -> (lonmin, lonmax, latmin, latmax) arrays."""
-    res, nx, ny = cell_decode(cell)
-    n = (1 << res.astype(np.int64)).astype(np.float64)
-    w = 360.0 / n
-    h = 180.0 / n
-    lonmin = -180.0 + nx * w
-    latmin = -90.0 + ny * h
-    return lonmin, lonmin + w, latmin, latmin + h
-
-
-def parent(cell, parent_res: int):
-    """Coarser-resolution ancestor cell id."""
-    res, nx, ny = cell_decode(cell)
-    shift = (res - parent_res).astype(np.int64)
-    if np.any(shift < 0):
-        raise ValueError("parent_res must be <= cell resolution")
-    return (
-        np.int64(parent_res) * _RES_SHIFT
-        + (nx >> shift) * _X_SHIFT
-        + (ny >> shift)
-    )
-
-
-def k_ring(cell: int, k: int = 1):
-    """All cells within Chebyshev distance k of ``cell`` (scalar -> array).
-
-    Longitude wraps at the antimeridian; latitude rows are clamped (no
-    pole wrap).  Result is sorted ascending and includes ``cell`` itself,
-    deduplicated (relevant at very coarse resolutions where the ring wraps
-    onto itself).
-    """
-    res, nx, ny = cell_decode(np.int64(cell))
-    res, nx, ny = int(res), int(nx), int(ny)
-    n = _n(res)
-    dx, dy = np.meshgrid(np.arange(-k, k + 1), np.arange(-k, k + 1))
-    xs = (nx + dx.ravel()) % n
-    ys = ny + dy.ravel()
-    keep = (ys >= 0) & (ys < n)
-    cells = np.int64(res) * _RES_SHIFT + xs[keep].astype(np.int64) * _X_SHIFT + ys[keep].astype(np.int64)
-    return np.unique(cells)
 
 
 def polyfill_bbox(xmin: float, xmax: float, ymin: float, ymax: float,

@@ -8,12 +8,9 @@ src/img/RSGISPixelInPoly.cpp:47-118):
 
 * ``points_in_polygon`` — even-odd ray casting, boundary-inclusive on the
   edges crossed by the half-open rule (standard crossing-number PIP);
-* ``points_in_polygons`` — many points x many polygons (used per Arrow
-  batch after the cell-key candidate join has already cut candidates to a
-  small set, so the inner loop is over *polygons*, vectorized over points);
-* ``segments_intersect`` / ``polys_intersect`` — O(n*m) edge tests +
-  containment fallbacks, adequate for the small polygon layers the
-  reference handles (its own layers are <= hundreds of features).
+* ``poly_pair_flags`` / ``poly_pair_predicate`` — the DE-9IM predicates
+  for P polygon pairs at once (edge crossings + vertex and edge-midpoint
+  containment), vectorized over the pairs of an Arrow batch.
 
 Polygons are numpy (k,2) float arrays of exterior-ring vertices, closed or
 open (the kernels treat them as implicitly closed).  Holes are out of MVP
@@ -25,31 +22,12 @@ from __future__ import annotations
 import numpy as np
 
 __all__ = [
-    "poly_bbox",
     "points_in_polygon",
-    "points_in_polygons",
-    "segments_intersect_any",
-    "polys_intersect",
-    "poly_within_poly",
-    "polygon_area",
     "pad_rings",
     "poly_pair_flags",
     "poly_pair_predicate",
     "PAIR_PREDICATES",
 ]
-
-
-def poly_bbox(poly):
-    """(xmin, xmax, ymin, ymax) of a (k,2) vertex array."""
-    p = np.asarray(poly, np.float64)
-    return p[:, 0].min(), p[:, 0].max(), p[:, 1].min(), p[:, 1].max()
-
-
-def polygon_area(poly) -> float:
-    """Shoelace area (positive regardless of winding)."""
-    p = np.asarray(poly, np.float64)
-    x, y = p[:, 0], p[:, 1]
-    return 0.5 * abs(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1)))
 
 
 def points_in_polygon(px, py, poly):
@@ -74,60 +52,6 @@ def points_in_polygon(px, py, poly):
         inside ^= crosses & (px < xint)
         x1, y1 = x2, y2
     return inside
-
-
-def points_in_polygons(px, py, polys):
-    """For each point, the indices boolean matrix (n_points, n_polys)."""
-    px = np.asarray(px, np.float64)
-    py = np.asarray(py, np.float64)
-    out = np.zeros((px.shape[0], len(polys)), dtype=bool)
-    for j, poly in enumerate(polys):
-        out[:, j] = points_in_polygon(px, py, poly)
-    return out
-
-
-def _orient(ax, ay, bx, by, cx, cy):
-    return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-
-
-def segments_intersect_any(a, b) -> bool:
-    """True if any edge of ring ``a`` properly intersects any edge of ``b``."""
-    a = np.asarray(a, np.float64)
-    b = np.asarray(b, np.float64)
-    a2 = np.roll(a, -1, axis=0)
-    b2 = np.roll(b, -1, axis=0)
-    for (p1, p2) in zip(a, a2):
-        d1 = _orient(p1[0], p1[1], p2[0], p2[1], b[:, 0], b[:, 1])
-        d2 = _orient(p1[0], p1[1], p2[0], p2[1], b2[:, 0], b2[:, 1])
-        d3 = _orient(b[:, 0], b[:, 1], b2[:, 0], b2[:, 1], p1[0], p1[1])
-        d4 = _orient(b[:, 0], b[:, 1], b2[:, 0], b2[:, 1], p2[0], p2[1])
-        hit = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-        if bool(hit.any()):
-            return True
-    return False
-
-
-def polys_intersect(a, b) -> bool:
-    """GEOS-style ``intersects`` for two simple polygons."""
-    axmin, axmax, aymin, aymax = poly_bbox(a)
-    bxmin, bxmax, bymin, bymax = poly_bbox(b)
-    if axmax < bxmin or bxmax < axmin or aymax < bymin or bymax < aymin:
-        return False
-    a = np.asarray(a, np.float64)
-    b = np.asarray(b, np.float64)
-    if points_in_polygon(a[:1, 0], a[:1, 1], b)[0]:
-        return True
-    if points_in_polygon(b[:1, 0], b[:1, 1], a)[0]:
-        return True
-    return segments_intersect_any(a, b)
-
-
-def poly_within_poly(a, b) -> bool:
-    """GEOS-style ``within``: every vertex of a inside b, no edge crossing."""
-    a = np.asarray(a, np.float64)
-    if not points_in_polygon(a[:, 0], a[:, 1], b).all():
-        return False
-    return not segments_intersect_any(a, b)
 
 
 # ---------------------------------------------------------------------------
@@ -204,8 +128,8 @@ def _pair_pip(pts, poly):
 def poly_pair_flags(polys_a, polys_b) -> dict:
     """Primitive geometric relations for P polygon pairs, vectorized.
 
-    Returns boolean (P,) arrays: ``cross`` (any proper edge crossing —
-    the same strict orientation test as :func:`segments_intersect_any`),
+    Returns boolean (P,) arrays: ``cross`` (any proper edge crossing, by
+    the signs of four orientation determinants),
     ``a_strict_any``/``b_strict_any`` (any vertex strictly interior to
     the other ring), ``a_incl_all``/``b_incl_all`` (every vertex
     interior or on the boundary), ``a_bound_any``/``b_bound_any`` (any

@@ -1,30 +1,27 @@
 """Tile-grid generation replicating rsgislib ``create_tiles`` byte-exactly.
 
-Two flavours:
-
-* ``tile_specs`` — the C++ ``executeCreateTiles`` grid (reference:
-  src/cmds/RSGISCmdImageUtils.cpp:262-836).  Row-major from the image
-  origin; each tile's pixel window is expanded by ``overlap`` then clamped
-  into the image; a remainder column tile is appended after each row when
-  ``imgSizeX % width != 0`` and a remainder row after all full rows.  With
-  ``offset=True`` a half-tile offset grid is produced with leading half
-  tiles (RSGISCmdImageUtils.cpp:305-535); note the offset branch computes
-  ``remainPxlX = imgSizeX - numXTiles*width`` (i.e. *including* the leading
-  half tile's pixels) so a trailing remainder tile exists whenever
-  ``xOff > 0``, clamped to the image edge — replicated warts-and-all.
-  Tile index = creation order; name ``{base}_tile{i}.{ext}`` with i
-  0-based (RSGISCmdImageUtils.cpp:809-811).
-
-* ``tile_specs_multi_core`` — the pure-python
-  ``create_tiles_multi_core`` grid (reference:
-  python/rsgislib/imageutils/__init__.py:2580-2680): no overlap, names
-  ``{base}_x{i}y{j}.{ext}`` with i,j 1-based, remainder column/row.
+``tile_specs`` is the C++ ``executeCreateTiles`` grid (reference:
+src/cmds/RSGISCmdImageUtils.cpp:262-836).  Row-major from the image
+origin; each tile's pixel window is expanded by ``overlap`` then clamped
+into the image; a remainder column tile is appended after each row when
+``imgSizeX % width != 0`` and a remainder row after all full rows.  With
+``offset=True`` a half-tile offset grid is produced with leading half
+tiles (RSGISCmdImageUtils.cpp:305-535); note the offset branch computes
+``remainPxlX = imgSizeX - numXTiles*width`` (i.e. *including* the leading
+half tile's pixels) so a trailing remainder tile exists whenever
+``xOff > 0``, clamped to the image edge — replicated warts-and-all.
+Tile index = creation order; name ``{base}_tile{i}.{ext}`` with i
+0-based (RSGISCmdImageUtils.cpp:809-811).  The pure-python
+``create_tiles_multi_core`` grid (reference: python/rsgislib/imageutils/
+__init__.py:2580-2680) is the same no-overlap grid with 1-based
+``x{i}y{j}`` names: the ``tile_name_mc`` column of
+``operators.tiling.tile_spec_df``.
 
 Windows are half-open pixel ranges ``[xmin, xmax) x [ymin, ymax)`` from the
 image top-left, matching how the reference's envelopes map back to pixels.
 
-These are pure functions used (a) directly in unit tests against reference
-goldens and (b) re-expressed as Catalyst column arithmetic in
+``tile_specs`` is a pure function, used (a) directly in unit tests against
+reference goldens and (b) re-expressed as Catalyst column arithmetic in
 ``operators.tiling`` for the distributed path — this module is the oracle
 for that arithmetic.
 """
@@ -36,7 +33,7 @@ from typing import List, Tuple
 
 import numpy as np
 
-__all__ = ["tile_specs", "tile_specs_multi_core", "num_tiles"]
+__all__ = ["tile_specs"]
 
 Window = Tuple[int, int, int, int]  # xmin, xmax, ymin, ymax (half-open)
 
@@ -124,50 +121,3 @@ def tile_specs(size_x: int, size_y: int, width: int, height: int,
         if rem_y > 0:
             emit_row(c_y, rem_y)
     return out
-
-
-def num_tiles(size_x: int, size_y: int, width: int, height: int,
-              offset: bool = False) -> int:
-    """Closed-form tile count matching ``tile_specs`` length."""
-    if not offset:
-        num_x = size_x // width + (1 if size_x % width else 0)
-        num_y = size_y // height + (1 if size_y % height else 0)
-        return num_x * num_y
-    x_off, y_off = width // 2, height // 2
-    num_x = (size_x - x_off) // width
-    num_y = (size_y - y_off) // height
-    cols = (1 if x_off > 0 else 0) + num_x + (1 if size_x - num_x * width > 0 else 0)
-    rows = (1 if y_off > 0 else 0) + num_y + (1 if size_y - num_y * height > 0 else 0)
-    return cols * rows
-
-
-def tile_specs_multi_core(size_x: int, size_y: int, width: int, height: int):
-    """(name, window) list per ``create_tiles_multi_core``.
-
-    Reference: python/rsgislib/imageutils/__init__.py:2580-2680 — full tiles
-    named ``x{i}y{j}`` 1-indexed, remainder column ``x{n+1}y{j}`` and
-    remainder row appended after the full rows, no overlap.
-    """
-    n_fx = size_x // width
-    n_fy = size_y // height
-    rem_w = size_x - n_fx * width
-    rem_h = size_y - n_fy * height
-
-    tiles = []
-    for y_t in range(n_fy):
-        ymin, ymax = y_t * height, y_t * height + height
-        for x_t in range(n_fx):
-            tiles.append((f"x{x_t + 1}y{y_t + 1}",
-                          (x_t * width, x_t * width + width, ymin, ymax)))
-        if rem_w > 0:
-            tiles.append((f"x{n_fx + 1}y{y_t + 1}",
-                          (n_fx * width, n_fx * width + rem_w, ymin, ymax)))
-    if rem_h > 0:
-        ymin, ymax = n_fy * height, n_fy * height + rem_h
-        for x_t in range(n_fx):
-            tiles.append((f"x{x_t + 1}y{n_fy + 1}",
-                          (x_t * width, x_t * width + width, ymin, ymax)))
-        if rem_w > 0:
-            tiles.append((f"x{n_fx + 1}y{n_fy + 1}",
-                          (n_fx * width, n_fx * width + rem_w, ymin, ymax)))
-    return tiles

@@ -42,11 +42,7 @@ __all__ = [
     "dlit",
 ]
 
-#: WGS84
-_A = 6378137.0
-_F = 1.0 / 298.257223563
-_E2 = _F * (2.0 - _F)
-_EP2 = _E2 / (1.0 - _E2)
+#: UTM scale factor on the central meridian
 _K0 = 0.9996
 
 #: Taylor coefficients (Horner, innermost last): sin x = x * P(x^2)

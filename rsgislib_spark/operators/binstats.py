@@ -589,8 +589,6 @@ def corr_feat_panel(lineitem: DataFrame) -> DataFrame:
 # (bias / MAE / MSE, quantised per-term) plus the fitted (a, b).
 # --------------------------------------------------------------------------
 
-_KF_BOUNDS = ("33", "66", "99", "cc")
-
 
 def kfold_regress(lineitem: DataFrame, k: int = 5) -> DataFrame:
     fold_case = (

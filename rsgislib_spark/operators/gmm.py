@@ -66,8 +66,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 from ..functions import codec
 from ..functions.detmath import exp_np
 
-__all__ = ["gmm_hist_fit", "GMM_BIN_WIDTH", "GMM_ROUNDS", "GMM_KMAX",
-           "gmm_em_float"]
+__all__ = ["gmm_hist_fit", "GMM_BIN_WIDTH", "GMM_ROUNDS", "GMM_KMAX"]
 
 GMM_BIN_WIDTH = 8          # binWidth (even so bin centres are integers)
 GMM_CLS_QUANT = 128        # classColumn = varCol // 128 (the seg lattice)
@@ -233,34 +232,3 @@ def gmm_hist_fit(rat: DataFrame, var_col: str = "mode_val",
         return codec.to_table(cols, _GMM_SCHEMA)
 
     return h.groupBy("cls").applyInArrow(fit, schema=_GMM_SCHEMA)
-
-
-def gmm_em_float(counts: np.ndarray, vmin: int, rounds: int = GMM_ROUNDS):
-    """Plain-float EM transcription (np.exp, float sums, no
-    quantisation) used by tests as the independent yardstick the pinned
-    kernel must track: same seeding, same fixed rounds, textbook
-    weighted-EM updates."""
-    total = int(counts.sum())
-    peaks = _find_peaks(counts, total)
-    if not peaks:
-        return None
-    sel = sorted(sorted(peaks, key=lambda i: (-counts[i], i))[:GMM_KMAX])
-    k = len(sel)
-    bw, half = GMM_BIN_WIDTH, GMM_BIN_WIDTH // 2
-    nz = np.nonzero(counts)[0]
-    c = (vmin + nz * bw + half).astype(np.float64)
-    w = counts[nz].astype(np.float64)
-    mu = np.array([vmin + i * bw + half for i in sel], dtype=np.float64)
-    var = np.full(k, GMM_VAR0)
-    pi = np.full(k, 1.0 / k)
-    for _ in range(rounds):
-        d = c[None, :] - mu[:, None]
-        dens = pi[:, None] * np.exp(
-            np.maximum(-(d * d) / (2.0 * var[:, None]), -700.0))
-        resp = dens / dens.sum(axis=0, keepdims=True)
-        s0 = (resp * w).sum(axis=1)
-        mu = (resp * w * c).sum(axis=1) / s0
-        var = np.clip((resp * w * c * c).sum(axis=1) / s0 - mu * mu,
-                      GMM_VAR_MIN, GMM_VAR_MAX)
-        pi = s0 / s0.sum()
-    return mu, var, pi

@@ -46,8 +46,9 @@ is one small row per clump.  ``collapse_rat`` is pure Catalyst (window
 
 At 100 TB the pass is embarrassingly parallel over images; the only
 wide exchange any consumer pays is over per-clump rows (~10^3 fewer
-than pixels).  Cross-tile images would use the seam-merge labeling of
-``clump_stats_tiled`` first, then the same per-clump math.
+than pixels).  Cross-tile images would need a seam merge of per-tile
+labels first (the scale note in ``operators.rasterize``), then the same
+per-clump math.
 """
 
 from __future__ import annotations
@@ -296,8 +297,8 @@ def clump_geo_stats(images: DataFrame, quant: int = 128,
     (python/src/rastergis.cpp method table; kernel
     src/rastergis/RSGISCalcClumpStats.cpp): per-clump mean pixel-CENTRE
     easting/northing and the corner-based world bbox, using the repo's
-    north-up geotransform convention (geo/geotransform.py: world =
-    tl + idx * res, y southward).
+    north-up geotransform convention (world = tl + idx * res, y
+    southward; reference: src/cmds/RSGISCmdImageUtils.cpp:357-361).
 
     Exactness: sum_x/sum_y are exact integers (run-sum formula in the
     oracle), the mean is one IEEE division, and each geo coordinate is

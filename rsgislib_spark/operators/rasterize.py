@@ -35,7 +35,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from ..functions import codec
 
 __all__ = ["rasterize_window", "label_components", "clump_stats",
-           "clump_stats_tiled", "polygonize_bboxes"]
+           "polygonize_bboxes"]
 
 
 def rasterize_window(spark: SparkSession, zones: DataFrame,
@@ -145,170 +145,6 @@ def polygonize_bboxes(images: DataFrame, threshold: int) -> DataFrame:
         out["bymax"].extend(int(v) + 1 for v in bymax[1:])
 
     return codec.map_images(images, per_image, _CLUMP_SCHEMA)
-
-
-_TILED_SCHEMA = StructType([
-    StructField("image_id", StringType()),
-    StructField("kind", LongType()),     # 0 = component, 1 = border cell
-    StructField("lab", LongType()),      # global provisional label
-    StructField("k", LongType()),        # border: seam key; comp: 0
-    StructField("side", LongType()),     # border: 0 = before seam, 1 = after
-    StructField("n", LongType()),        # comp: pixel count
-])
-
-_SEAM_V = 0  # vertical seam (between tile columns)
-_SEAM_H = 1 << 62
-
-
-def clump_stats_tiled(images: DataFrame, threshold: int,
-                      tile: int = 32, max_rounds: int = 24) -> DataFrame:
-    """Distributed connected components: per-TILE labels + seam merge.
-
-    The cluster-scale version of :func:`clump_stats` — the image never
-    has to fit in one task.  Classic label-equivalence algorithm:
-
-    1. tile the image (``tiling.tile_pixels`` rows, distributed); label
-       each tile independently; a component's provisional label is its
-       minimum *global* pixel index (deterministic across any tiling);
-    2. every tile also emits its border cells keyed by (seam, offset);
-       a self-join pairs the two sides of each seam into label-equivalence
-       edges — the only cross-tile data is one row per foreground border
-       pixel;
-    3. resolve equivalences by iterative min-root propagation over the
-       edge graph (Catalyst joins; converges in graph-diameter rounds,
-       checked);
-    4. roll up exact per-image clump stats from per-tile partial sizes.
-
-    Output matches :func:`clump_stats` exactly (tests/test_segmentation).
-    """
-    from .tiling import tile_pixels, tile_spec_df
-
-    specs = tile_spec_df(images.select("image_id", "w", "h"), tile, tile) \
-        .select("image_id", F.col("tile_idx").cast("int").alias("tile_idx"),
-                "txmin", "tymin", F.col("w").alias("img_w"),
-                F.col("h").alias("img_h"))
-    tiles = tile_pixels(images, tile, tile, encode=True) \
-        .join(specs, ["image_id", "tile_idx"])
-
-    tile_cols = ("image_id", "bytes", "tile_w", "tile_h", "fmt", "txmin",
-                 "tymin", "img_w", "img_h")
-
-    def rasterize_clump_stats_tiled(batches):
-        for batch in batches:
-            out = {n: [] for n in _TILED_SCHEMA.names}
-
-            def emit(image_id, kind, lab, k, side, n):
-                out["image_id"].append(image_id)
-                out["kind"].append(kind)
-                out["lab"].append(int(lab))
-                out["k"].append(int(k))
-                out["side"].append(int(side))
-                out["n"].append(int(n))
-
-            for (image_id, buf, tile_w, tile_h, fmt, x0, y0, iw,
-                 ih) in zip(*(batch.column(c).to_pylist()
-                             for c in tile_cols)):
-                arr = codec.decode_image(buf, tile_w, tile_h, fmt)
-                mask = arr.astype(np.int64) >= threshold
-                lab = label_components(mask)
-                th, tw = mask.shape
-                gidx = ((y0 + np.arange(th)[:, None]) * iw
-                        + (x0 + np.arange(tw)[None, :])).astype(np.int64)
-                nlab = int(lab.max())
-                if nlab:
-                    # provisional global label per local component =
-                    # min global pixel index
-                    glab = np.full(nlab + 1, np.iinfo(np.int64).max, np.int64)
-                    np.minimum.at(glab, lab.ravel(), gidx.ravel())
-                    sizes = np.bincount(lab.ravel(), minlength=nlab + 1)
-                    for c in range(1, nlab + 1):
-                        emit(image_id, 0, glab[c], 0, 0, sizes[c])
-                    # border cells: seams keyed so both sides join
-                    if x0 + tw < iw:                      # right edge
-                        sel = mask[:, tw - 1]
-                        ys = np.nonzero(sel)[0]
-                        for y in ys:
-                            emit(image_id, 1, glab[lab[y, tw - 1]],
-                                 _SEAM_V + (x0 + tw) * (1 << 21) + y0 + y,
-                                 0, 0)
-                    if x0 > 0:                            # left edge
-                        sel = mask[:, 0]
-                        for y in np.nonzero(sel)[0]:
-                            emit(image_id, 1, glab[lab[y, 0]],
-                                 _SEAM_V + x0 * (1 << 21) + y0 + y, 1, 0)
-                    if y0 + th < ih:                      # bottom edge
-                        sel = mask[th - 1, :]
-                        for x in np.nonzero(sel)[0]:
-                            emit(image_id, 1, glab[lab[th - 1, x]],
-                                 _SEAM_H + (y0 + th) * (1 << 21) + x0 + x,
-                                 0, 0)
-                    if y0 > 0:                            # top edge
-                        sel = mask[0, :]
-                        for x in np.nonzero(sel)[0]:
-                            emit(image_id, 1, glab[lab[0, x]],
-                                 _SEAM_H + y0 * (1 << 21) + x0 + x, 1, 0)
-            yield codec.to_batch(out, _TILED_SCHEMA)
-
-    # the inputs the rounds re-read are local checkpoints, not persisted
-    # frames: nothing enters the CacheManager, so a raise leaves none
-    # behind (NOTES lesson 9)
-    rows = tiles.mapInArrow(rasterize_clump_stats_tiled,
-                            schema=_TILED_SCHEMA).localCheckpoint(eager=False)
-    comps = rows.where(F.col("kind") == 0).select("image_id", "lab", "n")
-    borders = rows.where(F.col("kind") == 1).select("image_id", "lab",
-                                                    "k", "side")
-
-    b0 = borders.where(F.col("side") == 0).select(
-        "image_id", "k", F.col("lab").alias("lab_a"))
-    b1 = borders.where(F.col("side") == 1).select(
-        "image_id", "k", F.col("lab").alias("lab_b"))
-    edges = b0.join(b1, ["image_id", "k"]) \
-        .select("image_id", "lab_a", "lab_b").distinct()
-    edges_sym = edges.unionByName(
-        edges.select("image_id", F.col("lab_b").alias("lab_a"),
-                     F.col("lab_a").alias("lab_b"))) \
-        .localCheckpoint(eager=False)
-
-    # iterative min-root propagation to fixpoint
-    roots = comps.select("image_id", "lab",
-                         F.col("lab").alias("root")) \
-        .localCheckpoint(eager=False)
-    for _ in range(max_rounds):
-        nb = (
-            edges_sym
-            .join(roots.select("image_id",
-                               F.col("lab").alias("lab_b"),
-                               F.col("root").alias("nroot")),
-                  ["image_id", "lab_b"])
-            .groupBy("image_id", "lab_a")
-            .agg(F.min("nroot").alias("min_nb"))
-            .withColumnRenamed("lab_a", "lab")
-        )
-        # localCheckpoint truncates lineage so each round's plan stays
-        # flat (the iterative-join anti-pattern otherwise doubles the
-        # plan depth every round)
-        new_roots = (
-            roots.join(nb, ["image_id", "lab"], "left")
-            .select("image_id", "lab",
-                    F.least(F.col("root"),
-                            F.coalesce(F.col("min_nb"), F.col("root")))
-                    .alias("root"))
-        ).localCheckpoint()
-        changed = new_roots.alias("n").join(
-            roots.alias("o"), ["image_id", "lab"]) \
-            .where(F.col("n.root") != F.col("o.root")).limit(1).count()
-        roots = new_roots
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError("seam-merge did not converge")
-
-    sizes = comps.join(roots, ["image_id", "lab"]) \
-        .groupBy("image_id", "root").agg(F.sum("n").alias("n_pix"))
-    return sizes.groupBy("image_id").agg(
-        F.count(F.lit(1)).alias("n_clumps"),
-        F.max("n_pix").alias("max_clump"),
-        F.sum("n_pix").alias("n_fg"))
 
 
 def clump_stats(images: DataFrame, threshold: int) -> DataFrame:

@@ -615,7 +615,6 @@ def quickshift_segments(images: DataFrame) -> DataFrame:
     return codec.map_images(images, per_image, _QS_SCHEMA, dtype=np.int64)
 
 
-WS_ROUNDS = 48      # oracle relaxation unroll (margin pytest: <= 40)
 _WS_PACK = 512      # key = bottleneck * 512 + marker_id (m < 512)
 _WS_INF = np.int64(1) << 62
 
@@ -641,7 +640,7 @@ def watershed_basins(images: DataFrame) -> DataFrame:
       integer min == lexicographic (bottleneck, marker) min — the same
       pack-trick as the quickshift oracle);
     * relax to fixpoint: key_p = min(key_p, pack(max(b_q, c_p), m_q))
-      over the 4 neighbours q; the oracle unrolls WS_ROUNDS=48 rounds
+      over the 4 neighbours q; the oracle unrolls 48 rounds
       and test_segmentation asserts corpus convergence within 40
       (NOTES lesson-20 margin discipline).  Images whose grid has no
       strict local minimum would flood nothing (key stays INF) — both

@@ -7,7 +7,7 @@ Here the *tile-spec generation is pure Catalyst column arithmetic* — no
 UDF, no shuffle: ``explode(sequence(...))`` fans each image row out to its
 tiles, and every window coordinate is derived from ``(w, h, tile_idx)``
 with the reference's exact remainder/overlap/clamp rules (the pure-python
-oracle for this arithmetic lives in ``geo.tilegrid`` and is unit-tested
+oracle for this arithmetic is ``geo.tilegrid.tile_specs``, unit-tested
 against the reference's documented 931x947@200 => 25-tile case,
 python_tests/test_imageutils.py:643-655).
 

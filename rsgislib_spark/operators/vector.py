@@ -16,9 +16,9 @@ whole-stage-codegen'd JVM arithmetic, the cheapest possible plan shape):
   ``spark.range`` (a parallel, partitioned source — no driver loop);
 * reprojection — ``reproj_wgs84_vec_to_utm`` (reference:
   vectorutils/__init__.py:2459) as a local transverse-mercator-style
-  affine (exact column arithmetic) plus a true web-mercator transform
-  (``F.radians/F.tan/F.log``) for the EPSG:3857 path (reference:
-  tools/geometrytools.py:541 ``reproj_point``);
+  affine (exact column arithmetic); the EPSG:3857 web-mercator forward
+  (reference: tools/geometrytools.py:541 ``reproj_point``) is
+  ``geo.webmerc``, on the same pinned polynomial trig;
 * attribute helpers — ``find_replace_str_vec_lyr`` (vectorattrs/
   __init__.py:881) -> ``replace``; ``sort_vec_lyr`` + ``add_fid_col``
   (vectorattrs/__init__.py:828,756) -> ``row_number`` over an explicit
@@ -49,17 +49,12 @@ __all__ = [
     "create_hex_grid_bbox",
     "reproj_wgs84_to_utm",
     "reproj_epsg",
-    "reproj_webmerc",
     "unwrap_bbox",
-    "wgs84_cell_area_m2",
     "wgs84_pixel_area_exact_sql",
     "find_replace_str",
     "rank_layer",
     "merge_layers",
 ]
-
-_R_MAJOR = 6378137.0  # WGS84 semi-major axis (web-mercator sphere radius)
-
 
 def add_geom_bbox_cols(df: DataFrame, xmin: str = "zxmin", xmax: str = "zxmax",
                        ymin: str = "zymin", ymax: str = "zymax") -> DataFrame:
@@ -271,45 +266,14 @@ def _apply_expr_steps(df: DataFrame, steps, finals: dict) -> DataFrame:
     return df.drop(*[name for name, _ in steps])
 
 
-def reproj_webmerc(df: DataFrame, lon: str = "lon", lat: str = "lat",
-                   x_out: str = "mx", y_out: str = "my") -> DataFrame:
-    """True EPSG:4326 -> EPSG:3857 web-mercator transform (Catalyst math).
-
-    x = R*radians(lon); y = R*ln(tan(pi/4 + radians(lat)/2)).  Transcendental
-    (libm) results may differ in the last ulp across engines, so parity
-    checks use a tolerance (tests/test_vector_ops.py), not the exact-hash
-    oracle path.
-    """
-    rad_lat = F.radians(F.col(lat))
-    return (
-        df.withColumn(x_out, F.lit(_R_MAJOR) * F.radians(F.col(lon)))
-        .withColumn(y_out, F.lit(_R_MAJOR)
-                    * F.log(F.tan(F.lit(math.pi / 4.0) + rad_lat / 2.0)))
-    )
-
-
-def wgs84_cell_area_m2(df: DataFrame, lat: str = "lat",
-                       res_deg: float = 0.001,
-                       out: str = "px_area_m2") -> DataFrame:
-    """Approximate geodesic area (m^2) of one pixel at each row's latitude.
+def wgs84_pixel_area_exact_sql(lat: str, res_deg: float) -> str:
+    """Approximate geodesic area (m^2) of one pixel at latitude ``lat``,
+    as oracle-exact SQL text.
 
     Reference: ``calc_wgs84_pixel_area`` (imageutils/__init__.py:2722) —
-    spherical approximation area = (res*110540) * (res*111320*cos(lat)).
-    Transcendental (cos), so parity checks use tolerance in pytest (like
-    reproj_webmerc), not the exact-hash oracle path.
-    """
-    return df.withColumn(
-        out,
-        F.lit(res_deg * 110540.0) * F.lit(res_deg * 111320.0)
-        * F.cos(F.radians(F.col(lat))))
-
-
-def wgs84_pixel_area_exact_sql(lat: str, res_deg: float) -> str:
-    """Oracle-exact SQL text for :func:`wgs84_cell_area_m2`.
-
-    Same spherical formula (imageutils/__init__.py:2722) but with the
-    constant product folded driver-side into one :func:`dlit` literal
-    and libm ``cos`` replaced by the shared degree-14 polynomial
+    spherical approximation area = (res*110540) * (res*111320*cos(lat)),
+    with the constant product folded driver-side into one :func:`dlit`
+    literal and libm ``cos`` replaced by the shared degree-14 polynomial
     (:func:`rsgislib_spark.geo.transverse_mercator.cos_sql`), so Spark
     and DuckDB evaluate the identical IEEE operation sequence and the
     exact value-hash gate applies.  Valid for ``|lat| <= 90`` deg.

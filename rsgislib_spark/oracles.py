@@ -240,7 +240,6 @@ FROM img a JOIN img b
 GROUP BY a.image_id
 """
 
-_PMAX = synth.pmax_sql("fmt")
 _PXV = synth.pixel_value_sql("id", "x", "y", "fmt")
 
 _RD = "CAST(0.001 AS DOUBLE)"   # IMG_RES_DEG as an explicit DOUBLE
@@ -1900,8 +1899,8 @@ FROM e
 def _tri_intersect_pred() -> str:
     """Triangle-vs-triangle intersects predicate over pair columns
     (axmn/axmx/aymn/aymx, bxmn/...), unrolled to plain arithmetic —
-    the exact algorithm of geo.geometry.polys_intersect (first-vertex
-    PIP both ways + 3x3 proper edge crossings)."""
+    GEOS-style ``intersects`` for two simple polygons: first-vertex
+    PIP both ways, or any of the 3x3 proper edge crossings."""
     ta = [("axmn", "aymn"), ("axmx", "aymn"), ("axmn", "aymx")]
     tb = [("bxmn", "bymn"), ("bxmx", "bymn"), ("bxmn", "bymx")]
 

@@ -1121,7 +1121,7 @@ def q_clump_eliminate(spark, sf_dir) -> DataFrame:
 def q_clump_locations(spark, sf_dir) -> DataFrame:
     """rastergis.clumps_spatial_location + clumps_spatial_extent:
     per-clump mean pixel-centre easting/northing and corner-based
-    world bbox (north-up geotransform, res 0.001 deg)."""
+    world bbox (north-up: world = tl + idx * res, res 0.001 deg)."""
     img = _px_images(spark, sf_dir, mod=19, rows_per_task=32)
     return clump_geo_stats(img, quant=128, res=0.001) \
         .select("image_id", "clump_id", "n_pix", "mean_e", "mean_n",
@@ -2748,9 +2748,10 @@ def q_unwrap_bbox(spark, sf_dir) -> DataFrame:
 
 @query
 def q_bbox_algebra(spark, sf_dir) -> DataFrame:
-    """bbox_intersection / find_bbox_union / calc_bbox_area over every
-    strictly-intersecting zone pair (tools/geometrytools.py:82-506) —
-    pure Catalyst min/max arithmetic (§2.8, §2.9)."""
+    """rsgislib's bbox_intersection / find_bbox_union / calc_bbox_area
+    over every strictly-intersecting zone pair
+    (tools/geometrytools.py:82-506) — pure Catalyst min/max arithmetic
+    (§2.8, §2.9)."""
     zones = synth.synth_zones(spark, sf_dir)
     a = zones.alias("a")
     b = zones.alias("b")

@@ -9,10 +9,9 @@ codecs the container lacks are STUBBED exactly as the task prescribes:
 * image jpeg: deterministic quantization stub (codec.decode_jpeg_stub)
   bounded to PSNR >= 40 dB; raises NotImplementedError for real JPEG
   payloads;
-* audio/video: no codec libs in this container -> ``decode_media`` raises
-  NotImplementedError for them (the Spark kernels below decode through
-  ``codec.map_images``, which takes image formats only and raises
-  ValueError for any other); ``frame_sample`` demonstrates the real
+* audio/video: no codec library is available; the Spark kernels below
+  decode through ``codec.map_images``, which takes image formats only and
+  raises ValueError for any other.  ``frame_sample`` demonstrates the real
   row-strided sampling plumbing on raster payloads (a video frame is one
   more leading dimension of the same layout).
 
@@ -33,22 +32,10 @@ from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType,
 from ..functions import codec
 from ..functions.groupmode import group_mode
 
-__all__ = ["decode_media", "resize_nn", "resize_bilinear_stats",
+__all__ = ["resize_nn", "resize_bilinear_stats",
            "resize_cubic_stats", "resize_cubicspline_stats",
            "resize_lanczos_stats", "resize_average_stats",
            "resize_mode_stats", "frame_sample_stats", "audio_window_rms"]
-
-_IMAGE_FMTS = {"raw8", "raw16", "png", "jpeg"}
-
-
-def decode_media(buf: bytes, w: int, h: int, fmt: str) -> np.ndarray:
-    """Decode any supported media payload; raise for absent codecs."""
-    if fmt in _IMAGE_FMTS:
-        return codec.decode_image(buf, w, h, fmt)
-    raise NotImplementedError(
-        f"no {fmt!r} codec in this container; plug a decoder in here "
-        "(audio -> (channels, samples), video -> (frames, h, w))"
-    )
 
 
 _RESIZE_SCHEMA = StructType([

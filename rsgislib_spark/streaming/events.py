@@ -8,9 +8,9 @@ streaming surface the new engine owes a modern pipeline:
   whole backlog as micro-batches then stops — the batch-parity mode).
   ``complete`` output keeps every window so the result equals the batch
   aggregation bit-for-bit (counts/min/max only — no float accumulation);
-* ``stream_hourly_counts_append`` — the production shape: watermarked
-  append mode that emits each window once it can no longer receive late
-  data (late rows beyond the watermark are dropped);
+* ``stream_dedup`` — watermarked ``dropDuplicatesWithinWatermark``;
+* ``sessionize_stream`` — stateful gap sessionization with
+  ``applyInPandasWithState``;
 * ``sessionize_batch`` — gap-based sessionization as pure window
   functions (lag + cumulative sum over an explicit total order) — the
   batch semantics that a streaming ``applyInPandasWithState``
@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 __all__ = [
     "stream_hourly_counts",
-    "stream_hourly_counts_append",
     "stream_dedup",
     "sessionize_batch",
     "sessionize_stream",
@@ -76,26 +75,6 @@ def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events", "min_value", "max_value")
     )
     return _run_to_memory(agg, "complete")
-
-
-def stream_hourly_counts_append(spark: SparkSession, sf_dir: str,
-                                watermark: str = "2 hours") -> DataFrame:
-    """Watermarked append mode: only finalized windows are emitted.
-
-    Windows newer than ``max(ts) - watermark`` stay open (could still
-    receive late rows) and are withheld — the correct production
-    behaviour, checked in tests rather than against the batch oracle.
-    """
-    # watermarks require TIMESTAMP (not NTZ); session tz is pinned UTC
-    ev = _events_stream(spark, sf_dir) \
-        .withColumn("ts", F.col("ts").cast("timestamp")) \
-        .withWatermark("ts", watermark)
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("win.start").alias("hour"), "event_type", "n_events")
-    )
-    return _run_to_memory(agg, "append")
 
 
 def sessionize_stream(spark: SparkSession, sf_dir: str,

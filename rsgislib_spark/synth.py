@@ -49,14 +49,12 @@ from .functions import codec
 
 __all__ = [
     "IMG_RES_DEG",
-    "CORE_COLUMNS",
     "images_sql",
     "zones_sql",
     "synth_images",
     "synth_zones",
     "pixel_array",
     "pixel_planes",
-    "fmt_of_id",
     "pmax",
     "pmax_sql",
     "pixel_value_sql",
@@ -64,9 +62,6 @@ __all__ = [
 
 #: ground resolution of every synthetic image, degrees per pixel
 IMG_RES_DEG = 0.001
-
-CORE_COLUMNS = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
-
 
 def _str_type(dialect: str) -> str:
     return "STRING" if dialect == "spark" else "VARCHAR"
@@ -191,14 +186,6 @@ def pixel_value_sql(id_expr: str = "id", x: str = "x", y: str = "y",
                     fmt_expr: str = "fmt") -> str:
     """Closed-form pixel value v(id, x, y) as portable SQL."""
     return f"(({id_expr} * 31 + {x} * 7 + {y} * 13) % {pmax_sql(fmt_expr)})"
-
-
-def fmt_of_id(ids: np.ndarray) -> np.ndarray:
-    m = np.asarray(ids) % 4
-    out = np.full(m.shape, "raw16", dtype=object)
-    out[m == 1] = "raw8"
-    out[m == 2] = "png"
-    return out
 
 
 def pixel_array(img_id: int, w: int, h: int, fmt: str) -> np.ndarray:

@@ -232,20 +232,6 @@ def test_run_resumable_crash_during_data_write(spark, sf_dir, tmp_path):
         rows(os.path.join(clean, "data"))
 
 
-def test_write_partitioned_roundtrip(spark, sf_dir, tmp_path):
-    from rsgislib_spark import synth
-    from rsgislib_spark.operators.spatial_join import with_point_cell
-    from rsgislib_spark.sources.sinks import write_partitioned
-
-    img = with_point_cell(
-        synth.synth_images(spark, sf_dir, with_footprint=False)) \
-        .select("cell", "image_id", "phash")
-    path = str(tmp_path / "sink")
-    write_partitioned(img, path, sort_cols=("image_id",))
-    back = spark.read.parquet(path)
-    assert back.count() == img.count()
-
-
 def test_band_math_b2_bound():
     """ADVICE r2: 'b2' is whitelisted by validate_band_math, so the
     eval env must bind it (the mirrored plane, the engine's standing

@@ -11,6 +11,8 @@ import numpy as np
 
 from rsgislib_spark import synth
 
+from synthref import fmt_of_id
+
 _Q = 1048576.0
 _K = 4
 
@@ -20,7 +22,7 @@ def _planes(n=40, mod=19):
         img_id = k * mod
         w = 32 + (img_id * 7) % 97
         h = 32 + (img_id * 13) % 97
-        fmt = synth.fmt_of_id(np.array([img_id]))[0]
+        fmt = fmt_of_id(np.array([img_id]))[0]
         v = synth.pixel_array(img_id, w, h, fmt).astype(np.int64)
         pmax = 256 if fmt in ("raw8", "png") else 1024
         x = np.arange(w, dtype=np.int64)[None, :]

@@ -1,4 +1,5 @@
-"""Codec layer: roundtrips, PNG filter decoding, PSNR invariant."""
+"""Codec layer: roundtrips, PNG filter decoding, PSNR invariant, payload
+size checks against the row's metadata."""
 
 import numpy as np
 import pytest
@@ -70,11 +71,40 @@ def test_png_filtered_scanlines_decode():
     assert np.array_equal(codec.decode_png(png), arr)
 
 
+def psnr(ref: np.ndarray, test: np.ndarray, peak: float | None = None) -> float:
+    """Peak signal-to-noise ratio in dB (inf for identical arrays)."""
+    ref = np.asarray(ref, np.float64)
+    test = np.asarray(test, np.float64)
+    mse = float(np.mean((ref - test) ** 2))
+    if mse == 0.0:
+        return float("inf")
+    if peak is None:
+        peak = float(ref.max()) or 1.0
+    return 10.0 * np.log10(peak * peak / mse)
+
+
 def test_jpeg_stub_psnr_above_40db():
     arr = pixel_array(5, 120, 80, "raw16")
     out = codec.decode_jpeg_stub(codec.encode_jpeg_stub(arr))
-    assert codec.psnr(arr, out, peak=1023.0) >= 40.0
-    assert codec.psnr(arr, arr) == float("inf")
+    assert psnr(arr, out, peak=1023.0) >= 40.0
+    assert psnr(arr, arr) == float("inf")
+
+
+@pytest.mark.parametrize("fmt", ["png", "jpeg"])
+def test_decode_checks_payload_size_against_metadata(fmt):
+    """A 3x4 payload read as a 2x6 row raises, for JPEG as for PNG."""
+    arr = np.arange(12, dtype=np.uint16).reshape(3, 4)
+    buf = codec.encode_image(arr, fmt)
+    assert codec.decode_image(buf, 4, 3, fmt).shape == (3, 4)
+    with pytest.raises(ValueError, match=f"{fmt} size mismatch vs metadata"):
+        codec.decode_image(buf, 2, 6, fmt)
+
+
+def test_png_without_ihdr_raises_value_error():
+    buf = codec.encode_png(np.zeros((2, 2), np.uint8))
+    n = 8 + 12 + 13                       # signature + the IHDR chunk
+    with pytest.raises(ValueError, match="no IHDR"):
+        codec.decode_png(buf[:8] + buf[n:])
 
 
 def test_jpeg_real_decode_is_stubbed():

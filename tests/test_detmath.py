@@ -9,6 +9,8 @@ import numpy as np
 from rsgislib_spark import synth
 from rsgislib_spark.functions.detmath import LN2, ln_chain_sql, ln_pos_np
 
+from synthref import fmt_of_id
+
 _Q = 1048576.0
 
 
@@ -46,7 +48,7 @@ def _planes(n=12, mod=19):
         img_id = k * mod
         w = 32 + (img_id * 7) % 97
         h = 32 + (img_id * 13) % 97
-        fmt = synth.fmt_of_id(np.array([img_id]))[0]
+        fmt = fmt_of_id(np.array([img_id]))[0]
         v = synth.pixel_array(img_id, w, h, fmt).astype(np.int64)
         pmax = 256 if fmt in ("raw8", "png") else 1024
         yield v, pmax

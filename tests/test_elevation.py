@@ -21,13 +21,15 @@ from rsgislib_spark.operators.elevation import (aspect_categories,
                                                 horn_gradients,
                                                 slope_class_thresholds)
 
+from synthref import fmt_of_id
+
 
 def _corpus_planes(n=40, mod=19):
     for k in range(n):
         img_id = k * mod
         w = 32 + (img_id * 7) % 97
         h = 32 + (img_id * 13) % 97
-        fmt = synth.fmt_of_id(np.array([img_id]))[0]
+        fmt = fmt_of_id(np.array([img_id]))[0]
         v = synth.pixel_array(img_id, w, h, fmt).astype(np.int64)
         x = np.arange(w, dtype=np.int64)[None, :]
         y = np.arange(h, dtype=np.int64)[:, None]
@@ -181,7 +183,7 @@ def test_6s_branches_live_and_match_reference():
     for k in range(10):
         img_id = k * 19
         w, h = 32 + (img_id * 7) % 97, 32 + (img_id * 13) % 97
-        fmt = synth.fmt_of_id(np.array([img_id]))[0]
+        fmt = fmt_of_id(np.array([img_id]))[0]
         v = synth.pixel_array(img_id, w, h, fmt).astype(np.int64)
         A, B, C = DEFAULT_6S[0]
         y = A * v - B
@@ -205,7 +207,7 @@ def test_6s_branches_live_and_match_reference():
 def test_dos_invariants():
     img_id = 38
     w, h = 32 + (img_id * 7) % 97, 32 + (img_id * 13) % 97
-    fmt = synth.fmt_of_id(np.array([img_id]))[0]
+    fmt = fmt_of_id(np.array([img_id]))[0]
     v = synth.pixel_array(img_id, w, h, fmt).astype(np.int64)
     nodata = v == 0
     off = int(v[~nodata].min())
@@ -256,7 +258,7 @@ def test_fill_soille_gratin_matches_priority_flood():
         img_id = k * 19
         w = 32 + (img_id * 7) % 97
         h = 32 + (img_id * 13) % 97
-        fmt = synth.fmt_of_id(np.array([img_id]))[0]
+        fmt = fmt_of_id(np.array([img_id]))[0]
         v = synth.pixel_array(img_id, w, h, fmt).astype(np.int64)
         x = np.arange(w, dtype=np.int64)[None, :]
         y = np.arange(h, dtype=np.int64)[:, None]

@@ -15,9 +15,57 @@ import pytest
 
 duckdb = pytest.importorskip("duckdb")
 
-from rsgislib_spark.geo.conic import (EPSG_CONIC, _lcc_dpsi_fit,
-                                      conic_forward_sql, epsg_conic_params,
-                                      ref_forward)
+from rsgislib_spark.geo.conic import (EPSG_CONIC, ConicParams, _lcc_consts,
+                                      _lcc_dpsi_fit, _m, _q, _t,
+                                      conic_forward_sql)
+
+
+def epsg_conic_params(epsg: int) -> ConicParams:
+    try:
+        return EPSG_CONIC[int(epsg)]
+    except KeyError:
+        raise ValueError(
+            f"EPSG:{epsg} is not a registered conic/azimuthal CRS; "
+            "supported: 5070/3577 (Albers), 2154/3978/3034 (LCC), "
+            "3035 (LAEA)") from None
+
+
+def ref_forward(p: ConicParams, lon_deg: float,
+                lat_deg: float) -> tuple[float, float]:
+    """Full-libm Snyder forward — the independent accuracy reference
+    (math.tan/log/pow/exp throughout; no shared code with the SQL
+    path).  pyproj evaluates the same model for these CRSs."""
+    phi = math.radians(lat_deg)
+    if p.family == "lcc":
+        n, f_, rho0 = _lcc_consts(p)
+        rho = p.a * f_ * _t(p, phi) ** n
+        th = n * math.radians(lon_deg - p.lon0)
+        return p.fe + rho * math.sin(th), p.fn + rho0 - rho * math.cos(th)
+    if p.family == "albers":
+        phi1, phi2 = math.radians(p.lat1), math.radians(p.lat2)
+        m1, m2 = _m(p, phi1), _m(p, phi2)
+        q1, q2 = _q(p, phi1), _q(p, phi2)
+        n = (m1 * m1 - m2 * m2) / (q2 - q1)
+        c_ = m1 * m1 + n * q1
+        rho0 = p.a * math.sqrt(c_ - n * _q(p, math.radians(p.lat0))) / n
+        rho = p.a * math.sqrt(c_ - n * _q(p, phi)) / n
+        th = n * math.radians(lon_deg - p.lon0)
+        return p.fe + rho * math.sin(th), p.fn + rho0 - rho * math.cos(th)
+    if p.family == "laea":
+        qp = _q(p, math.pi / 2.0)
+        sb0 = _q(p, math.radians(p.lat0)) / qp
+        cb0 = math.sqrt(1.0 - sb0 * sb0)
+        rq = p.a * math.sqrt(qp / 2.0)
+        d_ = p.a * _m(p, math.radians(p.lat0)) / (rq * cb0)
+        sb = _q(p, phi) / qp
+        cb = math.sqrt(1.0 - sb * sb)
+        dlam = math.radians(lon_deg - p.lon0)
+        b = rq * math.sqrt(2.0 / (1.0 + sb0 * sb + cb0 * cb
+                                  * math.cos(dlam)))
+        return (p.fe + b * d_ * cb * math.sin(dlam),
+                p.fn + (b / d_) * (cb0 * sb - sb0 * cb * math.cos(dlam)))
+    raise ValueError(f"unknown conic family {p.family!r}")
+
 
 #: Ground-truth forward coordinates, precomputed at 50-digit precision
 #: (mpmath) from the EPSG Guidance Note 7-2 / Snyder ellipsoidal

@@ -1,112 +1,31 @@
-"""Geotransform / bbox / cellindex / geometry kernels."""
+"""Cellindex / geometry kernels."""
 
 import numpy as np
 
-from rsgislib_spark.geo import bbox as B
 from rsgislib_spark.geo import cellindex as CI
 from rsgislib_spark.geo import geometry as G
-from rsgislib_spark.geo.geotransform import (make_geotransform, pixel_to_world,
-                                             point_to_pixel,
-                                             world_bbox_to_pixel_window)
 
 
-def ref_window(gt, size_x, size_y, xmin, xmax, ymin, ymax):
-    """Literal transliteration of zonalstats/__init__.py:344-396 (scalar)."""
-    pixel_width, pixel_height = gt[1], gt[5]
-    x1Sp = float(xmin - gt[0]); x2Sp = float(xmax - gt[0])
-    y1Sp = float(ymax - gt[3]); y2Sp = float(ymin - gt[3])
-    x1 = 0 if x1Sp == 0.0 else int(x1Sp / pixel_width) - 1
-    x2 = 0 if x2Sp == 0.0 else int(x2Sp / pixel_width) + 1
-    y1 = 0 if y1Sp == 0.0 else int(y1Sp / pixel_height) - 1
-    y2 = 0 if y2Sp == 0.0 else int(y2Sp / pixel_height) + 1
-    x1 = min(max(x1, 0), size_x - 1); x2 = min(max(x2, 0), size_x - 1)
-    y1 = min(max(y1, 0), size_y - 1); y2 = min(max(y2, 0), size_y - 1)
-    return x1, y1, x2 - x1, y2 - y1
-
-
-def test_bbox_window_matches_reference_rule():
-    gt = make_geotransform(1000.0, 2000.0, 10.0, 10.0)
-    rng = np.random.RandomState(42)
-    for _ in range(500):
-        x0 = 1000.0 + rng.uniform(-200, 1200)
-        y1 = 2000.0 - rng.uniform(-200, 1200)
-        bx = (x0, x0 + rng.uniform(0, 400), y1 - rng.uniform(0, 400), y1)
-        exp = ref_window(gt, 100, 100, bx[0], bx[1], bx[2], bx[3])
-        got = world_bbox_to_pixel_window(gt, 100, 100, bx[0], bx[1], bx[2], bx[3])
-        assert tuple(int(v) for v in got) == exp
-
-
-def test_bbox_window_edge_snap_zero():
-    gt = make_geotransform(0.0, 0.0, 1.0, 1.0)
-    x1, y1, xs, ys = world_bbox_to_pixel_window(gt, 10, 10, 0.0, 5.0, -5.0, 0.0)
-    assert (int(x1), int(y1)) == (0, 0)
-    assert (int(xs), int(ys)) == (6, 6)   # +1 expansion on the max edge
-
-
-def test_point_to_pixel_rules():
-    gt = make_geotransform(100.0, 200.0, 10.0, 10.0)
-    # point exactly on origin -> pixel 0 (==0.0 snap)
-    x, y, ok = point_to_pixel(gt, 50, 50, 100.0, 200.0)
-    assert (int(x), int(y), bool(ok)) == (0, 0, True)
-    # interior point: trunc(off/res) - 1
-    x, y, ok = point_to_pixel(gt, 50, 50, 155.0, 175.0)
-    assert (int(x), int(y)) == (int(55.0 / 10) - 1, int(25.0 / 10) - 1)
-    # outside
-    _, _, ok = point_to_pixel(gt, 50, 50, 99.0, 210.0)
-    assert not bool(ok)
-
-
-def test_pixel_to_world_roundtrip():
-    gt = make_geotransform(-10.0, 60.0, 0.5, 0.25)
-    x, y = pixel_to_world(gt, 4, 8)
-    assert (float(x), float(y)) == (-8.0, 58.0)
-
-
-def test_bbox_algebra_reference_semantics():
-    a = [0.0, 10.0, 0.0, 10.0]
-    b = [10.0, 20.0, 0.0, 10.0]      # touching edge
-    assert not B.do_bboxes_intersect(a, b)   # strict inequality
-    c = [9.0, 12.0, -1.0, 5.0]
-    assert B.do_bboxes_intersect(a, c)
-    assert B.bbox_intersection(a, c) == [9.0, 10.0, 0.0, 5.0]
-    assert B.does_bbox_contain([0, 10, 0, 10], [1, 9, 1, 9])
-    assert not B.does_bbox_contain([0, 10, 0, 10], [0, 9, 1, 9])  # shared edge
-    assert B.find_bbox_union([a, b]) == [0.0, 20.0, 0.0, 10.0]
-    assert B.buffer_bbox(a, 2.0) == [-2.0, 12.0, -2.0, 12.0]
-    assert B.calc_bbox_area(a) == 100.0
-    try:
-        B.bbox_intersection(a, b)
-        assert False
-    except ValueError:
-        pass
+def _decode(cells):
+    """(res, nx, ny) of the cell layout ``res * 2^58 + nx * 2^29 + ny``."""
+    cells = np.asarray(cells, np.int64)
+    return cells >> 58, (cells >> 29) & (2 ** 29 - 1), cells & (2 ** 29 - 1)
 
 
 def test_cellindex_roundtrip_and_bounds():
     rng = np.random.RandomState(7)
     lon = rng.uniform(-180, 180, 1000)
     lat = rng.uniform(-90, 90, 1000)
-    cells = CI.cell_of_point(lon, lat)
-    lonmin, lonmax, latmin, latmax = CI.cell_bounds(cells)
-    assert np.all((lon >= lonmin) & (lon < lonmax + 1e-9))
-    assert np.all((lat >= latmin) & (lat < latmax + 1e-9))
+    res, nx, ny = _decode(CI.cell_of_point(lon, lat))
+    n = 1 << CI.DEFAULT_RES
+    assert (res == CI.DEFAULT_RES).all()
+    lonmin, latmin = -180.0 + nx * (360.0 / n), -90.0 + ny * (180.0 / n)
+    assert np.all((lon >= lonmin) & (lon < lonmin + 360.0 / n + 1e-9))
+    assert np.all((lat >= latmin) & (lat < latmin + 180.0 / n + 1e-9))
     # boundary clamps
     edge = CI.cell_of_point(np.array([180.0, -180.0]), np.array([90.0, -90.0]))
-    r, nx, ny = CI.cell_decode(edge)
-    n = 1 << CI.DEFAULT_RES
+    _, nx, ny = _decode(edge)
     assert nx.tolist() == [n - 1, 0] and ny.tolist() == [n - 1, 0]
-
-
-def test_cellindex_kring_and_parent():
-    c = int(CI.cell_of_point(np.array([10.0]), np.array([45.0]))[0])
-    ring = CI.k_ring(c, 1)
-    assert ring.shape[0] == 9 and c in ring.tolist()
-    # ring clamps at the pole row
-    cp = int(CI.cell_of_point(np.array([0.0]), np.array([89.99]))[0])
-    assert CI.k_ring(cp, 1).shape[0] == 6
-    # parent contains the point
-    p = CI.parent(np.array([c]), CI.DEFAULT_RES - 3)[0]
-    lonmin, lonmax, latmin, latmax = CI.cell_bounds(np.array([p]))
-    assert lonmin[0] <= 10.0 < lonmax[0] and latmin[0] <= 45.0 < latmax[0]
 
 
 def test_polyfill_bbox_covers():
@@ -128,16 +47,16 @@ def test_point_in_polygon_square_and_triangle():
 
 
 def test_polygon_predicates():
-    sq = np.array([[0, 0], [10, 0], [10, 10], [0, 10]], float)
-    inner = np.array([[2, 2], [8, 2], [8, 8], [2, 8]], float)
-    far = inner + 100.0
-    cross = inner + 5.0
-    assert G.polys_intersect(sq, inner)
-    assert G.polys_intersect(sq, cross)
-    assert not G.polys_intersect(sq, far)
-    assert G.poly_within_poly(inner, sq)
-    assert not G.poly_within_poly(cross, sq)
-    assert G.polygon_area(sq) == 100.0
+    """Pair predicates of a square against a ring inside it, one across
+    its corner and one far away."""
+    sq = [[0, 0], [10, 0], [10, 10], [0, 10]]
+    inner = [[2, 2], [8, 2], [8, 8], [2, 8]]
+    cross = [[x + 5, y + 5] for x, y in inner]
+    far = [[x + 100, y + 100] for x, y in inner]
+    hits = G.poly_pair_predicate([sq] * 3, [inner, cross, far], "intersects")
+    assert hits.tolist() == [True, True, False]
+    within = G.poly_pair_predicate([inner, cross], [sq, sq], "within")
+    assert within.tolist() == [True, False]
 
 
 def test_pair_predicate_nonconvex_concavity_rejected():

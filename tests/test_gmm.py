@@ -9,9 +9,9 @@ import pytest
 
 from rsgislib_spark.functions.detmath import exp_chain_sql, exp_np
 from rsgislib_spark.operators.gmm import (GMM_BIN_WIDTH, GMM_KMAX,
-                                          GMM_MIX_EPS, GMM_VAR0,
-                                          _classify, _em_rounds,
-                                          _find_peaks, gmm_em_float)
+                                          GMM_MIX_EPS, GMM_ROUNDS, GMM_VAR0,
+                                          GMM_VAR_MAX, GMM_VAR_MIN,
+                                          _classify, _em_rounds, _find_peaks)
 
 
 def test_exp_accuracy_and_boundaries():
@@ -37,6 +37,37 @@ def test_exp_bit_equal_duckdb():
     sql = exp_chain_sql("SELECT xv FROM t", "xv", "ex")
     d = con.sql(f"SELECT xv, ex FROM ({sql}) ORDER BY xv").df()
     assert (d["ex"].values == exp_np(np.sort(xs))).all()
+
+
+def gmm_em_float(counts: np.ndarray, vmin: int, rounds: int = GMM_ROUNDS):
+    """Plain-float EM transcription (np.exp, float sums, no
+    quantisation): the independent yardstick the pinned kernel must
+    track — same seeding, same fixed rounds, textbook weighted-EM
+    updates."""
+    total = int(counts.sum())
+    peaks = _find_peaks(counts, total)
+    if not peaks:
+        return None
+    sel = sorted(sorted(peaks, key=lambda i: (-counts[i], i))[:GMM_KMAX])
+    k = len(sel)
+    bw, half = GMM_BIN_WIDTH, GMM_BIN_WIDTH // 2
+    nz = np.nonzero(counts)[0]
+    c = (vmin + nz * bw + half).astype(np.float64)
+    w = counts[nz].astype(np.float64)
+    mu = np.array([vmin + i * bw + half for i in sel], dtype=np.float64)
+    var = np.full(k, GMM_VAR0)
+    pi = np.full(k, 1.0 / k)
+    for _ in range(rounds):
+        d = c[None, :] - mu[:, None]
+        dens = pi[:, None] * np.exp(
+            np.maximum(-(d * d) / (2.0 * var[:, None]), -700.0))
+        resp = dens / dens.sum(axis=0, keepdims=True)
+        s0 = (resp * w).sum(axis=1)
+        mu = (resp * w * c).sum(axis=1) / s0
+        var = np.clip((resp * w * c * c).sum(axis=1) / s0 - mu * mu,
+                      GMM_VAR_MIN, GMM_VAR_MAX)
+        pi = s0 / s0.sum()
+    return mu, var, pi
 
 
 def _synthetic_hist(rng, k):

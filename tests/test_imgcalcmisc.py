@@ -6,6 +6,8 @@ import numpy as np
 from rsgislib_spark import synth
 from rsgislib_spark.operators.imgcalcmisc import ENV_DEFAULT
 
+from synthref import fmt_of_id
+
 L0, L1, B0, B1 = ENV_DEFAULT
 RES = synth.IMG_RES_DEG
 
@@ -15,7 +17,7 @@ def _imgs(n=106, mod=19):
         img_id = k * mod
         w = 32 + (img_id * 7) % 97
         h = 32 + (img_id * 13) % 97
-        fmt = synth.fmt_of_id(np.array([img_id]))[0]
+        fmt = fmt_of_id(np.array([img_id]))[0]
         v = synth.pixel_array(img_id, w, h, fmt).astype(np.int64)
         yield img_id, v, v[:, ::-1]
 

@@ -1,5 +1,5 @@
-"""Checkpoint/resume lineage protocol, streaming append mode, multimodal
-stub behaviour."""
+"""Checkpoint/resume lineage protocol, streaming parity with the batch
+path, multimodal stub behaviour."""
 
 import os
 import sys
@@ -162,23 +162,6 @@ def test_resume_ignores_duplicated_lineage_cell(spark, sf_dir, tmp_path):
     assert done.where(F.col("cell") == cell).count() == 1
 
 
-def test_stream_append_withholds_open_windows(spark, sf_dir):
-    from rsgislib_spark.streaming.events import (
-        stream_hourly_counts, stream_hourly_counts_append)
-
-    full = stream_hourly_counts(spark, sf_dir)
-    appended = stream_hourly_counts_append(spark, sf_dir, watermark="2 hours")
-    n_full = full.select("hour").distinct().count()
-    n_app = appended.select("hour").distinct().count()
-    # append emits only finalized windows: never more than complete mode,
-    # and the trailing (still-open) windows are withheld
-    assert 0 < n_app < n_full
-    # emitted window counts agree with the batch truth
-    fkey = {(r.hour, r.event_type): r.n_events for r in full.collect()}
-    for r in appended.collect():
-        assert fkey[(r.hour, r.event_type)] == r.n_events
-
-
 def test_stateful_stream_sessionize_matches_batch(spark, sf_dir):
     """applyInPandasWithState sessionization == batch window-fn oracle."""
     from rsgislib_spark.streaming.events import (sessionize_batch,
@@ -236,13 +219,13 @@ def test_stateful_sessionize_across_micro_batches(spark, sf_dir, tmp_path):
     assert multi > 0
 
 
-def test_multimodal_decode_stub_raises(spark):
-    from rsgislib_spark.sources.multimodal import decode_media
+def test_multimodal_decode_stub_raises():
+    """No audio/video codec: the one decode path raises for them."""
+    from rsgislib_spark.functions import codec
 
-    with pytest.raises(NotImplementedError):
-        decode_media(b"\x00" * 16, 2, 2, "mp4")
-    with pytest.raises(NotImplementedError):
-        decode_media(b"\x00" * 16, 2, 2, "wav")
+    for fmt in ("mp4", "wav"):
+        with pytest.raises(ValueError, match="unknown fmt"):
+            codec.decode_image(b"\x00" * 16, 2, 2, fmt)
 
 
 def test_resize_roundtrip_bytes(spark, sf_dir):

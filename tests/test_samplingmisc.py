@@ -7,12 +7,14 @@ from rsgislib_spark.operators.elevation import dem_plane, shadow_tan_q
 from rsgislib_spark.operators.specunmix import (EM_SPECTRA, UNMIX_STEPS,
                                                 _COMBOS)
 
+from synthref import fmt_of_id
+
 def _imgs(n=40, mod=19):
     for k in range(n):
         img_id = k * mod
         w = 32 + (img_id * 7) % 97
         h = 32 + (img_id * 13) % 97
-        fmt = synth.fmt_of_id(np.array([img_id]))[0]
+        fmt = fmt_of_id(np.array([img_id]))[0]
         v = synth.pixel_array(img_id, w, h, fmt).astype(np.int64)
         yield img_id, v
 

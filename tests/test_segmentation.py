@@ -84,41 +84,6 @@ def test_polygonize_bboxes_consistency(spark, sf_dir):
     assert stats == per_img
 
 
-def test_tiled_clumping_equals_whole_image(spark, sf_dir):
-    """Distributed per-tile labeling + seam merge == whole-image clumping
-    (the scale path produces identical components)."""
-    from rsgislib_spark import synth
-    from rsgislib_spark.operators.rasterize import (clump_stats,
-                                                    clump_stats_tiled)
-
-    img = synth.synth_images(spark, sf_dir, with_bytes=True,
-                             with_footprint=False).where("id % 31 = 0")
-    whole = {r.image_id: (r.n_clumps, r.max_clump, r.n_fg)
-             for r in clump_stats(img, 700).collect()}
-    tiled = {r.image_id: (r.n_clumps, r.max_clump, r.n_fg)
-             for r in clump_stats_tiled(img, 700, tile=32).collect()}
-    assert whole == tiled and whole
-
-
-def test_tiled_clumping_leaves_no_cached_frame(spark, sf_dir):
-    """Neither a seam merge that does not converge nor one that does
-    leaves anything in the CacheManager: the frames its rounds re-read
-    are local checkpoints, not persisted frames that only the success
-    path unpersists."""
-    from rsgislib_spark import synth
-    from rsgislib_spark.operators.rasterize import clump_stats_tiled
-
-    img = synth.synth_images(spark, sf_dir, with_bytes=True,
-                             with_footprint=False).where("id % 31 = 0")
-    spark.catalog.clearCache()
-    cache = spark._jsparkSession.sharedState().cacheManager()
-    with pytest.raises(RuntimeError, match="did not converge"):
-        clump_stats_tiled(img, 700, tile=32, max_rounds=1)
-    assert cache.isEmpty()
-    assert clump_stats_tiled(img, 700, tile=32).collect()
-    assert cache.isEmpty()
-
-
 def test_rasterize_window_burn(spark, sf_dir):
     from rsgislib_spark import synth
     from rsgislib_spark.operators.rasterize import rasterize_window

@@ -1,5 +1,5 @@
-"""Salted-join equivalence with the broadcast plan, and the reference's
-empty-result sink rule (vectorutils/__init__.py:2219-2223)."""
+"""Salted-join equivalence with the broadcast plan, and geopandas-style
+suffixes for clashing columns."""
 
 import os
 import sys
@@ -38,31 +38,3 @@ def test_sjoin_suffixes_clashing_columns(spark, sf_dir):
     row = out.limit(1).collect()[0]
     assert row.caption.startswith("synthetic scene")
     assert row.caption_right == "zone-side caption"
-
-
-def test_empty_join_writes_no_output(spark, sf_dir, tmp_path):
-    from pyspark.sql import functions as F
-
-    from rsgislib_spark import synth
-    from rsgislib_spark.operators.spatial_join import spatial_join
-    from rsgislib_spark.sources.sinks import write_vec_if_nonempty
-
-    img = synth.synth_images(spark, sf_dir, with_footprint=False)
-    zones = synth.synth_zones(spark, sf_dir)
-    # a zone layer shifted into the (empty) high arctic -> no matches
-    far = zones.select(
-        "zone_id", "zname",
-        (F.col("zxmin") * 0 + 170.0).alias("zxmin"),
-        (F.col("zxmax") * 0 + 171.0).alias("zxmax"),
-        (F.col("zymin") * 0 + 84.0).alias("zymin"),
-        (F.col("zymax") * 0 + 85.0).alias("zymax"))
-    empty = spatial_join(img, far, how="inner", op="within")
-    p1 = str(tmp_path / "empty_out")
-    assert write_vec_if_nonempty(empty, p1) is False
-    assert not os.path.exists(p1)
-
-    nonempty = spatial_join(img, zones, how="inner", op="within")
-    p2 = str(tmp_path / "real_out")
-    assert write_vec_if_nonempty(nonempty.select("image_id", "zone_id"), p2)
-    assert os.path.exists(p2)
-    assert spark.read.parquet(p2).count() == nonempty.count()

@@ -5,7 +5,6 @@ value-exactness; these check *semantic* properties: LSH recall of planted
 near-duplicates, SimHash locality, ANN-vs-exact agreement.
 """
 
-import math
 import os
 import sys
 
@@ -90,35 +89,6 @@ def test_multiprobe_recall_beats_single_probe(emb):
              for r in simi.ann_lsh_multiprobe_top1(emb).collect()}
     for q, s in s_sim.items():
         assert m_sim[q] >= s - 1e-12
-
-
-def test_webmerc_matches_numpy(spark):
-    from rsgislib_spark.operators.vector import reproj_webmerc
-
-    pdf = spark.createDataFrame(
-        [(float(lon), float(lat))
-         for lon, lat in [(-120.3, 37.1), (0.0, 0.0), (151.2, -33.9)]],
-        "lon double, lat double")
-    rows = reproj_webmerc(pdf).collect()
-    for r in rows:
-        x = 6378137.0 * math.radians(r.lon)
-        y = 6378137.0 * math.log(math.tan(math.pi / 4 + math.radians(r.lat) / 2))
-        assert abs(r.mx - x) < 1e-6 and abs(r.my - y) < 1e-6
-
-
-def test_wgs84_cell_area(spark):
-    import math
-
-    from rsgislib_spark.operators.vector import wgs84_cell_area_m2
-
-    pdf = spark.createDataFrame([(0.0,), (45.0,), (60.0,)], "lat double")
-    rows = {r.lat: r.px_area_m2
-            for r in wgs84_cell_area_m2(pdf, res_deg=0.001).collect()}
-    for lat, area in rows.items():
-        ref = (0.001 * 110540.0) * (0.001 * 111320.0) * math.cos(
-            math.radians(lat))
-        assert abs(area - ref) < 1e-6
-    assert rows[0.0] > rows[45.0] > rows[60.0] > 0
 
 
 def test_band_math_eval_sandboxed():

@@ -9,13 +9,12 @@ remainder rules per src/cmds/RSGISCmdImageUtils.cpp:640-826.
 import numpy as np
 import pytest
 
-from rsgislib_spark.geo.tilegrid import num_tiles, tile_specs, tile_specs_multi_core
+from rsgislib_spark.geo.tilegrid import tile_specs
 
 
 def test_create_tiles_931x947_200_count():
     specs = tile_specs(931, 947, 200, 200)
     assert len(specs) == 25
-    assert num_tiles(931, 947, 200, 200) == 25
 
 
 def test_create_tiles_931x947_250_count():
@@ -71,15 +70,22 @@ def test_offset_tiling_histogram():
     assert cover.min() == 1 and cover.max() == 1
 
 
-def test_multi_core_names_and_windows():
-    tiles = tile_specs_multi_core(931, 947, 200, 200)
+def test_multi_core_names_and_windows(spark):
+    """``create_tiles_multi_core`` names its tiles ``x{i}y{j}``, 1-based,
+    remainder column and row last: the ``tile_name_mc`` column."""
+    from rsgislib_spark.operators.tiling import tile_spec_df
+
+    img = spark.createDataFrame([("a", 931, 947)],
+                                "image_id string, w int, h int")
+    tiles = tile_spec_df(img, 200, 200).orderBy("tile_idx").collect()
     assert len(tiles) == 25
-    names = [t[0] for t in tiles]
+    names = [t.tile_name_mc for t in tiles]
     assert names[0] == "x1y1"
     assert names[4] == "x5y1"          # remainder column is x5 (1-based)
     assert names[-1] == "x5y5"
-    assert tiles[4][1] == (800, 931, 0, 200)
-    assert tiles[-1][1] == (800, 931, 800, 947)
+    win = [(t.txmin, t.txmax, t.tymin, t.tymax) for t in tiles]
+    assert win[4] == (800, 931, 0, 200)
+    assert win[-1] == (800, 931, 800, 947)
 
 
 def test_reference_s2_tiles_golden_250():

@@ -11,6 +11,8 @@ from rsgislib_spark.operators import tiling
 from rsgislib_spark.operators.tiling import (
     _window_sums, tile_checksums_fused, tile_pixels, tile_spec_df)
 
+from synthref import fmt_of_id
+
 
 @pytest.fixture(scope="module")
 def images(spark, sf_dir):
@@ -177,7 +179,7 @@ def _meta(ids):
         "id": ids,
         "w": pa.array(32 + (ids * 7) % 97, pa.int32()),
         "h": pa.array(32 + (ids * 13) % 97, pa.int32()),
-        "fmt": synth.fmt_of_id(ids).tolist(),
+        "fmt": fmt_of_id(ids).tolist(),
         "key": ids * 10,
     })
 

@@ -9,6 +9,8 @@ from rsgislib_spark import synth
 from rsgislib_spark.operators.windowdist import (NEIGH_OFFSETS,
                                                  WIN_OFFSETS)
 
+from synthref import fmt_of_id
+
 _Q = 1048576.0
 
 
@@ -17,7 +19,7 @@ def _imgs(n=8, mod=19):
         img_id = k * mod
         w = 32 + (img_id * 7) % 97
         h = 32 + (img_id * 13) % 97
-        fmt = synth.fmt_of_id(np.array([img_id]))[0]
+        fmt = fmt_of_id(np.array([img_id]))[0]
         yield synth.pixel_array(img_id, w, h, fmt).astype(np.int64)
 
 
