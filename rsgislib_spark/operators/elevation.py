@@ -18,8 +18,7 @@ import math
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions import codec
 

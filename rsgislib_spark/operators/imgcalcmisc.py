@@ -31,8 +31,7 @@ lon + (x+0.5)*res >= L0 etc. — no index rounding anywhere.
 """
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (DoubleType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .. import synth
 from ..functions import codec

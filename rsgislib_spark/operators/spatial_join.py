@@ -5,14 +5,19 @@ python/rsgislib/vectorutils/__init__.py:2159-2223 — geopandas ``sjoin`` with
 ``how in {left, right, inner}`` and ``op in {intersects, within,
 contains}``) as a two-phase Spark plan:
 
-1. **candidate generation** — :func:`cell_pairs`, the engine's one
-   candidate join: each side is keyed by the grid-cell ROWS its bbox
-   spans (``geo.cellindex``'s latitude index; a point is one row) and
-   the two equi-join on ``cell_row``, so Catalyst gets a hash/broadcast/
-   sort-merge join with all its machinery (AQE, DPP).  As in Raptor
-   (VLDB 2019), rows grow with a geometry's height, not its area: a
-   world bbox at res 12 is 4,096 rows, not 16.7 M cells.  The rtree of
-   the reference is replaced by this key — the "spatial pushdown".
+1. **candidate generation** — :func:`cell_pairs_sql`, the engine's one
+   candidate join, built as SQL text: each side is keyed by the
+   grid-cell ROWS its bbox spans (``geo.cellindex``'s latitude index; a
+   point is one row), the two equi-join on ``cell_row`` under the
+   caller's predicate text, and a pair sharing several rows is kept on
+   its first.  Catalyst gets a hash/broadcast/sort-merge join with all
+   its machinery (AQE, DPP).  :func:`cell_pairs` runs the same text over
+   two DataFrames; ``queries.flagship`` splices it into one statement
+   with its inputs' synth SQL, so that plan is analysed once.  As in
+   Raptor (VLDB 2019), rows grow with a geometry's height, not its
+   area: a world bbox at res 12 is 4,096 rows, not 16.7 M cells.  The
+   rtree of the reference is replaced by this key — the "spatial
+   pushdown".
 
 2. **exact refinement** — a deterministic geometry predicate over the
    candidate pairs.  For the bbox fast path this is pure Catalyst column
@@ -45,7 +50,7 @@ from __future__ import annotations
 from typing import Iterable
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions import codec
@@ -54,6 +59,7 @@ from ..geo.cellindex import DEFAULT_RES, _RES_SHIFT, _X_SHIFT, cell_sql_expr
 __all__ = [
     "with_point_cell",
     "with_bbox_cells",
+    "cell_pairs_sql",
     "cell_pairs",
     "spatial_join",
     "spatial_join_poly",
@@ -108,77 +114,96 @@ def with_bbox_cells(df: DataFrame, xmin: str, xmax: str, ymin: str, ymax: str,
     )
 
 
-# The refinement predicates are SQL text: a Python-built Column costs a
-# dozen or more py4j round trips per ``F.col`` or operator, an
-# ``F.expr`` three (NOTES.md).  ``a AND b AND c`` nests to the left,
-# exactly as ``a & b & c`` does.
+# The refinement predicates are SQL text, spliced into the candidate
+# join's statement (:func:`cell_pairs_sql`).  ``a AND b AND c`` nests to
+# the left, exactly as ``a & b & c`` does.
 def _point_in_bbox(lon: str, lat: str, bxmin: str, bxmax: str,
-                   bymin: str, bymax: str) -> Column:
+                   bymin: str, bymax: str) -> str:
     """Half-open point-in-bbox: min <= p < max (one slot per point)."""
-    return F.expr(f"{lon} >= {bxmin} AND {lon} < {bxmax}"
-                  f" AND {lat} >= {bymin} AND {lat} < {bymax}")
+    return (f"{lon} >= {bxmin} AND {lon} < {bxmax}"
+            f" AND {lat} >= {bymin} AND {lat} < {bymax}")
 
 
 def _bbox_intersects(a: Iterable[str], b: Iterable[str],
-                     strict: bool = True) -> Column:
+                     strict: bool = True) -> str:
     """Bbox-bbox overlap: strict (geometrytools.py:82-102) or, with
     ``strict=False``, inclusive (touching bboxes overlap)."""
     axmin, axmax, aymin, aymax = a
     bxmin, bxmax, bymin, bymax = b
     gt = ">" if strict else ">="
-    return F.expr(f"{axmax} {gt} {bxmin} AND {bxmax} {gt} {axmin}"
-                  f" AND {aymax} {gt} {bymin} AND {bymax} {gt} {aymin}")
+    return (f"{axmax} {gt} {bxmin} AND {bxmax} {gt} {axmin}"
+            f" AND {aymax} {gt} {bymin} AND {bymax} {gt} {aymin}")
 
 
-def _bbox_contains(a: Iterable[str], b: Iterable[str]) -> Column:
+def _bbox_contains(a: Iterable[str], b: Iterable[str]) -> str:
     """Strict a-contains-b (geometrytools.py:104-123)."""
     axmin, axmax, aymin, aymax = a
     bxmin, bxmax, bymin, bymax = b
-    return F.expr(f"{axmin} < {bxmin} AND {axmax} > {bxmax}"
-                  f" AND {aymin} < {bymin} AND {aymax} > {bymax}")
+    return (f"{axmin} < {bxmin} AND {axmax} > {bxmax}"
+            f" AND {aymin} < {bymin} AND {aymax} > {bymax}")
 
 
-def _with_cell_rows(df: DataFrame, box: Iterable[str], res: int,
-                    row0: str) -> DataFrame:
-    """One row per grid-cell row the bbox spans (``cell_row``), plus its
-    first row in ``row0``; a one-column y-range (a point) is not exploded."""
+def _keyed_sql(rel: str, box: Iterable[str], res: int, row0: str) -> str:
+    """SQL text of ``rel`` with one row per grid-cell row its bbox spans
+    (``cell_row``) and its first row (``row0``); a one-column y-range (a
+    point) is not exploded."""
     n = 1 << res
     _, _, ymin, ymax = box
     first = _axis_idx(ymin, 90.0, 180.0, n)
     rows = first if ymin == ymax else _axis_range(ymin, ymax, 90.0, 180.0, n)
-    return df.selectExpr("*", f"{first} AS {row0}", f"{rows} AS cell_row")
+    return f"SELECT *, {first} AS {row0}, {rows} AS cell_row FROM {rel}"
+
+
+#: the key columns :func:`cell_pairs_sql` adds to both sides' columns
+_PAIR_KEYS = ("cell_row", "_salt", "_row0_l", "_row0_r")
+
+
+def cell_pairs_sql(left: str, right: str,
+                   left_box: Iterable[str], right_box: Iterable[str],
+                   on: str, *, res: int, broadcast: bool = True,
+                   n_salt: int | None = None) -> str:
+    """SQL text of every (left, right) row pair satisfying ``on``, each
+    exactly once: the engine's one candidate join.
+
+    ``left`` / ``right`` are relations (a view name or a parenthesised
+    subquery); ``left_box`` / ``right_box`` name each side's (xmin, xmax,
+    ymin, ymax) columns, and a point side passes ``(lon, lon, lat,
+    lat)`` and is not exploded.  The sides equi-join on ``cell_row``
+    under the SQL predicate ``on``, which must imply overlapping closed
+    y-ranges (every predicate here does); x is not keyed, ``on`` decides
+    it.  A pair sharing several rows is kept on the first, the
+    ``greatest`` of the two start rows.  ``broadcast`` hints the right
+    side; otherwise ``n_salt`` splits a hot row over ``n_salt`` tasks
+    (left salted by a hash of its bbox, right replicated per salt).
+
+    Output: both sides' columns plus the key columns ``_PAIR_KEYS``
+    (``_salt`` only when salted).
+    """
+    lk = _keyed_sql(left, left_box, res, "_row0_l")
+    rk = _keyed_sql(right, right_box, res, "_row0_r")
+    keys, hint = "cell_row", ""
+    if broadcast:
+        hint = "/*+ BROADCAST(_r) */ "
+    elif n_salt:
+        lk = (f"SELECT *, pmod(xxhash64({', '.join(left_box)}), {n_salt})"
+              f" AS _salt FROM ({lk})")
+        rk = (f"SELECT *, explode(array("
+              f"{', '.join(map(str, range(n_salt)))})) AS _salt FROM ({rk})")
+        keys += ", _salt"
+    return (f"SELECT {hint}* FROM ({lk}) _l JOIN ({rk}) _r USING ({keys})"
+            f" WHERE ({on}) AND cell_row = greatest(_row0_l, _row0_r)")
 
 
 def cell_pairs(left: DataFrame, right: DataFrame,
                left_box: Iterable[str], right_box: Iterable[str],
-               on: Column, *, res: int, broadcast: bool = True,
+               on: str, *, res: int, broadcast: bool = True,
                n_salt: int | None = None) -> DataFrame:
-    """Every (left, right) row pair satisfying ``on``, each exactly once.
-
-    ``left_box`` / ``right_box`` name each side's (xmin, xmax, ymin,
-    ymax) columns; a point side passes ``(lon, lon, lat, lat)`` and is
-    not exploded.  The sides equi-join on ``cell_row`` under ``on``,
-    which must imply overlapping closed y-ranges (every predicate here
-    does); x is not keyed, ``on`` decides it.  A pair sharing several
-    rows is kept on the first, the ``greatest`` of the two start rows.
-    ``broadcast`` hints the right side; otherwise ``n_salt`` splits a hot
-    row over ``n_salt`` tasks (left salted by a hash of its bbox, right
-    replicated per salt).
-    """
-    lk = _with_cell_rows(left, left_box, res, "_row0_l")
-    rk = _with_cell_rows(right, right_box, res, "_row0_r")
-    keys = ["cell_row"]
-    if broadcast:
-        rk = F.broadcast(rk)
-    elif n_salt:
-        lk = lk.selectExpr("*", f"pmod(xxhash64({', '.join(left_box)}), "
-                                f"{n_salt}) AS _salt")
-        rk = rk.selectExpr("*", "explode(array("
-                           + ", ".join(map(str, range(n_salt))) + ")) AS _salt")
-        keys.append("_salt")
-    return (lk.join(rk, keys, "inner").where(on)
-            .where("cell_row = greatest(_row0_l, _row0_r)")
-            .drop(*keys, "_row0_l", "_row0_r"))
+    """:func:`cell_pairs_sql` over two DataFrames: both sides' columns
+    for every pair satisfying the SQL predicate ``on``, each once."""
+    sql = cell_pairs_sql("{left}", "{right}", left_box, right_box, on,
+                         res=res, broadcast=broadcast, n_salt=n_salt)
+    return left.sparkSession.sql(sql, left=left, right=right) \
+        .drop(*_PAIR_KEYS)
 
 
 def spatial_join(
@@ -228,7 +253,7 @@ def spatial_join(
         if op in ("within", "intersects"):
             pred = _point_in_bbox(lon, lat, *join_bbox)
         else:  # contains
-            pred = F.lit(False)
+            pred = "false"
     elif base_geom == "bbox":
         base_box = tuple(base_cols)
         if op == "intersects":
@@ -393,7 +418,7 @@ def vec_predicate_vec(
     # inclusive bbox prefilter: touching bboxes remain candidates
     on = _bbox_intersects(abox, bbox, strict=False)
     if exclude_same_key:
-        on = on & (F.col("akey") != F.col("bkey"))
+        on += " AND akey != bkey"
     cand = cell_pairs(layer(polys_a, a_key, "a"), layer(polys_b, b_key, "b"),
                       abox, bbox, on,
                       res=res, broadcast=broadcast).select("akey", "av", "bv")

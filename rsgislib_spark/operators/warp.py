@@ -43,7 +43,6 @@ outside the shared text; both are exact given identical indices.
 
 from __future__ import annotations
 
-import math
 import re
 
 import numpy as np
@@ -51,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions import codec
-from ..geo.transverse_mercator import (TMParams, dlit, epsg_tm_params,
+from ..geo.transverse_mercator import (dlit, epsg_tm_params,
                                        tm_forward_steps, tm_inverse_steps)
 from ..synth import IMG_RES_DEG
 

@@ -554,8 +554,7 @@ def extract_point_values(
     cand = cell_pairs(
         pts, images.select("id", "image_id", *_IMG_BOX),
         ("_plon", "_plon", "_plat", "_plat"), _IMG_BOX,
-        (F.col("_plon") >= F.col("xmin")) & (F.col("_plon") < F.col("xmax"))
-        & (F.col("_plat") > F.col("ymin")) & (F.col("_plat") <= F.col("ymax")),
+        "_plon >= xmin AND _plon < xmax AND _plat > ymin AND _plat <= ymax",
         res=res, broadcast=False)
     w = Window.partitionBy("pt_id").orderBy(F.desc("id"))
     won = cand.withColumn("_rn", F.row_number().over(w)) \

@@ -18,6 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import synth
+from .geo.cellindex import DEFAULT_RES
 from .operators import imagemath as im
 from .operators import statfilters as sfilt
 from .operators import similarity as simi
@@ -97,12 +98,12 @@ from .operators.vector import VM_EXPRS, lines_of_points, vector_maths
 from .operators.imagestats import (imgs_equal_stats, pixel_histogram,
                                    pixel_stats)
 from .operators.knn import knn_classify, match_closest_points, npts_in_radius
-from .operators.spatial_join import (spatial_join, spatial_join_poly,
+from .operators.spatial_join import (_point_in_bbox, cell_pairs_sql,
+                                     spatial_join, spatial_join_poly,
                                      spatial_select, vec_intersects_vec,
                                      vec_predicate_vec, with_point_cell)
 from .operators.tiling import (block_iter_specs, tile_checksums_fused,
-                               tile_pixels, tile_spec_df,
-                               tile_spec_offset_df)
+                               tile_spec_df, tile_spec_offset_df)
 from .operators.zonal import (extract_point_values, mask_by_vec_stats,
                               zonal_stats, zonal_stats_hybrid,
                               zonal_stats_poly, zonal_stats_weighted)
@@ -3429,20 +3430,24 @@ def flagship(spark, sf_dir) -> DataFrame:
     # sums + per-image combine (map-side partial agg) -- that carries
     # zone_id/zname through, so payloads never cross a shuffle and no
     # second join is needed to bring the zones back.  The repartition
-    # spreads the single-file scan over the cores.
-    img = _images(spark, sf_dir, with_footprint=False)
-    zones = synth.synth_zones(spark, sf_dir)
-    pairs = (
-        spatial_join(img, zones, how="inner", op="within")
-        .select("id", "w", "h", "fmt", "zone_id", "zname")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    # spreads the single-file scan over the cores.  Everything up to the
+    # Python stage is one SQL statement, analysed once: each DataFrame
+    # call would analyse the plan built so far again.
+    synth.read_views(spark, sf_dir, "part", "nation")
+    zbox = ("zxmin", "zxmax", "zymin", "zymax")
+    pairs = cell_pairs_sql(
+        f"({synth.images_sql('spark')})", f"({synth.zones_sql('spark')})",
+        ("lon", "lon", "lat", "lat"), zbox,
+        _point_in_bbox("lon", "lat", *zbox), res=DEFAULT_RES)
+    meta = spark.sql(
+        f"SELECT /*+ REPARTITION({spark.sparkContext.defaultParallelism}) */"
+        f" id, w, h, fmt, zone_id, zname FROM ({pairs})")
     return (
-        tile_checksums_fused(pairs, 48, 32, rollup="image")
+        tile_checksums_fused(meta, 48, 32, rollup="image")
         .groupBy("zone_id", "zname")
-        .agg(F.count(F.lit(1)).alias("n_images"),
-             F.sum("n_tiles").alias("n_tiles"),
-             F.sum("pix_sum").alias("pix_sum"))
+        .agg(F.expr("count(1) AS n_images"),
+             F.expr("sum(n_tiles) AS n_tiles"),
+             F.expr("sum(pix_sum) AS pix_sum"))
     )
 
 

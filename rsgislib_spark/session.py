@@ -71,8 +71,10 @@ def get_spark(app: str = "rsgislib_spark", master: str | None = None,
         # own set-up used to cost 0.1-0.3 s: pyspark's per-task
         # importlib.invalidate_caches() re-read every zip on sys.path
         # (Python < 3.13).  workerinit.guard_zip_rereads cuts that to
-        # ~0.2 ms; ~50 ms of pythonTotalTime a task is left (4-core VM,
-        # NOTES.md), so Arrow stages still run at the core count.
+        # ~0.2 ms from a fresh worker's second task on (archives older
+        # than the worker are not re-read at all); ~50 ms of
+        # pythonTotalTime a task is left (4-core VM, NOTES.md), so
+        # Arrow stages still run at the core count.
         .config("spark.python.worker.reuse", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # measured at local[32]: binary-payload rows make big

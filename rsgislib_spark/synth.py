@@ -51,6 +51,7 @@ __all__ = [
     "IMG_RES_DEG",
     "images_sql",
     "zones_sql",
+    "read_views",
     "synth_images",
     "synth_zones",
     "pixel_array",
@@ -157,18 +158,26 @@ FROM (SELECT CAST(s_suppkey AS BIGINT) AS qid FROM {supplier})
 """.strip()
 
 
-def _read_view(spark, sf_dir: str, table: str, schema: str) -> None:
-    """Register ``{sf_dir}/{table}.parquet`` as a temp view with a
-    declared ``schema`` (the columns the synth SQL reads), so the read
-    launches no schema-inference job.  A narrower integer file column
-    (e.g. an INT32 ``n_nationkey``) is widened to a declared BIGINT."""
-    spark.read.schema(schema) \
-        .parquet(os.path.join(sf_dir, f"{table}.parquet")) \
-        .createOrReplaceTempView(table)
+#: the columns the synth SQL reads from each input table
+_TABLE_SCHEMAS = {"part": "p_partkey BIGINT",
+                  "nation": "n_nationkey BIGINT, n_name STRING",
+                  "supplier": "s_suppkey BIGINT"}
+
+
+def read_views(spark, sf_dir: str, *tables: str) -> None:
+    """Register each ``{sf_dir}/{table}.parquet`` as a temp view named
+    ``table`` with a declared schema (the columns the synth SQL reads),
+    so the read launches no schema-inference job.  A narrower integer
+    file column (e.g. an INT32 ``n_nationkey``) is widened to a declared
+    BIGINT."""
+    for table in tables:
+        spark.read.schema(_TABLE_SCHEMAS[table]) \
+            .parquet(os.path.join(sf_dir, f"{table}.parquet")) \
+            .createOrReplaceTempView(table)
 
 
 def synth_qpoints(spark, sf_dir: str):
-    _read_view(spark, sf_dir, "supplier", "s_suppkey BIGINT")
+    read_views(spark, sf_dir, "supplier")
     return spark.sql(qpoints_sql("spark"))
 
 
@@ -261,7 +270,7 @@ def synth_images(spark, sf_dir: str, with_bytes: bool = False,
     right plan shape for queries that never touch pixels (column pruning
     for free).  ``with_bytes=True`` runs the Arrow codec stage.
     """
-    _read_view(spark, sf_dir, "part", "p_partkey BIGINT")
+    read_views(spark, sf_dir, "part")
     sql = images_sql("spark")
     if with_footprint:
         sql = footprint_sql(sql)
@@ -283,5 +292,5 @@ def synth_images(spark, sf_dir: str, with_bytes: bool = False,
 
 
 def synth_zones(spark, sf_dir: str):
-    _read_view(spark, sf_dir, "nation", "n_nationkey BIGINT, n_name STRING")
+    read_views(spark, sf_dir, "nation")
     return spark.sql(zones_sql("spark"))

@@ -142,3 +142,36 @@ def test_every_engine_def_is_reached_from_live_code():
     dead = _unreached()
     assert not dead, (f"{len(dead)} module-level engine defs are reached "
                       "only from tests:\n  " + "\n  ".join(dead))
+
+
+def _unused_imports():
+    """``module: name`` for every module-level engine import whose bound
+    name its module never loads and does not list in ``__all__``."""
+    out = []
+    for p in sorted((_ROOT / "rsgislib_spark").rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        nodes = _nodes(tree.body)
+        loaded = {n.id for n in nodes
+                  if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+        exported = set()
+        for node in tree.body:
+            if _is_all(node) and isinstance(node.value, (ast.List, ast.Tuple)):
+                exported |= {e.value for e in node.value.elts
+                             if isinstance(e, ast.Constant)}
+        for node in tree.body:
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for a in node.names:
+                    name = a.asname or a.name.partition(".")[0]
+                    if name not in loaded and name not in exported:
+                        out.append(f"{_modname(p)}: {name}")
+    return out
+
+
+def test_every_engine_import_is_used():
+    """An import the module never reads is dead weight, and it would count
+    as a reference above, keeping an otherwise dead def alive."""
+    unused = _unused_imports()
+    assert not unused, ("module-level engine imports never used:\n  "
+                        + "\n  ".join(unused))

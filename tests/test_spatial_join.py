@@ -278,19 +278,41 @@ def _edge_boxes(rng, n, res):
     return out
 
 
+def _sql_pairs(left, right, *args, **kw):
+    """``cell_pairs_sql`` over the two frames as temp views; the output
+    keeps the key columns."""
+    from rsgislib_spark.operators.spatial_join import cell_pairs_sql
+
+    left.createOrReplaceTempView("cp_left")
+    right.createOrReplaceTempView("cp_right")
+    return left.sparkSession.sql(
+        cell_pairs_sql("cp_left", "(SELECT * FROM cp_right)", *args, **kw))
+
+
+def _entry(name):
+    """The candidate join's two entry points, and the key columns each
+    leaves in its output for a plan with or without salt."""
+    from rsgislib_spark.operators.spatial_join import cell_pairs
+
+    if name == "cell_pairs":
+        return cell_pairs, lambda salted: set()
+    return _sql_pairs, lambda salted: (
+        {"cell_row", "_row0_l", "_row0_r"} | ({"_salt"} if salted else set()))
+
+
 def _brute(lpdf, rpdf, pred):
     cross = lpdf.merge(rpdf, how="cross")
     hit = cross[pred(cross)]
     return sorted(zip(hit.lid.astype(int), hit.rid.astype(int)))
 
 
-@pytest.mark.parametrize("strict", [True, False])
-def test_cell_pairs_equals_brute_force_bbox(spark, strict):
-    """Row-keyed candidates + ``on`` == the cross join filtered by ``on``,
-    each pair exactly once, under the broadcast, plain and salted plans."""
-    from rsgislib_spark.operators.spatial_join import (_bbox_intersects,
-                                                       cell_pairs)
+_PLANS = ({}, {"broadcast": False}, {"broadcast": False, "n_salt": 3})
 
+
+def _check_bbox(spark, strict, entry):
+    from rsgislib_spark.operators.spatial_join import _bbox_intersects
+
+    cell_pairs, keys = _entry(entry)
     res = 4
     rng = np.random.default_rng(7)
     left, lbox, lpdf = _box_layer(spark, _edge_boxes(rng, 40, res), "l")
@@ -304,18 +326,18 @@ def test_cell_pairs_equals_brute_force_bbox(spark, strict):
         gt(c.lxmax, c.rxmin) & gt(c.rxmax, c.lxmin)
         & gt(c.lymax, c.rymin) & gt(c.rymax, c.lymin)))
     assert len(exp) > 50
-    for kw in ({}, {"broadcast": False}, {"broadcast": False, "n_salt": 3}):
+    for kw in _PLANS:
         out = cell_pairs(left, right, lbox, rbox, on, res=res, **kw)
-        assert set(out.columns) == set(left.columns) | set(right.columns)
+        assert set(out.columns) == (set(left.columns) | set(right.columns)
+                                    | keys("n_salt" in kw))
         got = sorted((r.lid, r.rid) for r in out.select("lid", "rid").collect())
         assert got == exp, kw
 
 
-def test_cell_pairs_equals_brute_force_points(spark):
-    """Point layers key on one row each (no explode) and still meet every
-    box spanning that row; lat on a row boundary and at the ±90 clamp."""
-    from rsgislib_spark.operators.spatial_join import _point_in_bbox, cell_pairs
+def _check_points(spark, entry):
+    from rsgislib_spark.operators.spatial_join import _point_in_bbox
 
+    cell_pairs, _ = _entry(entry)
     res = 4
     row_h = 180.0 / (1 << res)
     rng = np.random.default_rng(11)
@@ -326,22 +348,49 @@ def test_cell_pairs_equals_brute_force_points(spark):
                         columns=["lid", "lon", "lat"])
     left = spark.createDataFrame(lpdf)
     right, rbox, rpdf = _box_layer(spark, _edge_boxes(rng, 30, res), "r")
-    out = cell_pairs(left, right, ("lon", "lon", "lat", "lat"), rbox,
-                     _point_in_bbox("lon", "lat", *rbox), res=res)
-    got = sorted((r.lid, r.rid) for r in out.select("lid", "rid").collect())
     exp = _brute(lpdf, rpdf, lambda c: (
         (c.lon >= c.rxmin) & (c.lon < c.rxmax)
         & (c.lat >= c.rymin) & (c.lat < c.rymax)))
-    assert got == exp and len(exp) > 50
+    assert len(exp) > 50
+    for kw in _PLANS:
+        out = cell_pairs(left, right, ("lon", "lon", "lat", "lat"), rbox,
+                         _point_in_bbox("lon", "lat", *rbox), res=res, **kw)
+        got = sorted((r.lid, r.rid) for r in out.select("lid", "rid").collect())
+        assert got == exp, kw
+
+
+@pytest.mark.parametrize("strict", [True, False])
+def test_cell_pairs_equals_brute_force_bbox(spark, strict):
+    """Row-keyed candidates + ``on`` == the cross join filtered by ``on``,
+    each pair exactly once, under the broadcast, plain and salted plans."""
+    _check_bbox(spark, strict, "cell_pairs")
+
+
+def test_cell_pairs_equals_brute_force_points(spark):
+    """Point layers key on one row each (no explode) and still meet every
+    box spanning that row; lat on a row boundary and at the ±90 clamp."""
+    _check_points(spark, "cell_pairs")
+
+
+@pytest.mark.parametrize("strict", [True, False])
+def test_cell_pairs_sql_equals_brute_force_bbox(spark, strict):
+    """The bbox cases through the SQL builder's own entry point."""
+    _check_bbox(spark, strict, "cell_pairs_sql")
+
+
+def test_cell_pairs_sql_equals_brute_force_points(spark):
+    """The point cases through the SQL builder's own entry point."""
+    _check_points(spark, "cell_pairs_sql")
 
 
 def test_world_bbox_keys_to_one_row_per_cell_row(spark):
     """Keying grows with height, not area: a world bbox at res 12 is
     4,096 cell rows (a cell polyfill made it 4,096^2 = 16.7 M)."""
-    from rsgislib_spark.operators.spatial_join import _with_cell_rows
+    from rsgislib_spark.operators.spatial_join import _keyed_sql
 
     world, box, _ = _box_layer(spark, [(-180.0, 180.0, -90.0, 90.0)], "w")
-    keyed = _with_cell_rows(world, box, 12, "_row0")
+    world.createOrReplaceTempView("world")
+    keyed = spark.sql(_keyed_sql("world", box, 12, "_row0"))
     assert keyed.count() == 4096
     assert keyed.select("cell_row").distinct().count() == 4096
 
